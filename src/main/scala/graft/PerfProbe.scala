@@ -1,693 +1,77 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Ad-hoc stage timing probe for local iteration (not part of the
-  * driver contract). `SPARK_GRAFT_SF_DIR` selects the scale. */
+/** Probe over declared queries for local iteration (Verify and Bench
+  * do not use it). Two modes, both over the same names:
+  *
+  *  - `qreps [q1,q2,...] [n]` — run each named query `n` times
+  *    (default 3) in ONE JVM (JIT-warm after rep 1) and print every
+  *    rep: min-over-reps is the noise-robust A/B statistic on a shared
+  *    box whose load swings 2-3x mid-run.
+  *  - `explain [q1,q2,...]` — print each named query's formatted
+  *    physical plan and audit the scale-critical properties: parquet
+  *    filter pushdown, pruned read schemas, broadcast joins and
+  *    whole-stage codegen spans in the executed (post-AQE) plan.
+  *
+  * Names default to every declared query. `SPARK_GRAFT_SF_DIR` selects
+  * the scale and `SPARK_GRAFT_CPUS` the core count, like Bench:
+  * `sbt "runMain graft.PerfProbe explain d02_jaccard_pairs,s09_dedup_gate"`.
+  */
 object PerfProbe {
+  private val Usage = "usage: PerfProbe <qreps|explain> [q1,q2,...] [n]"
+
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("")
+    require(mode == "qreps" || mode == "explain", Usage)
+    val names = args.lift(1).map(_.split(",").toSeq.filter(_.nonEmpty))
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // same shape knob as Bench so A/B probes can run the driver's BOTH
-    // core counts (the r14 verdict's two-shape evidence requirement)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = core.GraftSession.local(appName = "graft-probe")
+    try {
+      if (mode == "qreps") qreps(spark, sfDir, names, args.lift(2).fold(3)(_.toInt))
+      else names.foreach(explain(spark, sfDir, _))
+    } finally spark.stop()
+  }
 
-    def time(name: String)(f: => Unit): Unit = {
+  private def qreps(spark: SparkSession, sfDir: String, names: Seq[String],
+                    n: Int): Unit = {
+    for (r <- 1 to n; name <- names) {
+      // each rep rebuilds the query's own artifacts, like Bench's retry
+      core.Artifacts.dropScope(name)
+      core.Artifacts.setScope(name)
       val t0 = System.nanoTime()
-      f
-      println(f"PROBE $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.catalog.clearCache()
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      println(f"QREP $name $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      core.Caches.releaseTransients()
     }
+    core.Artifacts.setScope("")
+  }
 
-    import graft.dedup.{Dedup, DedupPack}
-    val aug = DedupPack.augmented(spark, sfDir)
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // `runMain graft.PerfProbe mmr` — l11 stage attribution: pool
-    // build vs pair sims vs the 5-stage greedy.
-    if (args.contains("mmr")) {
-      import graft.plans.ArrayDot.dotNative
-      val e = graft.core.Tables(spark, sfDir).embeddings
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val sims = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("did"),
-          round(dotNative(col("qv"), col("v")), 9).as("qsim"))
-      val wq = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("qsim").desc, col("did"))
-      val cands = sims.withColumn("rnk", row_number().over(wq))
-        .filter(col("rnk") <= 10).drop("rnk")
-      time("mmr sims+pool") { noop(cands) }
-      val cv = cands.join(e, cands("did") === e("vec_id"))
-        .select(col("qid"), col("did"), col("v"))
-      val cp = cv.as("a").join(cv.as("b"),
-          col("a.qid") === col("b.qid") && col("a.did") =!= col("b.did"))
-        .select(col("a.qid").as("qid"), col("a.did").as("d1"),
-          col("b.did").as("d2"),
-          round(dotNative(col("a.v"), col("b.v")), 9).as("psim"))
-      time("mmr pair sims") { noop(cp) }
-      time("mmr full (cold)") { noop(graft.llm.LlmPack.mmrRerank(spark, sfDir)) }
-      time("mmr full (warm)") { noop(graft.llm.LlmPack.mmrRerank(spark, sfDir)) }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe artreps` — artifact-build variance
-    // attribution: build every session artifact 3× in ONE JVM, a
-    // fresh SparkSession per rep so the memo can't serve a cached
-    // frame. If rep 2+ is uniformly fast while rep 1 swings, the
-    // run-to-run artifact-line variance (r6 driver: 88.6 s vs 23.0 s
-    // local; reproduced locally 34.5 s vs 77.8 s same box same code)
-    // is JIT-compilation state, not data or plan work.
-    if (args.contains("artreps")) {
-      for (rep <- 1 to 3) {
-        val s = spark.newSession()
-        val t0 = System.nanoTime()
-        SparkEntry.packs.flatMap(_.artifacts.toSeq).sortBy(_._1)
-          .foreach { case (name, build) =>
-            val t1 = System.nanoTime()
-            build(s, sfDir).write.format("noop").mode("overwrite").save()
-            println(f"ARTREP $rep $name: ${(System.nanoTime() - t1) / 1e9}%.2f s")
-          }
-        println(f"ARTREP $rep TOTAL: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe explain <q1,q2,...> <outdir> <suffix>`
-    // — write each named query's .explain("formatted") to
-    // <outdir>/<name>_<suffix>.txt (the plans/r14 evidence files).
-    if (args.contains("explain")) {
-      val i = args.indexOf("explain")
-      val names = args(i + 1).split(",").toSeq
-      val outDir = args(i + 2)
-      val suffix = args(i + 3)
-      new java.io.File(outDir).mkdirs()
-      for (name <- names) {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-        println(s"EXPLAIN wrote $outDir/${name}_$suffix.txt")
-        core.Caches.releaseTransients()
-      }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe qreps <q1,q2,...> <n>` — run the named
-    // declared queries n times each in ONE JVM (JIT-warm after rep 1)
-    // and print every rep: min-over-reps is the noise-robust A/B
-    // statistic on a shared box whose load swings 2-3x mid-run.
-    if (args.contains("qreps")) {
-      val i = args.indexOf("qreps")
-      val names = args(i + 1).split(",").toSeq
-      val n = args.lift(i + 2).map(_.toInt).getOrElse(3)
-      for (r <- 1 to n; name <- names) {
-        core.Artifacts.dropScope(name)
-        core.Artifacts.setScope(name)
-        val t0 = System.nanoTime()
-        noop(SparkEntry.queries(name)(spark, sfDir))
-        println(f"QREP $name $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        core.Caches.releaseTransients()
-      }
-      core.Artifacts.setScope("")
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe s12split` — s12 cost attribution:
-    // driver planning (force the executed plan, no job) vs execution,
-    // per gate stage, cold and warm. The event log showed a ~7 s
-    // zero-stage window before s12's first task plus 3-task compute
-    // stages on a 32-core box; this separates the two.
-    if (args.contains("s12split")) {
-      import graft.multimodal.{Multimodal, MultimodalPack}
-      def plan(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        df.queryExecution.executedPlan
-        println(f"PROBE plan $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      val m = MultimodalPack.gateMedia(spark, sfDir)
-      time("gateMedia count") { m.count(); () }
-      val hist = m.filter(col("media_id") < 300)
-      val batch = m.filter(col("media_id") >= 300)
-      val digests = batch.select(col("media_id"),
-        md5(Multimodal.hexOf(col("content"))).as("h"))
-      plan("digests")(digests)
-      time("digests exec 1") { noop(digests) }
-      time("digests exec 2") { noop(digests) }
-      val fps = batch.select(col("media_id"),
-        Multimodal.dhash(col("content")).as("fp"))
-      plan("dhash")(fps)
-      time("dhash exec 1") { noop(fps) }
-      time("dhash exec 2") { noop(fps) }
-      // localCheckpoint() is eager — it must run INSIDE the timed
-      // block or the probe prints ~0 and misattributes the cost
-      var fpsCut: org.apache.spark.sql.DataFrame = null
-      time("dhash localCheckpoint (eager)") {
-        fpsCut = batch.select(col("media_id"),
-          Multimodal.dhash(col("content")).as("fp")).localCheckpoint()
-      }
-      val probeCut = graft.dedup.Dedup.hammingProbeBanded(
-        fpsCut.select(col("media_id").as("id"), col("fp").as("simhash")),
-        hist.select(col("media_id").as("id"),
-          Multimodal.dhash(col("content")).as("simhash")).localCheckpoint(),
-        maxDist = 4, bits = Multimodal.DhashBits)
-      time("banded probe over checkpointed fps") { noop(probeCut) }
-      for (r <- 1 to 3) {
-        val gate = MultimodalPack.mediaGateOf(hist, batch)
-        val t0 = System.nanoTime()
-        gate.queryExecution.executedPlan
-        println(f"PROBE plan full gate $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        time(s"full gate exec $r") { noop(gate) }
-        core.Caches.releaseTransients()
-      }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe artwarm` — the mitigation experiment
-    // for the artreps finding: does a cheap small-SF build pass
-    // (compiling the same codegen classes + MLlib/regex loops) bring
-    // the first full-SF build down to the steady-state number?
-    if (args.contains("artwarm")) {
-      // optional second arg picks the warm SF (how little data still
-      // compiles the hot loops?); default sf0.01
-      val warmDir = args.drop(args.indexOf("artwarm") + 1).headOption
-        .getOrElse("/root/testdata/sf0.01")
-      val t0 = System.nanoTime()
-      SparkEntry.packs.flatMap(_.artifacts.toSeq).sortBy(_._1)
-        .foreach { case (_, build) =>
-          build(spark, warmDir).write.format("noop").mode("overwrite").save()
-        }
-      println(f"ARTWARM warm(sf0.01): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      val t1 = System.nanoTime()
-      SparkEntry.packs.flatMap(_.artifacts.toSeq).sortBy(_._1)
-        .foreach { case (name, build) =>
-          val t2 = System.nanoTime()
-          build(spark, sfDir).write.format("noop").mode("overwrite").save()
-          println(f"ARTWARM $name: ${(System.nanoTime() - t2) / 1e9}%.2f s")
-        }
-      println(f"ARTWARM timed(sf0.1): ${(System.nanoTime() - t1) / 1e9}%.2f s")
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe ivfscale` — the FAISS nlist ∝ √n rule,
-    // measured: with nCentroids FIXED at the sf0.1 default (16), a
-    // 10× corpus probes nProbe/nCentroids = 1/4 of all vectors per
-    // query — quadratic/4 — while √n-scaled lists keep candidate
-    // volume ≈ nProbe·n/√n per query. Same recall ladder, different
-    // wall-clock class.
-    if (args.contains("ivfscale")) {
-      val e = graft.core.Tables(spark, sfDir).embeddings
-      val n = e.count()
-      time(s"ivf n=$n nCentroids=16 nProbe=4 (sf0.1 default)")(noop(
-        graft.vector.KnnJoin.approxIvf(spark, e, e, 3, 16, 4)))
-      val root = math.max(16, math.sqrt(n.toDouble).toInt)
-      time(s"ivf n=$n nCentroids=$root nProbe=8 (sqrt-n rule)")(noop(
-        graft.vector.KnnJoin.approxIvf(spark, e, e, 3, root, 8)))
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe selfscale` — the declared quadratic
-    // surface vs its strategy-dispatched escape: exact self-top3
-    // (broadcast-heap O(n²·d)) against the IvfSq8-backed selfTop3
-    // artifact at the same corpus. Run with SPARK_GRAFT_SF_DIR set to
-    // the 10× dir for the PERF.md scale row.
-    if (args.contains("selfscale")) {
-      import graft.vector.KnnJoin
-      val e = graft.core.Tables(spark, sfDir).embeddings
-      val n = e.count()
-      time(s"selfTop3 n=$n exact (quadratic)")(noop(
-        KnnJoin.exact(spark, e, e, 3)))
-      time(s"selfTop3 n=$n IvfSq8 cold (k-means build + search)")(noop(
-        KnnJoin.search(spark, e, e, 3, KnnJoin.IvfSq8())))
-      // split build from search: the index is a session artifact in
-      // real pipelines (built once, probed by every downstream query),
-      // so the amortized row is the search with prebuilt index parts
-      val nlist = KnnJoin.resolveNlist(0, e)
-      var cents: org.apache.spark.sql.DataFrame = null
-      var assign: org.apache.spark.sql.DataFrame = null
-      var stats: org.apache.spark.sql.DataFrame = null
-      time(s"selfTop3 n=$n IvfSq8 index build only (nlist=$nlist)") {
-        cents = KnnJoin.ivfCentroids(spark, e, nlist, "42", 2)
-          .persist(); cents.count()
-        assign = KnnJoin.nearestCentroids(spark, e, cents, 1)
-          .persist(); assign.count()
-        stats = KnnJoin.sq8Stats(e).persist(); stats.count()
-      }
-      time(s"selfTop3 n=$n IvfSq8 search w/ prebuilt index")(noop(
-        KnnJoin.approxIvfSq8(spark, e, e, 3,
-          centroidsOpt = Some(cents), assignmentsOpt = Some(assign),
-          statsOpt = Some(stats))))
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe bpescale` — the BPE merge loop at
-    // realistic vocabulary sizes (the suite's t10 runs 16 merges over
-    // 4096 types for oracle-CTE tractability; production tokenizers
-    // run ~1k-32k merges over ~64k types). One distributed histogram
-    // pass + bounded collect, then the driver loop at a (merges,
-    // types) grid — the numbers go to PERF.md's merge-loop table,
-    // with the "when to go distributed" note.
-    if (args.contains("bpescale")) {
-      import graft.text.{Bpe, TextOps}
-      val t0 = System.nanoTime()
-      val counts = graft.core.Tables(spark, sfDir).documents
-        .select(explode(TextOps.words(col("text"))).as("wd"))
-        .groupBy(col("wd")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("wd")).limit(65536)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      println(f"BPESCALE histogram+collect: ${(System.nanoTime() - t0) / 1e9}%.2f s" +
-        s" (distinct types collected=${counts.size})")
-      // the synthetic corpus has a ~31-word vocabulary — pad to a
-      // REALISTIC natural-language type table (Bpe.syntheticZipfTypes:
-      // deterministic syllable-composed words under a Zipf count law,
-      // word length 4-24 chars, long tail of count-1 types)
-      val syn = Bpe.syntheticZipfTypes(65536)
-      // production-vocab rows (r11 verdict #8): 8k and 32k merges are
-      // the real tokenizer regime — the incremental pair→words index's
-      // slope in MERGES is what the table pins
-      for ((nm, mt) <- Seq((16, 4096), (256, 16384), (256, 65536),
-                           (1024, 65536), (8192, 65536), (32768, 65536))) {
-        val types = syn.take(mt)
-        val t1 = System.nanoTime()
-        val ms = Bpe.trainOnTypesIncremental(types, nm)
-        println(f"BPESCALE incremental merges=$nm types=${types.size}: " +
-          f"${(System.nanoTime() - t1) / 1e9}%.2f s (learned=${ms.size})")
-        // the naive contrast only where it stays tractable; pass
-        // "naiveall" to force the full grid for the PERF.md table
-        if (args.contains("naiveall") || nm * types.size <= 16L * 1024 * 1024) {
-          val t2 = System.nanoTime()
-          val msN = Bpe.trainOnTypes(types, nm)
-          println(f"BPESCALE naive       merges=$nm types=${types.size}: " +
-            f"${(System.nanoTime() - t2) / 1e9}%.2f s (learned=${msN.size}, " +
-            s"equal=${msN == ms})")
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe mmshards` — the mm05 shard-budget
-    // sweep: the committed claim is that the test-scale 4 KB budget's
-    // directory fan-out (~450 dirs at 1x, ~4,500 at 10x) collapses at
-    // production budgets; measure write + read-back wall and the
-    // directory count across budgets instead of arguing it. Run with
-    // SPARK_GRAFT_SF_DIR at 1x and at the 10x corpus for PERF.md.
-    if (args.contains("mmshards")) {
-      import graft.multimodal.MultimodalPack
-      for (budget <- Seq(4096L, 65536L, 1048576L)) {
-        val t0 = System.nanoTime()
-        val out = MultimodalPack.shardedWriteDir(spark, sfDir, budget)
-        val wrote = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val n = spark.read.parquet(out).count()
-        val readS = (System.nanoTime() - t1) / 1e9
-        val dirs = Option(new java.io.File(out).listFiles()).fold(0)(
-          _.count(f => f.isDirectory && f.getName.startsWith("shard_id=")))
-        println(f"MMSHARDS budget=$budget dirs=$dirs rows=$n " +
-          f"write=$wrote%.2f s readback=$readS%.2f s")
-      }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe ivfsplit` — the v19 cost-split probe
-    // (r10 verdict #5): v19's 13.8x at 30x sits inside the bound but
-    // the growth is all index REBUILD. Split Lloyd (seed sample + 2
-    // refinement iterations) / assignment (vector→list) / probe+
-    // rerank (query cost against the PREBUILT index — the amortized
-    // row: real pipelines build the index once per session and every
-    // downstream query rides it) / the full v19 build+search. No
-    // clearCache between stages — the prebuilt frames must stay
-    // cached or the probe row silently re-times the build. Run with
-    // SPARK_GRAFT_SF_DIR at 1x and the 10x/30x corpora for PERF.md.
-    if (args.contains("ivfsplit")) {
-      import graft.vector.KnnJoin
-      def timeNC(name: String)(f: => Unit): Unit = {
-        val t0 = System.nanoTime()
-        f
-        println(f"PROBE $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      val e = graft.core.Tables(spark, sfDir).embeddings
-      val n = e.count()
-      val nlist = KnnJoin.resolveNlist(0, e)
-      var cents: org.apache.spark.sql.DataFrame = null
-      timeNC(s"ivfsplit n=$n nlist=$nlist lloyd (sample + 2 iters)") {
-        cents = KnnJoin.ivfCentroids(spark, e, nlist, "42", 2).persist()
-        cents.count(); ()
-      }
-      var assign: org.apache.spark.sql.DataFrame = null
-      timeNC(s"ivfsplit n=$n assignment (vector -> list)") {
-        assign = KnnJoin.nearestCentroids(spark, e, cents, 1).persist()
-        assign.count(); ()
-      }
-      timeNC(s"ivfsplit n=$n probe+rerank (prebuilt index)") {
-        noop(KnnJoin.approxIvf(spark, e, e, 3, nCentroids = nlist,
-          centroidsOpt = Some(cents), assignmentsOpt = Some(assign)))
-      }
-      timeNC(s"ivfsplit n=$n full v19 (build + search)") {
-        noop(KnnJoin.approxIvf(spark, e, e, 3))
-      }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe gatestate` — the s09 state-lifecycle
-    // instrument (r10 verdict #1): drive the continuous-ingest gate's
-    // per-batch body over 24 direct micro-batches of 200 docs, with
-    // the lifecycle OFF (baseline: every batch=* dir listed and
-    // unioned per trigger — listing + scan cost grows with batch
-    // count) vs ON (generation compaction every 6 + the d13 bloom
-    // front). Prints per-batch wall seconds plus the state dir/file
-    // counts; the flat-vs-growing curve goes to PERF.md. Decisions
-    // are spec-pinned identical (StreamingSpec), so this measures
-    // cost only.
-    if (args.contains("gatestate")) {
-      import graft.streaming.Streams
-      val docs = graft.core.Tables(spark, sfDir).documents
-        .select(col("doc_id"), col("text"))
-      val nBatches = 24
-      // per-batch volume scales WITH the corpus (run at 1x and the
-      // 10x dir for the two state-volume rows of the compaction-spike
-      // table): batches slice by MODULO of doc_id, not an id range —
-      // ids in the scale corpus are contiguous per replica block, so
-      // range slices would draw each batch from a single replica
-      // block and the dup-regime mix per batch would differ from the
-      // base corpus's; modulo spreads every replica block uniformly
-      // across the batch sequence (replicas of one doc land in
-      // DIFFERENT batches, exercising the cross-batch history path)
-      // the gate's compaction runs INSIDE the K-th trigger; the probe
-      // drives it manually at the same cadence so the fold's wall is
-      // broken out of the batch wall (r11 verdict #4: measure the
-      // spike, not just the flat per-batch curve)
-      val compactEvery = 6
-      for ((tag, opts) <- Seq(
-          "baseline" -> Streams.GateOptions(compactEvery = 0,
-            bloomScreen = false),
-          "lifecycle" -> Streams.GateOptions(compactEvery = 0,
-            bloomScreen = true))) {
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_gatestate_$tag").toString
-        val outDir = root + "/decisions"
-        val histDir = root + "/hist"
-        for (i <- 0 until nBatches) {
-          val b = docs.filter(
-            pmod(col("doc_id"), lit(nBatches.toLong)) === i.toLong)
-          val t0 = System.nanoTime()
-          Streams.dedupGateBatch(spark, b, i.toLong, outDir, histDir, opts)
-          val wall = (System.nanoTime() - t0) / 1e9
-          val compactWall =
-            if (tag == "lifecycle" && i > 0 && i % compactEvery == 0) {
-              val t1 = System.nanoTime()
-              Streams.compactState(spark, histDir, i.toLong,
-                opts.copy(compactEvery = compactEvery))
-              (System.nanoTime() - t1) / 1e9
-            } else 0.0
-          val dirs = Option(new java.io.File(histDir + "/digests")
-            .listFiles()).fold(0)(_.count(_.isDirectory))
-          val files = {
-            val s = java.nio.file.Files.walk(java.nio.file.Paths.get(histDir))
-            try s.filter(java.nio.file.Files.isRegularFile(_)).count()
-            finally s.close()
-          }
-          println(f"GATESTATE $tag batch=$i%02d wall=$wall%.2f s " +
-            f"compact=$compactWall%.2f s digest_dirs=$dirs " +
-            f"state_files=$files")
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe dhashcse` — the measurement behind the
-    // staged-block form of Multimodal.dhash: codegen subexpression
-    // elimination does NOT fully collapse a 66-reference md5
-    // expression to its 5 distinct block calls (measured 0.98 s vs
-    // 0.67 s warm on 6k images), so the production dhash binds each
-    // block digest once through Expr.let. The inline variant below
-    // keeps the UNstaged original as the contrast and the probe
-    // equality-checks the two.
-    if (args.contains("dhashcse")) {
-      import graft.multimodal.{Multimodal, MultimodalPack}
-      import graft.core.Expr
-      val m = MultimodalPack.sceneMedia(spark, sfDir).persist()
-      val nm = m.count()
-      def dhashUnstaged(content: org.apache.spark.sql.Column) =
-        Expr.let(Multimodal.hexOf(content)) { hx =>
-          val scene = substring(hx, 7, 32)
-          val perturb = conv(substring(hx, 39, 2), 16, 10).cast("int") %
-            Multimodal.DhashPixels
-          val lumArr = array((0 until Multimodal.DhashPixels).map { i =>
-            val block = md5(concat(scene, lit(s"|px${i / 16}")))
-            conv(substring(block, (i % 16) * 2 + 1, 2), 16, 10).cast("int") +
-              when(perturb === i, 8).otherwise(0)
-          }: _*)
-          Expr.let(lumArr) { lum =>
-            (0 until Multimodal.DhashBits).map { k =>
-              val cols = Multimodal.DhashGridCols
-              val idx = (k / (cols - 1)) * cols + k % (cols - 1)
-              when(element_at(lum, idx + 2) > element_at(lum, idx + 1),
-                lit(1L << k)).otherwise(0L)
-            }.reduce(_ + _)
-          }
-        }
-      for (rep <- 1 to 2) {
-        time(s"dhashcse n=$nm unstaged (66 md5 refs) rep=$rep")(noop(
-          m.select(col("media_id"), dhashUnstaged(col("content")).as("h"))))
-        time(s"dhashcse n=$nm staged production dhash rep=$rep")(noop(
-          m.select(col("media_id"),
-            Multimodal.dhash(col("content")).as("h"))))
-      }
-      val neq = m.select(Multimodal.dhash(col("content")).as("a"),
-          dhashUnstaged(col("content")).as("b"))
-        .filter(col("a") =!= col("b")).count()
-      println(s"DHASHCSE identical=${neq == 0L} (diffs=$neq)")
-      m.unpersist()
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe pairpred` — the in-join pair-predicate
-    // pushdown (r13 verdict #3): a DENSE-SAMPLED video corpus (every
-    // intra-video frame pair is a true near-dup — temporal
-    // self-similarity, the real-video worst case) mined with the
-    // same-item exclusion INSIDE the band join vs filtered after the
-    // cross-band dedup aggregation. The drop is the intra-item pair
-    // mass that no longer transits the dedup shuffle — per-video
-    // QUADRATIC in frames-per-video (V·C(F,2) here), while the kept
-    // cross-item pairs are the planted clips only.
-    if (args.contains("pairpred")) {
-      import graft.multimodal.Multimodal
-      val nV = 60L
-      val nF = 80L
-      // per-video scene, per-frame encoder: every frame of a video is
-      // a near-identical re-encode of the same latent scene
-      def content(text: org.apache.spark.sql.Column,
-                  enc: org.apache.spark.sql.Column) =
-        unhex(concat(substring(md5(concat(text, lit("|h"), enc)), 1, 6),
-          md5(text), md5(concat(text, lit("|n"), enc))))
-      val frames = spark.range(nV).select(col("id").as("v"))
-        .crossJoin(spark.range(nF).select(col("id").as("f")))
-        .select(struct(col("v").as("item"), col("f").as("unit")).as("id"),
-          Multimodal.dhash(content(concat(lit("pv"), col("v")),
-            concat(lit("e"), col("f")))).as("simhash"))
-        .persist()
-      val n = frames.count()
-      val pred = col("a_id.item") =!= col("b_id.item")
-      for (rep <- 1 to 2) {
-        var kept = 0L
-        time(s"pairpred n=$n in-join exclusion rep=$rep") {
-          kept = Dedup.hammingPairsBandedOf(frames, 4,
-            Multimodal.DhashBits, pairPredicate = pred).count()
-        }
-        var unf = 0L
-        time(s"pairpred n=$n post-filter rep=$rep") {
-          unf = Dedup.hammingPairsBandedOf(frames, 4,
-            Multimodal.DhashBits).count()
-        }
-        println(s"PAIRPRED rep=$rep cross_pairs=$kept all_pairs=$unf " +
-          s"intra_dropped_before_shuffle=${unf - kept}")
-      }
-      frames.unpersist()
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe logread` — the compacted-log READER
-    // win (r12 verdict #7): `readDecisionsLog` over a raw `batch=*`
-    // tree of a few hundred directories vs the SAME rows folded into
-    // one generation by the production `compactLog`. The writer-side
-    // listing growth was measured in gatestate; this row proves the
-    // fix pays off for the downstream consumer the compaction was
-    // built for (per-dir open + footer read dominates at high dir
-    // counts; on an object store the listing itself does too).
-    if (args.contains("logread")) {
-      import graft.streaming.Streams
-      val nB = 240
-      val dec = graft.core.Tables(spark, sfDir).documents
-        .select(col("doc_id"), lit("new").as("status"),
-          col("doc_id").as("best_hist_id"), lit(0.0).as("best_jaccard"))
-        .persist()
-      val nRows = dec.count()
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_logread").toString
-      for (layout <- Seq("raw", "gen")) {
-        val out = s"$root/$layout"
-        for (i <- 0 until nB)
-          dec.filter(pmod(col("doc_id"), lit(nB.toLong)) === i.toLong)
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$i")
-        if (layout == "gen") {
-          val t0 = System.nanoTime()
-          Streams.compactDecisionsLog(spark, out, nB.toLong)
-          println(f"LOGREAD fold wall: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        val dirs = Option(new java.io.File(out).listFiles())
-          .fold(0)(_.count(_.isDirectory))
-        for (rep <- 1 to 3) {
-          val t0 = System.nanoTime()
-          val n = Streams.readDecisionsLog(spark, out).count()
-          assert(n == nRows, s"logread $layout lost rows: $n != $nRows")
-          println(f"LOGREAD $layout rep=$rep dirs=$dirs rows=$n " +
-            f"read=${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-      }
-      dec.unpersist()
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe bandblocks` — the d10 band-collision
-    // headroom measurement (r11 verdict #5): single-block 4x15 banding
-    // vs the Manku pair-combination 6x10 form (20-bit keys) on the
-    // current SF dir. Run at 1x and the 10x/30x corpora; the wall
-    // ratio at growing corpus size is the crossover table for the
-    // band-width rule on simhashPairsBandedWideBlocks.
-    if (args.contains("bandblocks")) {
-      val corpus = graft.core.Tables(spark, sfDir).documents
-        .select(col("doc_id"), col("text"))
-      val n = corpus.count()
-      time(s"bandblocks n=$n banded 4x15 (d10 default)")(noop(
-        Dedup.simhashPairsBandedWide(corpus, col("doc_id"), col("text"))))
-      time(s"bandblocks n=$n pair-combination 6x10 (20-bit keys)")(noop(
-        Dedup.simhashPairsBandedWideBlocks(corpus, col("doc_id"),
-          col("text"))))
-      spark.stop()
-      return
-    }
-
-    // `runMain graft.PerfProbe crossover` — the d10/d05 band-width
-    // crossover measurement: banded vs all-pairs wall time on 1× and
-    // a 10×-unioned corpus (distinct ids, duplicated text — realistic
-    // dup clusters). All-pairs is quadratic (2.5e9 candidate pairs at
-    // 50k docs); banded stays near-linear.
-    if (args.contains("crossover")) {
-      val base = graft.core.Tables(spark, sfDir).documents
-        .select(col("doc_id"), col("text"))
-      val x10 = (0 until 10).map { k =>
-        base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _)
-      for ((nm, corpus) <- Seq("1x" -> base, "10x" -> x10)) {
-        val n = corpus.count()
-        time(s"crossover $nm ($n docs) banded60")(noop(
-          Dedup.simhashPairsBandedWide(corpus, col("doc_id"), col("text"))))
-        time(s"crossover $nm ($n docs) allpairs60")(noop(
-          Dedup.simhashPairsAllPairsWide(corpus, col("doc_id"), col("text"))))
-        time(s"crossover $nm ($n docs) banded32")(noop(
-          Dedup.simhashPairsBanded(corpus, col("doc_id"), col("text"), 2)))
-        time(s"crossover $nm ($n docs) allpairs32")(noop(
-          Dedup.simhashPairsAllPairs(corpus, col("doc_id"), col("text"), 2)))
-      }
-      spark.stop()
-      return
-    }
-
-    time("augmented scan")(noop(aug))
-    val exploded = aug.select(col("doc_id").as("id"),
-      explode(Dedup.shingles(col("text"), 3)).as("sh"))
-    time("native shingle explode")(noop(exploded))
-    val hashedRows = exploded
-      .select(col("id"), Dedup.hash60(col("sh")).as("sh"))
-    time("explode + hash60")(noop(hashedRows))
-    time("explode + hash60 + distinct")(noop(hashedRows.distinct()))
-    val hr = hashedRows.distinct().cache()
-    time("materialize hashed cache")(hr.count())
-    val a2 = hr.select(col("id").as("a_id"), col("sh"))
-    val b2 = hr.select(col("id").as("b_id"), col("sh"))
-    time("self-join long keys") {
-      noop(a2.join(b2, Seq("sh")).filter(col("a_id") < col("b_id"))
-        .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter")))
-    }
-    time("full jaccardPairs")(noop(DedupPack.jaccard(spark, sfDir)))
-    val s = Dedup.simhash(aug, col("doc_id"), col("text")).cache()
-    time("simhash values")(s.count())
-    val sc = Dedup.simhash(aug, col("doc_id"), col("text")).cache()
-    sc.count()
-    time("banded joins from cached simhash") {
-      val bounds = (0 to 3).map(i => i * 16 / 3)
-      val cands = (0 until 3).map { i =>
-        val lo = bounds(i); val width = bounds(i + 1) - lo
-        val band = shiftright(col("simhash"), lo).bitwiseAND(lit((1L << width) - 1))
-        val a2 = sc.select(col("id").as("a_id"), col("simhash").as("ha"), band.as("bv"))
-        val b2 = sc.select(col("id").as("b_id"), col("simhash").as("hb"), band.as("bv"))
-        a2.join(broadcast(b2), Seq("bv")).filter(col("a_id") < col("b_id"))
-          .select(col("a_id"), col("b_id"), col("ha"), col("hb"))
-      }.reduce(_ unionByName _)
-      noop(cands.groupBy(col("a_id"), col("b_id"))
-        .agg(min(col("ha")).as("ha"), min(col("hb")).as("hb"))
-        .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
-        .filter(col("hamming") <= 2))
-    }
-    sc.unpersist()
-    time("all-pairs from scratch")(noop(
-      Dedup.simhashPairsAllPairs(aug, col("doc_id"), col("text"), 2)))
-
-    // d07 shape: stop-shingle cap 20 — current join path vs posting lists
-    time("d07 current (rare join + self-join)")(noop(
-      Dedup.jaccardPairs(aug, col("doc_id"), col("text"), 3, 0.5, 20)))
-    time("d07 posting-list variant") {
-      val allRows = aug.select(col("doc_id").as("id"),
-          explode(Dedup.shingles(col("text"), 3)).as("sh"))
-        .select(col("id"), Dedup.hash60(col("sh")).as("sh"))
-        .distinct()
-      val lists = allRows.groupBy(col("sh"))
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) <= 20).cache()
-      val sizes = lists.select(explode(col("ids")).as("id"))
-        .groupBy(col("id")).agg(count(lit(1)).as("n"))
-      val pairs = lists.filter(size(col("ids")) > 1)
-        .select(posexplode(col("ids")).as(Seq("i", "a_id")), col("ids"))
-        .select(col("a_id"), explode(slice(col("ids"), col("i") + 2,
-          size(col("ids")))).as("b_id"))
-      val inter = pairs.groupBy(col("a_id"), col("b_id"))
-        .agg(count(lit(1)).as("inter"))
-      noop(inter
-        .join(sizes.select(col("id").as("a_id"), col("n").as("na")), Seq("a_id"))
-        .join(sizes.select(col("id").as("b_id"), col("n").as("nb")), Seq("b_id"))
-        .withColumn("jaccard", col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= 0.5))
-    }
-    spark.stop()
+  private def explain(spark: SparkSession, sfDir: String, name: String): Unit = {
+    println(s"\n===== $name =====")
+    val df: DataFrame = SparkEntry.queries(name)(spark, sfDir)
+    val formatted = df.queryExecution.explainString(FormattedMode)
+    println(formatted)
+    val pushed = "PushedFilters: \\[[^\\]]+\\]".r
+      .findAllIn(formatted).toSeq.distinct
+    val schemas = "ReadSchema: [^\\n]+".r.findAllIn(formatted).toSeq.distinct
+    val bcasts = formatted.linesIterator.count(_.contains("BroadcastHashJoin"))
+    // codegen spans only exist in the FINAL (post-AQE) plan, and only
+    // on the QueryExecution that actually ran — collect() drives THIS
+    // one (df.write would plan a fresh QE)
+    df.collect()
+    val wsc = "\\*\\((\\d+)\\)".r
+      .findAllMatchIn(df.queryExecution.executedPlan.toString)
+      .map(_.group(1)).toSet.size
+    println(s"--- audit: pushedFilters=${pushed.size} " +
+      s"broadcastHashJoins=$bcasts wholeStageCodegenSpans=$wsc")
+    pushed.foreach(p => println(s"    $p"))
+    schemas.foreach(s => println(s"    $s"))
+    core.Caches.releaseTransients()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up corpus builder — the harness form of the round-6
@@ -75,16 +75,7 @@ object ScaleCorpus {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     require(!outDir.startsWith("/root/testdata") && !outDir.startsWith("/root/reference"),
       s"refusing to write the synthetic corpus into read-only data dirs: $outDir")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = core.GraftSession.local()
     val tables = core.Tables(spark, srcDir)
     for (name <- keyCols.keys.toSeq.sorted) {
       // events goes through the session's nanos→micros reader so the

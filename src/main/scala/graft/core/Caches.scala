@@ -78,7 +78,7 @@ object Caches {
     * `maxDist+1` join branches) turns into SECONDS of single-threaded
     * driver work per query — measured on s12: ~5 s to plan the gate
     * and 6 parallel broadcast stages each re-walking the fingerprint
-    * tree (PerfProbe `s12split`). Cutting the lineage replaces all of
+    * tree (OPTIMIZATION_r14.md s12 split). Cutting the lineage replaces all of
     * it with a compact scan of the materialized rows.
     *
     * Use for relations that are (a) expensive to PLAN (huge expression

@@ -1,32 +1,20 @@
 package graft.core
 
-/** JVM-exit cleanup for per-application fixture directories.
+/** Fixture directories of the declared queries.
   *
-  * The i08/mm05 round-trip queries write under a path that embeds the
-  * Spark applicationId (two JVMs benching the same data dir must not
-  * race on overwrite-then-read-back), which means no later JVM ever
-  * reuses — or removes — the directory: every bench/verify run would
-  * otherwise leave a fresh `target/mm_shards_*` / `fixtures_frag_*`
-  * tree behind, accumulating without bound across rounds.
+  * Several queries write a deterministic fixture tree and read it back
+  * (i01/i05 scan trees, the i03 site, the i04 workbook, the i06/i07
+  * format round-trips, i08's fragments, mm05's shards). All of them
+  * live under ONE per-JVM directory created under `java.io.tmpdir`
+  * ([[fixtureRoot]]): a read-only query leaves nothing in the caller's
+  * working directory, and two JVMs over the same data dir never race
+  * on an overwrite-then-read-back.
   *
-  * Deletion can't happen eagerly (the query's read-back DataFrame is
+  * Deletion can't happen eagerly (a query's read-back DataFrame is
   * lazy — consumers may re-scan the directory any time during the
-  * session), so registered paths are removed by a single shutdown
-  * hook. Registration is idempotent per path.
+  * session), so the whole root is removed by one shutdown hook.
   */
 object TempDirs {
-
-  private val paths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private lazy val hook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      paths.forEach { p =>
-        try deleteRecursively(new java.io.File(p))
-        catch { case _: Throwable => () }
-      }
-    }, "graft-tempdir-cleanup"))
-  }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) {
@@ -37,15 +25,19 @@ object TempDirs {
     ()
   }
 
-  /** Register `path` for deletion at JVM exit; returns it unchanged so
-    * call sites stay one expression. The REGISTERED form is the
-    * absolute path resolved NOW — the shutdown hook runs against the
-    * JVM's exit-time working directory, so a relative registration
-    * ('target/...') from a consumer that changes cwd mid-process would
-    * leak the intended tree or delete an unrelated one. */
-  def cleanupOnExit(path: String): String = {
-    hook
-    paths.add(new java.io.File(path).getAbsolutePath)
-    path
+  private lazy val jvmRoot: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
+      "graft-fixtures-").toAbsolutePath
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try deleteRecursively(p.toFile) catch { case _: Throwable => () },
+      "graft-fixture-cleanup"))
+    p
   }
+
+  /** Absolute fixture directory of query family `tag` over data dir
+    * `dir`: `<per-JVM root>/<tag>_<dir with non-alphanumerics as _>`.
+    * Stable within a JVM; the directory itself is not created. */
+  def fixtureRoot(tag: String, dir: String): String =
+    jvmRoot.resolve(s"${tag}_${dir.replaceAll("[^A-Za-z0-9]", "_")}").toString
 }

@@ -51,14 +51,6 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Distinct (id, shingle) rows — the inverted-index relation. */
-  def shingleRows(df: DataFrame, id: Column, text: Column, k: Int): DataFrame =
-    df.select(id.as("id"), explode(shingles(text, k)).as("sh")).distinct()
-
-  /** n-gram Jaccard near-duplicate pairs ≥ threshold. Candidates are
-    * generated by the shared-shingle join (docs with zero common
-    * shingles never pair), intersections counted per pair, Jaccard
-    * from |A|+|B|−|A∩B|. */
   /** 60-bit md5-prefix hash — the join-key representation for shingle
     * matching. String shingle keys (~25 B + string hash/compare per
     * probe) made the inverted-index join the d02 bench's dominant
@@ -68,14 +60,18 @@ object Dedup {
   def hash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
+  /** n-gram Jaccard near-duplicate pairs ≥ threshold. Candidates are
+    * generated by the shared-shingle join (docs with zero common
+    * shingles never pair), intersections counted per pair, Jaccard
+    * from |A|+|B|−|A∩B|. The text form stays because the d03 groups
+    * artifact ([[DedupPack.groupsViaExactCollapse]]) mines pairs over
+    * the representative corpus, which no shared shingle artifact
+    * covers. */
   def jaccardPairs(df: DataFrame, id: Column, text: Column,
-                   k: Int = 3, threshold: Double = 0.5,
-                   maxShingleDocFreq: Int = Int.MaxValue): DataFrame = {
+                   k: Int = 3, threshold: Double = 0.5): DataFrame =
     // hash BEFORE the (single) distinct: dedup-ing the string rows
     // first would just add a second shuffle for the same result set
-    val hashed = hashedShingleRows(df, id, text, k)
-    jaccardPairsFromHashed(hashed, threshold, maxShingleDocFreq)
-  }
+    jaccardPairsFromHashed(hashedShingleRows(df, id, text, k), threshold)
 
   /** Distinct (id, 60-bit-hashed shingle) rows — the inverted-index
     * relation. Materialize ONCE and share when several consumers need
@@ -172,30 +168,11 @@ object Dedup {
         .as(Seq("seed", "mh")))
   }
 
-  /** MinHash-LSH candidate pairs: seeds grouped into bands of
-    * `rowsPerBand`; docs sharing any full band signature pair up.
-    * Candidates only — callers verify with [[jaccardPairs]] when
-    * exact Jaccard matters. */
-  def minhashCandidates(df: DataFrame, id: Column, text: Column,
-                        k: Int = 3, numHashes: Int = 12,
-                        rowsPerBand: Int = 3): DataFrame = {
-    // no distinct: min() is insensitive to duplicate shingle rows, so
-    // the dedup shuffle the Jaccard path needs is pure cost here
-    val rows = df.select(id.as("id"), explode(shingles(text, k)).as("sh"))
-    // cut: the self-join below references the signature relation twice
-    // — uncut, each side re-runs (or at best re-plans) the whole
-    // shingle+minhash pass per action
-    val sigs = graft.core.Caches.cut(minhashRows(rows, numHashes)
-      .withColumn("band", (col("seed") / rowsPerBand).cast("int"))
-      .groupBy(col("id"), col("band"))
-      .agg(concat_ws(",",
-        transform(array_sort(collect_list(struct(col("seed"), col("mh")))),
-          s => s.getField("mh").cast("string"))).as("bandsig")))
-    minhashCandidatesFromSigs(sigs)
-  }
-
-  /** [[minhashCandidates]]' banded self-join over a prebuilt (id,
-    * band, bandsig) signature relation (the session artifact path). */
+  /** MinHash-LSH candidate pairs: seeds grouped into bands, docs
+    * sharing any full band signature pair up — the banded self-join
+    * over a prebuilt (id, band, bandsig) signature relation (the
+    * session artifact path). Candidates only — callers verify with
+    * [[jaccardPairsFromHashed]] when exact Jaccard matters. */
   def minhashCandidatesFromSigs(sigs: DataFrame): DataFrame = {
     val a = sigs.select(col("id").as("a_id"), col("band"), col("bandsig"))
     val b = sigs.select(col("id").as("b_id"), col("band"), col("bandsig"))
@@ -204,94 +181,34 @@ object Dedup {
       .select(col("a_id"), col("b_id")).distinct()
   }
 
-  /** 16-bit SimHash per document over distinct words: per bit, sum
-    * ±1 weights from each word-hash bit; positive sums set the bit.
-    *
-    * The 16 bit-sums are parallel aggregate columns in ONE groupBy
-    * (map-side partials; same treatment as the minhash family mins) —
-    * the earlier 16× bit explode tripled the row volume through two
-    * shuffles. Identical arithmetic, so the d04/d05 oracles hold. */
-  def simhash(df: DataFrame, id: Column, text: Column): DataFrame =
-    simhashFromWordHashes(df.select(id.as("id"),
+  /** (id, hv16, hv60) — one row per distinct word per document, both
+    * simhash hash widths ([[hash16]], [[hash60]]) riding one text pass.
+    * Compact proxy rows (ids and hashes, never words); hash collisions
+    * keep their row multiplicity exactly as the word explode does, so
+    * [[simhashOf]] over any id subset equals the pass over that
+    * subset's text. */
+  def wordHashes(df: DataFrame, id: Column, text: Column): DataFrame =
+    df.select(id.as("id"),
         explode(array_distinct(TextOps.words(text))).as("w"))
-      .select(col("id"), Dedup.hash16(col("w")).as("hv")))
+      .select(col("id"), hash16(col("w")).as("hv16"),
+        hash60(col("w")).as("hv60"))
 
-  /** [[simhash]]'s aggregation over a prebuilt (id, hv) 16-bit
-    * word-hash relation (the session word-hash artifact path) —
-    * identical arithmetic, the text/hash pass factored out. */
-  def simhashFromWordHashes(words: DataFrame): DataFrame = {
-    val bitSums = (0 until 16).map { b =>
-      sum(pmod(floor(col("hv") / pow(lit(2.0), lit(b))).cast("long"), lit(2L))
-        * 2 - 1).as(s"s$b")
-    }
-    val simhashExpr = (0 until 16)
-      .map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-      .reduce(_ + _)
-    words.groupBy(col("id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("id"), simhashExpr.as("simhash"))
-  }
-
-  /** SimHash near-dup pairs at Hamming distance ≤ maxDist. Two
-    * physical strategies with identical output (spec-asserted), chosen
-    * by the caller like the kNN family's exact/LSH/IVF ladder:
-    * this default is the broadcast all-pairs scan — primitive
-    * xor/popcount map-side, no shuffle — which wins while n² stays
-    * modest (measured at 5.6k docs: 1.6 s vs banded 3.1 s; a driver-
-    * side count to auto-switch costs more than it saves at that size).
-    * Past ~10⁵ docs, use [[simhashPairsBanded]]: candidate volume
-    * n²/2^bandWidth replaces the n² scan. */
-  def simhashPairs(df: DataFrame, id: Column, text: Column,
-                   maxDist: Int = 2): DataFrame =
-    allPairsFrom(simhash(df, id, text), maxDist)
-
-  /** Banded-LSH pair generation: the `bits` split into `maxDist + 1`
-    * bands — two hashes within `maxDist` bit flips MUST agree exactly
-    * on at least one band (pigeonhole), so the equi-join per band
-    * yields a candidate superset and the exact Hamming filter keeps
-    * precision. Candidates shuffle on band values, never an all-pairs
-    * scan — the inverted-index discipline of the minhash path. */
-  def simhashPairsBanded(df: DataFrame, id: Column, text: Column,
-                         maxDist: Int = 2, bits: Int = 16): DataFrame =
-    bandedFrom(graft.core.Caches.cut(simhash(df, id, text)), maxDist, bits)
-
-  /** [[simhashPairsBanded]] over a prebuilt (id, hv) 16-bit word-hash
-    * relation (the session word-hash artifact path). */
-  def simhashPairsBandedFromWordHashes(words: DataFrame, maxDist: Int = 2,
-                                       bits: Int = 16): DataFrame =
-    bandedFrom(graft.core.Caches.cut(simhashFromWordHashes(words)),
-      maxDist, bits)
-
-  /** The quadratic twin of [[simhashPairsBanded]]. */
-  def simhashPairsAllPairs(df: DataFrame, id: Column, text: Column,
-                           maxDist: Int = 2): DataFrame =
-    allPairsFrom(simhash(df, id, text), maxDist)
-
-  /** Wide (60-bit) SimHash per document over distinct words — the
-    * production fingerprint width (Manku, Jain & Das Sarma, WWW'07 use
-    * 64-bit simhash with Hamming ≤ 3; 60 bits here because the whole
-    * hashing tier is md5-prefix-derived — [[hash60]] — so the DuckDB
-    * oracle evaluates identical integer arithmetic). Bit sums are
-    * parallel aggregate columns in ONE groupBy like the 16-bit
-    * [[simhash]]; shifts/masks only, no floating point.
+  /** SimHash per document over an (id, hv) word-hash relation of
+    * `bits`-bit hashes: per bit, sum ±1 weights from each word-hash
+    * bit; positive sums set the bit. The `bits` bit-sums are parallel
+    * aggregate columns in ONE groupBy (map-side partials, like the
+    * minhash family mins); shifts/masks only, no floating point.
     *
-    * Width matters at corpus scale: with B bands the banded join's
-    * background collision rate per band is 2^-(bits/B), so 60/4 = 15
-    * bits per band (vs 16/3 ≈ 5) cuts random-collision candidates by
-    * ~2^10 while planted near-copies stay within the Hamming budget
-    * (measured at sf0.01: 120/150 planted pairs at distance 0, 125/150
-    * within ≤ 3). */
-  def simhashWide(df: DataFrame, id: Column, text: Column,
-                  bits: Int = 60): DataFrame =
-    simhashWideFromWordHashes(df.select(id.as("id"),
-        explode(array_distinct(TextOps.words(text))).as("w"))
-      .select(col("id"), hash60(col("w")).as("hv")), bits)
-
-  /** [[simhashWide]]'s aggregation over a prebuilt (id, hv) 60-bit
-    * word-hash relation (the session word-hash artifact path) —
-    * identical arithmetic, the text/hash pass factored out. */
-  def simhashWideFromWordHashes(words: DataFrame,
-                                bits: Int = 60): DataFrame = {
-    require(bits > 0 && bits <= 60, "wide simhash packs into hash60 bits")
+    * 16 bits (d04/d05) is the small-corpus diagnostic width; 60 bits
+    * (d10/d22) is the production width (Manku, Jain & Das Sarma,
+    * WWW'07 use 64-bit simhash with Hamming ≤ 3; 60 here because the
+    * hashing tier is md5-prefix-derived, so the DuckDB oracle
+    * evaluates identical integer arithmetic). Width matters at corpus
+    * scale: with B bands the banded join's background collision rate
+    * per band is 2^-(bits/B), so 60/4 = 15 bits per band (vs 16/3 ≈ 5)
+    * cuts random-collision candidates by ~2^10. */
+  def simhashOf(words: DataFrame, bits: Int): DataFrame = {
+    require(bits > 0 && bits <= 60, "simhash packs into hash60 bits")
     val bitSums = (0 until bits).map { b =>
       sum(shiftright(col("hv"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"s$b")
     }
@@ -300,106 +217,6 @@ object Dedup {
       .reduce(_ + _)
     words.groupBy(col("id")).agg(bitSums.head, bitSums.tail: _*)
       .select(col("id"), simhashExpr.as("simhash"))
-  }
-
-  /** Near-dup pairs at Hamming ≤ `maxDist` over the wide fingerprint,
-    * through the banded path: `maxDist + 1` bands of bits/(maxDist+1)
-    * bits (15 at the defaults — the Manku table shape), pigeonhole
-    * candidate join, exact popcount filter.
-    *
-    * THIS is the default near-dup path beyond ~1e5 documents. The 10×
-    * scale measurement (PERF.md round 6) put the band-width crossover
-    * in numbers: the 32-bit fingerprint's 16-bit bands scaled 26× on
-    * 10× data (2^-16 background collisions × a shared vocabulary's
-    * correlated bits) while these 15-bit bands over 60 bits scaled
-    * 3.8× — same recall discipline, different wall-clock class. Use
-    * the 32-bit form (d04/d05) only for small-corpus diagnostics and
-    * spec twins. */
-  def simhashPairsBandedWide(df: DataFrame, id: Column, text: Column,
-                             maxDist: Int = 3, bits: Int = 60): DataFrame =
-    // cut, not cache — (id, 60-bit simhash) rows referenced by
-    // 2·(maxDist+1) band branches (same rationale as
-    // [[hammingPairsBandedOf]]; r14 measured this site as a wash
-    // warm, but the cut also removes the simhash tree from the plan
-    // the driver's cold single-shot must compile)
-    bandedFrom(graft.core.Caches.cut(simhashWide(df, id, text, bits)),
-      maxDist, bits)
-
-  /** [[simhashPairsBandedWide]] over a prebuilt (id, hv) 60-bit
-    * word-hash relation (the session word-hash artifact path). */
-  def simhashPairsBandedWideFromWordHashes(words: DataFrame,
-                                           maxDist: Int = 3,
-                                           bits: Int = 60): DataFrame =
-    bandedFrom(
-      graft.core.Caches.cut(simhashWideFromWordHashes(words, bits)),
-      maxDist, bits)
-
-  /** The quadratic twin of [[simhashPairsBandedWide]] (spec
-    * cross-check only). */
-  def simhashPairsAllPairsWide(df: DataFrame, id: Column, text: Column,
-                               maxDist: Int = 3, bits: Int = 60): DataFrame =
-    allPairsFrom(simhashWide(df, id, text, bits), maxDist)
-
-  /** COMBINATION banding — the Manku, Jain & Das Sarma §3 block-
-    * permutation scale-out of [[simhashPairsBandedWide]]: split the
-    * fingerprint into `nBlocks` blocks and equi-join on every PAIR of
-    * blocks (C(nBlocks, 2) joins keyed on ~2·bits/nBlocks bits). Any
-    * `maxDist ≤ nBlocks − 2` bit flips touch at most `maxDist` blocks,
-    * leaving ≥ 2 intact, so at least one pair key matches exactly —
-    * the same recall contract as single-block banding with a sharper
-    * key: at the defaults (60 bits, 6 blocks of 10 → 20-bit pair keys
-    * vs d10's 4 blocks of 15), the background collision rate per
-    * comparison drops 2^5 (32×) while the join count rises 15/4. The
-    * n²/2^keyBits random-collision term is what makes single-block
-    * banding's slope LINEAR in corpus size (d10's measured 28-32× at
-    * 30× against a bound of 45).
-    *
-    * ADJUDICATED, not wired (PERF.md round-13 bandblocks table): at
-    * every corpus this box can hold, 4×15 wins — parity at 5k docs,
-    * 1.53× faster at 50k (the 15 join branches cost more than the
-    * collision term saves), and at 150k on the replica-heavy scale
-    * corpus THIS form OOMs the 8 GiB heap (identical-fingerprint
-    * replica clusters re-enumerate their true pairs in every one of
-    * the 15 branches) while 4×15 finishes in ~90 s. d10-family
-    * queries therefore keep unconditional 4×15; use this form only
-    * for corpora of ≥ ~10⁶ DISTINCT fingerprints, and only BEHIND an
-    * exact-collapse front (the mm06/d18 representative discipline) so
-    * duplicate clusters cannot multiply true pairs by the branch
-    * count, with memory budgeted for the 15 concurrent branches. */
-  def simhashPairsBandedWideBlocks(df: DataFrame, id: Column, text: Column,
-                                   maxDist: Int = 3, bits: Int = 60,
-                                   nBlocks: Int = 6): DataFrame =
-    bandedPairsFrom(
-      graft.core.Caches.cut(simhashWide(df, id, text, bits)),
-      maxDist, bits, nBlocks)
-
-  private def bandedPairsFrom(s: DataFrame, maxDist: Int, bits: Int,
-                              nBlocks: Int): DataFrame = {
-    require(nBlocks - 2 >= maxDist,
-      s"pair-combination banding needs nBlocks - 2 >= maxDist " +
-        s"(got $nBlocks blocks, maxDist $maxDist)")
-    val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
-    def block(i: Int): Column =
-      shiftright(col("simhash"), bounds(i))
-        .bitwiseAND(lit((1L << (bounds(i + 1) - bounds(i))) - 1))
-    val combos =
-      for { i <- 0 until nBlocks; j <- i + 1 until nBlocks } yield (i, j)
-    combos.map { case (i, j) =>
-      val a = s.select(col("id").as("a_id"), col("simhash").as("ha"),
-        block(i).as("bv1"), block(j).as("bv2"))
-      val b = s.select(col("id").as("b_id"), col("simhash").as("hb"),
-        block(i).as("bv1"), block(j).as("bv2"))
-      // exact Hamming filter inside the pair join, as in [[bandedFrom]]
-      a.join(b, Seq("bv1", "bv2"))
-        .filter(col("a_id") < col("b_id"))
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
-        .filter(col("hamming") <= maxDist)
-        .select(col("a_id"), col("b_id"), col("hamming"))
-    }.reduce(_ unionByName _)
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(min(col("hamming")).as("hamming"))
-      .select(col("a_id"), col("b_id"), col("hamming"))
   }
 
   /** Deterministic Bloom-filter membership, relationally executed —
@@ -645,25 +462,49 @@ object Dedup {
     * after the aggregation. Identical output to post-filtering
     * (spec-asserted on a dense-frames fixture). */
   def hammingPairsBandedOf(sig: DataFrame, maxDist: Int, bits: Int,
-                           pairPredicate: Column = lit(true)): DataFrame =
+                           pairPredicate: Column = lit(true)): DataFrame = {
     // lineage-CUT, not just cached: the fingerprint expression trees
-    // (66-md5 dHash, chroma grids) would otherwise be re-canonicalized
-    // by every one of the 2·(maxDist+1) band-branch references on
-    // every action — measured as seconds of single-threaded driver
-    // planning per query (PerfProbe s12split)
-    bandedFrom(graft.core.Caches.cut(sig), maxDist, bits,
-      pairPredicate)
-
-  /** [[hammingPairsBandedOf]] over a signature relation the caller has
-    * ALREADY lineage-cut (its plan is a compact scan): skips the
-    * second `Caches.cut` — the r14 verdict's double-materialization
-    * audit (clipContainment cut its compact unit frame and the banded
-    * join then cut the derived sig AGAIN: two blocking passes where
-    * the second input was already cheap to plan). */
-  private[graft] def hammingPairsBandedPreCut(
-      sig: DataFrame, maxDist: Int, bits: Int,
-      pairPredicate: Column = lit(true)): DataFrame =
-    bandedFrom(sig, maxDist, bits, pairPredicate)
+    // (66-md5 dHash, chroma grids, simhash bit-sums) would otherwise be
+    // re-canonicalized by every one of the 2·(maxDist+1) band-branch
+    // references on every action — measured as seconds of
+    // single-threaded driver planning per query
+    val s = graft.core.Caches.cut(sig)
+    val nBands = maxDist + 1
+    val bounds = (0 to nBands).map(i => i * bits / nBands)
+    val cands = (0 until nBands).map { i =>
+      val lo = bounds(i)
+      val width = bounds(i + 1) - lo
+      val band = shiftright(col("simhash"), lo)
+        .bitwiseAND(lit((1L << width) - 1))
+      val a = s.select(col("id").as("a_id"), col("simhash").as("ha"),
+        band.as("bv"))
+      val b = s.select(col("id").as("b_id"), col("simhash").as("hb"),
+        band.as("bv"))
+      // the exact Hamming filter runs INSIDE the band join — applied as
+      // the join evaluates, before the cross-band dedup aggregation
+      // shuffles (the band join itself still shuffles both projections
+      // on bv). Simhash bits over a shared vocabulary
+      // are correlated across documents, so band buckets skew far above
+      // the 2^-width uniform estimate; materializing every intra-bucket
+      // candidate pair into the cross-band dedup shuffle made the 50k-doc
+      // probe SLOWER than the quadratic twin (79 s vs 14 s — PERF.md
+      // round 6). Filtered here, only true near-dup pairs (≈ output
+      // size) reach the dedup aggregation below.
+      a.join(b, Seq("bv"))
+        .filter(col("a_id") < col("b_id"))
+        .filter(pairPredicate)
+        .withColumn("hamming",
+          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
+        .filter(col("hamming") <= maxDist)
+        .select(col("a_id"), col("b_id"), col("hamming"))
+    }.reduce(_ unionByName _)
+    // a pair found by several bands collapses to one row; hamming is a
+    // function of the ids, so min() just picks the constant
+    cands
+      .groupBy(col("a_id"), col("b_id"))
+      .agg(min(col("hamming")).as("hamming"))
+      .select(col("a_id"), col("b_id"), col("hamming"))
+  }
 
   /** ASYMMETRIC banded Hamming join — probe fingerprints `(id,
     * simhash)` against a HISTORY fingerprint relation `(id, simhash)`,
@@ -702,51 +543,16 @@ object Dedup {
       .agg(min(col("hamming")).as("hamming"))
   }
 
-  private def allPairsFrom(s: DataFrame, maxDist: Int): DataFrame = {
+  /** The quadratic all-pairs twin of [[hammingPairsBandedOf]] over the
+    * same `(id, simhash)` relation. Kept as the specs' recall oracle:
+    * banding must return exactly its pairs. */
+  private[graft] def hammingPairsAllPairsOf(s: DataFrame,
+                                            maxDist: Int): DataFrame = {
     val a = s.select(col("id").as("a_id"), col("simhash").as("ha"))
     val b = s.select(col("id").as("b_id"), col("simhash").as("hb"))
     a.join(b, col("a_id") < col("b_id"))
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
       .filter(col("hamming") <= maxDist)
-      .select(col("a_id"), col("b_id"), col("hamming"))
-  }
-
-  private def bandedFrom(s: DataFrame, maxDist: Int, bits: Int,
-                         pairPredicate: Column = lit(true)): DataFrame = {
-    val nBands = maxDist + 1
-    val bounds = (0 to nBands).map(i => i * bits / nBands)
-    val cands = (0 until nBands).map { i =>
-      val lo = bounds(i)
-      val width = bounds(i + 1) - lo
-      val band = shiftright(col("simhash"), lo)
-        .bitwiseAND(lit((1L << width) - 1))
-      val a = s.select(col("id").as("a_id"), col("simhash").as("ha"),
-        band.as("bv"))
-      val b = s.select(col("id").as("b_id"), col("simhash").as("hb"),
-        band.as("bv"))
-      // the exact Hamming filter runs INSIDE the band join — applied as
-      // the join evaluates, before the cross-band dedup aggregation
-      // shuffles (the band join itself still shuffles both projections
-      // on bv). Simhash bits over a shared vocabulary
-      // are correlated across documents, so band buckets skew far above
-      // the 2^-width uniform estimate; materializing every intra-bucket
-      // candidate pair into the cross-band dedup shuffle made the 50k-doc
-      // probe SLOWER than the quadratic twin (79 s vs 14 s — PERF.md
-      // round 6). Filtered here, only true near-dup pairs (≈ output
-      // size) reach the dedup aggregation below.
-      a.join(b, Seq("bv"))
-        .filter(col("a_id") < col("b_id"))
-        .filter(pairPredicate)
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
-        .filter(col("hamming") <= maxDist)
-        .select(col("a_id"), col("b_id"), col("hamming"))
-    }.reduce(_ unionByName _)
-    // a pair found by several bands collapses to one row; hamming is a
-    // function of the ids, so min() just picks the constant
-    cands
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(min(col("hamming")).as("hamming"))
       .select(col("a_id"), col("b_id"), col("hamming"))
   }
 }

@@ -180,21 +180,13 @@ object DedupPack extends QueryPack {
     graft.core.Artifacts.memo(spark, s"minhash_sigs:$dir")(
       bandSigsFromMinhash(augMinhashRows(spark, dir)))
 
-  /** (id, hv16, hv60) — one row per distinct word per augmented doc,
-    * BOTH simhash hash widths riding one text pass: the word-level
-    * twin of [[augShingleRows]], shared by d04/d05 (16-bit) and
-    * d10/d22 (60-bit). Same discipline: compact proxy rows (ids and
-    * hashes, never words), and hash collisions keep their row
-    * multiplicity exactly as the inline explode does, so the bit-sum
-    * aggregations downstream are bitwise identical. */
+  /** (id, hv16, hv60) over the augmented corpus — [[Dedup.wordHashes]]
+    * as a session artifact: the word-level twin of [[augShingleRows]],
+    * shared by d04/d05 (16-bit) and d10/d22 (60-bit). */
   private[graft] def augWordHashes(spark: SparkSession,
                                    dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"word_hashes:$dir")(
-      augmented(spark, dir).select(col("doc_id").as("id"),
-          explode(array_distinct(graft.text.TextOps.words(col("text"))))
-            .as("w"))
-        .select(col("id"), Dedup.hash16(col("w")).as("hv16"),
-          Dedup.hash60(col("w")).as("hv60")))
+      Dedup.wordHashes(augmented(spark, dir), col("doc_id"), col("text")))
 
   /** d19 core over explicit (history, batch) relations of
     * (doc_id, text) — derives the history state in-line, then runs
@@ -445,17 +437,17 @@ object DedupPack extends QueryPack {
   /** SimHash values per augmented doc (aggregated off the session
     * word-hash artifact — same rows as the inline text pass). */
   def simhashValues(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashFromWordHashes(augWordHashes(spark, dir)
-        .select(col("id"), col("hv16").as("hv")))
+    Dedup.simhashOf(augWordHashes(spark, dir)
+        .select(col("id"), col("hv16").as("hv")), 16)
       .orderBy(col("id"))
 
   /** SimHash near-dup pairs at Hamming ≤ 2 — through the banded-LSH
     * path (pigeonhole bands → equi-join candidates → exact Hamming
     * filter), the scale-safe default; the all-pairs twin remains as
-    * the spec cross-check ([[Dedup.simhashPairsAllPairs]]). */
+    * the spec cross-check ([[Dedup.hammingPairsAllPairsOf]]). */
   def simhashNearDups(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairsBandedFromWordHashes(augWordHashes(spark, dir)
-        .select(col("id"), col("hv16").as("hv")), 2)
+    Dedup.hammingPairsBandedOf(Dedup.simhashOf(augWordHashes(spark, dir)
+        .select(col("id"), col("hv16").as("hv")), 16), 2, 16)
       .orderBy(col("a_id"), col("b_id"))
 
   /** embeddings ∪ planted near-copies (vec_id+100000, first component
@@ -913,8 +905,8 @@ object DedupPack extends QueryPack {
     * band layout) to 2^-15, so candidate volume stays near the true
     * near-dup count instead of n²/32. */
   def simhashWidePairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairsBandedWideFromWordHashes(augWordHashes(spark, dir)
-        .select(col("id"), col("hv60").as("hv")), 3, 60)
+    Dedup.hammingPairsBandedOf(Dedup.simhashOf(augWordHashes(spark, dir)
+        .select(col("id"), col("hv60").as("hv")), 60), 3, 60)
       .orderBy(col("a_id"), col("b_id"))
 
   /** d22: d10 BEHIND THE EXACT-COLLAPSE FRONT — the production
@@ -941,8 +933,9 @@ object DedupPack extends QueryPack {
     // (per-row derivation commutes with the id filter)
     val repWh = augWordHashes(spark, dir)
       .join(reps.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-    Dedup.simhashPairsBandedWideFromWordHashes(
-        repWh.select(col("id"), col("hv60").as("hv")), 3, 60)
+    Dedup.hammingPairsBandedOf(
+        Dedup.simhashOf(repWh.select(col("id"), col("hv60").as("hv")), 60),
+        3, 60)
       .orderBy(col("a_id"), col("b_id"))
   }
 

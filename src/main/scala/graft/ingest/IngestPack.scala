@@ -22,9 +22,9 @@ object IngestPack extends QueryPack {
   private val PageWords = 10
   private val NDocs = 40
 
-  /** Deterministic fixture tree under ./target (inside the repo). */
+  /** Deterministic fixture tree under [[graft.core.TempDirs.fixtureRoot]]. */
   private def writeFixtures(spark: SparkSession, dir: String): String = {
-    val root = s"target/fixtures_i01_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val root = graft.core.TempDirs.fixtureRoot("i01", dir)
     val docs = Tables(spark, dir).documents
       .filter(col("doc_id") < NDocs)
       .select(col("doc_id"), col("text"))
@@ -72,7 +72,7 @@ object IngestPack extends QueryPack {
     * is filesystem/schema plumbing, not PDF decoding); doc 100, if
     * present, is an orphan PDF with no text sibling. */
   private def writePairFixtures(spark: SparkSession, dir: String): String = {
-    val root = s"target/fixtures_i05_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val root = graft.core.TempDirs.fixtureRoot("i05", dir)
     val rootPath = Paths.get(root)
     // clear stale fixtures first: a doc that disappeared or emptied in
     // a regenerated corpus must not survive on disk and desync the
@@ -143,7 +143,7 @@ object IngestPack extends QueryPack {
     * partition-value encoding) fails the hash. */
   private def writeFormat(spark: SparkSession, dir: String, fmt: String,
                           partitionBy: Seq[String]): String = {
-    val root = s"target/fixtures_${fmt}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val root = graft.core.TempDirs.fixtureRoot(fmt, dir)
     val w = Tables(spark, dir).documents
       .filter(col("doc_id") < FmtDocs)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
@@ -195,14 +195,10 @@ object IngestPack extends QueryPack {
     * fails the hash; the spec asserts the file-count collapse and
     * near-target sizes. */
   def compactedRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    // per-application fixture path: two JVMs benching the same data
-    // dir would otherwise race on the overwrite-then-read-back (Spark
-    // overwrite deletes first) and corrupt each other's round-trip
-    // exit-time cleanup: the per-app path is never reused by later JVMs
-    val frag = graft.core.TempDirs.cleanupOnExit(
-      s"target/fixtures_frag_${dir.replaceAll("[^A-Za-z0-9]", "_")}" +
-        s"_${spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}")
-    graft.core.TempDirs.cleanupOnExit(frag + "_compacted")
+    // per-JVM fixture root: two JVMs benching the same data dir never
+    // race on the overwrite-then-read-back (Spark overwrite deletes
+    // first), and the tree goes at JVM exit
+    val frag = graft.core.TempDirs.fixtureRoot("frag", dir)
     Tables(spark, dir).documents
       .filter(col("doc_id") < FmtDocs)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))

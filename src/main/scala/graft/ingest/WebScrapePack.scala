@@ -26,7 +26,7 @@ object WebScrapePack extends QueryPack {
     * words and their lengths — the reference's scraped rates table
     * shape (label column + value column). */
   private def writeSite(spark: SparkSession, dir: String): Seq[String] = {
-    val root = s"target/fixtures_i03_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val root = graft.core.TempDirs.fixtureRoot("i03", dir)
     Files.createDirectories(Paths.get(root))
     val docs = Tables(spark, dir).documents
       .filter(col("doc_id") < NDocs)

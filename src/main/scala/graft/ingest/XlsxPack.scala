@@ -26,7 +26,7 @@ object XlsxPack extends QueryPack {
         element_at(ws, 1).as("first_word"),
         size(ws).cast("string").as("word_count"))
       .orderBy(col("doc_id").cast("long"))
-    val path = s"target/fixtures_i04_${dir.replaceAll("[^A-Za-z0-9]", "_")}/gt.xlsx"
+    val path = s"${graft.core.TempDirs.fixtureRoot("i04", dir)}/gt.xlsx"
     Xlsx.write(gt, path)
     Xlsx.read(spark, path)
       .select(col("doc_id").cast("long").as("doc_id"), col("first_word"),

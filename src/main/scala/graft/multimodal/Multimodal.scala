@@ -99,8 +99,8 @@ object Multimodal {
       val perturb = conv(substring(hx, 39, 2), 16, 10).cast("int") % DhashPixels
       // the 5 block md5s are STAGED through one let instead of being
       // referenced 66× in the luminance array: codegen subexpression
-      // elimination does not fully collapse the repeats (PerfProbe
-      // dhashcse: 0.98 s vs 0.67 s warm on 6k images, bit-identical
+      // elimination does not fully collapse the repeats (measured
+      // 0.98 s vs 0.67 s warm on 6k images, bit-identical
       // output), so bind each block digest once and index into it
       val blocks = array((0 until (DhashPixels + 15) / 16).map(b =>
         md5(concat(scene, lit(s"|px$b")))): _*)

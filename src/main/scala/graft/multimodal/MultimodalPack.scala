@@ -84,14 +84,10 @@ object MultimodalPack extends QueryPack {
     * (partitionBy(shard_id); at 100 TB each shard directory is the
     * unit a training loader streams sequentially, the tar-shard
     * discipline mm04's scaladoc describes). Returns the dataset root.
-    * Per-application path, same race discipline as i08. */
+    * Per-JVM fixture path, same race discipline as i08. */
   private[graft] def shardedWriteDir(spark: SparkSession, dir: String,
                                      shardBytes: Long = ShardBytes): String = {
-    // per-application paths are never reused by a later JVM — register
-    // for exit-time cleanup so rounds don't accumulate shard trees
-    val out = graft.core.TempDirs.cleanupOnExit(
-      s"target/mm_shards_${dir.replaceAll("[^A-Za-z0-9]", "_")}" +
-        s"_${spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}")
+    val out = graft.core.TempDirs.fixtureRoot("mm_shards", dir)
     val docs = Tables(spark, dir).documents
       .select(col("doc_id").as("media_id"), col("text"))
     val m = docs.select(col("media_id"),
@@ -337,16 +333,16 @@ object MultimodalPack extends QueryPack {
     val reps = u.groupBy(col("d"))
       .agg(min(key(col("item_id"), col("unit_idx"))).as("id"))
       .select(col("id"))
-    // the second cut is COMPACT-on-compact (a semi-join over the
-    // checkpointed proxy rows — no content pass, unlike the r14 shape
-    // the verdict's double-cut finding flagged, where BOTH cuts ran
-    // the decode): without it every one of the 2·(maxDist+1) band
-    // branches re-inlines the reps aggregation + semi-join (measured:
-    // 24 → 64 Exchange in the mm07 plan when sig is left uncut)
-    val sig = graft.core.Caches.cut(u
+    // hammingPairsBandedOf cuts sig exactly once, COMPACT-on-compact
+    // (a semi-join over the checkpointed proxy rows — no content pass,
+    // unlike the r14 shape the verdict's double-cut finding flagged,
+    // where BOTH cuts ran the decode): without that cut every one of
+    // the 2·(maxDist+1) band branches re-inlines the reps aggregation
+    // + semi-join (measured: 24 → 64 Exchange in the mm07 plan)
+    val sig = u
       .select(key(col("item_id"), col("unit_idx")).as("id"), col("simhash"))
-      .join(reps, Seq("id"), "left_semi"))
-    val pairs = graft.dedup.Dedup.hammingPairsBandedPreCut(sig, maxDist, bits,
+      .join(reps, Seq("id"), "left_semi")
+    val pairs = graft.dedup.Dedup.hammingPairsBandedOf(sig, maxDist, bits,
       pairPredicate = col("a_id.item") =!= col("b_id.item"))
     val rolled = pairs
       .select(col("a_id.item").as("a_item"), col("a_id.unit").as("fa"),
@@ -457,8 +453,8 @@ object MultimodalPack extends QueryPack {
     // Lineage-CUT the digest relation (not just cache it): the gate's
     // downstream branches re-canonicalize whatever plan sits here on
     // every action, and the synthetic-content expression trees make
-    // that seconds of driver work (PerfProbe s12split; guide §3.3 —
-    // materialising an intermediate truncates the plan). The
+    // that seconds of driver work (OPTIMIZATION_r14.md s12 split;
+    // guide §3.3 — materialising an intermediate truncates the plan). The
     // repartition spreads the per-row digest/dHash compute over the
     // cluster — content is tens of bytes/row while the fingerprint
     // math is the cost, so byte-proportional scan splits underfeed it.
@@ -530,23 +526,6 @@ object MultimodalPack extends QueryPack {
       .select(col("id"), col("fp"))
     (decisions, newDigests, newFps)
   }
-
-  /** [[mediaGateWithState]] with history state derived in-line from a
-    * (media_id, content) history relation — the s12 batch twin's
-    * entry (the dedupGateOf shape). */
-  private[graft] def mediaGateOf(hist: DataFrame,
-                                 batch: DataFrame): DataFrame =
-    mediaGateWithState(
-      hist.select(md5(Multimodal.hexOf(col("content"))).as("h")),
-      // the probe re-reads history fingerprints once per band — in the
-      // batch twin they are derived in-line, so cut the dHash lineage
-      // (and parallelize its compute) exactly like the streaming form's
-      // persisted parquet state does by construction
-      graft.core.Caches.cut(
-        hist.repartition(hist.sparkSession.sparkContext.defaultParallelism)
-          .select(col("media_id").as("id"),
-            Multimodal.dhash(col("content")).as("fp"))),
-      batch)._1
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mm01_decode_meta" -> decodeMeta,

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Engine SQL surface: registers the native expressions so
   * `SELECT money_norm(v)` and `LATERAL VIEW chunk(text, 20, 5)` work
-  * in plain SQL. Attach with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * in plain SQL, plus the kNN planner strategy and the top-k rewrite
+  * rule. [[graft.core.GraftSession]] attaches it to every session;
+  * outside the engine, set
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -113,8 +113,8 @@ object KnnJoinStrategy extends SparkStrategy {
 object KnnJoinPlan {
   /** Dataset-level handle: shape both sides to (id, array<double>)
     * and wrap them in the custom node. Requires [[KnnJoinStrategy]]
-    * registered in the session (GraftExtensions or
-    * `spark.experimental.extraStrategies`). */
+    * registered in the session ([[GraftExtensions]], which
+    * [[graft.core.GraftSession]] installs). */
   def knnJoin(spark: SparkSession, queries: DataFrame, index: DataFrame,
               k: Int, excludeSelf: Boolean = true): DataFrame = {
     import org.apache.spark.sql.functions.col

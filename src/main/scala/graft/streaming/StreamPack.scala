@@ -166,7 +166,7 @@ object StreamPack extends QueryPack {
   }
 
   /** s12: the MEDIA ingest gate's batch twin ([[graft.multimodal
-    * .MultimodalPack.mediaGateOf]] — exact content-digest screen
+    * .MultimodalPack.mediaGateWithState]] — exact content-digest screen
     * composed with the perceptual dHash probe): history = gate-fixture
     * media ids < 300, the arriving batch = everything else, so every
     * verdict carries real rows — planted byte copies of history read

@@ -471,8 +471,7 @@ object Streams {
 
   /** ONE micro-batch of the continuous-ingest dedup gate — the
     * foreachBatch body of [[dedupIngestGate]], factored out so specs
-    * and the PerfProbe `gatestate` leg can drive a long batch
-    * sequence directly. Writes decisions, the per-batch run summary
+    * can drive a long batch sequence directly. Writes decisions, the per-batch run summary
     * (`<outDir>_summary/batch=<id>` — the reference's per-run
     * Dashboard box, `ocr_agent_8_29.py:28-33`), and the four state
     * kinds; then compacts generations per `opts`. */
@@ -887,9 +886,8 @@ object Streams {
   }
 
   /** [[compactLog]] over a decisions-log tree — the production fold,
-    * exposed for the PerfProbe `logread` instrument and the
-    * partial-source guard spec (both need to fold a tree they built
-    * directly, without driving the whole gate). */
+    * exposed for the partial-source guard spec (it folds a tree it
+    * built directly, without driving the whole gate). */
   private[graft] def compactDecisionsLog(spark: SparkSession, root: String,
                                          batchId: Long): Unit =
     compactLog(spark, root, batchId, decisionsLogSchema(spark),

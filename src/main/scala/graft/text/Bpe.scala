@@ -91,9 +91,8 @@ object Bpe {
     }
 
   /** The classic merge loop over a bounded (word, count) table.
-    * `nMerges` defaults to the suite constant; the PerfProbe bpescale
-    * leg passes realistic vocab-sized values to document the driver
-    * loop's cost curve (PERF.md). */
+    * `nMerges` defaults to the suite constant; realistic vocab-sized
+    * values document the driver loop's cost curve (PERF.md). */
   private[graft] def trainOnTypes(types: Seq[(String, Long)],
                                   nMerges: Int = NMerges): Seq[Merge] = {
     var vocab: Map[List[String], Long] = types
@@ -205,8 +204,8 @@ object Bpe {
 
   /** Deterministic syllable-composed Zipf vocabulary — production-
     * shaped type tables (word length 4–24 chars, long count-1 tail)
-    * for the incremental-vs-naive spec and the PerfProbe bpescale
-    * grid; the suite corpus itself has a ~31-word vocabulary. */
+    * for the incremental-vs-naive spec; the suite corpus itself has a
+    * ~31-word vocabulary. */
   private[graft] def syntheticZipfTypes(n: Int): Seq[(String, Long)] = {
     val syl = Array("ka", "to", "ri", "mu", "en", "sha", "lo", "ve",
       "qu", "zi", "na", "ber", "ten", "gra", "pol", "dis")

@@ -506,8 +506,8 @@ object KnnJoin {
     * `count()` of the index, and only on the auto path — prebuilt
     * centroid artifacts and pinned oracle params never reach it. */
   /** nlist resolution: explicit, or the FAISS ⌈√n⌉ rule (v19's
-    * default). Expected slopes under √n lists, measured by the
-    * PerfProbe `ivfsplit` leg at 1×/10×/30× (PERF.md round-11 table):
+    * default). Expected slopes under √n lists, measured at
+    * 1×/10×/30× (PERF.md round-11 table):
     * the Lloyd build is O(iters·n·nlist) = O(n^1.5) but runs ONCE per
     * session (index artifact — every downstream query amortizes it;
     * measured 4.5→7.2 s from 2k to 60k vectors, still

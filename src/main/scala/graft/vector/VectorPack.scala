@@ -207,11 +207,9 @@ object VectorPack extends QueryPack {
 
   /** v01 through the CUSTOM PLAN NODE (KnnJoinPlan/KnnJoinExec) —
     * the physical operator under the same oracle as the helper
-    * implementations. Registers the planner strategy idempotently. */
+    * implementations. The planner strategy comes with the session
+    * ([[graft.core.GraftSession]] installs GraftExtensions). */
   def knnPlanNode(spark: SparkSession, dir: String): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(graft.plans.KnnJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.KnnJoinStrategy
     // spread scan: the exec's per-partition heap loop runs in the
     // query side's scan stage (quadratic work, one task raw)
     val e = Tables(spark, dir).embeddingsSpread
@@ -225,12 +223,6 @@ object VectorPack extends QueryPack {
     * [[graft.plans.KnnRewriteRule]] to rewrite into the broadcast-heap
     * operator — the optimizer rule under the same oracle as v01. */
   def knnRuleRewrite(spark: SparkSession, dir: String): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(graft.plans.KnnJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.KnnJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.KnnRewriteRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.KnnRewriteRule
     val e = Tables(spark, dir).embeddingsSpread
     val q = e.select(col("vec_id").as("query_id"),
       col("embedding").cast("array<double>").as("q_emb"))

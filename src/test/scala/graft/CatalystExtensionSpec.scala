@@ -221,25 +221,32 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("SQL registration: money_norm and chunk work in plain SQL") {
-    // GraftExtensions attaches at builder time (spark.sql.extensions);
-    // the shared test session already exists, so inject the same
-    // builders straight into a child session's registry.
-    val s2 = spark.newSession()
-    s2.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "money_norm", exprs => MoneyNorm(exprs.head), "built-in")
-    s2.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chunk",
-      exprs => graft.plans.ChunkWords(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    val m = s2.sql("SELECT money_norm('($1,053.75)') AS m").collect()(0).getString(0)
+    // GraftExtensions comes with the factory session: no registration
+    // by hand, so this is the same surface Verify and Bench run on
+    val m = spark.sql("SELECT money_norm('($1,053.75)') AS m").collect()(0).getString(0)
     assert(m == "-$1,053.75")
-    val chunks = s2.sql(
+    val d = spark.sql(
+      "SELECT array_dot(CAST(array(1.0, 2.0) AS ARRAY<DOUBLE>), " +
+        "CAST(array(3.0, 0.5) AS ARRAY<DOUBLE>)) AS d").collect()(0).getDouble(0)
+    assert(d == 4.0)
+    val chunks = spark.sql(
       """SELECT chunk_idx, start_word, chunk_text
         |FROM (SELECT 'a b c d e f g' AS t)
         |LATERAL VIEW chunk(t, 3, 1) AS chunk_idx, start_word, chunk_text""".stripMargin)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2)))
     assert(chunks.toSeq == Seq((0, 0, "a b c"), (1, 2, "c d e"),
       (2, 4, "e f g"), (3, 6, "g")))
+  }
+
+  test("factory session plans KnnJoinPlan through KnnJoinExec with no hand wiring") {
+    assert(!spark.experimental.extraStrategies.contains(graft.plans.KnnJoinStrategy),
+      "the strategy must come from GraftExtensions, not the experimental hook")
+    val e = graft.core.Tables(spark, sf).embeddings
+    val df = graft.plans.KnnJoinPlan.knnJoin(spark, e, e, 2)
+    // SparkPlan.nodeName strips the Exec suffix in tree rendering
+    val physical = df.queryExecution.executedPlan.toString
+    assert(physical.contains("KnnJoin"), s"plan:\n$physical")
+    assert(df.count() == 2 * e.count())
   }
 
   test("chunk generator agrees with the array-expression chunker") {

@@ -9,6 +9,13 @@ import graft.text.TextAnalysis
 class DedupSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** (id, simhash) of a (doc_id, text) corpus through the inline word
+    * pass — the text-entry reference the artifact path must equal. */
+  private def simhashes(docs: org.apache.spark.sql.DataFrame, hv: String,
+                        bits: Int, id: String = "doc_id"): org.apache.spark.sql.DataFrame =
+    Dedup.simhashOf(Dedup.wordHashes(docs, col(id), col("text"))
+      .select(col("id"), col(hv).as("hv")), bits)
+
   test("exact dedup finds exactly the planted copies") {
     val groups = DedupPack.exactDedup(spark, sf).collect()
     assert(groups.length == 50)
@@ -84,13 +91,13 @@ class DedupSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"))
     def collectPairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val sims = simhashes(docs, "hv16", 16).cache()
     for (maxDist <- Seq(1, 2, 3)) {
-      val banded = collectPairs(
-        Dedup.simhashPairsBanded(docs, col("doc_id"), col("text"), maxDist))
-      val allPairs = collectPairs(
-        Dedup.simhashPairsAllPairs(docs, col("doc_id"), col("text"), maxDist))
+      val banded = collectPairs(Dedup.hammingPairsBandedOf(sims, maxDist, 16))
+      val allPairs = collectPairs(Dedup.hammingPairsAllPairsOf(sims, maxDist))
       assert(banded == allPairs, s"maxDist=$maxDist")
     }
+    sims.unpersist()
   }
 
   test("banded SRP cosine pairs equal the all-pairs scan exactly") {
@@ -343,17 +350,12 @@ class DedupSpec extends AnyFunSuite {
     val aug = graft.dedup.DedupPack.augmented(spark, sf)
     def collectPairs(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val banded = collectPairs(
-      Dedup.simhashPairsBandedWide(aug, col("doc_id"), col("text")))
-    val allPairs = collectPairs(
-      Dedup.simhashPairsAllPairsWide(aug, col("doc_id"), col("text")))
+    val sims = simhashes(aug, "hv60", 60).cache()
+    val banded = collectPairs(Dedup.hammingPairsBandedOf(sims, 3, 60))
+    val allPairs = collectPairs(Dedup.hammingPairsAllPairsOf(sims, 3))
     assert(banded == allPairs)
     assert(banded.nonEmpty)
-    // the Manku pair-combination form (6 blocks, 20-bit pair keys) is
-    // pair-for-pair identical too — same pigeonhole, sharper keys
-    val blocks = collectPairs(
-      Dedup.simhashPairsBandedWideBlocks(aug, col("doc_id"), col("text")))
-    assert(blocks == allPairs)
+    sims.unpersist()
   }
 
   test("simhash word-hash artifact path is row-identical to the inline " +
@@ -363,20 +365,19 @@ class DedupSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).toSet
     // d04: values off the artifact vs the inline derivation
     assert(rows(DedupPack.simhashValues(spark, sf)) ==
-      rows(Dedup.simhash(aug, col("doc_id"), col("text")).orderBy(col("id"))))
+      rows(simhashes(aug, "hv16", 16)))
     // d05: 16-bit banded pairs
     assert(rows(DedupPack.simhashNearDups(spark, sf)) ==
-      rows(Dedup.simhashPairsBanded(aug, col("doc_id"), col("text"), 2)))
+      rows(Dedup.hammingPairsBandedOf(simhashes(aug, "hv16", 16), 2, 16)))
     // d10: 60-bit banded pairs
     assert(rows(DedupPack.simhashWidePairs(spark, sf)) ==
-      rows(Dedup.simhashPairsBandedWide(aug, col("doc_id"), col("text"), 3, 60)))
+      rows(Dedup.hammingPairsBandedOf(simhashes(aug, "hv60", 60), 3, 60)))
     // d22: rep-collapsed pairs — artifact semi-join vs inline rep corpus
     val reps = aug.groupBy(Dedup.contentDigest(col("text")).as("d"))
       .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
     val repDocs = aug.join(reps, Seq("doc_id"), "left_semi")
     assert(rows(DedupPack.simhashWidePairsCollapsed(spark, sf)) ==
-      rows(Dedup.simhashPairsBandedWide(repDocs, col("doc_id"), col("text"),
-        3, 60)))
+      rows(Dedup.hammingPairsBandedOf(simhashes(repDocs, "hv60", 60), 3, 60)))
   }
 
   test("d22: collapsed simhash pairs equal d10 restricted to content " +
@@ -412,7 +413,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("wide simhash recovers most planted near-copies at Hamming <= 3") {
     val aug = graft.dedup.DedupPack.augmented(spark, sf)
-    val pairs = Dedup.simhashPairsBandedWide(aug, col("doc_id"), col("text"))
+    val pairs = Dedup.hammingPairsBandedOf(simhashes(aug, "hv60", 60), 3, 60)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // planted: (i, i+100000) near-copies for i < 100 (measured at
     // sf0.01: 125/150 of all planted links within distance 3)
@@ -652,7 +653,7 @@ class DedupSpec extends AnyFunSuite {
     val fps = df.select(TextAnalysis.fingerprint(col("text")))
       .collect().map(_.getLong(0))
     assert(fps(0) != fps(1))
-    val sims = Dedup.simhash(df, col("id"), col("text"))
+    val sims = simhashes(df, "hv16", 16, id = "id")
       .collect().map(_.getLong(1))
     assert(sims(0) == sims(1))
   }

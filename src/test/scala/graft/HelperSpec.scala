@@ -138,6 +138,20 @@ class HelperSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
+  test("fixture roots: absolute, under java.io.tmpdir, stable per (tag, dir)") {
+    import graft.core.TempDirs.fixtureRoot
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      .toAbsolutePath.normalize
+    val a = java.nio.file.Paths.get(fixtureRoot("i01", sf))
+    assert(a.isAbsolute, s"$a")
+    assert(a.normalize.startsWith(tmp), s"$a not under $tmp")
+    assert(fixtureRoot("i01", sf) == a.toString, "same (tag, dir) must be stable")
+    assert(fixtureRoot("i01", sf + "x") != a.toString, "dirs must not collide")
+    assert(fixtureRoot("i05", sf) != a.toString, "tags must not collide")
+    // one per-JVM parent for every fixture tree
+    assert(java.nio.file.Paths.get(fixtureRoot("i05", sf)).getParent == a.getParent)
+  }
+
   test("transient cache tracker: sweep releases, bound evicts oldest") {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._

@@ -4,27 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
-import graft.plans.{KnnJoinPlan, KnnJoinStrategy, KnnRewriteRule}
+import graft.plans.KnnJoinPlan
 import graft.vector.KnnJoin
 
 class KnnPlanSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private lazy val withStrategy: Unit = {
-    // planner strategies can attach to a live session via the
-    // experimental hook (GraftExtensions does it at builder time)
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ KnnJoinStrategy
-  }
-
-  private lazy val withRewrite: Unit = {
-    withStrategy
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ KnnRewriteRule
-  }
-
   test("custom plan node executes through KnnJoinExec") {
-    withStrategy
     val e = Tables(spark, sf).embeddings
     val df = KnnJoinPlan.knnJoin(spark, e, e, 3)
     val physical = df.queryExecution.executedPlan.toString
@@ -34,7 +20,6 @@ class KnnPlanSpec extends AnyFunSuite {
   }
 
   test("custom operator results equal the broadcast-heap helper exactly") {
-    withStrategy
     val e = Tables(spark, sf).embeddings
     val viaPlan = KnnJoinPlan.knnJoin(spark, e, e, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -46,7 +31,6 @@ class KnnPlanSpec extends AnyFunSuite {
   }
 
   test("optimizer rule rewrites the naive window-rank top-k plan to KnnJoinExec") {
-    withRewrite
     import org.apache.spark.sql.expressions.Window
     val e = Tables(spark, sf).embeddings
     val q = e.select(col("vec_id").as("query_id"),
@@ -72,7 +56,6 @@ class KnnPlanSpec extends AnyFunSuite {
   }
 
   test("rewrite leaves plans with payload columns untouched") {
-    withRewrite
     import org.apache.spark.sql.expressions.Window
     val e = Tables(spark, sf).embeddings
     val q = e.select(col("vec_id").as("query_id"),
@@ -94,7 +77,6 @@ class KnnPlanSpec extends AnyFunSuite {
   }
 
   test("custom operator composes with downstream relational ops") {
-    withStrategy
     val e = Tables(spark, sf).embeddings
     val top1Counts = KnnJoinPlan.knnJoin(spark, e, e, 1)
       .join(e.select(col("vec_id").as("neighbor_id"), col("label")), Seq("neighbor_id"))
