@@ -23,12 +23,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = core.GraftSession.local()
-    // resolve the self-kNN posture ONCE up front: an unparseable
-    // SPARK_GRAFT_SELF_KNN fails the run here with a clear message
-    // instead of throwing inside f04 mid-sweep, and a non-default
-    // posture is logged (lazy val in KnnJoin) so a stale export is
-    // visible in this run's stderr rather than only as a slow/odd row
-    vector.KnnJoin.envSelfStrategy
     // one warmup pass primes the JIT + parquet footer caches so the
     // numbers measure the queries, not JVM startup
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

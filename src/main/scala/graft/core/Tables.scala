@@ -102,23 +102,13 @@ object Tables {
     * bigger has real split structure and keeps its scan layout. */
   val SpreadMaxBytes: Long = 64L * 1024 * 1024
 
-  /** Kill-switch for the small-table spread (`SPARK_GRAFT_NO_SPREAD`):
-    * an A/B instrument for attributing exchange cost vs scan
-    * parallelism on a given box, and the escape hatch if a deployment
-    * has small tables but expensive shuffles. */
-  private[graft] val spreadEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_NO_SPREAD").exists(_.trim.nonEmpty)
-
-  /** Total bytes of a table path (file or directory); unknown =
-    * Long.MaxValue so the spread never fires on an unreadable path. */
-  /** The ONE spread-policy gate (kill-switch + core count + size
-    * bound) — callers outside this file (e.g. the dedup augmented
-    * corpus) use this instead of re-deriving the condition, so the
-    * policy cannot fork. */
+  /** The ONE spread-policy gate (core count + size bound) — callers
+    * outside this file (e.g. the dedup augmented corpus) use this
+    * instead of re-deriving the condition, so the policy cannot fork. */
   private[graft] def spreadIfSmall(spark: SparkSession, df: DataFrame,
                                    path: String): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
-    if (spreadEnabled && cores > 1 && bytesOf(spark, path) < SpreadMaxBytes)
+    if (cores > 1 && bytesOf(spark, path) < SpreadMaxBytes)
       df.repartition(cores)
     else df
   }
@@ -133,6 +123,8 @@ object Tables {
   private val bytesMemo =
     scala.collection.concurrent.TrieMap.empty[String, Long]
 
+  /** Total bytes of a table path (file or directory); unknown =
+    * Long.MaxValue so the spread never fires on an unreadable path. */
   private[graft] def bytesOf(spark: SparkSession, path: String): Long =
     bytesMemo.get(path).getOrElse {
       try {

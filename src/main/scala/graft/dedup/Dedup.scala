@@ -349,7 +349,7 @@ object Dedup {
 
   /** Max pair-edges resolved driver-side: 4M edges × 16 bytes = 64 MB
     * — the repo's bounded-collect budget (broadcast-index discipline,
-    * `KnnJoin.exact`). A banded near-dup pass over even a billion-doc
+    * `KnnJoin.search`). A banded near-dup pass over even a billion-doc
     * corpus rarely emits more true pairs than this; when it does, the
     * distributed loop takes over with no API change. */
   private[graft] val CollectMaxEdges = 4000000

@@ -149,20 +149,13 @@ object FeedbackPack extends QueryPack {
     * first-page head (parity rule on the neighbor id), scored jointly
     * through the composite "label:first_pg" key exactly like the
     * reference's combined classifier eval. */
-  def compositeEval(spark: SparkSession, dir: String,
-                    strategy: KnnJoin.Strategy = KnnJoin.envSelfStrategy)
-      : DataFrame = {
+  def compositeEval(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir).embeddings
     // rank-1 rows of the SESSION kNN artifact — identical to a fresh
-    // exact(k=1) scan (same TopK ordering), without re-running the
+    // exact k=1 search (same TopK ordering), without re-running the
     // quadratic sweep this query was measured recomputing at 10×
     // scale (64.5 s vs ~1 s through the artifact; PERF.md round 6).
-    // The strategy defaults to the env-resolved posture: Exact when
-    // unset (oracle parity), IvfSq8 under SPARK_GRAFT_SELF_KNN for
-    // corpora where the quadratic artifact build is the bottleneck —
-    // the report SHAPE is identical and FeedbackSpec bounds the
-    // accuracy drift against the exact form.
-    val preds = KnnJoin.selfTop3(spark, dir, strategy)
+    val preds = KnnJoin.exactSelfTop3(spark, dir)
       .filter(col("rank") === 1)
       .join(e.select(col("vec_id").as("query_id"),
         col("label").as("true_label")), Seq("query_id"))

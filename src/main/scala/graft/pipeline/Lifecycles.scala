@@ -29,23 +29,16 @@ object Lifecycles {
     * kNN top-1 → sklearn-style classification report. The split is the
     * hash split (partition-count independent); the index side is the
     * TRAIN half only, so evaluation never sees its own row as a
-    * neighbor by construction.
-    *
-    * `strategy` picks the index-search posture at the entry point:
-    * the default [[KnnJoin.Exact]] is reference parity (p01's oracle
-    * replays it); pass [[KnnJoin.Ivf]]/[[KnnJoin.Lsh]] when the index
-    * outgrows executor broadcast — the report shape is identical and
-    * the spec pins the IVF-backed report's accuracy within a recall
-    * bound of exact. */
+    * neighbor by construction. The search is exact, the reference's
+    * flat index (p01's oracle replays it). */
   def classifyAndReport(spark: SparkSession, dir: String,
-                        trainFrac: Double = 0.8,
-                        strategy: KnnJoin.Strategy = KnnJoin.Exact): DataFrame = {
+                        trainFrac: Double = 0.8): DataFrame = {
     val e = Tables(spark, dir).embeddings
       .select(col("vec_id"), col("label"), col("embedding"))
     val split = Sampling.hashSplit(e, col("vec_id"), trainFrac)
     val train = split.filter(col("split") === "train").drop("split")
     val test = split.filter(col("split") === "test").drop("split")
-    val hits = KnnJoin.search(spark, test, train, 1, strategy,
+    val hits = KnnJoin.search(spark, test, train, 1, KnnJoin.Exact,
       excludeSelf = false)
     val preds = hits.join(
       test.select(col("vec_id").as("query_id"), col("label").as("true_label")),

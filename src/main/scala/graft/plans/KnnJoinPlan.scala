@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -15,13 +15,12 @@ import org.apache.spark.sql.types._
   * [[KnnJoinPlan]], a [[KnnJoinStrategy]] planner rule injected via
   * [[GraftExtensions]], and a physical [[KnnJoinExec]].
   *
-  * The physical operator IS the broadcast-heap algorithm from
-  * [[graft.vector.KnnJoin.exactBroadcast]], but expressed at the plan
-  * level: the index side executes first and broadcasts (like
-  * BroadcastHashJoin's build side), the probe side streams partition-
-  * parallel with a bounded top-k selection per row. Same tie rules
-  * (sim desc, id asc), same sequential double fold, so results match
-  * the declarative form bit-for-bit.
+  * The physical operator is the engine's one exact kNN scan, behind
+  * [[graft.vector.KnnJoin.search]]: the index side executes first and
+  * broadcasts (like BroadcastHashJoin's build side), the probe side
+  * streams partition-parallel with a bounded top-k selection per row.
+  * Tie rule (sim desc, id asc) and the sequential double fold match
+  * the declarative [[graft.vector.KnnJoin.exactCross]] bit-for-bit.
   *
   * Both children must produce exactly (id: long, embedding:
   * array<float|double>) rows — the `knnJoin` helper below shapes and
@@ -42,6 +41,14 @@ case class KnnJoinPlan(left: LogicalPlan, right: LogicalPlan, k: Int,
   // of empty rows (observed as a hard JVM crash, not an error).
   override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(left.output ++ right.output)
+  // at most k rows per query row, each narrower than the query row
+  // (ids and a sim vs an id and an embedding); the default for a
+  // binary node multiplies both sides' sizes, which would keep every
+  // join above this node off broadcast
+  override def stats: Statistics = {
+    val q = left.stats
+    Statistics(sizeInBytes = q.sizeInBytes * k, rowCount = q.rowCount.map(_ * k))
+  }
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): KnnJoinPlan =
     copy(left = newLeft, right = newRight)
@@ -127,7 +134,11 @@ object KnnJoinPlan {
       AttributeReference("rank", LongType, nullable = false)(),
       AttributeReference("neighbor_id", LongType, nullable = false)(),
       AttributeReference("sim", DoubleType, nullable = false)())
+    // fresh aliases on top: when one frame meets itself in a join, the
+    // analyzer can re-alias a Project, but it has no rule that renews
+    // a custom node's produced attributes
     ColumnBridge.ofRows(spark,
-      KnnJoinPlan(shaped(queries), shaped(index), k, excludeSelf, out))
+        KnnJoinPlan(shaped(queries), shaped(index), k, excludeSelf, out))
+      .toDF(out.map(_.name): _*)
   }
 }

@@ -326,7 +326,7 @@ object Streams {
     *    after compaction a trigger lists O(K) directories regardless
     *    of stream age (the [[graft.relational.Skew.compact]] posture
     *    applied to gate state; file count per generation derives from
-    *    real bytes / `targetGenBytes`). Replay-safe: the generation
+    *    real bytes / 128 MiB). Replay-safe: the generation
     *    covers only batches strictly below the running one, writes go
     *    through Spark's _SUCCESS commit (a partial generation is
     *    ignored by the resolver and rewritten), and a generation that
@@ -378,8 +378,10 @@ object Streams {
     compactEvery: Int = 0,
     retentionBatches: Int = 0,
     bloomScreen: Boolean = true,
-    targetGenBytes: Long = 128L * 1024 * 1024,
     compactLogs: Boolean = false)
+
+  /** Target bytes per compacted generation file. */
+  private val TargetGenBytes = 128L * 1024 * 1024
 
   private val BloomK = 3
   private val BloomBits = 1 << 20
@@ -524,10 +526,9 @@ object Streams {
       compactState(spark, histDir, batchId, opts)
       if (opts.compactLogs) {
         compactLog(spark, outDir, batchId, decisionsLogSchema(spark),
-          stampSrcBatch = true, opts.targetGenBytes)
+          stampSrcBatch = true)
         compactLog(spark, s"${outDir}_summary", batchId,
-          summaryLogSchema(spark), stampSrcBatch = false,
-          opts.targetGenBytes)
+          summaryLogSchema(spark), stampSrcBatch = false)
       }
     }
     graft.core.Caches.releaseTransients()
@@ -676,7 +677,7 @@ object Streams {
         kinds = Seq("digests", "fps", "bloom"))
       if (opts.compactLogs)
         compactLog(spark, outDir, batchId, mediaDecisionsLogSchema(spark),
-          stampSrcBatch = true, opts.targetGenBytes)
+          stampSrcBatch = true)
     }
     graft.core.Caches.releaseTransients()
     ()
@@ -764,7 +765,7 @@ object Streams {
               df.filter(col("src_batch").isNull ||
                 col("src_batch") >= batchId - opts.retentionBatches)
             else df
-          val nFiles = genFileCount(fs, sources, opts.targetGenBytes)
+          val nFiles = genFileCount(fs, sources)
           pruned.repartition(nFiles)
             .write.mode("overwrite").parquet(target.toString)
         }
@@ -801,15 +802,14 @@ object Streams {
   /** Generation file count from real source bytes (the Skew.compact
     * discipline: data files only — .crc/_SUCCESS would tip the ceil). */
   private def genFileCount(fs: org.apache.hadoop.fs.FileSystem,
-                           sources: Seq[org.apache.hadoop.fs.Path],
-                           targetGenBytes: Long): Int = {
+                           sources: Seq[org.apache.hadoop.fs.Path]): Int = {
     val bytes = sources.map { d =>
       fs.listStatus(d).iterator.filter(st => st.isFile && {
         val n = st.getPath.getName
         !n.startsWith(".") && !n.startsWith("_")
       }).map(_.getLen).sum
     }.sum
-    math.max(1L, (bytes + targetGenBytes - 1) / targetGenBytes).toInt
+    math.max(1L, (bytes + TargetGenBytes - 1) / TargetGenBytes).toInt
   }
 
   /** The decision log's on-read schema: the gate's four decision
@@ -843,8 +843,7 @@ object Streams {
     * rows already carry `batch_id` per row). */
   private def compactLog(spark: SparkSession, root: String, batchId: Long,
                          schema: org.apache.spark.sql.types.StructType,
-                         stampSrcBatch: Boolean,
-                         targetGenBytes: Long): Unit = {
+                         stampSrcBatch: Boolean): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(conf)
@@ -864,7 +863,7 @@ object Streams {
             case _ => df
           }
         }.reduce(_ unionByName _)
-        folded.repartition(genFileCount(fs, sources, targetGenBytes))
+        folded.repartition(genFileCount(fs, sources))
           .write.mode("overwrite").parquet(target.toString)
       }
       if (fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))) {
@@ -891,7 +890,7 @@ object Streams {
   private[graft] def compactDecisionsLog(spark: SparkSession, root: String,
                                          batchId: Long): Unit =
     compactLog(spark, root, batchId, decisionsLogSchema(spark),
-      stampSrcBatch = true, GateOptions().targetGenBytes)
+      stampSrcBatch = true)
 
   /** The FULL decision history of a [[dedupIngestGate]] run — the
     * reader-side contract for `outDir`: resolves the newest committed

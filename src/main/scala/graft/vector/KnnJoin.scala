@@ -1,104 +1,77 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.KnnJoinPlan.knnJoin
+
 /** kNN similarity join (SURVEY.md §2.3 J4) — the reference's FAISS
-  * flat-index search re-expressed for Spark.
+  * flat-index search (`IndexFlatIP`) re-expressed for Spark.
   *
-  * Two implementations with identical semantics (cosine/IP over
-  * double-cast embeddings, ties broken by ascending neighbor id,
-  * self-matches excluded by the caller's predicate):
+  * [[search]] is the one exact entry point. It plans through the custom
+  * operator ([[graft.plans.KnnJoinPlan.knnJoin]] → `KnnJoinExec`): when
+  * the plan executes, the index side is collected once and broadcast,
+  * and each query row keeps a bounded [[TopK]] selection. No shuffle,
+  * O(k) memory per query row — the reference's in-RAM index
+  * (`Faiss_2_10.py:61-114`) with executors replacing the single GPU.
+  * Semantics: inner product over double-cast embeddings (callers L2
+  * normalize for cosine), ties broken by ascending neighbor id.
   *
-  *  - [[exactCross]]: declarative join + window rank. Catalyst
-  *    broadcast-hash-joins the small index side automatically; right
-  *    at small N and the form the DuckDB oracle can verify. The
-  *    Q×N intermediate makes it wrong above ~10⁴ index rows.
-  *  - [[exactBroadcast]]: the scale path — index collected once,
-  *    broadcast to executors, per-partition top-k heap over queries.
-  *    No shuffle at all, O(k) memory per query row, exactly the
-  *    reference's in-RAM `IndexFlatIP` (`Faiss_2_10.py:61-114`)
-  *    with executors replacing the single GPU. At 100 TB of queries
-  *    this stays embarrassingly parallel as long as the index fits
-  *    in executor memory (~100 MB per million 64-dim doubles);
-  *    beyond that, shard the index and union per-shard top-k.
-  *
-  * A spec asserts both produce identical results; the LSH variant in
-  * [[approxLsh]] is the documented recall-for-speed trade at scale.
+  * [[exactCross]] is the declarative twin the specs check the operator
+  * against. The `approx*` functions are the approximate index ladder
+  * (IVF, PQ, IVF-PQ, SQ8, IVF-SQ8); each backs a declared query with
+  * its own oracle SQL.
   */
 object KnnJoin {
 
-  final case class KnnHit(query_id: Long, neighbor_id: Long, rank: Int, sim: Double)
-
-  /** Index-search strategy selector, so entry points (the lifecycles,
-    * user pipelines) choose the 100 TB posture per call site instead
-    * of hard-coding the broadcast-exact path:
-    *  - [[Exact]]: FAISS-flat semantics, index must fit in executor
+  /** Index-search posture of [[search]]:
+    *  - [[Exact]]: the whole index broadcast; it must fit in executor
     *    memory (~100 MB per million 64-dim doubles);
-    *  - [[Ivf]]: centroid-sharded candidate join — index can exceed
-    *    broadcast size, exact rerank within probed lists;
-    *  - [[Lsh]]: MLlib bucketed-random-projection join — recall for
-    *    speed at corpus scale. */
+    *  - [[Sharded]]: the index split by `pmod(vec_id, nShards)`, each
+    *    shard broadcast on its own, then the ≤ nShards·k candidates per
+    *    query re-ranked. Executor memory bounds the shard, not the
+    *    index, and the answer is bitwise the [[Exact]] one (same
+    *    selection order, same sequential fold; spec-asserted). */
   sealed trait Strategy
   case object Exact extends Strategy
   final case class Sharded(nShards: Int) extends Strategy
-  /** `nCentroids = 0` (the default) means AUTO: size the coarse index
-    * to ⌈√n⌉ lists for an n-vector index — the measured rule from the
-    * 10× scale run (PERF.md round 6: 16 fixed lists 318 s vs √n lists
-    * 61 s at 20k vectors; FAISS sizes IVF the same way). Pass an
-    * explicit positive value to pin the list count (the oracle
-    * queries do, via prebuilt centroid artifacts). */
-  final case class Ivf(nCentroids: Int = 0, nProbe: Int = 4) extends Strategy
-  /** IVF list pruning over a scalar-quantized (1 byte/dim) index with
-    * exact rerank of `nCandidates` — the production posture for
-    * corpora that are both too big to broadcast AND too big to store
-    * full-precision (the v16 composition). Auto-sizes lists like
-    * [[Ivf]]. */
-  final case class IvfSq8(nCentroids: Int = 0, nProbe: Int = 4,
-                          nCandidates: Int = 100) extends Strategy
-  final case class Lsh(threshold: Double = 1.5, bucketLength: Double = 0.5,
-                       numHashTables: Int = 4) extends Strategy
 
-  /** Strategy-dispatched top-k search with the neighbor label
-    * attached — one signature for every execution path. `excludeSelf`
-    * is honored by the exact paths; the approximate paths always
-    * exclude self-matches (harmless for disjoint query/index sets,
-    * e.g. a train/test split). */
+  /** Exact top-k search with the neighbor label attached: (query_id,
+    * rank, neighbor_id, sim, n_label). Builds a lazy plan — the index
+    * is collected only when an action runs it. */
   def search(spark: SparkSession, queries: DataFrame, index: DataFrame,
              k: Int, strategy: Strategy,
-             excludeSelf: Boolean = true): DataFrame = strategy match {
-    case Exact => exact(spark, queries, index, k, excludeSelf)
-    case Sharded(nShards) =>
-      exactSharded(spark, queries, index, k, nShards, excludeSelf)
-    case other =>
-      val hits = other match {
-        case Ivf(nCentroids, nProbe) =>
-          approxIvf(spark, queries, index, k, nCentroids, nProbe)
-        case IvfSq8(nCentroids, nProbe, nCandidates) =>
-          approxIvfSq8(spark, queries, index, k, nCentroids, nProbe,
-            nCandidates)
-        case Lsh(threshold, bucketLength, numHashTables) =>
-          approxLsh(spark, queries, index, k, threshold, bucketLength,
-            numHashTables)
-        case _ => throw new IllegalStateException("unreachable")
-      }
-      // No broadcast HINT here: Ivf/Lsh exist precisely for indexes too
-      // big to broadcast, so forcing the label attach through a
-      // broadcast would reintroduce the bound the strategy removes.
-      // Catalyst still picks broadcast-hash on its own when the index
-      // side is small enough (AQE size-based choice).
-      hits.join(index.select(col("vec_id").as("neighbor_id"),
-          col("label").as("n_label")), Seq("neighbor_id"))
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"),
-          col("n_label"))
+             excludeSelf: Boolean = true): DataFrame = {
+    val hits = strategy match {
+      case Exact => knnJoin(spark, queries, index, k, excludeSelf)
+      case Sharded(nShards) =>
+        require(nShards > 0)
+        val w = Window.partitionBy(col("query_id"))
+          .orderBy(col("sim").desc, col("neighbor_id"))
+        (0 until nShards).map { s =>
+          val shard = index.filter(pmod(col("vec_id"), lit(nShards)) === s)
+          knnJoin(spark, queries, shard, k, excludeSelf)
+            .select(col("query_id"), col("neighbor_id"), col("sim"))
+        }.reduce(_ unionByName _)
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= k)
+          .select(col("query_id"), col("rank").cast("long").as("rank"),
+            col("neighbor_id"), col("sim"))
+    }
+    val labels = index.select(col("vec_id").as("neighbor_id"),
+      col("label").as("n_label"))
+    hits.join(broadcast(labels), Seq("neighbor_id"))
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"),
+        col("n_label"))
   }
 
   /** Bounded top-k selection by (sim desc, id asc): arrays kept sorted
     * with shifted insertion — O(1) reject for the common below-
     * threshold candidate, zero allocation per candidate. The total
     * order makes the result independent of candidate iteration order,
-    * so every execution path (helper, custom exec) selects identically. */
+    * so every scan that uses it (the kNN operator, the PQ code scan)
+    * selects identically. */
   final class TopK(k: Int) {
     val sims = new Array[Double](k)
     val ids = new Array[Long](k)
@@ -122,8 +95,9 @@ object KnnJoin {
   }
 
   /** Declarative exact kNN: top-k by inner product (callers L2
-    * normalize first for cosine semantics). */
-  def exactCross(queries: DataFrame, index: DataFrame, k: Int,
+    * normalize first for cosine semantics). Spec-only: the independent
+    * reference the kNN operator is checked against. */
+  private[graft] def exactCross(queries: DataFrame, index: DataFrame, k: Int,
                  excludeSelf: Boolean = true): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
@@ -138,90 +112,6 @@ object KnnJoin {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), col("sim"), col("n_label"))
-  }
-
-  /** Scale-path exact kNN: broadcast index + per-partition top-k heap. */
-  def exactBroadcast(spark: SparkSession, queries: DataFrame, index: DataFrame,
-                     k: Int, excludeSelf: Boolean = true): Dataset[KnnHit] = {
-    import spark.implicits._
-    val idx: Array[(Long, Array[Double])] = index
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])].collect()
-    val bc = spark.sparkContext.broadcast(idx)
-    val qs = queries
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-    qs.mapPartitions { it =>
-      val entries = bc.value
-      val top = new TopK(k)
-      it.flatMap { case (qid, qv) =>
-        top.reset()
-        var i = 0
-        while (i < entries.length) {
-          val (nid, nv) = entries(i)
-          if (!(excludeSelf && nid == qid)) {
-            var s = 0.0
-            var d = 0
-            while (d < nv.length) { s += qv(d) * nv(d); d += 1 }
-            top.offer(nid, s)
-          }
-          i += 1
-        }
-        (0 until top.size).map(r => KnnHit(qid, top.ids(r), r + 1, top.sims(r)))
-      }
-    }
-  }
-
-  /** The engine's standard exact kNN: broadcast-heap execution (no
-    * Q×N materialization — ~20× faster than the declarative form,
-    * whose per-pair `zip_with` array allocation never reaches codegen)
-    * with the neighbor label attached. Sims are bitwise-identical to
-    * [[exactCross]]: same double-cast elements, same sequential fold. */
-  def exact(spark: SparkSession, queries: DataFrame, index: DataFrame,
-            k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val labels = index.select(col("vec_id").as("neighbor_id"),
-      col("label").as("n_label"))
-    exactBroadcast(spark, queries, index, k, excludeSelf)
-      .toDF("query_id", "neighbor_id", "rank", "sim")
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"))
-      .join(broadcast(labels), Seq("neighbor_id"))
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"),
-        col("n_label"))
-  }
-
-  /** Exact kNN past broadcast size (the documented PERF.md 100-TB
-    * path): the index hash-partitioned into `nShards` by id, each
-    * shard broadcast independently with its own per-partition top-k
-    * heap pass, then a global re-rank of the ≤ nShards·k candidates
-    * per query. Selection order (sim desc, id asc) matches [[exact]]
-    * and the per-shard dot products use the same sequential fold, so
-    * the result is bitwise-identical to the unsharded path
-    * (spec-asserted). Executor memory now bounds the SHARD size, not
-    * the index size; the candidate re-rank shuffles only S·k tiny
-    * rows per query. */
-  def exactSharded(spark: SparkSession, queries: DataFrame, index: DataFrame,
-                   k: Int, nShards: Int,
-                   excludeSelf: Boolean = true): DataFrame = {
-    require(nShards > 0)
-    val perShard = (0 until nShards).map { s =>
-      val shard = index.filter(pmod(col("vec_id"), lit(nShards)) === s)
-      exactBroadcast(spark, queries, shard, k, excludeSelf)
-        .toDF("query_id", "neighbor_id", "shard_rank", "sim")
-        .select(col("query_id"), col("neighbor_id"), col("sim"))
-    }.reduce(_ unionByName _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val labels = index.select(col("vec_id").as("neighbor_id"),
-      col("label").as("n_label"))
-    perShard
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"))
-      .join(broadcast(labels), Seq("neighbor_id"))
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"),
-        col("n_label"))
   }
 
   /** Session-scoped memo of the standard artifact nearly every
@@ -239,63 +129,8 @@ object KnnJoin {
       // scan stage — one task on single-row-group test parquet (50 s
       // on one core at 10× sf0.1, with 31 idle)
       val e = graft.core.Tables(spark, dir).embeddingsSpread
-      exact(spark, e, e, 3)
+      search(spark, e, e, 3, Exact)
     }
-
-  /** Strategy-dispatched form of the self-top3 artifact — the SAME
-    * seam and output shape as [[exactSelfTop3]] (which it returns
-    * verbatim for [[Exact]], so every oracle query keeps the exact
-    * form), but scale callers pick the search posture: the exact
-    * self-kNN is the engine's one declared quadratic surface (~37×
-    * wall at 10× data, PERF.md round 6), and an [[IvfSq8]]-backed
-    * build keeps the whole downstream evaluation family
-    * (report/rollup/agreement/calibration/RAG) on an O(n·√n) path
-    * with recall spec-bounded against exact (IvfSpec). Each
-    * strategy memoizes under its own key, so mixed consumers (an
-    * exact-checked query next to a scale pipeline) never collide. */
-  /** The evaluation family's self-kNN posture, resolved from
-    * `SPARK_GRAFT_SELF_KNN`: unset/"exact" → [[Exact]] (reference
-    * parity — every oracle/verify run uses this, since the driver
-    * sets no such env), "ivfsq8" → auto-sized [[IvfSq8]] (the
-    * corpus-scale posture: O(n·√n) search over 1-byte/dim codes
-    * instead of the quadratic broadcast sweep), "ivf" → [[Ivf]].
-    * Evaluation-family consumers ([[graft.metrics.FeedbackPack
-    * .compositeEval]]) take this as their default strategy, so ONE
-    * env flips the whole downstream report family onto the scale
-    * path without touching the oracle-checked default.
-    *
-    * Resolved ONCE per JVM (lazy val) and logged when non-default:
-    * a stale shell export would otherwise silently flip an
-    * oracle-checked query's semantics at every call, surfacing only
-    * as a downstream hash failure. Bench/Verify additionally force
-    * resolution at startup ([[Bench]] fails fast on a bad value
-    * before any timing; [[Verify]] refuses non-Exact outright). */
-  lazy val envSelfStrategy: Strategy = {
-    val s = parseSelfStrategy(sys.env.get("SPARK_GRAFT_SELF_KNN"))
-    if (s != Exact)
-      System.err.println(s"[graft] SPARK_GRAFT_SELF_KNN resolved to $s — " +
-        "evaluation-family self-kNN leaves the oracle-checked exact posture")
-    s
-  }
-
-  private[graft] def parseSelfStrategy(v: Option[String]): Strategy =
-    v.map(_.trim.toLowerCase).filter(_.nonEmpty) match {
-      case None | Some("exact") => Exact
-      case Some("ivfsq8")       => IvfSq8()
-      case Some("ivf")          => Ivf()
-      case Some(other) => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_SELF_KNN=$other (want exact|ivf|ivfsq8)")
-    }
-
-  def selfTop3(spark: SparkSession, dir: String,
-               strategy: Strategy = Exact): DataFrame = strategy match {
-    case Exact => exactSelfTop3(spark, dir)
-    case s =>
-      graft.core.Artifacts.memo(spark, s"knn_self_top3:$s:$dir") {
-        val e = graft.core.Tables(spark, dir).embeddingsSpread
-        search(spark, e, e, 3, s)
-      }
-  }
 
   /** All-pairs similarity above a threshold: broadcast + per-partition
     * primitive loops with precomputed norms; emits (a_id < b_id, cos).
@@ -309,8 +144,10 @@ object KnnJoin {
     * random noise and ANY candidate scheme with full recall must
     * examine ~all pairs). Near-dup MINING — the training-pipeline
     * operator, threshold ≥ ~0.9 with a wide margin to background —
-    * is [[cosinePairsAboveBanded]], which is sub-quadratic. */
-  def cosinePairsAbove(spark: SparkSession, vectors: DataFrame,
+    * is [[cosinePairsAboveBanded]], which is sub-quadratic.
+    * Spec-only: the all-pairs reference the banded path is checked
+    * against. */
+  private[graft] def cosinePairsAbove(spark: SparkSession, vectors: DataFrame,
                        threshold: Double): DataFrame = {
     import spark.implicits._
     val idx: Array[(Long, Array[Double])] = vectors
@@ -558,11 +395,10 @@ object KnnJoin {
     * and probing primitive of the IVF family. */
   private[graft] def nearestCentroids(spark: SparkSession, rows: DataFrame,
                                        centroids: DataFrame, n: Int): DataFrame =
-    exactBroadcast(spark, rows.select(col("vec_id"), col("embedding")),
+    knnJoin(spark, rows,
         centroids.select(col("centroid_id").as("vec_id"), col("embedding")),
         n, excludeSelf = false)
-      .toDF("vec_id", "centroid_id", "r", "s")
-      .select(col("vec_id"), col("centroid_id"))
+      .select(col("query_id").as("vec_id"), col("neighbor_id").as("centroid_id"))
 
   /** INCREMENTAL IVF index maintenance — the append path of a
     * long-lived embedding store (the d16/d19 incremental pattern,
@@ -671,8 +507,8 @@ object KnnJoin {
     * top `nCandidates`. The quantization stages are relational so the
     * v12 oracle replays them; the candidate scan runs in the
     * production shape — broadcast per-query lookup tables over a
-    * per-partition packed-code scan (the [[exactBroadcast]] shape
-    * with 128× less index memory). The LUT broadcast is bounded by
+    * per-partition packed-code scan (the exact operator's broadcast
+    * shape with 128× less index memory). The LUT broadcast is bounded by
     * Q·m·centroids doubles (~0.5 MB per 1k queries at the defaults);
     * query sets past `queryChunk` split into successive searches —
     * one LUT broadcast and one code scan per chunk, results unioned —
@@ -969,38 +805,6 @@ object KnnJoin {
         col("neighbor_id"), col("sim"))
   }
 
-  /** Approximate kNN via MLlib random-projection LSH over the
-    * L2-normalized vectors (Euclidean on the unit sphere orders like
-    * cosine: dist² = 2 − 2·sim). The 100 TB path when the index side
-    * no longer broadcasts — bucketed join instead of Q×N scan. */
-  def approxLsh(spark: SparkSession, queries: DataFrame, index: DataFrame,
-                k: Int, threshold: Double = 1.5, bucketLength: Double = 0.5,
-                numHashTables: Int = 4, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.functions.array_to_vector
-    def prep(df: DataFrame, idAs: String): DataFrame =
-      df.select(col("vec_id").as(idAs),
-        array_to_vector(VectorOps.l2Normalize(col("embedding"))).as("features"))
-    val q = prep(queries, "query_id")
-    val n = prep(index, "neighbor_id")
-    val lsh = new BucketedRandomProjectionLSH()
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables)
-      .setSeed(seed).setInputCol("features").setOutputCol("hashes")
-    val model = lsh.fit(n)
-    val joined = model
-      .approxSimilarityJoin(q, n, threshold, "dist")
-      .select(col("datasetA.query_id").as("query_id"),
-        col("datasetB.neighbor_id").as("neighbor_id"),
-        (lit(1.0) - col("dist") * col("dist") / 2.0).as("sim"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"))
-  }
-
   /** Per-dimension [lo, hi] quantization bounds for [[approxSq8]]:
     * ONE min/max aggregate over the index corpus — the train step of
     * FAISS `IndexScalarQuantizer(QT_8bit)`. Emits a 1-row frame
@@ -1029,8 +833,8 @@ object KnnJoin {
     * smaller than double — which at 100 TB is the difference between
     * an index that fits executor memory and one that doesn't.
     *
-    * Execution reuses the broadcast-heap scan ([[exactBroadcast]]) on
-    * the reconstructed vectors, so the approx pass costs exactly one
+    * Execution reuses the exact kNN operator (`knnJoin`) on the
+    * reconstructed vectors, so the approx pass costs exactly one
     * map-side sweep (no Q×N materialization), and the rerank joins
     * touch only Q·rerank candidate rows. Quantize → reconstruct →
     * score is pure IEEE arithmetic (no transcendentals), so the whole
@@ -1063,8 +867,7 @@ object KnnJoin {
     val xhatOf = sq8XhatFn(statsOpt.getOrElse(sq8Stats(index)))
     val recon = index.select(col("vec_id"),
       xhatOf(col("embedding").cast("array<double>")).as("embedding"))
-    val cands = exactBroadcast(spark, queries, recon, rerank, excludeSelf)
-      .toDF("query_id", "neighbor_id", "arnk", "approx")
+    val cands = knnJoin(spark, queries, recon, rerank, excludeSelf)
       .select(col("query_id"), col("neighbor_id"))
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").cast("array<double>").as("q_emb"))
@@ -1085,8 +888,8 @@ object KnnJoin {
   }
 
   /** IVF-SQ8 composition (FAISS `IndexIVFScalarQuantizer` shape —
-    * completing the index matrix: Flat / Sharded / LSH / IVF / PQ /
-    * IVF-PQ / SQ8 / IVF-SQ8): the coarse quantizer prunes to
+    * completing the index matrix: Flat / Sharded / IVF / PQ / IVF-PQ /
+    * SQ8 / IVF-SQ8): the coarse quantizer prunes to
     * `nProbe` lists, SQ8-reconstructed vectors score ONLY within the
     * probed lists (asymmetric — queries stay full-precision), and the
     * top-`nCandidates` per query re-rank on exact dot products.

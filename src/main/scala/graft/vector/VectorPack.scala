@@ -364,7 +364,7 @@ object VectorPack extends QueryPack {
     val e = Tables(spark, dir).embeddingsSpread
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"), col("label"))
-    KnnJoin.exactSharded(spark, e, e, K, nShards = 4)
+    KnnJoin.search(spark, e, e, K, KnnJoin.Sharded(4))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("sim"), 6).as("sim"))
       .orderBy(col("query_id"), col("rank"))

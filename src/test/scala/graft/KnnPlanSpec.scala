@@ -19,15 +19,20 @@ class KnnPlanSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "sim"))
   }
 
-  test("custom operator results equal the broadcast-heap helper exactly") {
+  /** The declarative twin's (query_id, rank, neighbor_id, sim) rows:
+    * ArrayDot folds the same doubles in the same order as the exec. */
+  private def declarative(e: org.apache.spark.sql.DataFrame) =
+    KnnJoin.exactCross(e, e, 3)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSet
+
+  test("custom operator results equal the declarative exactCross exactly") {
     val e = Tables(spark, sf).embeddings
     val viaPlan = KnnJoinPlan.knnJoin(spark, e, e, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
-    val viaHelper = KnnJoin.exactBroadcast(spark, e, e, 3)
-      .collect().map(h => (h.query_id, h.rank.toLong, h.neighbor_id, h.sim))
-      .toSet
-    assert(viaPlan == viaHelper)
+    assert(viaPlan == declarative(e))
   }
 
   test("optimizer rule rewrites the naive window-rank top-k plan to KnnJoinExec") {
@@ -50,9 +55,7 @@ class KnnPlanSpec extends AnyFunSuite {
     assert(!physical.toLowerCase.contains("window"), "window survived the rewrite")
     val viaRule = naive.collect()
       .map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2), r.getDouble(3))).toSet
-    val viaHelper = KnnJoin.exactBroadcast(spark, e, e, 3)
-      .collect().map(h => (h.query_id, h.rank.toLong, h.neighbor_id, h.sim)).toSet
-    assert(viaRule == viaHelper)
+    assert(viaRule == declarative(e))
   }
 
   test("rewrite leaves plans with payload columns untouched") {

@@ -9,13 +9,20 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One session configuration serves specs, Verify, Bench and the
   * probes: only [[core.GraftSession]] builds a SparkSession, and the
   * kNN strategy and rewrite rule come from GraftExtensions, never from
-  * the session's experimental hooks. A scan of the main sources keeps
-  * it that way. */
+  * the session's experimental hooks. Environment reads stay in the
+  * harness mains (data and output paths, the query filter) and the
+  * session factory (the CPU count), so no process-wide knob can change
+  * what a query computes. A scan of the main sources keeps it that
+  * way. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val builder = """SparkSession\s*\.\s*builder""".r
   private val hookAssign =
     """experimental\s*\.\s*extra(Strategies|Optimizations)\s*=(?!=)""".r
+  private val envRead = """sys\s*\.\s*env\b|System\s*\.\s*getenv\b""".r
+  private val envReaders = Seq(Paths.get("Bench.scala"),
+    Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
+    Paths.get("core", "GraftSession.scala"))
 
   private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -33,6 +40,10 @@ class SessionGuardSpec extends AnyFunSuite {
       "spark.experimental.extraOptimizations = rules").nonEmpty)
     assert(hookAssign.findFirstIn(
       "spark.experimental.extraStrategies == Nil").isEmpty)
+    assert(envRead.findFirstIn("sys.env.get(\"X\")").nonEmpty)
+    assert(envRead.findFirstIn("sys\n  .env.getOrElse(\"X\", \"\")").nonEmpty)
+    assert(envRead.findFirstIn("System.getenv(\"X\")").nonEmpty)
+    assert(envRead.findFirstIn("sys.environment").isEmpty)
   }
 
   test("only core/GraftSession.scala builds a SparkSession; nothing assigns " +
@@ -47,6 +58,15 @@ class SessionGuardSpec extends AnyFunSuite {
         (if (hookAssign.findFirstIn(text).nonEmpty)
           Seq(s"$f: experimental hook assignment") else Nil)
     }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only the harness mains and the session factory read the environment") {
+    val root = Paths.get("src/main/scala", "graft")
+    envReaders.foreach(a => assert(Files.exists(root.resolve(a)), s"$a missing"))
+    val offenders = mainSources.filterNot(f =>
+        envReaders.exists(a => f.endsWith(root.resolve(a))))
+      .filter(f => envRead.findFirstIn(Files.readString(f)).nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -12,24 +12,35 @@ class VectorSpec extends AnyFunSuite {
 
   test("broadcast heap kNN agrees exactly with the declarative form") {
     val e = Tables(spark, sf).embeddings
-    val cross = KnnJoin.exactCross(e, e, 3)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val heap = KnnJoin.exactBroadcast(spark, e, e, 3)
-      .collect().map(h => (h.query_id, h.rank.toLong, h.neighbor_id)).toSet
-    assert(cross == heap)
+    def hits(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSet
+    val cross = hits(KnnJoin.exactCross(e, e, 3))
+    assert(cross.size == 3 * e.count())
+    assert(hits(KnnJoin.search(spark, e, e, 3, KnnJoin.Exact)) == cross)
   }
 
-  test("LSH approx kNN has usable recall vs exact on sf0.001") {
+  test("exact search builds a lazy plan: no Spark job before an action") {
     val e = Tables(spark, sf).embeddings
-    val exact = KnnJoin.exactCross(e, e, 3)
-      .select(col("query_id"), col("neighbor_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = KnnJoin.approxLsh(spark, e, e, 3)
-      .select(col("query_id"), col("neighbor_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    assert(recall > 0.5, s"recall $recall too low")
+    val sc = spark.sparkContext
+    val group = s"knn-lazy-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "kNN search build")
+    try {
+      val df = KnnJoin.search(spark, e, e, 3, KnnJoin.Exact)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+        "building the search ran a job")
+      // control: the group does see the jobs once an action runs
+      assert(df.count() == 3 * e.count())
+      assert(sc.statusTracker.getJobIdsForGroup(group).nonEmpty)
+    } finally sc.clearJobGroup()
+  }
+
+  test("exactSelfTop3 is a session memo: a second call returns the same frame") {
+    val top3 = KnnJoin.exactSelfTop3(spark, sf)
+    assert(KnnJoin.exactSelfTop3(spark, sf) eq top3)
+    assert(top3.columns.toSeq ==
+      Seq("query_id", "rank", "neighbor_id", "sim", "n_label"))
   }
 
   test("hash split fractions are close to requested and deterministic") {
@@ -177,10 +188,10 @@ class MlSpec extends org.scalatest.funsuite.AnyFunSuite {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
           r.getAs[Number](4).longValue)).toSet
-    val unsharded = collectHits(graft.vector.KnnJoin.exact(spark, e, e, 3))
+    val unsharded = collectHits(KnnJoin.search(spark, e, e, 3, KnnJoin.Exact))
     for (nShards <- Seq(2, 4)) {
       val sharded = collectHits(
-        graft.vector.KnnJoin.exactSharded(spark, e, e, 3, nShards))
+        KnnJoin.search(spark, e, e, 3, KnnJoin.Sharded(nShards)))
       assert(sharded == unsharded, s"nShards=$nShards")
     }
   }
@@ -240,7 +251,7 @@ class MlSpec extends org.scalatest.funsuite.AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select(col("query_id"), col("neighbor_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(graft.vector.KnnJoin.exact(spark, e, e, 3))
+    val exact = pairs(KnnJoin.search(spark, e, e, 3, KnnJoin.Exact))
     val sq8 = pairs(graft.vector.KnnJoin.approxSq8(spark, e, e, 3))
     val recall = (exact & sq8).size.toDouble / exact.size
     assert(recall >= 0.95, s"SQ8 recall@3 $recall — 8-bit + rerank-20 " +
@@ -254,7 +265,7 @@ class MlSpec extends org.scalatest.funsuite.AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select(col("query_id"), col("neighbor_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(graft.vector.KnnJoin.exact(spark, e, e, 3))
+    val exact = pairs(KnnJoin.search(spark, e, e, 3, KnnJoin.Exact))
     val composed = pairs(graft.vector.KnnJoin.approxIvfSq8(spark, e, e, 3))
     val ivf = pairs(graft.vector.KnnJoin.approxIvf(spark, e, e, 3))
     val rc = (exact & composed).size.toDouble / exact.size
@@ -449,64 +460,6 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
     def run() = graft.vector.KnnJoin.approxIvf(spark, e, e, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(run() == run())
-  }
-
-  test("selfTop3 strategy dispatch: IVF-SQ8-backed artifact tracks exact recall") {
-    import graft.vector.KnnJoin
-    // Exact strategy IS the oracle artifact — same frame, same memo
-    assert(KnnJoin.selfTop3(spark, sf) eq KnnJoin.exactSelfTop3(spark, sf))
-    def pairs(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("query_id"), col("neighbor_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(KnnJoin.exactSelfTop3(spark, sf))
-    val scaled = KnnJoin.selfTop3(spark, sf, KnnJoin.IvfSq8())
-    val recall = (exact & pairs(scaled)).size.toDouble / exact.size
-    // generous rerank (100 candidates) makes the composition's recall
-    // the IVF pruning recall; floor matches IvfSpec's
-    assert(recall > 0.5, s"IvfSq8 selfTop3 recall $recall too low")
-    info(s"IvfSq8 selfTop3 recall vs exact: $recall")
-    // per-strategy memo: the second call serves the SAME persisted
-    // frame (artifact identity), distinct from the exact artifact
-    assert(KnnJoin.selfTop3(spark, sf, KnnJoin.IvfSq8()) eq scaled)
-    assert(!(scaled eq KnnJoin.exactSelfTop3(spark, sf)))
-    // label attach + shape match the exact artifact's contract
-    assert(scaled.columns.toSeq ==
-      KnnJoin.exactSelfTop3(spark, sf).columns.toSeq)
-  }
-
-  test("f04 rides the dispatched self-kNN: IvfSq8 posture, bounded drift") {
-    import graft.vector.KnnJoin
-    // the env flag's parse table (the env itself is read-only in-JVM)
-    assert(KnnJoin.parseSelfStrategy(None) == KnnJoin.Exact)
-    assert(KnnJoin.parseSelfStrategy(Some("exact")) == KnnJoin.Exact)
-    assert(KnnJoin.parseSelfStrategy(Some("IvfSq8")) == KnnJoin.IvfSq8())
-    assert(KnnJoin.parseSelfStrategy(Some("ivf")) == KnnJoin.Ivf())
-    intercept[IllegalArgumentException] {
-      KnnJoin.parseSelfStrategy(Some("bogus"))
-    }
-    // no env in tests → the default posture is the oracle-checked one
-    assert(KnnJoin.envSelfStrategy == KnnJoin.Exact)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val ex = graft.metrics.FeedbackPack.compositeEval(spark, sf)
-    val sc = graft.metrics.FeedbackPack
-      .compositeEval(spark, sf, KnnJoin.IvfSq8())
-    // identical report contract: schema, class-key set, per-class support
-    assert(ex.columns.toSeq == sc.columns.toSeq)
-    val exR = rows(ex.select("field", "support", "correct"))
-    val scR = rows(sc.select("field", "support", "correct"))
-    assert(exR.map(r => (r._1, r._2)) == scR.map(r => (r._1, r._2)),
-      "class keys/support must not depend on the search posture")
-    def overall(df: org.apache.spark.sql.DataFrame): Double = df
-      .filter(col("field") === "Overall")
-      .select("accuracy").collect()(0).getDouble(0)
-    val accEx = overall(ex); val accSc = overall(sc)
-    info(s"f04 Overall accuracy exact=$accEx ivfsq8=$accSc")
-    // approximate neighbors may flip individual rows, but the report
-    // must stay in the same regime — recall ~0.9 at rank-1 bounds the
-    // possible drift well inside this
-    assert(math.abs(accEx - accSc) <= 0.25,
-      s"IvfSq8-backed f04 drifted: $accEx vs $accSc")
   }
 
   test("unspecified nCentroids auto-sizes to ceil(sqrt(n)) — measured rule") {
