@@ -9,7 +9,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - `qreps [q1,q2,...] [n]` — run each named query `n` times
   *    (default 3) in ONE JVM (JIT-warm after rep 1) and print every
   *    rep: min-over-reps is the noise-robust A/B statistic on a shared
-  *    box whose load swings 2-3x mid-run.
+  *    box whose load swings 2-3x mid-run. Before every rep the memos
+  *    built by any probed name are dropped, so a query's number does
+  *    not depend on which names ran before it in the list.
   *  - `explain [q1,q2,...]` — print each named query's formatted
   *    physical plan and audit the scale-critical properties: parquet
   *    filter pushdown, pruned read schemas, broadcast joins and
@@ -40,8 +42,9 @@ object PerfProbe {
   private def qreps(spark: SparkSession, sfDir: String, names: Seq[String],
                     n: Int): Unit = {
     for (r <- 1 to n; name <- names) {
-      // each rep rebuilds the query's own artifacts, like Bench's retry
-      core.Artifacts.dropScope(name)
+      // each rep rebuilds every memo a probed query built, so a
+      // consumer never reads what an earlier name in the list left
+      names.foreach(core.Artifacts.dropScope)
       core.Artifacts.setScope(name)
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)

@@ -36,7 +36,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * Row-order effects: round-robin changes partition assignment, so
     * every downstream float aggregation must be (and is) order-
     * independent — decimal-exact sums ([[Exact]]), md5-ordered
-    * samples, row-local scoring. [[graft.vector.KnnJoin.ivfCentroids]]
+    * samples, row-local scoring. [[graft.vector.KnnJoin.ivfIndex]]
     * documents the same invariant for the k-means path.
     *
     * OPT-IN, not automatic: measured at sf0.1, auto-spreading every

@@ -847,14 +847,13 @@ object DedupPack extends QueryPack {
       .orderBy(col("doc_id"))
   }
 
-  /** The augmented-vector coarse index shared by d12 and v14 — same
-    * artifact discipline as the embeddings-table index in
-    * [[graft.vector.VectorPack]] (deterministic build, so consuming
-    * the memo is bitwise-identical to inline construction). */
-  private[graft] def augIvfArtifacts(spark: SparkSession,
-                                     dir: String): (DataFrame, DataFrame) =
-    graft.vector.SemDedup.ivfArtifacts(spark, s"aug:$dir",
-      augmentedVectors(spark, dir))
+  /** The augmented-vector 16-list coarse index shared by d12 and v14
+    * — the same session artifact builder as the embeddings-table
+    * index in [[graft.vector.VectorPack]]. */
+  private[graft] def augIvfIndex(spark: SparkSession,
+                                 dir: String): graft.vector.KnnJoin.IvfIndex =
+    graft.vector.KnnJoin.ivfIndexArtifact(spark, s"aug:$dir",
+      augmentedVectors(spark, dir), Some(16))
 
   /** d12: SemDeDup (Abbas et al. 2023) over the augmented vectors —
     * the semantic tier of the dedup ladder. The planted near-copies
@@ -866,9 +865,8 @@ object DedupPack extends QueryPack {
     * Lloyd, assignment, within-cluster pairs, keeper rule — replays
     * in SQL via the shared v10 chain. */
   def semdedup(spark: SparkSession, dir: String): DataFrame = {
-    val (cents, asg) = augIvfArtifacts(spark, dir)
     graft.vector.SemDedup.semDedup(spark, augmentedVectors(spark, dir), 0.98,
-        centroidsOpt = Some(cents), assignmentsOpt = Some(asg))
+        augIvfIndex(spark, dir))
       .orderBy(col("vec_id"))
   }
 
@@ -1068,8 +1066,8 @@ object DedupPack extends QueryPack {
   override val artifacts: Map[String, (SparkSession, String) => DataFrame] =
     Map("jaccard_pairs" -> jaccardPairsArtifact,
       "dedup_groups" -> dedupGroupsArtifact,
-      "aug_ivf_centroids" -> ((s, d) => augIvfArtifacts(s, d)._1),
-      "aug_ivf_assign" -> ((s, d) => augIvfArtifacts(s, d)._2),
+      "aug_ivf_centroids" -> ((s, d) => augIvfIndex(s, d).centroids),
+      "aug_ivf_assign" -> ((s, d) => augIvfIndex(s, d).assignments),
       // the shingle/minhash tier shared by d02/d03/d07/d09/d13/d19/
       // d20/d21, the s09 gate and p02's funnel (memo-linked:
       // minhash_sigs derives from minhash_rows; both in one "minhash"

@@ -3,7 +3,6 @@ package graft.ingest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** File ingestion with lineage columns — the reference's consolidation
   * stage re-expressed as one lazy Spark plan.
@@ -26,13 +25,6 @@ import org.apache.spark.sql.types._
   * shuffle.
   */
 object Ingest {
-
-  val pageSchema: StructType = StructType(Seq(
-    StructField("fn", StringType),
-    StructField("fp", StringType),
-    StructField("channel", StringType),
-    StructField("PE_num", IntegerType),
-    StructField("text", StringType)))
 
   /** S1-S3 + P10/P11: scan the per-channel csv glob (headerless, one
     * text column per page) into the standard page table.

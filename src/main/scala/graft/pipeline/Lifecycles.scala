@@ -4,26 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.ingest.Ingest
 import graft.llm.LlmPack
 import graft.metrics.{Classification, Evaluation}
 import graft.sample.Sampling
 import graft.text.TextOps
 import graft.vector.KnnJoin
 
-/** The reference's four end-to-end entry points (SURVEY §3) as
+/** The reference's end-to-end entry points (SURVEY §3) as
   * composable jobs over the engine's operators — the §7.1 module-8
-  * deliverable. Each lifecycle recombines already-oracle-checked
-  * stages; the flagship classification lifecycle additionally runs
-  * under its own DuckDB oracle ([[PipelinePack]] p01).
+  * deliverable (§3.1 ingestion/consolidation is
+  * [[graft.ingest.Ingest.readPages]] itself). Each lifecycle
+  * recombines already-oracle-checked stages; the flagship
+  * classification lifecycle additionally runs under its own DuckDB
+  * oracle ([[PipelinePack]] p01).
   */
 object Lifecycles {
-
-  /** §3.1 ingestion/consolidation: channel directory scan →
-    * headerless per-page CSV read → lineage columns (fn, channel,
-    * page number) → one consolidated table. */
-  def consolidate(spark: SparkSession, root: String): DataFrame =
-    Ingest.readPages(spark, root)
 
   /** §3.2 flagship: document-level anti-leakage split → train-index
     * kNN top-1 → sklearn-style classification report. The split is the

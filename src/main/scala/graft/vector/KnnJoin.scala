@@ -21,9 +21,30 @@ import graft.plans.KnnJoinPlan.knnJoin
   * [[exactCross]] is the declarative twin the specs check the operator
   * against. The `approx*` functions are the approximate index ladder
   * (IVF, PQ, IVF-PQ, SQ8, IVF-SQ8); each backs a declared query with
-  * its own oracle SQL.
+  * its own oracle SQL. Training is kept apart from search, as FAISS
+  * keeps `train` apart from `search`: [[ivfIndex]] (or its session
+  * form [[ivfIndexArtifact]]), [[pqIndex]] and [[sq8Stats]] build an
+  * index once, and every search takes a built one.
   */
 object KnnJoin {
+
+  // Build and search constants of the approximate family, one value
+  // each; the v10-v26, v14 and d12 oracle SQL replays them literally.
+  private val NProbe = 4          // inverted lists probed per query
+  private val Seed = "42"         // md5 sample order: IVF and PQ seeds
+  private val LloydIters = 2      // IVF k-means refinements
+  private val PqM = 4             // PQ subspaces ...
+  private val PqSubDim = 16       // ... of 16 dims each (64 = 4 x 16)
+  private val PqCentroids = 16    // centroids per PQ subspace
+  private val PqCandidates = 30   // flat PQ candidates reranked per query
+  private val IvfCandidates = 100 // IVF-PQ / IVF-SQ8 candidates reranked
+  private val Sq8Rerank = 20      // flat SQ8 candidates reranked per query
+  private val SrpBands = 16       // SRP-LSH bands ...
+  private val SrpBitsPerBand = 16 // ... of 16 sign bits each
+  private val SrpSeed = 42L
+  private val DriftBins = 1000    // drift-audit histogram bins
+  private val DriftProb = 0.95    // drift-audit quantile
+  private val DriftMargin = 0.1   // drift-audit relative margin
 
   /** Index-search posture of [[search]]:
     *  - [[Exact]]: the whole index broadcast; it must fit in executor
@@ -176,15 +197,15 @@ object KnnJoin {
   }
 
   /** Deterministic Rademacher (±1) projection planes for SRP-LSH,
-    * derived from a splitmix64 stream of `seed` — identical on every
+    * derived from a splitmix64 stream of `SrpSeed` — identical on every
     * executor with no broadcast and no RNG-implementation dependence. */
-  private[vector] def srpPlanes(seed: Long, nBits: Int, dim: Int): Array[Array[Double]] = {
+  private def srpPlanes(nBits: Int, dim: Int): Array[Array[Double]] = {
     val planes = Array.ofDim[Double](nBits, dim)
     var j = 0
     while (j < nBits) {
       var k = 0
       while (k < dim) {
-        var z = seed + (j.toLong * dim + k + 1) * 0x9E3779B97F4A7C15L
+        var z = SrpSeed + (j.toLong * dim + k + 1) * 0x9E3779B97F4A7C15L
         z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
         z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
         z ^= (z >>> 31)
@@ -203,14 +224,15 @@ object KnnJoin {
     *
     * Signature stage is map-side: `bands·bitsPerBand` sign bits per
     * vector (sign of a Rademacher projection; P[bits agree] =
-    * 1 − θ/π), packed into one long per band. Candidates come from the
+    * 1 − θ/π), packed into one long per band (`SrpBands` ×
+    * `SrpBitsPerBand`). Candidates come from the
     * per-band equi-join — pairs must agree on ALL `bitsPerBand` bits
     * of some band, so candidate volume is ~n²·(1−θ/π)^bits per band,
     * vanishing for the isotropic background (θ ≈ π/2 → 2^-bits) while
     * near-dups (θ ≈ 0) collide with probability → 1. The exact rerank
     * then restores precision; misses are the only error mode, at
     * (1 − p^bits)^bands per true pair — ~5e-7 at cos 0.995 with the
-    * 16×16 defaults, and DETERMINISTIC given the fixed seed (the
+    * 16×16 bands, and DETERMINISTIC given the fixed seed (the
     * equality spec vs [[cosinePairsAbove]] pins the realized recall
     * at 100%).
     *
@@ -220,9 +242,8 @@ object KnnJoin {
     * `bands` longs per vector; skewed signature buckets (mass dup
     * clusters) are bounded upstream by exact dedup first. */
   def cosinePairsAboveBanded(spark: SparkSession, vectors: DataFrame,
-                             threshold: Double, bands: Int = 16,
-                             bitsPerBand: Int = 16, seed: Long = 42L): DataFrame = {
-    val cands = srpCandidates(spark, vectors, bands, bitsPerBand, seed)
+                             threshold: Double): DataFrame = {
+    val cands = srpCandidates(spark, vectors)
     // exact rerank: same fold order and same divide-by-norm-product
     // arithmetic as the all-pairs twin and the DuckDB oracle
     val va = vectors.select(col("vec_id").as("a_id"),
@@ -240,11 +261,11 @@ object KnnJoin {
   /** The LSH candidate stage of [[cosinePairsAboveBanded]]: distinct
     * (a_id < b_id) pairs agreeing on at least one full band. Exposed
     * so specs can pin candidate sparsity (candidates ≪ n²/2). */
-  private[graft] def srpCandidates(spark: SparkSession, vectors: DataFrame,
-                                   bands: Int, bitsPerBand: Int,
-                                   seed: Long): DataFrame = {
+  private[graft] def srpCandidates(spark: SparkSession,
+                                   vectors: DataFrame): DataFrame = {
     import spark.implicits._
-    require(bitsPerBand < 64, "band signature must pack into a long")
+    val bands = SrpBands
+    val bitsPerBand = SrpBitsPerBand
     val nBits = bands * bitsPerBand
     val sigRows = vectors
       .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -252,7 +273,7 @@ object KnnJoin {
       .mapPartitions { it =>
         var planes: Array[Array[Double]] = null // built once per partition
         it.flatMap { case (id, vec) =>
-          if (planes == null) planes = srpPlanes(seed, nBits, vec.length)
+          if (planes == null) planes = srpPlanes(nBits, vec.length)
           val bandVals = new Array[Long](bands)
           var j = 0
           while (j < nBits) {
@@ -274,13 +295,52 @@ object KnnJoin {
       .select(col("a_id"), col("b_id")).distinct()
   }
 
+  /** A trained IVF index: the coarse quantizer's centroids
+    * (centroid_id, embedding) and its inverted lists, one
+    * (vec_id, centroid_id) assignment per indexed vector. */
+  final case class IvfIndex(centroids: DataFrame, assignments: DataFrame)
+
+  /** A trained PQ index: the per-subspace codebook (s, cid, cv) and
+    * the compressed index, one (vec_id, s, cid) code row per indexed
+    * vector and subspace. */
+  final case class PqIndex(codebook: DataFrame, codes: DataFrame)
+
+  private def doubles(vectors: DataFrame): DataFrame =
+    vectors.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))
+
+  /** Train an IVF index over `vectors` — the FAISS `train` + `add`
+    * split from `search`: `nlist` centroids ([[resolveNlist]]: `None`
+    * is ⌈√n⌉), then every vector's nearest-centroid assignment. The
+    * index is a plain pair of frames, so it persists to parquet and
+    * reloads into an [[IvfIndex]] (spec-pinned round-trip). */
+  def ivfIndex(spark: SparkSession, vectors: DataFrame,
+               nlist: Option[Int]): IvfIndex = {
+    val v = doubles(vectors)
+    val centroids = ivfCentroids(spark, v, resolveNlist(nlist, v))
+    IvfIndex(centroids, nearestCentroids(spark, v, centroids, 1))
+  }
+
+  /** [[ivfIndex]] as a session artifact: built once per (`key`,
+    * `nlist`) and served to every later caller — the reference trains
+    * its quantizer once per session. `nlist` is part of the memo key,
+    * so an auto index and a pinned one never serve each other. Both
+    * frames are lazy: an unread assignment relation is never
+    * computed. */
+  def ivfIndexArtifact(spark: SparkSession, key: String, vectors: => DataFrame,
+                       nlist: Option[Int]): IvfIndex = {
+    val id = s"$key:${nlist.fold("auto")(_.toString)}"
+    lazy val v = doubles(vectors)
+    val centroids = graft.core.Artifacts.memo(spark, s"ivf_centroids:$id")(
+      ivfCentroids(spark, v, resolveNlist(nlist, v)))
+    IvfIndex(centroids, graft.core.Artifacts.memo(spark, s"ivf_assign:$id")(
+      nearestCentroids(spark, v, centroids, 1)))
+  }
+
   /** IVF-style approximate kNN (builder brief: "IVF or LSH-bucketed
-    * variant as the scale path"): a coarse quantizer of `nCentroids`
-    * centroids — a deterministic hash-order sample of the index,
-    * refined by `lloydIters` seeded Lloyd (k-means) iterations —
-    * partitions the index into inverted lists; each query probes its
-    * `nProbe` nearest centroids and reranks exactly within those
-    * lists only.
+    * variant as the scale path"): the [[IvfIndex]] partitions the
+    * index into inverted lists; each query probes its `NProbe`
+    * nearest centroids and reranks exactly within those lists only.
     *
     * Every stage is deterministic AND replayable in SQL, k-means
     * included: assignment tie-breaks are (dot desc, centroid id asc)
@@ -297,36 +357,36 @@ object KnnJoin {
     * lists stay bounded (centroid count scales with √N as usual).
     */
   def approxIvf(spark: SparkSession, queries: DataFrame, index: DataFrame,
-                k: Int, nCentroids: Int = 0, nProbe: Int = 4,
-                seed: String = "42", lloydIters: Int = 2,
-                centroidsOpt: Option[DataFrame] = None,
-                assignmentsOpt: Option[DataFrame] = None): DataFrame = {
-    // `centroidsOpt`/`assignmentsOpt` let callers pass a PREBUILT
-    // coarse index (e.g. the session artifact the pack registers) —
-    // the FAISS discipline of training the quantizer once and serving
-    // every search from it; both stages are deterministic, so a
-    // prebuilt frame is bitwise-identical to building inline
-    val centroids = centroidsOpt.getOrElse(
-      ivfCentroids(spark, index, resolveNlist(nCentroids, index), seed,
-        lloydIters))
-    // inverted lists: every index vector → nearest centroid
-    val assignments = assignmentsOpt.getOrElse(
-      nearestCentroids(spark, index, centroids, 1))
-    val lists = index.join(assignments, Seq("vec_id"))
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb"))
-    // probe: each query → its nProbe nearest centroids
-    val probes = nearestCentroids(spark, queries, centroids, nProbe)
-      .withColumnRenamed("vec_id", "query_id")
+                ivf: IvfIndex, k: Int): DataFrame =
+    rerank(probedLists(spark, queries, ivf), queries, index, k)
+
+  /** (query_id, neighbor_id) candidates the coarse quantizer admits:
+    * every vector in the query's `NProbe` nearest inverted lists, the
+    * query itself excluded. Each pair appears once (a vector sits in
+    * exactly one list). */
+  private def probedLists(spark: SparkSession, queries: DataFrame,
+                          ivf: IvfIndex): DataFrame =
+    nearestCentroids(spark, queries, ivf.centroids, NProbe)
+      .select(col("vec_id").as("query_id"), col("centroid_id"))
+      .join(ivf.assignments.select(col("vec_id").as("neighbor_id"),
+        col("centroid_id")), Seq("centroid_id"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"))
+
+  /** Exact rerank of a (query_id, neighbor_id) candidate relation —
+    * the last stage of every approximate search: full-precision dot
+    * per pair, top-k by (sim desc, neighbor_id asc). No broadcast
+    * hints: q and n are the full query/index relations (unbounded at
+    * corpus scale) — AQE broadcasts when they fit. */
+  private def rerank(cand: DataFrame, queries: DataFrame, index: DataFrame,
+                     k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"))
-    // candidates = union of probed lists; exact rerank within them
+      col("embedding").cast("array<double>").as("q_emb"))
+    val n = index.select(col("vec_id").as("neighbor_id"),
+      col("embedding").cast("array<double>").as("n_emb"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
-    probes
-      .join(lists, Seq("centroid_id"))
-      .join(q, Seq("query_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    cand.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
       .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -334,45 +394,36 @@ object KnnJoin {
         col("neighbor_id"), col("sim"))
   }
 
-  /** nlist resolution for the IVF family: an explicit positive value
-    * is honored verbatim; the 0/negative "auto" default applies the
-    * measured nlist ∝ √n rule (PERF.md round 6 — fixed 16 lists left
+  /** nlist resolution for the IVF family: an explicit value is
+    * honored verbatim; `None` applies the measured FAISS nlist ∝ √n
+    * rule (v19's index; PERF.md round 6 — fixed 16 lists left
     * inverted lists of n/16 vectors, degrading the probe-side rerank
-    * quadratically at 10× data; ⌈√n⌉ lists keep both the centroid
-    * scan and the probed-list rerank at O(√n) per query). Costs one
-    * `count()` of the index, and only on the auto path — prebuilt
-    * centroid artifacts and pinned oracle params never reach it. */
-  /** nlist resolution: explicit, or the FAISS ⌈√n⌉ rule (v19's
-    * default). Expected slopes under √n lists, measured at
-    * 1×/10×/30× (PERF.md round-11 table):
-    * the Lloyd build is O(iters·n·nlist) = O(n^1.5) but runs ONCE per
-    * session (index artifact — every downstream query amortizes it;
-    * measured 4.5→7.2 s from 2k to 60k vectors, still
-    * overhead-dominated); per-query probe cost is O(nProbe·n/nlist) =
-    * O(√n), so a SELF-join search is O(n^1.5) asymptotically
-    * (measured 2.1→14.7 s = 7× at 30× data). A fixed nlist instead
-    * makes per-query cost O(n) — the v10/v13 pinned contrast. */
-  private[graft] def resolveNlist(nCentroids: Int, index: DataFrame): Int =
-    if (nCentroids > 0) nCentroids
-    else math.max(1, math.ceil(math.sqrt(index.count().toDouble)).toInt)
+    * quadratically at 10× data). Costs one `count()` of the index,
+    * and only on the auto path. Expected slopes under √n lists,
+    * measured at 1×/10×/30× (PERF.md round-11 table): the Lloyd build
+    * is O(iters·n·nlist) = O(n^1.5) but runs ONCE per session (index
+    * artifact — every downstream query amortizes it; measured
+    * 4.5→7.2 s from 2k to 60k vectors, still overhead-dominated);
+    * per-query probe cost is O(nProbe·n/nlist) = O(√n), so a
+    * SELF-join search is O(n^1.5) asymptotically (measured
+    * 2.1→14.7 s = 7× at 30× data). A fixed nlist instead makes
+    * per-query cost O(n) — the v10/v13 pinned contrast. */
+  private[graft] def resolveNlist(nlist: Option[Int], index: DataFrame): Int =
+    nlist.getOrElse(
+      math.max(1, math.ceil(math.sqrt(index.count().toDouble)).toInt))
 
-  /** The coarse quantizer of [[approxIvf]]/[[approxIvfPq]]: a
-    * deterministic md5-ordered sample of `nCentroids` index vectors,
-    * refined by `lloydIters` Lloyd iterations whose per-dimension
-    * means sum through exact decimals (order-independent) — bitwise
-    * reproducible on any partitioning, replayable in SQL. */
-  // public: index TRAINING is caller-facing API (the FAISS `train`
-  // analog) — a built centroid frame is a persistable artifact that
-  // reloads from parquet into `centroidsOpt` (spec-pinned round-trip)
-  def ivfCentroids(spark: SparkSession, index: DataFrame,
-                                   nCentroids: Int, seed: String,
-                                   lloydIters: Int): DataFrame = {
+  /** The coarse quantizer of [[ivfIndex]]: a deterministic md5-ordered
+    * sample of `nCentroids` index vectors, refined by `LloydIters`
+    * Lloyd iterations whose per-dimension means sum through exact
+    * decimals (order-independent) — bitwise reproducible on any
+    * partitioning, replayable in SQL. `vecs` is (vec_id, double
+    * embedding). */
+  private def ivfCentroids(spark: SparkSession, vecs: DataFrame,
+                           nCentroids: Int): DataFrame = {
     import graft.sample.Sampling
-    val vecs = index
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    var centroids = Sampling.fixedSample(vecs, nCentroids, col("vec_id"), seed)
+    var centroids = Sampling.fixedSample(vecs, nCentroids, col("vec_id"), Seed)
       .select(col("vec_id").as("centroid_id"), col("embedding"))
-    for (_ <- 0 until lloydIters) {
+    for (_ <- 0 until LloydIters) {
       val asg = nearestCentroids(spark, vecs, centroids, 1)
       centroids = vecs.join(asg, Seq("vec_id"))
         .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("d", "x")))
@@ -413,7 +464,7 @@ object KnnJoin {
     * same centroids (assignment is per-row independent and
     * deterministic; spec-pinned, and the v25 oracle replays the
     * incremental assignment from scratch in SQL). The amortized-build
-    * story this completes: [[ivfCentroids]] is the once-per-corpus
+    * story this completes: [[ivfIndex]] is the once-per-corpus
     * O(n·√n) cost (PERF.md round-11 ivfsplit attribution); with this
     * path it amortizes across the index's LIFETIME, not one session.
     * Retrain is a measured decision, not a schedule —
@@ -449,10 +500,10 @@ object KnnJoin {
     * threshold audit (`Lifecycles.thresholdAudit`, the p05 one-sided
     * pattern): the build-time residual p95 is the published design
     * point; the live batch's residual p95 is re-measured through the
-    * bounded-state histogram sketch (≤`bins` rows through the shuffle,
+    * bounded-state histogram sketch (≤`DriftBins` rows through the shuffle,
     * nothing sorts the residual relation); `recalibrate` fires ONE-
     * SIDED when the live p95 exceeds the published p95 by more than
-    * the `marginFrac` engineering margin plus BOTH sketches' error
+    * the `DriftMargin` engineering margin plus BOTH sketches' error
     * bounds — residual GROWTH past the margin means the frozen
     * centroids no longer cover the live distribution and per-query
     * probe quality is provably below the design point. Shrinking
@@ -470,22 +521,19 @@ object KnnJoin {
     * (metric, q, est, bin_width, published, published_bin_width,
     * recalibrate). */
   def centroidDriftAudit(buildResiduals: DataFrame,
-                         liveResiduals: DataFrame,
-                         bins: Int = 1000,
-                         prob: Double = 0.95,
-                         marginFrac: Double = 0.1): DataFrame = {
+                         liveResiduals: DataFrame): DataFrame = {
     import graft.core.Sketches
     val pub = Sketches.histogramQuantilesWithWidth(
-        buildResiduals, col("residual"), bins, Seq(prob))
+        buildResiduals, col("residual"), DriftBins, Seq(DriftProb))
       .select(col("est").as("published"),
         col("bin_width").as("published_bin_width"))
     Sketches.histogramQuantilesWithWidth(
-        liveResiduals, col("residual"), bins, Seq(prob))
+        liveResiduals, col("residual"), DriftBins, Seq(DriftProb))
       .crossJoin(broadcast(pub))
-      .select(lit(s"residual_p${math.round(prob * 100)}").as("metric"),
+      .select(lit(s"residual_p${math.round(DriftProb * 100)}").as("metric"),
         col("q"), col("est"), col("bin_width"), col("published"),
         col("published_bin_width"),
-        (col("est") > col("published") * lit(1.0 + marginFrac)
+        (col("est") > col("published") * lit(1.0 + DriftMargin)
           + col("bin_width")
           + col("published_bin_width")).cast("long").as("recalibrate"))
   }
@@ -493,7 +541,7 @@ object KnnJoin {
   /** Product-quantization approximate kNN (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search"): the 100 TB
     * INDEX-COMPRESSION member of the ladder — vectors quantize to
-    * `m` sub-codes (nearest per-subspace centroid by L2), so the
+    * `PqM` sub-codes (nearest per-subspace centroid by L2), so the
     * searchable index is m small integers per vector instead of the
     * raw floats (64 dims × 8 B → 4 codes here: 128× smaller), and
     * query scoring is table lookups (asymmetric distance: the sum of
@@ -504,12 +552,12 @@ object KnnJoin {
     * Lloyd refinement through exact-decimal means, (dist asc, cid
     * asc) assignment tie-breaks, fixed-order sum of the m lookup
     * terms, (approx desc, id asc) candidate rank, exact rerank of the
-    * top `nCandidates`. The quantization stages are relational so the
-    * v12 oracle replays them; the candidate scan runs in the
-    * production shape — broadcast per-query lookup tables over a
-    * per-partition packed-code scan (the exact operator's broadcast
-    * shape with 128× less index memory). The LUT broadcast is bounded by
-    * Q·m·centroids doubles (~0.5 MB per 1k queries at the defaults);
+    * top `PqCandidates`. The quantization stages ([[pqIndex]]) are
+    * relational so the v12 oracle replays them; the candidate scan
+    * runs in the production shape — broadcast per-query lookup tables
+    * over a per-partition packed-code scan (the exact operator's
+    * broadcast shape with 128× less index memory). The LUT broadcast
+    * is bounded by Q·m·centroids doubles (~0.5 MB per 1k queries);
     * query sets past `queryChunk` split into successive searches —
     * one LUT broadcast and one code scan per chunk, results unioned —
     * so neither the driver collects nor the broadcast ever exceeds the
@@ -521,21 +569,10 @@ object KnnJoin {
     * output is bitwise-independent of the chunk size (spec-asserted).
     */
   def approxPq(spark: SparkSession, queries: DataFrame, index: DataFrame,
-               k: Int, m: Int = 4, subDim: Int = 16, centroidsPerSub: Int = 16,
-               nCandidates: Int = 30, seed: String = "42",
-               queryChunk: Int = 8192,
-               centsOpt: Option[DataFrame] = None,
-               codesOpt: Option[DataFrame] = None): DataFrame = {
+               pq: PqIndex, k: Int, queryChunk: Int = 8192): DataFrame = {
     require(queryChunk > 0, "queryChunk must be positive")
-    // prebuilt codebook/codes (the session artifact tier — FAISS
-    // trains its quantizer once) are bitwise-identical to inline
-    // construction: every stage is deterministic
-    val cents = centsOpt.getOrElse(
-      pqCodebook(index, m, subDim, centroidsPerSub, seed))
-    val codes = codesOpt.getOrElse(pqCodes(index, cents, m, subDim))
-    val qdots = pqLuts(queries, cents, m, subDim)
-    val qv = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast("array<double>").as("qv"))
+    val qdots = pqLuts(queries, pq.codebook)
+    val qv = queries.select(col("vec_id").as("qid"))
     // asymmetric scoring in the PRODUCTION shape the PQ paper implies:
     // per-query lookup tables (Q·centroids·m dots — ~1 MB/1k queries)
     // broadcast once, then each partition scans its PACKED CODE rows
@@ -545,13 +582,13 @@ object KnnJoin {
     // TopK's total order (score desc, id asc) in both phases, so the
     // candidate set — and the oracle hash — match the declarative
     // window form exactly.
-    val aggs = (1 until m).map(s => max(when(col("s") === s, col("cid"))).as(s"c$s"))
-    val codesWide = codes.groupBy(col("vec_id"))
+    val aggs = (1 until PqM).map(s => max(when(col("s") === s, col("cid"))).as(s"c$s"))
+    val codesWide = pq.codes.groupBy(col("vec_id"))
       .agg(max(when(col("s") === 0, col("cid"))).as("c0"), aggs: _*)
     val cand = {
       import spark.implicits._
-      val nc = nCandidates
-      val mm = m
+      val nc = PqCandidates
+      val mm = PqM
       // chunk membership is HASH(qid) % nChunks — a hash, not the raw
       // id, because an id space with a common stride sharing a factor
       // with nChunks would collapse most queries into one chunk and
@@ -562,10 +599,10 @@ object KnnJoin {
       // are disjoint and cover every query, and per-query heaps are
       // independent, so the union below is chunk-layout-invariant
       // (the spec pins chunked ≡ unchunked bitwise).
-      val totalQ = qv.select(col("qid")).count()
+      val totalQ = qv.count()
       val nChunks = math.max(1, math.ceil(totalQ.toDouble / queryChunk).toInt)
       val codesArr = codesWide
-        .select(col("vec_id"), array((0 until m).map(s => col(s"c$s")): _*).as("cs"))
+        .select(col("vec_id"), array((0 until PqM).map(s => col(s"c$s")): _*).as("cs"))
         .as[(Long, Seq[Long])]
         .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
       // several chunks scan the code rows several times — cache them
@@ -585,10 +622,10 @@ object KnnJoin {
         val member =
           pmod(hash(col("qid")).cast("long"), lit(nChunks.toLong)) === ci.toLong
         val qids: Array[Long] =
-          qv.select(col("qid")).filter(member).as[Long].collect().sorted
+          qv.filter(member).as[Long].collect().sorted
         val qIdx = qids.zipWithIndex.toMap
         val luts: Array[Map[Long, Array[Double]]] = {
-          val acc = Array.fill(m)(scala.collection.mutable.HashMap.empty[Long, Array[Double]])
+          val acc = Array.fill(PqM)(scala.collection.mutable.HashMap.empty[Long, Array[Double]])
           qdotsTyped.filter(member).collect()
             .foreach { case (s, cid, qid, qd) =>
               acc(s).getOrElseUpdate(cid, new Array[Double](qids.length))(qIdx(qid)) = qd
@@ -627,27 +664,16 @@ object KnnJoin {
             (0 until top.size).map(r => (q, top.ids(r)))
           }
         }
-        .toDF("qid", "vec_id")
+        .toDF("query_id", "neighbor_id")
     }
-    // exact rerank of the candidate set only
-    val nv = index.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("nv"))
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    cand.join(qv, Seq("qid")).join(nv, Seq("vec_id"))
-      .withColumn("sim", VectorOps.dot(col("qv"), col("nv")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), col("sim"))
+    rerank(cand, queries, index, k)
   }
 
   /** Per-subspace slicing: (id, s, subvector) rows — the PQ family's
     * shared projection. */
-  private def pqSubspaces(df: DataFrame, idAs: String, xAs: String,
-                          m: Int, subDim: Int): DataFrame =
-    df.select(col(df.columns.head).as(idAs), posexplode(array((0 until m).map(s =>
-        slice(col(df.columns(1)), s * subDim + 1, subDim)): _*))
+  private def pqSubspaces(df: DataFrame, idAs: String, xAs: String): DataFrame =
+    df.select(col(df.columns.head).as(idAs), posexplode(array((0 until PqM).map(s =>
+        slice(col(df.columns(1)), s * PqSubDim + 1, PqSubDim)): _*))
       .as(Seq("s", xAs)))
 
   /** Nearest-subspace-centroid assignment (L2, ties (dist asc, cid
@@ -663,13 +689,20 @@ object KnnJoin {
       .select(col("vec_id"), col("s"), col("cid"))
   }
 
-  /** PQ codebook construction shared by [[approxPq]] and
-    * [[approxIvfPq]]: per-subspace md5-ordered seed sample, ONE Lloyd
-    * refinement through exact-decimal means — the (s, cid, cv)
-    * relation. Deterministic and SQL-replayable, so a session can
-    * build it once (the artifact tier) and serve every PQ search. */
-  private[vector] def pqCodebook(index: DataFrame, m: Int, subDim: Int,
-                                 centroidsPerSub: Int, seed: String): DataFrame = {
+  /** Train a PQ index over `index` — the FAISS `train` + `add` of
+    * [[approxPq]]/[[approxIvfPq]]: the codebook, then every vector's
+    * `PqM` codes. */
+  def pqIndex(index: DataFrame): PqIndex = {
+    val codebook = pqCodebook(index)
+    PqIndex(codebook, pqCodes(index, codebook))
+  }
+
+  /** PQ codebook construction: per-subspace md5-ordered seed sample,
+    * ONE Lloyd refinement through exact-decimal means — the
+    * (s, cid, cv) relation. Deterministic and SQL-replayable, so a
+    * session can build it once (the artifact tier) and serve every PQ
+    * search. */
+  private[vector] def pqCodebook(index: DataFrame): DataFrame = {
     val v = index.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     // silent dimension mismatch would slice() into truncated or empty
@@ -680,21 +713,21 @@ object KnnJoin {
     // the extra scan amortizes with the codebook itself.
     v.agg(min(size(col("v"))).as("lo"), max(size(col("v"))).as("hi"))
       .collect().headOption.filterNot(_.isNullAt(0)).foreach { r =>
-        require(r.getInt(0) == m * subDim && r.getInt(1) == m * subDim,
+        require(r.getInt(0) == PqM * PqSubDim && r.getInt(1) == PqM * PqSubDim,
           s"embedding dims [${r.getInt(0)}, ${r.getInt(1)}] must all equal " +
-            s"m*subDim = ${m * subDim}")
+            s"m*subDim = ${PqM * PqSubDim}")
       }
-    val sub = pqSubspaces(v, "vec_id", "x", m, subDim)
+    val sub = pqSubspaces(v, "vec_id", "x")
     val wSeed = Window.partitionBy(col("s")).orderBy(
-      md5(concat_ws("_", lit(seed), col("s"), col("vec_id"))), col("vec_id"))
+      md5(concat_ws("_", lit(Seed), col("s"), col("vec_id"))), col("vec_id"))
     val seeds = sub.withColumn("rn", row_number().over(wSeed))
-      .filter(col("rn") <= centroidsPerSub)
+      .filter(col("rn") <= PqCentroids)
       .select(col("s"), col("vec_id").as("cid"), col("x").as("cv"))
     // one Lloyd refinement: seed assignment → exact-decimal means.
     // The codebook is consumed by the code assignment AND the query
     // LUT, each reached by several downstream actions (LUT collect,
-    // code scan, rerank) — cache the m×centroidsPerSub-row result so
-    // the refinement chain runs once per query, not per action.
+    // code scan, rerank) — cache the m×centroids-row result so the
+    // refinement chain runs once per query, not per action.
     graft.core.Caches.transient(
       sub.join(pqAssign(sub, seeds), Seq("vec_id", "s"))
         .select(col("s"), col("cid"), posexplode(col("x")).as(Seq("d", "xd")))
@@ -708,39 +741,36 @@ object KnnJoin {
 
   /** The compressed index: one (vec_id, s, cid) code row per index
     * vector and subspace — m small integers replacing the raw floats. */
-  private[vector] def pqCodes(index: DataFrame, cents: DataFrame,
-                              m: Int, subDim: Int): DataFrame = {
+  private[vector] def pqCodes(index: DataFrame, cents: DataFrame): DataFrame = {
     val v = index.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    pqAssign(pqSubspaces(v, "vec_id", "x", m, subDim), cents)
+    pqAssign(pqSubspaces(v, "vec_id", "x"), cents)
   }
 
   /** Query-side lookup relation: (qid, s, cid, qd) with qd the
     * query-subvector · centroid dot — the asymmetric-distance terms. */
-  private[vector] def pqLuts(queries: DataFrame, cents: DataFrame,
-                             m: Int, subDim: Int): DataFrame = {
+  private def pqLuts(queries: DataFrame, cents: DataFrame): DataFrame = {
     val qv = queries.select(col("vec_id").as("qid"),
       col("embedding").cast("array<double>").as("qv"))
-    pqSubspaces(qv, "qid", "qx", m, subDim).join(broadcast(cents), Seq("s"))
+    pqSubspaces(qv, "qid", "qx").join(broadcast(cents), Seq("s"))
       .select(col("qid"), col("s"), col("cid"),
         VectorOps.dot(col("qx"), col("cv")).as("qd"))
   }
 
   /** IVF-PQ composition — the FAISS production shape (`IndexIVFPQ`):
-    * the coarse quantizer prunes the search to `nProbe` inverted
+    * the coarse quantizer prunes the search to `NProbe` inverted
     * lists, and within the probed lists candidates are scored from PQ
     * codes (asymmetric lookup sums), not full-dimension dots; the top
-    * `nCandidates` get the exact rerank (the `IndexRefineFlat` step —
-    * its default refine factor is deliberately larger than
-    * [[approxPq]]'s cut, because PQ's 4-subspace scores are coarse and
-    * pruning hard inside an already-pruned probe pool compounds the
-    * two approximations' misses). Both halves are the engine's
-    * existing deterministic parts ([[ivfCentroids]]/[[nearestCentroids]]
-    * + [[pqCodebook]]/[[pqCodes]]/[[pqLuts]]), so the whole pipeline replays in SQL and
-    * v13 runs under the full oracle like v10/v12. Codes quantize RAW
-    * vectors (FAISS `by_residual=false`), which keeps the query LUT
-    * list-independent: one (qid, s, cid) relation serves every probed
-    * list.
+    * `IvfCandidates` get the exact rerank (the `IndexRefineFlat` step
+    * — its refine factor is deliberately larger than [[approxPq]]'s
+    * cut, because PQ's 4-subspace scores are coarse and pruning hard
+    * inside an already-pruned probe pool compounds the two
+    * approximations' misses). Both halves are the engine's existing
+    * deterministic parts ([[IvfIndex]] + [[PqIndex]]/[[pqLuts]]), so
+    * the whole pipeline replays in SQL and v13 runs under the full
+    * oracle like v10/v12. Codes quantize RAW vectors (FAISS
+    * `by_residual=false`), which keeps the query LUT list-independent:
+    * one (qid, s, cid) relation serves every probed list.
     *
     * Scale shape: the candidate join shuffles on centroid id (index
     * never broadcast, lists bound executor memory like IVF) and
@@ -748,38 +778,15 @@ object KnnJoin {
     * the posture for indexes that outgrow both [[Exact]]'s broadcast
     * and [[approxPq]]'s full-index code scan per query chunk. */
   def approxIvfPq(spark: SparkSession, queries: DataFrame, index: DataFrame,
-                  k: Int, nCentroids: Int = 0, nProbe: Int = 4,
-                  m: Int = 4, subDim: Int = 16, centroidsPerSub: Int = 16,
-                  nCandidates: Int = 100, seed: String = "42",
-                  lloydIters: Int = 2,
-                  centroidsOpt: Option[DataFrame] = None,
-                  assignmentsOpt: Option[DataFrame] = None,
-                  centsOpt: Option[DataFrame] = None,
-                  codesOpt: Option[DataFrame] = None): DataFrame = {
-    val centroids = centroidsOpt.getOrElse(
-      ivfCentroids(spark, index, resolveNlist(nCentroids, index), seed,
-        lloydIters))
-    val assignments = assignmentsOpt.getOrElse(
-      nearestCentroids(spark, index, centroids, 1))
-    val probes = nearestCentroids(spark, queries, centroids, nProbe)
-      .withColumnRenamed("vec_id", "query_id")
-    val cents = centsOpt.getOrElse(
-      pqCodebook(index, m, subDim, centroidsPerSub, seed))
-    val codes = codesOpt.getOrElse(pqCodes(index, cents, m, subDim))
-    val qdots = pqLuts(queries, cents, m, subDim)
-    // probed-list membership: (query, candidate) pairs the coarse
-    // quantizer admits — the PQ scan below never sees other lists
-    val pl = probes.join(
-        assignments.select(col("vec_id").as("neighbor_id"), col("centroid_id")),
-        Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
+                  ivf: IvfIndex, pq: PqIndex, k: Int): DataFrame = {
+    val qdots = pqLuts(queries, pq.codebook)
     // asymmetric score: the m lookup terms summed in FIXED subspace
     // order (same arithmetic as approxPq's scan and the SQL oracle)
-    val approxSum = (0 until m)
+    val approxSum = (0 until PqM)
       .map(s => max(when(col("s") === s, col("qd")))).reduce(_ + _)
-    val approx = pl
-      .join(codes.select(col("vec_id").as("neighbor_id"), col("s"), col("cid")),
+    // the PQ scan never sees a list the coarse quantizer did not admit
+    val approx = probedLists(spark, queries, ivf)
+      .join(pq.codes.select(col("vec_id").as("neighbor_id"), col("s"), col("cid")),
         Seq("neighbor_id"))
       .join(qdots.select(col("qid").as("query_id"), col("s"), col("cid"),
         col("qd")), Seq("query_id", "s", "cid"))
@@ -788,21 +795,9 @@ object KnnJoin {
     val wCand = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_ip").desc, col("neighbor_id"))
     val cand = approx.withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= nCandidates)
+      .filter(col("crn") <= IvfCandidates)
       .select(col("query_id"), col("neighbor_id"))
-    // exact rerank of the admitted candidates only
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("q_emb"))
-    val nv = index.select(col("vec_id").as("neighbor_id"),
-      col("embedding").cast("array<double>").as("n_emb"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    cand.join(q, Seq("query_id")).join(nv, Seq("neighbor_id"))
-      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"))
+    rerank(cand, queries, index, k)
   }
 
   /** Per-dimension [lo, hi] quantization bounds for [[approxSq8]]:
@@ -822,23 +817,6 @@ object KnnJoin {
         transform(col("los"), s => s.getField("lo")).as("lo"),
         transform(col("his"), s => s.getField("hi")).as("hi"))
 
-  /** SQ8 approximate kNN — the scalar-quantization member of the
-    * index ladder (FAISS `IndexScalarQuantizer` QT_8bit; reference
-    * builds its FAISS flat indexes in `Neww_Fai.py`): every dimension
-    * linearly quantized to 8 bits against the train-time per-dimension
-    * [lo, hi], queries score FULL-precision against RECONSTRUCTED
-    * index vectors (asymmetric distance), and the top-`rerank`
-    * candidates per query re-rank on exact dot products. The stored
-    * index is one byte per dimension — 4× smaller than float32, 8×
-    * smaller than double — which at 100 TB is the difference between
-    * an index that fits executor memory and one that doesn't.
-    *
-    * Execution reuses the exact kNN operator (`knnJoin`) on the
-    * reconstructed vectors, so the approx pass costs exactly one
-    * map-side sweep (no Q×N materialization), and the rerank joins
-    * touch only Q·rerank candidate rows. Quantize → reconstruct →
-    * score is pure IEEE arithmetic (no transcendentals), so the whole
-    * pipeline replays bit-for-bit in the SQL oracle. */
   /** Quantize-and-reconstruct expression builder from a collected
     * stats frame (bounded: 2·dim doubles — the quantizer "model",
     * the same tier as the collected PQ codebook/LUT). Shared by the
@@ -861,84 +839,61 @@ object KnnJoin {
     }
   }
 
+  /** SQ8 approximate kNN — the scalar-quantization member of the
+    * index ladder (FAISS `IndexScalarQuantizer` QT_8bit; reference
+    * builds its FAISS flat indexes in `Neww_Fai.py`): every dimension
+    * linearly quantized to 8 bits against the train-time per-dimension
+    * [lo, hi] ([[sq8Stats]]), queries score FULL-precision against
+    * RECONSTRUCTED index vectors (asymmetric distance), and the top
+    * `Sq8Rerank` candidates per query re-rank on exact dot products.
+    * The stored index is one byte per dimension — 4× smaller than
+    * float32, 8× smaller than double — which at 100 TB is the
+    * difference between an index that fits executor memory and one
+    * that doesn't.
+    *
+    * Execution reuses the exact kNN operator (`knnJoin`) on the
+    * reconstructed vectors, so the approx pass costs exactly one
+    * map-side sweep (no Q×N materialization), and the rerank joins
+    * touch only Q·rerank candidate rows. Quantize → reconstruct →
+    * score is pure IEEE arithmetic (no transcendentals), so the whole
+    * pipeline replays bit-for-bit in the SQL oracle. */
   def approxSq8(spark: SparkSession, queries: DataFrame, index: DataFrame,
-                k: Int, rerank: Int = 20, excludeSelf: Boolean = true,
-                statsOpt: Option[DataFrame] = None): DataFrame = {
-    val xhatOf = sq8XhatFn(statsOpt.getOrElse(sq8Stats(index)))
+                stats: DataFrame, k: Int): DataFrame = {
+    val xhatOf = sq8XhatFn(stats)
     val recon = index.select(col("vec_id"),
       xhatOf(col("embedding").cast("array<double>")).as("embedding"))
-    val cands = knnJoin(spark, queries, recon, rerank, excludeSelf)
+    val cands = knnJoin(spark, queries, recon, Sq8Rerank, excludeSelf = true)
       .select(col("query_id"), col("neighbor_id"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("q_emb"))
-    val n = index.select(col("vec_id").as("neighbor_id"),
-      col("embedding").cast("array<double>").as("n_emb"),
-      col("label").as("n_label"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    // no broadcast hints: q and n are the full query/index relations
-    // (unbounded at corpus scale) — AQE broadcasts when they fit
-    cands.join(q, Seq("query_id"))
-      .join(n, Seq("neighbor_id"))
-      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"), col("n_label"))
+    rerank(cands, queries, index, k)
   }
 
   /** IVF-SQ8 composition (FAISS `IndexIVFScalarQuantizer` shape —
     * completing the index matrix: Flat / Sharded / IVF / PQ / IVF-PQ /
-    * SQ8 / IVF-SQ8): the coarse quantizer prunes to
-    * `nProbe` lists, SQ8-reconstructed vectors score ONLY within the
-    * probed lists (asymmetric — queries stay full-precision), and the
-    * top-`nCandidates` per query re-rank on exact dot products.
+    * SQ8 / IVF-SQ8): the coarse quantizer prunes to `NProbe` lists,
+    * SQ8-reconstructed vectors score ONLY within the probed lists
+    * (asymmetric — queries stay full-precision), and the top
+    * `IvfCandidates` per query re-rank on exact dot products.
     * The 10× scale measurement (PERF.md round 6) is the motivation:
     * flat SQ8's whole-corpus approx scan is quadratic in n; list
-    * pruning cuts it to nProbe/nCentroids of the corpus per query,
+    * pruning cuts it to nProbe/nlist of the corpus per query,
     * with the stored index at one byte per dimension. The candidate
     * join shuffles on centroid id; nothing broadcasts past the
     * bounded centroid set and the collected 2·dim stats. */
   def approxIvfSq8(spark: SparkSession, queries: DataFrame, index: DataFrame,
-                   k: Int, nCentroids: Int = 0, nProbe: Int = 4,
-                   nCandidates: Int = 100, seed: String = "42",
-                   lloydIters: Int = 2,
-                   centroidsOpt: Option[DataFrame] = None,
-                   assignmentsOpt: Option[DataFrame] = None,
-                   statsOpt: Option[DataFrame] = None): DataFrame = {
-    val centroids = centroidsOpt.getOrElse(
-      ivfCentroids(spark, index, resolveNlist(nCentroids, index), seed,
-        lloydIters))
-    val assignments = assignmentsOpt.getOrElse(
-      nearestCentroids(spark, index, centroids, 1))
-    val probes = nearestCentroids(spark, queries, centroids, nProbe)
-      .withColumnRenamed("vec_id", "query_id")
-    val xhatOf = sq8XhatFn(statsOpt.getOrElse(sq8Stats(index)))
+                   ivf: IvfIndex, stats: DataFrame, k: Int): DataFrame = {
+    val xhatOf = sq8XhatFn(stats)
     val recon = index.select(col("vec_id").as("neighbor_id"),
       xhatOf(col("embedding").cast("array<double>")).as("n_hat"))
-    val pl = probes.join(
-        assignments.select(col("vec_id").as("neighbor_id"), col("centroid_id")),
-        Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").cast("array<double>").as("q_emb"))
     val wCand = Window.partitionBy(col("query_id"))
       .orderBy(col("approx").desc, col("neighbor_id"))
-    val cand = pl.join(q, Seq("query_id")).join(recon, Seq("neighbor_id"))
+    val cand = probedLists(spark, queries, ivf)
+      .join(q, Seq("query_id")).join(recon, Seq("neighbor_id"))
       .withColumn("approx", VectorOps.dot(col("q_emb"), col("n_hat")))
       .withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= nCandidates)
+      .filter(col("crn") <= IvfCandidates)
       .select(col("query_id"), col("neighbor_id"))
-    val nv = index.select(col("vec_id").as("neighbor_id"),
-      col("embedding").cast("array<double>").as("n_emb"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    cand.join(q, Seq("query_id")).join(nv, Seq("neighbor_id"))
-      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"))
+    rerank(cand, queries, index, k)
   }
 }

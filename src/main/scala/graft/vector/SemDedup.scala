@@ -19,18 +19,19 @@ import org.apache.spark.sql.functions._
   * redundant documents whose text never overlaps.
   *
   * Every stage is deterministic and SQL-replayable, the IVF
-  * discipline: the coarse clustering IS [[KnnJoin.ivfCentroids]]
-  * (md5-ordered seed sample + Lloyd through exact-decimal means) and
-  * assignment is [[KnnJoin.nearestCentroids]]'s (dot desc, cid asc)
-  * argmax, so the d12 oracle replays the whole pipeline like v10.
+  * discipline: the clustering IS a trained [[KnnJoin.IvfIndex]]
+  * (md5-ordered seed sample + Lloyd through exact-decimal means, then
+  * the (dot desc, cid asc) argmax assignment), which the caller builds
+  * once with [[KnnJoin.ivfIndex]] or [[KnnJoin.ivfIndexArtifact]], so
+  * the d12 oracle replays the whole pipeline like v10.
   *
   * Scale shape (the paper's own design point): the pair join shuffles
   * on centroid id, so the pair space is Σ|cluster|² instead of n² —
-  * nClusters grows with the corpus (√N as usual) to bound per-cluster
-  * work, and clusters past the bound compose with the SRP-banded
-  * candidate stage ([[KnnJoin.cosinePairsAboveBanded]]) inside the
-  * cluster. No stage broadcasts the corpus: centroids are the only
-  * broadcast (nClusters rows), Lloyd iterations are linear scans with
+  * the list count grows with the corpus (the ⌈√n⌉ index, `nlist =
+  * None`) to bound per-cluster work, and clusters past the bound
+  * compose with the SRP-banded candidate stage
+  * ([[KnnJoin.cosinePairsAboveBanded]]) inside the cluster. No stage broadcasts the corpus: centroids are the only
+  * broadcast (one row per list), Lloyd iterations are linear scans with
   * bounded shuffles, and the within-cluster join carries (id, csim)
   * plus one embedding per side. Cross-cluster near-dup pairs are the
   * documented miss mode — identically in both engines, so determinism
@@ -38,31 +39,23 @@ import org.apache.spark.sql.functions._
   */
 object SemDedup {
 
-  /** Per-vector SemDeDup verdict over `vectors` (vec_id, embedding):
+  /** Per-vector SemDeDup verdict over `vectors` (vec_id, embedding)
+    * clustered by `ivf`, an index trained on the same vectors:
     * cluster assignment, cosine similarity to the assigned centroid,
     * and `kept` (0 when some same-cluster partner at cosine ≥ `tau`
     * sits FARTHER from the centroid — or equally far with a smaller
-    * id — making this row the pair's redundant member). */
+    * id — making this row the pair's redundant member). At a fixed
+    * list count the within-cluster pair space Σ|c|² is n²/k; the
+    * ⌈√n⌉ index makes it n^1.5 (the paper's own design point; the
+    * pinned 16-list index stays the oracle form). */
   def semDedup(spark: SparkSession, vectors: DataFrame, tau: Double,
-               nClusters: Int = 16, seed: String = "42",
-               lloydIters: Int = 2,
-               centroidsOpt: Option[DataFrame] = None,
-               assignmentsOpt: Option[DataFrame] = None): DataFrame = {
+               ivf: KnnJoin.IvfIndex): DataFrame = {
     val v = graft.core.Caches.transient(vectors
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")))
-    // nClusters <= 0 resolves to the FAISS/v19 auto-⌈√n⌉ rule — the
-    // CORPUS-SCALE default: at fixed k the within-cluster pair space
-    // Σ|c|² is n²/k, at √n clusters it is n^1.5 (the paper's own
-    // design point; the pinned k=16 stays the oracle form)
-    val centroids = centroidsOpt.getOrElse(
-      KnnJoin.ivfCentroids(spark, v,
-        KnnJoin.resolveNlist(nClusters, v), seed, lloydIters))
-    val asg = assignmentsOpt.getOrElse(
-      KnnJoin.nearestCentroids(spark, v, centroids, 1))
     // cosine to the assigned centroid — the keeper-selection key
-    val withC = graft.core.Caches.transient(asg
+    val withC = graft.core.Caches.transient(ivf.assignments
       .join(v, Seq("vec_id"))
-      .join(centroids.select(col("centroid_id"), col("embedding").as("cv")),
+      .join(ivf.centroids.select(col("centroid_id"), col("embedding").as("cv")),
         Seq("centroid_id"))
       .select(col("vec_id"), col("centroid_id"),
         (VectorOps.dot(col("embedding"), col("cv")) /
@@ -94,28 +87,6 @@ object SemDedup {
         when(col("rm").isNotNull, 0L).otherwise(1L).as("kept"))
   }
 
-  /** Session-artifact form of the coarse index over an arbitrary
-    * vector corpus (keyed by the caller's corpus key) — the same
-    * train-once discipline as the embeddings-table artifacts in
-    * `VectorPack`; both builds are deterministic, so consumers are
-    * bitwise-identical to inline construction. */
-  def ivfArtifacts(spark: SparkSession, key: String, vectors: => DataFrame,
-                   nClusters: Int = 16, seed: String = "42",
-                   lloydIters: Int = 2): (DataFrame, DataFrame) = {
-    def prep = vectors.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("embedding"))
-    // EVERY build parameter is part of the memo identity — an
-    // auto-⌈√n⌉ request, a different seed, or a different iteration
-    // count must never be served another build's frame
-    val id = s"$key:$nClusters:$seed:$lloydIters"
-    val cents = graft.core.Artifacts.memo(spark, s"ivf_centroids:$id")(
-      KnnJoin.ivfCentroids(spark, prep,
-        KnnJoin.resolveNlist(nClusters, prep), seed, lloydIters))
-    val asg = graft.core.Artifacts.memo(spark, s"ivf_assign:$id")(
-      KnnJoin.nearestCentroids(spark, prep, cents, 1))
-    (cents, asg)
-  }
-
   /** Contrastive TRIPLET mining — the training-pair generator for
     * embedding models (the DPR/SimCSE hard-negative recipe): each
     * near-duplicate pair (cos ≥ `tau`) yields an (anchor, positive);
@@ -124,20 +95,13 @@ object SemDedup {
     * misses train better margins than random negatives. Clustering
     * bounds the candidate space exactly as in [[semDedup]]: the pair
     * join shuffles on centroid id, never n². Deterministic and
-    * SQL-replayable via the same v10 chain. */
+    * SQL-replayable via the same v10 chain; `ivf` is trained on
+    * `vectors`. */
   def contrastiveTriplets(spark: SparkSession, vectors: DataFrame, tau: Double,
-                          nClusters: Int = 16, seed: String = "42",
-                          lloydIters: Int = 2,
-                          centroidsOpt: Option[DataFrame] = None,
-                          assignmentsOpt: Option[DataFrame] = None): DataFrame = {
+                          ivf: KnnJoin.IvfIndex): DataFrame = {
     val v = graft.core.Caches.transient(vectors
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")))
-    // nClusters <= 0 → auto-⌈√n⌉, as in [[semDedup]]
-    val centroids = centroidsOpt.getOrElse(
-      KnnJoin.ivfCentroids(spark, v,
-        KnnJoin.resolveNlist(nClusters, v), seed, lloydIters))
-    val asg = assignmentsOpt.getOrElse(
-      KnnJoin.nearestCentroids(spark, v, centroids, 1))
+    val asg = ivf.assignments
     val a = asg.select(col("centroid_id"), col("vec_id").as("anchor"))
     val b = asg.select(col("centroid_id"), col("vec_id").as("cand"))
     val va = v.select(col("vec_id").as("anchor"), col("embedding").as("av"))

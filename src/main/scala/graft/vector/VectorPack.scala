@@ -31,17 +31,10 @@ object VectorPack extends QueryPack {
   /** Session-scoped index-build artifacts — the FAISS discipline of
     * training a quantizer ONCE and serving every search from it.
     * Every build is deterministic (md5-ordered samples, exact-decimal
-    * Lloyd means), so consuming the artifact is bitwise-identical to
-    * building inline, and v10/v12/v13 stop re-training the same
-    * k-means three times per session. */
-  private[vector] def ivfCentroidsArtifact(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Artifacts.memo(spark, s"ivf_centroids:$dir")(
-      KnnJoin.ivfCentroids(spark, embCast(spark, dir), 16, "42", 2))
-
-  private[vector] def ivfAssignmentsArtifact(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Artifacts.memo(spark, s"ivf_assign:$dir")(
-      KnnJoin.nearestCentroids(spark, embCast(spark, dir),
-        ivfCentroidsArtifact(spark, dir), 1))
+    * Lloyd means), so v10/v13/v16/v22/v23 read one trained 16-list
+    * k-means instead of re-training it per query. */
+  private def ivf16(spark: SparkSession, dir: String): KnnJoin.IvfIndex =
+    KnnJoin.ivfIndexArtifact(spark, dir, embCast(spark, dir), Some(16))
 
   /** The incremental-maintenance fixture split (v25/v26): base =
     * vec_id % 5 ≠ 0 is the STORED index the centroids were trained on;
@@ -54,22 +47,24 @@ object VectorPack extends QueryPack {
     embCast(spark, dir).filter(pmod(col("vec_id"), lit(5L)) === 0)
 
   /** Centroids trained ONCE on the base split (pinned 16 lists like
-    * v10's artifact) — the frozen quantizer the incremental appends
+    * v10's index) — the frozen quantizer the incremental appends
     * assign against. */
-  private[vector] def ivfBaseCentroidsArtifact(spark: SparkSession,
-                                               dir: String): DataFrame =
-    graft.core.Artifacts.memo(spark, s"ivf_base_centroids:$dir")(
-      KnnJoin.ivfCentroids(spark, embBase(spark, dir), 16, "42", 2))
+  private def ivfBaseCentroids(spark: SparkSession, dir: String): DataFrame =
+    KnnJoin.ivfIndexArtifact(spark, s"base:$dir", embBase(spark, dir), Some(16))
+      .centroids
 
-  private[vector] def pqCodebookArtifact(spark: SparkSession, dir: String): DataFrame =
+  private def pqCodebookArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"pq_codebook:$dir")(
-      KnnJoin.pqCodebook(embCast(spark, dir), 4, 16, 16, "42"))
+      KnnJoin.pqCodebook(embCast(spark, dir)))
 
-  private[vector] def pqCodesArtifact(spark: SparkSession, dir: String): DataFrame =
+  private def pqCodesArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"pq_codes:$dir")(
-      KnnJoin.pqCodes(embCast(spark, dir), pqCodebookArtifact(spark, dir), 4, 16))
+      KnnJoin.pqCodes(embCast(spark, dir), pqCodebookArtifact(spark, dir)))
 
-  private[vector] def sq8StatsArtifact(spark: SparkSession, dir: String): DataFrame =
+  private def pqArtifact(spark: SparkSession, dir: String): KnnJoin.PqIndex =
+    KnnJoin.PqIndex(pqCodebookArtifact(spark, dir), pqCodesArtifact(spark, dir))
+
+  private def sq8StatsArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"sq8_stats:$dir")(
       KnnJoin.sq8Stats(embCast(spark, dir)))
 
@@ -246,9 +241,7 @@ object VectorPack extends QueryPack {
     * the exact variants (recall itself is asserted in IvfSpec). */
   def ivf(spark: SparkSession, dir: String): DataFrame =
     memoSearch(spark, dir, "ivf") { e =>
-      KnnJoin.approxIvf(spark, e, e, K,
-        centroidsOpt = Some(ivfCentroidsArtifact(spark, dir)),
-        assignmentsOpt = Some(ivfAssignmentsArtifact(spark, dir)))
+      KnnJoin.approxIvf(spark, e, e, ivf16(spark, dir), K)
     }
 
   /** PQ approximate kNN — like v10, "approximate" means recall vs
@@ -258,9 +251,7 @@ object VectorPack extends QueryPack {
     * oracle-checked; recall is asserted in PqSpec. */
   def pq(spark: SparkSession, dir: String): DataFrame =
     memoSearch(spark, dir, "pq") { e =>
-      KnnJoin.approxPq(spark, e, e, K,
-        centsOpt = Some(pqCodebookArtifact(spark, dir)),
-        codesOpt = Some(pqCodesArtifact(spark, dir)))
+      KnnJoin.approxPq(spark, e, e, pqArtifact(spark, dir), K)
     }
 
   /** IVF-PQ composition (FAISS `IndexIVFPQ` shape): coarse lists
@@ -269,11 +260,7 @@ object VectorPack extends QueryPack {
     * v10/v12; recall vs exact is asserted in the IvfPq spec. */
   def ivfPq(spark: SparkSession, dir: String): DataFrame =
     memoSearch(spark, dir, "ivfpq") { e =>
-      KnnJoin.approxIvfPq(spark, e, e, K,
-        centroidsOpt = Some(ivfCentroidsArtifact(spark, dir)),
-        assignmentsOpt = Some(ivfAssignmentsArtifact(spark, dir)),
-        centsOpt = Some(pqCodebookArtifact(spark, dir)),
-        codesOpt = Some(pqCodesArtifact(spark, dir)))
+      KnnJoin.approxIvfPq(spark, e, e, ivf16(spark, dir), pqArtifact(spark, dir), K)
     }
 
   /** v15: SQ8 scalar-quantized kNN — the 4×-compression member of the
@@ -285,8 +272,7 @@ object VectorPack extends QueryPack {
     * the Sq8 spec. */
   def sq8(spark: SparkSession, dir: String): DataFrame =
     memoSearch(spark, dir, "sq8") { e =>
-      KnnJoin.approxSq8(spark, e, e, K,
-        statsOpt = Some(sq8StatsArtifact(spark, dir)))
+      KnnJoin.approxSq8(spark, e, e, sq8StatsArtifact(spark, dir), K)
     }
 
   /** v16: IVF-SQ8 composition — coarse lists prune, SQ8-reconstructed
@@ -296,14 +282,13 @@ object VectorPack extends QueryPack {
     * oracle. */
   def ivfSq8(spark: SparkSession, dir: String): DataFrame =
     memoSearch(spark, dir, "ivfsq8") { e =>
-      KnnJoin.approxIvfSq8(spark, e, e, K,
-        centroidsOpt = Some(ivfCentroidsArtifact(spark, dir)),
-        assignmentsOpt = Some(ivfAssignmentsArtifact(spark, dir)),
-        statsOpt = Some(sq8StatsArtifact(spark, dir)))
+      KnnJoin.approxIvfSq8(spark, e, e, ivf16(spark, dir),
+        sq8StatsArtifact(spark, dir), K)
     }
 
-  /** v19: IVF with the AUTO list count (nCentroids unspecified →
-    * ⌈√n⌉, the measured FAISS sizing rule from the 10× run) — the
+  /** v19: IVF with the AUTO list count (`nlist = None` → ⌈√n⌉, the
+    * measured FAISS sizing rule from the 10× run), trained inside the
+    * query rather than as a session artifact — the
     * production configuration, under the same full-replay oracle as
     * v10 (the seed-sample LIMIT becomes a count subquery). v13/v10
     * keep their pinned small-corpus parameters; this query is the
@@ -312,7 +297,7 @@ object VectorPack extends QueryPack {
   def ivfAuto(spark: SparkSession, dir: String): DataFrame =
     memoSearch(spark, dir, "ivf_auto") { _ =>
       val e = embCast(spark, dir)
-      KnnJoin.approxIvf(spark, e, e, K)
+      KnnJoin.approxIvf(spark, e, e, KnnJoin.ivfIndex(spark, e, None), K)
     }
 
   /** v25: INCREMENTAL IVF index maintenance
@@ -329,7 +314,7 @@ object VectorPack extends QueryPack {
     * in VectorSpec). */
   def ivfIncremental(spark: SparkSession, dir: String): DataFrame =
     KnnJoin.assignmentResiduals(spark, embAppend(spark, dir),
-        ivfBaseCentroidsArtifact(spark, dir))
+        ivfBaseCentroids(spark, dir))
       .select(col("vec_id"), col("centroid_id"),
         round(col("residual"), 6).as("residual"))
       .orderBy(col("vec_id"))
@@ -345,7 +330,7 @@ object VectorPack extends QueryPack {
     * hash-checked answer is the quiet case; the spec plants a shifted
     * distribution and pins the trigger firing. */
   def ivfDrift(spark: SparkSession, dir: String): DataFrame = {
-    val cents = ivfBaseCentroidsArtifact(spark, dir)
+    val cents = ivfBaseCentroids(spark, dir)
     def res(df: DataFrame) =
       KnnJoin.assignmentResiduals(spark, df, cents)
         .select(round(col("residual"), 6).as("residual"))
@@ -412,9 +397,8 @@ object VectorPack extends QueryPack {
     * its size, corpus share, mean dot-product to the centroid (the
     * coherence number — low means a junk-drawer cluster), the modal
     * label, and that label's fraction (purity against the existing
-    * labeling). Consumes the SESSION quantizer artifacts
-    * ([[ivfCentroidsArtifact]]/[[ivfAssignmentsArtifact]]) — the same
-    * trained-once k-means v10/v13/d12 serve from, so the report is
+    * labeling). Consumes the SESSION quantizer artifact ([[ivf16]])
+    * — the same trained-once k-means v10/v13 serve from, so the report is
     * free of re-training and the oracle replays the identical Lloyd
     * chain. Scale shape: one broadcast join against the 16-row
     * centroid relation, per-row dots rounded at 9 decimals and
@@ -425,11 +409,12 @@ object VectorPack extends QueryPack {
     val emb = Tables(spark, dir).embeddingsSpread
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
-    val cent = ivfCentroidsArtifact(spark, dir)
+    val ivf = ivf16(spark, dir)
+    val cent = ivf.centroids
       .select(col("centroid_id"), col("embedding").as("cv"))
     val d = (c: org.apache.spark.sql.Column) => c.cast("double")
     val joined = graft.core.Caches.transient(
-      ivfAssignmentsArtifact(spark, dir).join(emb, Seq("vec_id"))
+      ivf.assignments.join(emb, Seq("vec_id"))
         .join(broadcast(cent), Seq("centroid_id"))
         .select(col("centroid_id"), col("label"),
           round(VectorOps.dot(col("v"), col("cv")), 9)
@@ -473,11 +458,12 @@ object VectorPack extends QueryPack {
   def prototypePruning(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddingsSpread
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cent = ivfCentroidsArtifact(spark, dir)
+    val ivf = ivf16(spark, dir)
+    val cent = ivf.centroids
       .select(col("centroid_id"), col("embedding").as("cv"))
     val d = (c: org.apache.spark.sql.Column) => c.cast("double")
     val joined = graft.core.Caches.transient(
-      ivfAssignmentsArtifact(spark, dir).join(emb, Seq("vec_id"))
+      ivf.assignments.join(emb, Seq("vec_id"))
         .join(broadcast(cent), Seq("centroid_id"))
         .select(col("vec_id"), col("centroid_id"),
           round(VectorOps.dot(col("v"), col("cv")), 9).as("dot")))
@@ -500,28 +486,25 @@ object VectorPack extends QueryPack {
     * similar same-cluster non-duplicate ([[SemDedup
     * .contrastiveTriplets]]). */
   def contrastive(spark: SparkSession, dir: String): DataFrame = {
-    val (cents, asg) = graft.dedup.DedupPack.augIvfArtifacts(spark, dir)
     SemDedup.contrastiveTriplets(spark,
         graft.dedup.DedupPack.augmentedVectors(spark, dir), 0.98,
-        centroidsOpt = Some(cents), assignmentsOpt = Some(asg))
+        graft.dedup.DedupPack.augIvfIndex(spark, dir))
       .orderBy(col("anchor"), col("pos_id"))
   }
 
   /** v24: the CORPUS-SCALE form of v14 — the same triplet mining with
-    * the auto-⌈√n⌉ quantizer (`nClusters = 0` resolves through
+    * the auto-⌈√n⌉ quantizer (`nlist = None` resolves through
     * [[KnnJoin.resolveNlist]], the v19 rule): at fixed k the
     * within-cluster pair space Σ|c|² is n²/k (v14's measured linear
     * slope at 10×); at ⌈√n⌉ clusters it is n^1.5 with O(√n) rows per
     * cluster — the SemDeDup paper's own design point. Pinned k=16
     * (v14) stays the oracle-contrast form, exactly the v19-beside-v10
-    * pattern; the artifacts memo keys on every build parameter, so the
-    * two quantizers never serve each other's frames. */
+    * pattern; [[KnnJoin.ivfIndexArtifact]] keys its memo on `nlist`,
+    * so the two quantizers never serve each other's frames. */
   def contrastiveAuto(spark: SparkSession, dir: String): DataFrame = {
-    val (cents, asg) = SemDedup.ivfArtifacts(spark, s"aug:$dir",
-      graft.dedup.DedupPack.augmentedVectors(spark, dir), nClusters = 0)
-    SemDedup.contrastiveTriplets(spark,
-        graft.dedup.DedupPack.augmentedVectors(spark, dir), 0.98,
-        nClusters = 0, centroidsOpt = Some(cents), assignmentsOpt = Some(asg))
+    val vecs = graft.dedup.DedupPack.augmentedVectors(spark, dir)
+    SemDedup.contrastiveTriplets(spark, vecs, 0.98,
+        KnnJoin.ivfIndexArtifact(spark, s"aug:$dir", vecs, None))
       .orderBy(col("anchor"), col("pos_id"))
   }
 
@@ -555,8 +538,8 @@ object VectorPack extends QueryPack {
 
   override val artifacts: Map[String, (SparkSession, String) => DataFrame] =
     Map("knn_self_top3" -> ((s, d) => KnnJoin.exactSelfTop3(s, d)),
-      "ivf_centroids" -> ivfCentroidsArtifact,
-      "ivf_assign" -> ivfAssignmentsArtifact,
+      "ivf_centroids" -> ((s, d) => ivf16(s, d).centroids),
+      "ivf_assign" -> ((s, d) => ivf16(s, d).assignments),
       "pq_codebook" -> pqCodebookArtifact,
       "pq_codes" -> pqCodesArtifact,
       "sq8_stats" -> sq8StatsArtifact)
@@ -651,8 +634,9 @@ object VectorPack extends QueryPack {
     * sample (md5 order), two Lloyd iterations with per-dimension means
     * summed through exact DECIMAL(28,18) (order-independent — the same
     * casts the Spark side uses), same argmax/probe tie-breaks (dot
-    * desc, id asc), same rerank — mirrors `KnnJoin.approxIvf` defaults
-    * (16 centroids, 4 probes, seed 42, 2 Lloyd iterations). */
+    * desc, id asc), same rerank — mirrors `KnnJoin.approxIvf` over a
+    * 16-list index and `KnnJoin`'s constants (`NProbe` 4, `Seed` 42,
+    * `LloydIters` 2). */
   private[graft] def lloydIterSql(inCentroids: String, i: Int): String = s"""
     |s$i AS (SELECT e.vec_id, c.cid,
     |    row_number() OVER (PARTITION BY e.vec_id
@@ -764,9 +748,9 @@ object VectorPack extends QueryPack {
     |CROSS JOIN vb_est b CROSS JOIN vb_b bb""".stripMargin
 
   /** The PQ pipeline replayed in SQL — mirrors `KnnJoin.approxPq`
-    * defaults (4 subspaces × 16 dims, 16 centroids/subspace, one
-    * Lloyd refinement through DECIMAL(28,18) means, 30 candidates,
-    * seed 42). The asymmetric score sums its 4 lookup terms in fixed
+    * and its constants (`PqM` 4 subspaces × `PqSubDim` 16 dims,
+    * `PqCentroids` 16 per subspace, one Lloyd refinement through
+    * DECIMAL(28,18) means, `PqCandidates` 30, `Seed` 42). The asymmetric score sums its 4 lookup terms in fixed
     * subspace order on both engines. */
   /** The PQ codebook/code/LUT chain (per-subspace seeds → one Lloyd
     * refinement → codes + query dots) — shared by v12 and v13. */
@@ -825,7 +809,7 @@ object VectorPack extends QueryPack {
   /** v13: the IVF chain's probed lists restrict the PQ chain's
     * asymmetric scoring (`pl` is the list-membership relation), then
     * the usual candidate cut + exact rerank — mirrors
-    * `KnnJoin.approxIvfPq` defaults end-to-end. */
+    * `KnnJoin.approxIvfPq` and its constants end-to-end. */
   private val ivfPqSql = s"""
     |WITH $eCte,
     |$ivfCtes,

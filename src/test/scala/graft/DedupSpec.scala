@@ -115,7 +115,7 @@ class DedupSpec extends AnyFunSuite {
   test("SRP candidate stage is sparse: no hidden all-pairs fan-out") {
     val vecs = DedupPack.augmentedVectors(spark, sf)
     val n = vecs.count()
-    val cands = graft.vector.KnnJoin.srpCandidates(spark, vecs, 16, 16, 42L)
+    val cands = graft.vector.KnnJoin.srpCandidates(spark, vecs)
       .count()
     // isotropic background collides at ~bands/2^bits per pair; allow
     // a generous 5% of n(n-1)/2 before calling it quadratic
@@ -480,12 +480,13 @@ class DedupSpec extends AnyFunSuite {
 
   test("semdedup auto-sqrt-n clustering preserves the planted-pair " +
       "resolution (the corpus-scale form)") {
-    // nClusters <= 0 resolves to ceil(sqrt(n)) — the scale default
-    // that keeps the within-cluster pair space at n^1.5 instead of
-    // the pinned-16 form's n^2/16; same keeper semantics, different
-    // partition, so the properties (not the exact rows) are pinned
-    val rows = graft.vector.SemDedup.semDedup(spark,
-        DedupPack.augmentedVectors(spark, sf), 0.98, nClusters = 0)
+    // the ceil(sqrt(n))-list index is the scale form that keeps the
+    // within-cluster pair space at n^1.5 instead of the pinned-16
+    // form's n^2/16; same keeper semantics, different partition, so
+    // the properties (not the exact rows) are pinned
+    val vecs = DedupPack.augmentedVectors(spark, sf)
+    val rows = graft.vector.SemDedup.semDedup(spark, vecs, 0.98,
+        graft.vector.KnnJoin.ivfIndex(spark, vecs, None))
       .collect()
     val kept = rows.map(r => r.getLong(0) -> r.getLong(3)).toMap
     val cluster = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the session's experimental hooks. Environment reads stay in the
   * harness mains (data and output paths, the query filter) and the
   * session factory (the CPU count), so no process-wide knob can change
-  * what a query computes. A scan of the main sources keeps it that
+  * what a query computes. An approximate search takes its trained
+  * index as a required argument, never an optional frame it would
+  * train inline when absent. A scan of the main sources keeps it that
   * way. */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -20,6 +22,7 @@ class SessionGuardSpec extends AnyFunSuite {
   private val hookAssign =
     """experimental\s*\.\s*extra(Strategies|Optimizations)\s*=(?!=)""".r
   private val envRead = """sys\s*\.\s*env\b|System\s*\.\s*getenv\b""".r
+  private val optionalFrame = """Option\s*\[\s*DataFrame\s*\]\s*=\s*None\b""".r
   private val envReaders = Seq(Paths.get("Bench.scala"),
     Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
     Paths.get("core", "GraftSession.scala"))
@@ -44,6 +47,11 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(envRead.findFirstIn("sys\n  .env.getOrElse(\"X\", \"\")").nonEmpty)
     assert(envRead.findFirstIn("System.getenv(\"X\")").nonEmpty)
     assert(envRead.findFirstIn("sys.environment").isEmpty)
+    assert(optionalFrame.findFirstIn(
+      "centroidsOpt: Option[DataFrame] = None)").nonEmpty)
+    assert(optionalFrame.findFirstIn(
+      "statsOpt: Option[ DataFrame ]=None,").nonEmpty)
+    assert(optionalFrame.findFirstIn("stats: DataFrame,").isEmpty)
   }
 
   test("only core/GraftSession.scala builds a SparkSession; nothing assigns " +
@@ -67,6 +75,16 @@ class SessionGuardSpec extends AnyFunSuite {
     val offenders = mainSources.filterNot(f =>
         envReaders.exists(a => f.endsWith(root.resolve(a))))
       .filter(f => envRead.findFirstIn(Files.readString(f)).nonEmpty)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no vector search takes an optional index frame: every index is " +
+      "built by its builder and passed in") {
+    val root = Paths.get("src/main/scala", "graft", "vector")
+    val vector = mainSources.filter(_.startsWith(root))
+    assert(vector.nonEmpty, s"$root has no sources")
+    val offenders = vector
+      .filter(f => optionalFrame.findFirstIn(Files.readString(f)).nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -234,16 +234,14 @@ class MlSpec extends org.scalatest.funsuite.AnyFunSuite {
     def sig(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSeq.sorted
-    val emb = e.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("embedding"))
-    val cents = graft.vector.KnnJoin.ivfCentroids(spark, emb, 16, "42", 2)
-    cents.write.mode("overwrite").parquet(s"$dir/ivf_centroids")
-    val loaded = spark.read.parquet(s"$dir/ivf_centroids")
-    val fresh = sig(graft.vector.KnnJoin.approxIvf(spark, e, e, 3,
-      centroidsOpt = Some(cents)))
-    val replayed = sig(graft.vector.KnnJoin.approxIvf(spark, e, e, 3,
-      centroidsOpt = Some(loaded)))
-    assert(fresh == replayed, "IVF search from reloaded centroids diverged")
+    val ivf = KnnJoin.ivfIndex(spark, e, Some(16))
+    ivf.centroids.write.mode("overwrite").parquet(s"$dir/ivf_centroids")
+    ivf.assignments.write.mode("overwrite").parquet(s"$dir/ivf_assign")
+    val loaded = KnnJoin.IvfIndex(spark.read.parquet(s"$dir/ivf_centroids"),
+      spark.read.parquet(s"$dir/ivf_assign"))
+    val fresh = sig(KnnJoin.approxIvf(spark, e, e, ivf, 3))
+    val replayed = sig(KnnJoin.approxIvf(spark, e, e, loaded, 3))
+    assert(fresh == replayed, "IVF search from the reloaded index diverged")
   }
 
   test("SQ8 quantized kNN: near-exact recall through 4x-compressed codes") {
@@ -252,12 +250,13 @@ class MlSpec extends org.scalatest.funsuite.AnyFunSuite {
       .select(col("query_id"), col("neighbor_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(KnnJoin.search(spark, e, e, 3, KnnJoin.Exact))
-    val sq8 = pairs(graft.vector.KnnJoin.approxSq8(spark, e, e, 3))
+    def run() = pairs(KnnJoin.approxSq8(spark, e, e, KnnJoin.sq8Stats(e), 3))
+    val sq8 = run()
     val recall = (exact & sq8).size.toDouble / exact.size
     assert(recall >= 0.95, s"SQ8 recall@3 $recall — 8-bit + rerank-20 " +
       "should be near-exact")
     // deterministic: a second build/search replays identically
-    assert(sq8 == pairs(graft.vector.KnnJoin.approxSq8(spark, e, e, 3)))
+    assert(sq8 == run())
   }
 
   test("IVF-SQ8 composition holds recall at the IVF level") {
@@ -266,8 +265,10 @@ class MlSpec extends org.scalatest.funsuite.AnyFunSuite {
       .select(col("query_id"), col("neighbor_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(KnnJoin.search(spark, e, e, 3, KnnJoin.Exact))
-    val composed = pairs(graft.vector.KnnJoin.approxIvfSq8(spark, e, e, 3))
-    val ivf = pairs(graft.vector.KnnJoin.approxIvf(spark, e, e, 3))
+    val index = KnnJoin.ivfIndex(spark, e, None)
+    val composed = pairs(
+      KnnJoin.approxIvfSq8(spark, e, e, index, KnnJoin.sq8Stats(e), 3))
+    val ivf = pairs(KnnJoin.approxIvf(spark, e, e, index, 3))
     val rc = (exact & composed).size.toDouble / exact.size
     val ri = (exact & ivf).size.toDouble / exact.size
     assert(rc >= 0.5, s"IVF-SQ8 recall@3 $rc below floor")
@@ -366,7 +367,8 @@ class PqSpec extends org.scalatest.funsuite.AnyFunSuite {
     val exact = graft.vector.KnnJoin.exactCross(e, e, 3)
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pq = graft.vector.KnnJoin.approxPq(spark, e, e, 3)
+    val pq = graft.vector.KnnJoin.approxPq(spark, e, e,
+        graft.vector.KnnJoin.pqIndex(e), 3)
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pq.groupBy(_._1).values.forall(_.length <= 3))
@@ -377,7 +379,8 @@ class PqSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("PQ is deterministic across runs") {
     val e = graft.core.Tables(spark, sf).embeddings
-    def run() = graft.vector.KnnJoin.approxPq(spark, e, e, 3)
+    def run() = graft.vector.KnnJoin.approxPq(spark, e, e,
+        graft.vector.KnnJoin.pqIndex(e), 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(run() == run())
   }
@@ -387,8 +390,9 @@ class PqSpec extends org.scalatest.funsuite.AnyFunSuite {
     // chunks partition the id space by hash, so the output must be
     // bitwise-identical to the single-chunk run
     val e = graft.core.Tables(spark, sf).embeddings
+    val pq = graft.vector.KnnJoin.pqIndex(e)
     def run(chunk: Int) =
-      graft.vector.KnnJoin.approxPq(spark, e, e, 3, queryChunk = chunk)
+      graft.vector.KnnJoin.approxPq(spark, e, e, pq, 3, queryChunk = chunk)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSet
@@ -396,9 +400,13 @@ class PqSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("PQ rejects an embedding dim that does not equal m*subDim") {
+    // the index trains 4 subspaces of 16 dims; a 60-dim corpus must
+    // fail at the build, not slice into short subvectors
     val e = graft.core.Tables(spark, sf).embeddings // dim 64
+      .select(col("vec_id"), slice(col("embedding"), 1, 60).as("embedding"))
     intercept[IllegalArgumentException] {
-      graft.vector.KnnJoin.approxPq(spark, e, e, 3, m = 4, subDim = 15)
+      graft.vector.KnnJoin.approxPq(spark, e, e,
+        graft.vector.KnnJoin.pqIndex(e), 3)
     }
   }
 }
@@ -415,8 +423,10 @@ class IvfPqSpec extends org.scalatest.funsuite.AnyFunSuite {
     def hits(df: org.apache.spark.sql.DataFrame) = df
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val ivf = hits(graft.vector.KnnJoin.approxIvf(spark, e, e, 3))
-    val ivfpq = hits(graft.vector.KnnJoin.approxIvfPq(spark, e, e, 3))
+    val index = graft.vector.KnnJoin.ivfIndex(spark, e, None)
+    val ivf = hits(graft.vector.KnnJoin.approxIvf(spark, e, e, index, 3))
+    val ivfpq = hits(graft.vector.KnnJoin.approxIvfPq(spark, e, e, index,
+      graft.vector.KnnJoin.pqIndex(e), 3))
     assert(ivfpq.groupBy(_._1).values.forall(_.length <= 3))
     val rIvf = (exact intersect ivf.toSet).size.toDouble / exact.size
     val rIvfPq = (exact intersect ivfpq.toSet).size.toDouble / exact.size
@@ -429,7 +439,9 @@ class IvfPqSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("IVF-PQ is deterministic across runs") {
     val e = graft.core.Tables(spark, sf).embeddings
-    def run() = graft.vector.KnnJoin.approxIvfPq(spark, e, e, 3)
+    def run() = graft.vector.KnnJoin.approxIvfPq(spark, e, e,
+        graft.vector.KnnJoin.ivfIndex(spark, e, None),
+        graft.vector.KnnJoin.pqIndex(e), 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(run() == run())
   }
@@ -444,7 +456,8 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
     val exact = graft.vector.KnnJoin.exactCross(e, e, 3)
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = graft.vector.KnnJoin.approxIvf(spark, e, e, 3)
+    val ivf = graft.vector.KnnJoin.approxIvf(spark, e, e,
+        graft.vector.KnnJoin.ivfIndex(spark, e, None), 3)
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(ivf.groupBy(_._1).values.forall(_.length <= 3))
@@ -457,7 +470,8 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("IVF is deterministic across runs") {
     val e = graft.core.Tables(spark, sf).embeddings
-    def run() = graft.vector.KnnJoin.approxIvf(spark, e, e, 3)
+    def run() = graft.vector.KnnJoin.approxIvf(spark, e, e,
+        graft.vector.KnnJoin.ivfIndex(spark, e, None), 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(run() == run())
   }
@@ -468,18 +482,40 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
     // two corpus sizes: the full test table and a 100-row slice
     val full = e.count().toInt                        // 500 at sf0.001
     val slice = e.orderBy(col("vec_id")).limit(100)
-    assert(KnnJoin.resolveNlist(0, e) ==
+    assert(KnnJoin.resolveNlist(None, e) ==
       math.ceil(math.sqrt(full.toDouble)).toInt)
-    assert(KnnJoin.resolveNlist(0, slice) == 10)
+    assert(KnnJoin.resolveNlist(None, slice) == 10)
     // explicit values are honored verbatim (the pinned-oracle path)
-    assert(KnnJoin.resolveNlist(16, e) == 16)
-    // and the default-parameter search IS the auto-sized search
+    assert(KnnJoin.resolveNlist(Some(16), e) == 16)
+    // and the auto-sized index IS the explicit ceil(sqrt(n)) index
     def sig(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val auto = sig(KnnJoin.approxIvf(spark, e, e, 3))
-    val pinned = sig(KnnJoin.approxIvf(spark, e, e, 3,
-      nCentroids = math.ceil(math.sqrt(full.toDouble)).toInt))
-    assert(auto == pinned, "default nCentroids must equal explicit ceil(sqrt(n))")
+    def search(nlist: Option[Int]) =
+      sig(KnnJoin.approxIvf(spark, e, e, KnnJoin.ivfIndex(spark, e, nlist), 3))
+    val auto = search(None)
+    val pinned = search(Some(math.ceil(math.sqrt(full.toDouble)).toInt))
+    assert(auto == pinned, "nlist None must equal explicit ceil(sqrt(n))")
+  }
+
+  test("the session IVF builder memoizes per (key, nlist) and serves the " +
+      "same search as a freshly trained index") {
+    import graft.vector.KnnJoin
+    val e = graft.core.Tables(spark, sf).embeddings
+    val key = "ivf-memo-spec"
+    val pinned = KnnJoin.ivfIndexArtifact(spark, key, e, Some(16))
+    val again = KnnJoin.ivfIndexArtifact(spark, key, e, Some(16))
+    assert(again.centroids eq pinned.centroids)
+    assert(again.assignments eq pinned.assignments)
+    // nlist is part of the memo identity: the auto index is its own
+    val auto = KnnJoin.ivfIndexArtifact(spark, key, e, None)
+    assert(!(auto.centroids eq pinned.centroids))
+    assert(!(auto.assignments eq pinned.assignments))
+    assert(auto.centroids.collect().toSet != pinned.centroids.collect().toSet)
+    def hits(ivf: KnnJoin.IvfIndex) = KnnJoin.approxIvf(spark, e, e, ivf, 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    assert(hits(pinned) == hits(KnnJoin.ivfIndex(spark, e, Some(16))),
+      "a search over the memoized index must equal a fresh index's")
   }
 
   test("incremental IVF maintenance: appends assign to frozen centroids " +
@@ -490,7 +526,7 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
         col("embedding").cast("array<double>").as("embedding"))
     val base = e.filter(pmod(col("vec_id"), lit(5L)) =!= 0)
     val appended = e.filter(pmod(col("vec_id"), lit(5L)) === 0)
-    val cents = KnnJoin.ivfCentroids(spark, base, 16, "42", 2)
+    val cents = KnnJoin.ivfIndex(spark, base, Some(16)).centroids
     // the maintained assignment relation: stored base rows + the
     // incremental append — NO Lloyd retrain, no old row touched
     val maintained = KnnJoin.incrementalAssign(spark, base, cents)
@@ -504,8 +540,7 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
     // and the SEARCH over the maintained index is bitwise the rebuilt
     // index's search — the user-facing form of the equality
     def hits(a: org.apache.spark.sql.DataFrame) =
-      KnnJoin.approxIvf(spark, e, e, 3, centroidsOpt = Some(cents),
-          assignmentsOpt = Some(a))
+      KnnJoin.approxIvf(spark, e, e, KnnJoin.IvfIndex(cents, a), 3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSet
     assert(hits(maintained) == hits(rebuilt),
@@ -519,7 +554,7 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
     val base = e.filter(pmod(col("vec_id"), lit(5L)) =!= 0)
-    val cents = KnnJoin.ivfCentroids(spark, base, 16, "42", 2)
+    val cents = KnnJoin.ivfIndex(spark, base, Some(16)).centroids
     def res(df: org.apache.spark.sql.DataFrame) =
       KnnJoin.assignmentResiduals(spark, df, cents)
         .select(col("residual"))
