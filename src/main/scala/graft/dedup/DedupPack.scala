@@ -110,9 +110,9 @@ object DedupPack extends QueryPack {
     val aug = augmented(spark, dir)
     // the declared <100000 history/batch split applied as id-filters
     // of the session shingle/signature artifacts — identical rows to
-    // the inline incrementalMinhashOf derivation (per-row functions
-    // commute with id predicates), one corpus-wide pass per session
-    // instead of two per run
+    // the incrementalMinhashOf derivation over each side (per-row
+    // functions commute with id predicates), one corpus-wide pass per
+    // session instead of two per run
     val sigs = augBandSigs(spark, dir)
     val sh = augShingleRows(spark, dir)
     incrementalMinhashAgainst(
@@ -120,9 +120,9 @@ object DedupPack extends QueryPack {
         .select(col("id").as("hist_id"), col("band"), col("bandsig")),
       sh.filter(col("id") < 100000),
       aug.filter(col("doc_id") >= 100000),
-      batchSigs = Some(sigs.filter(col("id") >= 100000)
-        .select(col("id").as("doc_id"), col("band"), col("bandsig"))),
-      batchShingles = Some(sh.filter(col("id") >= 100000)))
+      sigs.filter(col("id") >= 100000)
+        .select(col("id").as("doc_id"), col("band"), col("bandsig")),
+      sh.filter(col("id") >= 100000))
   }
 
   /** Per-band minhash signatures of a (doc_id, text) relation — the
@@ -131,10 +131,25 @@ object DedupPack extends QueryPack {
     * appends each admitted batch's signatures to a parquet history
     * table and never recomputes them. */
   private[graft] def bandSigsOf(df: DataFrame, idName: String): DataFrame =
-    bandSigsFromMinhash(Dedup.minhashRows(
-        df.select(col("doc_id").as("id"),
-          explode(Dedup.shingles(col("text"), 3)).as("sh")), 12))
+    bandSigsFromMinhash(minhashRowsOf(df))
       .select(col("id").as(idName), col("band"), col("bandsig"))
+
+  /** (id, sh) — the distinct 60-bit-hashed 3-shingles of a
+    * (doc_id, text) relation: the ONE shingle derivation of the MinHash
+    * family. The session artifact ([[augShingleRows]]), the stream gate
+    * and the spec twins all call it, so an id-filter of the artifact is
+    * the same rows as this over the id-filtered documents (per-row
+    * derivation; DISTINCT commutes with id predicates — spec-pinned). */
+  private[graft] def shingleRowsOf(docs: DataFrame): DataFrame =
+    Dedup.hashedShingleRows(docs, col("doc_id"), col("text"), 3)
+
+  /** (id, seed, mh) — 12 minhash values per document over its
+    * 3-shingles (no distinct on the shingle rows: min() is duplicate-
+    * insensitive): the ONE signature derivation, shared like
+    * [[shingleRowsOf]] and banded by [[bandSigsFromMinhash]]. */
+  private[graft] def minhashRowsOf(docs: DataFrame): DataFrame =
+    Dedup.minhashRows(docs.select(col("doc_id").as("id"),
+      explode(Dedup.shingles(col("text"), 3)).as("sh")), 12)
 
   /** The banding step of [[bandSigsOf]] over a prebuilt (id, seed, mh)
     * relation — 12 rows per doc in, 4 (id, band, bandsig) rows out. */
@@ -156,22 +171,18 @@ object DedupPack extends QueryPack {
     * band strings — never text). Shingling, hashing and minhashing
     * are per-row derivations and DISTINCT commutes with id
     * predicates, so every consumer's id-filter / semi-join of the
-    * shared relation is bitwise identical to the inline pass it
-    * replaces. */
+    * shared relation is bitwise identical to [[shingleRowsOf]] /
+    * [[minhashRowsOf]] over the filtered corpus (spec-pinned). */
   private[graft] def augShingleRows(spark: SparkSession,
                                     dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"shingle_rows:$dir")(
-      Dedup.hashedShingleRows(augmented(spark, dir), col("doc_id"),
-        col("text"), 3))
+      shingleRowsOf(augmented(spark, dir)))
 
-  /** (id, seed, mh) — 12 minhash values per augmented doc (no
-    * distinct on the shingle rows: min() is duplicate-insensitive). */
+  /** [[minhashRowsOf]] over the augmented corpus. */
   private[graft] def augMinhashRows(spark: SparkSession,
                                     dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"minhash_rows:$dir")(
-      Dedup.minhashRows(augmented(spark, dir)
-        .select(col("doc_id").as("id"),
-          explode(Dedup.shingles(col("text"), 3)).as("sh")), 12))
+      minhashRowsOf(augmented(spark, dir)))
 
   /** (id, band, bandsig) — the 4-band LSH signature relation derived
     * from [[augMinhashRows]] (rides the same heavy pass). */
@@ -189,30 +200,29 @@ object DedupPack extends QueryPack {
       Dedup.wordHashes(augmented(spark, dir), col("doc_id"), col("text")))
 
   /** d19 core over explicit (history, batch) relations of
-    * (doc_id, text) — derives the history state in-line, then runs
-    * [[incrementalMinhashAgainst]]. */
+    * (doc_id, text) — derives both sides' state with the shared
+    * derivations, then runs [[incrementalMinhashAgainst]]. */
   private[graft] def incrementalMinhashOf(hist: DataFrame,
                                           batch: DataFrame): DataFrame =
-    incrementalMinhashAgainst(
-      bandSigsOf(hist, "hist_id"),
-      Dedup.hashedShingleRows(hist, col("doc_id"), col("text"), 3),
-      batch)
+    incrementalMinhashAgainst(bandSigsOf(hist, "hist_id"),
+      shingleRowsOf(hist), batch, bandSigsOf(batch, "doc_id"),
+      shingleRowsOf(batch))
 
-  /** d19 over PREBUILT history state — `histSigs` (hist_id, band,
-    * bandsig) and `histShingles` (id, sh) are the persisted relations
-    * a production ingest maintains; only the batch's own signatures
-    * and shingles are computed here (or passed in prebuilt, when the
-    * caller also needs them — the streaming gate computes ONE
-    * signature pass and shares it between the screen and the
-    * history append). Nothing rescans history text. */
+  /** d19 over PREBUILT state — `histSigs` (hist_id, band, bandsig) and
+    * `histShingles` (id, sh) are the persisted relations a production
+    * ingest maintains; `batchSigs` (doc_id, band, bandsig) and
+    * `batchShingles` (id, sh) are the batch's own rows, derived by the
+    * caller ([[bandSigsOf]], [[shingleRowsOf]]) or id-filtered from the
+    * session artifacts. `batch` supplies the doc ids every verdict
+    * covers. Nothing rescans history text. */
   private[graft] def incrementalMinhashAgainst(histSigs: DataFrame,
                                                histShingles: DataFrame,
                                                batch: DataFrame,
-                                               batchSigs: Option[DataFrame] = None,
-                                               batchShingles: Option[DataFrame] = None)
+                                               batchSigs: DataFrame,
+                                               batchShingles: DataFrame)
       : DataFrame = {
     val (cand, best) =
-      minhashBestMatch(histSigs, histShingles, batch, batchSigs, batchShingles)
+      minhashBestMatch(histSigs, histShingles, batchSigs, batchShingles)
     val nc = cand.groupBy(col("doc_id")).agg(count(lit(1)).as("n_candidates"))
     batch.select(col("doc_id"))
       .join(nc, Seq("doc_id"), "left")
@@ -238,9 +248,8 @@ object DedupPack extends QueryPack {
     * unused left join itself). */
   private[graft] def minhashBestMatch(histSigs: DataFrame,
                                       histShingles: DataFrame,
-                                      batch: DataFrame,
-                                      batchSigs: Option[DataFrame],
-                                      batchShingles: Option[DataFrame])
+                                      batchSigs: DataFrame,
+                                      batchShingles: DataFrame)
       : (DataFrame, DataFrame) = {
     // lineage-CUT, not cached (the r14 s12 finding applied to the
     // MinHash screen, r14 verdict item 3): these relations are each
@@ -249,27 +258,26 @@ object DedupPack extends QueryPack {
     // minhash agg → band concat), which a mere .cache() re-
     // canonicalizes per reference per action — driver-serial seconds
     // at the gate's plan sizes. All COMPACT proxy rows (ids, 60-bit
-    // hashes, band strings), never text — guide §8. A frame the
-    // CALLER already cut (the gate's shared signature pass) is used
-    // as-is: a second localCheckpoint would re-materialize it for
-    // nothing.
+    // hashes, band strings), never text — guide §8. The batch
+    // shingles are used as the caller passes them: the gate cuts its
+    // survivor rows itself, and d19 passes an id-filter of a session
+    // artifact — a second localCheckpoint would re-materialize either
+    // for nothing.
     val cand = graft.core.Caches.cut(
-      batchSigs.getOrElse(bandSigsOf(batch, "doc_id"))
+      batchSigs
         .join(histSigs.select(col("hist_id"), col("band"), col("bandsig")),
           Seq("band", "bandsig"))
         .select(col("doc_id"), col("hist_id")).distinct())
-    val bsh = batchShingles.getOrElse(graft.core.Caches.cut(
-      Dedup.hashedShingleRows(batch, col("doc_id"), col("text"), 3)))
     val hsh = graft.core.Caches.cut(
       histShingles.select(col("id"), col("sh")))
     val inter = cand
-      .join(bsh.select(col("id").as("doc_id"), col("sh")), Seq("doc_id"))
+      .join(batchShingles.select(col("id").as("doc_id"), col("sh")), Seq("doc_id"))
       .join(hsh.select(col("id").as("hist_id"), col("sh")), Seq("hist_id", "sh"))
       .groupBy(col("doc_id"), col("hist_id")).agg(count(lit(1)).as("inter"))
     // shingle-set sizes only for ids that can survive the INNER joins
     // below (guide §3.2 — pre-filter the aggregation input with the
     // tiny candidate id sets; per-id counts are unchanged where kept)
-    val nb = bsh.select(col("id").as("doc_id"), col("sh"))
+    val nb = batchShingles.select(col("id").as("doc_id"), col("sh"))
       .join(cand.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("nb"))
     val nh = hsh.select(col("id").as("hist_id"), col("sh"))
@@ -298,30 +306,25 @@ object DedupPack extends QueryPack {
     * d19's MinHash-LSH screen for the digest-new remainder —
     * 'near_dup_of_history' at d02's 0.5 Jaccard, else 'new' (admit).
     * Exact screens before fuzzy for the same reason d18 collapses
-    * before mining: a byte-identical copy must never reach signature
-    * computation. History arrives as its PERSISTED derived relations
+    * before mining: a byte-identical copy never reaches the candidate
+    * joins. History arrives as its PERSISTED derived relations
     * (digest set, band signatures, hashed shingles) — per batch,
     * history text is never rescanned and history signatures never
-    * recomputed. */
-  private[graft] def dedupGateAgainst(histDigests: DataFrame,
-                                      histSigs: DataFrame,
-                                      histShingles: DataFrame,
-                                      batch: DataFrame,
-                                      batchSigsFull: Option[DataFrame] = None,
-                                      batchShinglesFull: Option[DataFrame] = None)
-      : DataFrame =
-    dedupGateWithState(histDigests, histSigs, histShingles, batch,
-      batchSigsFull, batchShinglesFull)._1
-
-  /** [[dedupGateAgainst]] plus the ADMITTED documents' derived state
-    * relations — (decisions, new digests (h), new band signatures
-    * (hist_id, band, bandsig), new hashed shingles (id, sh)) — so a
-    * streaming caller appends history state WITHOUT a second
-    * signature/shingle pass: the screen's own per-survivor relations
-    * are computed once (transient-cached) and filtered to the
-    * admitted ids for the append. A null text digests as the empty
-    * string (null ≡ "" for dedup identity — the digest join must
-    * never DROP a document the way a null join key silently would).
+    * recomputed. The batch arrives as (doc_id, text) plus its
+    * signature (doc_id, band, bandsig) and shingle (id, sh) rows over
+    * the WHOLE batch ([[bandSigsOf]] / [[shingleRowsOf]], or id-filters
+    * of the session artifacts in the s09 twin); the screen semi-joins
+    * them to the digest-new ids.
+    *
+    * Returns (decisions, new digests (h), new band signatures
+    * (hist_id, band, bandsig), new hashed shingles (id, sh)) so a
+    * streaming caller appends the ADMITTED documents' history state
+    * WITHOUT a second signature/shingle pass: the survivor relations
+    * are cut once and filtered to the admitted ids for the append;
+    * the one-shot twins keep only the decisions. A null text digests
+    * as the empty string (null ≡ "" for dedup identity — the digest
+    * join must never DROP a document the way a null join key silently
+    * would).
     * Decisions are unordered — the s09 entry point adds its own
     * orderBy; per-micro-batch consumers must not pay a global sort.
     *
@@ -338,12 +341,11 @@ object DedupPack extends QueryPack {
                                         histSigs: DataFrame,
                                         histShingles: DataFrame,
                                         batch: DataFrame,
-                                        batchSigsFull: Option[DataFrame] = None,
-                                        batchShinglesFull: Option[DataFrame] = None)
+                                        batchSigs: DataFrame,
+                                        batchShingles: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val b = graft.core.Caches.transient(
-      batch.select(col("doc_id"), col("text"),
-        Dedup.contentDigest(col("text")).as("h")))
+      batch.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h")))
     val firstInBatch = b.groupBy(col("h"))
       .agg(min(col("doc_id")).as("first_id"))
     val hd = histDigests.select(col("h")).distinct()
@@ -351,37 +353,28 @@ object DedupPack extends QueryPack {
     val ex = graft.core.Caches.transient(
       b.join(hd, Seq("h"), "left")
         .join(firstInBatch, Seq("h"))
-        .select(col("doc_id"), col("text"),
+        .select(col("doc_id"),
           when(coalesce(col("in_hist"), lit(false)), "dup_of_history")
             .when(col("doc_id") =!= col("first_id"), "dup_in_batch")
             .otherwise("exact_new").as("ex_status")))
-    val survivors = ex.filter(col("ex_status") === "exact_new")
-      .select(col("doc_id"), col("text"))
-    // ONE signature/shingle pass over the digest-new docs, shared by
-    // the fuzzy screen and (filtered to admitted) the history append —
-    // lineage-CUT (compact proxy rows; their plans otherwise carry the
-    // whole digest-screen front into every downstream reference).
-    // When the caller holds full-batch session artifacts (the batch
-    // twin over the augmented corpus), the pass is a semi-join on the
-    // survivor ids instead of a re-derivation from text — identical
-    // rows (per-row functions commute with id predicates).
-    val sIds = survivors.select(col("doc_id"))
+    val sIds = ex.filter(col("ex_status") === "exact_new")
+      .select(col("doc_id"))
+    // the batch's signature/shingle rows semi-joined to the digest-new
+    // ids, shared by the fuzzy screen and (filtered to admitted) the
+    // history append — lineage-CUT (compact proxy rows; their plans
+    // otherwise carry the whole digest-screen front into every
+    // downstream reference)
     val sSigs = graft.core.Caches.cut(
-      batchSigsFull.map(_.join(sIds, Seq("doc_id"), "left_semi"))
-        .getOrElse(bandSigsOf(survivors, "doc_id")))
+      batchSigs.join(sIds, Seq("doc_id"), "left_semi"))
     val sSh = graft.core.Caches.cut(
-      batchShinglesFull
-        .map(_.join(sIds.select(col("doc_id").as("id")), Seq("id"),
-          "left_semi"))
-        .getOrElse(
-          Dedup.hashedShingleRows(survivors, col("doc_id"), col("text"), 3)))
+      batchShingles.join(sIds.select(col("doc_id").as("id")), Seq("id"),
+        "left_semi"))
     // the gate consumes the screen's best-match CORE directly: d19's
     // n_candidates aggregation, its full-batch left join and its
     // orderBy would all be dead weight here (the decision columns
     // below never read them, and Catalyst cannot prune an unused
     // left join) — measured ~1/3 of the gate's jobs before the split
-    val (_, fzBest) = minhashBestMatch(histSigs, histShingles, survivors,
-      Some(sSigs), Some(sSh))
+    val (_, fzBest) = minhashBestMatch(histSigs, histShingles, sSigs, sSh)
     val decisions = ex.select(col("doc_id"), col("ex_status"))
       .join(fzBest, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -405,15 +398,15 @@ object DedupPack extends QueryPack {
     (decisions, newDigests, newSigs, newShingles)
   }
 
-  /** [[dedupGateAgainst]] with history state derived in-line from a
-    * (doc_id, text) history relation — the batch twin's entry. */
+  /** [[dedupGateWithState]]'s decisions with both sides' state derived
+    * from (doc_id, text) relations by the shared derivations — the
+    * spec twin's entry. */
   private[graft] def dedupGateOf(hist: DataFrame,
                                  batch: DataFrame): DataFrame =
-    dedupGateAgainst(
+    dedupGateWithState(
       hist.select(Dedup.contentDigest(col("text")).as("h")),
-      bandSigsOf(hist, "hist_id"),
-      Dedup.hashedShingleRows(hist, col("doc_id"), col("text"), 3),
-      batch)
+      bandSigsOf(hist, "hist_id"), shingleRowsOf(hist), batch,
+      bandSigsOf(batch, "doc_id"), shingleRowsOf(batch))._1
 
   /** Session-scoped Jaccard-pair artifact: d02 reports the pairs, d08
     * resolves them into groups — one mining pass serves both (the
@@ -514,12 +507,13 @@ object DedupPack extends QueryPack {
     * words) produce no pairs on either side: the intra count guards
     * on the class having shingles. */
   def pairBandCounts(spark: SparkSession, dir: String): DataFrame =
-    pairBandCountsOf(spark, augmented(spark, dir),
-      Some(augShingleRows(spark, dir)))
+    pairBandCountsOf(spark, augmented(spark, dir), augShingleRows(spark, dir))
 
+  /** d20 over a (doc_id, text) corpus and its [[shingleRowsOf]] rows
+    * (the session artifact, or the derivation over the corpus). */
   private[graft] def pairBandCountsOf(spark: SparkSession,
                                       corpus: DataFrame,
-                                      corpusShingles: Option[DataFrame] = None)
+                                      corpusShingles: DataFrame)
       : DataFrame = {
     // cut, not cache (compact (id, digest, flag) rows; reps referenced
     // 4× below — the family-wide r15 lineage-cut discipline)
@@ -530,17 +524,11 @@ object DedupPack extends QueryPack {
       classes.groupBy(col("h"))
         .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m"),
           max(col("has_sh")).as("has_sh")))
-    val repCorpus = corpus
-      .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"))
-    // rep-only shingles: a semi-join of the session artifact when the
-    // corpus has one (bitwise-equal to re-shingling the rep corpus —
-    // per-row derivation, distinct commutes with the id filter)
-    val repSh = corpusShingles match {
-      case Some(sh) => sh.join(
-        reps.select(col("rep_id").as("id")), Seq("id"), "left_semi")
-      case None =>
-        Dedup.hashedShingleRows(repCorpus, col("doc_id"), col("text"), 3)
-    }
+    // rep-only shingles: a semi-join of the corpus shingle rows
+    // (bitwise-equal to re-shingling the rep corpus — per-row
+    // derivation, distinct commutes with the id filter)
+    val repSh = corpusShingles.join(
+      reps.select(col("rep_id").as("id")), Seq("id"), "left_semi")
     val cross = Dedup.jaccardPairsFromHashed(repSh, threshold = 0.5)
       .join(reps.select(col("rep_id").as("a_id"), col("m").as("ma")), Seq("a_id"))
       .join(reps.select(col("rep_id").as("b_id"), col("m").as("mb")), Seq("b_id"))
@@ -584,12 +572,15 @@ object DedupPack extends QueryPack {
     * independent check of the collapse argument. */
   def minhashFidelity(spark: SparkSession, dir: String): DataFrame =
     minhashFidelityOf(spark, augmented(spark, dir),
-      Some(augMinhashRows(spark, dir)), Some(augShingleRows(spark, dir)))
+      augMinhashRows(spark, dir), augShingleRows(spark, dir))
 
+  /** d21 over a (doc_id, text) corpus and its [[minhashRowsOf]] and
+    * [[shingleRowsOf]] rows (the session artifacts, or the derivations
+    * over the corpus). */
   private[graft] def minhashFidelityOf(spark: SparkSession,
                                        corpus: DataFrame,
-                                       corpusMinhash: Option[DataFrame] = None,
-                                       corpusShingles: Option[DataFrame] = None)
+                                       corpusMinhash: DataFrame,
+                                       corpusShingles: DataFrame)
       : DataFrame = {
     val classes = graft.core.Caches.cut(
       corpus.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h"),
@@ -599,20 +590,11 @@ object DedupPack extends QueryPack {
         .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("cm"),
           max(col("has_sh")).as("has_sh")))
     val repIds = reps.select(col("rep_id").as("id"))
-    // one signature pass over the distinct corpus: per-seed mins feed
-    // both the band candidates and the per-pair match counts. With a
-    // session minhash artifact the pass is a semi-join on the rep ids
-    // (per-doc signatures are identical whichever corpus slice they
-    // were computed over).
-    val mh = corpusMinhash match {
-      case Some(m) => m.join(repIds, Seq("id"), "left_semi")
-      case None =>
-        val repCorpus = corpus
-          .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"))
-        graft.core.Caches.cut(
-          Dedup.minhashRows(repCorpus.select(col("doc_id").as("id"),
-            explode(Dedup.shingles(col("text"), 3)).as("sh")), 12))
-    }
+    // the distinct corpus's signatures: per-seed mins feed both the
+    // band candidates and the per-pair match counts — a semi-join on
+    // the rep ids (per-doc signatures are identical whichever corpus
+    // slice they were computed over)
+    val mh = corpusMinhash.join(repIds, Seq("id"), "left_semi")
     val sigs = bandSigsFromMinhash(mh)
     val cand = graft.core.Caches.cut(
       Dedup.minhashCandidatesFromSigs(sigs))
@@ -623,13 +605,7 @@ object DedupPack extends QueryPack {
         Seq("b_id", "seed"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("m"))
-    val shRows = corpusShingles match {
-      case Some(sh) => sh.join(repIds, Seq("id"), "left_semi")
-      case None => graft.core.Caches.cut(
-        Dedup.hashedShingleRows(
-          corpus.join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id")),
-          col("doc_id"), col("text"), 3))
-    }
+    val shRows = corpusShingles.join(repIds, Seq("id"), "left_semi")
     val sizes = shRows.groupBy(col("id")).agg(count(lit(1)).as("n"))
     val inter = cand
       .join(shRows.select(col("id").as("a_id"), col("sh")), Seq("a_id"))

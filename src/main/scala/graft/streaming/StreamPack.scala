@@ -68,7 +68,7 @@ object StreamPack extends QueryPack {
       .orderBy(col("user_id"), col("admit_seq"))
 
   /** s09: the continuous-ingest DEDUP GATE's batch twin
-    * ([[graft.dedup.DedupPack.dedupGateOf]] — d16's exact digest
+    * ([[graft.dedup.DedupPack.dedupGateWithState]] — d16's exact digest
     * screen composed with d19's MinHash screen): history = augmented
     * ids < 300, the arriving batch = everything else, so all the
     * interesting verdicts carry real rows — the planted exact copies
@@ -106,21 +106,22 @@ object StreamPack extends QueryPack {
       // history state and the batch's signature/shingle relations are
       // id-filters of the session shingle/minhash artifacts — the
       // declared <300 split applied to the shared relations instead
-      // of two fresh text passes (identical rows: per-row derivations
-      // commute with id predicates). Only the digest column is still
-      // computed from text here (no digest artifact exists).
+      // of two fresh text passes (identical rows to the derivations
+      // the streaming gate runs per batch: per-row derivations commute
+      // with id predicates). Only the digest column is still computed
+      // from text here (no digest artifact exists).
       val sigs = DedupPack.augBandSigs(spark, dir)
       val sh = DedupPack.augShingleRows(spark, dir)
-      DedupPack.dedupGateAgainst(
+      DedupPack.dedupGateWithState(
         aug.filter(col("doc_id") < 300)
           .select(Dedup.contentDigest(col("text")).as("h")),
         sigs.filter(col("id") < 300)
           .select(col("id").as("hist_id"), col("band"), col("bandsig")),
         sh.filter(col("id") < 300),
         aug.filter(col("doc_id") >= 300),
-        batchSigsFull = Some(sigs.filter(col("id") >= 300)
-          .select(col("id").as("doc_id"), col("band"), col("bandsig"))),
-        batchShinglesFull = Some(sh.filter(col("id") >= 300)))
+        sigs.filter(col("id") >= 300)
+          .select(col("id").as("doc_id"), col("band"), col("bandsig")),
+        sh.filter(col("id") >= 300))._1
     }
 
   /** s10: the per-batch ingest RUN SUMMARY's batch twin — the s09
@@ -188,17 +189,15 @@ object StreamPack extends QueryPack {
     // rows are id-filters of the session fingerprint artifact
     // ([[MultimodalPack.gateMediaFps]]) — the declared <300 split
     // applied to the shared relation instead of two decode passes per
-    // query (identical rows: per-row derivations commute with id
-    // predicates; the s09 gate's discipline)
+    // query (identical rows to [[MultimodalPack.mediaFpRowsOf]], which
+    // the streaming gate runs per batch: per-row derivations commute
+    // with id predicates; the s09 gate's discipline)
     val mf = MultimodalPack.gateMediaFps(spark, dir)
     MultimodalPack.mediaGateWithState(
         mf.filter(col("media_id") < 300).select(col("h")),
         graft.core.Caches.cut(mf.filter(col("media_id") < 300)
           .select(col("media_id").as("id"), col("fp"))),
-        MultimodalPack.gateMedia(spark, dir)
-          .filter(col("media_id") >= 300),
-        batchFps = Some(mf.filter(col("media_id") >= 300)
-          .select(col("media_id"), col("h"), col("fp"))))._1
+        mf.filter(col("media_id") >= 300))._1
       .orderBy(col("media_id"))
   }
 

@@ -68,9 +68,7 @@ object Streams {
 
   /** Watermarked variant for append-mode streaming runs. */
   def tumblingCountsWatermarked(events: DataFrame): DataFrame =
-    tumblingCountsInner(events.withWatermark("ts", "1 hour"))
-  private def tumblingCountsInner(events: DataFrame): DataFrame =
-    tumblingCounts(events)
+    tumblingCounts(events.withWatermark("ts", "1 hour"))
 
   /** Stream-stream interval join (attribution): each view matched to
     * the same user's purchases within the next 30 minutes. The batch
@@ -265,7 +263,7 @@ object Streams {
     * micro-batch against PERSISTED history state (the round-9 brief:
     * d19's seam existed but no stream consumed it). Each arriving
     * batch of (doc_id, text) documents is screened by
-    * [[graft.dedup.DedupPack.dedupGateAgainst]]:
+    * [[graft.dedup.DedupPack.dedupGateWithState]]:
     * exact digest first (dup_of_history / dup_in_batch), MinHash-LSH
     * + exact-Jaccard verify for the digest-new remainder
     * (near_dup_of_history / new). Decisions land in
@@ -277,8 +275,9 @@ object Streams {
     * positions of the digests — to four parquet history tables under
     * `histDir`, which the next batch joins against. History text is
     * never rescanned; history signatures are never recomputed;
-    * per-batch cost is the batch's own signature pass plus
-    * candidate-bounded joins (the d19 scale shape). [[GateOptions]]
+    * per-batch cost is the batch's own signature pass (over the whole
+    * arrival — the rows s09 semi-joins from the session artifacts)
+    * plus candidate-bounded joins (the d19 scale shape). [[GateOptions]]
     * bounds the STATE lifecycle for long-running streams: generation
     * compaction keeps per-trigger directory listings O(compactEvery)
     * in stream age, the Bloom front keeps the exact digest join's
@@ -460,7 +459,7 @@ object Streams {
       // by an abandoned run must neither be read (torn files) nor —
       // worse — be baked into a generation by a compaction fold that
       // then deletes it. Skipped here, it stays on disk for repair
-      // (the delete loops below preserve uncommitted dirs too).
+      // (the compaction sweep preserves uncommitted dirs too).
       val live = subs.flatMap { s =>
         idOf(s.getPath.getName, "batch=")
           .filter(id => id < batchId && maxGen.forall(id > _) &&
@@ -473,83 +472,117 @@ object Streams {
 
   /** ONE micro-batch of the continuous-ingest dedup gate — the
     * foreachBatch body of [[dedupIngestGate]], factored out so specs
-    * can drive a long batch sequence directly. Writes decisions, the per-batch run summary
+    * can drive a long batch sequence directly. The batch's signature
+    * and shingle rows are derived over the whole arrival and the
+    * screen semi-joins them to its digest-new ids (the s09 twin runs
+    * the same screen over id-filters of the session artifacts).
+    * Writes decisions, the per-batch run summary
     * (`<outDir>_summary/batch=<id>` — the reference's per-run
     * Dashboard box, `ocr_agent_8_29.py:28-33`), and the four state
-    * kinds; then compacts generations per `opts`. */
+    * kinds through [[gateBatch]]. */
   private[graft] def dedupGateBatch(spark: SparkSession, batch: DataFrame,
                                     batchId: Long, outDir: String,
                                     histDir: String,
                                     opts: GateOptions = GateOptions()): Unit = {
     import graft.dedup.{Dedup, DedupPack}
     val docs = batch.select(col("doc_id"), col("text")).persist()
-    def priorState(kind: String): DataFrame =
-      priorStateOf(spark, histDir, kind, batchId, opts)
-    val digests = priorState("digests")
-    val sigs = priorState("sigs")
-    val shingles = priorState("shingles")
-    val digestsScreened = bloomScreenedDigests(spark, histDir, batchId,
-      opts, digests,
-      docs.select(Dedup.contentDigest(col("text")).as("h")).distinct())
-    // the gate returns the admitted docs' derived state relations
-    // from ITS OWN signature pass — the append below re-reads
-    // cached frames, never recomputes minhashes or shingles
-    val (decisionsRaw, newDigests, newSigs, newShingles) =
-      DedupPack.dedupGateWithState(digestsScreened, sigs, shingles, docs)
-    val decisions = decisionsRaw.persist()
-    decisions.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    assertCommitted(spark, s"$outDir/batch=$batchId")
-    runSummaryOf(decisions, docs, batchId).coalesce(1)
-      .write.mode("overwrite").parquet(s"${outDir}_summary/batch=$batchId")
-    assertCommitted(spark, s"${outDir}_summary/batch=$batchId")
-    // per-batch state is micro-batch-sized: writing it at full session
-    // parallelism fans each tiny frame into ~32 part files per kind
-    // per batch (measured: ~140 files/batch at sf0.1 — the mm05
-    // lesson: file COUNT, not bytes, dominates small-state IO).
-    // coalesce (no shuffle) bounds the fan-out; generations re-derive
-    // their file count from real bytes at compaction time.
-    def writeState(kind: String, df: DataFrame): Unit = {
-      df.withColumn("src_batch", lit(batchId)).coalesce(4)
-        .write.mode("overwrite").parquet(s"$histDir/$kind/batch=$batchId")
-      assertCommitted(spark, s"$histDir/$kind/batch=$batchId")
+    gateBatch(spark, batchId, outDir, histDir, opts, Seq("sigs", "shingles"),
+      docs.select(Dedup.contentDigest(col("text")).as("h")).distinct(),
+      decisionsLogSchema(spark),
+      Some(runSummaryOf(_, docs, batchId))) { (digests, prior) =>
+      // the gate returns the admitted docs' derived state relations
+      // from ITS OWN signature pass — the append re-reads cut frames,
+      // never recomputes minhashes or shingles
+      val (decisions, newDigests, newSigs, newShingles) =
+        DedupPack.dedupGateWithState(digests, prior("sigs"),
+          prior("shingles"), docs, DedupPack.bandSigsOf(docs, "doc_id"),
+          DedupPack.shingleRowsOf(docs))
+      (decisions, newDigests, Map("sigs" -> newSigs, "shingles" -> newShingles))
     }
-    writeState("digests", newDigests)
-    writeState("sigs", newSigs)
-    writeState("shingles", newShingles)
-    writeState("bloom",
-      Dedup.bloomBits(newDigests.select(col("h").as("key")),
-        BloomK, BloomBits).select(col("pos")))
-    decisions.unpersist()
     docs.unpersist()
-    if (opts.compactEvery > 0 && batchId > 0 &&
-        batchId % opts.compactEvery == 0) {
-      compactState(spark, histDir, batchId, opts)
-      if (opts.compactLogs) {
-        compactLog(spark, outDir, batchId, decisionsLogSchema(spark),
-          stampSrcBatch = true)
-        compactLog(spark, s"${outDir}_summary", batchId,
-          summaryLogSchema(spark), stampSrcBatch = false)
-      }
-    }
-    graft.core.Caches.releaseTransients()
     ()
   }
 
+  /** The per-batch state lifecycle both ingest gates share:
+    *  1. resolve each state kind's directories ONCE (one listing per
+    *     kind per batch, shared by the Bloom coverage check and the
+    *     reads) and read the prior state ([[priorStateOf]]);
+    *  2. the Bloom front over the digest kind ([[bloomScreenedDigests]]);
+    *  3. the gate's `screen` — given the screened history digests and
+    *     the prior state per fuzzy kind, it returns (decisions, the
+    *     admitted digests, the admitted state per fuzzy kind);
+    *  4. the decision write, the optional per-batch `summaryOf` write
+    *     (`<outDir>_summary/batch=<id>`) and the state appends (digests,
+    *     each fuzzy kind, the Bloom bits of the admitted digests), each
+    *     `_SUCCESS`-asserted;
+    *  5. generation compaction of the state — and, under
+    *     `compactLogs`, of the decision log (read with `logSchema`) and
+    *     the summary log — per `opts`.
+    *
+    * Per-batch state is micro-batch-sized: writing it at full session
+    * parallelism fans each tiny frame into ~32 part files per kind per
+    * batch (measured: ~140 files/batch at sf0.1 — the mm05 lesson: file
+    * COUNT, not bytes, dominates small-state IO). coalesce (no
+    * shuffle) bounds the fan-out; generations re-derive their file
+    * count from real bytes at compaction time. */
+  private def gateBatch(spark: SparkSession, batchId: Long, outDir: String,
+                        histDir: String, opts: GateOptions,
+                        kinds: Seq[String], probeDigests: DataFrame,
+                        logSchema: StructType,
+                        summaryOf: Option[DataFrame => DataFrame])(
+      screen: (DataFrame, Map[String, DataFrame]) =>
+        (DataFrame, DataFrame, Map[String, DataFrame])): Unit = {
+    val allKinds = ("digests" +: kinds) :+ "bloom"
+    val dirs = allKinds.map(k => k -> stateDirs(spark, histDir, k, batchId))
+      .toMap
+    def prior(kind: String): DataFrame =
+      priorStateOf(spark, kind, dirs(kind), batchId, opts)
+    val (decisionsRaw, newDigests, newState) = screen(
+      bloomScreenedDigests(opts, dirs, prior, probeDigests),
+      kinds.map(k => k -> prior(k)).toMap)
+    val decisions = decisionsRaw.persist()
+    def write(df: DataFrame, dir: String): Unit = {
+      df.write.mode("overwrite").parquet(dir)
+      assertCommitted(spark, dir)
+    }
+    write(decisions, s"$outDir/batch=$batchId")
+    summaryOf.foreach(f =>
+      write(f(decisions).coalesce(1), s"${outDir}_summary/batch=$batchId"))
+    def writeState(kind: String, df: DataFrame): Unit =
+      write(df.withColumn("src_batch", lit(batchId)).coalesce(4),
+        s"$histDir/$kind/batch=$batchId")
+    writeState("digests", newDigests)
+    kinds.foreach(k => writeState(k, newState(k)))
+    writeState("bloom",
+      graft.dedup.Dedup.bloomBits(newDigests.select(col("h").as("key")),
+        BloomK, BloomBits).select(col("pos")))
+    decisions.unpersist()
+    if (opts.compactEvery > 0 && batchId > 0 &&
+        batchId % opts.compactEvery == 0) {
+      compactState(spark, histDir, batchId, opts, allKinds)
+      if (opts.compactLogs) {
+        compactLog(spark, outDir, batchId, logSchema, stampSrcBatch = true)
+        if (summaryOf.nonEmpty)
+          compactLog(spark, s"${outDir}_summary", batchId,
+            summaryLogSchema(spark), stampSrcBatch = false)
+      }
+    }
+    graft.core.Caches.releaseTransients()
+  }
+
   /** State written by batches < batchId only (the exactly-once
-    * contract); the explicit schema matters: a batch that admitted
-    * ZERO docs leaves a part-file-less directory and inference over
-    * only such dirs would fail. A null src_batch is a LEGACY row
-    * (state written before the provenance column existed — the
-    * explicit-schema read fills null): retention must treat it as
-    * in-window, never as expired, or an upgrade with a TTL would
-    * silently drop the entire pre-upgrade history from the screens.
-    * Shared by the text gate ([[dedupGateBatch]]) and the media gate
-    * ([[mediaGateBatch]]) — same lifecycle, different state kinds. */
-  private def priorStateOf(spark: SparkSession, histDir: String,
-                           kind: String, batchId: Long,
-                           opts: GateOptions): DataFrame = {
+    * contract), read from `dirs` as [[gateBatch]] resolved them; the
+    * explicit schema matters: a batch that admitted ZERO docs leaves a
+    * part-file-less directory and inference over only such dirs would
+    * fail. A null src_batch is a LEGACY row (state written before the
+    * provenance column existed — the explicit-schema read fills null):
+    * retention must treat it as in-window, never as expired, or an
+    * upgrade with a TTL would silently drop the entire pre-upgrade
+    * history from the screens. */
+  private def priorStateOf(spark: SparkSession, kind: String,
+                           dirs: Seq[org.apache.hadoop.fs.Path],
+                           batchId: Long, opts: GateOptions): DataFrame = {
     val empty = emptyState(spark, kind)
-    val dirs = stateDirs(spark, histDir, kind, batchId)
     val full =
       if (dirs.isEmpty) empty
       else spark.read.schema(empty.schema).parquet(dirs.map(_.toString): _*)
@@ -574,20 +607,19 @@ object Streams {
     * because both kinds are written together per batch, and compaction
     * REBUILDS the bloom generation from the digest generation (see
     * [[compactState]]), so a non-covering dir degrades to the
-    * unscreened join and self-heals at its first compaction. */
-  private def bloomScreenedDigests(spark: SparkSession, histDir: String,
-                                   batchId: Long, opts: GateOptions,
-                                   digests: DataFrame,
+    * unscreened join and self-heals at its first compaction. The
+    * check reads the same resolved `dirs` as the state reads. */
+  private def bloomScreenedDigests(opts: GateOptions,
+                                   dirs: Map[String, Seq[org.apache.hadoop.fs.Path]],
+                                   prior: String => DataFrame,
                                    probeDigests: DataFrame): DataFrame = {
-    def bloomCovers = {
-      val b = stateDirs(spark, histDir, "bloom", batchId)
-      b.nonEmpty && b.map(_.getName).toSet ==
-        stateDirs(spark, histDir, "digests", batchId).map(_.getName).toSet
-    }
-    if (!opts.bloomScreen || !bloomCovers) digests
+    val digests = prior("digests")
+    val bloom = dirs("bloom")
+    val covers = bloom.nonEmpty &&
+      bloom.map(_.getName).toSet == dirs("digests").map(_.getName).toSet
+    if (!opts.bloomScreen || !covers) digests
     else {
-      val bits = priorStateOf(spark, histDir, "bloom", batchId, opts)
-        .select(col("pos")).distinct()
+      val bits = prior("bloom").select(col("pos")).distinct()
       val positive = graft.dedup.Dedup.bloomMembers(
           probeDigests.select(col("h").as("id"), col("h").as("key")),
           bits, BloomK, BloomBits)
@@ -641,75 +673,43 @@ object Streams {
 
   /** ONE micro-batch of the media gate — the foreachBatch body of
     * [[mediaIngestGate]], factored out like [[dedupGateBatch]] so the
-    * specs and scale probes can drive long batch sequences directly. */
+    * specs and scale probes can drive long batch sequences directly:
+    * the batch's [[graft.multimodal.MultimodalPack.mediaFpRowsOf]]
+    * rows screened through [[gateBatch]] with state kinds (digests,
+    * fps, bloom). */
   private[graft] def mediaGateBatch(spark: SparkSession, batch: DataFrame,
                                     batchId: Long, outDir: String,
                                     histDir: String,
                                     opts: GateOptions = GateOptions()): Unit = {
+    import graft.multimodal.{Multimodal, MultimodalPack}
     val media = batch.select(col("media_id"), col("content")).persist()
-    val digests = priorStateOf(spark, histDir, "digests", batchId, opts)
-    val fps = priorStateOf(spark, histDir, "fps", batchId, opts)
-    val digestsScreened = bloomScreenedDigests(spark, histDir, batchId,
-      opts, digests,
-      media.select(md5(graft.multimodal.Multimodal.hexOf(col("content")))
-        .as("h")).distinct())
-    val (decisionsRaw, newDigests, newFps) =
-      graft.multimodal.MultimodalPack.mediaGateWithState(
-        digestsScreened, fps, media)
-    val decisions = decisionsRaw.persist()
-    decisions.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    assertCommitted(spark, s"$outDir/batch=$batchId")
-    def writeState(kind: String, df: DataFrame): Unit = {
-      df.withColumn("src_batch", lit(batchId)).coalesce(4)
-        .write.mode("overwrite").parquet(s"$histDir/$kind/batch=$batchId")
-      assertCommitted(spark, s"$histDir/$kind/batch=$batchId")
+    gateBatch(spark, batchId, outDir, histDir, opts, Seq("fps"),
+      media.select(md5(Multimodal.hexOf(col("content"))).as("h")).distinct(),
+      mediaDecisionsLogSchema(spark), None) { (digests, prior) =>
+      val (decisions, newDigests, newFps) = MultimodalPack.mediaGateWithState(
+        digests, prior("fps"), MultimodalPack.mediaFpRowsOf(media))
+      (decisions, newDigests, Map("fps" -> newFps))
     }
-    writeState("digests", newDigests)
-    writeState("fps", newFps)
-    writeState("bloom",
-      graft.dedup.Dedup.bloomBits(newDigests.select(col("h").as("key")),
-        BloomK, BloomBits).select(col("pos")))
-    decisions.unpersist()
     media.unpersist()
-    if (opts.compactEvery > 0 && batchId > 0 &&
-        batchId % opts.compactEvery == 0) {
-      compactState(spark, histDir, batchId, opts,
-        kinds = Seq("digests", "fps", "bloom"))
-      if (opts.compactLogs)
-        compactLog(spark, outDir, batchId, mediaDecisionsLogSchema(spark),
-          stampSrcBatch = true)
-    }
-    graft.core.Caches.releaseTransients()
     ()
   }
 
   /** The media gate's decision-log schema (reader contract for
     * [[mediaIngestGate]]'s `outDir` — the decisions analog of
     * [[decisionsLogSchema]]). */
-  private def mediaDecisionsLogSchema(spark: SparkSession)
-      : org.apache.spark.sql.types.StructType =
+  private def mediaDecisionsLogSchema(spark: SparkSession): StructType =
     spark.range(0).select(col("id").as("media_id"), lit("").as("status"),
       col("id").as("best_hist_id"), col("id").as("best_hamming"),
       col("id").as("src_batch")).schema
 
-  /** The full decision history of a [[mediaIngestGate]] run — resolves
-    * generation or live layout exactly like [[readDecisionsLog]]. */
-  def readMediaDecisionsLog(spark: SparkSession, outDir: String): DataFrame = {
-    val schema = mediaDecisionsLogSchema(spark)
-    val dirs = resolveGenDirs(spark, outDir, Long.MaxValue)
-    if (dirs.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema)
-    else dirs.map { p =>
-      val df = spark.read.schema(schema).parquet(p.toString)
-      idOf(p.getName, "batch=")
-        .fold(df)(id => df.withColumn("src_batch",
-          coalesce(col("src_batch"), lit(id))))
-    }.reduce(_ unionByName _)
-  }
+  /** The full decision history of a [[mediaIngestGate]] run — the
+    * [[readDecisionsLog]] contract over the media decision schema. */
+  def readMediaDecisionsLog(spark: SparkSession, outDir: String): DataFrame =
+    readLog(spark, resolveGenDirs(spark, outDir, Long.MaxValue),
+      mediaDecisionsLogSchema(spark), stampSrcBatch = true)
 
-  /** Fold all committed state (ids ≤ batchId−1) of every kind into
-    * `gen=<batchId−1>` and delete the covered subdirs. Idempotent
+  /** Fold all committed state (ids ≤ batchId−1) of each of `kinds`
+    * into `gen=<batchId−1>` and delete the covered subdirs. Idempotent
     * under foreachBatch replay: an already-committed target is never
     * re-read-and-overwritten in place (read-lazy overwrite of one's
     * own input corrupts it — the skip also makes replay cheap), a
@@ -720,9 +720,7 @@ object Streams {
     * physically dropped here. */
   private[graft] def compactState(spark: SparkSession, histDir: String,
                                   batchId: Long, opts: GateOptions,
-                                  kinds: Seq[String] =
-                                    Seq("digests", "sigs", "shingles",
-                                      "bloom")): Unit = {
+                                  kinds: Seq[String]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val genId = batchId - 1
     // digests FIRST: the bloom generation below derives from it
@@ -769,25 +767,33 @@ object Streams {
           pruned.repartition(nFiles)
             .write.mode("overwrite").parquet(target.toString)
         }
-        if (fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))) {
-          fs.listStatus(root).toSeq.filter(_.isDirectory).foreach { s =>
-            val n = s.getPath.getName
-            // only COMMITTED batch dirs are covered by the new
-            // generation (uncommitted ones were skipped by the fold —
-            // deleting them would destroy the only repair source);
-            // an uncommitted gen= dir is a failed target whose
-            // sources were preserved at the time, pure garbage
-            val inRange = idOf(n, "batch=").exists(_ <= genId)
-            val committed = fs.exists(
-              new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS"))
-            val covered = (inRange && committed) ||
-              idOf(n, "gen=").exists(_ < genId)
-            if (covered) { fs.delete(s.getPath, true); () }
-            else if (inRange && !committed) warnPreserved(s.getPath)
-          }
-        }
+        sweepCovered(fs, root, genId)
       }
     }
+  }
+
+  /** Once `gen=<genId>` under `root` is committed, delete what it
+    * covers: every COMMITTED `batch=` dir up to `genId` and every older
+    * generation. Uncommitted `batch=` dirs in range were skipped by the
+    * fold (deleting them would destroy the only repair source), so
+    * they survive with a warning; an uncommitted `gen=` dir is a failed
+    * target whose sources were preserved at the time, pure garbage.
+    * The one sweep of the state kinds and the logs. */
+  private def sweepCovered(fs: org.apache.hadoop.fs.FileSystem,
+                           root: org.apache.hadoop.fs.Path,
+                           genId: Long): Unit = {
+    val target = new org.apache.hadoop.fs.Path(root, s"gen=$genId")
+    if (fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS")))
+      fs.listStatus(root).toSeq.filter(_.isDirectory).foreach { s =>
+        val n = s.getPath.getName
+        val inRange = idOf(n, "batch=").exists(_ <= genId)
+        val committed = fs.exists(
+          new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS"))
+        val covered = (inRange && committed) ||
+          idOf(n, "gen=").exists(_ < genId)
+        if (covered) { fs.delete(s.getPath, true); () }
+        else if (inRange && !committed) warnPreserved(s.getPath)
+      }
   }
 
   /** An uncommitted dir a compaction sweep PRESERVES (it was never
@@ -816,14 +822,12 @@ object Streams {
     * columns plus `src_batch` provenance (null in live `batch=` dirs —
     * the reader stamps it from the directory name; materialized in
     * `gen=` dirs by [[compactLog]]). */
-  private def decisionsLogSchema(spark: SparkSession)
-      : org.apache.spark.sql.types.StructType =
+  private def decisionsLogSchema(spark: SparkSession): StructType =
     spark.range(0).select(col("id").as("doc_id"), lit("").as("status"),
       col("id").as("best_hist_id"), lit(0.0).as("best_jaccard"),
       col("id").as("src_batch")).schema
 
-  private def summaryLogSchema(spark: SparkSession)
-      : org.apache.spark.sql.types.StructType =
+  private def summaryLogSchema(spark: SparkSession): StructType =
     spark.range(0).select(col("id").as("batch_id"), col("id").as("n_seen"),
       col("id").as("n_new"), col("id").as("n_dup_of_history"),
       col("id").as("n_dup_in_batch"), col("id").as("n_near_dup_of_history"),
@@ -838,49 +842,21 @@ object Streams {
     * the live-read path skips it), an already-committed generation is
     * never re-read-and-overwritten, deletes only after commit, file
     * count from real bytes. No retention pruning — the log is an
-    * append-only audit record. `stampSrcBatch` fills the decisions'
-    * provenance column from each source directory's name (summary
-    * rows already carry `batch_id` per row). */
+    * append-only audit record. */
   private def compactLog(spark: SparkSession, root: String, batchId: Long,
-                         schema: org.apache.spark.sql.types.StructType,
-                         stampSrcBatch: Boolean): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
+                         schema: StructType, stampSrcBatch: Boolean): Unit = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
+    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(rootPath)) {
       val genId = batchId - 1
       val target = new org.apache.hadoop.fs.Path(rootPath, s"gen=$genId")
-      val committed =
-        fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))
       val sources = resolveGenDirs(spark, root, batchId)
-      if (!committed && sources.nonEmpty) {
-        val folded = sources.map { p =>
-          val df = spark.read.schema(schema).parquet(p.toString)
-          idOf(p.getName, "batch=") match {
-            case Some(id) if stampSrcBatch =>
-              df.withColumn("src_batch",
-                coalesce(col("src_batch"), lit(id)))
-            case _ => df
-          }
-        }.reduce(_ unionByName _)
-        folded.repartition(genFileCount(fs, sources))
+      if (!fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS")) &&
+          sources.nonEmpty)
+        readLog(spark, sources, schema, stampSrcBatch)
+          .repartition(genFileCount(fs, sources))
           .write.mode("overwrite").parquet(target.toString)
-      }
-      if (fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))) {
-        fs.listStatus(rootPath).toSeq.filter(_.isDirectory).foreach { s =>
-          val n = s.getPath.getName
-          // same repair discipline as [[compactState]]: an
-          // uncommitted batch= dir was never folded, so it must
-          // survive the sweep
-          val inRange = idOf(n, "batch=").exists(_ <= genId)
-          val committed = fs.exists(
-            new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS"))
-          val covered = (inRange && committed) ||
-            idOf(n, "gen=").exists(_ < genId)
-          if (covered) { fs.delete(s.getPath, true); () }
-          else if (inRange && !committed) warnPreserved(s.getPath)
-        }
-      }
+      sweepCovered(fs, rootPath, genId)
     }
   }
 
@@ -892,6 +868,27 @@ object Streams {
     compactLog(spark, root, batchId, decisionsLogSchema(spark),
       stampSrcBatch = true)
 
+  /** A gate log's rows over resolved generation-layout `dirs`, read
+    * with `schema` — the one reader behind [[readDecisionsLog]],
+    * [[readMediaDecisionsLog]], [[readSummaryLog]] and the
+    * [[compactLog]] fold. `stampSrcBatch` fills the decisions'
+    * provenance column from each live `batch=` dir's name, so the
+    * column is total (summary rows carry `batch_id` natively). */
+  private def readLog(spark: SparkSession,
+                      dirs: Seq[org.apache.hadoop.fs.Path],
+                      schema: StructType, stampSrcBatch: Boolean): DataFrame =
+    if (dirs.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        schema)
+    else dirs.map { p =>
+      val df = spark.read.schema(schema).parquet(p.toString)
+      idOf(p.getName, "batch=") match {
+        case Some(id) if stampSrcBatch =>
+          df.withColumn("src_batch", coalesce(col("src_batch"), lit(id)))
+        case _ => df
+      }
+    }.reduce(_ unionByName _)
+
   /** The FULL decision history of a [[dedupIngestGate]] run — the
     * reader-side contract for `outDir`: resolves the newest committed
     * generation plus every live `batch=` dir (either layout — with or
@@ -899,30 +896,15 @@ object Streams {
     * live directory names so the column is total. This listing is
     * O(compactEvery) dirs under compaction and O(batches) without —
     * exactly the growth [[GateOptions.compactLogs]] exists to bound. */
-  def readDecisionsLog(spark: SparkSession, outDir: String): DataFrame = {
-    val schema = decisionsLogSchema(spark)
-    val dirs = resolveGenDirs(spark, outDir, Long.MaxValue)
-    if (dirs.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema)
-    else dirs.map { p =>
-      val df = spark.read.schema(schema).parquet(p.toString)
-      idOf(p.getName, "batch=")
-        .fold(df)(id => df.withColumn("src_batch",
-          coalesce(col("src_batch"), lit(id))))
-    }.reduce(_ unionByName _)
-  }
+  def readDecisionsLog(spark: SparkSession, outDir: String): DataFrame =
+    readLog(spark, resolveGenDirs(spark, outDir, Long.MaxValue),
+      decisionsLogSchema(spark), stampSrcBatch = true)
 
   /** The full run-summary history (`outDir_summary`) under either
     * layout; rows carry `batch_id` natively, so no stamping. */
-  def readSummaryLog(spark: SparkSession, outDir: String): DataFrame = {
-    val schema = summaryLogSchema(spark)
-    val dirs = resolveGenDirs(spark, s"${outDir}_summary", Long.MaxValue)
-    if (dirs.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema)
-    else spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
-  }
+  def readSummaryLog(spark: SparkSession, outDir: String): DataFrame =
+    readLog(spark, resolveGenDirs(spark, s"${outDir}_summary", Long.MaxValue),
+      summaryLogSchema(spark), stampSrcBatch = false)
 
   /** The per-batch ingest RUN SUMMARY — the reference agent's
     * run-metrics/Dashboard stage (`ocr_agent_8_29.py:28-33`: per-run

@@ -252,7 +252,7 @@ class DedupSpec extends AnyFunSuite {
         .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     }
     def collapsed(c: org.apache.spark.sql.DataFrame): Map[Double, Long] =
-      DedupPack.pairBandCountsOf(spark, c)
+      DedupPack.pairBandCountsOf(spark, c, DedupPack.shingleRowsOf(c))
         .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     val aug = DedupPack.augmented(spark, sf, spread = false)
     val base = collapsed(aug)
@@ -278,7 +278,8 @@ class DedupSpec extends AnyFunSuite {
         Option(r.get(2)).map(_.asInstanceOf[Double]),
         Option(r.get(3)).map(_.asInstanceOf[Double]))).toSeq
     val aug = DedupPack.augmented(spark, sf, spread = false)
-    val base = rows(DedupPack.minhashFidelityOf(spark, aug))
+    val base = rows(DedupPack.minhashFidelityOf(spark, aug,
+      DedupPack.minhashRowsOf(aug), DedupPack.shingleRowsOf(aug)))
     assert(base.map(_._2).sum > 0, "planted dups must produce candidates")
     // the m=12 row holds the 50 exact-dup cliques (J=1) plus the
     // near-copies coarse 12-seed signatures cannot separate — its
@@ -293,7 +294,8 @@ class DedupSpec extends AnyFunSuite {
       aug.select((col("doc_id") + org.apache.spark.sql.functions
         .lit(k * 10000000L)).as("doc_id"), col("text"))
     }.reduce(_ unionByName _)
-    val r3 = rows(DedupPack.minhashFidelityOf(spark, rep3))
+    val r3 = rows(DedupPack.minhashFidelityOf(spark, rep3,
+      DedupPack.minhashRowsOf(rep3), DedupPack.shingleRowsOf(rep3)))
     // direct path: run the SAME collapse-free computation by making
     // every doc its own class (distinct ids, distinct texts is not
     // true here, so instead compare against the 1x report scaled
@@ -356,6 +358,26 @@ class DedupSpec extends AnyFunSuite {
     assert(banded == allPairs)
     assert(banded.nonEmpty)
     sims.unpersist()
+  }
+
+  test("shingle, minhash and band-signature artifacts filtered to id >= 300 " +
+      "equal the shared derivations over the filtered corpus") {
+    // the identity the s09/d19 twins and the stream gate rely on: the
+    // twins id-filter the session artifacts, the stream derives the
+    // same rows over each arriving batch
+    val aug = DedupPack.augmented(spark, sf)
+    val batch = aug.filter(col("doc_id") >= 300)
+    def same(a: org.apache.spark.sql.DataFrame,
+             b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.count() > 0)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
+    same(DedupPack.augShingleRows(spark, sf).filter(col("id") >= 300),
+      DedupPack.shingleRowsOf(batch))
+    same(DedupPack.augMinhashRows(spark, sf).filter(col("id") >= 300),
+      DedupPack.minhashRowsOf(batch))
+    same(DedupPack.augBandSigs(spark, sf).filter(col("id") >= 300),
+      DedupPack.bandSigsOf(batch, "id"))
   }
 
   test("simhash word-hash artifact path is row-identical to the inline " +

@@ -102,6 +102,19 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
+  test("the gate fingerprint artifact filtered to media_id >= 300 equals " +
+      "the media derivation over the filtered fixture") {
+    // the identity s12 and the streaming media gate rely on: s12
+    // id-filters the artifact, the stream derives each batch's rows
+    val batch = MultimodalPack.gateMedia(spark, sf)
+      .filter(col("media_id") >= 300)
+    val art = MultimodalPack.gateMediaFps(spark, sf)
+      .filter(col("media_id") >= 300)
+    val derived = MultimodalPack.mediaFpRowsOf(batch)
+    assert(art.count() > 0)
+    assert(art.exceptAll(derived).isEmpty && derived.exceptAll(art).isEmpty)
+  }
+
   test("mm06: perceptual dHash catches the planted re-encode/resize " +
       "twins that exact md5 misses") {
     import graft.multimodal.Multimodal

@@ -12,17 +12,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * the session's experimental hooks. Environment reads stay in the
   * harness mains (data and output paths, the query filter) and the
   * session factory (the CPU count), so no process-wide knob can change
-  * what a query computes. An approximate search takes its trained
-  * index as a required argument, never an optional frame it would
-  * train inline when absent. A scan of the main sources keeps it that
-  * way. */
+  * what a query computes. No function takes an optional frame it
+  * would derive inline when absent: an approximate search takes its
+  * trained index, and an ingest screen its batch's derived rows, as
+  * required arguments. A scan of the main sources keeps it that way. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val builder = """SparkSession\s*\.\s*builder""".r
   private val hookAssign =
     """experimental\s*\.\s*extra(Strategies|Optimizations)\s*=(?!=)""".r
   private val envRead = """sys\s*\.\s*env\b|System\s*\.\s*getenv\b""".r
-  private val optionalFrame = """Option\s*\[\s*DataFrame\s*\]\s*=\s*None\b""".r
+  private val optionalFrame = """\w\s*:\s*Option\s*\[\s*DataFrame\s*\]""".r
   private val envReaders = Seq(Paths.get("Bench.scala"),
     Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
     Paths.get("core", "GraftSession.scala"))
@@ -51,7 +51,14 @@ class SessionGuardSpec extends AnyFunSuite {
       "centroidsOpt: Option[DataFrame] = None)").nonEmpty)
     assert(optionalFrame.findFirstIn(
       "statsOpt: Option[ DataFrame ]=None,").nonEmpty)
+    assert(optionalFrame.findFirstIn(
+      "batchSigs: Option[DataFrame],").nonEmpty)
+    assert(optionalFrame.findFirstIn(
+      "batchShingles: Option[DataFrame])").nonEmpty)
+    assert(optionalFrame.findFirstIn(
+      "batchFps:\n    Option[DataFrame] = None)").nonEmpty)
     assert(optionalFrame.findFirstIn("stats: DataFrame,").isEmpty)
+    assert(optionalFrame.findFirstIn("dirs: Option[Seq[DataFrame]]").isEmpty)
   }
 
   test("only core/GraftSession.scala builds a SparkSession; nothing assigns " +
@@ -78,12 +85,8 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
-  test("no vector search takes an optional index frame: every index is " +
-      "built by its builder and passed in") {
-    val root = Paths.get("src/main/scala", "graft", "vector")
-    val vector = mainSources.filter(_.startsWith(root))
-    assert(vector.nonEmpty, s"$root has no sources")
-    val offenders = vector
+  test("no main source takes an optional DataFrame parameter") {
+    val offenders = mainSources
       .filter(f => optionalFrame.findFirstIn(Files.readString(f)).nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
