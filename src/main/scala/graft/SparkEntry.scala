@@ -49,7 +49,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  private[graft] def oracleSql: Map[String, String] =
     packs.flatMap(_.oracles).toMap
 
   /** Dir-aware form — Verify dumps THIS for its data dir, so oracles

@@ -11,13 +11,16 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = core.GraftSession.local()
     new java.io.File(outDir).mkdirs()
+    val failures = Seq.newBuilder[(String, Throwable)]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        failures += name -> e
       }
       // sweep per-query transient/cut blocks exactly like Bench does:
       // ~192 queries in one JVM would otherwise pin every cut
@@ -39,6 +42,12 @@ object Verify {
     val json = SparkEntry.oracleSqlFor(sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // one machine-readable line naming every failed query, on stderr
+    // so the files under outDir stay exactly the query outputs
+    System.err.println(failures.result().map { case (name, e) =>
+      s"{${q("query")}: ${q(name)}, ${q("exception")}: ${q(e.getClass.getName)}, " +
+        s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
+    }.mkString("""{"verify_failures": [""", ", ", "]}"))
     spark.stop()
   }
 }

@@ -43,7 +43,7 @@ object Dedup {
     * declarative cross-check (spec-asserted equal); three nested
     * lambda evaluations per shingle made it the dedup family's
     * dominant cost. */
-  def shinglesDeclarative(text: Column, k: Int): Column = {
+  private[graft] def shinglesDeclarative(text: Column, k: Int): Column = {
     val ws = TextOps.words(text)
     when(size(ws) >= k,
       transform(sequence(lit(1), size(ws) - (k - 1)),
@@ -66,12 +66,14 @@ object Dedup {
     * from |A|+|B|−|A∩B|. The text form stays because the d03 groups
     * artifact ([[DedupPack.groupsViaExactCollapse]]) mines pairs over
     * the representative corpus, which no shared shingle artifact
-    * covers. */
-  def jaccardPairs(df: DataFrame, id: Column, text: Column,
-                   k: Int = 3, threshold: Double = 0.5): DataFrame =
+    * covers. Pairs are over word 3-shingles. */
+  def jaccardPairs(df: DataFrame, id: Column, text: Column): DataFrame =
     // hash BEFORE the (single) distinct: dedup-ing the string rows
     // first would just add a second shuffle for the same result set
-    jaccardPairsFromHashed(hashedShingleRows(df, id, text, k), threshold)
+    jaccardPairsFromHashed(hashedShingleRows(df, id, text))
+
+  /** The near-duplicate Jaccard cut every pair miner applies. */
+  private val JaccardThreshold = 0.5
 
   /** Distinct (id, 60-bit-hashed shingle) rows — the inverted-index
     * relation. Materialize ONCE and share when several consumers need
@@ -86,7 +88,7 @@ object Dedup {
       .distinct()
 
   /** [[jaccardPairs]] over a pre-built [[hashedShingleRows]] relation. */
-  def jaccardPairsFromHashed(hashed: DataFrame, threshold: Double = 0.5,
+  def jaccardPairsFromHashed(hashed: DataFrame,
                              maxShingleDocFreq: Int = Int.MaxValue): DataFrame = {
     val (sizes, inter) =
       if (maxShingleDocFreq == Int.MaxValue) {
@@ -130,7 +132,7 @@ object Dedup {
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= JaccardThreshold)
       .select(col("a_id"), col("b_id"), col("inter"), col("na"), col("nb"),
         round(col("jaccard"), 6).as("jaccard"))
   }
@@ -261,6 +263,9 @@ object Dedup {
       .filter(col("nhit") === k)
       .select(col("id"), col("key"))
 
+  /** Span length, in words, of [[substringDedup]]'s shingles. */
+  private val SubstringK = 10
+
   /** Exact substring dedup — the REMOVAL transform behind Lee et al.
     * 2022 ("Deduplicating Training Data Makes Language Models
     * Better"): repeated long spans are cut from every document except
@@ -280,8 +285,8 @@ object Dedup {
     * (the flattenPages shape). At corpus scale the stop-shingle cap
     * applies to the df relation exactly as in d07. Deterministic and
     * fully SQL-replayable. */
-  def substringDedup(df: DataFrame, id: Column, text: Column,
-                     k: Int = 10): DataFrame = {
+  def substringDedup(df: DataFrame, id: Column, text: Column): DataFrame = {
+    val k = SubstringK
     // tokenization is the full text pass — cache it, two consumers
     // below (positions and the final n_words join)
     val words = graft.core.Caches.transient(
@@ -344,8 +349,12 @@ object Dedup {
     * collects. The threshold is an edge COUNT measured via
     * `limit(max+1)` — one materialization either way, never a
     * full-count job on an above-threshold graph. */
-  def dedupGroups(pairs: DataFrame, maxIters: Int = 50): DataFrame =
-    dedupGroupsWithRounds(pairs, maxIters)._1
+  def dedupGroups(pairs: DataFrame): DataFrame =
+    dedupGroupsWithRounds(pairs)._1
+
+  /** Round bound of the distributed pointer-jumping loop: it reaches
+    * its fixpoint in O(log diameter) rounds, far below this. */
+  private val MaxIters = 50
 
   /** Max pair-edges resolved driver-side: 4M edges × 16 bytes = 64 MB
     * — the repo's bounded-collect budget (broadcast-index discipline,
@@ -354,10 +363,8 @@ object Dedup {
     * distributed loop takes over with no API change. */
   private[graft] val CollectMaxEdges = 4000000
 
-  private[graft] def dedupGroupsWithRounds(pairs: DataFrame,
-                                           maxIters: Int = 50,
-                                           collectMax: Int = CollectMaxEdges)
-      : (DataFrame, Int) = {
+  private[graft] def dedupGroupsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
+    val collectMax = CollectMaxEdges
     val spark = pairs.sparkSession
     val sample = pairs
       .select(col("a_id").cast("long"), col("b_id").cast("long"))
@@ -388,11 +395,10 @@ object Dedup {
       import spark.implicits._
       return (out.toDF("doc_id", "keeper_id"), 0)
     }
-    dedupGroupsDistributed(pairs, maxIters)
+    dedupGroupsDistributed(pairs)
   }
 
-  private[graft] def dedupGroupsDistributed(pairs: DataFrame,
-                                            maxIters: Int = 50): (DataFrame, Int) = {
+  private[graft] def dedupGroupsDistributed(pairs: DataFrame): (DataFrame, Int) = {
     val edges = pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
@@ -401,7 +407,7 @@ object Dedup {
       .select(col("id"), col("id").as("label")).cache()
     var changed = 1L
     var iter = 0
-    while (changed > 0 && iter < maxIters) {
+    while (changed > 0 && iter < MaxIters) {
       // One join + one aggregation per round. The propagation edge set
       // is edges ∪ self-loops (id→id: keep own label) ∪ jump edges
       // (label(id)→id: pull label(label(id)) — pointer jumping), so

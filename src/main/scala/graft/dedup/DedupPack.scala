@@ -310,7 +310,9 @@ object DedupPack extends QueryPack {
     * joins. History arrives as its PERSISTED derived relations
     * (digest set, band signatures, hashed shingles) — per batch,
     * history text is never rescanned and history signatures never
-    * recomputed. The batch arrives as (doc_id, text) plus its
+    * recomputed. The batch arrives as its digest (doc_id, h) rows
+    * ([[digestRowsOf]] — the streaming caller derives its Bloom probe
+    * from the same frame, so each row is digested once), plus its
     * signature (doc_id, band, bandsig) and shingle (id, sh) rows over
     * the WHOLE batch ([[bandSigsOf]] / [[shingleRowsOf]], or id-filters
     * of the session artifacts in the s09 twin); the screen semi-joins
@@ -340,12 +342,11 @@ object DedupPack extends QueryPack {
   private[graft] def dedupGateWithState(histDigests: DataFrame,
                                         histSigs: DataFrame,
                                         histShingles: DataFrame,
-                                        batch: DataFrame,
+                                        batchDigests: DataFrame,
                                         batchSigs: DataFrame,
                                         batchShingles: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val b = graft.core.Caches.transient(
-      batch.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h")))
+    val b = graft.core.Caches.transient(batchDigests)
     val firstInBatch = b.groupBy(col("h"))
       .agg(min(col("doc_id")).as("first_id"))
     val hd = histDigests.select(col("h")).distinct()
@@ -398,14 +399,20 @@ object DedupPack extends QueryPack {
     (decisions, newDigests, newSigs, newShingles)
   }
 
+  /** (doc_id, h) content-digest rows of a (doc_id, text) frame — the
+    * ONE digest derivation of the gates' exact screen: the streaming
+    * gate, its s09 twin and [[dedupGateOf]] all call it. */
+  private[graft] def digestRowsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h"))
+
   /** [[dedupGateWithState]]'s decisions with both sides' state derived
     * from (doc_id, text) relations by the shared derivations — the
     * spec twin's entry. */
   private[graft] def dedupGateOf(hist: DataFrame,
                                  batch: DataFrame): DataFrame =
     dedupGateWithState(
-      hist.select(Dedup.contentDigest(col("text")).as("h")),
-      bandSigsOf(hist, "hist_id"), shingleRowsOf(hist), batch,
+      digestRowsOf(hist).select(col("h")),
+      bandSigsOf(hist, "hist_id"), shingleRowsOf(hist), digestRowsOf(batch),
       bandSigsOf(batch, "doc_id"), shingleRowsOf(batch))._1
 
   /** Session-scoped Jaccard-pair artifact: d02 reports the pairs, d08
@@ -413,8 +420,7 @@ object DedupPack extends QueryPack {
     * `exactSelfTop3` discipline). */
   private def jaccardPairsArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"jaccard_pairs:$dir")(
-      Dedup.jaccardPairsFromHashed(augShingleRows(spark, dir),
-        threshold = 0.5))
+      Dedup.jaccardPairsFromHashed(augShingleRows(spark, dir)))
 
   /** n-gram Jaccard near-dup pairs (finds the planted near-copies). */
   def jaccard(spark: SparkSession, dir: String): DataFrame =
@@ -482,7 +488,7 @@ object DedupPack extends QueryPack {
     * the same oracle discipline as the uncapped variant. */
   def jaccardStopShingle(spark: SparkSession, dir: String): DataFrame =
     Dedup.jaccardPairsFromHashed(augShingleRows(spark, dir),
-        threshold = 0.5, maxShingleDocFreq = 20)
+        maxShingleDocFreq = 20)
       .orderBy(col("a_id"), col("b_id"))
 
   /** d20: the BOUNDED-OUTPUT datasheet twin of the d02 pair report —
@@ -529,7 +535,7 @@ object DedupPack extends QueryPack {
     // derivation, distinct commutes with the id filter)
     val repSh = corpusShingles.join(
       reps.select(col("rep_id").as("id")), Seq("id"), "left_semi")
-    val cross = Dedup.jaccardPairsFromHashed(repSh, threshold = 0.5)
+    val cross = Dedup.jaccardPairsFromHashed(repSh)
       .join(reps.select(col("rep_id").as("a_id"), col("m").as("ma")), Seq("a_id"))
       .join(reps.select(col("rep_id").as("b_id"), col("m").as("mb")), Seq("b_id"))
       .select(floor(col("jaccard") * 10).cast("long").as("b10"),
@@ -695,7 +701,7 @@ object DedupPack extends QueryPack {
     * and reassembly. */
   def substringDedupQuery(spark: SparkSession, dir: String): DataFrame =
     Dedup.substringDedup(augmented(spark, dir, spread = false),
-      col("doc_id"), col("text"), 10)
+      col("doc_id"), col("text"))
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id"))
 
@@ -739,7 +745,7 @@ object DedupPack extends QueryPack {
     val repCorpus = corpus
       .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"))
     val repGroups = Dedup.dedupGroups(Dedup.jaccardPairs(repCorpus,
-      col("doc_id"), col("text"), k = 3, threshold = 0.5))
+      col("doc_id"), col("text")))
     // membership contract unchanged: a doc appears iff it is in some
     // FULL pair — intra-class (class size ≥ 2) or via its rep's pair
     classes.join(reps, Seq("h"))

@@ -73,11 +73,11 @@ object Ingest {
   }
 
   /** S8: per-document flatten — pages ordered by `orderCol`, joined with
-    * `sep`. One shuffle; `array_sort` on (order, text) structs keeps the
-    * aggregation partial/combinable (vs. a window + distinct).
+    * newlines. One shuffle; `array_sort` on (order, text) structs keeps
+    * the aggregation partial/combinable (vs. a window + distinct).
     */
   def flattenPages(pages: DataFrame, key: Column, orderCol: Column,
-                   text: Column, sep: String = "\n"): DataFrame =
+                   text: Column): DataFrame =
     pages
       .groupBy(key.as("fn"))
       .agg(
@@ -85,11 +85,7 @@ object Ingest {
           transform(
             array_sort(collect_list(struct(orderCol.as("o"), text.as("t")))),
             x => x.getField("t")),
-          sep).as("full_text"))
-
-  /** P9: column-name normalization (`remove_paranthesis.py:30`). */
-  def normalizeColumnNames(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.trim.toLowerCase).toIndexedSeq: _*)
+          "\n").as("full_text"))
 
   /** P8: rename columns by map, then project to a target schema order;
     * missing targets become nulls (schema-aligning union prep,

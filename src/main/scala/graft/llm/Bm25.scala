@@ -37,10 +37,15 @@ import graft.text.TextOps
   */
 object Bm25 {
 
-  /** Top-`k` BM25 hits per query. `docs` carries (doc_id, text);
+  /** Hits kept per query, and the Robertson–Zaragoza defaults for
+    * term-frequency saturation (k1) and length normalization (b). */
+  private val K = 5
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** Top-[[K]] BM25 hits per query. `docs` carries (doc_id, text);
     * `queryTerms` carries distinct (query_id, term) rows. */
-  def topK(docs: DataFrame, queryTerms: DataFrame, k: Int = 5,
-           k1: Double = 1.2, b: Double = 0.75,
+  def topK(docs: DataFrame, queryTerms: DataFrame,
            maxTermDocFreq: Long = Long.MaxValue): DataFrame = {
     val w = docs.select(col("doc_id"), TextOps.words(col("text")).as("words"))
     val tokens = w.select(col("doc_id"), explode(col("words")).as("term"))
@@ -54,22 +59,22 @@ object Bm25 {
     val avgdl: Column = col("sdl").cast("double") / col("n").cast("double")
     val idf: Column = log(lit(1.0) +
       (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val norm: Column = col("tf") + lit(k1) *
-      ((lit(1.0) - lit(b)) + lit(b) * (col("dl").cast("double") / avgdl))
+    val norm: Column = col("tf") + lit(K1) *
+      ((lit(1.0) - lit(B)) + lit(B) * (col("dl").cast("double") / avgdl))
     val perTerm = queryTerms
       .join(postings, Seq("term"))
       .join(dfr, Seq("term"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(stats))
       .select(col("query_id"), col("doc_id"),
-        round(idf * ((col("tf") * lit(k1 + 1)) / norm), 9)
+        round(idf * ((col("tf") * lit(K1 + 1)) / norm), 9)
           .cast("decimal(28,9)").as("ts"))
     val scored = perTerm.groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("ts")).cast("double").as("score"))
     val wr = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
     scored.withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= K)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("doc_id"), round(col("score"), 6).as("score"))
   }

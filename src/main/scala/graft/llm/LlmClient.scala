@@ -1,8 +1,5 @@
 package graft.llm
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
 /** LLM service boundary (SURVEY.md §2.9 L5).
   *
   * The reference calls a remote GenAI endpoint with retry/backoff,
@@ -68,31 +65,14 @@ object StubExtractor extends LlmClient {
   }
 }
 
-/** Fails the first `failTimes` attempts per distinct prompt, then
-  * delegates — exercising the retry path deterministically. */
-final class FlakyClient(inner: LlmClient, failTimes: Int) extends LlmClient {
-  def complete(prompt: String): String = {
-    val n = FlakyClient.attempts
-      .computeIfAbsent(prompt, _ => new AtomicInteger(0)).incrementAndGet()
-    if (n <= failTimes) throw new RuntimeException(s"flaky failure #$n")
-    inner.complete(prompt)
-  }
-  // responses (when they arrive) are inner's — share its cache identity
-  override def cacheKey: String = inner.cacheKey
-}
-object FlakyClient {
-  /** JVM-wide attempt counts (local-mode tests share one JVM). */
-  val attempts = new ConcurrentHashMap[String, AtomicInteger]()
-  def reset(): Unit = attempts.clear()
-}
-
 /** Retry with exponential backoff (reference: `2**retries` seconds,
-  * `ext_3_4.py:150-188` — scaled down here; production callers pass
-  * real delays). Retries are PER ROW: a failed row never re-invokes
+  * `ext_3_4.py:150-188` — scaled down here to 1 ms, 2 ms, 4 ms over
+  * three retries). Retries are PER ROW: a failed row never re-invokes
   * rows that already succeeded (Spark task retry is too coarse —
-  * SURVEY §7.4 note 4). */
-final class RetryingClient(inner: LlmClient, maxRetries: Int = 3,
-                           baseBackoffMs: Long = 1) extends LlmClient {
+  * SURVEY §7.4 note 4). The extraction stage calls its model through
+  * it. */
+final class RetryingClient(inner: LlmClient) extends LlmClient {
+  private val MaxRetries = 3
   override def cacheKey: String = inner.cacheKey
   def complete(prompt: String): String = {
     var attempt = 0
@@ -100,8 +80,8 @@ final class RetryingClient(inner: LlmClient, maxRetries: Int = 3,
       try return inner.complete(prompt)
       catch {
         case e: Exception =>
-          if (attempt >= maxRetries) throw e
-          Thread.sleep(baseBackoffMs * (1L << attempt))
+          if (attempt >= MaxRetries) throw e
+          Thread.sleep(1L << attempt)
           attempt += 1
       }
     }

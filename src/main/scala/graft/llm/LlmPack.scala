@@ -51,7 +51,8 @@ object LlmPack extends QueryPack {
   private[graft] def extractLongOn(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"), col("text"))
     val responses = LlmStage.complete(docs, col("doc_id"),
-      LlmStage.extractionPrompt(col("doc_id"), col("text")), StubExtractor)
+      LlmStage.extractionPrompt(col("doc_id"), col("text")),
+      new RetryingClient(StubExtractor))
     val parsed = docs
       .join(responses.withColumnRenamed("id", "doc_id"), Seq("doc_id"))
       .select(col("doc_id"), col("text"),
@@ -183,7 +184,7 @@ object LlmPack extends QueryPack {
 
   def bm25Retrieval(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents.select(col("doc_id"), col("text"))
-    Bm25.topK(docs, bm25QueryTerms(docs), 5)
+    Bm25.topK(docs, bm25QueryTerms(docs))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -202,7 +203,7 @@ object LlmPack extends QueryPack {
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("drank"))
     val docs = Tables(spark, dir).documents.select(col("doc_id"), col("text"))
-    val sparse = Bm25.topK(docs, bm25QueryTerms(docs), 5)
+    val sparse = Bm25.topK(docs, bm25QueryTerms(docs))
       .select(col("query_id"), col("doc_id"), col("rank").as("srank"))
     val rrf = coalesce(lit(1.0) / (lit(60L) + col("drank")), lit(0.0)) +
       coalesce(lit(1.0) / (lit(60L) + col("srank")), lit(0.0))
@@ -467,7 +468,7 @@ object LlmPack extends QueryPack {
     val t = Tables(spark, dir).documents
     val docs = t.select(col("doc_id"), col("text"))
     val srcs = t.select(col("doc_id"), col("source"))
-    val hits = Bm25.topK(docs, bm25QueryTerms(docs), 5)
+    val hits = Bm25.topK(docs, bm25QueryTerms(docs))
       .select(col("query_id"), col("doc_id"), col("rank"))
     val srcN = srcs.groupBy(col("source")).agg(count(lit(1)).as("src_n"))
     val q = srcs.filter(col("doc_id") < 20)

@@ -7,30 +7,32 @@ import org.apache.spark.sql.functions._
   *
   * Reference: `compute_ece` / `prepare_reliability_data` (repo-root
   * README.md:4-36 of the reference): probabilities are digitized into
-  * `bins` uniform buckets; per bucket we take mean predicted confidence,
+  * [[Bins]] uniform buckets; per bucket we take mean predicted confidence,
   * mean observed accuracy, and count; ECE = Σ (n_b/N)·|acc_b − conf_b|.
   *
-  * Pure groupBy/agg — one shuffle over at most `bins` groups, so it
+  * Pure groupBy/agg — one shuffle over at most [[Bins]] groups, so it
   * scales to any input size. Confidence means are computed from exact
   * decimal sums (the 2-decimal inputs here are lossless) so the result
   * is reproducible across partitionings.
   */
 object Calibration {
 
+  /** Uniform probability buckets, the reference's ten. */
+  private val Bins = 10
+
   /** The shared binning projection: (bin, p decimal, y long) — ONE
     * definition so the binning rule cannot drift between the
     * calibration operators (their SQL mirrors stay explicit per
     * query, as oracle strings must). */
-  private def binned(df: DataFrame, prob: Column, label: Column,
-                     bins: Int): DataFrame =
+  private def binned(df: DataFrame, prob: Column, label: Column): DataFrame =
     df.select(
-      least(floor(prob * bins), lit(bins - 1)).cast("int").as("bin"),
+      least(floor(prob * Bins), lit(Bins - 1)).cast("int").as("bin"),
       prob.cast("decimal(18,6)").as("p"),
       label.cast("long").as("y"))
 
   /** The ECE aggregation over per-bin (n, confidence, accuracy) rows:
     * |acc−conf|·n addends through a decimal(28,12) cast so the
-    * ≤`bins`-term sum is order-independent (and the oracle can
+    * ≤[[Bins]]-term sum is order-independent (and the oracle can
     * reproduce it exactly). Shared by ece/calibrationSummary/
     * temperatureScale. */
   private def eceOverBins: Column =
@@ -39,9 +41,8 @@ object Calibration {
       sum(col("n")).cast("double"))
 
   /** Per-bin reliability table: bin, n, avg confidence, avg accuracy. */
-  def reliabilityBins(df: DataFrame, prob: Column, label: Column,
-                      bins: Int = 10): DataFrame =
-    binned(df, prob, label, bins)
+  def reliabilityBins(df: DataFrame, prob: Column, label: Column): DataFrame =
+    binned(df, prob, label)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
         sum(col("p")).as("sp"),
@@ -52,8 +53,8 @@ object Calibration {
         (col("sy").cast("double") / col("n").cast("double")).as("accuracy"))
 
   /** Scalar ECE from the reliability bins (driver gets a 1-row frame). */
-  def ece(df: DataFrame, prob: Column, label: Column, bins: Int = 10): DataFrame =
-    reliabilityBins(df, prob, label, bins).agg(eceOverBins.as("ece"))
+  def ece(df: DataFrame, prob: Column, label: Column): DataFrame =
+    reliabilityBins(df, prob, label).agg(eceOverBins.as("ece"))
 
   /** ECE + MCE + Brier in one pass (the full calibration-summary tier
     * the reference plans in `meeting_6_11.py:14` — ECE itself is
@@ -61,14 +62,13 @@ object Calibration {
     * companions: MCE = worst-bin |acc−conf|, Brier = mean squared
     * error of the probability, Brier 1950).
     *
-    * One groupBy over ≤`bins` groups carrying (n, Σp, Σy, Σ(p−y)²);
+    * One groupBy over ≤[[Bins]] groups carrying (n, Σp, Σy, Σ(p−y)²);
     * the squared-error terms are IEEE-exact doubles rounded to 9
     * decimals and summed through decimals, so every emitted scalar is
     * partition-order-independent and oracle-replayable. */
-  def calibrationSummary(df: DataFrame, prob: Column, label: Column,
-                         bins: Int = 10): DataFrame = {
+  def calibrationSummary(df: DataFrame, prob: Column, label: Column): DataFrame = {
     val d = col("p").cast("double") - col("y").cast("double")
-    binned(df, prob, label, bins)
+    binned(df, prob, label)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
         sum(col("p")).as("sp"),
@@ -107,8 +107,7 @@ object Calibration {
     *
     * Returns one row: (t_star, nll_star, ece_before, ece_after). */
   def temperatureScale(fit: DataFrame, eval: DataFrame,
-                       prob: Column, label: Column,
-                       bins: Int = 10): DataFrame = {
+                       prob: Column, label: Column): DataFrame = {
     val zy = fit.select(logit9(prob).as("z"), label.cast("long").as("y"))
     val grid = fit.sparkSession.range(5, 201)
       .select((col("id").cast("double") * 0.05).as("t"))
@@ -139,7 +138,7 @@ object Calibration {
         col("r.pp").as("pp"), col("r.y").as("y"))
     val perWhichBin = long
       .groupBy(col("t_star"), col("nll_star"), col("which"),
-        least(floor(col("pp").cast("double") * bins), lit(bins - 1))
+        least(floor(col("pp").cast("double") * Bins), lit(Bins - 1))
           .cast("int").as("bin"))
       .agg(count(lit(1)).as("n"), sum(col("pp")).as("sp"), sum(col("y")).as("sy"))
       .select(col("t_star"), col("nll_star"), col("which"), col("n"),
@@ -159,13 +158,12 @@ object Calibration {
     * minimax closed form of weighted isotonic regression:
     * iso_i = max_{j≤i} min_{k≥i} (Σ_{l∈[j,k]} Σy_l)/(Σ_{l∈[j,k]} n_l)
     * — identical to pool-adjacent-violators on the binned data, but
-    * expressed as joins over the ≤`bins`-row bin relation (≤ bins³
+    * expressed as joins over the ≤[[Bins]]-row bin relation (≤ bins³
     * interval terms), so there is no sorted driver-side fold and no
     * single-partition global sort; every value is an integer-sum
     * ratio, exact on both engines. */
-  def isotonicBins(df: DataFrame, prob: Column, label: Column,
-                   bins: Int = 10): DataFrame = {
-    val perBin = binned(df, prob, label, bins)
+  def isotonicBins(df: DataFrame, prob: Column, label: Column): DataFrame = {
+    val perBin = binned(df, prob, label)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("p")).as("sp"), sum(col("y")).as("sy"))
     val members = perBin.select(col("bin").as("l"), col("n"), col("sy"))

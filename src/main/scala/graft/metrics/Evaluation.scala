@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   *    (`metrics_8_6.py:40-61`) — here a single `rollup` so the grand
   *    total is computed in the same shuffle as the groups;
   *  - n-way agreement rate between classifier outputs (`rag_6.py:108-128`);
-  *  - match-rate percentage (`ext_3_4.py:26-32`);
   *  - validation status classify MATCH / MISSING / FALSE_POSITIVE /
   *    MISMATCH (`ext_3_4.py:17-24`).
   *
@@ -24,13 +23,12 @@ object Evaluation {
     * `correct` must be an int/boolean-like 0/1 column. One shuffle; the
     * rollup grand total rides the same exchange as the per-group rows.
     */
-  def accuracyTable(df: DataFrame, field: Column, correct: Column,
-                    overallLabel: String = "Overall"): DataFrame =
+  def accuracyTable(df: DataFrame, field: Column, correct: Column): DataFrame =
     df.select(field.as("field"), correct.cast("long").as("c"))
       .rollup(col("field"))
       .agg(sum(col("c")).as("correct"), count(lit(1)).as("support"))
       .select(
-        coalesce(col("field"), lit(overallLabel)).as("field"),
+        coalesce(col("field"), lit("Overall")).as("field"),
         col("correct"),
         col("support"),
         (col("correct").cast("double") / col("support").cast("double")).as("accuracy"))
@@ -46,15 +44,6 @@ object Evaluation {
         col("agree"), col("total"),
         (col("agree").cast("double") / col("total").cast("double")).as("agreement_pct"))
   }
-
-  /** Match percentage of a boolean column (`ext_3_4.py:26-32`). */
-  def matchRate(df: DataFrame, isMatch: Column): DataFrame =
-    df.agg(
-      sum(when(isMatch, 1L).otherwise(0L)).as("matches"),
-      count(lit(1)).as("total"))
-      .select(
-        col("matches"), col("total"),
-        (col("matches").cast("double") / col("total").cast("double") * 100.0).as("pct"))
 
   /** MATCH / MISSING / FALSE_POSITIVE / MISMATCH (`ext_3_4.py:17-24`).
     * "NULL" (the string sentinel) and SQL null both count as absent. */

@@ -59,14 +59,13 @@ object MultimodalPack extends QueryPack {
     * oracle replays the prefix sum with a window — identical integer
     * arithmetic at test scale, the contrast between the two forms
     * being exactly the scale story. */
-  def shardPlan(spark: SparkSession, dir: String,
-                shardBytes: Long = 4096L): DataFrame = {
+  def shardPlan(spark: SparkSession, dir: String): DataFrame = {
     val m = Tables(spark, dir).documents
       .select(col("doc_id").as("media_id"),
         (octet_length(col("text")).cast("long") + lit(64L))
           .as("payload_bytes"))
     graft.text.SequencePacking
-      .packSequences(m, col("media_id"), col("payload_bytes"), shardBytes)
+      .packSequences(m, col("media_id"), col("payload_bytes"), ShardBytes)
       .groupBy(col("seq_id").as("shard_id"))
       .agg(count(lit(1)).as("n_items"),
         sum(col("n_tok")).as("shard_bytes"),
@@ -77,7 +76,8 @@ object MultimodalPack extends QueryPack {
       .orderBy(col("shard_id"))
   }
 
-  val ShardBytes = 4096L
+  /** The shard byte budget of mm04's plan and mm05's write. */
+  private[graft] val ShardBytes = 4096L
 
   /** mm05's write half: materialize mm04's plan — every (media, text)
     * sample lands in its assigned shard's OWN directory
@@ -85,15 +85,14 @@ object MultimodalPack extends QueryPack {
     * unit a training loader streams sequentially, the tar-shard
     * discipline mm04's scaladoc describes). Returns the dataset root.
     * Per-JVM fixture path, same race discipline as i08. */
-  private[graft] def shardedWriteDir(spark: SparkSession, dir: String,
-                                     shardBytes: Long = ShardBytes): String = {
+  private[graft] def shardedWriteDir(spark: SparkSession, dir: String): String = {
     val out = graft.core.TempDirs.fixtureRoot("mm_shards", dir)
     val docs = Tables(spark, dir).documents
       .select(col("doc_id").as("media_id"), col("text"))
     val m = docs.select(col("media_id"),
       (octet_length(col("text")).cast("long") + lit(64L)).as("payload_bytes"))
     val plan = graft.text.SequencePacking
-      .packSequences(m, col("media_id"), col("payload_bytes"), shardBytes)
+      .packSequences(m, col("media_id"), col("payload_bytes"), ShardBytes)
       .select(col("id").as("media_id"), col("seq_id").as("shard_id"),
         col("n_tok").as("payload_bytes"))
     // id-keyed join of the assignment back onto the payload — both
@@ -206,7 +205,7 @@ object MultimodalPack extends QueryPack {
     * requiring ONE CONSISTENT temporal offset (group by fa − fb)
     * that covers EVERY frame of the shorter video — offset-consistent
     * containment as a plain aggregation, no alignment loop. The whole
-    * body is [[clipContainment]] (shared with the mm08 audio form);
+    * body is [[clipContainmentFromUnits]] (shared with the mm08 audio form);
     * see its scaladoc for the scale shape, the in-join same-video
     * exclusion, and the representative-front scope. */
   def videoClipDups(spark: SparkSession, dir: String): DataFrame =
@@ -269,6 +268,27 @@ object MultimodalPack extends QueryPack {
       "scene_fps" -> sceneFps,
       "gate_media_fps" -> gateMediaFps)
 
+  /** ONE decode/fingerprint pass over the unit fan-out, projected to
+    * a COMPACT frame — (item, unit, digest, fingerprint), never the
+    * content bytes: localCheckpointing raw frames/windows is a §5
+    * memory/spill hazard at scale (r14 verdict finding 2); the
+    * containment decisions need only these proxy rows (guide §8). The
+    * repartition spreads the per-row fingerprint compute — content
+    * is tens of bytes/row while the fingerprint math is the cost, so
+    * byte-proportional splits would serialize it. Trade-off, chosen
+    * deliberately: fp is computed for every unit rather than only
+    * digest representatives — unit-level exact dups are near-zero in
+    * these fixtures (planted trims RE-encode, so bytes differ), and
+    * one pass with no binary checkpoint beats two passes with one;
+    * an exact-dup-heavy corpus would put a d18 digest collapse in
+    * front of the decode instead. */
+  private[graft] def unitFps(units: DataFrame,
+                             fp: Column => Column): DataFrame =
+    units.repartition(units.sparkSession.sparkContext.defaultParallelism)
+      .select(col("item_id"), col("unit_idx"),
+        md5(Multimodal.hexOf(col("content"))).as("d"),
+        fp(col("content")).as("simhash"))
+
   /** Offset-consistent clip containment over any per-unit media
     * relation `(item_id, unit_idx, content)` — the shared body of mm07
     * (video frames) and mm08 (audio windows): exact-collapse at the
@@ -298,37 +318,12 @@ object MultimodalPack extends QueryPack {
     * per-doc text, so cross-item exact collapse cannot occur there;
     * a corpus with verbatim-shared units between DIFFERENT items
     * should resolve exact unit-level duplicates first (d18's
-    * keep-best discipline) exactly as d22 does for text. */
-  private[graft] def clipContainment(units: DataFrame, fp: Column => Column,
-                                     maxDist: Int, bits: Int): DataFrame =
-    clipContainmentFromUnits(graft.core.Caches.cut(unitFps(units, fp)),
-      maxDist, bits)
-
-  /** ONE decode/fingerprint pass over the unit fan-out, projected to
-    * a COMPACT frame — (item, unit, digest, fingerprint), never the
-    * content bytes: localCheckpointing raw frames/windows is a §5
-    * memory/spill hazard at scale (r14 verdict finding 2); the
-    * containment decisions need only these proxy rows (guide §8). The
-    * repartition spreads the per-row fingerprint compute — content
-    * is tens of bytes/row while the fingerprint math is the cost, so
-    * byte-proportional splits would serialize it. Trade-off, chosen
-    * deliberately: fp is computed for every unit rather than only
-    * digest representatives — unit-level exact dups are near-zero in
-    * these fixtures (planted trims RE-encode, so bytes differ), and
-    * one pass with no binary checkpoint beats two passes with one;
-    * an exact-dup-heavy corpus would put a d18 digest collapse in
-    * front of the decode instead. */
-  private[graft] def unitFps(units: DataFrame,
-                             fp: Column => Column): DataFrame =
-    units.repartition(units.sparkSession.sparkContext.defaultParallelism)
-      .select(col("item_id"), col("unit_idx"),
-        md5(Multimodal.hexOf(col("content"))).as("d"),
-        fp(col("content")).as("simhash"))
-
-  /** [[clipContainment]] over an already-materialized [[unitFps]]
-    * frame (a [[graft.core.Caches.cut]] block or a session artifact —
-    * the relation is referenced three times below, so it must not be
-    * a raw plan). */
+    * keep-best discipline) exactly as d22 does for text.
+    *
+    * The input is an already-materialized [[unitFps]] frame (a
+    * [[graft.core.Caches.cut]] block or a session artifact — the
+    * relation is referenced three times below, so it must not be a
+    * raw plan). */
   private[graft] def clipContainmentFromUnits(u: DataFrame, maxDist: Int,
                                               bits: Int): DataFrame = {
     val nf = u.groupBy(col("item_id")).agg(count(lit(1)).as("nunits"))
@@ -398,7 +393,7 @@ object MultimodalPack extends QueryPack {
     * a contiguous window range. Per-window chromaprint-style
     * fingerprint ([[Multimodal.chromaHash]] — gradient signs over the
     * 12×6 chroma grid, the FakeDecoder seam), then the shared
-    * [[clipContainment]] body: exact-collapse at the window level,
+    * [[clipContainmentFromUnits]] body: exact-collapse at the window level,
     * the banded Hamming join with the same-audio exclusion in-join,
     * offset-consistent containment as a plain aggregation. */
   def audioClipDups(spark: SparkSession, dir: String): DataFrame =
@@ -438,10 +433,12 @@ object MultimodalPack extends QueryPack {
     * ([[graft.dedup.Dedup.hammingProbeBanded]], maxDist 4) —
     * near_dup_of_history (best = min (hamming, hist_id)), else new.
     * The batch arrives as its [[mediaFpRowsOf]] rows
-    * (media_id, h, fp). Returns (decisions, new digests (h), new
-    * fingerprints (id, fp)) so the streaming caller appends history
-    * state WITHOUT a second decode/dHash pass — the batch's own
-    * fingerprints are filtered to the admitted ids.
+    * (media_id, h, fp), lineage-CUT by the caller (the streaming gate
+    * derives its Bloom probe from the same cut, so each row is
+    * digested and fingerprinted once). Returns (decisions, new
+    * digests (h), new fingerprints (id, fp)) so the streaming caller
+    * appends history state WITHOUT a second decode/dHash pass — the
+    * batch's own fingerprints are filtered to the admitted ids.
     *
     * Fuzzy scope matches the text gate (and the s12 oracle): the
     * perceptual probe runs against HISTORY only — two re-encodes of
@@ -453,7 +450,7 @@ object MultimodalPack extends QueryPack {
                                         batchRows: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    // Lineage-CUT the batch rows (not just cache them): the gate's
+    // The batch rows arrive lineage-CUT (not just cached): the gate's
     // downstream branches re-canonicalize whatever plan sits here on
     // every action, and the synthetic-content expression trees make
     // that seconds of driver work (OPTIMIZATION_r14.md s12 split;
@@ -468,19 +465,18 @@ object MultimodalPack extends QueryPack {
     // pass order; decisions are identical either way, and a corpus
     // where exact dups dominate would restore the two-pass order with
     // a second scan of the SOURCE (never a checkpoint of content).
-    val b = graft.core.Caches.cut(batchRows)
-    val firstInBatch = b.groupBy(col("h"))
+    val firstInBatch = batchRows.groupBy(col("h"))
       .agg(min(col("media_id")).as("first_id"))
     val hd = histDigests.select(col("h")).distinct()
       .withColumn("in_hist", lit(true))
     val ex = graft.core.Caches.transient(
-      b.join(hd, Seq("h"), "left")
+      batchRows.join(hd, Seq("h"), "left")
         .join(firstInBatch, Seq("h"))
         .select(col("media_id"), col("fp"),
           when(coalesce(col("in_hist"), lit(false)), "dup_of_history")
             .when(col("media_id") =!= col("first_id"), "dup_in_batch")
             .otherwise("exact_new").as("ex_status")))
-    // compact-on-compact cut (no content pass — `b` already holds the
+    // compact-on-compact cut (no content pass — `batchRows` already holds the
     // fingerprints): the probe references the survivor relation once
     // per band, and uncut it drags the digest-screen joins into every
     // band branch of the plan
@@ -510,7 +506,7 @@ object MultimodalPack extends QueryPack {
           .otherwise(lit(-1L)).as("best_hamming"))
     val newIds = decisions.filter(col("status") === "new")
       .select(col("media_id"))
-    val newDigests = b.join(newIds, Seq("media_id")).select(col("h"))
+    val newDigests = batchRows.join(newIds, Seq("media_id")).select(col("h"))
     val newFps = sFps
       .join(newIds.select(col("media_id").as("id")), Seq("id"))
       .select(col("id"), col("fp"))

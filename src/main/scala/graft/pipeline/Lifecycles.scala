@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.llm.LlmPack
-import graft.metrics.{Classification, Evaluation}
+import graft.metrics.Classification
 import graft.sample.Sampling
 import graft.text.TextOps
 import graft.vector.KnnJoin
@@ -25,12 +25,11 @@ object Lifecycles {
     * hash split (partition-count independent); the index side is the
     * TRAIN half only, so evaluation never sees its own row as a
     * neighbor by construction. The search is exact, the reference's
-    * flat index (p01's oracle replays it). */
-  def classifyAndReport(spark: SparkSession, dir: String,
-                        trainFrac: Double = 0.8): DataFrame = {
+    * flat index (p01's oracle replays it). Train fraction 0.8. */
+  def classifyAndReport(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir).embeddings
       .select(col("vec_id"), col("label"), col("embedding"))
-    val split = Sampling.hashSplit(e, col("vec_id"), trainFrac)
+    val split = Sampling.hashSplit(e, col("vec_id"), 0.8)
     val train = split.filter(col("split") === "train").drop("split")
     val test = split.filter(col("split") === "test").drop("split")
     val hits = KnnJoin.search(spark, test, train, 1, KnnJoin.Exact,
@@ -41,26 +40,17 @@ object Lifecycles {
     Classification.classificationReport(preds, col("true_label"), col("n_label"))
   }
 
-  /** §3.3 extraction lifecycle: stub LLM extraction → JSON repair →
-    * long format → per-field accuracy table with Overall. */
-  def extractAndEvaluate(spark: SparkSession, dir: String): DataFrame =
-    Evaluation.accuracyTable(
-        LlmPack.extractLong(spark, dir), col("field"), col("accuracy"))
-      .orderBy(col("field"))
-
   /** §3.3's feedback loop closed end-to-end (`feebback
     * agent_8_29.py:32-71`: Capture → Compare → Cluster → Suggest →
     * Approve → Apply): extraction diffs become suggested corrections,
-    * an approval predicate stands in for the reviewer, and the
-    * approved subset is applied back onto the extraction artifact.
-    * Returns the corrected long frame — feed it to
-    * [[extractAndEvaluate]]'s accuracy table to measure the lift. */
-  def feedbackApply(spark: SparkSession, dir: String,
-                    approve: Column = pmod(col("doc_id"), lit(2L)) === 0)
-      : DataFrame = {
+    * an approval rule stands in for the reviewer (even doc_ids are
+    * accepted), and the approved subset is applied back onto the
+    * extraction artifact. Returns the corrected long frame — l02's
+    * accuracy table over it measures the lift. */
+  def feedbackApply(spark: SparkSession, dir: String): DataFrame = {
     import graft.metrics.FeedbackPack
     val approved = FeedbackPack.fieldDiffs(spark, dir)
-      .filter(approve)
+      .filter(pmod(col("doc_id"), lit(2L)) === 0)
       .select(col("doc_id"), col("field"),
         col("ground_truth").as("corrected_value"))
     FeedbackPack.applyCorrections(LlmPack.extractLong(spark, dir), approved)
@@ -84,12 +74,6 @@ object Lifecycles {
       .withColumn("addr_match", addrM)
       .withColumn("decision", when(matches >= 2, "yes").otherwise("no"))
   }
-
-  /** Straight-through-processing routing for [[confirm]] output:
-    * (auto-processed, human-in-the-loop) halves. */
-  def routeStp(confirmed: DataFrame): (DataFrame, DataFrame) =
-    (confirmed.filter(col("decision") === "yes"),
-      confirmed.filter(col("decision") === "no"))
 
   /** The §3.3/§3.4 tail as ONE relation: extraction results confirmed
     * field-by-field against the system of record, then routed — `STP`
@@ -208,7 +192,7 @@ object Lifecycles {
     // guard): shingles in more than 20 docs carry no dedup signal but
     // quadratic fan-out, so the flagship funnel bounds its posting
     // lists exactly like the standalone operator does at corpus scale.
-    val pairs = Dedup.jaccardPairsFromHashed(exSh, 0.5, maxShingleDocFreq = 20)
+    val pairs = Dedup.jaccardPairsFromHashed(exSh, maxShingleDocFreq = 20)
     val dropIds = Dedup.dedupGroups(pairs)
       .filter(col("doc_id") =!= col("keeper_id")).select(col("doc_id"))
     val nr = cut(ex.join(dropIds, Seq("doc_id"), "left_anti"))
@@ -225,7 +209,7 @@ object Lifecycles {
     val nrSh = exSh.join(broadcast(dropIds.select(col("doc_id").as("id"))),
       Seq("id"), "left_anti")
     def shingleSide(train: Boolean): DataFrame = {
-      val cond = substring(Sampling.hashKey("42", col("id")), 1, 4) < lit(splitThr)
+      val cond = substring(Sampling.hashKey(col("id")), 1, 4) < lit(splitThr)
       nrSh.filter(if (train) cond else !cond)
         .select(col("id").as("doc_id"), col("sh"))
     }
@@ -279,33 +263,9 @@ object Lifecycles {
     counts.toDF("stage_idx", "stage", "n_docs").orderBy(col("stage_idx"))
   }
 
-  /** LANGUAGE BALANCE CAP — the funnel's routing of the quality-cap
-    * operator (a16's semantics, a20's shape): no language may keep
-    * more documents than the corpus's MEDIAN language count (lower
-    * median under (count, lang) order — a data-derived budget, so the
-    * stage binds proportionally at every corpus size instead of going
-    * inert or absolute); over-budget languages keep their TOP-quality
-    * documents, ranked by (round(quality, 6) desc, doc_id).
-    *
-    * Routing decision (the v19-vs-v13 pattern): this entry point goes
-    * through [[graft.text.AnalysisPack.capCorpusByQualityCollapsed]]
-    * — the collapsed-count threshold + broadcast prefilter +
-    * rank-over-survivors composition — NEVER the plain a16 window,
-    * which at 100 TB funnels a dominant language (en is ~42% of even
-    * this synthetic mix) through one rank partition; and NOT the
-    * TopNThreshold buffer either, whose O(budget) state is right for
-    * a20's constant cap but degrades when the budget grows with the
-    * corpus (measured: the 30× funnel at 9.4× through TopNThreshold,
-    * 22k-element buffers). The spec plan-asserts the threshold
-    * prefilter join and pins per-lang output ≤ cap; the count collect
-    * is |langs| rows. A null lang counts toward the "" language for
-    * the budget median (the dedup tier's null ≡ "" discipline — and a
-    * null key must never NPE the driver-side sort); rows keep their
-    * original lang value. */
   /** p05: the funnel-threshold AUDIT — re-derive [[corpusPrep]]'s
     * stage-1 percentile cuts on the live corpus through the
-    * bounded-state histogram sketch ([[graft.core.Sketches]]), the
-    * production wiring of the `tercileThresholdsSketch` seam: the
+    * bounded-state histogram sketch ([[graft.core.Sketches]]): the
     * funnel's constants (quality ≥ 0.45 from the quality p05, dup-word
     * fraction ≤ 0.7 from its p95) were measured once at small SF, and
     * THIS query is how they are re-measured on a 100 TB corpus — ≤1000
@@ -358,6 +318,25 @@ object Lifecycles {
       .orderBy(col("metric"))
   }
 
+  /** LANGUAGE BALANCE CAP — the funnel's routing of the quality-cap
+    * operator (a16's semantics, a20's shape): no language may keep
+    * more documents than the corpus's MEDIAN language count (lower
+    * median under (count, lang) order — a data-derived budget, so the
+    * stage binds proportionally at every corpus size instead of going
+    * inert or absolute); over-budget languages keep their TOP-quality
+    * documents, ranked by (round(quality, 6) desc, doc_id).
+    *
+    * The stage is [[graft.text.AnalysisPack.capByQuality]] — the
+    * collapsed-count threshold + broadcast prefilter +
+    * rank-over-survivors composition — never the plain a16 window,
+    * which at 100 TB funnels a dominant language (en is ~42% of even
+    * this synthetic mix) through one rank partition. The spec
+    * plan-asserts the threshold prefilter join and pins per-lang
+    * output ≤ cap; the count collect is |langs| rows. A null lang
+    * counts toward the "" language, for the budget median and for the
+    * cap (the dedup tier's null ≡ "" discipline — and a null key must
+    * never NPE the driver-side sort); rows keep their original lang
+    * value. */
   private[graft] def langBalanceCap(docs: DataFrame): DataFrame = {
     val counts = docs
       .groupBy(coalesce(col("lang"), lit("")).as("lang"))
@@ -367,7 +346,9 @@ object Lifecycles {
     val sorted = counts.sortBy { case (l, c) => (c, l) }
     val cap = sorted((sorted.length + 1) / 2 - 1)._2
     require(cap > 0, s"degenerate language-count median: $cap")
-    graft.text.AnalysisPack.capCorpusByQualityCollapsed(docs, cap)
+    graft.text.AnalysisPack.capByQuality(docs, coalesce(col("lang"), lit("")),
+        graft.text.TextAnalysis.qualityScore(col("text")), cap)
+      .drop("_q", "_rk")
   }
 
   /** p03: the corpus DATASHEET (Gebru et al. 2021, "Datasheets for

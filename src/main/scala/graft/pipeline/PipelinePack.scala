@@ -50,7 +50,7 @@ object PipelinePack extends QueryPack {
     s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
   }
 
-  private val stopList = graft.text.TextAnalysis.defaultProfiles
+  private val stopList = graft.text.TextAnalysis.Profiles
     .flatMap(_._2).map(w => s"'$w'").mkString(", ")
 
   /** words + 3-gram hashed shingle relation over a named doc CTE. */

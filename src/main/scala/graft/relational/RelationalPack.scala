@@ -234,8 +234,9 @@ object RelationalPack extends QueryPack {
     * is bounded at k values — at 100 TB this runs as a bounded-heap
     * partial aggregate; here the window formulation keeps it
     * declarative (boundary ties on h leave max(h≤ₖ) unchanged, so
-    * the result is partitioning-independent). */
-  def kmvDistinct(spark: SparkSession, dir: String, k: Int = 64): DataFrame = {
+    * the result is partitioning-independent). k = 64. */
+  def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
+    val k = 64
     val pow60 = 1152921504606846976.0 // 2^60, exact in double
     val d = Tables(spark, dir).lineitem
       .select(col("l_returnflag"), col("l_orderkey")).distinct()

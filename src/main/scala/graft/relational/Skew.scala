@@ -65,24 +65,6 @@ object Skew {
       .groupBy(col("k")).agg(sum(col("pv")).as("sum_v"))
   }
 
-  /** Partition-layout writer: the channel/ingest-date layout the
-    * reference's corpus wants (SURVEY §4) — predicates on the
-    * partition columns prune whole directories at scan. */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Bucketed-layout writer: pays the shuffle ONCE at write time so
-    * every subsequent join/aggregation on the bucket key plans with
-    * no Exchange (co-located join) — the standard play for a fact
-    * table joined on the same key query after query at 100 TB. A spec
-    * asserts the shuffle-free plan. */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    bucketCol: String): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .saveAsTable(table)
-
   /** Small-file COMPACTION: rewrite a parquet directory into
     * ⌈bytes/targetBytes⌉ files. Streaming sinks, per-batch appends,
     * and over-parallel writes leave thousands of KB-sized files whose

@@ -20,33 +20,36 @@ import graft.dedup.Dedup
   * the a06 mixture sampler).
   *
   * Scale shape: feature extraction is one shingle pass (linear in
-  * corpus tokens); bucket models are a bounded groupBy (`buckets`
+  * corpus tokens); bucket models are a bounded groupBy ([[Buckets]]
   * rows — broadcastable by construction no matter the corpus size);
   * per-doc scoring is a map-side join + partial-aggregatable sum;
   * the only global step is top-k selection, which runs as Spark's
   * distributed TakeOrdered (per-partition heaps + driver merge of k
   * rows), never a full sort. Laplace-smoothed counts keep unseen
-  * buckets finite: p(b) = (cnt+1)/(total+buckets), all-integer inputs
+  * buckets finite: p(b) = (cnt+1)/(total+Buckets), all-integer inputs
   * so both engines divide identical doubles. Per-feature terms round
   * to 9 decimals and sum as decimals (order-independent, absorbs
   * last-ulp ln differences — the a08 discipline).
   */
 object Dsir {
 
-  /** Top-`k` raw-pool docs by Gumbel-perturbed importance weight.
+  /** Docs selected, hashed-bigram buckets per model, and the Gumbel
+    * hash seed. */
+  private val K = 50
+  private val Buckets = 1024
+  private val Seed = "dsir"
+
+  /** Top-[[K]] raw-pool docs by Gumbel-perturbed importance weight.
     * `docs` carries (doc_id, text, source); the target model is built
     * from `targetSource` rows, the raw model and the candidate pool
     * from all other rows. */
   def importanceResample(spark: SparkSession, docs: DataFrame,
-                         targetSource: String, k: Int = 50,
-                         buckets: Int = 1024,
-                         seed: String = "dsir"): DataFrame = {
-    val b = buckets
+                         targetSource: String): DataFrame = {
     val feats = graft.core.Caches.transient(
       docs.select(col("doc_id"), col("source"),
           explode(Dedup.shingles(col("text"), 2)).as("s"))
         .select(col("doc_id"), col("source"),
-          pmod(Dedup.hash60(col("s")), lit(b.toLong)).as("bucket")))
+          pmod(Dedup.hash60(col("s")), lit(Buckets.toLong)).as("bucket")))
     val isT = col("source") === targetSource
     val tc = feats.filter(isT).groupBy(col("bucket"))
       .agg(count(lit(1)).as("tc"))
@@ -55,13 +58,13 @@ object Dsir {
       .agg(count(lit(1)).as("rc"))
     val rt = feats.filter(!isT).agg(count(lit(1)).as("rt"))
     // per-feature log importance ratio under the smoothed models —
-    // bucket models are tiny (≤ `buckets` rows), so both joins
+    // bucket models are tiny (≤ [[Buckets]] rows), so both joins
     // broadcast regardless of corpus size
     val term =
       log((coalesce(col("tc"), lit(0L)) + lit(1L)).cast("double") /
-          (col("tt") + lit(b.toLong)).cast("double")) -
+          (col("tt") + lit(Buckets.toLong)).cast("double")) -
       log((coalesce(col("rc"), lit(0L)) + lit(1L)).cast("double") /
-          (col("rt") + lit(b.toLong)).cast("double"))
+          (col("rt") + lit(Buckets.toLong)).cast("double"))
     val scored = feats.filter(!isT)
       .join(broadcast(tc), Seq("bucket"), "left")
       .join(broadcast(rc), Seq("bucket"), "left")
@@ -70,7 +73,7 @@ object Dsir {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_feats"), sum(col("ts")).as("s"))
     // Gumbel-top-k: g = −ln(−ln(u)), u hashed uniform in (0,1)
-    val u = (conv(substring(md5(concat(lit(seed + "_"),
+    val u = (conv(substring(md5(concat(lit(Seed + "_"),
       col("doc_id").cast("string"))), 1, 4), 16, 10).cast("double") +
       lit(0.5)) / lit(65536.0)
     val pool = docs.filter(col("source") =!= targetSource).select(col("doc_id"))
@@ -84,7 +87,7 @@ object Dsir {
     // distributed top-k (TakeOrdered), then rank over the k survivors;
     // the final orderBy pins output row order for the hash-compared
     // dump (every oracle-checked query ends with an explicit sort)
-    val top = pool.orderBy(col("score").desc, col("doc_id")).limit(k)
+    val top = pool.orderBy(col("score").desc, col("doc_id")).limit(K)
     val wr = Window.orderBy(col("score").desc, col("doc_id"))
     top.withColumn("rank", row_number().over(wr).cast("long"))
       .select(col("doc_id"), col("rank"), col("n_feats"),

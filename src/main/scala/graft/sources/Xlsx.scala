@@ -58,19 +58,22 @@ object Xlsx {
     acc - 1
   }
 
+  /** Row cap of [[write]]: the GT workbook is a driver-side artifact. */
+  private[graft] val MaxRows = 100000
+
   /** Write `df` (null → empty cell) as a single-sheet workbook.
     * String columns become inline-string cells; NUMERIC schema columns
     * become bare `<v>` number cells, so a human opening the workbook
     * in Excel sorts/filters them numerically (the reader resolves both
     * shapes — the stringified round-trip value is identical). Bounded,
     * driver-side — see scaladoc. */
-  def write(df: DataFrame, path: String, maxRows: Int = 100000): Unit = {
+  def write(df: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.types.NumericType
     val names = df.columns
     val numeric = df.schema.fields.map(_.dataType.isInstanceOf[NumericType])
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"xlsx write is the bounded GT-workbook surface (cap $maxRows rows); " +
+    val rows = df.limit(MaxRows + 1).collect()
+    require(rows.length <= MaxRows,
+      s"xlsx write is the bounded GT-workbook surface (cap $MaxRows rows); " +
         "use the parquet/CSV sinks for large tables")
     // NaN/Infinity are not valid SpreadsheetML numbers — Excel would
     // "repair" (drop) such cells; they fall back to inline strings

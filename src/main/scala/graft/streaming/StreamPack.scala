@@ -101,24 +101,25 @@ object StreamPack extends QueryPack {
   private def gateDecisionsArtifact(spark: SparkSession,
                                     dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"gate_decisions:$dir") {
-      import graft.dedup.{Dedup, DedupPack}
+      import graft.dedup.DedupPack
       val aug = DedupPack.augmented(spark, dir)
       // history state and the batch's signature/shingle relations are
       // id-filters of the session shingle/minhash artifacts — the
       // declared <300 split applied to the shared relations instead
       // of two fresh text passes (identical rows to the derivations
       // the streaming gate runs per batch: per-row derivations commute
-      // with id predicates). Only the digest column is still computed
-      // from text here (no digest artifact exists).
+      // with id predicates). Only the digest rows are still computed
+      // from text here (no digest artifact exists), through the gate's
+      // own derivation.
       val sigs = DedupPack.augBandSigs(spark, dir)
       val sh = DedupPack.augShingleRows(spark, dir)
       DedupPack.dedupGateWithState(
-        aug.filter(col("doc_id") < 300)
-          .select(Dedup.contentDigest(col("text")).as("h")),
+        DedupPack.digestRowsOf(aug.filter(col("doc_id") < 300))
+          .select(col("h")),
         sigs.filter(col("id") < 300)
           .select(col("id").as("hist_id"), col("band"), col("bandsig")),
         sh.filter(col("id") < 300),
-        aug.filter(col("doc_id") >= 300),
+        DedupPack.digestRowsOf(aug.filter(col("doc_id") >= 300)),
         sigs.filter(col("id") >= 300)
           .select(col("id").as("doc_id"), col("band"), col("bandsig")),
         sh.filter(col("id") >= 300))._1
@@ -197,7 +198,7 @@ object StreamPack extends QueryPack {
         mf.filter(col("media_id") < 300).select(col("h")),
         graft.core.Caches.cut(mf.filter(col("media_id") < 300)
           .select(col("media_id").as("id"), col("fp"))),
-        mf.filter(col("media_id") >= 300))._1
+        graft.core.Caches.cut(mf.filter(col("media_id") >= 300)))._1
       .orderBy(col("media_id"))
   }
 
@@ -216,7 +217,7 @@ object StreamPack extends QueryPack {
     "s06_attribution_join" -> attribution)
 
   private def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
-  private val stopAll = graft.text.TextAnalysis.defaultProfiles.flatMap(_._2)
+  private val stopAll = graft.text.TextAnalysis.Profiles.flatMap(_._2)
 
   /** The s09 gate's decision relation as a CTE chain ending in
     * `dec(doc_id, status, best_hist_id, best_jaccard)` — shared by

@@ -484,10 +484,13 @@ object Streams {
                                     batchId: Long, outDir: String,
                                     histDir: String,
                                     opts: GateOptions = GateOptions()): Unit = {
-    import graft.dedup.{Dedup, DedupPack}
+    import graft.dedup.DedupPack
     val docs = batch.select(col("doc_id"), col("text")).persist()
+    // one digest frame: the screen caches it, and the Bloom probe
+    // reads it from that cache, so every row is digested once
+    val digestRows = DedupPack.digestRowsOf(docs)
     gateBatch(spark, batchId, outDir, histDir, opts, Seq("sigs", "shingles"),
-      docs.select(Dedup.contentDigest(col("text")).as("h")).distinct(),
+      digestRows.select(col("h")).distinct(),
       decisionsLogSchema(spark),
       Some(runSummaryOf(_, docs, batchId))) { (digests, prior) =>
       // the gate returns the admitted docs' derived state relations
@@ -495,7 +498,7 @@ object Streams {
       // never recomputes minhashes or shingles
       val (decisions, newDigests, newSigs, newShingles) =
         DedupPack.dedupGateWithState(digests, prior("sigs"),
-          prior("shingles"), docs, DedupPack.bandSigsOf(docs, "doc_id"),
+          prior("shingles"), digestRows, DedupPack.bandSigsOf(docs, "doc_id"),
           DedupPack.shingleRowsOf(docs))
       (decisions, newDigests, Map("sigs" -> newSigs, "shingles" -> newShingles))
     }
@@ -675,23 +678,23 @@ object Streams {
     * [[mediaIngestGate]], factored out like [[dedupGateBatch]] so the
     * specs and scale probes can drive long batch sequences directly:
     * the batch's [[graft.multimodal.MultimodalPack.mediaFpRowsOf]]
-    * rows screened through [[gateBatch]] with state kinds (digests,
-    * fps, bloom). */
+    * rows, cut once, screened through [[gateBatch]] with state kinds
+    * (digests, fps, bloom); the Bloom probe reads its digests from the
+    * same cut rows. */
   private[graft] def mediaGateBatch(spark: SparkSession, batch: DataFrame,
                                     batchId: Long, outDir: String,
                                     histDir: String,
                                     opts: GateOptions = GateOptions()): Unit = {
-    import graft.multimodal.{Multimodal, MultimodalPack}
-    val media = batch.select(col("media_id"), col("content")).persist()
+    import graft.multimodal.MultimodalPack
+    val rows = graft.core.Caches.cut(MultimodalPack.mediaFpRowsOf(
+      batch.select(col("media_id"), col("content"))))
     gateBatch(spark, batchId, outDir, histDir, opts, Seq("fps"),
-      media.select(md5(Multimodal.hexOf(col("content"))).as("h")).distinct(),
+      rows.select(col("h")).distinct(),
       mediaDecisionsLogSchema(spark), None) { (digests, prior) =>
-      val (decisions, newDigests, newFps) = MultimodalPack.mediaGateWithState(
-        digests, prior("fps"), MultimodalPack.mediaFpRowsOf(media))
+      val (decisions, newDigests, newFps) =
+        MultimodalPack.mediaGateWithState(digests, prior("fps"), rows)
       (decisions, newDigests, Map("fps" -> newFps))
     }
-    media.unpersist()
-    ()
   }
 
   /** The media gate's decision-log schema (reader contract for

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryPack
@@ -322,33 +322,6 @@ object AnalysisPack extends QueryPack {
       .orderBy(col("doc_id"))
   }
 
-  /** The THIRD threshold path for the a08-family buckets: tercile
-    * cuts from the x04 histogram sketch ([[graft.core.Sketches]])
-    * instead of the exact `percentile` aggregate. a08's exact
-    * per-value map is fine while distinct mean_nll values fit one
-    * aggregation buffer and keeps the oracle role; a11 trades the
-    * full column for a hash sample; THIS path is the one whose state
-    * is constant (≤1000 bins) in BOTH corpus size and value-domain
-    * size — the form the p02/p03 audit tier runs at 100 TB when it
-    * derives its percentile cuts: `p05_funnel_thresholds`
-    * ([[graft.pipeline.Lifecycles.funnelThresholds]]) is that audit
-    * query, re-measuring the funnel's 0.45/0.7 cuts on the live
-    * corpus through this same sketch. Error is bounded by
-    * one bin width of the value range; the spec pins the thresholds
-    * within that bound of a08's exact percentiles and plan-asserts
-    * that no window/sort touches the input relation (the only Window
-    * runs over the ≤1000-row sketch). Returns one row:
-    * (q1, q2, bin_width). */
-  private[graft] def tercileThresholdsSketch(base: DataFrame): DataFrame =
-    graft.core.Sketches.histogramQuantilesWithWidth(
-        base, col("mean_nll"), bins = 1000, probs = Seq(1.0 / 3, 2.0 / 3))
-      .agg(
-        max(when(col("q") < 0.5, col("est"))).as("q1"),
-        max(when(col("q") > 0.5, col("est"))).as("q2"),
-        // the sketch's own error bound — no re-scan of the input, no
-        // hard-coded divisor to drift from the bin count
-        max(col("bin_width")).as("bin_width"))
-
   /** a10: DSIR importance resampling — select 50 raw-pool docs whose
     * hashed-bigram distribution matches the `src0` target domain
     * (Gumbel-top-k over smoothed log importance ratios; see
@@ -361,7 +334,7 @@ object AnalysisPack extends QueryPack {
     graft.sample.Dsir.importanceResample(spark,
       Tables(spark, dir).documents.select(col("doc_id"), col("text"),
         col("source")),
-      targetSource = "src0", k = 50)
+      targetSource = "src0")
 
   /** a12: bigram language-model scoring — the 2-gram step up from
     * a08's unigram CCNet stand-in (Wenzek et al. 2020 filter with a
@@ -528,17 +501,20 @@ object AnalysisPack extends QueryPack {
   }
 
   /** a16: per-language QUALITY CAP — the corpus-balancing truncation
-    * (keep the best `n` documents of each language/domain, drop the
+    * (keep the best [[CapPerLang]] documents of each language, drop the
     * rest): over-represented sources get capped by quality rank, not
     * random-dropped, which is how Common-Crawl-scale mixes bound a
     * dominant language without throwing away its best documents. Rank
     * = row_number over (quality desc, doc_id) per lang — one shuffle
     * on lang, rank within partition. At corpus scale a skewed
-    * language holds its whole partition — [[qualityCapScaled]] is the
-    * implemented escape; at cap=50 per lang over the synthetic mix
-    * the plain window is the honest shape. */
-  def qualityCap(spark: SparkSession, dir: String, n: Int = 50): DataFrame =
-    qualityCapOf(Tables(spark, dir).documents, n)
+    * language holds its whole partition — [[capByQuality]] is the
+    * scale form (a20); at 50 per lang over the synthetic mix the
+    * plain window is the honest shape, and it is the reference the
+    * specs hold the scale form to. */
+  def qualityCap(spark: SparkSession, dir: String): DataFrame =
+    qualityCapOf(Tables(spark, dir).documents, CapPerLang)
+
+  private val CapPerLang = 50
 
   private[graft] def qualityCapOf(docs: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -554,114 +530,68 @@ object AnalysisPack extends QueryPack {
       .orderBy(col("lang"), col("rk"))
   }
 
-  /** a20: a16's SKEW ESCAPE — identical result (same oracle SQL, the
-    * full-window replay), scale-safe shape: a bounded
-    * [[TopNThreshold]] aggregate finds each language's n-th quality
-    * map-side (only n doubles per lang shuffle), a broadcast
-    * threshold join prefilters to `quality >= nth` (≤ n + ties rows
-    * per lang — never the language's full corpus), and only the
-    * survivors enter the rank window. Equality argument: every row
-    * with quality > nth has full-rank < n (at most n−1 such rows);
-    * threshold-tie rows are ALL kept and rank among themselves by
-    * doc_id exactly as in the full window; every dropped row
-    * (quality < nth) has at least n rows ahead of it, so its full
-    * rank exceeds n. An under-full language gets -Infinity and keeps
-    * everything. The spec pins engine-level equality with [[
-    * qualityCap]] on a deliberately skewed corpus. */
-  def qualityCapScaled(spark: SparkSession, dir: String, n: Int = 50): DataFrame =
-    qualityCapScaledOf(Tables(spark, dir).documents, n)
+  /** a20: a16 through the scale form [[capByQuality]] — identical
+    * result (same oracle SQL, the full-window replay), keyed on the
+    * raw `lang`, so a null language is its own group exactly as in
+    * a16's `PARTITION BY lang`. */
+  def qualityCapScaled(spark: SparkSession, dir: String): DataFrame =
+    qualityCapScaledOf(Tables(spark, dir).documents, CapPerLang)
 
-  private[graft] def qualityCapScaledOf(docs: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = graft.core.Caches.cut(
-      docs.select(col("doc_id"), col("lang"),
-        round(TextAnalysis.qualityScore(col("text")), 6).as("quality")))
-    val thr = scored.groupBy(col("lang"))
-      .agg(TopNThreshold.nth(n)(col("quality")).as("q_nth"))
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("quality").desc, col("doc_id"))
-    scored.join(broadcast(thr), Seq("lang"))
-      .filter(col("quality") >= col("q_nth"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= n)
-      .select(col("doc_id"), col("lang"), col("quality"),
-        col("rk").cast("long").as("rk"))
+  private[graft] def qualityCapScaledOf(docs: DataFrame, n: Int): DataFrame =
+    capByQuality(docs.select(col("doc_id"), col("lang"),
+        TextAnalysis.qualityScore(col("text")).as("quality")),
+        col("lang"), col("quality"), n)
+      .select(col("doc_id"), col("lang"), col("_q").as("quality"),
+        col("_rk").cast("long").as("rk"))
       .orderBy(col("lang"), col("rk"))
-  }
 
-  /** The a20 shape as a reusable PIPELINE STAGE: cap each `lang` group
-    * of any (doc_id, lang, text, …) frame at its top `n` rows by
-    * (round(quality, 6) desc, doc_id), preserving every input column.
-    * This is the form lifecycle entry points route through — the
-    * [[TopNThreshold]] prefilter means a dominant language never
-    * funnels its whole corpus through one rank partition; the plain
-    * full-window a16 stays the declared contrast surface. Identical
-    * membership to the full window by the a20 equality argument. */
-  private[graft] def capCorpusByQuality(docs: DataFrame, n: Int): DataFrame = {
+  /** The quality cap as a pipeline stage: keep the top `n` rows of
+    * each `key` group of a frame with a `doc_id` column, by
+    * (round(quality, 6) desc, doc_id), with every input column plus
+    * the rounded quality `_q` and the in-group rank `_rk`. The stage
+    * cuts its input, so a caller that does not need the text passes
+    * its quality pre-computed and leaves the text out (content never
+    * enters a checkpoint it does not have to).
+    *
+    * Scale shape, so a dominant group never funnels its whole corpus
+    * through one rank partition:
+    *  - threshold: each group's n-th largest quality, counting
+    *    duplicates, from the 6-dp-COLLAPSED per-(key, quality) counts
+    *    — one map-side-combining groupBy to ≤ 1,000,001 rows per group
+    *    and a cumulative window over that bounded relation. Its state
+    *    is bounded by the value domain, not by `n`, so it serves a
+    *    constant cap (a20's 50) and a budget that grows with the
+    *    corpus (p02's median count) alike;
+    *  - prefilter: a broadcast join of the thresholds on the
+    *    null-safe key keeps `quality >= nth` (≤ n + ties rows per
+    *    group). A group with fewer than n rows has no threshold and
+    *    keeps everything;
+    *  - rank: row_number over the survivors only.
+    * Equality with the full window: every row with quality > nth has
+    * full rank < n; threshold-tie rows are all kept and rank among
+    * themselves by doc_id as in the full window; every dropped row has
+    * at least n rows ahead of it. */
+  private[graft] def capByQuality(docs: DataFrame, key: Column,
+                                  quality: Column, n: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(n > 0, "cap must be positive")
-    // the internal group/join/window key coalesces a null lang to ""
-    // (null ≡ "" — one language for the cap): a null key would never
-    // match the broadcast threshold join, so null-lang rows would
-    // BYPASS the prefilter and funnel through one rank partition —
-    // exactly the single-partition hazard this shape exists to avoid.
-    // Rows keep their original lang value.
     val scored = graft.core.Caches.cut(
-      docs.withColumn("_q", round(TextAnalysis.qualityScore(col("text")), 6))
-        .withColumn("_lbk", coalesce(col("lang"), lit(""))))
-    val thr = scored.groupBy(col("_lbk"))
-      .agg(TopNThreshold.nth(n)(col("_q")).as("_q_nth"))
-    val w = Window.partitionBy(col("_lbk"))
-      .orderBy(col("_q").desc, col("doc_id"))
-    scored.join(broadcast(thr), Seq("_lbk"))
-      .filter(col("_q") >= col("_q_nth"))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= n)
-      .drop("_q", "_q_nth", "_rk", "_lbk")
-  }
-
-  /** [[capCorpusByQuality]] for DATA-DERIVED, corpus-proportional
-    * budgets — same result, different bounded aggregate. The
-    * [[TopNThreshold]] order statistic carries an n-sized buffer and
-    * pays O(n) per accepted row, which is exactly right for a
-    * constant cap (a20's 50) and exactly wrong when the budget GROWS
-    * with the corpus (the funnel's median-count budget: ~22k per
-    * language at the 30× leg, millions at 100 TB — the round-10 30×
-    * run measured the funnel at 9.4× before this form). Here the
-    * n-th quality comes from the 6-dp-COLLAPSED per-(lang, quality)
-    * counts: one map-side-combining groupBy to ≤ 1,000,001 rows per
-    * language (the m14/x04 collapse discipline), a cumulative window
-    * over that bounded relation, threshold = the largest quality
-    * whose descending cumulative count reaches n — identically the
-    * n-th largest value counting duplicates, so the prefilter,
-    * tie-keeping, and rank-over-survivors semantics match
-    * [[capCorpusByQuality]] exactly (spec-pinned). State is bounded
-    * by the VALUE DOMAIN, not the budget. */
-  private[graft] def capCorpusByQualityCollapsed(docs: DataFrame,
-                                                 n: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(n > 0, "cap must be positive")
-    // null lang ≡ "" on the internal key, as in [[capCorpusByQuality]]
-    val scored = graft.core.Caches.cut(
-      docs.withColumn("_q", round(TextAnalysis.qualityScore(col("text")), 6))
-        .withColumn("_lbk", coalesce(col("lang"), lit(""))))
-    val qcounts = scored.groupBy(col("_lbk"), col("_q"))
-      .agg(count(lit(1)).as("_c"))
-    val wq = Window.partitionBy(col("_lbk")).orderBy(col("_q").desc)
+      docs.withColumn("_q", round(quality, 6)).withColumn("_gk", key))
+    val wq = Window.partitionBy(col("_tk")).orderBy(col("_q").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val thr = qcounts.withColumn("_cum", sum(col("_c")).over(wq))
+    val thr = scored.groupBy(col("_gk").as("_tk"), col("_q"))
+      .agg(count(lit(1)).as("_c"))
+      .withColumn("_cum", sum(col("_c")).over(wq))
       .filter(col("_cum") >= n)
-      .groupBy(col("_lbk")).agg(max(col("_q")).as("_q_nth"))
-    val w = Window.partitionBy(col("_lbk"))
+      .groupBy(col("_tk")).agg(max(col("_q")).as("_q_nth"))
+    val w = Window.partitionBy(col("_gk"))
       .orderBy(col("_q").desc, col("doc_id"))
-    // an under-full language has no quality reaching cumulative n —
-    // absent from thr — and keeps everything (the -Infinity contract)
-    scored.join(broadcast(thr), Seq("_lbk"), "left")
+    scored.join(broadcast(thr), col("_gk") <=> col("_tk"), "left")
       .filter(col("_q") >=
         coalesce(col("_q_nth"), lit(Double.NegativeInfinity)))
       .withColumn("_rk", row_number().over(w))
       .filter(col("_rk") <= n)
-      .drop("_q", "_q_nth", "_rk", "_lbk")
+      .drop("_gk", "_tk", "_q_nth")
   }
 
   /** a18: cross-source n-gram overlap matrix — the datasheet table
@@ -871,7 +801,7 @@ object AnalysisPack extends QueryPack {
     "a09_gopher_repetition" -> gopherRepetition)
 
   private def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
-  private val profiles = TextAnalysis.defaultProfiles
+  private val profiles = TextAnalysis.Profiles
   private val stopAll = profiles.flatMap(_._2)
 
   private val wordsCte = """

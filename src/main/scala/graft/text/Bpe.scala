@@ -202,22 +202,6 @@ object Bpe {
     out.toArray
   }
 
-  /** Deterministic syllable-composed Zipf vocabulary — production-
-    * shaped type tables (word length 4–24 chars, long count-1 tail)
-    * for the incremental-vs-naive spec; the suite corpus itself has a
-    * ~31-word vocabulary. */
-  private[graft] def syntheticZipfTypes(n: Int): Seq[(String, Long)] = {
-    val syl = Array("ka", "to", "ri", "mu", "en", "sha", "lo", "ve",
-      "qu", "zi", "na", "ber", "ten", "gra", "pol", "dis")
-    def synWord(i: Int): String = {
-      val h = i * 0x9e3779b9
-      (0 until (2 + math.floorMod(h, 5))).map(j =>
-        syl(math.floorMod(h >> (j * 4 + 3), 16))).mkString
-    }
-    (0 until n).map(i =>
-      (synWord(i) + i, math.max(1L, 3000000L / (i + 1))))
-  }
-
   /** Leftmost non-overlapping single-merge application — the array
     * twin of one literal `replace` pass (spec-pinned equal). */
   private[graft] def mergeOnce(syms: List[String], l: String, r: String): List[String] = {

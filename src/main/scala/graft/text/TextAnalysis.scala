@@ -16,17 +16,15 @@ import graft.dedup.Dedup
   */
 object TextAnalysis {
 
-  /** Default language profiles: token lists scored by occurrence.
-    * Real deployments swap in per-language stopword lists; the
-    * mechanism (argmax of profile hit counts with deterministic
-    * tie-breaks) is what the engine provides. */
-  val defaultProfiles: Seq[(String, Seq[String])] = Seq(
+  /** Language profiles: token lists scored by occurrence. Their
+    * tokens are also the stopword list of [[qualityScore]]. */
+  val Profiles: Seq[(String, Seq[String])] = Seq(
     "db" -> Seq("join", "merge", "sort", "hash", "scan", "filter"),
     "en" -> Seq("the", "a", "of", "and"),
     "sp" -> Seq("spark", "stream", "batch", "window"))
 
   /** Occurrences of any profile token in the word sequence. */
-  def profileScore(words: Column, profile: Seq[String]): Column =
+  private[graft] def profileScore(words: Column, profile: Seq[String]): Column =
     aggregate(words, lit(0),
       (acc, w) => acc + when(w.isin(profile: _*), 1).otherwise(0))
 
@@ -36,9 +34,8 @@ object TextAnalysis {
     * [[graft.plans.ProfileHits]] byte-scan kernel (one pass per
     * profile, no split array, stays in whole-stage codegen); the
     * declarative [[profileScore]] twin is the spec cross-check. */
-  def langId(text: Column,
-             profiles: Seq[(String, Seq[String])] = defaultProfiles): (Column, Column) = {
-    val scores = profiles.map { case (name, p) =>
+  def langId(text: Column): (Column, Column) = {
+    val scores = Profiles.map { case (name, p) =>
       name -> graft.plans.ProfileHits.count(text, p)
     }
     val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
@@ -68,14 +65,13 @@ object TextAnalysis {
     * ([[graft.plans.ProfileHits]]/[[graft.plans.WordTokenCount]] —
     * no split array, no interpreted lambda); identical values to the
     * declarative forms, spec-pinned. */
-  def qualityScore(text: Column,
-                   stopwords: Seq[String] = defaultProfiles.flatMap(_._2)): Column = {
+  def qualityScore(text: Column): Column = {
     // coalesce to -1 on null text: the engine's non-ANSI sessions run
     // with legacy sizeOfNull, where the declarative size(words) form
     // yields -1 — value parity includes the null row
     val n = coalesce(graft.plans.WordTokenCount.count(text), lit(-1L))
     val stopRatio = when(n > 0,
-      graft.plans.ProfileHits.count(text, stopwords).cast("double")
+      graft.plans.ProfileHits.count(text, Profiles.flatMap(_._2)).cast("double")
         / n.cast("double"))
       .otherwise(lit(0.0))
     val punctRatio = when(length(text) > 0,
@@ -87,10 +83,10 @@ object TextAnalysis {
 
   /** Polynomial rolling-hash fingerprint over the word sequence
     * (order-sensitive: reordered documents fingerprint differently,
-    * unlike the simhash/minhash set signatures). */
-  def fingerprint(text: Column, modulus: Long = 2147483647L): Column =
+    * unlike the simhash/minhash set signatures), modulo 2³¹ − 1. */
+  def fingerprint(text: Column): Column =
     aggregate(TextOps.words(text), lit(0L),
-      (acc, w) => pmod(acc * 31 + Dedup.hash16(w), lit(modulus)))
+      (acc, w) => pmod(acc * 31 + Dedup.hash16(w), lit(2147483647L)))
 
   // --- Repetition signals (the Gopher/MassiveText repetition filters:
   // Rae et al. 2021 §A.1.1 — duplicate-word fraction and top-n-gram
@@ -129,7 +125,7 @@ object TextAnalysis {
     * sorted fold keeps the FIRST element reaching the maximum run —
     * mirror with `ORDER BY count DESC, gram` in SQL). Same
     * sorted-run-length discipline as [[topCount]]. */
-  def topElemChars(arr: Column): Column =
+  private[graft] def topElemChars(arr: Column): Column =
     aggregate(array_sort(arr),
       struct(lit(null).cast("string").as("prev"), lit(0).as("run"),
         lit(0).as("best"), lit(null).cast("string").as("bestg")),
@@ -148,7 +144,7 @@ object TextAnalysis {
   /** Characters covered by all elements occurring more than once:
     * Σ count·length over distinct repeated elements — one sorted
     * fold, closing each run as the element changes. */
-  def dupElemChars(arr: Column): Column = {
+  private[graft] def dupElemChars(arr: Column): Column = {
     def closed(prev: Column, run: Column): Column =
       when(run >= 2, run.cast("long") * length(prev)).otherwise(lit(0L))
     aggregate(array_sort(arr),
@@ -169,25 +165,23 @@ object TextAnalysis {
   // Patterns stay in the Java-regex ∩ RE2 subset (no lookaround) so
   // the DuckDB oracle can run them verbatim.
 
-  /** Default scrub rules, applied in order: email, SSN-shaped,
+  /** Scrub rules, applied in order: email, SSN-shaped,
     * US-phone-shaped. SSN (3-2-4) before phone (3-3-4) — the two are
     * disjoint, but keeping fixed order makes the fold deterministic
     * under future overlapping additions. */
-  val defaultPiiPatterns: Seq[(String, String)] = Seq(
+  private val PiiPatterns: Seq[(String, String)] = Seq(
     "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}" -> "<email>",
     "\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b" -> "<ssn>",
     "\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b" -> "<phone>")
 
   /** Sequential pattern→placeholder rewrite. */
-  def redact(text: Column,
-             patterns: Seq[(String, String)] = defaultPiiPatterns): Column =
-    patterns.foldLeft(text) { case (t, (p, r)) => regexp_replace(t, p, r) }
+  def redact(text: Column): Column =
+    PiiPatterns.foldLeft(text) { case (t, (p, r)) => regexp_replace(t, p, r) }
 
   /** Total matches across all patterns, counted on the ORIGINAL text
     * (so the audit count is independent of replacement order). */
-  def piiCount(text: Column,
-               patterns: Seq[(String, String)] = defaultPiiPatterns): Column =
-    patterns.map { case (p, _) =>
+  def piiCount(text: Column): Column =
+    PiiPatterns.map { case (p, _) =>
       size(call_function("regexp_extract_all", text, lit(p), lit(0)))
     }.reduce(_ + _)
 
@@ -211,7 +205,7 @@ object TextAnalysis {
   // that built the Colossal Clean Crawled Corpus). Line level: keep
   // only lines ending in terminal punctuation, with ≥ 3 words, and
   // without the word "javascript"; page level: drop pages containing
-  // "lorem ipsum" or "{", or with fewer than `minKeptLines` surviving
+  // "lorem ipsum" or "{", or with fewer than 5 surviving
   // lines. Per-row array expressions — scan-stage, no shuffle.
 
   /** Lines surviving the C4 line rules, from a '\n'-separated text. */
@@ -222,9 +216,9 @@ object TextAnalysis {
         !lower(l).contains("javascript"))
 
   /** The C4 page predicate over the original lines + kept lines. */
-  def c4PageKeep(lines: Column, kept: Column, minKeptLines: Int = 5): Column = {
+  def c4PageKeep(lines: Column, kept: Column): Column = {
     val joined = lower(concat_ws("\n", lines))
     !joined.contains("lorem ipsum") && !joined.contains("{") &&
-      size(kept) >= minKeptLines
+      size(kept) >= 5
   }
 }

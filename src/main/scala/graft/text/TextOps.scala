@@ -68,10 +68,11 @@ object TextOps {
           .as("chunk_word_len"))
   }
 
-  /** F13 `truncate_doc_text` (`rag_2.py:52-61`): keep first `topN` +
-    * last `bottomN` lines; documents at or under the budget pass
-    * through unchanged. */
-  def truncateTopBottom(c: Column, topN: Int = 4, bottomN: Int = 4): Column = {
+  /** F13 `truncate_doc_text` (`rag_2.py:52-61`): keep the first 4 +
+    * last 4 lines; documents at or under the budget pass through
+    * unchanged. */
+  def truncateTopBottom(c: Column): Column = {
+    val (topN, bottomN) = (4, 4)
     val lines = split(c, "\n")
     val n = size(lines)
     when(c.isNull, lit(null).cast("string"))
@@ -80,10 +81,11 @@ object TextOps {
         concat(slice(lines, 1, topN), slice(lines, -bottomN, bottomN))))
   }
 
-  /** F13 `keep_lines` variant (`faiss_new_.py:396-398`): first+last N
+  /** F13 `keep_lines` variant (`faiss_new_.py:396-398`): first+last 2
     * lines joined unconditionally (lines duplicate when the doc is
     * short — reference behavior, kept). */
-  def keepLines(c: Column, numLines: Int = 4): Column = {
+  def keepLines(c: Column): Column = {
+    val numLines = 2
     val lines = split(c, "\n")
     val n = size(lines)
     concat_ws("\n",

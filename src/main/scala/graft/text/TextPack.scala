@@ -84,8 +84,8 @@ object TextPack extends QueryPack {
     import spark.implicits._
     truncVectors.zipWithIndex.map { case (s, i) => (i, s) }.toDF("id", "s")
       .select(col("id"),
-        TextOps.truncateTopBottom(col("s"), 4, 4).as("truncated"),
-        TextOps.keepLines(col("s"), 2).as("kept"))
+        TextOps.truncateTopBottom(col("s")).as("truncated"),
+        TextOps.keepLines(col("s")).as("kept"))
       .orderBy(col("id"))
   }
 

@@ -421,7 +421,7 @@ object KnnJoin {
   private def ivfCentroids(spark: SparkSession, vecs: DataFrame,
                            nCentroids: Int): DataFrame = {
     import graft.sample.Sampling
-    var centroids = Sampling.fixedSample(vecs, nCentroids, col("vec_id"), Seed)
+    var centroids = Sampling.fixedSample(vecs, nCentroids, col("vec_id"))
       .select(col("vec_id").as("centroid_id"), col("embedding"))
     for (_ <- 0 until LloydIters) {
       val asg = nearestCentroids(spark, vecs, centroids, 1)

@@ -25,7 +25,7 @@ object VectorOps {
     * declarative cross-check (a spec asserts bitwise equality with the
     * native expression); ~10× slower: per-row array allocation + two
     * lambda evals per element, outside whole-stage codegen. */
-  def dotDeclarative(a: Column, b: Column): Column =
+  private[graft] def dotDeclarative(a: Column, b: Column): Column =
     aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v)
 
@@ -42,11 +42,6 @@ object VectorOps {
   /** Cosine similarity. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
-
-  /** F22: FAISS-style cosine from a normalized-IP distance:
-    * `1 − max(0, dist)` (`Neww_Fai.py:616`). */
-  def cosineFromIpDistance(dist: Column): Column =
-    lit(1.0) - greatest(lit(0.0), dist)
 
   /** F22: `(1+sim)/2` rescale to [0,1] (`faiss_new_.py:502`). */
   def rescale01(sim: Column): Column = (lit(1.0) + sim) / 2.0

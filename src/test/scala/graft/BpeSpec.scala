@@ -12,6 +12,22 @@ import graft.text.{Bpe, TextOps}
 class BpeSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** Deterministic syllable-composed Zipf vocabulary — production-
+    * shaped type tables (word length 4–24 chars, long count-1 tail)
+    * for the incremental-vs-naive test; the suite corpus itself has a
+    * ~31-word vocabulary. */
+  private def syntheticZipfTypes(n: Int): Seq[(String, Long)] = {
+    val syl = Array("ka", "to", "ri", "mu", "en", "sha", "lo", "ve",
+      "qu", "zi", "na", "ber", "ten", "gra", "pol", "dis")
+    def synWord(i: Int): String = {
+      val h = i * 0x9e3779b9
+      (0 until (2 + math.floorMod(h, 5))).map(j =>
+        syl(math.floorMod(h >> (j * 4 + 3), 16))).mkString
+    }
+    (0 until n).map(i =>
+      (synWord(i) + i, math.max(1L, 3000000L / (i + 1))))
+  }
+
   test("overlapping counts + leftmost application on a repeat run") {
     // 'aaaa': pair (a,a) counts 3 (zip-with-tail, Sennrich get_stats);
     // application is leftmost non-overlapping → [aa, aa] → next merge
@@ -93,7 +109,7 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.trainOnTypesIncremental(types) == Bpe.trainOnTypes(types))
     // a production-shaped vocabulary, deep merge sequence (ties, long
     // count-1 tail, multi-char code-point-composed symbols)
-    val zipf = Bpe.syntheticZipfTypes(4096)
+    val zipf = syntheticZipfTypes(4096)
     assert(Bpe.trainOnTypesIncremental(zipf, 256)
       == Bpe.trainOnTypes(zipf, 256))
   }

@@ -161,7 +161,7 @@ class CatalystExtensionSpec extends AnyFunSuite {
       val n = size(ws)
       val stop = when(n > 0,
         TextAnalysis.profileScore(ws,
-          TextAnalysis.defaultProfiles.flatMap(_._2)).cast("double")
+          TextAnalysis.Profiles.flatMap(_._2)).cast("double")
           / n.cast("double")).otherwise(lit(0.0))
       val punct = when(length(col("text")) > 0,
         TextAnalysis.punctCharsRegex(col("text")).cast("double")

@@ -220,8 +220,7 @@ class DedupSpec extends AnyFunSuite {
       "on a replicated corpus") {
     import org.apache.spark.sql.functions.{col, lit}
     def direct(c: org.apache.spark.sql.DataFrame) =
-      Dedup.dedupGroups(Dedup.jaccardPairs(c, col("doc_id"), col("text"),
-          k = 3, threshold = 0.5))
+      Dedup.dedupGroups(Dedup.jaccardPairs(c, col("doc_id"), col("text")))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def collapsed(c: org.apache.spark.sql.DataFrame) =
       DedupPack.groupsViaExactCollapse(c)
@@ -241,8 +240,7 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{coalesce, col, count, floor, lit}
     // the independent twin: enumerate EVERY true pair and band it
     def direct(c: org.apache.spark.sql.DataFrame): Map[Double, Long] = {
-      val banded = Dedup.jaccardPairs(c, col("doc_id"), col("text"),
-          k = 3, threshold = 0.5)
+      val banded = Dedup.jaccardPairs(c, col("doc_id"), col("text"))
         .groupBy(floor(col("jaccard") * 10).cast("long").as("b10"))
         .agg(count(lit(1)).as("n"))
       spark.range(5, 11).select(col("id").as("b10"))

@@ -10,7 +10,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("retrying client survives transient failures with backoff") {
     FlakyClient.reset()
-    val client = new RetryingClient(new FlakyClient(StubExtractor, 2), maxRetries = 3)
+    val client = new RetryingClient(new FlakyClient(StubExtractor, 2))
     val out = client.complete("EXTRACT|1|hello world")
     assert(out.contains("\"first_word\": \"hello\""))
     assert(FlakyClient.attempts.get("EXTRACT|1|hello world").get() == 3)
@@ -18,7 +18,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("retrying client gives up after maxRetries") {
     FlakyClient.reset()
-    val client = new RetryingClient(new FlakyClient(StubExtractor, 10), maxRetries = 2)
+    val client = new RetryingClient(new FlakyClient(StubExtractor, 10))
     intercept[RuntimeException] {
       client.complete("EXTRACT|2|a b c")
     }
@@ -102,8 +102,7 @@ class LlmSpec extends AnyFunSuite {
       (3L, "apple banana cherry durian elderberry fig grape")
     ).toDF("doc_id", "text")
     def run(qs: Seq[(Long, String)], cap: Long = Long.MaxValue) =
-      Bm25.topK(docs, qs.toDF("query_id", "term"), k = 4,
-          maxTermDocFreq = cap)
+      Bm25.topK(docs, qs.toDF("query_id", "term"), maxTermDocFreq = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3)))
     // rare term: both zebra docs hit; the shorter doc wins the length
@@ -255,4 +254,25 @@ class LlmSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(rows.toSeq == staged.toSeq)
   }
+}
+
+/** Fails the first `failTimes` attempts per distinct prompt, then
+  * delegates — exercises the retry path deterministically. */
+final class FlakyClient(inner: LlmClient, failTimes: Int) extends LlmClient {
+  def complete(prompt: String): String = {
+    val n = FlakyClient.attempts
+      .computeIfAbsent(prompt, _ => new java.util.concurrent.atomic.AtomicInteger(0))
+      .incrementAndGet()
+    if (n <= failTimes) throw new RuntimeException(s"flaky failure #$n")
+    inner.complete(prompt)
+  }
+  // responses (when they arrive) are inner's — share its cache identity
+  override def cacheKey: String = inner.cacheKey
+}
+
+object FlakyClient {
+  /** JVM-wide attempt counts (local-mode tests share one JVM). */
+  val attempts =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+  def reset(): Unit = attempts.clear()
 }

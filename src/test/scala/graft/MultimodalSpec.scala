@@ -44,8 +44,8 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("shard plan: size-bounded, contiguous, covers every sample once") {
-    val S = 4096L
-    val shards = MultimodalPack.shardPlan(spark, sf, S)
+    val S = MultimodalPack.ShardBytes
+    val shards = MultimodalPack.shardPlan(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     val docs = graft.core.Tables(spark, sf).documents
@@ -79,7 +79,7 @@ class MultimodalSpec extends AnyFunSuite {
       "plan-equal row counts, size-bounded") {
     val S = MultimodalPack.ShardBytes
     val root = MultimodalPack.shardedWriteDir(spark, sf)
-    val plan = MultimodalPack.shardPlan(spark, sf, S)
+    val plan = MultimodalPack.shardPlan(spark, sf)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     // one shard_id=K directory per planned shard, nothing extra
     val dirs = new java.io.File(root).listFiles()
@@ -290,8 +290,9 @@ class MultimodalSpec extends AnyFunSuite {
       col("id").as("unit_idx"),
       sceneContentCol(concat(lit("vid|f"), col("id") + 100), lit("v1"))
         .as("content"))
-    val rows = MultimodalPack.clipContainment(base.unionByName(clip),
-        Multimodal.dhash, maxDist = 4, bits = Multimodal.DhashBits)
+    val rows = MultimodalPack.clipContainmentFromUnits(
+        graft.core.Caches.cut(MultimodalPack.unitFps(base.unionByName(clip),
+          Multimodal.dhash)), maxDist = 4, bits = Multimodal.DhashBits)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))

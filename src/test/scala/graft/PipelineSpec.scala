@@ -31,17 +31,6 @@ class PipelineSpec extends AnyFunSuite {
       .select(col("id"), col("decision"))
       .collect().map(r => r.getInt(0).toLong -> r.getString(1)).toMap
     assert(viaLifecycle == viaPack)
-    val (stp, hitl) = Lifecycles.routeStp(
-      Lifecycles.confirm(df, col("full_text"), col("sor_first"),
-        col("sor_last"), col("sor_address")))
-    assert(stp.count() + hitl.count() == df.count())
-  }
-
-  test("extraction lifecycle equals the l02 accuracy table") {
-    val a = Lifecycles.extractAndEvaluate(spark, sf).collect().map(_.toSeq)
-    val b = SparkEntry.queries("l02_extract_accuracy")(spark, sf)
-      .collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq)
   }
 
   test("feedback Apply: approved rows corrected, the rest untouched") {
@@ -87,20 +76,17 @@ class PipelineSpec extends AnyFunSuite {
       (5L, "en", "uu vv ww xx yy"),
       (6L, "en", "zz ab cd ef gh"))
       .toDF("doc_id", "lang", "text")
-    // a null group key would never match the broadcast threshold join
-    // — before the fix the null-lang rows bypassed the prefilter; now
-    // null ≡ "" is ONE language of 3 members, capped like "en"
-    val out = graft.text.AnalysisPack.capCorpusByQualityCollapsed(docs, 2)
+    // the lifecycle keys the cap on coalesce(lang, ""): null ≡ "" is
+    // ONE language of 3 members, capped like "en"
+    val out = graft.text.AnalysisPack.capByQuality(docs,
+        coalesce(col("lang"), lit("")),
+        graft.text.TextAnalysis.qualityScore(col("text")), 2)
       .collect().map(r => (r.getLong(0), Option(r.getString(1))))
     assert(out.count(_._2.forall(_ == "")) == 2,
       s"nullish language not capped: ${out.toSeq}")
     assert(out.count(_._2.contains("en")) == 2)
     // rows keep their original lang (null stays null, not "")
     assert(out.exists(_._2.isEmpty))
-    // the TopNThreshold form agrees on membership
-    val viaBuffer = graft.text.AnalysisPack.capCorpusByQuality(docs, 2)
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    assert(viaBuffer == out.map(_._1).toSet)
     // and the lifecycle entry's driver-side median no longer NPEs
     assert(Lifecycles.langBalanceCap(docs).count() == 6L)
   }
@@ -205,13 +191,6 @@ class PipelineSpec extends AnyFunSuite {
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(capped.select(col("doc_id")).collect().map(_.getLong(0)).toSet
       == direct)
-    // the collapsed-count threshold and the TopNThreshold buffer are
-    // the same order statistic — pin the two cap forms equal here so
-    // neither can drift from the other
-    val viaBuffer = graft.text.AnalysisPack
-      .capCorpusByQuality(docs, cap.toInt)
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    assert(viaBuffer == direct)
   }
 
   test("corpus report: rollup is consistent and dup rate reflects planted copies") {

@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * what a query computes. No function takes an optional frame it
   * would derive inline when absent: an approximate search takes its
   * trained index, and an ingest screen its batch's derived rows, as
-  * required arguments. A scan of the main sources keeps it that way. */
+  * required arguments. Every public or `private[graft]` member of a
+  * main object is named by some main source or the benchmark harness,
+  * or is on [[Reachable]]'s allowlist with its reason. A scan of the
+  * main sources keeps it that way. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val builder = """SparkSession\s*\.\s*builder""".r
@@ -27,15 +30,34 @@ class SessionGuardSpec extends AnyFunSuite {
     Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
     Paths.get("core", "GraftSession.scala"))
 
-  private def mainSources: Seq[Path] = {
-    val root = Paths.get("src/main/scala")
+  private def sources(dir: String): Seq[Path] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root: $root missing")
     val s = Files.walk(root)
     try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
     finally s.close()
   }
+  private def mainSources: Seq[Path] = sources("src/main/scala")
 
   test("the guard patterns match what they forbid") {
+    // a qualified call split across lines is a reference
+    assert(Reachable.references("compact", Reachable.code(
+      "val out = graft.relational.Skew\n      .compact(spark, frag)")))
+    // a scaladoc mention is not
+    assert(!Reachable.references("compact", Reachable.code(
+      "/** the [[graft.relational.Skew.compact]] posture */ val x = 1")))
+    assert(!Reachable.references("compact", Reachable.code(
+      "val y = 2 // Skew.compact(spark)")))
+    assert(Reachable.references("compact", Reachable.code(
+      "val z = \"s3://b/\" + compact(d)")))
+    assert(!Reachable.references("compact", Reachable.code("compacted(d)")))
+    // a name referenced only by specs is not: specs are not scanned
+    val main = Seq(
+      "A.scala" -> ("object A {\n  def used = 1\n  def specOnly = 2\n" +
+        "  private def own = 3\n  private class C { def member = 4 }\n}"),
+      "B.scala" -> "object B {\n  /** [[A.specOnly]] */\n  val x = A.used\n}")
+    assert(Reachable.unreferenced(main, Nil) == Seq("A.specOnly", "B.x"))
+    assert(Reachable.unreferenced(main, Seq("B.x")) == Seq("A.specOnly"))
     assert(builder.findFirstIn("SparkSession\n  .builder()").nonEmpty)
     assert(hookAssign.findFirstIn(
       "spark.experimental.extraStrategies =\n  Seq(s)").nonEmpty)
@@ -89,5 +111,159 @@ class SessionGuardSpec extends AnyFunSuite {
     val offenders = mainSources
       .filter(f => optionalFrame.findFirstIn(Files.readString(f)).nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("every public or private[graft] member of a main object is named " +
+      "by another main source or the benchmark harness, or is allowlisted") {
+    def read(ps: Seq[Path]) = ps.map(p => p.toString -> Files.readString(p))
+    val bench = sources("perfbench/src").map(p => Files.readString(p))
+    val open = Reachable.unreferenced(read(mainSources), bench)
+    val unlisted = open.filterNot(Reachable.allowlist.contains)
+    assert(unlisted.isEmpty, "unreferenced main surface — delete it or " +
+      "allowlist it with its reason:\n" + unlisted.mkString("\n"))
+    val stale = Reachable.allowlist.keys.toSeq.sorted.filterNot(open.contains)
+    assert(stale.isEmpty, "allowlisted but now referenced or gone:\n" +
+      stale.mkString("\n"))
+  }
+}
+
+/** The unreferenced-surface scan: members declared at the top level of
+  * a main `object`'s body, minus `private` (other than
+  * `private[graft]`), `protected` and `override` members, whose name
+  * occurs in no main or benchmark source outside comments other than
+  * at a declaration of that name. */
+private object Reachable {
+
+  /** Members kept with no caller in the main sources or the benchmark
+    * harness, each with its reason. */
+  val allowlist: Map[String, String] = Map(
+    "SparkEntry.oracleSql" ->
+      "the dir-independent oracle map RelationalPackSpec checks against the registry",
+    "Dedup.shinglesDeclarative" -> "declarative twin of the native WordShingles",
+    "Dedup.hammingPairsAllPairsOf" -> "all-pairs oracle of hammingPairsBandedOf",
+    "DedupPack.incrementalMinhashOf" ->
+      "d19 spec entry: both sides' state derived from text",
+    "DedupPack.dedupGateOf" -> "s09 spec twin: both sides' state derived from text",
+    "LlmPack.mmrRerankStaged" -> "declarative twin of l11's MMR selection",
+    "FeedbackPack.correctionsFromSuggestions" ->
+      "f07's Approve stage: suggestions to corrections, wired end to end by PipelineSpec",
+    "Lifecycles.confirm" ->
+      "l04's confirmation rule over arbitrary columns, pinned equal to l04",
+    "Sampling.sampleSize" -> "scalar twin of m11's sample-size grid",
+    "Streams.tumblingCountsWatermarked" -> "s01's append-mode streaming form",
+    "Streams.rateLimitStream" -> "s08's streaming form",
+    "Streams.extractConfirmRouteEventTime" -> "p04's event-time streaming form",
+    "Streams.mediaIngestGate" -> "s12's streaming form",
+    "Streams.readMediaDecisionsLog" -> "reader of s12's streaming decision log",
+    "Streams.compactDecisionsLog" -> "seam of s09's decision-log compaction",
+    "Streams.readSummaryLog" -> "reader of the s09 stream gate's run-summary log",
+    "Bpe.trainOnTypes" -> "naive merge loop, oracle of trainOnTypesIncremental",
+    "TextAnalysis.profileScore" -> "declarative twin of the native ProfileHits",
+    "TextAnalysis.alphaCharsRegex" -> "regex twin of the native CharClassCount",
+    "TextAnalysis.punctCharsRegex" -> "regex twin of the native CharClassCount",
+    "TextAnalysis.digitCharsRegex" -> "regex twin of the native CharClassCount",
+    "TextAnalysis.topElemChars" -> "declarative twin of the native RepetitionChars",
+    "TextAnalysis.dupElemChars" -> "declarative twin of the native RepetitionChars",
+    "KnnJoin.exactCross" -> "declarative oracle of the exact kNN operator",
+    "KnnJoin.cosinePairsAbove" -> "all-pairs oracle of cosinePairsAboveBanded",
+    "KnnJoin.pqIndex" ->
+      "the PQ trainer; the session artifacts memoize its codebook and codes apart",
+    "MlPack.mlpPlan" -> "un-memoized MLP transform twin",
+    "MlPack.firstPgPlan" -> "un-memoized first_pg transform twin",
+    "VectorOps.dotDeclarative" -> "declarative twin of the native ArrayDot")
+
+  /** `source` with comments removed; string literals stay. */
+  def code(source: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    val n = source.length
+    def at(s: String) = source.startsWith(s, i)
+    while (i < n) {
+      if (at("//")) {
+        while (i < n && source(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 0
+        do {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else i += 1
+        } while (i < n && depth > 0)
+        out += ' '
+      } else if (at("\"\"\"")) {
+        val end = source.indexOf("\"\"\"", i + 3)
+        val j = if (end < 0) n else end + 3
+        out ++= source.substring(i, j)
+        i = j
+      } else if (source(i) == '"') {
+        var j = i + 1
+        while (j < n && source(j) != '"' && source(j) != '\n')
+          j += (if (source(j) == '\\') 2 else 1)
+        j = math.min(j + 1, n)
+        out ++= source.substring(i, j)
+        i = j
+      } else if (source(i) == '\'' && charLiteral(source, i) > 0) {
+        val len = charLiteral(source, i) // '"' must not open a string
+        out ++= source.substring(i, i + len)
+        i += len
+      } else {
+        out += source(i)
+        i += 1
+      }
+    }
+    out.toString
+  }
+
+  /** Length of the char literal at `i` (plain, escaped or unicode-escaped), else 0. */
+  private def charLiteral(s: String, i: Int): Int =
+    Seq(3, 4, 8).find(len => i + len <= s.length && s(i + len - 1) == '\'' &&
+      (len == 3 || s(i + 1) == '\\') && (len != 8 || s(i + 2) == 'u'))
+      .getOrElse(0)
+
+  private def word(name: String) =
+    ("(?<![\\w$])" + java.util.regex.Pattern.quote(name) + "(?![\\w$])").r
+
+  def references(name: String, code: String): Boolean =
+    word(name).findFirstIn(code).nonEmpty
+
+  private val declKw = "(def|val|var|object|class|trait|type)"
+  private val decl = ("(?m)^[ \t]*((?:(?:private(?:\\[\\w+\\])?|protected|" +
+    "override|final|implicit|lazy|case|sealed|abstract)\\s+)*)" + declKw +
+    "\\s+([A-Za-z_]\\w*)").r
+  private val topObject = "(?m)^(?:(?:private\\[graft\\]|case)\\s+)*object\\s+(\\w+)[^{\\n]*\\{".r
+
+  /** (object, member) for each scanned member of `code`. */
+  private def members(code: String): Seq[(String, String)] = {
+    // braces inside string literals do not nest
+    val skeleton = code.replaceAll("\"\"\"[\\s\\S]*?\"\"\"|\"(?:\\\\.|[^\"\\\\\\n])*\"", "\"\"")
+    val depth = skeleton.scanLeft(0) {
+      case (d, '{') => d + 1
+      case (d, '}') => d - 1
+      case (d, _) => d
+    }
+    topObject.findAllMatchIn(skeleton).filter(m => depth(m.start) == 0)
+      .toSeq.flatMap { m =>
+        val end = (m.end until skeleton.length)
+          .find(i => skeleton(i) == '}' && depth(i) == 1).getOrElse(skeleton.length)
+        decl.findAllMatchIn(skeleton.substring(0, end)).filter { d =>
+          d.start >= m.end && depth(d.start(3)) == 1 &&
+          !"\\bprivate\\b(?!\\[graft\\])|\\bprotected\\b|\\boverride\\b".r
+            .findFirstIn(d.group(1)).isDefined &&
+          !Set("main", "apply", "unapply").contains(d.group(3))
+        }.map(d => m.group(1) -> d.group(3))
+      }
+  }
+
+  /** "Object.member" for every scanned member of `main` (path, source)
+    * whose name no main or `bench` source references, sorted. */
+  def unreferenced(main: Seq[(String, String)], bench: Seq[String]): Seq[String] = {
+    val mainCode = main.map { case (_, s) => code(s) }
+    val all = mainCode ++ bench.map(code)
+    mainCode.flatMap(members).distinct.filter { case (_, name) =>
+      val uses = all.map(word(name).findAllMatchIn(_).size).sum
+      val decls = mainCode.map(c =>
+        (declKw + "\\s+" + java.util.regex.Pattern.quote(name) + "(?![\\w$])")
+          .r.findAllMatchIn(c).size).sum
+      uses <= decls
+    }.map { case (o, n) => s"$o.$n" }.sorted
   }
 }

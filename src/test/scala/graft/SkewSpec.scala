@@ -38,51 +38,6 @@ class SkewSpec extends AnyFunSuite {
     }
   }
 
-  test("partitioned layout prunes non-matching partitions from the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val docs = Tables(spark, sf).documents
-      .withColumn("channel",
-        element_at(array(lit("EML"), lit("FAX"), lit("WIN"), lit("SCN")),
-          pmod(col("doc_id"), lit(4)).cast("int") + 1))
-    Skew.writePartitioned(docs, dir, Seq("channel", "lang"))
-    val back = spark.read.parquet(dir)
-      .filter(col("channel") === "EML" && col("lang") === "de")
-    // partition filters prune at planning: the scan's selected
-    // partitions shrink, and no Filter on channel/lang remains
-    val scan = back.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("PartitionFilters") &&
-      (scan.contains("channel#") || scan.contains("isnotnull(channel")),
-      s"no partition filters in scan:\n$scan")
-    val expected = docs.filter(col("channel") === "EML" && col("lang") === "de").count()
-    assert(back.count() == expected && expected > 0)
-  }
-
-  test("bucketed co-located join plans without a shuffle") {
-    val orders = Tables(spark, sf).orders
-    val lineitem = Tables(spark, sf).lineitem
-      .withColumnRenamed("l_orderkey", "o_orderkey")
-    Skew.writeBucketed(orders, "b_orders", 8, "o_orderkey")
-    Skew.writeBucketed(lineitem, "b_lineitem", 8, "o_orderkey")
-    val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force the sort-merge path: the point is that bucketing makes
-      // the shuffle unnecessary, not that broadcast avoids it
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val j = spark.table("b_orders")
-        .join(spark.table("b_lineitem"), "o_orderkey")
-        .select(col("o_orderkey"), col("l_quantity"))
-      val n = j.count()
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"shuffle in bucketed join:\n$plan")
-      val expected = orders.join(lineitem, "o_orderkey").count()
-      assert(n == expected && n > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    }
-  }
-
   test("compaction collapses a fragmented directory to byte-budget file count") {
     def dataFiles(d: String) = new java.io.File(d).listFiles()
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))

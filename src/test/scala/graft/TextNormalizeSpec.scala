@@ -67,9 +67,10 @@ class TextNormalizeSpec extends AnyFunSuite {
   }
 
   test("truncateTopBottom keeps short docs unchanged") {
-    val t = (s: String) => one(TextOps.truncateTopBottom(col("s"), 2, 2), s)
+    val t = (s: String) => one(TextOps.truncateTopBottom(col("s")), s)
     assert(t("a\nb\nc") == "a\nb\nc")
-    assert(t("a\nb\nc\nd\ne\nf") == "a\nb\ne\nf")
+    assert(t("1\n2\n3\n4\n5\n6\n7\n8") == "1\n2\n3\n4\n5\n6\n7\n8")
+    assert(t("1\n2\n3\n4\n5\n6\n7\n8\n9\n10") == "1\n2\n3\n4\n7\n8\n9\n10")
   }
 
   test("json repair slices to the outer braces and parses strictly") {
@@ -323,22 +324,6 @@ class TextNormalizeSpec extends AnyFunSuite {
       "swapping adjacent docs must move the checksum")
   }
 
-  test("TopNThreshold.nth is the exact order statistic under heavy ties") {
-    import spark.implicits._
-    val vals = Seq.tabulate(1000)(i => (i % 13).toDouble / 13.0)
-    val nth = vals.toDF("v").repartition(8)
-      .agg(graft.text.TopNThreshold.nth(50)(col("v"))).collect()(0).getDouble(0)
-    assert(nth == vals.sorted(Ordering.Double.TotalOrdering.reverse)(49))
-    // the >= prefilter keeps at least n rows (ties included) but far
-    // fewer than the group — the point of the escape
-    val survivors = vals.count(_ >= nth)
-    assert(survivors >= 50 && survivors < vals.size / 2)
-    // an under-full group yields -Infinity: the prefilter keeps all
-    val few = Seq(1.0, 2.0).toDF("v")
-      .agg(graft.text.TopNThreshold.nth(50)(col("v"))).collect()(0).getDouble(0)
-    assert(few == Double.NegativeInfinity)
-  }
-
   test("quality cap skew escape equals the plain window, incl. skewed corpus") {
     import spark.implicits._
     val sf = SparkTestSession.sf
@@ -349,17 +334,24 @@ class TextNormalizeSpec extends AnyFunSuite {
       == rows(graft.text.AnalysisPack.qualityCapScaled(spark, sf)))
     // deliberately skewed corpus: one language at 50:1 dominance with
     // many exact quality ties (identical texts), so the threshold-tie
-    // path (quality == nth kept, ranked by doc_id) is exercised
-    val docs = (0 until 510).map { i =>
-      val lang = if (i < 500) "big" else "small"
+    // path (quality == nth kept, ranked by doc_id) is exercised; a
+    // null-lang group and a separate "" group, which a16's
+    // PARTITION BY lang keeps as two languages of their own
+    val docs = (0 until 530).map { i =>
+      val lang =
+        if (i < 500) Some("big") else if (i < 510) Some("small")
+        else if (i < 520) None else Some("")
       val text = if (i % 5 == 0) "the of and is in repeated words here now"
         else s"unique text number $i with the of and some words w${i % 11}"
       (i.toLong, lang, text)
     }.toDF("doc_id", "lang", "text")
-    for (cap <- Seq(7, 20)) // 20 > |small|: the -Infinity keep-all path
+    for (cap <- Seq(7, 20)) // 20 > |small|: the under-full keep-all path
       assert(rows(graft.text.AnalysisPack.qualityCapOf(docs, cap))
         == rows(graft.text.AnalysisPack.qualityCapScaledOf(docs, cap)),
         s"cap=$cap")
+    // the null and "" languages are capped as two separate groups
+    val capped = rows(graft.text.AnalysisPack.qualityCapScaledOf(docs, 7))
+    assert(capped.count(_._2 == null) == 7 && capped.count(_._2 == "") == 7)
   }
 
   test("source overlap grid keeps shingle-free sources with zero rows") {
@@ -494,7 +486,11 @@ class TextNormalizeSpec extends AnyFunSuite {
     val base = graft.text.AnalysisPack.unigramLogprob(spark, sf)
       .select(col("mean_nll")).cache()
     try {
-      val thr = graft.text.AnalysisPack.tercileThresholdsSketch(base)
+      val thr = graft.core.Sketches.histogramQuantilesWithWidth(
+          base, col("mean_nll"), bins = 1000, probs = Seq(1.0 / 3, 2.0 / 3))
+        .agg(max(when(col("q") < 0.5, col("est"))).as("q1"),
+          max(when(col("q") > 0.5, col("est"))).as("q2"),
+          max(col("bin_width")).as("bin_width"))
       val row = thr.collect()(0)
       val (q1s, q2s, bw) =
         (row.getDouble(0), row.getDouble(1), row.getDouble(2))
