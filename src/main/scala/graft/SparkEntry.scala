@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries`/`oracleSql` are the union of per-family [[QueryPack]]s; the
+  * `queries`/`oracleSqlFor` are the union of per-family [[QueryPack]]s; the
   * driver runs each query at sf0.01 and hash-compares against the DuckDB
   * oracle SQL on the same parquet tables.
   */
@@ -48,13 +48,10 @@ object SparkEntry {
     packs.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  private[graft] def oracleSql: Map[String, String] =
-    packs.flatMap(_.oracles).toMap
-
-  /** Dir-aware form — Verify dumps THIS for its data dir, so oracles
-    * that embed per-dir fitted state (MlPack weights) always describe
-    * the dir under verification (see [[QueryPack.oraclesFor]]). */
+    * the same parquet tables (omitted for non-SQL-expressible ops).
+    * Dir-aware — Verify dumps THIS for its data dir, so oracles that
+    * embed per-dir fitted state (MlPack weights) always describe the
+    * dir under verification (see [[QueryPack.oraclesFor]]). */
   def oracleSqlFor(dir: String): Map[String, String] =
     packs.flatMap(_.oraclesFor(dir)).toMap
 }

@@ -259,8 +259,8 @@ object DedupPack extends QueryPack {
     // canonicalizes per reference per action — driver-serial seconds
     // at the gate's plan sizes. All COMPACT proxy rows (ids, 60-bit
     // hashes, band strings), never text — guide §8. The batch
-    // shingles are used as the caller passes them: the gate cuts its
-    // survivor rows itself, and d19 passes an id-filter of a session
+    // shingles are used as the caller passes them: the gate cuts the
+    // batch's rows itself, and d19 passes an id-filter of a session
     // artifact — a second localCheckpoint would re-materialize either
     // for nothing.
     val cand = graft.core.Caches.cut(
@@ -311,12 +311,14 @@ object DedupPack extends QueryPack {
     * (digest set, band signatures, hashed shingles) — per batch,
     * history text is never rescanned and history signatures never
     * recomputed. The batch arrives as its digest (doc_id, h) rows
-    * ([[digestRowsOf]] — the streaming caller derives its Bloom probe
-    * from the same frame, so each row is digested once), plus its
-    * signature (doc_id, band, bandsig) and shingle (id, sh) rows over
-    * the WHOLE batch ([[bandSigsOf]] / [[shingleRowsOf]], or id-filters
-    * of the session artifacts in the s09 twin); the screen semi-joins
-    * them to the digest-new ids.
+    * ([[digestRowsOf]] — the streaming caller derives its history
+    * semi-join's probe from the same frame, so each row is digested
+    * once), plus its signature (doc_id, band, bandsig) and shingle
+    * (id, sh) rows over the WHOLE batch ([[bandSigsOf]] /
+    * [[shingleRowsOf]], or id-filters of the session artifacts in the
+    * s09 twin), which the MinHash screen takes as passed: an exact
+    * duplicate's verdict is its digest verdict whatever its best
+    * match.
     *
     * Returns (decisions, new digests (h), new band signatures
     * (hist_id, band, bandsig), new hashed shingles (id, sh)) so a
@@ -358,18 +360,15 @@ object DedupPack extends QueryPack {
           when(coalesce(col("in_hist"), lit(false)), "dup_of_history")
             .when(col("doc_id") =!= col("first_id"), "dup_in_batch")
             .otherwise("exact_new").as("ex_status")))
-    val sIds = ex.filter(col("ex_status") === "exact_new")
-      .select(col("doc_id"))
-    // the batch's signature/shingle rows semi-joined to the digest-new
-    // ids, shared by the fuzzy screen and (filtered to admitted) the
-    // history append — lineage-CUT (compact proxy rows; their plans
-    // otherwise carry the whole digest-screen front into every
-    // downstream reference)
-    val sSigs = graft.core.Caches.cut(
-      batchSigs.join(sIds, Seq("doc_id"), "left_semi"))
-    val sSh = graft.core.Caches.cut(
-      batchShingles.join(sIds.select(col("doc_id").as("id")), Seq("id"),
-        "left_semi"))
+    // the batch's signature/shingle rows as passed, shared by the
+    // fuzzy screen and (filtered to admitted) the history append —
+    // lineage-CUT (compact proxy rows; their plans otherwise carry the
+    // whole signature/shingle front into every downstream reference).
+    // Exact duplicates are screened too: their decision is their
+    // ex_status whatever their best match, and the append keeps only
+    // 'new' ids, so no digest-new cut is needed
+    val sSigs = graft.core.Caches.cut(batchSigs)
+    val sSh = graft.core.Caches.cut(batchShingles)
     // the gate consumes the screen's best-match CORE directly: d19's
     // n_candidates aggregation, its full-batch left join and its
     // orderBy would all be dead weight here (the decision columns

@@ -434,8 +434,8 @@ object MultimodalPack extends QueryPack {
     * near_dup_of_history (best = min (hamming, hist_id)), else new.
     * The batch arrives as its [[mediaFpRowsOf]] rows
     * (media_id, h, fp), lineage-CUT by the caller (the streaming gate
-    * derives its Bloom probe from the same cut, so each row is
-    * digested and fingerprinted once). Returns (decisions, new
+    * derives its history semi-join's probe from the same cut, so each
+    * row is digested and fingerprinted once). Returns (decisions, new
     * digests (h), new fingerprints (id, fp)) so the streaming caller
     * appends history state WITHOUT a second decode/dHash pass — the
     * batch's own fingerprints are filtered to the admitted ids.

@@ -178,7 +178,7 @@ object StreamPack extends QueryPack {
     * best_hist_id pointing at the historical original, the rest 'new'.
     * The streaming form ([[Streams.mediaIngestGate]]) runs the
     * identical relation per micro-batch against persisted digest +
-    * fingerprint state under the s09 generation/bloom lifecycle; the
+    * fingerprint state under the s09 generation lifecycle; the
     * StreamingSpec pins stream ≡ batch across micro-batch boundaries
     * and compaction. Equivalence scope is s09's: splits must not
     * straddle a scene's duplicate class (the spec's fixture); under

@@ -271,18 +271,20 @@ object Streams {
     * Dashboard box — see [[runSummaryOf]]) beside them in
     * `<outDir>_summary/batch=<id>`, and each batch's ADMITTED
     * documents append their derived state — content digests, per-band
-    * minhash signatures, hashed shingle rows, and the d13 Bloom bit
-    * positions of the digests — to four parquet history tables under
-    * `histDir`, which the next batch joins against. History text is
-    * never rescanned; history signatures are never recomputed;
-    * per-batch cost is the batch's own signature pass (over the whole
-    * arrival — the rows s09 semi-joins from the session artifacts)
-    * plus candidate-bounded joins (the d19 scale shape). [[GateOptions]]
-    * bounds the STATE lifecycle for long-running streams: generation
-    * compaction keeps per-trigger directory listings O(compactEvery)
-    * in stream age, the Bloom front keeps the exact digest join's
-    * probe side constant-bounded, and the optional retention TTL
-    * bounds state volume by horizon.
+    * minhash signatures and hashed shingle rows — to three parquet
+    * history tables under `histDir`, which the next batch joins
+    * against. History text is never rescanned; history signatures are
+    * never recomputed; per-batch cost is the batch's own signature
+    * pass (over the whole arrival — the rows s09 id-filters from the
+    * session artifacts) plus candidate-bounded joins (the d19 scale
+    * shape). The history digests reach the exact screen semi-joined
+    * with the batch's own distinct digests, so its join holds only the
+    * history rows the batch can match. [[GateOptions]] bounds the
+    * STATE lifecycle for long-running streams: generation compaction
+    * keeps per-trigger directory listings O(compactEvery) in stream
+    * age, and the optional retention TTL bounds state volume by
+    * horizon. A `bloom/` tree that an older version of the gate left
+    * under `histDir` is neither read nor deleted.
     *
     * Exactly-once across restarts: all writes go to per-batchId
     * subdirectories in OVERWRITE mode, and state reads list the
@@ -341,25 +343,6 @@ object Streams {
     *    are always IN-window — an upgrade must never silently expire
     *    the pre-upgrade history (spec-pinned).
     *
-    *    Upgrade note: a history dir that predates the bloom kind
-    *    keeps its screen DISABLED (the coverage guard) until the
-    *    first compaction rebuilds the bloom generation — an upgraded
-    *    long-running stream should therefore set `compactEvery` > 0,
-    *    or the guard's fallback join runs forever.
-    *  - `bloomScreen`: maintain a d13 Bloom bits relation (k=3,
-    *    m=2²⁰ — ≤1M position rows no matter how large history grows)
-    *    alongside the digests, and pre-screen each batch's digests
-    *    against it so only Bloom-POSITIVE digests reach the exact
-    *    history digest join (no false negatives, so decisions are
-    *    bit-identical — spec-pinned; the join's build side shrinks
-    *    from O(batch) to O(true dups + FP·batch)). Bloom state is
-    *    always WRITTEN; the screen self-disables whenever the bloom
-    *    dir set does not exactly cover the digest dir set (a history
-    *    dir that predates bloom state, a deleted bloom tree, a
-    *    mid-crash partial generation) — correctness first — and
-    *    compaction rebuilds the bloom generation FROM the digest
-    *    generation, so a non-covering dir self-heals at its first
-    *    compaction (spec-pinned).
     *  - `compactLogs`: extend the SAME generation compaction to the
     *    gate's OUTPUT dirs (`outDir/batch=*`, `outDir_summary/batch=*`)
     *    — without it the decision log accrues one subdir per batch
@@ -376,14 +359,10 @@ object Streams {
   case class GateOptions(
     compactEvery: Int = 0,
     retentionBatches: Int = 0,
-    bloomScreen: Boolean = true,
     compactLogs: Boolean = false)
 
   /** Target bytes per compacted generation file. */
   private val TargetGenBytes = 128L * 1024 * 1024
-
-  private val BloomK = 3
-  private val BloomBits = 1 << 20
 
   /** Empty state-relation schema per kind — every persisted state row
     * carries `src_batch` (the writing batch id): directory layout
@@ -397,7 +376,6 @@ object Streams {
       case "sigs"     => z.select(col("id").as("hist_id"),
         lit(0).cast("int").as("band"), lit("").as("bandsig"))
       case "shingles" => z.select(col("id"), col("id").as("sh"))
-      case "bloom"    => z.select(col("id").as("pos"))
       case "fps"      => z.select(col("id"), col("id").as("fp"))
       case other      => throw new IllegalArgumentException(other)
     }
@@ -408,16 +386,6 @@ object Streams {
     if (name.startsWith(pfx))
       scala.util.Try(name.stripPrefix(pfx).toLong).toOption
     else None
-
-  /** The state directories batch `batchId` reads for `kind`: the
-    * newest VALID generation below it (valid = carries Spark's
-    * _SUCCESS commit marker — a crash mid-compaction leaves no marker
-    * and the partial generation is invisible) plus every committed
-    * `batch=` dir it does not cover. Ids ≥ `batchId` are never read —
-    * the exactly-once contract under foreachBatch replay. */
-  private def stateDirs(spark: SparkSession, histDir: String, kind: String,
-                        batchId: Long): Seq[org.apache.hadoop.fs.Path] =
-    resolveGenDirs(spark, s"$histDir/$kind", batchId)
 
   /** Every reader/fold/sweep in this lifecycle keys validity on
     * Spark's `_SUCCESS` commit marker — a deployment that disables it
@@ -438,8 +406,13 @@ object Streams {
   }
 
   /** Generation-layout directory resolution, shared by the state kinds
-    * and the decision/summary logs: newest VALID generation below
-    * `batchId` plus every committed `batch=` dir it does not cover. */
+    * and the decision/summary logs: the directories a read at
+    * `batchId` covers under `rootStr` — the newest VALID generation
+    * below it (valid = carries Spark's _SUCCESS commit marker — a crash
+    * mid-compaction leaves no marker and the partial generation is
+    * invisible) plus every committed `batch=` dir it does not cover.
+    * Ids ≥ `batchId` are never read — the exactly-once contract under
+    * foreachBatch replay. */
   private def resolveGenDirs(spark: SparkSession, rootStr: String,
                              batchId: Long): Seq[org.apache.hadoop.fs.Path] = {
     val root = new org.apache.hadoop.fs.Path(rootStr)
@@ -473,23 +446,24 @@ object Streams {
   /** ONE micro-batch of the continuous-ingest dedup gate — the
     * foreachBatch body of [[dedupIngestGate]], factored out so specs
     * can drive a long batch sequence directly. The batch's signature
-    * and shingle rows are derived over the whole arrival and the
-    * screen semi-joins them to its digest-new ids (the s09 twin runs
-    * the same screen over id-filters of the session artifacts).
-    * Writes decisions, the per-batch run summary
-    * (`<outDir>_summary/batch=<id>` — the reference's per-run
-    * Dashboard box, `ocr_agent_8_29.py:28-33`), and the four state
-    * kinds through [[gateBatch]]. */
+    * and shingle rows are derived over the whole arrival and screened
+    * as derived (the s09 twin runs the same screen over id-filters of
+    * the session artifacts). Writes decisions, the per-batch run
+    * summary (`<outDir>_summary/batch=<id>` — the reference's per-run
+    * Dashboard box, `ocr_agent_8_29.py:28-33`), and the three state
+    * kinds through [[gateBatch]]. The persisted batch is released
+    * whether or not the batch commits. */
   private[graft] def dedupGateBatch(spark: SparkSession, batch: DataFrame,
                                     batchId: Long, outDir: String,
                                     histDir: String,
                                     opts: GateOptions = GateOptions()): Unit = {
     import graft.dedup.DedupPack
     val docs = batch.select(col("doc_id"), col("text")).persist()
-    // one digest frame: the screen caches it, and the Bloom probe
-    // reads it from that cache, so every row is digested once
+    // one digest frame: the screen caches it, and the history
+    // semi-join's probe reads it from that cache, so every row is
+    // digested once
     val digestRows = DedupPack.digestRowsOf(docs)
-    gateBatch(spark, batchId, outDir, histDir, opts, Seq("sigs", "shingles"),
+    try gateBatch(spark, batchId, outDir, histDir, opts, Seq("sigs", "shingles"),
       digestRows.select(col("h")).distinct(),
       decisionsLogSchema(spark),
       Some(runSummaryOf(_, docs, batchId))) { (digests, prior) =>
@@ -502,25 +476,29 @@ object Streams {
           DedupPack.shingleRowsOf(docs))
       (decisions, newDigests, Map("sigs" -> newSigs, "shingles" -> newShingles))
     }
-    docs.unpersist()
-    ()
+    finally docs.unpersist()
   }
 
   /** The per-batch state lifecycle both ingest gates share:
     *  1. resolve each state kind's directories ONCE (one listing per
-    *     kind per batch, shared by the Bloom coverage check and the
-    *     reads) and read the prior state ([[priorStateOf]]);
-    *  2. the Bloom front over the digest kind ([[bloomScreenedDigests]]);
-    *  3. the gate's `screen` — given the screened history digests and
-    *     the prior state per fuzzy kind, it returns (decisions, the
+    *     kind per batch) and read the prior state ([[stateOf]]);
+    *  2. semi-join the history digests with the batch's own distinct
+    *     `probeDigests`: the screen's left join on `h` can only match
+    *     a history digest that equals a batch digest, so its history
+    *     side holds only the rows the batch can match;
+    *  3. the gate's `screen` — given those history digests and the
+    *     prior state per fuzzy kind, it returns (decisions, the
     *     admitted digests, the admitted state per fuzzy kind);
     *  4. the decision write, the optional per-batch `summaryOf` write
-    *     (`<outDir>_summary/batch=<id>`) and the state appends (digests,
-    *     each fuzzy kind, the Bloom bits of the admitted digests), each
-    *     `_SUCCESS`-asserted;
+    *     (`<outDir>_summary/batch=<id>`) and the state appends (digests
+    *     and each fuzzy kind), each `_SUCCESS`-asserted;
     *  5. generation compaction of the state — and, under
     *     `compactLogs`, of the decision log (read with `logSchema`) and
     *     the summary log — per `opts`.
+    * The cached decisions and the screen's transient frames are
+    * released whether or not the batch commits, so a batch that
+    * throws (a failed write, a missing commit marker) leaves nothing
+    * cached in the session.
     *
     * Per-batch state is micro-batch-sized: writing it at full session
     * parallelism fans each tiny frame into ~32 part files per kind per
@@ -534,101 +512,65 @@ object Streams {
                         logSchema: StructType,
                         summaryOf: Option[DataFrame => DataFrame])(
       screen: (DataFrame, Map[String, DataFrame]) =>
-        (DataFrame, DataFrame, Map[String, DataFrame])): Unit = {
-    val allKinds = ("digests" +: kinds) :+ "bloom"
-    val dirs = allKinds.map(k => k -> stateDirs(spark, histDir, k, batchId))
-      .toMap
-    def prior(kind: String): DataFrame =
-      priorStateOf(spark, kind, dirs(kind), batchId, opts)
-    val (decisionsRaw, newDigests, newState) = screen(
-      bloomScreenedDigests(opts, dirs, prior, probeDigests),
-      kinds.map(k => k -> prior(k)).toMap)
-    val decisions = decisionsRaw.persist()
-    def write(df: DataFrame, dir: String): Unit = {
-      df.write.mode("overwrite").parquet(dir)
-      assertCommitted(spark, dir)
-    }
-    write(decisions, s"$outDir/batch=$batchId")
-    summaryOf.foreach(f =>
-      write(f(decisions).coalesce(1), s"${outDir}_summary/batch=$batchId"))
-    def writeState(kind: String, df: DataFrame): Unit =
-      write(df.withColumn("src_batch", lit(batchId)).coalesce(4),
-        s"$histDir/$kind/batch=$batchId")
-    writeState("digests", newDigests)
-    kinds.foreach(k => writeState(k, newState(k)))
-    writeState("bloom",
-      graft.dedup.Dedup.bloomBits(newDigests.select(col("h").as("key")),
-        BloomK, BloomBits).select(col("pos")))
-    decisions.unpersist()
-    if (opts.compactEvery > 0 && batchId > 0 &&
-        batchId % opts.compactEvery == 0) {
-      compactState(spark, histDir, batchId, opts, allKinds)
-      if (opts.compactLogs) {
-        compactLog(spark, outDir, batchId, logSchema, stampSrcBatch = true)
-        if (summaryOf.nonEmpty)
-          compactLog(spark, s"${outDir}_summary", batchId,
-            summaryLogSchema(spark), stampSrcBatch = false)
+        (DataFrame, DataFrame, Map[String, DataFrame])): Unit =
+    try {
+      val allKinds = "digests" +: kinds
+      val dirs = allKinds.map(k =>
+        k -> resolveGenDirs(spark, s"$histDir/$k", batchId)).toMap
+      def prior(kind: String): DataFrame =
+        stateOf(spark, kind, dirs(kind), batchId, opts).drop("src_batch")
+      val (decisionsRaw, newDigests, newState) = screen(
+        prior("digests").join(probeDigests, Seq("h"), "left_semi"),
+        kinds.map(k => k -> prior(k)).toMap)
+      val decisions = decisionsRaw.persist()
+      try {
+        def write(df: DataFrame, dir: String): Unit = {
+          df.write.mode("overwrite").parquet(dir)
+          assertCommitted(spark, dir)
+        }
+        write(decisions, s"$outDir/batch=$batchId")
+        summaryOf.foreach(f =>
+          write(f(decisions).coalesce(1), s"${outDir}_summary/batch=$batchId"))
+        def writeState(kind: String, df: DataFrame): Unit =
+          write(df.withColumn("src_batch", lit(batchId)).coalesce(4),
+            s"$histDir/$kind/batch=$batchId")
+        writeState("digests", newDigests)
+        kinds.foreach(k => writeState(k, newState(k)))
+      } finally decisions.unpersist()
+      if (opts.compactEvery > 0 && batchId > 0 &&
+          batchId % opts.compactEvery == 0) {
+        compactState(spark, histDir, batchId, opts, allKinds)
+        if (opts.compactLogs) {
+          compactLog(spark, outDir, batchId, logSchema, stampSrcBatch = true)
+          if (summaryOf.nonEmpty)
+            compactLog(spark, s"${outDir}_summary", batchId,
+              summaryLogSchema(spark), stampSrcBatch = false)
+        }
       }
-    }
-    graft.core.Caches.releaseTransients()
-  }
+    } finally graft.core.Caches.releaseTransients()
 
-  /** State written by batches < batchId only (the exactly-once
-    * contract), read from `dirs` as [[gateBatch]] resolved them; the
-    * explicit schema matters: a batch that admitted ZERO docs leaves a
-    * part-file-less directory and inference over only such dirs would
-    * fail. A null src_batch is a LEGACY row (state written before the
-    * provenance column existed — the explicit-schema read fills null):
-    * retention must treat it as in-window, never as expired, or an
-    * upgrade with a TTL would silently drop the entire pre-upgrade
-    * history from the screens. */
-  private def priorStateOf(spark: SparkSession, kind: String,
-                           dirs: Seq[org.apache.hadoop.fs.Path],
-                           batchId: Long, opts: GateOptions): DataFrame = {
+  /** A state kind's rows written by batches < batchId only (the
+    * exactly-once contract), read from `dirs` as [[resolveGenDirs]]
+    * resolved them, `src_batch` kept — the one read behind the gate's
+    * screens and the compaction fold. The explicit schema matters: a
+    * batch that admitted ZERO docs leaves a part-file-less directory
+    * and inference over only such dirs would fail. A null src_batch
+    * is a LEGACY row (state written before the provenance column
+    * existed — the explicit-schema read fills null): retention must
+    * treat it as in-window, never as expired, or an upgrade with a TTL
+    * would silently drop the entire pre-upgrade history from the
+    * screens. */
+  private def stateOf(spark: SparkSession, kind: String,
+                      dirs: Seq[org.apache.hadoop.fs.Path],
+                      batchId: Long, opts: GateOptions): DataFrame = {
     val empty = emptyState(spark, kind)
     val full =
       if (dirs.isEmpty) empty
       else spark.read.schema(empty.schema).parquet(dirs.map(_.toString): _*)
-    val kept =
-      if (opts.retentionBatches > 0)
-        full.filter(col("src_batch").isNull ||
-          col("src_batch") >= batchId - opts.retentionBatches)
-      else full
-    kept.drop("src_batch")
-  }
-
-  /** The d13 Bloom front over a gate's digest state: the bits relation
-    * is bounded (≤2²⁰ position rows) no matter how large history
-    * grows, so the probe join's build side is CONSTANT in stream age;
-    * only bloom-positive digests reach the exact history digest set.
-    * No false negatives ⇒ identical decisions (spec-pinned).
-    * COVERAGE GUARD: the screen is sound only if the bloom state
-    * covers every digest-state dir — a history dir whose bloom tree
-    * starts mid-stream (pre-lifecycle layout, or a deleted bloom tree)
-    * would otherwise test older duplicates bloom-NEGATIVE and wrongly
-    * admit them. Dir-name-set equality is the cheap sound check
-    * because both kinds are written together per batch, and compaction
-    * REBUILDS the bloom generation from the digest generation (see
-    * [[compactState]]), so a non-covering dir degrades to the
-    * unscreened join and self-heals at its first compaction. The
-    * check reads the same resolved `dirs` as the state reads. */
-  private def bloomScreenedDigests(opts: GateOptions,
-                                   dirs: Map[String, Seq[org.apache.hadoop.fs.Path]],
-                                   prior: String => DataFrame,
-                                   probeDigests: DataFrame): DataFrame = {
-    val digests = prior("digests")
-    val bloom = dirs("bloom")
-    val covers = bloom.nonEmpty &&
-      bloom.map(_.getName).toSet == dirs("digests").map(_.getName).toSet
-    if (!opts.bloomScreen || !covers) digests
-    else {
-      val bits = prior("bloom").select(col("pos")).distinct()
-      val positive = graft.dedup.Dedup.bloomMembers(
-          probeDigests.select(col("h").as("id"), col("h").as("key")),
-          bits, BloomK, BloomBits)
-        .select(col("key").as("h")).distinct()
-      digests.join(positive, Seq("h"), "left_semi")
-    }
+    if (opts.retentionBatches > 0)
+      full.filter(col("src_batch").isNull ||
+        col("src_batch") >= batchId - opts.retentionBatches)
+    else full
   }
 
   /** PERCEPTUAL-DEDUP INGEST GATE for MEDIA — the continuous-ingest
@@ -647,9 +589,11 @@ object Streams {
     * near-duplicate text.
     *
     * The state lifecycle is the s09 machinery verbatim, with kinds
-    * (digests, fps, bloom): per-batchId overwrite subdirs + read-below
-    * exactly-once, the Bloom front over the digest kind, generation
-    * compaction, retention TTL, `_SUCCESS`-gated folds and sweeps.
+    * (digests, fps): per-batchId overwrite subdirs + read-below
+    * exactly-once, the history digests semi-joined with the batch's
+    * own, generation compaction, retention TTL, `_SUCCESS`-gated folds
+    * and sweeps. A `bloom/` tree that an older version of the gate
+    * left under `histDir` is neither read nor deleted.
     * Per-batch cost is the batch's own digest+dHash pass plus
     * candidate-bounded band joins — history content is never
     * re-decoded and history fingerprints never recomputed (the d19
@@ -679,8 +623,8 @@ object Streams {
     * specs and scale probes can drive long batch sequences directly:
     * the batch's [[graft.multimodal.MultimodalPack.mediaFpRowsOf]]
     * rows, cut once, screened through [[gateBatch]] with state kinds
-    * (digests, fps, bloom); the Bloom probe reads its digests from the
-    * same cut rows. */
+    * (digests, fps); the history semi-join's probe reads its digests
+    * from the same cut rows. */
   private[graft] def mediaGateBatch(spark: SparkSession, batch: DataFrame,
                                     batchId: Long, outDir: String,
                                     histDir: String,
@@ -712,66 +656,43 @@ object Streams {
       mediaDecisionsLogSchema(spark), stampSrcBatch = true)
 
   /** Fold all committed state (ids ≤ batchId−1) of each of `kinds`
-    * into `gen=<batchId−1>` and delete the covered subdirs. Idempotent
-    * under foreachBatch replay: an already-committed target is never
+    * into `gen=<batchId−1>` through [[foldGeneration]]. Retention-
+    * expired rows (relative to the CURRENT batch — the tightest cut
+    * any future reader will apply is tighter still) are physically
+    * dropped here: the fold reads through the screens' own
+    * [[stateOf]]. */
+  private def compactState(spark: SparkSession, histDir: String,
+                           batchId: Long, opts: GateOptions,
+                           kinds: Seq[String]): Unit =
+    kinds.foreach(kind =>
+      foldGeneration(spark, s"$histDir/$kind", batchId,
+        stateOf(spark, kind, _, batchId, opts)))
+
+  /** The one generation fold of the state kinds and the logs: the
+    * committed dirs under `root` that a read at `batchId` resolves
+    * ([[resolveGenDirs]]), read by `read`, become `gen=<batchId−1>`,
+    * and [[sweepCovered]] deletes what it covers. Idempotent under
+    * foreachBatch replay: an already-committed target is never
     * re-read-and-overwritten in place (read-lazy overwrite of one's
     * own input corrupts it — the skip also makes replay cheap), a
     * partial target (no _SUCCESS) is invisible to readers and simply
     * rewritten, and deletes run only once the target is committed.
-    * Retention-expired rows (relative to the CURRENT batch — the
-    * tightest cut any future reader will apply is tighter still) are
-    * physically dropped here. */
-  private[graft] def compactState(spark: SparkSession, histDir: String,
-                                  batchId: Long, opts: GateOptions,
-                                  kinds: Seq[String]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val genId = batchId - 1
-    // digests FIRST: the bloom generation below derives from it
-    kinds.foreach { kind =>
-      val root = new org.apache.hadoop.fs.Path(s"$histDir/$kind")
-      val fs = root.getFileSystem(conf)
-      if (fs.exists(root)) {
-        val target = new org.apache.hadoop.fs.Path(root, s"gen=$genId")
-        val committed =
-          fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))
-        // sources resolve exactly like a read at this batch id
-        val sources = stateDirs(spark, histDir, kind, batchId)
-        if (!committed && kind == "bloom") {
-          // the bloom generation REBUILDS from the digest generation
-          // rather than folding bloom dirs: a bloom tree that starts
-          // mid-history (pre-lifecycle layout) is missing positions
-          // for older digests; deriving from the digests guarantees
-          // the no-false-negative coverage the screen's soundness
-          // check requires, at the cost of re-hashing each retained
-          // digest once per compaction (the compaction already scans
-          // them).
-          val dg = new org.apache.hadoop.fs.Path(
-            s"$histDir/digests/gen=$genId")
-          if (fs.exists(new org.apache.hadoop.fs.Path(dg, "_SUCCESS"))) {
-            spark.read.schema(emptyState(spark, "digests").schema)
-              .parquet(dg.toString)
-              .select(explode(array(graft.dedup.Dedup
-                  .bloomBitPositions(col("h"), BloomK, BloomBits): _*))
-                .as("pos"), col("src_batch"))
-              .distinct()
-              .coalesce(4)
-              .write.mode("overwrite").parquet(target.toString)
-          }
-        } else if (!committed && sources.nonEmpty) {
-          val empty = emptyState(spark, kind)
-          val df = spark.read.schema(empty.schema)
-            .parquet(sources.map(_.toString): _*)
-          val pruned =
-            if (opts.retentionBatches > 0)
-              df.filter(col("src_batch").isNull ||
-                col("src_batch") >= batchId - opts.retentionBatches)
-            else df
-          val nFiles = genFileCount(fs, sources)
-          pruned.repartition(nFiles)
-            .write.mode("overwrite").parquet(target.toString)
-        }
-        sweepCovered(fs, root, genId)
-      }
+    * File count derives from real source bytes ([[genFileCount]]). */
+  private def foldGeneration(spark: SparkSession, root: String,
+                             batchId: Long,
+                             read: Seq[org.apache.hadoop.fs.Path] => DataFrame)
+      : Unit = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(rootPath)) {
+      val genId = batchId - 1
+      val target = new org.apache.hadoop.fs.Path(rootPath, s"gen=$genId")
+      val sources = resolveGenDirs(spark, root, batchId)
+      if (!fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS")) &&
+          sources.nonEmpty)
+        read(sources).repartition(genFileCount(fs, sources))
+          .write.mode("overwrite").parquet(target.toString)
+      sweepCovered(fs, rootPath, genId)
     }
   }
 
@@ -838,30 +759,16 @@ object Streams {
       .schema
 
   /** Fold committed log dirs (decisions or summaries) into
-    * `gen=<batchId−1>` — [[compactState]]'s discipline applied to the
-    * gate's OUTPUT: _SUCCESS-gated target AND _SUCCESS-gated sources
-    * (an uncommitted `batch=` dir left by an abandoned run is neither
-    * folded nor deleted — it stays on disk for repair, exactly like
-    * the live-read path skips it), an already-committed generation is
-    * never re-read-and-overwritten, deletes only after commit, file
-    * count from real bytes. No retention pruning — the log is an
-    * append-only audit record. */
+    * `gen=<batchId−1>` through [[foldGeneration]], read by
+    * [[readLog]]: the fold's _SUCCESS gates apply to the gate's
+    * OUTPUT too (an uncommitted `batch=` dir left by an abandoned run
+    * is neither folded nor deleted — it stays on disk for repair,
+    * exactly like the live-read path skips it). No retention pruning
+    * — the log is an append-only audit record. */
   private def compactLog(spark: SparkSession, root: String, batchId: Long,
-                         schema: StructType, stampSrcBatch: Boolean): Unit = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(rootPath)) {
-      val genId = batchId - 1
-      val target = new org.apache.hadoop.fs.Path(rootPath, s"gen=$genId")
-      val sources = resolveGenDirs(spark, root, batchId)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS")) &&
-          sources.nonEmpty)
-        readLog(spark, sources, schema, stampSrcBatch)
-          .repartition(genFileCount(fs, sources))
-          .write.mode("overwrite").parquet(target.toString)
-      sweepCovered(fs, rootPath, genId)
-    }
-  }
+                         schema: StructType, stampSrcBatch: Boolean): Unit =
+    foldGeneration(spark, root, batchId,
+      readLog(spark, _, schema, stampSrcBatch))
 
   /** [[compactLog]] over a decisions-log tree — the production fold,
     * exposed for the partial-source guard spec (it folds a tree it

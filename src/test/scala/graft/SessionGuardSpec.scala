@@ -137,8 +137,6 @@ private object Reachable {
   /** Members kept with no caller in the main sources or the benchmark
     * harness, each with its reason. */
   val allowlist: Map[String, String] = Map(
-    "SparkEntry.oracleSql" ->
-      "the dir-independent oracle map RelationalPackSpec checks against the registry",
     "Dedup.shinglesDeclarative" -> "declarative twin of the native WordShingles",
     "Dedup.hammingPairsAllPairsOf" -> "all-pairs oracle of hammingPairsBandedOf",
     "DedupPack.incrementalMinhashOf" ->

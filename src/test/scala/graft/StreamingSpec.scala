@@ -268,8 +268,8 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
       .parquet(histDir + "/digests").distinct().count() == 3)
   }
 
-  test("gate state lifecycle: 20+ direct micro-batches — compaction + bloom " +
-      "keep decisions bit-identical with state dirs bounded") {
+  test("gate state lifecycle: 20+ direct micro-batches — compaction " +
+      "keeps decisions bit-identical with state dirs bounded") {
     val aug = graft.dedup.DedupPack.augmented(spark, sf)
       .select(col("doc_id"), col("text"))
     val ids = aug.select(col("doc_id")).collect().map(_.getLong(0)).sorted
@@ -288,10 +288,8 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
       }
       (outDir, histDir)
     }
-    val (outA, histA) = runAll("base",
-      Streams.GateOptions(compactEvery = 0, bloomScreen = false))
-    val (outB, histB) = runAll("life",
-      Streams.GateOptions(compactEvery = 5, bloomScreen = true))
+    val (outA, histA) = runAll("base", Streams.GateOptions(compactEvery = 0))
+    val (outB, histB) = runAll("life", Streams.GateOptions(compactEvery = 5))
     def decs(out: String) = spark.read
       .option("recursiveFileLookup", "true").parquet(out)
       .collect()
@@ -303,7 +301,7 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
     // the compacted run's state listing is bounded (1 generation +
     // at most compactEvery live batch dirs); the baseline keeps one
     // dir per batch — the growth the lifecycle exists to stop
-    for (kind <- Seq("digests", "sigs", "shingles", "bloom")) {
+    for (kind <- Seq("digests", "sigs", "shingles")) {
       val nB = Option(new java.io.File(s"$histB/$kind").listFiles())
         .fold(0)(_.count(_.isDirectory))
       assert(nB <= 6, s"$kind: $nB state dirs under compactEvery=5")
@@ -395,46 +393,65 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(st == Map(10L -> "dup_of_history", 11L -> "new"), s"got $st")
   }
 
-  test("bloom coverage guard: a bloom tree that starts mid-history never " +
-      "drops decisions, and compaction self-heals it from the digests") {
+  test("a bloom tree left under the history dir is neither read nor " +
+      "deleted: a duplicate of history it does not cover still gates") {
     import spark.implicits._
     def txt(seed: String): String = (1 to 20).map(i => seed + i).mkString(" ")
-    val outDir = Files.createTempDirectory("graft_bcov_o").toString + "/d"
-    val histDir = Files.createTempDirectory("graft_bcov_h").toString + "/h"
-    val opts = Streams.GateOptions(compactEvery = 3, bloomScreen = true)
+    val outDir = Files.createTempDirectory("graft_sbl_o").toString + "/d"
+    val histDir = Files.createTempDirectory("graft_sbl_h").toString + "/h"
+    val opts = Streams.GateOptions(compactEvery = 1)
     def feed(i: Long, rows: Seq[(Long, String)]): Unit =
       Streams.dedupGateBatch(spark, rows.toDF("doc_id", "text"), i,
         outDir, histDir, opts)
     feed(0, Seq(1L -> txt("alpha")))
-    // simulate a pre-lifecycle history dir: the bloom tree vanishes
-    // after batch 0, so batch-1 state is the only bloom coverage
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(s"$histDir/bloom"))
-    feed(1, Seq(2L -> txt("beta")))
-    // batch 2: bloom dirs = {batch=1} but digests = {batch=0, batch=1}
-    // — the guard must fall back to the unscreened join, so the
-    // batch-0 duplicate still gates
-    feed(2, Seq(10L -> txt("alpha")))
-    // batch 3 ran compaction at compactEvery=3? (3 % 3 == 0 fires at
-    // batch 3's END) — feed it, then batch 4 screens against the
-    // REBUILT bloom generation: coverage is healed, and the batch-0
-    // duplicate must still gate through the now-active screen
-    feed(3, Seq(3L -> txt("gamma")))
-    feed(4, Seq(11L -> txt("alpha"), 12L -> txt("delta")))
-    val status = spark.read.option("recursiveFileLookup", "true")
-      .parquet(outDir)
+    // a committed bits tree beside the digests, in the layout older
+    // gates wrote, holding one position: alpha's three positions are
+    // not all set, so a screen that trusted it would test alpha's copy
+    // negative and admit it
+    val bloomDir = s"$histDir/bloom/batch=0"
+    Seq((7L, 0L)).toDF("pos", "src_batch")
+      .write.mode("overwrite").parquet(bloomDir)
+    feed(1, Seq(10L -> txt("alpha"), 11L -> txt("beta")))
+    val status = Streams.readDecisionsLog(spark, outDir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(status == Map(1L -> "new", 2L -> "new", 10L -> "dup_of_history",
-      3L -> "new", 11L -> "dup_of_history", 12L -> "new"), s"got $status")
-    // the healed bloom generation really covers the digest set
-    val names = Option(new java.io.File(s"$histDir/bloom").listFiles())
-      .fold(Seq.empty[String])(_.filter(_.isDirectory).map(_.getName).toSeq)
-    assert(names.contains("gen=2"), s"bloom dirs: $names")
+    assert(status == Map(1L -> "new", 10L -> "dup_of_history",
+      11L -> "new"), s"got $status")
+    // the tree is left as it was: no batch=1 append, no generation
+    val names = new java.io.File(s"$histDir/bloom").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSeq
+    assert(names == Seq("batch=0"), s"bloom dirs: $names")
+    assert(new java.io.File(bloomDir, "_SUCCESS").exists())
   }
 
-  test("dedup ingest gate: streaming with compaction + bloom + run summary " +
+  test("a gate batch whose decision write fails releases its cached " +
+      "frames, and the next batch on a valid dir commits") {
+    import spark.implicits._
+    def txt(seed: String): String = (1 to 20).map(i => seed + i).mkString(" ")
+    val root = Files.createTempDirectory("graft_gfail").toString
+    // a regular file where the decision directory should be
+    val fileOut = new java.io.File(root, "decisions")
+    Files.write(fileOut.toPath, Array[Byte](1))
+    val histDir = s"$root/hist"
+    val rows = Seq(1L -> txt("alpha"), 2L -> txt("beta"), 3L -> txt("alpha"))
+      .toDF("doc_id", "text")
+    def plans = org.apache.spark.sql.graftbridge.CachedPlans.count(spark)
+    val plansBefore = plans
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](Streams.dedupGateBatch(spark, rows, 0L,
+      fileOut.toString, histDir))
+    assert(plans <= plansBefore,
+      s"cached plans $plans after the failure, $plansBefore before")
+    assert(spark.sparkContext.getPersistentRDDs.size <= rddsBefore,
+      "persisted RDDs outlived the failed batch")
+    val outDir = s"$root/ok/decisions"
+    Streams.dedupGateBatch(spark, rows, 0L, outDir, histDir)
+    val status = Streams.readDecisionsLog(spark, outDir)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(status == Map(1L -> "new", 2L -> "new", 3L -> "dup_in_batch"),
+      s"got $status")
+  }
+
+  test("dedup ingest gate: streaming with compaction + run summary " +
       "equals the batch twin") {
     import org.apache.spark.sql.types._
     val aug = graft.dedup.DedupPack.augmented(spark, sf)
@@ -451,7 +468,7 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
       StructField("text", StringType)))
     val q = Streams.dedupIngestGate(spark, watchDir, schema, outDir, histDir,
       maxFilesPerTrigger = 1,
-      opts = Streams.GateOptions(compactEvery = 1, bloomScreen = true))
+      opts = Streams.GateOptions(compactEvery = 1))
     try q.processAllAvailable() finally q.stop()
     val streamed = spark.read.option("recursiveFileLookup", "true")
       .parquet(outDir)
@@ -463,7 +480,7 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(streamed == batch)
     // compaction ran at batch 1: each state kind is one generation +
     // the live batch dir
-    for (kind <- Seq("digests", "sigs", "shingles", "bloom")) {
+    for (kind <- Seq("digests", "sigs", "shingles")) {
       val names = Option(new java.io.File(s"$histDir/$kind").listFiles())
         .fold(Seq.empty[String])(_.filter(_.isDirectory).map(_.getName).toSeq)
       assert(names.sorted == Seq("batch=1", "gen=0"), s"$kind: $names")
@@ -834,7 +851,7 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"fps table ${fpIds.size} ids vs ${admitted.size} admitted")
   }
 
-  test("media gate lifecycle: compaction + bloom keep decisions " +
+  test("media gate lifecycle: compaction keeps decisions " +
       "bit-identical with state dirs bounded") {
     import graft.multimodal.Multimodal
     // batch i: 12 fresh scenes, plus (from batch 1 on) a RE-ENCODE of
@@ -869,11 +886,9 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
           opts))
       (outDir, histDir)
     }
-    val (outA, _) = runAll("base",
-      Streams.GateOptions(compactEvery = 0, bloomScreen = false))
+    val (outA, _) = runAll("base", Streams.GateOptions(compactEvery = 0))
     val (outB, histB) = runAll("life",
-      Streams.GateOptions(compactEvery = 3, bloomScreen = true,
-        compactLogs = true))
+      Streams.GateOptions(compactEvery = 3, compactLogs = true))
     def decs(out: String) = Streams.readMediaDecisionsLog(spark, out)
       .select(col("media_id"), col("status"), col("best_hist_id"),
         col("best_hamming"))
@@ -893,8 +908,8 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
         assert(best == id - 1000L - 100L && h <= 4L,
           s"re-encode $id matched $best (hamming $h)")
       }
-    // compacted state listing is bounded; all three kinds compact
-    for (kind <- Seq("digests", "fps", "bloom")) {
+    // compacted state listing is bounded; both kinds compact
+    for (kind <- Seq("digests", "fps")) {
       val nB = Option(new java.io.File(s"$histB/$kind").listFiles())
         .fold(0)(_.count(_.isDirectory))
       assert(nB <= 4, s"$kind: $nB state dirs under compactEvery=3")
