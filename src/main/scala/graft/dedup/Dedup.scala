@@ -27,11 +27,42 @@ object Dedup {
   def hash16(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 4), 16, 10).cast("long")
 
-  /** Exact duplicate groups by content digest: digest → keeper id +
-    * multiplicity (groups with n_copies > 1 are the duplicates). */
-  def exactGroups(df: DataFrame, id: Column, text: Column): DataFrame =
-    df.groupBy(md5(text).as("content_hash"))
+  /** Exact duplicate classes: one row per distinct `digest` (named as
+    * the caller names it), its keeper `keeper_id` — the least `id`, any
+    * orderable type, struct ids field by field — and its size
+    * `n_copies`. THE representative election of the exact tier.
+    * Collapse-first consumers (d08, d17, d20–d22, mm06–mm08, s07, p02)
+    * rest on one argument: identical content ⇒ identical shingles,
+    * signatures and fingerprints (each is per-row), so a similarity
+    * stage over the keepers finds every cross-class member pair as its
+    * keepers' pair with the same similarity, intra-class pairs of
+    * content with shingles are exact matches countable from
+    * `n_copies`, and a merged group's
+    * min-id keeper is the min over its classes' keepers. No cache, no
+    * cut: the caller owns those. */
+  def exactGroups(rows: DataFrame, id: Column, digest: Column): DataFrame =
+    rows.groupBy(digest)
       .agg(min(id).as("keeper_id"), count(lit(1)).as("n_copies"))
+
+  /** The exact screen of an arriving batch against history: `batch`'s
+    * rows plus `ex_status` — 'dup_of_history' when the row's digest `h`
+    * is among `histDigests`' `h`, else 'dup_in_batch' when `id` is not
+    * its class's [[exactGroups]] keeper, else 'exact_new'. The digest
+    * must be non-null ([[contentDigest]] never is): the keeper join is
+    * inner. No cache, no cut. */
+  def digestScreen(batch: DataFrame, id: Column,
+                   histDigests: DataFrame): DataFrame = {
+    val inHist = histDigests.select(col("h")).distinct()
+      .withColumn("in_hist", lit(true))
+    val keepers = exactGroups(batch, id, col("h"))
+      .select(col("h"), col("keeper_id"))
+    val status = when(coalesce(col("in_hist"), lit(false)), "dup_of_history")
+      .when(id =!= col("keeper_id"), "dup_in_batch")
+      .otherwise("exact_new").as("ex_status")
+    batch.join(inHist, Seq("h"), "left")
+      .join(keepers, Seq("h"))
+      .select(batch.columns.toSeq.map(col) :+ status: _*)
+  }
 
   /** Word k-gram shingles of a text column (distinct set per doc
     * comes from the caller's explode+distinct) — the native
@@ -441,12 +472,11 @@ object Dedup {
   }
 
   /** THE content digest of the exact-dedup tier: md5 over the
-    * null-coalesced text. Single definition shared by the gate's
-    * digest pass, the d16 incremental screen, and the streaming
-    * bloom-front probe — the probe and the state builder MUST stay
-    * bit-identical (a drifted probe digest would turn bloom false
-    * negatives into silently wrong admits), so neither may re-derive
-    * this expression locally. */
+    * null-coalesced text (null ≡ "", so a null text still gets a
+    * digest and a decision). Single definition shared by the gates'
+    * digest pass, the history semi-join's probe and d16's screen —
+    * the probe and the state builder MUST stay bit-identical, so
+    * neither may re-derive this expression locally. */
   def contentDigest(text: Column): Column = md5(coalesce(text, lit("")))
 
   /** Banded Hamming near-dup join over an ARBITRARY fingerprint

@@ -54,7 +54,8 @@ object DedupPack extends QueryPack {
 
   /** Exact dedup: duplicate content groups (digest, keeper, count). */
   def exactDedup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exactGroups(augmented(spark, dir), col("doc_id"), col("text"))
+    Dedup.exactGroups(augmented(spark, dir), col("doc_id"),
+        md5(col("text")).as("content_hash"))
       .filter(col("n_copies") > 1)
       .orderBy(col("content_hash"))
 
@@ -63,26 +64,19 @@ object DedupPack extends QueryPack {
     * HISTORICAL corpus digest set (base ids) plus itself, without
     * ever rescanning history text. Per batch doc: 'dup_of_history'
     * (digest already in the historical set), 'dup_in_batch' (an
-    * earlier batch doc-id owns the digest), or 'new'. The history
-    * side carries ONE md5 per historical doc — at 100 TB that digest
-    * relation joins by hash (or pre-screens through the d13 Bloom
-    * relation when even digests shouldn't shuffle); the batch side is
-    * a day's ingest, not the corpus. */
+    * earlier batch doc-id owns the digest), or 'new' — the shared
+    * [[Dedup.digestScreen]] over [[digestRowsOf]] digests, so a null
+    * text digests as "" and still gets a status. The history side
+    * carries ONE md5 per historical doc — at 100 TB that digest
+    * relation joins by hash; the batch side is a day's ingest, not the
+    * corpus. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val aug = augmented(spark, dir, spread = false)
-    val hist = aug.filter(col("doc_id") < 100000)
-      .select(md5(col("text")).as("h")).distinct()
-      .withColumn("in_hist", lit(true))
-    val batch = aug.filter(col("doc_id") >= 100000)
-      .select(col("doc_id"), md5(col("text")).as("h"))
-    val firstInBatch = batch.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("first_id"))
-    batch.join(hist, Seq("h"), "left")
-      .join(firstInBatch, Seq("h"))
+    val digests = digestRowsOf(augmented(spark, dir, spread = false))
+    Dedup.digestScreen(digests.filter(col("doc_id") >= 100000), col("doc_id"),
+        digests.filter(col("doc_id") < 100000))
       .select(col("doc_id"), col("h").as("content_hash"),
-        when(coalesce(col("in_hist"), lit(false)), "dup_of_history")
-          .when(col("doc_id") =!= col("first_id"), "dup_in_batch")
-          .otherwise("new").as("status"))
+        when(col("ex_status") === "exact_new", "new")
+          .otherwise(col("ex_status")).as("status"))
       .orderBy(col("doc_id"))
   }
 
@@ -301,10 +295,10 @@ object DedupPack extends QueryPack {
 
   /** The composed continuous-ingest DEDUP GATE (s09's relation, the
     * per-micro-batch body of the streaming gate): d16's exact digest
-    * screen first — 'dup_of_history' (digest already in the corpus),
-    * 'dup_in_batch' (an earlier batch doc owns the digest) — then
-    * d19's MinHash-LSH screen for the digest-new remainder —
-    * 'near_dup_of_history' at d02's 0.5 Jaccard, else 'new' (admit).
+    * screen first ([[Dedup.digestScreen]]: 'dup_of_history',
+    * 'dup_in_batch'), then d19's MinHash-LSH screen for the digest-new
+    * remainder — 'near_dup_of_history' at d02's 0.5 Jaccard, else
+    * 'new' (admit).
     * Exact screens before fuzzy for the same reason d18 collapses
     * before mining: a byte-identical copy never reaches the candidate
     * joins. History arrives as its PERSISTED derived relations
@@ -326,9 +320,8 @@ object DedupPack extends QueryPack {
     * WITHOUT a second signature/shingle pass: the survivor relations
     * are cut once and filtered to the admitted ids for the append;
     * the one-shot twins keep only the decisions. A null text digests
-    * as the empty string (null ≡ "" for dedup identity — the digest
-    * join must never DROP a document the way a null join key silently
-    * would).
+    * as the empty string ([[Dedup.contentDigest]]), so no document is
+    * dropped by the screen's digest join.
     * Decisions are unordered — the s09 entry point adds its own
     * orderBy; per-micro-batch consumers must not pay a global sort.
     *
@@ -349,17 +342,9 @@ object DedupPack extends QueryPack {
                                         batchShingles: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val b = graft.core.Caches.transient(batchDigests)
-    val firstInBatch = b.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("first_id"))
-    val hd = histDigests.select(col("h")).distinct()
-      .withColumn("in_hist", lit(true))
     val ex = graft.core.Caches.transient(
-      b.join(hd, Seq("h"), "left")
-        .join(firstInBatch, Seq("h"))
-        .select(col("doc_id"),
-          when(coalesce(col("in_hist"), lit(false)), "dup_of_history")
-            .when(col("doc_id") =!= col("first_id"), "dup_in_batch")
-            .otherwise("exact_new").as("ex_status")))
+      Dedup.digestScreen(b, col("doc_id"), histDigests)
+        .select(col("doc_id"), col("ex_status")))
     // the batch's signature/shingle rows as passed, shared by the
     // fuzzy screen and (filtered to admitted) the history append —
     // lineage-CUT (compact proxy rows; their plans otherwise carry the
@@ -399,8 +384,8 @@ object DedupPack extends QueryPack {
   }
 
   /** (doc_id, h) content-digest rows of a (doc_id, text) frame — the
-    * ONE digest derivation of the gates' exact screen: the streaming
-    * gate, its s09 twin and [[dedupGateOf]] all call it. */
+    * ONE digest derivation of the text exact screens: the streaming
+    * gate, its s09 twin, [[dedupGateOf]] and d16 all call it. */
   private[graft] def digestRowsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h"))
 
@@ -498,19 +483,14 @@ object DedupPack extends QueryPack {
     * at 100 TB, where the curator's question is "how MUCH near-
     * duplication, at what similarity?" — six numbers, not the pairs.
     *
-    * Shape: the d18 exact-collapse front bounds mining by the
-    * DISTINCT corpus — identical texts share shingle sets, so (a)
-    * every intra-class pair has J = 1.0 and counts CLOSED-FORM as
-    * m(m−1)/2 per class, no enumeration, and (b) a cross-class member
-    * pair's Jaccard equals its representative pair's, so each rep
-    * pair contributes m_a·m_b pairs to its band. Duplicate-heavy
-    * corpora (where true pairs grow quadratically in cluster size)
-    * cost one digest groupBy + rep-only mining; the output is ≤ 6
-    * rows regardless of corpus. The DuckDB oracle enumerates ALL
-    * pairs over the full corpus directly — the independent check of
-    * the collapse argument. Zero-shingle classes (texts under k
+    * Shape: the [[Dedup.exactGroups]] front bounds mining by the
+    * DISTINCT corpus: intra-class pairs count CLOSED-FORM as m(m−1)/2
+    * at J = 1.0, and each rep pair contributes m_a·m_b pairs to its
+    * band; the output is ≤ 6 rows regardless of corpus. The DuckDB
+    * oracle enumerates ALL pairs over the full corpus directly — the
+    * independent check of the collapse argument. Zero-shingle classes (texts under k
     * words) produce no pairs on either side: the intra count guards
-    * on the class having shingles. */
+    * on the class's rep having shingle rows. */
   def pairBandCounts(spark: SparkSession, dir: String): DataFrame =
     pairBandCountsOf(spark, augmented(spark, dir), augShingleRows(spark, dir))
 
@@ -520,15 +500,13 @@ object DedupPack extends QueryPack {
                                       corpus: DataFrame,
                                       corpusShingles: DataFrame)
       : DataFrame = {
-    // cut, not cache (compact (id, digest, flag) rows; reps referenced
-    // 4× below — the family-wide r15 lineage-cut discipline)
+    // cut, not cache (compact (id, digest) rows; reps referenced 4×
+    // below — the family-wide r15 lineage-cut discipline)
     val classes = graft.core.Caches.cut(
-      corpus.select(col("doc_id"), md5(col("text")).as("h"),
-        (size(Dedup.shingles(col("text"), 3)) > 0).as("has_sh")))
+      corpus.select(col("doc_id"), md5(col("text")).as("h")))
     val reps = graft.core.Caches.cut(
-      classes.groupBy(col("h"))
-        .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m"),
-          max(col("has_sh")).as("has_sh")))
+      Dedup.exactGroups(classes, col("doc_id"), col("h"))
+        .select(col("keeper_id").as("rep_id"), col("n_copies").as("m")))
     // rep-only shingles: a semi-join of the corpus shingle rows
     // (bitwise-equal to re-shingling the rep corpus — per-row
     // derivation, distinct commutes with the id filter)
@@ -541,7 +519,8 @@ object DedupPack extends QueryPack {
         (col("ma") * col("mb")).as("w"))
     // m(m−1) is even, so the double division is exact (and long-cast
     // safe) for any class size below 2^26 — far past any real class
-    val intra = reps.filter(col("m") > 1 && col("has_sh"))
+    val intra = reps.filter(col("m") > 1)
+      .join(repSh.select(col("id").as("rep_id")), Seq("rep_id"), "left_semi")
       .select(lit(10L).as("b10"),
         ((col("m") * (col("m") - lit(1L))) / lit(2L)).cast("long").as("w"))
     val counts = cross.unionByName(intra)
@@ -563,15 +542,11 @@ object DedupPack extends QueryPack {
     * whether 12 seeds × 4 bands screens tightly enough before
     * raising either.
     *
-    * Scale shape: the d20 exact-collapse front. Identical texts have
-    * identical signatures AND identical shingle sets, so (a) a
-    * member-pair candidate exists iff its representative pair is a
-    * candidate, with the same (m, J) — cross-class rows weight by
-    * m_a·m_b; (b) every intra-class pair is a candidate (all bands
-    * equal) at exactly m = 12, J = 1.0, error 0 — counted closed-form
-    * as c(c−1)/2 per class, no enumeration. Candidate mining and the
-    * exact verify run over the DISTINCT corpus only; output is ≤ 13
-    * rows at any scale. Weighted means go through 9-dp-rounded
+    * Scale shape: the d20 [[Dedup.exactGroups]] front — cross-class
+    * rows weight by m_a·m_b; every intra-class pair is a candidate at
+    * exactly m = 12, J = 1.0, error 0, counted closed-form as c(c−1)/2
+    * per class. Candidate mining and the exact verify run over the
+    * DISTINCT corpus only; output is ≤ 13 rows at any scale. Weighted means go through 9-dp-rounded
     * decimal sums (the a08 discipline). The DuckDB oracle enumerates
     * ALL candidate pairs over the full corpus directly — the
     * independent check of the collapse argument. */
@@ -588,12 +563,10 @@ object DedupPack extends QueryPack {
                                        corpusShingles: DataFrame)
       : DataFrame = {
     val classes = graft.core.Caches.cut(
-      corpus.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h"),
-        (size(Dedup.shingles(col("text"), 3)) > 0).as("has_sh")))
+      corpus.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h")))
     val reps = graft.core.Caches.cut(
-      classes.groupBy(col("h"))
-        .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("cm"),
-          max(col("has_sh")).as("has_sh")))
+      Dedup.exactGroups(classes, col("doc_id"), col("h"))
+        .select(col("keeper_id").as("rep_id"), col("n_copies").as("cm")))
     val repIds = reps.select(col("rep_id").as("id"))
     // the distinct corpus's signatures: per-seed mins feed both the
     // band candidates and the per-pair match counts — a semi-join on
@@ -634,8 +607,10 @@ object DedupPack extends QueryPack {
       (col("w").cast("decimal(28,9)") *
         round(abs(col("m").cast("double") / lit(12.0) - col("jac")), 9)
           .cast("decimal(28,9)")).cast("decimal(38,9)").as("we"))
-    // intra-class pairs: all bands equal -> m = 12, J = 1, error = 0
-    val intra = reps.filter(col("cm") > 1 && col("has_sh"))
+    // intra-class pairs: all bands equal -> m = 12, J = 1, error = 0;
+    // a class has shingles iff its rep has a shingle-set size
+    val intra = reps.filter(col("cm") > 1)
+      .join(sizes.select(col("id").as("rep_id")), Seq("rep_id"), "left_semi")
       .select(lit(12L).as("m"),
         ((col("cm") * (col("cm") - lit(1L))) / lit(2L)).cast("long").as("w"),
         ((col("cm") * (col("cm") - lit(1L))) / lit(2L))
@@ -705,20 +680,17 @@ object DedupPack extends QueryPack {
       .orderBy(col("doc_id"))
 
   /** Session-scoped groups artifact, built EXACT-COLLAPSE-FIRST: one
-    * representative (min doc_id) per identical text, Jaccard pair
-    * mining + union-find over the representatives only, then a
-    * linear expansion join attaching every member to its
-    * representative's group. This is the standard production
-    * composition (exact dedup before fuzzy — RefinedWeb §3.3 runs
-    * exact dedup, then MinHash over survivors) and it is GROUP-
-    * IDENTICAL to mining the full corpus: exact duplicates have
-    * identical shingle sets, so (a) intra-class pairs are J=1 ≥ any
-    * threshold (a class of size ≥ 2 is always one group), (b) a
-    * cross-class member pair exists iff the representative pair does,
-    * and (c) the group keeper (min doc_id) equals the representative-
-    * level keeper because each representative IS its class minimum.
-    * DedupSpec pins equality against the direct full-pair path, on
-    * the corpus and on a 3×-replicated one.
+    * representative (min doc_id) per identical text
+    * ([[Dedup.exactGroups]]), Jaccard pair mining + union-find over
+    * the representatives only, then a linear expansion join attaching
+    * every member to its representative's group. This is the standard
+    * production composition (exact dedup before fuzzy — RefinedWeb
+    * §3.3 runs exact dedup, then MinHash over survivors) and it is
+    * GROUP-IDENTICAL to mining the full corpus by the collapse argument
+    * in [[Dedup.exactGroups]]: a class of size ≥ 2 is always one group
+    * (J = 1 ≥ any threshold), and the group keeper equals the
+    * representative-level keeper. DedupSpec pins equality against the
+    * direct full-pair path, on the corpus and on a 3×-replicated one.
     *
     * Why it matters at scale: true near-dup pairs grow QUADRATICALLY
     * in duplicate-cluster size — a 30×-replicated corpus has ~900×
@@ -739,8 +711,9 @@ object DedupPack extends QueryPack {
     val classes = graft.core.Caches.cut(
       corpus.select(col("doc_id"), md5(col("text")).as("h")))
     val reps = graft.core.Caches.cut(
-      classes.groupBy(col("h"))
-        .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_members")))
+      Dedup.exactGroups(classes, col("doc_id"), col("h"))
+        .select(col("h"), col("keeper_id").as("rep_id"),
+          col("n_copies").as("n_members")))
     val repCorpus = corpus
       .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"))
     val repGroups = Dedup.dedupGroups(Dedup.jaccardPairs(repCorpus,
@@ -891,8 +864,8 @@ object DedupPack extends QueryPack {
   /** d22: d10 BEHIND THE EXACT-COLLAPSE FRONT — the production
     * posture the round-13 adjudication (PERF.md bandblocks table) and
     * the 30× legs prescribe: byte-identical copies resolve at the
-    * digest tier ([[graft.dedup.Dedup.contentDigest]] keepers — d01's
-    * job), and only ONE representative per distinct content enters
+    * digest tier ([[Dedup.exactGroups]] over [[Dedup.contentDigest]]),
+    * and only ONE representative per distinct content enters
     * the banded simhash join, so duplicate-cluster growth (the scale
     * corpus's growth mode: C(k,2) true pairs per k-replica cluster,
     * re-enumerated in every band) never reaches the band buckets.
@@ -903,15 +876,13 @@ object DedupPack extends QueryPack {
     * slope at 30× (bound 45) is exactly the growth this front
     * removes. */
   def simhashWidePairsCollapsed(spark: SparkSession, dir: String): DataFrame = {
-    val aug = augmented(spark, dir)
-    val reps = aug.groupBy(Dedup.contentDigest(col("text")).as("d"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
+    val reps = Dedup.exactGroups(augmented(spark, dir), col("doc_id"),
+        Dedup.contentDigest(col("text")))
+      .select(col("keeper_id").as("id"))
     // rep-only word hashes: a semi-join of the session artifact on the
     // rep ids — identical rows to re-deriving from the rep docs' text
     // (per-row derivation commutes with the id filter)
-    val repWh = augWordHashes(spark, dir)
-      .join(reps.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+    val repWh = augWordHashes(spark, dir).join(reps, Seq("id"), "left_semi")
     Dedup.hammingPairsBandedOf(
         Dedup.simhashOf(repWh.select(col("id"), col("hv60").as("hv")), 60),
         3, 60)
@@ -932,11 +903,12 @@ object DedupPack extends QueryPack {
     * in original order.
     *
     * Scale shape — two exchanges, no pair fan-out, skew-proof where
-    * it matters: keeper election is a partial-aggregatable
-    * min(struct(doc_id, pos)) groupBy on the line hash, so the
-    * boilerplate hot keys this operator exists for (nav lines,
-    * cookie banners — here the planted "javascript"/"lorem" lines in
-    * 1/7 and 1/11 of all docs) collapse MAP-SIDE before the exchange.
+    * it matters: keeper election is [[Dedup.exactGroups]] over the
+    * line hash with the struct id (doc_id, pos), a partial-
+    * aggregatable min(struct) groupBy, so the boilerplate hot keys
+    * this operator exists for (nav lines, cookie banners — here the
+    * planted "javascript"/"lorem" lines in 1/7 and 1/11 of all docs)
+    * collapse MAP-SIDE before the exchange.
     * A row_number window over the same key would ship every
     * occurrence of the hottest line into one unsplittable task; the
     * equivalent join-back on the hash IS splittable (AQE skew join —
@@ -959,9 +931,10 @@ object DedupPack extends QueryPack {
         .select(col("doc_id"), posexplode(col("lines")).as(Seq("pos", "line")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("line"),
           md5(trim(regexp_replace(lower(col("line")), "[^a-z ]", ""))).as("h")))
-    val keepers = posted.groupBy(col("h"))
-      .agg(min(struct(col("doc_id"), col("pos"))).as("k"))
-      .select(col("h"), col("k.doc_id").as("k_doc"), col("k.pos").as("k_pos"))
+    val keepers = Dedup.exactGroups(posted, struct(col("doc_id"), col("pos")),
+        col("h"))
+      .select(col("h"), col("keeper_id.doc_id").as("k_doc"),
+        col("keeper_id.pos").as("k_pos"))
     // the inner join on the hash preserves every posting row (keepers
     // is keyed by the same relation's hashes); kept-ness is a flag
     val flagged = posted.join(keepers, Seq("h"))
@@ -1335,8 +1308,10 @@ object DedupPack extends QueryPack {
       |ORDER BY content_hash""".stripMargin,
     "d16_incremental_dedup" -> s"""
       |WITH $augmentedSql,
-      |hist AS (SELECT DISTINCT md5(text) AS h FROM aug WHERE doc_id < 100000),
-      |batch AS (SELECT doc_id, md5(text) AS h FROM aug WHERE doc_id >= 100000),
+      |hist AS (SELECT DISTINCT md5(coalesce(text, '')) AS h FROM aug
+      |  WHERE doc_id < 100000),
+      |batch AS (SELECT doc_id, md5(coalesce(text, '')) AS h FROM aug
+      |  WHERE doc_id >= 100000),
       |fb AS (SELECT h, min(doc_id) AS first_id FROM batch GROUP BY h)
       |SELECT b.doc_id, b.h AS content_hash,
       |  CASE WHEN hist.h IS NOT NULL THEN 'dup_of_history'

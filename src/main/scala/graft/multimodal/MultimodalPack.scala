@@ -143,14 +143,13 @@ object MultimodalPack extends QueryPack {
     * maxDist 4): pigeonhole candidate join on band values, exact
     * popcount filter, never an all-pairs scan.
     *
-    * Scale shape: EXACT-COLLAPSE first (RefinedWeb §3.3, the d18/d20
-    * lesson) — byte-identical copies (the scale corpus replicates
-    * text, hence content, verbatim) resolve at the digest tier and
-    * only one representative per distinct content enters the
-    * perceptual join, so dup-heavy growth never reaches the band
-    * buckets; and dHash values are md5-derived (uniform bits, unlike
-    * vocabulary-correlated text simhashes), so band buckets stay at
-    * the 2^-12 background rate. */
+    * Scale shape: EXACT-COLLAPSE first
+    * ([[graft.dedup.Dedup.exactGroups]]; RefinedWeb §3.3) — only one
+    * representative per distinct content enters the perceptual join,
+    * so dup-heavy growth never reaches the band buckets; and dHash
+    * values are md5-derived (uniform bits, unlike vocabulary-correlated
+    * text simhashes), so band buckets stay at the 2^-12 background
+    * rate. */
   def imageNearDups(spark: SparkSession, dir: String): DataFrame = {
     // digest and dHash come off the session fingerprint artifact
     // ([[sceneFps]]) — one decode pass per session, not per query;
@@ -158,9 +157,8 @@ object MultimodalPack extends QueryPack {
     // the same digest relation, so the pair set is identical (the fp
     // is per-row, and min(media_id) per digest class is unchanged)
     val m = sceneFps(spark, dir)
-    val reps = m.groupBy(col("h"))
-      .agg(min(col("media_id")).as("media_id"))
-      .select(col("media_id"))
+    val reps = graft.dedup.Dedup.exactGroups(m, col("media_id"), col("h"))
+      .select(col("keeper_id").as("media_id"))
     val sig = m.join(reps, Seq("media_id"), "left_semi")
       .select(col("media_id").as("id"), col("fp").as("simhash"))
     graft.dedup.Dedup.hammingPairsBandedOf(sig, maxDist = 4,
@@ -292,7 +290,8 @@ object MultimodalPack extends QueryPack {
   /** Offset-consistent clip containment over any per-unit media
     * relation `(item_id, unit_idx, content)` — the shared body of mm07
     * (video frames) and mm08 (audio windows): exact-collapse at the
-    * unit level, perceptual fingerprint per representative unit
+    * unit level ([[graft.dedup.Dedup.exactGroups]] with the struct
+    * key), perceptual fingerprint per representative unit
     * (`fp` — the FakeDecoder seam), the d04/d10 banded Hamming join,
     * then the containment rollup (one consistent a−b offset covering
     * every unit of the shorter item).
@@ -329,9 +328,9 @@ object MultimodalPack extends QueryPack {
     val nf = u.groupBy(col("item_id")).agg(count(lit(1)).as("nunits"))
     def key(item: Column, unit: Column) =
       struct(item.as("item"), unit.as("unit"))
-    val reps = u.groupBy(col("d"))
-      .agg(min(key(col("item_id"), col("unit_idx"))).as("id"))
-      .select(col("id"))
+    val reps = graft.dedup.Dedup.exactGroups(u,
+        key(col("item_id"), col("unit_idx")), col("d"))
+      .select(col("keeper_id").as("id"))
     // hammingPairsBandedOf cuts sig exactly once, COMPACT-on-compact
     // (a semi-join over the checkpointed proxy rows — no content pass,
     // unlike the r14 shape the verdict's double-cut finding flagged,
@@ -425,8 +424,8 @@ object MultimodalPack extends QueryPack {
   }
 
   /** The MEDIA ingest gate's per-batch screen — [[graft.dedup
-    * .DedupPack.dedupGateWithState]]'s shape for binary media: exact
-    * content-digest screen first (dup_of_history / dup_in_batch — a
+    * .DedupPack.dedupGateWithState]]'s shape for binary media: the
+    * exact screen first ([[graft.dedup.Dedup.digestScreen]] — a
     * byte-identical re-upload never reaches the probe), then the
     * 60-bit perceptual dHash of the digest-new remainder probed
     * against HISTORY fingerprint state through the banded Hamming join
@@ -465,17 +464,9 @@ object MultimodalPack extends QueryPack {
     // pass order; decisions are identical either way, and a corpus
     // where exact dups dominate would restore the two-pass order with
     // a second scan of the SOURCE (never a checkpoint of content).
-    val firstInBatch = batchRows.groupBy(col("h"))
-      .agg(min(col("media_id")).as("first_id"))
-    val hd = histDigests.select(col("h")).distinct()
-      .withColumn("in_hist", lit(true))
     val ex = graft.core.Caches.transient(
-      batchRows.join(hd, Seq("h"), "left")
-        .join(firstInBatch, Seq("h"))
-        .select(col("media_id"), col("fp"),
-          when(coalesce(col("in_hist"), lit(false)), "dup_of_history")
-            .when(col("media_id") =!= col("first_id"), "dup_in_batch")
-            .otherwise("exact_new").as("ex_status")))
+      graft.dedup.Dedup.digestScreen(batchRows, col("media_id"), histDigests)
+        .select(col("media_id"), col("fp"), col("ex_status")))
     // compact-on-compact cut (no content pass — `batchRows` already holds the
     // fingerprints): the probe references the survivor relation once
     // per band, and uncut it drags the digest-screen joins into every

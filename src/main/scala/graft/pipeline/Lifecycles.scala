@@ -172,10 +172,9 @@ object Lifecycles {
     val capped = cut(langBalanceCap(qual))
 
     // stage 3: exact dedup — content-digest keepers only
-    val exKeepers = capped.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-    val ex = cut(capped.join(exKeepers.select(col("doc_id")), Seq("doc_id"),
-      "left_semi"))
+    val exKeepers = Dedup.exactGroups(capped, col("doc_id"), md5(col("text")))
+      .select(col("keeper_id").as("doc_id"))
+    val ex = cut(capped.join(exKeepers, Seq("doc_id"), "left_semi"))
 
     // ONE shingle pass serves stages 3 AND 4: at scale the shingle
     // extraction reads every byte of text — never run it twice. The
@@ -336,7 +335,9 @@ object Lifecycles {
     * counts toward the "" language, for the budget median and for the
     * cap (the dedup tier's null ≡ "" discipline — and a null key must
     * never NPE the driver-side sort); rows keep their original lang
-    * value. */
+    * value. The cap stage sees only (doc_id, key, quality), and its
+    * survivors semi-join back onto `docs` (unique doc_ids), so the
+    * text never enters the stage's checkpoint. */
   private[graft] def langBalanceCap(docs: DataFrame): DataFrame = {
     val counts = docs
       .groupBy(coalesce(col("lang"), lit("")).as("lang"))
@@ -346,9 +347,12 @@ object Lifecycles {
     val sorted = counts.sortBy { case (l, c) => (c, l) }
     val cap = sorted((sorted.length + 1) / 2 - 1)._2
     require(cap > 0, s"degenerate language-count median: $cap")
-    graft.text.AnalysisPack.capByQuality(docs, coalesce(col("lang"), lit("")),
-        graft.text.TextAnalysis.qualityScore(col("text")), cap)
-      .drop("_q", "_rk")
+    val kept = graft.text.AnalysisPack.capByQuality(
+        docs.select(col("doc_id"), coalesce(col("lang"), lit("")).as("key"),
+          graft.text.TextAnalysis.qualityScore(col("text")).as("quality")),
+        col("key"), col("quality"), cap)
+      .select(col("doc_id"))
+    docs.join(kept, Seq("doc_id"), "left_semi")
   }
 
   /** p03: the corpus DATASHEET (Gebru et al. 2021, "Datasheets for

@@ -42,8 +42,9 @@ object StreamPack extends QueryPack {
   /** s07: the ingest gate's deterministic batch twin over the
     * augmented corpus (planted dups give the dedup real work): quality
     * cut at 0.45 (the word-count tail fails the length score), then
-    * min-doc_id per content digest — what first-arrival-wins converges
-    * to under id-ordered ingest. The streaming form
+    * the [[graft.dedup.Dedup.exactGroups]] keeper (min doc_id) per
+    * content digest — what first-arrival-wins converges to under
+    * id-ordered ingest. The streaming form
     * ([[Streams.ingestGate]]) is the same scalar expressions +
     * `dropDuplicates`; the spec pins stream ≡ batch with the dedup
     * state carried ACROSS micro-batches. */
@@ -54,8 +55,9 @@ object StreamPack extends QueryPack {
           round(graft.text.TextAnalysis.qualityScore(col("text")), 6)
             .as("quality"))
         .filter(col("quality") >= 0.45))
-    val keeper = scored.groupBy(col("content_hash"))
-      .agg(min(col("doc_id")).as("doc_id"))
+    val keeper = graft.dedup.Dedup.exactGroups(scored, col("doc_id"),
+        col("content_hash"))
+      .select(col("content_hash"), col("keeper_id").as("doc_id"))
     scored.join(keeper, Seq("content_hash", "doc_id"))
       .select(col("doc_id"), col("content_hash"), col("quality"))
       .orderBy(col("doc_id"))

@@ -96,7 +96,7 @@ object MlPack extends QueryPack {
     }
 
   /** Fitted parameter vectors, recorded when a query collects them,
-    * so [[oracles]] can embed the SAME doubles as SQL literals at
+    * so [[oraclesFor]] can embed the SAME doubles as SQL literals at
     * Verify's post-run dump. (Verify runs every query before it dumps
     * oracle SQL; a targeted run that skips l05/l06 simply omits their
     * oracle entries — the weaker rows-only check.)
@@ -107,24 +107,13 @@ object MlPack extends QueryPack {
     * a single-slot record would embed whichever dir ran last and the
     * emitted oracle would silently mismatch the dir being verified.
     * [[oraclesFor]] resolves the recording FOR the dir being dumped
-    * (two dirs scored in one JVM each get their own weights); the
-    * dir-less [[oracles]] emits only when exactly one live recording
-    * exists. Ambiguity degrades to omission (rows-only check), never
-    * to a wrong oracle. */
+    * (two dirs scored in one JVM each get their own weights).
+    * Ambiguity degrades to omission (rows-only check), never to a
+    * wrong oracle. */
   private val mlpWvRec =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Double]]
   private val lrWvRec =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Double]]
-
-  /** The sole live recording, if unambiguous (stopped-session entries
-    * evicted first, mirroring Artifacts.memo). */
-  private def soleLive(
-      m: scala.collection.concurrent.TrieMap[(SparkSession, String), Seq[Double]])
-      : Option[Seq[Double]] = {
-    m.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val snap = m.readOnlySnapshot().toSeq
-    if (snap.size == 1) Some(snap.head._2) else None
-  }
 
   /** The recording for ONE dir, live sessions only. Training is
     * deterministic per dir, so two live sessions that both scored the
@@ -339,24 +328,20 @@ object MlPack extends QueryPack {
     |    / CAST(count(*) AS DOUBLE) AS accuracy
     |FROM c GROUP BY ROLLUP(actual) ORDER BY field""".stripMargin
 
-  private def buildOracles(mwOpt: Option[Seq[Double]],
-                           lwOpt: Option[Seq[Double]]): Map[String, String] = {
-    val l05 = mwOpt.map(mw => "l05_mlp_classify" -> l05Sql(mw))
-    val l06 = for { mw <- mwOpt; lw <- lwOpt } yield
-      "l06_joint_two_head" -> l06Sql(mw, lw)
-    (l05.toSeq ++ l06.toSeq).toMap
-  }
+  /** Empty: each l05/l06 oracle embeds one dir's fitted weights, so
+    * [[oraclesFor]] is this pack's one oracle source. */
+  val oracles: Map[String, String] = Map.empty
 
   /** Emitted AFTER the queries run (Verify's dump order): the fitted
     * weights recorded by the scoring queries become SQL literals, so
     * the oracle replays the exact prediction arithmetic — `fit()` is
-    * the only piece outside the check. The dir-less form requires ONE
-    * unambiguous live recording (omission otherwise); Verify uses
-    * [[oraclesFor]], which pairs each dir with its OWN weights even
-    * when several dirs were scored in the same JVM. */
-  override def oracles: Map[String, String] =
-    buildOracles(soleLive(mlpWvRec), soleLive(lrWvRec))
-
-  override def oraclesFor(dir: String): Map[String, String] =
-    buildOracles(forDir(mlpWvRec, dir), forDir(lrWvRec, dir))
+    * the only piece outside the check. Each dir pairs with its OWN
+    * weights even when several dirs were scored in the same JVM. */
+  override def oraclesFor(dir: String): Map[String, String] = {
+    val mwOpt = forDir(mlpWvRec, dir)
+    val l05 = mwOpt.map(mw => "l05_mlp_classify" -> l05Sql(mw))
+    val l06 = for { mw <- mwOpt; lw <- forDir(lrWvRec, dir) } yield
+      "l06_joint_two_head" -> l06Sql(mw, lw)
+    (l05.toSeq ++ l06.toSeq).toMap
+  }
 }

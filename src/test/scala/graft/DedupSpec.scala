@@ -331,6 +331,63 @@ class DedupSpec extends AnyFunSuite {
     assert(out(10L) == "new" && out(11L) == "dup_in_batch", s"$out")
   }
 
+  test("d16 never drops a null-text batch document (null digests as empty)") {
+    import spark.implicits._
+    // ids >= 100000 are d16's batch: two null texts and an empty one
+    // form one class there, next to a near copy (100001) and an exact
+    // copy (200001) of the one history document
+    val dir = java.nio.file.Files.createTempDirectory("graft_d16_null").toString
+    Seq((1L, "alpha beta gamma"), (150000L, null.asInstanceOf[String]),
+        (150001L, ""), (150002L, null.asInstanceOf[String]))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val out = DedupPack.incrementalDedup(spark, dir).collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+    assert(out.keySet == Set(100001L, 150000L, 150001L, 150002L, 200001L),
+      s"docs dropped: $out")
+    assert(out.view.mapValues(_._2).toMap == Map(100001L -> "new",
+      150000L -> "new", 150001L -> "dup_in_batch", 150002L -> "dup_in_batch",
+      200001L -> "dup_of_history"), s"$out")
+    val emptyMd5 = "d41d8cd98f00b204e9800998ecf8427e"
+    assert(Seq(150000L, 150001L, 150002L).forall(out(_)._1 == emptyMd5))
+  }
+
+  test("exactGroups elects the min id per digest, struct ids too; " +
+      "digestScreen puts history before the batch keeper") {
+    import spark.implicits._
+    val rows = Seq((5L, 0L, "a"), (3L, 4L, "a"), (3L, 1L, "a"), (3L, 0L, "b"),
+      (9L, 2L, "c")).toDF("doc_id", "pos", "h")
+    val flat = Dedup.exactGroups(rows, col("doc_id"), col("h")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(flat == Map("a" -> (3L, 3L), "b" -> (3L, 1L), "c" -> (9L, 1L)))
+    // struct ids compare field by field: (3, 1) < (3, 4) < (5, 0)
+    val byStruct = Dedup.exactGroups(rows, struct(col("doc_id"), col("pos")),
+        col("h"))
+      .select(col("h"), col("keeper_id.doc_id"), col("keeper_id.pos"),
+        col("n_copies"))
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(byStruct == Map("a" -> (3L, 1L, 3L), "b" -> (3L, 0L, 1L),
+      "c" -> (9L, 2L, 1L)))
+
+    val batch = Seq((12L, "x", "s1"), (10L, "x", "s2"), (11L, "y", "s3"),
+      (14L, "y", "s4"), (13L, "z", "s5")).toDF("doc_id", "h", "src")
+    def screen(hist: org.apache.spark.sql.DataFrame) = {
+      val out = Dedup.digestScreen(batch, col("doc_id"), hist)
+      assert(out.columns.toSeq == Seq("doc_id", "h", "src", "ex_status"))
+      val rs = out.collect()
+      assert(rs.length == 5, "one row per batch row")
+      rs.map(r => r.getLong(0) -> r.getString(3)).toMap
+    }
+    // 10 is x's batch keeper, but x is in history (listed twice): both
+    // x rows are history duplicates
+    assert(screen(Seq("x", "x", "w").toDF("h")) == Map(
+      10L -> "dup_of_history", 12L -> "dup_of_history",
+      11L -> "exact_new", 14L -> "dup_in_batch", 13L -> "exact_new"))
+    assert(screen(Seq.empty[String].toDF("h")) == Map(
+      10L -> "exact_new", 12L -> "dup_in_batch",
+      11L -> "exact_new", 14L -> "dup_in_batch", 13L -> "exact_new"))
+  }
+
   test("d09 decontamination flags only train docs, with sane fractions") {
     val rows = DedupPack.decontamination(spark, sf).collect()
     assert(rows.nonEmpty, "word-soup vocabulary overlap should exist")
