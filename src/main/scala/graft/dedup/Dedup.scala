@@ -27,6 +27,16 @@ object Dedup {
   def hash16(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 4), 16, 10).cast("long")
 
+  /** The DuckDB twin of every hex-prefix integer ([[hash16]],
+    * [[hash32]], [[hash60]], [[graft.multimodal.Multimodal.byteAt]]): the `nChars` hex
+    * characters of the SQL expression `hex` from 1-based `start`, as a
+    * BIGINT nibble sum. */
+  private[graft] def hexIntSql(hex: String, start: Int, nChars: Int): String =
+    (0 until nChars).map { i =>
+      val mult = java.math.BigInteger.valueOf(16).pow(nChars - 1 - i)
+      s"CAST(strpos('0123456789abcdef', substr($hex, ${start + i}, 1)) - 1 AS BIGINT) * $mult"
+    }.mkString("(", " + ", ")")
+
   /** Exact duplicate classes: one row per distinct `digest` (named as
     * the caller names it), its keeper `keeper_id` — the least `id`, any
     * orderable type, struct ids field by field — and its size
@@ -64,6 +74,22 @@ object Dedup {
       .select(batch.columns.toSeq.map(col) :+ status: _*)
   }
 
+  /** The DuckDB twin of [[digestScreen]]: the rows of relation `batch`
+    * plus their digest `h` (the SQL expression `digest`, evaluated on
+    * `batch` and on `hist` alike) and `ex_status`, as relation `out`.
+    * Defines `<out>_hd`, `<out>_b` and `<out>_k` on the way. */
+  private[graft] def digestScreenSql(hist: String, batch: String, id: String,
+                                     digest: String, out: String): String = s"""
+    |${out}_hd AS (SELECT DISTINCT $digest AS h FROM $hist),
+    |${out}_b AS (SELECT *, $digest AS h FROM $batch),
+    |${out}_k AS (SELECT h, min($id) AS keeper_id FROM ${out}_b GROUP BY h),
+    |$out AS (SELECT b.*,
+    |    CASE WHEN hd.h IS NOT NULL THEN 'dup_of_history'
+    |         WHEN b.$id <> k.keeper_id THEN 'dup_in_batch'
+    |         ELSE 'exact_new' END AS ex_status
+    |  FROM ${out}_b b JOIN ${out}_k k ON k.h = b.h
+    |  LEFT JOIN ${out}_hd hd ON hd.h = b.h)""".stripMargin
+
   /** Word k-gram shingles of a text column (distinct set per doc
     * comes from the caller's explode+distinct) — the native
     * single-pass expression ([[graft.plans.WordShingles]]). */
@@ -91,18 +117,6 @@ object Dedup {
   def hash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
-  /** n-gram Jaccard near-duplicate pairs ≥ threshold. Candidates are
-    * generated by the shared-shingle join (docs with zero common
-    * shingles never pair), intersections counted per pair, Jaccard
-    * from |A|+|B|−|A∩B|. The text form stays because the d03 groups
-    * artifact ([[DedupPack.groupsViaExactCollapse]]) mines pairs over
-    * the representative corpus, which no shared shingle artifact
-    * covers. Pairs are over word 3-shingles. */
-  def jaccardPairs(df: DataFrame, id: Column, text: Column): DataFrame =
-    // hash BEFORE the (single) distinct: dedup-ing the string rows
-    // first would just add a second shuffle for the same result set
-    jaccardPairsFromHashed(hashedShingleRows(df, id, text))
-
   /** The near-duplicate Jaccard cut every pair miner applies. */
   private val JaccardThreshold = 0.5
 
@@ -118,7 +132,24 @@ object Dedup {
       .select(col("id"), hash60(col("sh")).as("sh"))
       .distinct()
 
-  /** [[jaccardPairs]] over a pre-built [[hashedShingleRows]] relation. */
+  /** The DuckDB twin of [[hashedShingleRows]] at k = 3 over relation
+    * `tbl` (doc_id, text): the words relation `w`, the distinct
+    * (id, shingle) relation `sh` and its 60-bit hashed form `hsh`. The
+    * rendering is p02's byte-frozen text. */
+  private[graft] def hashedShingleRowsSql(tbl: String, w: String, sh: String,
+                                          hsh: String): String = s"""
+    |$w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words FROM $tbl),
+    |$sh AS (SELECT DISTINCT doc_id AS id, s AS sh
+    |  FROM (SELECT doc_id, unnest(CASE WHEN len(words) >= 3
+    |    THEN list_transform(range(1, len(words) - 1),
+    |         i -> array_to_string(words[i:i+2], ' '))
+    |    ELSE [] END) AS s FROM $w)),
+    |$hsh AS (SELECT DISTINCT id, ${hexIntSql("md5(sh)", 1, 15)} AS sh FROM $sh)""".stripMargin
+
+  /** n-gram Jaccard near-duplicate pairs ≥ threshold over a
+    * [[hashedShingleRows]] relation. Candidates are generated by the
+    * shared-shingle join (docs with zero common shingles never pair),
+    * intersections counted per pair, Jaccard from |A|+|B|−|A∩B|. */
   def jaccardPairsFromHashed(hashed: DataFrame,
                              maxShingleDocFreq: Int = Int.MaxValue): DataFrame = {
     val (sizes, inter) =
@@ -250,6 +281,24 @@ object Dedup {
       .reduce(_ + _)
     words.groupBy(col("id")).agg(bitSums.head, bitSums.tail: _*)
       .select(col("id"), simhashExpr.as("simhash"))
+  }
+
+  /** The DuckDB twin of [[wordHashes]] then [[simhashOf]] at `bits`
+    * (16 or 60: the [[hash16]] or [[hash60]] word hash) over relation
+    * `tbl` (doc_id, text), as relation `out` (id, simhash). Defines
+    * `<out>_w`, `<out>_dw`, `<out>_hb` and `<out>_bs` on the way. */
+  private[graft] def simhashSql(tbl: String, bits: Int, out: String): String = {
+    require(bits == 16 || bits == 60, "simhash hashes words with hash16 or hash60")
+    s"""
+    |${out}_w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words FROM $tbl),
+    |${out}_dw AS (SELECT DISTINCT doc_id AS id, u AS word
+    |  FROM (SELECT doc_id, unnest(words) AS u FROM ${out}_w)),
+    |${out}_hb AS (SELECT id, ${hexIntSql("md5(word)", 1, bits / 4)} AS hv FROM ${out}_dw),
+    |${out}_bs AS (SELECT id, bit, sum(((hv >> bit) & 1) * 2 - 1) AS s
+    |  FROM ${out}_hb, unnest(range(0, $bits)) t(bit) GROUP BY id, bit),
+    |$out AS (SELECT id, CAST(sum(CASE WHEN s > 0
+    |    THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS simhash
+    |  FROM ${out}_bs GROUP BY id)""".stripMargin
   }
 
   /** Deterministic Bloom-filter membership, relationally executed —

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
+import graft.text.TextOps
 import graft.vector.VectorOps
 
 /** Oracle-checked dedup queries over `documents` with PLANTED
@@ -292,6 +293,34 @@ object DedupPack extends QueryPack {
       .select(col("doc_id"), col("hist_id"), col("jac"))
     (cand, best)
   }
+
+  /** The DuckDB twin of [[minhashBestMatch]] over the band-signature
+    * relation `bands` (id, band, bandsig) and the hashed-shingle
+    * relation `hsh` (id, sh): the candidate pairs `<out>_cand`
+    * (doc_id, hist_id) between the `doc_id`s of relations `batch` and
+    * `hist`, and the best history match per candidate doc as `out`
+    * (doc_id, hist_id, jac). Defines `<out>_sizes`, `<out>_iv` and
+    * `<out>_jc` on the way. */
+  private[graft] def minhashBestMatchSql(bands: String, hsh: String, batch: String,
+                                         hist: String, out: String): String = s"""
+    |${out}_cand AS (SELECT DISTINCT b.id AS doc_id, h.id AS hist_id
+    |  FROM $bands b JOIN $bands h ON b.band = h.band AND b.bandsig = h.bandsig
+    |  JOIN $batch bq ON bq.doc_id = b.id JOIN $hist hq ON hq.doc_id = h.id),
+    |${out}_sizes AS (SELECT id, count(*) AS n FROM $hsh GROUP BY id),
+    |${out}_iv AS (SELECT c.doc_id, c.hist_id, count(*) AS inter
+    |  FROM ${out}_cand c JOIN $hsh a ON a.id = c.doc_id
+    |  JOIN $hsh h2 ON h2.id = c.hist_id AND h2.sh = a.sh
+    |  GROUP BY 1, 2),
+    |${out}_jc AS (SELECT c.doc_id, c.hist_id,
+    |    CAST(coalesce(iv.inter, 0) AS DOUBLE)
+    |      / CAST(sa.n + sb.n - coalesce(iv.inter, 0) AS DOUBLE) AS jac
+    |  FROM ${out}_cand c
+    |  LEFT JOIN ${out}_iv iv ON iv.doc_id = c.doc_id AND iv.hist_id = c.hist_id
+    |  JOIN ${out}_sizes sa ON sa.id = c.doc_id
+    |  JOIN ${out}_sizes sb ON sb.id = c.hist_id),
+    |$out AS (SELECT doc_id, hist_id, jac FROM (SELECT doc_id, hist_id, jac,
+    |    row_number() OVER (PARTITION BY doc_id ORDER BY jac DESC, hist_id) AS rn
+    |  FROM ${out}_jc) WHERE rn = 1)""".stripMargin
 
   /** The composed continuous-ingest DEDUP GATE (s09's relation, the
     * per-micro-batch body of the streaming gate): d16's exact digest
@@ -714,13 +743,15 @@ object DedupPack extends QueryPack {
       Dedup.exactGroups(classes, col("doc_id"), col("h"))
         .select(col("h"), col("keeper_id").as("rep_id"),
           col("n_copies").as("n_members")))
-    val repCorpus = corpus
-      .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"))
-    val repGroups = Dedup.dedupGroups(Dedup.jaccardPairs(repCorpus,
+    val repSh = graft.core.Caches.cut(Dedup.hashedShingleRows(
+      corpus.join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id")),
       col("doc_id"), col("text")))
+    val repGroups = Dedup.dedupGroups(Dedup.jaccardPairsFromHashed(repSh))
     // membership contract unchanged: a doc appears iff it is in some
-    // FULL pair — intra-class (class size ≥ 2) or via its rep's pair
-    classes.join(reps, Seq("h"))
+    // FULL pair — intra-class (class size ≥ 2, content with shingles:
+    // its rep has shingle rows) or via its rep's pair
+    classes.join(reps.join(repSh.select(col("id").as("rep_id")),
+        Seq("rep_id"), "left_semi"), Seq("h"))
       .join(repGroups.select(col("doc_id").as("rep_id"), col("keeper_id")),
         Seq("rep_id"), "left")
       .filter(col("keeper_id").isNotNull || col("n_members") > 1)
@@ -1033,49 +1064,15 @@ object DedupPack extends QueryPack {
       // shared by d04/d05 (16-bit) and d10/d22 (60-bit)
       "word_hashes" -> augWordHashes)
 
-  /** Shared SQL: distinct 3-gram shingle rows over `aug`. */
-  private[graft] val shingleSql = """
-    |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\s+') END AS words FROM aug),
-    |sh AS (SELECT DISTINCT doc_id AS id, s AS sh
-    |  FROM (SELECT doc_id, unnest(CASE WHEN len(words) >= 3
-    |    THEN list_transform(range(1, len(words) - 1),
-    |         i -> array_to_string(words[i:i+2], ' '))
-    |    ELSE [] END) AS s FROM w))""".stripMargin
-
-  /** 16-bit md5-prefix hash in pure SQL (nibble decode). */
-  private def hv(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
-  }
-
-  /** 60-bit md5-prefix hash (15-nibble decode) — mirrors
-    * `Dedup.hash60` (Jaccard join keys, KMV sketch hashes). */
-  private[graft] def hv60(e: String): String =
-    (1 to 15).map { i =>
-      val mult = java.math.BigInteger.valueOf(16).pow(15 - i)
-      s"CAST(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1 AS BIGINT) * $mult"
-    }.mkString("(", " + ", ")")
-
-  /** Distinct (id, hashed shingle) — the join-key relation both
-    * Jaccard oracles read. */
-  private[graft] val hashedShingleSql =
-    s"""hsh AS (SELECT DISTINCT id, ${hv60("sh")} AS sh FROM sh)"""
+  /** The 3-shingle relations `w`, `sh` and `hsh` over `aug`. */
+  private val augShinglesSql = Dedup.hashedShingleRowsSql("aug", "w", "sh", "hsh")
 
   /** The minhash band-signature chain (32-bit base hash → 12-seed
-    * family mins → 4 band signatures) — shared by the d03 and d19
-    * oracles so the LSH family cannot fork. Assumes the `sh` shingle
-    * CTE in scope; interpolated into strings that stripMargin AFTER
-    * interpolation, so no content line starts with a margin char. */
+    * family mins → 4 band signatures) — shared by the d03, d19, d21
+    * and s09 oracles so the LSH family cannot fork. Assumes the `sh`
+    * shingle CTE in scope. */
   private[graft] val minhashBandsSql = s"""hb AS (SELECT id,
-    |  CAST((strpos('0123456789abcdef', substr(md5(sh), 1, 1)) - 1) AS BIGINT) * 268435456
-    |  + (strpos('0123456789abcdef', substr(md5(sh), 2, 1)) - 1) * 16777216
-    |  + (strpos('0123456789abcdef', substr(md5(sh), 3, 1)) - 1) * 1048576
-    |  + (strpos('0123456789abcdef', substr(md5(sh), 4, 1)) - 1) * 65536
-    |  + (strpos('0123456789abcdef', substr(md5(sh), 5, 1)) - 1) * 4096
-    |  + (strpos('0123456789abcdef', substr(md5(sh), 6, 1)) - 1) * 256
-    |  + (strpos('0123456789abcdef', substr(md5(sh), 7, 1)) - 1) * 16
-    |  + (strpos('0123456789abcdef', substr(md5(sh), 8, 1)) - 1) AS base
+    |  ${Dedup.hexIntSql("md5(sh)", 1, 8)} AS base
     |  FROM sh),
     |mh AS (SELECT id, seed,
     |    min(((1000003 + 222222 * seed) * base + 777767 * seed + 12345)
@@ -1084,17 +1081,6 @@ object DedupPack extends QueryPack {
     |bands AS (SELECT id, CAST(seed // 3 AS INT) AS band,
     |    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS bandsig
     |  FROM mh GROUP BY id, CAST(seed // 3 AS INT))""".stripMargin
-
-  /** d09's shingle relation is over the RAW documents table (no
-    * planted dups — contamination is natural vocabulary overlap). */
-  private val docShingleSql = """
-    |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\s+') END AS words FROM documents),
-    |sh AS (SELECT DISTINCT doc_id AS id, s AS sh
-    |  FROM (SELECT doc_id, unnest(CASE WHEN len(words) >= 3
-    |    THEN list_transform(range(1, len(words) - 1),
-    |         i -> array_to_string(words[i:i+2], ' '))
-    |    ELSE [] END) AS s FROM w))""".stripMargin
 
   /** The d08 recursive component chain (Jaccard pairs → bidirectional
     * edges → transitive reachability → min-label keepers) — shared by
@@ -1117,17 +1103,16 @@ object DedupPack extends QueryPack {
     * `e` — mirrors `Dedup.bloomBitPositions` (md5-prefix hash of the
     * salted key string, mod 2²⁰). */
   private def bpos(i: Int, e: String): String =
-    s"(${hv60(s"'bloom${i}_' || CAST($e AS VARCHAR)")} % 1048576)"
+    s"(${Dedup.hexIntSql(s"md5('bloom${i}_' || CAST($e AS VARCHAR))", 1, 15)} % 1048576)"
 
   val oracles: Map[String, String] = Map(
     "d15_substring_dedup" -> s"""
       |WITH $augmentedSql,
-      |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
+      |w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words FROM aug),
       |wp AS (SELECT doc_id AS id, unnest(words) AS word,
       |    generate_subscripts(words, 1) - 1 AS p FROM w),
       |occ AS (SELECT doc_id AS id, i - 1 AS i,
-      |    ${hv60("array_to_string(words[i:i+9], ' ')")} AS sh
+      |    ${Dedup.hexIntSql("md5(array_to_string(words[i:i+9], ' '))", 1, 15)} AS sh
       |  FROM (SELECT doc_id, words, unnest(CASE WHEN len(words) >= 10
       |    THEN range(1, len(words) - 8) ELSE [] END) AS i FROM w)),
       |stats AS (SELECT sh, count(*) AS df_, min(id) AS keeper
@@ -1147,8 +1132,7 @@ object DedupPack extends QueryPack {
       |FROM w LEFT JOIN reas ON reas.id = w.doc_id
       |ORDER BY w.doc_id""".stripMargin,
     "d13_bloom_decontam" -> s"""
-      |WITH $docShingleSql,
-      |hsh AS (SELECT DISTINCT id, ${hv60("sh")} AS sh FROM sh),
+      |WITH ${Dedup.hashedShingleRowsSql("documents", "w", "sh", "hsh")},
       |sp AS (SELECT doc_id,
       |  CASE WHEN substr(md5('42' || CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
       |    THEN 'train' ELSE 'test' END AS split FROM documents),
@@ -1172,8 +1156,7 @@ object DedupPack extends QueryPack {
       |  round(CAST(nf AS DOUBLE) / CAST(n AS DOUBLE), 6) AS flag_frac
       |FROM flg JOIN sizes ON sizes.id = flg.id ORDER BY doc_id""".stripMargin,
     "d09_decontamination" -> s"""
-      |WITH $docShingleSql,
-      |hsh AS (SELECT DISTINCT id, ${hv60("sh")} AS sh FROM sh),
+      |WITH ${Dedup.hashedShingleRowsSql("documents", "w", "sh", "hsh")},
       |sp AS (SELECT doc_id,
       |  CASE WHEN substr(md5('42' || CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
       |    THEN 'train' ELSE 'test' END AS split FROM documents),
@@ -1189,11 +1172,11 @@ object DedupPack extends QueryPack {
       |  round(CAST(c.n_shared AS DOUBLE) / CAST(sizes.n AS DOUBLE), 6) AS contam_frac
       |FROM c JOIN sizes ON sizes.id = c.id ORDER BY doc_id""".stripMargin,
     "d08_dedup_groups" -> s"""
-      |WITH RECURSIVE $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH RECURSIVE $augmentedSql, $augShinglesSql,
       |$dedupGroupsCtes
       |SELECT doc_id, keeper_id FROM lab ORDER BY doc_id""".stripMargin,
     "d14_group_split" -> s"""
-      |WITH RECURSIVE $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH RECURSIVE $augmentedSql, $augShinglesSql,
       |$dedupGroupsCtes,
       |k AS (SELECT a.doc_id, coalesce(lab.keeper_id, a.doc_id) AS keeper_id
       |  FROM aug a LEFT JOIN lab ON lab.doc_id = a.doc_id)
@@ -1202,7 +1185,7 @@ object DedupPack extends QueryPack {
       |    THEN 'train' ELSE 'test' END AS split
       |FROM k ORDER BY doc_id""".stripMargin,
     "d21_minhash_fidelity" -> s"""
-      |WITH $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH $augmentedSql, $augShinglesSql,
       |$minhashBandsSql,
       |cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id
       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bandsig = b.bandsig
@@ -1240,7 +1223,7 @@ object DedupPack extends QueryPack {
       |FROM generate_series(0, 12) g(m) LEFT JOIN ag ON ag.m = g.m
       |ORDER BY m""".stripMargin,
     "d20_pair_band_counts" -> s"""
-      |WITH $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH $augmentedSql, $augShinglesSql,
       |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
       |prs AS (SELECT a.id AS a_id, b.id AS b_id, count(*) AS inter
       |  FROM hsh a JOIN hsh b USING (sh) WHERE a.id < b.id GROUP BY 1, 2),
@@ -1257,7 +1240,7 @@ object DedupPack extends QueryPack {
       |FROM generate_series(5, 10) g(b10) LEFT JOIN cnt ON cnt.b10 = g.b10
       |ORDER BY band""".stripMargin,
     "d07_jaccard_stopshingle" -> s"""
-      |WITH $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH $augmentedSql, $augShinglesSql,
       |rare AS (SELECT sh AS rsh FROM (SELECT sh, count(*) AS df_ FROM hsh GROUP BY sh)
       |  WHERE df_ <= 20),
       |shf AS (SELECT id, sh FROM hsh JOIN rare ON hsh.sh = rare.rsh),
@@ -1271,7 +1254,7 @@ object DedupPack extends QueryPack {
       |WHERE CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE) >= 0.5
       |ORDER BY a_id, b_id""".stripMargin,
     "d18_keep_best" -> s"""
-      |WITH RECURSIVE $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH RECURSIVE $augmentedSql, $augShinglesSql,
       |$dedupGroupsCtes,
       |${graft.text.AnalysisPack.qualityCtes("aug")},
       |m AS (SELECT lab.doc_id, lab.keeper_id AS group_id, qs.quality
@@ -1308,49 +1291,31 @@ object DedupPack extends QueryPack {
       |ORDER BY content_hash""".stripMargin,
     "d16_incremental_dedup" -> s"""
       |WITH $augmentedSql,
-      |hist AS (SELECT DISTINCT md5(coalesce(text, '')) AS h FROM aug
-      |  WHERE doc_id < 100000),
-      |batch AS (SELECT doc_id, md5(coalesce(text, '')) AS h FROM aug
-      |  WHERE doc_id >= 100000),
-      |fb AS (SELECT h, min(doc_id) AS first_id FROM batch GROUP BY h)
-      |SELECT b.doc_id, b.h AS content_hash,
-      |  CASE WHEN hist.h IS NOT NULL THEN 'dup_of_history'
-      |       WHEN b.doc_id <> fb.first_id THEN 'dup_in_batch'
-      |       ELSE 'new' END AS status
-      |FROM batch b LEFT JOIN hist ON b.h = hist.h JOIN fb ON b.h = fb.h
-      |ORDER BY b.doc_id""".stripMargin,
+      |hist AS (SELECT text FROM aug WHERE doc_id < 100000),
+      |batch AS (SELECT doc_id, text FROM aug WHERE doc_id >= 100000),
+      |${Dedup.digestScreenSql("hist", "batch", "doc_id", "md5(coalesce(text, ''))", "ex")}
+      |SELECT doc_id, h AS content_hash,
+      |  CASE WHEN ex_status = 'exact_new' THEN 'new' ELSE ex_status END AS status
+      |FROM ex ORDER BY doc_id""".stripMargin,
     "d19_incremental_minhash" -> s"""
-      |WITH $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH $augmentedSql, $augShinglesSql,
       |$minhashBandsSql,
-      |cand AS (SELECT DISTINCT b.id AS doc_id, h.id AS hist_id
-      |  FROM bands b JOIN bands h ON b.band = h.band AND b.bandsig = h.bandsig
-      |  WHERE b.id >= 100000 AND h.id < 100000),
-      |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
-      |iv AS (SELECT c.doc_id, c.hist_id, count(*) AS inter
-      |  FROM cand c JOIN hsh a ON a.id = c.doc_id
-      |  JOIN hsh h2 ON h2.id = c.hist_id AND h2.sh = a.sh
-      |  GROUP BY 1, 2),
-      |jc AS (SELECT c.doc_id, c.hist_id,
-      |    CAST(coalesce(iv.inter, 0) AS DOUBLE)
-      |      / CAST(sa.n + sb.n - coalesce(iv.inter, 0) AS DOUBLE) AS jac
-      |  FROM cand c LEFT JOIN iv ON iv.doc_id = c.doc_id AND iv.hist_id = c.hist_id
-      |  JOIN sizes sa ON sa.id = c.doc_id JOIN sizes sb ON sb.id = c.hist_id),
-      |bst AS (SELECT doc_id, hist_id, jac,
-      |    row_number() OVER (PARTITION BY doc_id ORDER BY jac DESC, hist_id) AS rn
-      |  FROM jc),
-      |nc AS (SELECT doc_id, count(*) AS n_candidates FROM cand GROUP BY 1)
+      |bq AS (SELECT doc_id FROM aug WHERE doc_id >= 100000),
+      |hq AS (SELECT doc_id FROM aug WHERE doc_id < 100000),
+      |${minhashBestMatchSql("bands", "hsh", "bq", "hq", "mb")},
+      |nc AS (SELECT doc_id, count(*) AS n_candidates FROM mb_cand GROUP BY 1)
       |SELECT a.doc_id,
       |  CAST(coalesce(nc.n_candidates, 0) AS BIGINT) AS n_candidates,
       |  CAST(coalesce(b.hist_id, -1) AS BIGINT) AS best_hist_id,
       |  round(coalesce(b.jac, 0.0), 6) AS best_jaccard,
       |  CASE WHEN coalesce(b.jac, 0.0) >= 0.5 THEN 'near_dup_of_history'
       |       ELSE 'new' END AS status
-      |FROM (SELECT doc_id FROM aug WHERE doc_id >= 100000) a
+      |FROM bq a
       |LEFT JOIN nc ON nc.doc_id = a.doc_id
-      |LEFT JOIN bst b ON b.doc_id = a.doc_id AND b.rn = 1
+      |LEFT JOIN mb b ON b.doc_id = a.doc_id
       |ORDER BY a.doc_id""".stripMargin,
     "d02_jaccard_pairs" -> s"""
-      |WITH $augmentedSql, $shingleSql, $hashedShingleSql,
+      |WITH $augmentedSql, $augShinglesSql,
       |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
       |pairs AS (SELECT a.id AS a_id, b.id AS b_id, count(*) AS inter
       |  FROM hsh a JOIN hsh b USING (sh) WHERE a.id < b.id GROUP BY 1, 2)
@@ -1361,7 +1326,7 @@ object DedupPack extends QueryPack {
       |WHERE CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE) >= 0.5
       |ORDER BY a_id, b_id""".stripMargin,
     "d03_minhash_candidates" -> s"""
-      |WITH $augmentedSql, $shingleSql,
+      |WITH $augmentedSql, $augShinglesSql,
       |$minhashBandsSql
       |SELECT DISTINCT a.id AS a_id, b.id AS b_id
       |FROM bands a JOIN bands b ON a.band = b.band AND a.bandsig = b.bandsig
@@ -1369,44 +1334,25 @@ object DedupPack extends QueryPack {
       |ORDER BY a_id, b_id""".stripMargin,
     "d04_simhash_values" -> s"""
       |WITH $augmentedSql,
-      |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
-      |dw AS (SELECT DISTINCT doc_id AS id, u AS word
-      |  FROM (SELECT doc_id, unnest(words) AS u FROM w)),
-      |hb AS (SELECT id, ${hv("word")} AS hvv, unnest(range(0, 16)) AS bit FROM dw),
-      |bs AS (SELECT id, bit,
-      |    sum(CAST(floor(hvv / pow(2, bit)) AS BIGINT) % 2 * 2 - 1) AS s
-      |  FROM hb GROUP BY id, bit)
-      |SELECT id, CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2, bit) AS BIGINT)
-      |  ELSE 0 END) AS BIGINT) AS simhash
-      |FROM bs GROUP BY id ORDER BY id""".stripMargin,
+      |${Dedup.simhashSql("aug", 16, "sh16")}
+      |SELECT id, simhash FROM sh16 ORDER BY id""".stripMargin,
     "d05_simhash_pairs" -> s"""
       |WITH $augmentedSql,
-      |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
-      |dw AS (SELECT DISTINCT doc_id AS id, u AS word
-      |  FROM (SELECT doc_id, unnest(words) AS u FROM w)),
-      |hb AS (SELECT id, ${hv("word")} AS hvv, unnest(range(0, 16)) AS bit FROM dw),
-      |bs AS (SELECT id, bit,
-      |    sum(CAST(floor(hvv / pow(2, bit)) AS BIGINT) % 2 * 2 - 1) AS s
-      |  FROM hb GROUP BY id, bit),
-      |sh2 AS (SELECT id, CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2, bit) AS BIGINT)
-      |  ELSE 0 END) AS BIGINT) AS simhash FROM bs GROUP BY id)
+      |${Dedup.simhashSql("aug", 16, "sh16")}
       |SELECT a.id AS a_id, b.id AS b_id,
       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      |FROM sh2 a JOIN sh2 b ON a.id < b.id
+      |FROM sh16 a JOIN sh16 b ON a.id < b.id
       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
       |ORDER BY a_id, b_id""".stripMargin,
     "d11_shared_spans" -> s"""
       |WITH $augmentedSql,
-      |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
+      |w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words FROM aug),
       |sh10 AS (SELECT DISTINCT doc_id AS id, s AS sh
       |  FROM (SELECT doc_id, unnest(CASE WHEN len(words) >= 10
       |    THEN list_transform(range(1, len(words) - 8),
       |         i -> array_to_string(words[i:i+9], ' '))
       |    ELSE [] END) AS s FROM w)),
-      |hsh10 AS (SELECT DISTINCT id, ${hv60("sh")} AS sh FROM sh10),
+      |hsh10 AS (SELECT DISTINCT id, ${Dedup.hexIntSql("md5(sh)", 1, 15)} AS sh FROM sh10),
       |dupsh AS (SELECT sh FROM (SELECT sh, count(*) AS df_ FROM hsh10 GROUP BY sh)
       |  WHERE df_ >= 2),
       |shr AS (SELECT id, count(*) AS n_shared FROM hsh10
@@ -1424,16 +1370,7 @@ object DedupPack extends QueryPack {
       |ORDER BY a.doc_id""".stripMargin,
     "d10_simhash_wide" -> s"""
       |WITH $augmentedSql,
-      |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
-      |dw AS (SELECT DISTINCT doc_id AS id, u AS word
-      |  FROM (SELECT doc_id, unnest(words) AS u FROM w)),
-      |hb AS (SELECT id, ${hv60("word")} AS hv FROM dw),
-      |bs AS (SELECT id, bit, sum(((hv >> bit) & 1) * 2 - 1) AS s
-      |  FROM hb, unnest(range(0, 60)) t(bit) GROUP BY id, bit),
-      |sh60 AS (SELECT id, CAST(sum(CASE WHEN s > 0
-      |    THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS simhash
-      |  FROM bs GROUP BY id)
+      |${Dedup.simhashSql("aug", 60, "sh60")}
       |SELECT a.id AS a_id, b.id AS b_id,
       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
       |FROM sh60 a JOIN sh60 b ON a.id < b.id
@@ -1445,16 +1382,7 @@ object DedupPack extends QueryPack {
       |  GROUP BY md5(coalesce(text, ''))),
       |ra AS (SELECT a.doc_id, a.text FROM aug a
       |  JOIN rp ON rp.doc_id = a.doc_id),
-      |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM ra),
-      |dw AS (SELECT DISTINCT doc_id AS id, u AS word
-      |  FROM (SELECT doc_id, unnest(words) AS u FROM w)),
-      |hb AS (SELECT id, ${hv60("word")} AS hv FROM dw),
-      |bs AS (SELECT id, bit, sum(((hv >> bit) & 1) * 2 - 1) AS s
-      |  FROM hb, unnest(range(0, 60)) t(bit) GROUP BY id, bit),
-      |sh60 AS (SELECT id, CAST(sum(CASE WHEN s > 0
-      |    THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS simhash
-      |  FROM bs GROUP BY id)
+      |${Dedup.simhashSql("ra", 60, "sh60")}
       |SELECT a.id AS a_id, b.id AS b_id,
       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
       |FROM sh60 a JOIN sh60 b ON a.id < b.id

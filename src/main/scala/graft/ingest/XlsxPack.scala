@@ -40,8 +40,7 @@ object XlsxPack extends QueryPack {
   val oracles: Map[String, String] = Map(
     "i04_xlsx_roundtrip" -> s"""
       |WITH d AS (SELECT doc_id,
-      |    CASE WHEN length(trim(text)) = 0 THEN []
-      |      ELSE regexp_split_to_array(trim(text), '\\s+') END AS words
+      |    ${TextOps.wordsSql("text")} AS words
       |  FROM documents WHERE doc_id < $NDocs)
       |SELECT doc_id, words[1] AS first_word,
       |  CAST(len(words) AS BIGINT) AS word_count

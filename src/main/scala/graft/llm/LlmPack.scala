@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
+import graft.dedup.Dedup
 import graft.metrics.Evaluation
 import graft.normalize.JsonRepair
 import graft.text.TextOps
@@ -536,9 +537,8 @@ object LlmPack extends QueryPack {
   /** The stub model + repair chain, replayed in SQL (shared with the
     * p04 oracle in [[graft.pipeline.PipelinePack]] — the paired-query
     * discipline: ONE SQL definition of the extraction chain). */
-  private[graft] val stubCte = """
-    |w AS (SELECT doc_id, text, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\s+') END AS words FROM documents),
+  private[graft] val stubCte = raw"""
+    |w AS (SELECT doc_id, text, ${TextOps.wordsSql("text")} AS words FROM documents),
     |resp AS (SELECT doc_id, words,
     |    CASE WHEN len(words) = 0 THEN 'NULL' ELSE words[1] END AS fw,
     |    CAST(len(words) AS VARCHAR) AS wc,
@@ -558,9 +558,9 @@ object LlmPack extends QueryPack {
     |    ELSE substr(w1, 1, length(w1) - strpos(reverse(w1), '}') + 1) END AS repaired FROM rep1),
     |parsed AS (SELECT doc_id, words, fw, wc,
     |    coalesce(CASE WHEN json_valid(repaired)
-    |      THEN json_extract_string(repaired, '$.first_word') END, 'NULL') AS pfw,
+    |      THEN json_extract_string(repaired, '$$.first_word') END, 'NULL') AS pfw,
     |    coalesce(CASE WHEN json_valid(repaired)
-    |      THEN json_extract_string(repaired, '$.word_count') END, 'NULL') AS pwc
+    |      THEN json_extract_string(repaired, '$$.word_count') END, 'NULL') AS pwc
     |  FROM rep),
     |longf AS (
     |  SELECT doc_id, 'first_word' AS field, pfw AS predicted_value, fw AS ground_truth,
@@ -569,7 +569,7 @@ object LlmPack extends QueryPack {
     |  SELECT doc_id, 'word_count', pwc, wc,
     |    CASE WHEN trim(pwc) = trim(wc) THEN 1 ELSE 0 END FROM parsed)""".stripMargin
 
-  private val ragCte = """
+  private val ragCte = raw"""
     |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
     |pr AS (SELECT q.vec_id AS qid, n.vec_id AS nid, n.label AS nlabel,
     |        list_dot_product(q.v, n.v) AS sim
@@ -578,8 +578,7 @@ object LlmPack extends QueryPack {
     |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
     |      FROM pr WHERE true QUALIFY rnk <= 3),
     |sn AS (SELECT doc_id, array_to_string(
-    |    (CASE WHEN length(trim(text)) = 0 THEN []
-    |     ELSE regexp_split_to_array(trim(text), '\s+') END)[1:10], ' ') AS snippet
+    |    (${TextOps.wordsSql("text")})[1:10], ' ') AS snippet
     |  FROM documents),
     |blocks AS (SELECT r.qid, r.rnk, r.nlabel,
     |    '[Document ' || CAST(r.rnk AS VARCHAR) || ']: ' || sn.snippet AS block
@@ -588,9 +587,8 @@ object LlmPack extends QueryPack {
   /** The BM25 scoring chain (corpus stats → postings → per-term
     * decimal-summed scores → ranked `rb`) — shared by the l07 and l08
     * oracles. */
-  private val bm25Cte = """
-    |w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\s+') END AS words FROM documents),
+  private val bm25Cte = raw"""
+    |w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words FROM documents),
     |st AS (SELECT count(*) AS n, sum(len(words)) AS sdl FROM w),
     |post AS (SELECT doc_id, term, count(*) AS tf
     |  FROM (SELECT doc_id, unnest(words) AS term FROM w) GROUP BY 1, 2),
@@ -661,10 +659,8 @@ object LlmPack extends QueryPack {
     "l12_token_f1" -> s"""
       |WITH $stubCte,
       |tk AS (SELECT doc_id, field,
-      |    CASE WHEN length(trim(predicted_value)) = 0 THEN []
-      |      ELSE regexp_split_to_array(trim(predicted_value), '\\s+') END AS pt,
-      |    CASE WHEN length(trim(ground_truth)) = 0 THEN []
-      |      ELSE regexp_split_to_array(trim(ground_truth), '\\s+') END AS gt
+      |    ${TextOps.wordsSql("predicted_value")} AS pt,
+      |    ${TextOps.wordsSql("ground_truth")} AS gt
       |  FROM longf),
       |pc AS (SELECT doc_id, field, tok, count(*) AS cp
       |  FROM (SELECT doc_id, field, unnest(pt) AS tok FROM tk) GROUP BY 1, 2, 3),
@@ -706,13 +702,13 @@ object LlmPack extends QueryPack {
       |    ORDER BY rrf DESC, doc_id) AS rnk FROM f)
       |SELECT query_id, CAST(rnk AS BIGINT) AS rank, doc_id, round(rrf, 6) AS rrf
       |FROM rr WHERE rnk <= 5 ORDER BY query_id, rank""".stripMargin,
-    "l09_hash_embed" -> """
+    "l09_hash_embed" -> s"""
       |WITH toks AS (SELECT doc_id,
       |    unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS tok
       |  FROM documents),
       |h AS (SELECT doc_id, md5(tok) AS h FROM toks WHERE tok <> ''),
       |b AS (SELECT doc_id,
-      |    strpos('0123456789abcdef', substr(h, 1, 1)) - 1 AS dim,
+      |    ${Dedup.hexIntSql("h", 1, 1)} AS dim,
       |    CASE WHEN substr(h, 2, 1) < '8' THEN 1 ELSE -1 END AS sgn FROM h),
       |s AS (SELECT doc_id, dim, CAST(sum(sgn) AS DOUBLE) AS v
       |  FROM b GROUP BY doc_id, dim),

@@ -468,14 +468,6 @@ object MetricsPack extends QueryPack {
       |    wf / CAST(total AS DOUBLE), total FROM s)
       |ORDER BY ord, label""".stripMargin
 
-  /** DuckDB BIGINT from the first 13 hex chars of md5 expr `h` — the
-    * nibble-sum idiom (see [[graft.dedup.DedupPack]]'s hv60). */
-  private val hex52Sql: String =
-    (0 until 13).map { i =>
-      val mult = java.math.BigInteger.valueOf(16).pow(12 - i)
-      s"CAST(strpos('0123456789abcdef', substr(h, ${1 + i}, 1)) - 1 AS BIGINT) * $mult"
-    }.mkString("(", " + ", ")")
-
   /** Shared Poisson(1) inverse-CDF thresholds (cumulative e^-1/k!) —
     * the same double literals the Spark side compares against. */
   private val poissonCaseSql: String =
@@ -598,7 +590,7 @@ object MetricsPack extends QueryPack {
       |w0 AS (SELECT b, y,
       |    md5('m12:' || CAST(b AS VARCHAR) || ':' || CAST(qid AS VARCHAR)) AS h
       |  FROM py, reps),
-      |w1 AS (SELECT b, y, CAST($hex52Sql AS DOUBLE) / 4503599627370496.0 AS u FROM w0),
+      |w1 AS (SELECT b, y, CAST(${graft.dedup.Dedup.hexIntSql("h", 1, 13)} AS DOUBLE) / 4503599627370496.0 AS u FROM w0),
       |w AS (SELECT b, y, $poissonCaseSql AS wt FROM w1),
       |accs AS (SELECT b, round(CAST(sum(wt * y) AS DOUBLE)
       |    / CAST(sum(wt) AS DOUBLE), 9) AS acc FROM w GROUP BY b),

@@ -66,112 +66,102 @@ object Multimodal {
       md5(text),
       md5(concat(text, lit(s"|n$enc")))))
 
-  /** Number of luminance samples in the decoded pixel surface: a 6×11
-    * normalized grayscale grid — the post-resize grid a real dHash
-    * pipeline reduces every image to, so hashes are comparable across
-    * resolutions by construction. */
+  /** The image grid: a 6×11 normalized grayscale surface — the
+    * post-resize grid a real dHash pipeline reduces every image to, so
+    * hashes are comparable across resolutions by construction. Its
+    * [[gridHash]] is the 60-bit dHash: one bit per horizontally
+    * adjacent pixel pair. */
   val DhashGridRows = 6
   val DhashGridCols = 11
-  val DhashPixels: Int = DhashGridRows * DhashGridCols // 66
-  /** dHash width: one bit per horizontally adjacent pixel pair. */
   val DhashBits: Int = DhashGridRows * (DhashGridCols - 1) // 60
 
-  /** 60-bit perceptual dHash over [[sceneContent]] bytes — the
-    * difference hash (row-wise gradient sign) of the DECODED pixel
-    * surface, as pure codegen'd expressions (the FakeDecoder seam: a
-    * real pipeline swaps the luminance derivation for decoded pixels
-    * and keeps everything from the comparison step down).
-    *
-    * Decode model: luminance i (0..65) is byte i%16 of
-    * md5(sceneHex || "|px" || i/16) — a function of the SCENE only, so
-    * any encoding of the same scene normalizes to the same surface —
-    * plus a one-pixel +8 perturbation at a position keyed on the
-    * ENCODER padding byte (the lossy-codec artifact: each re-encode
-    * moves one pixel). One perturbed pixel flips at most 2 of the 60
-    * gradient bits, so two encodings of one scene sit within Hamming
-    * ≤ 4 (≤ 2 perturbed pixels × ≤ 2 bits) while unrelated scenes are
-    * ~30 bits apart — the band join at `maxDist = 4` separates them
-    * with no tuning. 60 bits (not 64) keeps every value positive in a
-    * signed BIGINT on both engines, the d10/hash60 discipline. */
-  def dhash(content: Column): Column =
-    graft.core.Expr.let(hexOf(content)) { hx =>
-      val scene = substring(hx, 7, 32)
-      val perturb = conv(substring(hx, 39, 2), 16, 10).cast("int") % DhashPixels
-      // the 5 block md5s are STAGED through one let instead of being
-      // referenced 66× in the luminance array: codegen subexpression
-      // elimination does not fully collapse the repeats (measured
-      // 0.98 s vs 0.67 s warm on 6k images, bit-identical
-      // output), so bind each block digest once and index into it
-      val blocks = array((0 until (DhashPixels + 15) / 16).map(b =>
-        md5(concat(scene, lit(s"|px$b")))): _*)
-      graft.core.Expr.let(blocks) { bl =>
-        val lumArr = array((0 until DhashPixels).map { i =>
-          conv(substring(element_at(bl, i / 16 + 1),
-            (i % 16) * 2 + 1, 2), 16, 10).cast("int") +
-            when(perturb === i, 8).otherwise(0)
-        }: _*)
-        graft.core.Expr.let(lumArr) { lum =>
-          (0 until DhashBits).map { k =>
-            val idx = (k / (DhashGridCols - 1)) * DhashGridCols +
-              k % (DhashGridCols - 1)
-            when(element_at(lum, idx + 2) > element_at(lum, idx + 1),
-              lit(1L << k)).otherwise(0L)
-          }.reduce(_ + _)
-        }
-      }
-    }
-
-  /** Chroma grid of the decoded audio window: 12 pitch-class bins ×
-    * 6 time frames — the normalized energy surface a chromaprint-style
-    * pipeline reduces every window to, so fingerprints are comparable
-    * across codecs/bitrates by construction. */
+  /** The audio grid: 12 pitch-class bins × 6 time frames — the
+    * normalized energy surface a chromaprint-style pipeline reduces
+    * every window to, so fingerprints are comparable across
+    * codecs/bitrates by construction. Its [[gridHash]] is the 60-bit
+    * chromaprint-style fingerprint: one bit per temporally adjacent
+    * energy pair within a bin (the sign of the energy difference
+    * across time). */
   val ChromaBins = 12
   val ChromaFrames = 6
-  val ChromaSamples: Int = ChromaBins * ChromaFrames // 72
-  /** Fingerprint width: one bit per temporally adjacent energy pair
-    * within a bin (the chromaprint gradient family's simplest filter:
-    * sign of the energy difference across time). */
   val ChromaBits: Int = ChromaBins * (ChromaFrames - 1) // 60
 
-  /** 60-bit chromaprint-style audio fingerprint over [[sceneContent]]
-    * bytes — the third consumer of the banded Hamming machinery
-    * (image mm06 dHash, video mm07 per-frame dHash, audio THIS): per
-    * window, the sign of the chroma-energy gradient across time,
-    * bit k (bin k/5, step k%5) set when energy[bin][t+1] >
-    * energy[bin][t]. As with [[dhash]], the decode is the FakeDecoder
-    * seam: energy i is byte i%16 of md5(sceneHex || "|ch" || i/16) —
-    * a function of the latent SCENE only, so any encoding of the same
-    * audio normalizes to the same surface — plus a one-sample +8
-    * perturbation keyed on the encoder padding (the lossy-codec
-    * artifact). One perturbed energy appears in at most 2 temporal
-    * comparisons, so two encodings of one window sit within Hamming
-    * ≤ 4 while unrelated windows are ~30 bits apart — the maxDist = 4
-    * band join separates them with no tuning. The 5 block md5s stage
-    * through one let (the dhash CSE lesson — codegen does not fully
-    * collapse repeated md5s). */
-  def chromaHash(content: Column): Column =
+  /** Gradient-sign hash of the DECODED `rows` × `cols` grid of
+    * [[sceneContent]] bytes, as pure codegen'd expressions — the
+    * perceptual fingerprint of images (`tag` "px", the 6×11 dHash
+    * grid: mm06, mm07's frames, the media gate) and of audio windows
+    * (`tag` "ch", the 12×6 chroma grid: mm08). Bit k (row
+    * k/(cols−1), step k%(cols−1)) is set when cell [row][step+1] >
+    * cell [row][step].
+    *
+    * Decode model (the FakeDecoder seam: a real pipeline swaps the
+    * cell derivation for decoded pixels or chroma energies and keeps
+    * everything from the comparison step down): cell i is byte i%16
+    * of md5(sceneHex || "|" || tag || i/16) — a function of the SCENE
+    * only, so any encoding of the same scene normalizes to the same
+    * surface — plus a one-cell +8 perturbation at a position keyed on
+    * the ENCODER padding byte (the lossy-codec artifact: each
+    * re-encode moves one cell). One perturbed cell flips at most 2
+    * gradient bits, so two encodings of one scene sit within Hamming
+    * ≤ 4 (≤ 2 perturbed cells × ≤ 2 bits) while unrelated scenes are
+    * ~30 bits apart — the band join at `maxDist = 4` separates them
+    * with no tuning. At most 60 bits (not 64) keeps every value
+    * positive in a signed BIGINT on both engines, the d10/hash60
+    * discipline. */
+  def gridHash(content: Column, tag: String, rows: Int, cols: Int): Column = {
+    val cells = rows * cols
+    val bits = rows * (cols - 1)
+    require(bits <= 60, s"a $rows×$cols grid has more than 60 gradient bits")
     graft.core.Expr.let(hexOf(content)) { hx =>
       val scene = substring(hx, 7, 32)
-      val perturb =
-        conv(substring(hx, 39, 2), 16, 10).cast("int") % ChromaSamples
-      val blocks = array((0 until (ChromaSamples + 15) / 16).map(b =>
-        md5(concat(scene, lit(s"|ch$b")))): _*)
+      val perturb = conv(substring(hx, 39, 2), 16, 10).cast("int") % cells
+      // the block md5s are STAGED through one let instead of being
+      // referenced once per cell: codegen subexpression elimination
+      // does not fully collapse the repeats (measured 0.98 s vs
+      // 0.67 s warm on 6k images, bit-identical output), so bind
+      // each block digest once and index into it
+      val blocks = array((0 until (cells + 15) / 16).map(b =>
+        md5(concat(scene, lit(s"|$tag$b")))): _*)
       graft.core.Expr.let(blocks) { bl =>
-        val energyArr = array((0 until ChromaSamples).map { i =>
+        val gridArr = array((0 until cells).map { i =>
           conv(substring(element_at(bl, i / 16 + 1),
             (i % 16) * 2 + 1, 2), 16, 10).cast("int") +
             when(perturb === i, 8).otherwise(0)
         }: _*)
-        graft.core.Expr.let(energyArr) { en =>
-          (0 until ChromaBits).map { k =>
-            val idx = (k / (ChromaFrames - 1)) * ChromaFrames +
-              k % (ChromaFrames - 1)
-            when(element_at(en, idx + 2) > element_at(en, idx + 1),
+        graft.core.Expr.let(gridArr) { g =>
+          (0 until bits).map { k =>
+            val idx = (k / (cols - 1)) * cols + k % (cols - 1)
+            when(element_at(g, idx + 2) > element_at(g, idx + 1),
               lit(1L << k)).otherwise(0L)
           }.reduce(_ + _)
         }
       }
     }
+  }
+
+  /** The DuckDB twin of [[gridHash]] over relation `src` (`id`, hx),
+    * with hx the content's hex view: relation `out` (`id`, fp).
+    * Defines `<out>_0` and `<out>_1` on the way. */
+  private[graft] def gridHashSql(src: String, id: String, tag: String,
+                                 rows: Int, cols: Int, out: String): String = {
+    val cells = rows * cols
+    def cell(off: Int) =
+      s"g[CAST((k // ${cols - 1}) * $cols + (k % ${cols - 1}) + $off AS INT)]"
+    val byte = graft.dedup.Dedup.hexIntSql(s"substr(md5(scene || '|$tag' || " +
+      "CAST(i // 16 AS VARCHAR)), CAST((i % 16) * 2 + 1 AS INT), 2)", 1, 2)
+    s"""
+    |${out}_0 AS (SELECT $id, substr(hx, 7, 32) AS scene,
+    |    ${graft.dedup.Dedup.hexIntSql("hx", 39, 2)} % $cells AS p
+    |  FROM $src),
+    |${out}_1 AS (SELECT $id, list_transform(range(0, $cells), i ->
+    |      $byte + CASE WHEN i = p THEN 8 ELSE 0 END) AS g
+    |  FROM ${out}_0),
+    |$out AS (SELECT $id, CAST(list_sum(list_transform(range(0, ${rows * (cols - 1)}), k ->
+    |      CASE WHEN ${cell(2)} > ${cell(1)}
+    |      THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END)) AS BIGINT)
+    |    AS fp
+    |  FROM ${out}_1)""".stripMargin
+  }
 
   /** Frame sampling: view content as 4-byte frames, keep every
     * `step`-th; returns array<struct<frame_idx,frame_val>> for a

@@ -137,7 +137,7 @@ object MultimodalPack extends QueryPack {
     * text digests and embeddings don't cover: a re-encoded or resized
     * image changes every container byte (md5 misses it) but keeps the
     * pixel surface. 60-bit dHash over the decoded/normalized pixel
-    * grid ([[Multimodal.dhash]] — the FakeDecoder seam), then the
+    * grid ([[Multimodal.gridHash]] "px" — the FakeDecoder seam), then the
     * d04/d10 banded Hamming machinery verbatim
     * ([[graft.dedup.Dedup.hammingPairsBandedOf]], 5×12-bit bands,
     * maxDist 4): pigeonhole candidate join on band values, exact
@@ -196,7 +196,7 @@ object MultimodalPack extends QueryPack {
     * frames pair off one-to-one with a contiguous frame range of the
     * source. Composes the per-frame plumbing of mm02 with mm06's
     * perceptual machinery: dHash every decoded frame
-    * ([[Multimodal.dhash]] — the FakeDecoder seam), mine near-dup
+    * ([[Multimodal.gridHash]] "px" — the FakeDecoder seam), mine near-dup
     * FRAME pairs with the d04/d10 banded Hamming join
     * ([[graft.dedup.Dedup.hammingPairsBandedOf]]) over struct
     * (video, frame) keys, then roll frame matches up to video level
@@ -225,7 +225,7 @@ object MultimodalPack extends QueryPack {
     graft.core.Artifacts.memo(spark, s"video_unit_fps:$dir")(
       unitFps(videoFrames(spark, dir).select(col("video_id").as("item_id"),
           col("frame_idx").as("unit_idx"), col("content")),
-        Multimodal.dhash))
+        Multimodal.gridHash(_, "px", Multimodal.DhashGridRows, Multimodal.DhashGridCols)))
 
   /** (item, unit, digest, chroma fingerprint) — mm08's window pass. */
   private[graft] def audioUnitFps(spark: SparkSession,
@@ -233,7 +233,7 @@ object MultimodalPack extends QueryPack {
     graft.core.Artifacts.memo(spark, s"audio_unit_fps:$dir")(
       unitFps(audioWindows(spark, dir).select(col("audio_id").as("item_id"),
           col("window_idx").as("unit_idx"), col("content")),
-        Multimodal.chromaHash))
+        Multimodal.gridHash(_, "ch", Multimodal.ChromaBins, Multimodal.ChromaFrames)))
 
   /** (media_id, h, fp) — content digest and 60-bit dHash per
     * (media_id, content) row: the ONE media derivation. The session
@@ -247,7 +247,8 @@ object MultimodalPack extends QueryPack {
     media.repartition(media.sparkSession.sparkContext.defaultParallelism)
       .select(col("media_id"),
         md5(Multimodal.hexOf(col("content"))).as("h"),
-        Multimodal.dhash(col("content")).as("fp"))
+        Multimodal.gridHash(col("content"), "px", Multimodal.DhashGridRows,
+          Multimodal.DhashGridCols).as("fp"))
 
   /** [[mediaFpRowsOf]] over the mm06 scene fixture. */
   private[graft] def sceneFps(spark: SparkSession, dir: String): DataFrame =
@@ -390,7 +391,7 @@ object MultimodalPack extends QueryPack {
     * clip shares no container bytes and no overall length with its
     * source, but its decoded chroma windows pair off one-to-one with
     * a contiguous window range. Per-window chromaprint-style
-    * fingerprint ([[Multimodal.chromaHash]] — gradient signs over the
+    * fingerprint ([[Multimodal.gridHash]] "ch" — gradient signs over the
     * 12×6 chroma grid, the FakeDecoder seam), then the shared
     * [[clipContainmentFromUnits]] body: exact-collapse at the window level,
     * the banded Hamming join with the same-audio exclusion in-join,
@@ -520,39 +521,10 @@ object MultimodalPack extends QueryPack {
     |    md5(text) || md5(text || '1') || md5(text || '2') || md5(text || '3') AS hx
     |  FROM documents)""".stripMargin
 
-  private def byteAt(pos: Int): String =
-    s"CAST((strpos('0123456789abcdef', substr(hx, ${pos * 2 + 1}, 1)) - 1) * 16 + " +
-      s"(strpos('0123456789abcdef', substr(hx, ${pos * 2 + 2}, 1)) - 1) AS INT)"
-
   /** The mm06 scene-content hex for encoder tag `enc` (mirrors
     * [[Multimodal.sceneContent]]). */
   private def sceneHexSql(enc: String): String =
     s"substr(md5(text || '|h$enc'), 1, 6) || md5(text) || md5(text || '|n$enc')"
-
-  /** The dHash replay as a CTE FRAGMENT over an existing CTE `src`
-    * with columns (media_id, hx): luminance grid from the scene digest
-    * + one-pixel encoder perturbation, 60 gradient-sign bits — defines
-    * `<pfx>2(media_id, dhash)`. Shared by the s12 media-gate oracle
-    * (history and probe sides); mm06/mm07 keep their original inline
-    * statements (same expressions). */
-  private[graft] def dhashCtes(src: String, pfx: String): String = s"""
-    |${pfx}0 AS (SELECT media_id, substr(hx, 7, 32) AS scene,
-    |    ((strpos('0123456789abcdef', substr(hx, 39, 1)) - 1) * 16
-    |     + (strpos('0123456789abcdef', substr(hx, 40, 1)) - 1)) % 66 AS p
-    |  FROM $src),
-    |${pfx}1 AS (SELECT media_id, list_transform(range(0, 66), i ->
-    |      (strpos('0123456789abcdef', substr(md5(scene || '|px' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 1 AS INT), 1)) - 1) * 16
-    |    + (strpos('0123456789abcdef', substr(md5(scene || '|px' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 2 AS INT), 1)) - 1)
-    |    + CASE WHEN i = p THEN 8 ELSE 0 END) AS lum
-    |  FROM ${pfx}0),
-    |${pfx}2 AS (SELECT media_id, CAST(list_sum(list_transform(range(0, 60), k ->
-    |      CASE WHEN lum[CAST((k // 10) * 11 + (k % 10) + 2 AS INT)]
-    |             > lum[CAST((k // 10) * 11 + (k % 10) + 1 AS INT)]
-    |      THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END)) AS BIGINT)
-    |    AS dhash
-    |  FROM ${pfx}1)""".stripMargin
 
   /** The s12 fixture as a CTE — `gm(media_id, hx)`, mirroring
     * [[gateMedia]]. */
@@ -579,27 +551,12 @@ object MultimodalPack extends QueryPack {
     |  UNION ALL SELECT doc_id + 20000000, ${sceneHexSql("enc2")}
     |    FROM documents WHERE doc_id % 10 = 5),
     |rep AS (SELECT min(media_id) AS media_id FROM sm GROUP BY md5(hx)),
-    |s0 AS (SELECT sm.media_id, substr(hx, 7, 32) AS scene,
-    |    ((strpos('0123456789abcdef', substr(hx, 39, 1)) - 1) * 16
-    |     + (strpos('0123456789abcdef', substr(hx, 40, 1)) - 1)) % 66 AS p
-    |  FROM sm JOIN rep ON rep.media_id = sm.media_id),
-    |s1 AS (SELECT media_id, list_transform(range(0, 66), i ->
-    |      (strpos('0123456789abcdef', substr(md5(scene || '|px' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 1 AS INT), 1)) - 1) * 16
-    |    + (strpos('0123456789abcdef', substr(md5(scene || '|px' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 2 AS INT), 1)) - 1)
-    |    + CASE WHEN i = p THEN 8 ELSE 0 END) AS lum
-    |  FROM s0),
-    |s2 AS (SELECT media_id, CAST(list_sum(list_transform(range(0, 60), k ->
-    |      CASE WHEN lum[CAST((k // 10) * 11 + (k % 10) + 2 AS INT)]
-    |             > lum[CAST((k // 10) * 11 + (k % 10) + 1 AS INT)]
-    |      THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END)) AS BIGINT)
-    |    AS dhash
-    |  FROM s1)
+    |rs AS (SELECT sm.media_id, hx FROM sm JOIN rep ON rep.media_id = sm.media_id),
+    |${Multimodal.gridHashSql("rs", "media_id", "px", 6, 11, "s2")}
     |SELECT a.media_id AS a_id, b.media_id AS b_id,
-    |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
+    |  CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
     |FROM s2 a JOIN s2 b ON a.media_id < b.media_id
-    |WHERE bit_count(xor(a.dhash, b.dhash)) <= 4
+    |WHERE bit_count(xor(a.fp, b.fp)) <= 4
     |ORDER BY a_id, b_id""".stripMargin
 
   /** mm07 oracle: fixture, per-frame dHash (the mm06 luminance/
@@ -625,28 +582,14 @@ object MultimodalPack extends QueryPack {
     |  FROM vd),
     |nfr AS (SELECT vid, count(*) AS nf FROM vf GROUP BY vid),
     |rep AS (SELECT min(vid * 100 + fidx) AS cid FROM vf GROUP BY md5(hx)),
-    |s0 AS (SELECT vf.vid * 100 + vf.fidx AS cid, substr(hx, 7, 32) AS scene,
-    |    ((strpos('0123456789abcdef', substr(hx, 39, 1)) - 1) * 16
-    |     + (strpos('0123456789abcdef', substr(hx, 40, 1)) - 1)) % 66 AS p
+    |rs AS (SELECT vf.vid * 100 + vf.fidx AS cid, hx
     |  FROM vf JOIN rep ON rep.cid = vf.vid * 100 + vf.fidx),
-    |s1 AS (SELECT cid, list_transform(range(0, 66), i ->
-    |      (strpos('0123456789abcdef', substr(md5(scene || '|px' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 1 AS INT), 1)) - 1) * 16
-    |    + (strpos('0123456789abcdef', substr(md5(scene || '|px' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 2 AS INT), 1)) - 1)
-    |    + CASE WHEN i = p THEN 8 ELSE 0 END) AS lum
-    |  FROM s0),
-    |s2 AS (SELECT cid, CAST(list_sum(list_transform(range(0, 60), k ->
-    |      CASE WHEN lum[CAST((k // 10) * 11 + (k % 10) + 2 AS INT)]
-    |             > lum[CAST((k // 10) * 11 + (k % 10) + 1 AS INT)]
-    |      THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END)) AS BIGINT)
-    |    AS dhash
-    |  FROM s1),
+    |${Multimodal.gridHashSql("rs", "cid", "px", 6, 11, "s2")},
     |pr AS (SELECT a.cid // 100 AS a_vid, a.cid % 100 AS fa,
     |    b.cid // 100 AS b_vid, b.cid % 100 AS fb,
-    |    CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
+    |    CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
     |  FROM s2 a JOIN s2 b ON a.cid < b.cid
-    |  WHERE bit_count(xor(a.dhash, b.dhash)) <= 4),
+    |  WHERE bit_count(xor(a.fp, b.fp)) <= 4),
     |grp AS (SELECT a_vid, b_vid, fa - fb AS frame_offset,
     |    count(*) AS n_matched, max(hamming) AS max_hamming
     |  FROM pr WHERE a_vid <> b_vid GROUP BY 1, 2, 3)
@@ -679,23 +622,9 @@ object MultimodalPack extends QueryPack {
     |  FROM ad),
     |nwr AS (SELECT aid, count(*) AS nw FROM aw GROUP BY aid),
     |arep AS (SELECT min(aid * 100 + widx) AS cid FROM aw GROUP BY md5(hx)),
-    |as0 AS (SELECT aw.aid * 100 + aw.widx AS cid, substr(hx, 7, 32) AS scene,
-    |    ((strpos('0123456789abcdef', substr(hx, 39, 1)) - 1) * 16
-    |     + (strpos('0123456789abcdef', substr(hx, 40, 1)) - 1)) % 72 AS p
+    |ars AS (SELECT aw.aid * 100 + aw.widx AS cid, hx
     |  FROM aw JOIN arep ON arep.cid = aw.aid * 100 + aw.widx),
-    |as1 AS (SELECT cid, list_transform(range(0, 72), i ->
-    |      (strpos('0123456789abcdef', substr(md5(scene || '|ch' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 1 AS INT), 1)) - 1) * 16
-    |    + (strpos('0123456789abcdef', substr(md5(scene || '|ch' || CAST(i // 16 AS VARCHAR)),
-    |         CAST((i % 16) * 2 + 2 AS INT), 1)) - 1)
-    |    + CASE WHEN i = p THEN 8 ELSE 0 END) AS en
-    |  FROM as0),
-    |as2 AS (SELECT cid, CAST(list_sum(list_transform(range(0, 60), k ->
-    |      CASE WHEN en[CAST((k // 5) * 6 + (k % 5) + 2 AS INT)]
-    |             > en[CAST((k // 5) * 6 + (k % 5) + 1 AS INT)]
-    |      THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END)) AS BIGINT)
-    |    AS fp
-    |  FROM as1),
+    |${Multimodal.gridHashSql("ars", "cid", "ch", 12, 6, "as2")},
     |apr AS (SELECT a.cid // 100 AS a_aid, a.cid % 100 AS wa,
     |    b.cid // 100 AS b_aid, b.cid % 100 AS wb,
     |    CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
@@ -717,19 +646,16 @@ object MultimodalPack extends QueryPack {
     "mm01_decode_meta" -> s"""
       |WITH $hexCte
       |SELECT media_id,
-      |  CAST(16 + ${byteAt(0)} % 240 AS BIGINT) AS width,
-      |  CAST(16 + ${byteAt(1)} % 240 AS BIGINT) AS height,
-      |  ['jpeg', 'png', 'webp'][${byteAt(2)} % 3 + 1] AS format,
+      |  CAST(16 + ${graft.dedup.Dedup.hexIntSql("hx", 1, 2)} % 240 AS BIGINT) AS width,
+      |  CAST(16 + ${graft.dedup.Dedup.hexIntSql("hx", 3, 2)} % 240 AS BIGINT) AS height,
+      |  ['jpeg', 'png', 'webp'][${graft.dedup.Dedup.hexIntSql("hx", 5, 2)} % 3 + 1] AS format,
       |  CAST(length(hx) // 2 AS BIGINT) AS n_bytes
       |FROM h ORDER BY media_id""".stripMargin,
     "mm02_frames" -> s"""
       |WITH $hexCte,
       |f AS (SELECT media_id, unnest(range(0, length(hx) // 8, 3)) AS frame_idx, hx FROM h)
       |SELECT media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-      |  CAST((strpos('0123456789abcdef', substr(hx, CAST(frame_idx * 8 + 1 AS INT), 1)) - 1) * 4096
-      |     + (strpos('0123456789abcdef', substr(hx, CAST(frame_idx * 8 + 2 AS INT), 1)) - 1) * 256
-      |     + (strpos('0123456789abcdef', substr(hx, CAST(frame_idx * 8 + 3 AS INT), 1)) - 1) * 16
-      |     + (strpos('0123456789abcdef', substr(hx, CAST(frame_idx * 8 + 4 AS INT), 1)) - 1) AS BIGINT) AS frame_val
+      |  ${graft.dedup.Dedup.hexIntSql("substr(hx, CAST(frame_idx * 8 + 1 AS INT), 4)", 1, 4)} AS frame_val
       |FROM f ORDER BY media_id, frame_idx""".stripMargin,
     "mm03_resized" -> s"""
       |WITH $hexCte

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StringType
 
 import graft.QueryPack
 import graft.metrics.Evaluation
+import graft.text.TextOps
 
 /** Oracle-checked golden-vector queries for the normalizer surface
   * (SURVEY.md §2.8). Each query builds the same inline VALUES relation
@@ -550,8 +551,7 @@ object NormalizePack extends QueryPack {
       | END AS composite
       |FROM j ORDER BY id""".stripMargin,
     "n13_query_expansion" -> s"""
-      |WITH w AS (SELECT doc_id, text, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM documents),
+      |WITH w AS (SELECT doc_id, text, ${TextOps.wordsSql("text")} AS words FROM documents),
       |s AS (SELECT doc_id, text,
       |  list_filter(list_transform(words, x -> CASE
       |    ${synonymMap.toSeq.sortBy(_._1).map { case (k, v) =>

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.QueryPack
+import graft.dedup.Dedup
+import graft.text.{TextAnalysis, TextOps}
 
 /** The flagship lifecycle (§3.2: split → train-index kNN → report)
   * under the oracle gate end-to-end — the whole pipeline, including
@@ -45,25 +47,19 @@ object PipelinePack extends QueryPack {
     |p1 AS (SELECT qid, CAST(tlabel AS VARCHAR) AS t, CAST(nlabel AS VARCHAR) AS p
     |       FROM r WHERE rnk = 1)""".stripMargin
 
+  /** p02's 16-bit md5-prefix hash, kept inline: p02's oracle text is
+    * byte-frozen (its DuckDB replay needs more memory than a 15 GiB
+    * box has, so no oracle run can check a change to it), and
+    * [[graft.dedup.Dedup.hexIntSql]] renders the nibble sum
+    * differently. */
   private def hv16(e: String): String = {
     def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
     s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
   }
 
-  private val stopList = graft.text.TextAnalysis.Profiles
-    .flatMap(_._2).map(w => s"'$w'").mkString(", ")
-
-  /** words + 3-gram hashed shingle relation over a named doc CTE. */
-  private def shingleOver(tbl: String, w: String, sh: String,
-                          hsh: String): String = s"""
-    |$w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM $tbl),
-    |$sh AS (SELECT DISTINCT doc_id AS id, s AS sh
-    |  FROM (SELECT doc_id, unnest(CASE WHEN len(words) >= 3
-    |    THEN list_transform(range(1, len(words) - 1),
-    |         i -> array_to_string(words[i:i+2], ' '))
-    |    ELSE [] END) AS s FROM $w)),
-    |$hsh AS (SELECT DISTINCT id, ${graft.dedup.DedupPack.hv60("sh")} AS sh FROM $sh)""".stripMargin
+  /** p02's quality score over its qm columns. */
+  private val qmQuality =
+    TextAnalysis.qualitySql("n", "stop_n", "punct", "length(text)")
 
   /** p02: the whole corpus-prep funnel replayed in SQL — quality cut,
     * median-budget per-language quality cap (the a20 stage: the
@@ -87,23 +83,16 @@ object PipelinePack extends QueryPack {
     |  UNION ALL SELECT doc_id + 100000, lang, regexp_replace(text, '^\\S+\\s*', ''), source
     |    FROM documents WHERE doc_id < 100
     |  UNION ALL SELECT doc_id + 200000, lang, text, source FROM documents WHERE doc_id < 50),
-    |aw AS (SELECT doc_id, lang, text, source, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
+    |aw AS (SELECT doc_id, lang, text, source, ${TextOps.wordsSql("text")} AS words FROM aug),
     |qm AS (SELECT doc_id, lang, text, source, len(words) AS n,
     |  len(list_distinct(words)) AS d,
-    |  len(list_filter(words, x -> x IN ($stopList))) AS stop_n,
-    |  length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS punct
+    |  ${TextAnalysis.stopCountSql("words")} AS stop_n,
+    |  ${TextAnalysis.punctCharsSql("text")} AS punct
     | FROM aw),
     |q1 AS MATERIALIZED (SELECT doc_id, lang, text, source,
-    |   round(0.4 * (CASE WHEN n > 0 THEN CAST(stop_n AS DOUBLE) / CAST(n AS DOUBLE) ELSE 0.0 END)
-    |      + 0.3 * (1.0 - (CASE WHEN length(text) > 0
-    |          THEN CAST(punct AS DOUBLE) / CAST(length(text) AS DOUBLE) ELSE 0.0 END))
-    |      + 0.3 * least(1.0, CAST(n AS DOUBLE) / 100.0), 6) AS q
+    |   round($qmQuality, 6) AS q
     | FROM qm
-    | WHERE (0.4 * (CASE WHEN n > 0 THEN CAST(stop_n AS DOUBLE) / CAST(n AS DOUBLE) ELSE 0.0 END)
-    |      + 0.3 * (1.0 - (CASE WHEN length(text) > 0
-    |          THEN CAST(punct AS DOUBLE) / CAST(length(text) AS DOUBLE) ELSE 0.0 END))
-    |      + 0.3 * least(1.0, CAST(n AS DOUBLE) / 100.0)) >= ${Lifecycles.QualityCut}
+    | WHERE ($qmQuality) >= ${Lifecycles.QualityCut}
     |   AND (1.0 - CAST(d AS DOUBLE) / CAST(n AS DOUBLE)) <= ${Lifecycles.DupFracCut}),
     |lc AS (SELECT lang, count(*) AS cnt FROM q1 GROUP BY lang),
     |med AS (SELECT cnt AS cap FROM
@@ -117,7 +106,7 @@ object PipelinePack extends QueryPack {
     |exk AS (SELECT md5(text) AS h, min(doc_id) AS k FROM qc GROUP BY md5(text)),
     |ex AS (SELECT qc.doc_id, qc.text, qc.source FROM qc
     |  JOIN exk ON md5(qc.text) = exk.h AND qc.doc_id = exk.k),
-    |${shingleOver("ex", "ew", "esh", "ehsh")},
+    |${Dedup.hashedShingleRowsSql("ex", "ew", "esh", "ehsh")},
     |erare AS (SELECT sh AS rsh FROM (SELECT sh, count(*) AS df_ FROM ehsh GROUP BY sh)
     |  WHERE df_ <= 20),
     |ehshf AS (SELECT id, sh FROM ehsh JOIN erare ON ehsh.sh = erare.rsh),
@@ -139,7 +128,7 @@ object PipelinePack extends QueryPack {
     |sp AS (SELECT doc_id,
     |  CASE WHEN substr(md5('42' || CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
     |    THEN 'train' ELSE 'test' END AS split FROM nr),
-    |${shingleOver("nr", "nw", "nsh", "nhsh")},
+    |${Dedup.hashedShingleRowsSql("nr", "nw", "nsh", "nhsh")},
     |trh AS (SELECT h.id, h.sh FROM nhsh h JOIN sp ON sp.doc_id = h.id
     |  WHERE sp.split = 'train'),
     |teh AS (SELECT DISTINCT h.sh FROM nhsh h JOIN sp ON sp.doc_id = h.id
@@ -185,17 +174,10 @@ object PipelinePack extends QueryPack {
     * quality expression mirrors a02/s07. */
   private val corpusReportSql = s"""
     |WITH ${graft.dedup.DedupPack.augmentedSql},
-    |w2 AS (SELECT doc_id, text, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
+    |w2 AS (SELECT doc_id, text, ${TextOps.wordsSql("text")} AS words FROM aug),
     |j AS (SELECT d.source, w2.doc_id, md5(w2.text) AS h,
     |    len(w2.words) AS nw,
-    |    CAST(round(0.4 * (CASE WHEN len(w2.words) > 0
-    |        THEN CAST(len(list_filter(w2.words, x -> x IN ($stopList))) AS DOUBLE)
-    |          / CAST(len(w2.words) AS DOUBLE) ELSE 0.0 END)
-    |      + 0.3 * (1.0 - (CASE WHEN length(w2.text) > 0
-    |        THEN CAST(length(regexp_replace(w2.text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-    |          / CAST(length(w2.text) AS DOUBLE) ELSE 0.0 END))
-    |      + 0.3 * least(1.0, CAST(len(w2.words) AS DOUBLE) / 100.0), 6)
+    |    CAST(round(${TextAnalysis.qualityOfSql("w2.words", "w2.text")}, 6)
     |      AS DECIMAL(18,6)) AS q
     |  FROM w2 JOIN documents d ON d.doc_id = w2.doc_id % 100000),
     |g AS (SELECT source, count(*) AS n_docs, sum(nw) AS n_words,
@@ -234,16 +216,9 @@ object PipelinePack extends QueryPack {
     |  UNION ALL SELECT doc_id + 100000, regexp_replace(text, '^\\S+\\s*', '')
     |    FROM documents WHERE doc_id < 100
     |  UNION ALL SELECT doc_id + 200000, text FROM documents WHERE doc_id < 50),
-    |faw AS (SELECT doc_id, text, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
+    |faw AS (SELECT doc_id, text, ${TextOps.wordsSql("text")} AS words FROM aug),
     |fm AS (SELECT
-    |    round(0.4 * (CASE WHEN len(words) > 0
-    |        THEN CAST(len(list_filter(words, x -> x IN ($stopList))) AS DOUBLE)
-    |          / CAST(len(words) AS DOUBLE) ELSE 0.0 END)
-    |      + 0.3 * (1.0 - (CASE WHEN length(text) > 0
-    |        THEN CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-    |          / CAST(length(text) AS DOUBLE) ELSE 0.0 END))
-    |      + 0.3 * least(1.0, CAST(len(words) AS DOUBLE) / 100.0), 6) AS quality,
+    |    round(${TextAnalysis.qualityOfSql("words", "text")}, 6) AS quality,
     |    CASE WHEN len(words) > 0 THEN round(1.0 -
     |        CAST(len(list_distinct(words)) AS DOUBLE)
     |          / CAST(len(words) AS DOUBLE), 6)

@@ -502,7 +502,7 @@ object RelationalPack extends QueryPack {
     "r14_kmv_distinct" -> s"""
       |WITH d AS (SELECT DISTINCT l_returnflag, l_orderkey FROM lineitem),
       |h AS (SELECT l_returnflag, l_orderkey,
-      |        ${graft.dedup.DedupPack.hv60("CAST(l_orderkey AS VARCHAR)")} AS h
+      |        ${graft.dedup.Dedup.hexIntSql("md5(CAST(l_orderkey AS VARCHAR))", 1, 15)} AS h
       |      FROM d),
       |r AS (SELECT l_returnflag, h, row_number() OVER (
       |        PARTITION BY l_returnflag ORDER BY h, l_orderkey) AS rn

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
+import graft.dedup.Dedup
+import graft.text.{TextAnalysis, TextOps}
 
 /** Batch-side oracle checks for the streaming transforms: the same
   * functions run in the streaming specs; DuckDB verifies the event-
@@ -218,44 +220,19 @@ object StreamPack extends QueryPack {
     "s05_dedup_keys" -> dedupKeys,
     "s06_attribution_join" -> attribution)
 
-  private def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
-  private val stopAll = graft.text.TextAnalysis.Profiles.flatMap(_._2)
-
   /** The s09 gate's decision relation as a CTE chain ending in
     * `dec(doc_id, status, best_hist_id, best_jaccard)` — shared by
-    * the s09 oracle (selects it) and the s10 run-summary oracle
-    * (aggregates it). */
+    * the s09 oracle (selects it) and the s10/s11 run-summary oracles
+    * (aggregate it). The digest is the gate's: null text ≡ "". */
   private val gateDecisionCtes: String = s"""
     |${graft.dedup.DedupPack.augmentedSql},
-    |${graft.dedup.DedupPack.shingleSql},
-    |${graft.dedup.DedupPack.hashedShingleSql},
+    |${Dedup.hashedShingleRowsSql("aug", "w", "sh", "hsh")},
     |${graft.dedup.DedupPack.minhashBandsSql},
-    |hd AS (SELECT DISTINCT md5(text) AS h FROM aug WHERE doc_id < 300),
-    |b AS (SELECT doc_id, md5(text) AS h FROM aug WHERE doc_id >= 300),
-    |fb AS (SELECT h, min(doc_id) AS first_id FROM b GROUP BY h),
-    |ex AS (SELECT b.doc_id,
-    |    CASE WHEN hd.h IS NOT NULL THEN 'dup_of_history'
-    |         WHEN b.doc_id <> fb.first_id THEN 'dup_in_batch'
-    |         ELSE 'exact_new' END AS ex_status
-    |  FROM b JOIN fb ON fb.h = b.h LEFT JOIN hd ON hd.h = b.h),
+    |hq AS (SELECT doc_id, text FROM aug WHERE doc_id < 300),
+    |bq AS (SELECT doc_id, text FROM aug WHERE doc_id >= 300),
+    |${Dedup.digestScreenSql("hq", "bq", "doc_id", "md5(coalesce(text, ''))", "ex")},
     |sv AS (SELECT doc_id FROM ex WHERE ex_status = 'exact_new'),
-    |cand AS (SELECT DISTINCT bb.id AS doc_id, hh.id AS hist_id
-    |  FROM bands bb JOIN bands hh ON bb.band = hh.band AND bb.bandsig = hh.bandsig
-    |  JOIN sv ON sv.doc_id = bb.id
-    |  WHERE hh.id < 300),
-    |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
-    |iv AS (SELECT c.doc_id, c.hist_id, count(*) AS inter
-    |  FROM cand c JOIN hsh a ON a.id = c.doc_id
-    |  JOIN hsh h2 ON h2.id = c.hist_id AND h2.sh = a.sh
-    |  GROUP BY 1, 2),
-    |jc AS (SELECT c.doc_id, c.hist_id,
-    |    CAST(coalesce(iv.inter, 0) AS DOUBLE)
-    |      / CAST(sa.n + sb.n - coalesce(iv.inter, 0) AS DOUBLE) AS jac
-    |  FROM cand c LEFT JOIN iv ON iv.doc_id = c.doc_id AND iv.hist_id = c.hist_id
-    |  JOIN sizes sa ON sa.id = c.doc_id JOIN sizes sb ON sb.id = c.hist_id),
-    |bst AS (SELECT doc_id, hist_id, jac,
-    |    row_number() OVER (PARTITION BY doc_id ORDER BY jac DESC, hist_id) AS rn
-    |  FROM jc),
+    |${graft.dedup.DedupPack.minhashBestMatchSql("bands", "hsh", "sv", "hq", "mb")},
     |dec AS (SELECT ex.doc_id,
     |  CASE WHEN ex.ex_status <> 'exact_new' THEN ex.ex_status
     |       WHEN coalesce(b2.jac, 0.0) >= 0.5 THEN 'near_dup_of_history'
@@ -264,51 +241,38 @@ object StreamPack extends QueryPack {
     |       ELSE coalesce(b2.hist_id, -1) END AS BIGINT) AS best_hist_id,
     |  CASE WHEN ex.ex_status <> 'exact_new' THEN 0.0
     |       ELSE round(coalesce(b2.jac, 0.0), 6) END AS best_jaccard
-    |FROM ex LEFT JOIN bst b2 ON b2.doc_id = ex.doc_id AND b2.rn = 1)"""
+    |FROM ex LEFT JOIN mb b2 ON b2.doc_id = ex.doc_id)"""
     .stripMargin
 
   /** The s07 per-doc quality relation `q(doc_id, content_hash,
     * quality)` over `aug` — shared by the s07 oracle and the s10
     * summary's quality quartiles. */
   private val qualityCtes: String = s"""
-    |qw AS (SELECT doc_id, text, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM aug),
+    |qw AS (SELECT doc_id, text, ${TextOps.wordsSql("text")} AS words FROM aug),
     |q AS (SELECT doc_id, md5(text) AS content_hash,
-    |  round(0.4 * (CASE WHEN len(words) > 0
-    |      THEN CAST(len(list_filter(words, x -> x IN (${inList(stopAll)}))) AS DOUBLE)
-    |        / CAST(len(words) AS DOUBLE) ELSE 0.0 END)
-    |    + 0.3 * (1.0 - (CASE WHEN length(text) > 0
-    |      THEN CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-    |        / CAST(length(text) AS DOUBLE) ELSE 0.0 END))
-    |    + 0.3 * least(1.0, CAST(len(words) AS DOUBLE) / 100.0), 6) AS quality
+    |  round(${TextAnalysis.qualityOfSql("words", "text")}, 6) AS quality
     |  FROM qw)""".stripMargin
 
   /** s12 oracle: fixture, exact digest screen, dHash replay of the
     * history side and the digest-new batch side (the shared
-    * [[graft.multimodal.MultimodalPack.dhashCtes]] fragment), then
+    * [[graft.multimodal.Multimodal.gridHashSql]] fragment), then
     * the ALL-PAIRS popcount probe — bounded at oracle scale and
     * pair-for-pair identical to the engine's banded probe by the
     * pigeonhole argument (the mm06/d10 oracle pattern) — with best =
     * min (hamming, hist_id). */
   private val mediaGateSql: String = {
-    import graft.multimodal.MultimodalPack
+    import graft.multimodal.{Multimodal, MultimodalPack}
     s"""
     |WITH ${MultimodalPack.gateMediaSql},
     |ghist AS (SELECT media_id, hx FROM gm WHERE media_id < 300),
-    |gbat AS (SELECT media_id, hx, md5(hx) AS h FROM gm WHERE media_id >= 300),
-    |ghd AS (SELECT DISTINCT md5(hx) AS h FROM ghist),
-    |gfb AS (SELECT h, min(media_id) AS first_id FROM gbat GROUP BY h),
-    |gex AS (SELECT gbat.media_id, gbat.hx,
-    |    CASE WHEN ghd.h IS NOT NULL THEN 'dup_of_history'
-    |         WHEN gbat.media_id <> gfb.first_id THEN 'dup_in_batch'
-    |         ELSE 'exact_new' END AS ex_status
-    |  FROM gbat JOIN gfb ON gfb.h = gbat.h LEFT JOIN ghd ON ghd.h = gbat.h),
+    |gbat AS (SELECT media_id, hx FROM gm WHERE media_id >= 300),
+    |${Dedup.digestScreenSql("ghist", "gbat", "media_id", "md5(hx)", "gex")},
     |gsv AS (SELECT media_id, hx FROM gex WHERE ex_status = 'exact_new'),
-    |${MultimodalPack.dhashCtes("ghist", "gh")},
-    |${MultimodalPack.dhashCtes("gsv", "gb")},
+    |${Multimodal.gridHashSql("ghist", "media_id", "px", 6, 11, "gh")},
+    |${Multimodal.gridHashSql("gsv", "media_id", "px", 6, 11, "gb")},
     |gpr AS (SELECT b.media_id, h.media_id AS hist_id,
-    |    CAST(bit_count(xor(b.dhash, h.dhash)) AS BIGINT) AS hamming
-    |  FROM gb2 b JOIN gh2 h ON bit_count(xor(b.dhash, h.dhash)) <= 4),
+    |    CAST(bit_count(xor(b.fp, h.fp)) AS BIGINT) AS hamming
+    |  FROM gb b JOIN gh h ON bit_count(xor(b.fp, h.fp)) <= 4),
     |gbst AS (SELECT media_id, hist_id, hamming FROM (
     |    SELECT media_id, hist_id, hamming, row_number() OVER (
     |      PARTITION BY media_id ORDER BY hamming, hist_id) AS rn

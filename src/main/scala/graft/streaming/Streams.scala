@@ -580,7 +580,7 @@ object Streams {
     * .mediaGateWithState]] — exact content digest first (a byte-
     * identical re-upload reads dup_of_history / dup_in_batch), then
     * the 60-bit perceptual dHash ([[graft.multimodal.Multimodal
-    * .dhash]], the FakeDecoder seam) probed against HISTORY
+    * .gridHash]] "px", the FakeDecoder seam) probed against HISTORY
     * fingerprint state through the banded Hamming join
     * ([[graft.dedup.Dedup.hammingProbeBanded]]): a streamed image that
     * is a RE-ENCODE or RESIZE of any historical image — every

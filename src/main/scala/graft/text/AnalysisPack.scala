@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
+import graft.dedup.Dedup
 
 /** Oracle-checked text-analysis queries: language ID, quality
   * scoring, rolling-hash fingerprints over `documents`. */
@@ -800,13 +801,10 @@ object AnalysisPack extends QueryPack {
     "a08_unigram_logprob" -> unigramLogprob,
     "a09_gopher_repetition" -> gopherRepetition)
 
-  private def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
   private val profiles = TextAnalysis.Profiles
-  private val stopAll = profiles.flatMap(_._2)
 
-  private val wordsCte = """
-    |w AS (SELECT doc_id, text, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\s+') END AS words
+  private val wordsCte = s"""
+    |w AS (SELECT doc_id, text, ${TextOps.wordsSql("text")} AS words
     |  FROM documents)""".stripMargin
 
   /** The planted-lines derivation (`l1` = doc_id, lines) shared by the
@@ -830,30 +828,14 @@ object AnalysisPack extends QueryPack {
 
   /** SQL replay of a02's quality score over relation `rel` (doc_id,
     * text, plus any comma-free `carry` column passed through) — CTEs
-    * qw/qq/qs with qs = (doc_id[, carry], quality). Shared by the
-    * a16 and d18 oracles so the formula cannot fork. Interpolated
-    * into strings that stripMargin AFTER interpolation — no content
-    * line may start with a margin character. */
+    * qw/qs with qs = (doc_id[, carry], quality). Shared by the a16, a20
+    * and d18 oracles; the formula is [[TextAnalysis.qualityOfSql]]'s. */
   private[graft] def qualityCtes(rel: String, carry: String = ""): String = {
     val c = if (carry.isEmpty) "" else s"$carry, "
-    s"""qw AS (SELECT doc_id, ${c}text, CASE WHEN length(trim(text)) = 0 THEN []
-    |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM $rel),
-    |qq AS (SELECT doc_id, $c
-    |  length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS punct_chars,
-    |  length(text) AS tl, len(words) AS n,
-    |  len(list_filter(words, x -> x IN (${inList(stopAll)}))) AS stop_n
-    | FROM qw),
+    s"""qw AS (SELECT doc_id, ${c}text, ${TextOps.wordsSql("text")} AS words FROM $rel),
     |qs AS (SELECT doc_id, $c
-    |  round(0.4 * (CASE WHEN n > 0 THEN CAST(stop_n AS DOUBLE) / CAST(n AS DOUBLE) ELSE 0.0 END)
-    |      + 0.3 * (1.0 - (CASE WHEN tl > 0
-    |          THEN CAST(punct_chars AS DOUBLE) / CAST(tl AS DOUBLE) ELSE 0.0 END))
-    |      + 0.3 * least(1.0, CAST(n AS DOUBLE) / 100.0), 6) AS quality
-    |  FROM qq)""".stripMargin
-  }
-
-  private def hv(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
+    |  round(${TextAnalysis.qualityOfSql("words", "text")}, 6) AS quality
+    |  FROM qw)""".stripMargin
   }
 
   /** The per-doc mean-NLL chain (`b`) shared by the a08/a11 oracles —
@@ -899,9 +881,8 @@ object AnalysisPack extends QueryPack {
       |FROM documents d LEFT JOIN p ON p.doc_id = d.doc_id
       |ORDER BY d.doc_id""".stripMargin,
     "a18_source_overlap" -> s"""
-      |WITH w AS (SELECT source, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM documents),
-      |sh AS (SELECT DISTINCT source, ${graft.dedup.DedupPack.hv60("s")} AS sh
+      |WITH w AS (SELECT source, ${TextOps.wordsSql("text")} AS words FROM documents),
+      |sh AS (SELECT DISTINCT source, ${Dedup.hexIntSql("md5(s)", 1, 15)} AS sh
       |  FROM (SELECT source, unnest(CASE WHEN len(words) >= 3
       |    THEN list_transform(range(1, len(words) - 1),
       |         i -> array_to_string(words[i:i+2], ' '))
@@ -923,9 +904,8 @@ object AnalysisPack extends QueryPack {
       |FROM g LEFT JOIN cm ON cm.source_a = g.source_a AND cm.source_b = g.source_b
       |ORDER BY g.source_a, g.source_b""".stripMargin,
     "a19_source_drift" -> s"""
-      |WITH tk AS (SELECT source, ${graft.dedup.DedupPack.hv60("wd")} % $DriftBuckets AS b
-      |  FROM (SELECT source, unnest(CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END) AS wd FROM documents)),
+      |WITH tk AS (SELECT source, ${Dedup.hexIntSql("md5(wd)", 1, 15)} % $DriftBuckets AS b
+      |  FROM (SELECT source, unnest(${TextOps.wordsSql("text")}) AS wd FROM documents)),
       |j AS (SELECT source, b, count(*) AS c FROM tk GROUP BY 1, 2),
       |ts AS (SELECT source, count(*) AS t_s FROM tk GROUP BY 1),
       |cb AS (SELECT b, count(*) AS c_b FROM tk GROUP BY 1),
@@ -958,9 +938,8 @@ object AnalysisPack extends QueryPack {
       |  FROM qs)
       |SELECT doc_id, lang, quality, CAST(rk AS BIGINT) AS rk
       |FROM r WHERE rk <= 50 ORDER BY lang, rk""".stripMargin,
-    "a15_heavy_hitters" -> """
-      |WITH w AS (SELECT CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\s+') END AS words FROM documents),
+    "a15_heavy_hitters" -> s"""
+      |WITH w AS (SELECT ${TextOps.wordsSql("text")} AS words FROM documents),
       |t AS (SELECT unnest(words) AS word FROM w),
       |c AS (SELECT word, count(*) AS est_count FROM t GROUP BY word),
       |r AS (SELECT word, est_count,
@@ -968,9 +947,8 @@ object AnalysisPack extends QueryPack {
       |SELECT CAST(rank AS BIGINT) AS rank, word, CAST(est_count AS BIGINT) AS est_count
       |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
     "a10_dsir_resample" -> s"""
-      |WITH w AS (SELECT doc_id, source, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words FROM documents),
-      |bg AS (SELECT doc_id, source, ${graft.dedup.DedupPack.hv60("s")} % 1024 AS bucket
+      |WITH w AS (SELECT doc_id, source, ${TextOps.wordsSql("text")} AS words FROM documents),
+      |bg AS (SELECT doc_id, source, ${Dedup.hexIntSql("md5(s)", 1, 15)} % 1024 AS bucket
       |  FROM (SELECT doc_id, source, unnest(CASE WHEN len(words) >= 2
       |    THEN list_transform(range(1, len(words)),
       |         i -> array_to_string(words[i:i+1], ' '))
@@ -992,7 +970,7 @@ object AnalysisPack extends QueryPack {
       |    CAST(coalesce(sc.n_feats, 0) AS BIGINT) AS n_feats,
       |    coalesce(sc.logw, 0.0) AS logw,
       |    round(coalesce(sc.logw, 0.0)
-      |      + (-ln(-ln((${hv("'dsir_' || CAST(d.doc_id AS VARCHAR)")} + 0.5) / 65536.0))), 6) AS score
+      |      + (-ln(-ln((${Dedup.hexIntSql("md5('dsir_' || CAST(d.doc_id AS VARCHAR))", 1, 4)} + 0.5) / 65536.0))), 6) AS score
       |  FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
       |  WHERE d.source <> 'src0'),
       |r AS (SELECT doc_id, n_feats, logw, score,
@@ -1004,7 +982,7 @@ object AnalysisPack extends QueryPack {
       |WITH $wordsCte,
       |s AS (SELECT doc_id,
       |  ${profiles.map { case (n, p) =>
-             s"len(list_filter(words, x -> x IN (${inList(p)}))) AS s_$n"
+             s"${TextAnalysis.profileScoreSql("words", p)} AS s_$n"
            }.mkString(",\n  ")}
       | FROM w)
       |SELECT doc_id,
@@ -1015,26 +993,17 @@ object AnalysisPack extends QueryPack {
       | CAST(greatest(${profiles.map("s_" + _._1).mkString(", ")}) AS BIGINT) AS score
       |FROM s ORDER BY doc_id""".stripMargin,
     "a02_quality" -> s"""
-      |WITH $wordsCte,
-      |q AS (SELECT doc_id, text, words,
-      |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha_chars,
-      |  length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS punct_chars,
-      |  length(regexp_replace(text, '[^0-9]', '', 'g')) AS digit_chars,
-      |  len(words) AS n,
-      |  len(list_filter(words, x -> x IN (${inList(stopAll)}))) AS stop_n
-      | FROM w)
-      |SELECT doc_id, CAST(alpha_chars AS BIGINT) AS alpha_chars,
-      |  CAST(punct_chars AS BIGINT) AS punct_chars,
-      |  CAST(digit_chars AS BIGINT) AS digit_chars,
-      |  round(0.4 * (CASE WHEN n > 0 THEN CAST(stop_n AS DOUBLE) / CAST(n AS DOUBLE) ELSE 0.0 END)
-      |      + 0.3 * (1.0 - (CASE WHEN length(text) > 0
-      |          THEN CAST(punct_chars AS DOUBLE) / CAST(length(text) AS DOUBLE) ELSE 0.0 END))
-      |      + 0.3 * least(1.0, CAST(n AS DOUBLE) / 100.0), 6) AS quality
-      |FROM q ORDER BY doc_id""".stripMargin,
+      |WITH $wordsCte
+      |SELECT doc_id,
+      |  CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS alpha_chars,
+      |  CAST(${TextAnalysis.punctCharsSql("text")} AS BIGINT) AS punct_chars,
+      |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS digit_chars,
+      |  round(${TextAnalysis.qualityOfSql("words", "text")}, 6) AS quality
+      |FROM w ORDER BY doc_id""".stripMargin,
     "a03_fingerprint" -> s"""
       |WITH $wordsCte
       |SELECT doc_id,
-      |  list_reduce([CAST(0 AS BIGINT)] || list_transform(words, x -> CAST(${hv("x")} AS BIGINT)),
+      |  list_reduce([CAST(0 AS BIGINT)] || list_transform(words, x -> ${Dedup.hexIntSql("md5(x)", 1, 4)}),
       |    (acc, v) -> (acc * 31 + v) % 2147483647) AS fingerprint
       |FROM w ORDER BY doc_id""".stripMargin,
     "a04_repetition" -> s"""
@@ -1118,7 +1087,7 @@ object AnalysisPack extends QueryPack {
       |    CAST(floor(rate * 65536) AS BIGINT) AS thresh16 FROM r),
       |s AS (SELECT d.source, count(*) AS n_sampled
       |  FROM documents d JOIN rr ON rr.source = d.source
-      |  WHERE ${hv("'7' || CAST(doc_id AS VARCHAR)")} < rr.thresh16
+      |  WHERE ${Dedup.hexIntSql("md5('7' || CAST(doc_id AS VARCHAR))", 1, 4)} < rr.thresh16
       |  GROUP BY d.source)
       |SELECT rr.source, CAST(rr.n_docs AS BIGINT) AS n_docs, rr.tok_sum,
       |  round(rr.rate, 6) AS rate, rr.thresh16,

@@ -28,6 +28,11 @@ object TextAnalysis {
     aggregate(words, lit(0),
       (acc, w) => acc + when(w.isin(profile: _*), 1).otherwise(0))
 
+  /** The DuckDB twin of [[profileScore]] over the word-list expression
+    * `words`. */
+  private[graft] def profileScoreSql(words: String, profile: Seq[String]): String =
+    s"len(list_filter($words, x -> x IN (${profile.map(w => s"'$w'").mkString(", ")})))"
+
   /** N-gram/stopword-heuristic language ID: (detected, score).
     * Ties break toward the earlier profile — encode the same CASE
     * order in any oracle. Hit counts come from the native
@@ -71,7 +76,7 @@ object TextAnalysis {
     // yields -1 — value parity includes the null row
     val n = coalesce(graft.plans.WordTokenCount.count(text), lit(-1L))
     val stopRatio = when(n > 0,
-      graft.plans.ProfileHits.count(text, Profiles.flatMap(_._2)).cast("double")
+      graft.plans.ProfileHits.count(text, StopWords).cast("double")
         / n.cast("double"))
       .otherwise(lit(0.0))
     val punctRatio = when(length(text) > 0,
@@ -80,6 +85,34 @@ object TextAnalysis {
     val lenScore = least(lit(1.0), n.cast("double") / 100.0)
     lit(0.4) * stopRatio + lit(0.3) * (lit(1.0) - punctRatio) + lit(0.3) * lenScore
   }
+
+  /** The stopword list of [[qualityScore]]. */
+  private val StopWords = Profiles.flatMap(_._2)
+
+  /** The DuckDB twin of [[punctCharsRegex]] over the SQL text `text`. */
+  private[graft] def punctCharsSql(text: String): String =
+    s"length(regexp_replace($text, '[A-Za-z0-9\\s]', '', 'g'))"
+
+  /** The DuckDB twin of [[qualityScore]], unrounded like it, over SQL
+    * expressions for the word count `n`, the stopword count `stopN`,
+    * the punctuation count `punct` and the text length `textLen`. The
+    * rendering is p02's byte-frozen text. */
+  private[graft] def qualitySql(n: String, stopN: String, punct: String,
+                                textLen: String): String =
+    s"""0.4 * (CASE WHEN $n > 0 THEN CAST($stopN AS DOUBLE) / CAST($n AS DOUBLE) ELSE 0.0 END)
+       |      + 0.3 * (1.0 - (CASE WHEN $textLen > 0
+       |          THEN CAST($punct AS DOUBLE) / CAST($textLen AS DOUBLE) ELSE 0.0 END))
+       |      + 0.3 * least(1.0, CAST($n AS DOUBLE) / 100.0)""".stripMargin
+
+  /** [[qualitySql]] of the word-list expression `words` (its
+    * [[graft.text.TextOps.wordsSql]] split) and its text `text`. */
+  private[graft] def qualityOfSql(words: String, text: String): String =
+    qualitySql(s"len($words)", stopCountSql(words), punctCharsSql(text),
+      s"length($text)")
+
+  /** Stopword occurrences in the word-list expression `words`. */
+  private[graft] def stopCountSql(words: String): String =
+    profileScoreSql(words, StopWords)
 
   /** Polynomial rolling-hash fingerprint over the word sequence
     * (order-sensitive: reordered documents fingerprint differently,

@@ -18,6 +18,13 @@ object TextOps {
     when(length(trim(c)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(c), "\\s+"))
 
+  /** The DuckDB twin of [[words]] over the SQL expression `x` — every
+    * oracle's word split. The line break is part of the rendering:
+    * p02's oracle text is byte-frozen on it. */
+  private[graft] def wordsSql(x: String): String =
+    s"""CASE WHEN length(trim($x)) = 0 THEN []
+       |    ELSE regexp_split_to_array(trim($x), '\\s+') END""".stripMargin
+
   /** P3: character length. */
   def charLen(c: Column): Column = length(c)
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
+import graft.dedup.Dedup
 
 /** Oracle-checked queries for the text-shaping surface (chunking F14,
   * truncation F13, length/token stats P3/P4, per-group flatten S8,
@@ -350,8 +351,7 @@ object TextPack extends QueryPack {
     * replace), same tie-break (count desc, "lhs rhs" binary asc). */
   private def bpeStagesSql: String = {
     val b = new StringBuilder
-    b ++= s"""u AS (SELECT unnest(CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END) AS wd FROM documents),
+    b ++= s"""u AS (SELECT unnest(${TextOps.wordsSql("text")}) AS wd FROM documents),
       |c AS (SELECT wd, count(*) AS cnt FROM u GROUP BY wd),
       |top AS (SELECT wd, cnt FROM c ORDER BY cnt DESC, wd LIMIT ${Bpe.MaxTypes}),
       |s1 AS MATERIALIZED (SELECT '  ' || regexp_replace(wd, '(.)', '\\1  ', 'g') AS s, cnt FROM top)""".stripMargin
@@ -369,14 +369,6 @@ object TextPack extends QueryPack {
     }
     b.result()
   }
-
-  /** DuckDB BIGINT from `len` hex chars of `expr` starting at 1-based
-    * `start` — the nibble-sum idiom (see [[graft.dedup.DedupPack.hv60]]). */
-  private def hexInt(expr: String, start: Int, len: Int): String =
-    (0 until len).map { i =>
-      val mult = java.math.BigInteger.valueOf(16).pow(len - 1 - i)
-      s"CAST(strpos('0123456789abcdef', substr($expr, ${start + i}, 1)) - 1 AS BIGINT) * $mult"
-    }.mkString("(", " + ", ")")
 
   private val step = ChunkSize - Overlap
 
@@ -397,8 +389,7 @@ object TextPack extends QueryPack {
       val froms = (1 to Bpe.NMerges).map(i => s"m$i AS g$i").mkString(", ")
       s"""
       |WITH $bpeStagesSql,
-      |docw AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |  ELSE regexp_split_to_array(trim(text), '\\s+') END AS ws FROM documents),
+      |docw AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS ws FROM documents),
       |ap AS (SELECT doc_id, ws, list_transform(ws, w -> $chain) AS ts
       |  FROM docw, $froms)
       |SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
@@ -414,8 +405,7 @@ object TextPack extends QueryPack {
       val froms = (1 to Bpe.NMerges).map(i => s"m$i AS g$i").mkString(", ")
       s"""
       |WITH $bpeStagesSql,
-      |docw AS (SELECT lang, CASE WHEN length(trim(text)) = 0 THEN []
-      |  ELSE regexp_split_to_array(trim(text), '\\s+') END AS ws FROM documents),
+      |docw AS (SELECT lang, ${TextOps.wordsSql("text")} AS ws FROM documents),
       |ap AS (SELECT lang, ws, list_transform(ws, w -> $chain) AS ts
       |  FROM docw, $froms),
       |per AS (SELECT lang, len(ws) AS nw,
@@ -434,13 +424,12 @@ object TextPack extends QueryPack {
     },
     "t09_train_order" -> s"""
       |WITH b AS (SELECT doc_id,
-      |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-      |    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tok,
+      |  CAST(len(${TextOps.wordsSql("text")}) AS BIGINT) AS n_tok,
       |  md5('$OrderSeed:' || CAST(doc_id AS VARCHAR)) AS k
       | FROM documents),
       |s AS (SELECT doc_id, n_tok, k,
-      |  ${hexInt("k", 1, 15)} % $NShards AS shard,
-      |  ${hexInt("k", 17, 8)} AS h32 FROM b),
+      |  ${Dedup.hexIntSql("k", 1, 15)} % $NShards AS shard,
+      |  ${Dedup.hexIntSql("k", 17, 8)} AS h32 FROM b),
       |r AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY k) AS pos
       | FROM s)
       |SELECT CAST(shard AS BIGINT) AS shard, count(*) AS n_docs,
@@ -450,8 +439,7 @@ object TextPack extends QueryPack {
       |    AS order_checksum
       |FROM r GROUP BY shard ORDER BY shard""".stripMargin,
     "t01_chunk_stats" -> s"""
-      |WITH w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words
+      |WITH w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words
       |  FROM documents),
       |c AS (SELECT doc_id, len(words) AS dwl,
       |    unnest(range(0, len(words), $step)) AS start_word
@@ -461,8 +449,7 @@ object TextPack extends QueryPack {
       |  CAST(least($ChunkSize, dwl - start_word) AS BIGINT) AS chunk_word_len
       |FROM c ORDER BY id, chunk_idx""".stripMargin,
     "t02_chunk_first_text" -> s"""
-      |WITH w AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END AS words
+      |WITH w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words
       |  FROM documents)
       |SELECT doc_id, CASE WHEN len(words) > 0
       |  THEN md5(array_to_string(words[1:least($ChunkSize, len(words))], ' '))
@@ -470,8 +457,7 @@ object TextPack extends QueryPack {
       |FROM w ORDER BY doc_id""".stripMargin,
     "t03_token_stats" -> s"""
       |SELECT doc_id, CAST(length(text) AS BIGINT) AS char_len,
-      |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-      |    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS word_len,
+      |  CAST(len(${TextOps.wordsSql("text")}) AS BIGINT) AS word_len,
       |  CAST(len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+')) AS BIGINT) AS token_count
       |FROM documents ORDER BY doc_id""".stripMargin,
     "t04_lang_report" -> """
@@ -495,8 +481,7 @@ object TextPack extends QueryPack {
       |   || lines[greatest(-2, -len(lines)):], chr(10)) AS kept
       |FROM l ORDER BY id""".stripMargin,
     "t08_vocab_coverage" -> s"""
-      |WITH u AS (SELECT unnest(CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE regexp_split_to_array(trim(text), '\\s+') END) AS wd
+      |WITH u AS (SELECT unnest(${TextOps.wordsSql("text")}) AS wd
       |  FROM documents),
       |c AS (SELECT wd, count(*) AS cnt FROM u GROUP BY wd),
       |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
@@ -524,8 +509,7 @@ object TextPack extends QueryPack {
       |FROM k ORDER BY p""".stripMargin,
     "t07_pack_sequences" -> s"""
       |WITH b AS (SELECT doc_id,
-      |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-      |    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tok
+      |  CAST(len(${TextOps.wordsSql("text")}) AS BIGINT) AS n_tok
       | FROM documents),
       |c AS (SELECT doc_id, n_tok,
       |  coalesce(sum(n_tok) OVER (ORDER BY doc_id
@@ -537,8 +521,7 @@ object TextPack extends QueryPack {
       |FROM c ORDER BY doc_id""".stripMargin,
     "t13_packing_efficiency" -> s"""
       |WITH b AS (SELECT doc_id,
-      |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-      |    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tok
+      |  CAST(len(${TextOps.wordsSql("text")}) AS BIGINT) AS n_tok
       | FROM documents),
       |c AS (SELECT doc_id, n_tok,
       |  coalesce(sum(n_tok) OVER (ORDER BY doc_id

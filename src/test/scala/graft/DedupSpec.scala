@@ -220,7 +220,8 @@ class DedupSpec extends AnyFunSuite {
       "on a replicated corpus") {
     import org.apache.spark.sql.functions.{col, lit}
     def direct(c: org.apache.spark.sql.DataFrame) =
-      Dedup.dedupGroups(Dedup.jaccardPairs(c, col("doc_id"), col("text")))
+      Dedup.dedupGroups(Dedup.jaccardPairsFromHashed(
+        Dedup.hashedShingleRows(c, col("doc_id"), col("text"))))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def collapsed(c: org.apache.spark.sql.DataFrame) =
       DedupPack.groupsViaExactCollapse(c)
@@ -233,6 +234,15 @@ class DedupSpec extends AnyFunSuite {
       aug.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"), col("text"))
     }.reduce(_ unionByName _)
     assert(collapsed(rep3) == direct(rep3))
+    // identical texts without 3-word shingles pair with nothing, so
+    // they form no group on either path
+    import spark.implicits._
+    val edge = Seq(1L -> "alpha beta", 2L -> "alpha beta",
+      3L -> "the quick brown fox jumps over the lazy dog",
+      4L -> "the quick brown fox jumps over the lazy cat",
+      5L -> "", 6L -> "").toDF("doc_id", "text")
+    assert(direct(edge) == Map(3L -> 3L, 4L -> 3L))
+    assert(collapsed(edge) == direct(edge))
   }
 
   test("d20 band counts equal direct full-pair banding, incl. on a " +
@@ -240,7 +250,8 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{coalesce, col, count, floor, lit}
     // the independent twin: enumerate EVERY true pair and band it
     def direct(c: org.apache.spark.sql.DataFrame): Map[Double, Long] = {
-      val banded = Dedup.jaccardPairs(c, col("doc_id"), col("text"))
+      val banded = Dedup.jaccardPairsFromHashed(
+          Dedup.hashedShingleRows(c, col("doc_id"), col("text")))
         .groupBy(floor(col("jaccard") * 10).cast("long").as("b10"))
         .agg(count(lit(1)).as("n"))
       spark.range(5, 11).select(col("id").as("b10"))

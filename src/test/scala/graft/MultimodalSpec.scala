@@ -144,7 +144,8 @@ class MultimodalSpec extends AnyFunSuite {
     // cross-strategy: the banded join is pair-for-pair equal to the
     // quadratic scan over the same signatures (the d04/d05 contract)
     val sig = m.select(col("media_id").as("id"),
-      Multimodal.dhash(col("content")).as("simhash"))
+      Multimodal.gridHash(col("content"), "px",
+        Multimodal.DhashGridRows, Multimodal.DhashGridCols).as("simhash"))
     val a = sig.select(col("id").as("a_id"), col("simhash").as("ha"))
     val b = sig.select(col("id").as("b_id"), col("simhash").as("hb"))
     val brute = a.join(b, col("a_id") < col("b_id"))
@@ -252,7 +253,8 @@ class MultimodalSpec extends AnyFunSuite {
         .as("content"))
     val sig = dense.unionByName(clip)
       .select(struct(col("item_id").as("item"), col("unit_idx").as("unit"))
-        .as("id"), Multimodal.dhash(col("content")).as("simhash"))
+        .as("id"), Multimodal.gridHash(col("content"), "px",
+        Multimodal.DhashGridRows, Multimodal.DhashGridCols).as("simhash"))
     def key(r: org.apache.spark.sql.Row) = {
       val a = r.getStruct(0); val b = r.getStruct(1)
       ((a.getLong(0), a.getLong(1)), (b.getLong(0), b.getLong(1)),
@@ -292,7 +294,8 @@ class MultimodalSpec extends AnyFunSuite {
         .as("content"))
     val rows = MultimodalPack.clipContainmentFromUnits(
         graft.core.Caches.cut(MultimodalPack.unitFps(base.unionByName(clip),
-          Multimodal.dhash)), maxDist = 4, bits = Multimodal.DhashBits)
+          Multimodal.gridHash(_, "px", Multimodal.DhashGridRows,
+            Multimodal.DhashGridCols))), maxDist = 4, bits = Multimodal.DhashBits)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))

@@ -17,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * trained index, and an ingest screen its batch's derived rows, as
   * required arguments. Every public or `private[graft]` member of a
   * main object is named by some main source or the benchmark harness,
-  * or is on [[Reachable]]'s allowlist with its reason. A scan of the
-  * main sources keeps it that way. */
+  * or is on [[Reachable]]'s allowlist with its reason. Each shared
+  * oracle derivation has one DuckDB spelling, in the file of the Spark
+  * form it mirrors. A scan of the main sources keeps it that way. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val builder = """SparkSession\s*\.\s*builder""".r
@@ -26,6 +27,19 @@ class SessionGuardSpec extends AnyFunSuite {
     """experimental\s*\.\s*extra(Strategies|Optimizations)\s*=(?!=)""".r
   private val envRead = """sys\s*\.\s*env\b|System\s*\.\s*getenv\b""".r
   private val optionalFrame = """\w\s*:\s*Option\s*\[\s*DataFrame\s*\]""".r
+  private val wordSplit = ("""CASE WHEN length\(trim\([^()]*\)\) = 0 THEN (\[\]|0)""" +
+    """[\s|]*ELSE (len\()?regexp_split_to_array\(trim\(""").r
+  private val nibbleTable = """'0123456789abcdef'""".r
+  private val qualityFormula = """0\.3 \* least\(1\.0""".r
+  /** (what, inline pattern, owner file, files keeping a copy → why). */
+  private val spellings = Seq(
+    ("the word split", wordSplit, Paths.get("text", "TextOps.scala"), Map.empty[Path, String]),
+    ("the hex nibble table", nibbleTable, Paths.get("dedup", "Dedup.scala"),
+      Map(Paths.get("pipeline", "PipelinePack.scala") -> ("p02's oracle text is " +
+        "byte-frozen: its DuckDB replay runs out of memory on a 15 GiB box, so " +
+        "no oracle run can check a change to it"))),
+    ("the quality formula", qualityFormula, Paths.get("text", "TextAnalysis.scala"),
+      Map.empty[Path, String]))
   private val envReaders = Seq(Paths.get("Bench.scala"),
     Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
     Paths.get("core", "GraftSession.scala"))
@@ -81,6 +95,23 @@ class SessionGuardSpec extends AnyFunSuite {
       "batchFps:\n    Option[DataFrame] = None)").nonEmpty)
     assert(optionalFrame.findFirstIn("stats: DataFrame,").isEmpty)
     assert(optionalFrame.findFirstIn("dirs: Option[Seq[DataFrame]]").isEmpty)
+    assert(wordSplit.findFirstIn("w AS (SELECT doc_id, CASE WHEN length(trim(text)) " +
+      "= 0 THEN []\n    |    ELSE regexp_split_to_array(trim(text), '\\s+') END").nonEmpty)
+    assert(wordSplit.findFirstIn("CAST(CASE WHEN length(trim(text)) = 0 THEN 0\n" +
+      "      |    ELSE len(regexp_split_to_array(trim(text), '\\\\s+')) END AS BIGINT)")
+      .nonEmpty)
+    assert(wordSplit.findFirstIn("CASE WHEN length(trim(ground_truth)) = 0 THEN [] " +
+      "ELSE regexp_split_to_array(trim(ground_truth), '\\s+') END").nonEmpty)
+    assert(wordSplit.findFirstIn(
+      "regexp_split_to_array(trim(lower(full_text)), '\\s+') AS ws").isEmpty)
+    assert(wordSplit.findFirstIn(
+      "list_filter(string_split(text, ' '), x -> x <> '')").isEmpty)
+    assert(nibbleTable.findFirstIn(
+      "(strpos('0123456789abcdef', substr(md5(sh), 1, 1)) - 1)").nonEmpty)
+    assert(nibbleTable.findFirstIn("conv(substring(md5(c), 1, 4), 16, 10)").isEmpty)
+    assert(qualityFormula.findFirstIn(
+      "      |      + 0.3 * least(1.0, CAST(n AS DOUBLE) / 100.0), 6) AS q").nonEmpty)
+    assert(qualityFormula.findFirstIn("least(lit(1.0), n / 100.0)").isEmpty)
   }
 
   test("only core/GraftSession.scala builds a SparkSession; nothing assigns " +
@@ -111,6 +142,22 @@ class SessionGuardSpec extends AnyFunSuite {
     val offenders = mainSources
       .filter(f => optionalFrame.findFirstIn(Files.readString(f)).nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("each oracle derivation is spelled once: the word split, the hex " +
+      "nibble table and the quality formula occur only in their twin's file") {
+    val root = Paths.get("src/main/scala", "graft")
+    val files = mainSources.map(f => f -> Files.readString(f))
+    val offenders = spellings.flatMap { case (what, pattern, owner, frozen) =>
+      frozen.keys.foreach(k => assert(Files.exists(root.resolve(k)), s"$k missing"))
+      (if (pattern.findFirstIn(Files.readString(root.resolve(owner))).isEmpty)
+        Seq(s"$owner: holds no spelling of $what") else Nil) ++
+        files.collect { case (f, text) if !f.endsWith(root.resolve(owner)) &&
+            !frozen.keys.exists(k => f.endsWith(root.resolve(k))) &&
+            pattern.findFirstIn(text).nonEmpty => s"$f: $what" }
+    }
+    assert(offenders.isEmpty, "each derivation's one spelling belongs in its " +
+      "owner file, called from everywhere else:\n" + offenders.mkString("\n"))
   }
 
   test("every public or private[graft] member of a main object is named " +
