@@ -69,7 +69,7 @@ object Bench {
     // mining, trained heads) are compute-once state shared by many
     // queries — the reference builds its FAISS index/checkpoint ONCE.
     // Build and materialize them BEFORE the timed loop and report the
-    // cost as its own line; the per-query sweep below releases only
+    // cost as its own line; each query's scope below releases only
     // transient caches, so queries measure consumption, not
     // re-derivation of shared state.
     // SPARK_GRAFT_ONLY subset runs (local iteration) skip the warm —
@@ -106,7 +106,9 @@ object Bench {
           arts.foreach { case (name, build) =>
             spark.sparkContext.setJobDescription(s"artifact: $name")
             val t0 = System.nanoTime()
-            try {
+            // its own scope: no build transient stays pinned into the
+            // timed queries
+            try core.Caches.scoped(name) {
               build(spark, sfDir).write.format("noop").mode("overwrite").save()
               artMs.synchronized {
                 artMs += name -> ((System.nanoTime() - t0) / 1000000)
@@ -131,27 +133,20 @@ object Bench {
       artMs.clear(); artMs ++= sorted
     }
     val artifactsFailed = artifactsFailedCnt.get
-    // transients registered DURING artifact builds (e.g. the pair
-    // artifact's shingle table) must not stay pinned into the first
-    // timed query
-    core.Caches.releaseTransients()
     val artifactsSec = (System.nanoTime() - tArt) / 1e9
     val results = selected.map { case (name, fn) =>
-      // label session-memo creations with this query's name, so the
-      // retry loop can drop exactly what this first pass built and
-      // re-measure the same work (a memo-hit retry would misattribute
-      // real cost to "transient" and collapse scale factors)
-      core.Artifacts.setScope(name)
+      // the query's scope labels its memo creations, so a retry drops
+      // exactly what this pass built and re-measures the same work
+      // (a memo-hit retry would collapse scale factors), and releases
+      // its caches so one query's working set doesn't GC-tax the next;
+      // cleanup counts against its query. Artifacts stay cached.
       val t0 = System.nanoTime()
-      val err = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch { case e: Throwable => Some(e) }
-      // release per-query caches (e.g. the dedup pack's shingle
-      // tables) so one query's working set doesn't GC-tax the next;
-      // cleanup cost counts against the query that incurred it.
-      // Artifacts stay cached — that is their whole design.
-      core.Caches.releaseTransients()
+      val err = core.Caches.scoped(name) {
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          None
+        } catch { case e: Throwable => Some(e) }
+      }
       err match {
         case None => name -> (System.nanoTime() - t0) / 1e9
         case Some(e) =>
@@ -235,17 +230,18 @@ object Bench {
         // pass created (scope-tracked) — the retry must re-measure
         // the same work or it is not a second opinion
         core.Artifacts.dropScope(name)
-        core.Artifacts.setScope(name)
         val t0 = System.nanoTime()
-        val r = try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          Some(name -> (System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
-        core.Caches.releaseTransients()
-        r
+        core.Caches.scoped(name) {
+          try {
+            SparkEntry.queries(name)(spark, sfDir)
+              .write.format("noop").mode("overwrite").save()
+            Some(name -> (System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
+            System.err.println(s"BENCH RETRY FAIL $name: $e")
+            None
+          }
+        }
       }
-    core.Artifacts.setScope("")
     // The harness captures only the last ~2 KB of stdout: keys are
     // abbreviated to the unique family prefix (m01_confusion -> m01)
     // and seconds rounded to 2 decimals to keep this line near that

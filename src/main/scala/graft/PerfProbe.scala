@@ -35,7 +35,7 @@ object PerfProbe {
     val spark = core.GraftSession.local(appName = "graft-probe")
     try {
       if (mode == "qreps") qreps(spark, sfDir, names, args.lift(2).fold(3)(_.toInt))
-      else names.foreach(explain(spark, sfDir, _))
+      else names.foreach(n => core.Caches.scoped(n)(explain(spark, sfDir, n)))
     } finally spark.stop()
   }
 
@@ -45,14 +45,13 @@ object PerfProbe {
       // each rep rebuilds every memo a probed query built, so a
       // consumer never reads what an earlier name in the list left
       names.foreach(core.Artifacts.dropScope)
-      core.Artifacts.setScope(name)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      println(f"QREP $name $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      core.Caches.releaseTransients()
+      core.Caches.scoped(name) {
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        println(f"QREP $name $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      }
     }
-    core.Artifacts.setScope("")
   }
 
   private def explain(spark: SparkSession, sfDir: String, name: String): Unit = {
@@ -75,6 +74,5 @@ object PerfProbe {
       s"broadcastHashJoins=$bcasts wholeStageCodegenSpans=$wsc")
     pushed.foreach(p => println(s"    $p"))
     schemas.foreach(s => println(s"    $s"))
-    core.Caches.releaseTransients()
   }
 }

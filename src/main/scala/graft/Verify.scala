@@ -15,17 +15,17 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // one scope per query, as in Bench: ~192 queries in one JVM
+      // would otherwise pin every cut relation's checkpoint blocks
+      // for the whole run
+      try core.Caches.scoped(name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(
           s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
         failures += name -> e
       }
-      // sweep per-query transient/cut blocks exactly like Bench does:
-      // ~192 queries in one JVM would otherwise pin every cut
-      // relation's checkpoint blocks for the whole run
-      core.Caches.releaseTransients()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

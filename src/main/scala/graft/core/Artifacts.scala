@@ -24,21 +24,17 @@ object Artifacts {
       .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
 
   // scope label → which memo entries a given consumer's execution
-  // CREATED (vs merely read). The bench's retry instrument needs this:
+  // CREATED (vs merely read), labelled with the creating thread's
+  // [[Caches.scoped]] name. The bench's retry instrument needs this:
   // a retry that silently hits a memo built during the first pass
   // would "attribute" the cost to a transient and (worse) collapse a
   // declared superlinear query's scale factor to a cache read. The
   // retry drops exactly the entries the first pass created, so it
-  // re-measures the same work; entries built outside any scope (the
-  // pre-warm artifact phase) are never dropped.
+  // re-measures the same work; entries built outside any scope are
+  // never dropped.
   private val scopeOf =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.sql.SparkSession, String), String]
-  @volatile private var currentScope: String = ""
-
-  /** Label memo creations from now on (bench: the timed query's name);
-    * empty = unscoped (artifact pre-warm, Verify, library use). */
-  def setScope(name: String): Unit = currentScope = name
 
   /** Unpersist + evict every memo entry created under `name`, so a
     * re-run of that consumer rebuilds (and re-pays for) them. */
@@ -78,14 +74,15 @@ object Artifacts {
         memoMap.putIfAbsent(k, built) match {
           case Some(existing) => existing
           case None =>
-            if (currentScope.nonEmpty) scopeOf.put(k, currentScope)
+            val scope = Caches.scopeName
+            if (scope.nonEmpty) scopeOf.put(k, scope)
             built
         }
     }
     // a builder may have routed the frame through Caches.transient
     // (e.g. the IVF centroid chain caches itself for within-query
     // reuse) — promotion to artifact status must exempt it from the
-    // per-query transient sweep or every sweep would force a rebuild
+    // query's scope, or every scope exit would force a rebuild
     Caches.untrack(df)
     if (df.storageLevel == StorageLevel.NONE) df.persist()
     df

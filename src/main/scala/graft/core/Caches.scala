@@ -1,121 +1,126 @@
 package graft.core
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-import org.apache.spark.sql.Dataset
-
-/** Tracker for TRANSIENT caches — frames an operator persists for the
-  * duration of one query (shingle posting lists, banded signatures,
-  * split sides) as opposed to session [[Artifacts]].
+/** Owner of query-lifetime state: frames an operator persists for one
+  * query (shingle posting lists, banded signatures, split sides), as
+  * opposed to session [[Artifacts]].
   *
-  * Operators route short-lived `.cache()` calls through [[transient]];
-  * a harness then releases exactly these between queries with
-  * [[releaseTransients]] instead of `spark.catalog.clearCache()`, which
-  * cannot tell a per-query working set from a compute-once artifact.
-  * (Within a query the cache is still load-bearing — consumers branch
-  * over the frame several times — so operators cannot simply unpersist
-  * before returning their lazy result.)
+  * A query runs as one [[scoped]] call, bound to the calling thread.
+  * The scope keeps one release list for every [[transient]] and [[cut]]
+  * registered on that thread while it is open and releases only that
+  * list on exit, also when the body throws, so a gate batch on a stream
+  * thread never releases another thread's query. Its name labels the
+  * memo entries [[Artifacts.memo]] creates inside it. Registrations
+  * outside any scope go to one unscoped list, drained by
+  * [[releaseTransients]].
+  *
+  * USE-BEFORE-RELEASE: materialize whatever derives from a cut before
+  * its scope closes. Releasing a local checkpoint is irreversible (its
+  * lineage is truncated), so an action on such a frame afterwards
+  * fails with Spark's `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` instead of
+  * recomputing, as a released `.cache()` would. localCheckpoint is also
+  * not fault-tolerant on a cluster (an executor loss kills the job):
+  * fine for per-query intermediates, not for state that must survive.
   */
 object Caches {
 
-  private val transients = new ConcurrentLinkedQueue[Dataset[_]]()
+  /** One owner's (frame, release) list in registration order; frames
+    * compare by reference (Dataset has no custom equals). */
+  private final class Scope(val name: String) {
+    private val entries = scala.collection.mutable.ArrayBuffer.empty[(AnyRef, () => Unit)]
+    def add(frame: AnyRef, release: () => Unit): Int =
+      synchronized { entries += frame -> release; entries.size }
+    def remove(frame: AnyRef): Option[() => Unit] = synchronized {
+      val i = entries.indexWhere(_._1 eq frame)
+      if (i < 0) None else Some(entries.remove(i)._2)
+    }
+    /** Run and drop the oldest `n` releases (all by default). */
+    def release(n: Int = Int.MaxValue): Unit = synchronized {
+      val old = entries.take(n).toList
+      entries.remove(0, old.size)
+      old
+    }.foreach(e => quietly(e._2))
+  }
 
-  /** Tracker bound: past this many live entries the OLDEST tracked
-    * frame is unpersisted on registration, so a long-lived session
-    * that never calls [[releaseTransients]] (notebook, service) can't
-    * pin cached blocks without limit. Generous relative to the
-    * transient count of any single query (≤ a handful). */
+  private def quietly(release: () => Unit): Unit =
+    try release()
+    catch { case _: Throwable => () }
+
+  /** Bound of the unscoped list: past it the OLDEST entry is released on
+    * registration, so a session that never calls [[releaseTransients]]
+    * (notebook, service) can't pin blocks without limit. A scope
+    * releases on exit and needs no bound. */
   private val MaxTracked = 64
 
-  /** Cache `ds` and track it for the next [[releaseTransients]]. */
-  def transient[T](ds: Dataset[T]): Dataset[T] = {
-    transients.add(ds)
-    while (transients.size > MaxTracked) {
-      val old = transients.poll()
-      if (old != null) {
-        try old.unpersist(false)
-        catch { case _: Throwable => () }
-      }
+  private val unscoped = new Scope("")
+  // plain, not inheritable: the stream and pool threads a query starts
+  // must not share its release list
+  private val current = new ThreadLocal[Scope]
+  private def owner: Scope = Option(current.get).getOrElse(unscoped)
+
+  /** The calling thread's scope name, "" outside any scope. */
+  private[core] def scopeName: String = owner.name
+
+  private def register(frame: AnyRef, release: () => Unit): Unit = {
+    val n = owner.add(frame, release)
+    if ((owner eq unscoped) && n > MaxTracked) unscoped.release(n - MaxTracked)
+  }
+
+  /** Run `body` as one query named `name` on the calling thread. A
+    * nested scope restores the outer one on exit. */
+  def scoped[T](name: String)(body: => T): T = {
+    val outer = current.get
+    val scope = new Scope(name)
+    current.set(scope)
+    try body
+    finally {
+      if (outer == null) current.remove() else current.set(outer)
+      scope.release()
     }
+  }
+
+  /** Cache `ds` for the rest of the calling thread's scope. */
+  def transient[T](ds: Dataset[T]): Dataset[T] = {
+    register(ds, () => { ds.unpersist(false); () })
     ds.cache()
   }
 
-  /** Remove `ds` from transient tracking WITHOUT unpersisting — used
-    * by [[Artifacts.memo]] when a frame built through a
-    * transient-routing code path is promoted to session-artifact
-    * status: the sweep must no longer drop it. Reference equality
-    * (Dataset has no custom equals), so only the exact registered
-    * frame is untracked. */
-  def untrack(ds: Dataset[_]): Unit = transients.remove(ds)
+  /** Stop tracking `ds` WITHOUT releasing it: [[Artifacts.memo]]
+    * promotes a frame its builder registered to a session artifact. */
+  def untrack(ds: Dataset[_]): Unit = { owner.remove(ds); () }
 
-  /** Unpersist every tracked transient frame (non-blocking) and clear
-    * the tracking list. Safe to call at any query boundary; artifacts
-    * registered via [[Artifacts.memo]] are untouched. */
-  def releaseTransients(): Unit = {
-    var ds = transients.poll()
-    while (ds != null) {
-      try ds.unpersist(false)
-      catch { case _: Throwable => () }
-      ds = transients.poll()
-    }
-    var r = cutReleases.poll()
-    while (r != null) {
-      try r()
-      catch { case _: Throwable => () }
-      r = cutReleases.poll()
-    }
-  }
+  /** Release `df` now, if the calling thread's scope registered it. */
+  def release(df: Dataset[_]): Unit = owner.remove(df).foreach(quietly)
 
-  private val cutReleases = new ConcurrentLinkedQueue[() => Unit]()
+  /** Release everything registered outside any scope (non-blocking).
+    * Scopes and [[Artifacts.memo]] entries are untouched. */
+  def releaseTransients(): Unit = unscoped.release()
 
-  /** Materialize `df` NOW and truncate its lineage (localCheckpoint),
-    * tracking the checkpointed blocks for [[releaseTransients]].
+  /** Materialize `df` NOW and truncate its lineage (localCheckpoint).
     *
     * [[transient]] keeps the full logical plan under the cache: every
     * downstream action re-canonicalizes and re-optimizes that tree for
     * the cache lookup, which for expression-heavy relations (the
     * 66-md5 perceptual dHash, banded-signature tables fanned into
     * `maxDist+1` join branches) turns into SECONDS of single-threaded
-    * driver work per query — measured on s12: ~5 s to plan the gate
-    * and 6 parallel broadcast stages each re-walking the fingerprint
-    * tree (OPTIMIZATION_r14.md s12 split). Cutting the lineage replaces all of
-    * it with a compact scan of the materialized rows.
+    * driver work per query (s12: ~5 s, OPTIMIZATION_r14.md). Cutting
+    * the lineage replaces it with a compact scan of the materialized
+    * rows.
     *
     * Use for relations that are (a) expensive to PLAN (huge expression
     * trees), (b) consumed by several downstream branches, and (c)
     * small enough to hold — fingerprint/signature tables, not raw
-    * corpus text. Eager: the cut runs the subquery at call time.
-    *
-    * USE-BEFORE-RELEASE CONTRACT: unpersisting a locally-checkpointed
-    * RDD is irreversible — lineage is truncated, so after
-    * [[releaseTransients]] a still-held DataFrame built over a cut
-    * relation fails with missing-block errors instead of recomputing
-    * (unlike a swept `.cache()`). Consumers must fully materialize
-    * results derived from a cut relation before the next query-
-    * boundary sweep; every harness (Bench, Verify, PerfProbe) runs one
-    * action per query and sweeps after it, which satisfies this by
-    * construction. localCheckpoint is also not fault-tolerant on a
-    * cluster (an executor loss kills the job rather than recomputing)
-    * — acceptable for ephemeral per-query intermediates, not for
-    * state that must survive. */
-  def cut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * corpus text. Eager: the cut runs the subquery at call time. The
+    * use-before-release rule above applies. */
+  def cut(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
-    cutReleases.add(() => cp.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+    // Dataset.unpersist does not free a checkpoint: the blocks belong
+    // to the RDD under the cut's LogicalRDD
+    register(cp, () => cp.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
       case _ => ()
     })
-    // the same MaxTracked bound as [[transient]]: a session that never
-    // sweeps (notebook, service, Verify-style long loops) must not pin
-    // checkpoint blocks without limit — release the OLDEST cut past
-    // the bound (safe there by the use-before-release contract: a
-    // frame that old belongs to a long-finished query)
-    while (cutReleases.size > MaxTracked) {
-      val old = cutReleases.poll()
-      if (old != null) {
-        try old()
-        catch { case _: Throwable => () }
-      }
-    }
     cp
   }
 }

@@ -479,12 +479,13 @@ object Dedup {
   }
 
   private[graft] def dedupGroupsDistributed(pairs: DataFrame): (DataFrame, Int) = {
-    val edges = pairs
+    val edges = graft.core.Caches.transient(pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .distinct().cache()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).cache()
+      .distinct())
+    var labels: DataFrame = graft.core.Caches.transient(
+      edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < MaxIters) {
@@ -498,25 +499,23 @@ object Dedup {
       val propagate = edges
         .unionByName(labels.select(col("id").as("src"), col("id").as("dst")))
         .unionByName(labels.select(col("label").as("src"), col("id").as("dst")))
-      val next = propagate
+      // a cut, not a cache: each round references the prior round's
+      // frame several times (self-loop/jump unions, the label join,
+      // the change count), so without truncating lineage the logical
+      // plan grows exponentially in rounds and planning itself OOMs
+      // after ~8 rounds. The prior round is released once this one is
+      // counted; the last one when the caller's scope exits.
+      val next = graft.core.Caches.cut(propagate
         .join(labels.select(col("id").as("src"), col("label").as("nl")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min(col("nl")).as("label"))
-        // localCheckpoint, not cache: each round references the prior
-        // round's frame several times (self-loop/jump unions, the
-        // label join, the change count), so without truncating lineage
-        // the logical plan grows exponentially in rounds and planning
-        // itself OOMs after ~8 rounds. Eager checkpoint pins the
-        // round's result and restarts lineage — mandatory for any
-        // iterate-to-fixpoint loop at corpus scale.
-        .localCheckpoint(true)
+        .groupBy(col("dst").as("id")).agg(min(col("nl")).as("label")))
       changed = next
         .join(labels.select(col("id"), col("label").as("old")), Seq("id"))
         .filter(col("label") =!= col("old")).count()
-      labels.unpersist()
+      graft.core.Caches.release(labels)
       labels = next
       iter += 1
     }
-    edges.unpersist()
+    graft.core.Caches.release(edges)
     (labels.select(col("id").as("doc_id"), col("label").as("keeper_id")), iter)
   }
 

@@ -263,8 +263,11 @@ object DedupPack extends QueryPack {
         .join(histSigs.select(col("hist_id"), col("band"), col("bandsig")),
           Seq("band", "bandsig"))
         .select(col("doc_id"), col("hist_id")).distinct())
+    // only the candidates' history shingles: `inter` and `nh` read no
+    // other hist_id, so the checkpoint does not grow with history
     val hsh = graft.core.Caches.cut(
-      histShingles.select(col("id"), col("sh")))
+      histShingles.select(col("id"), col("sh"))
+        .join(cand.select(col("hist_id").as("id")).distinct(), Seq("id"), "left_semi"))
     val inter = cand
       .join(batchShingles.select(col("id").as("doc_id"), col("sh")), Seq("doc_id"))
       .join(hsh.select(col("id").as("hist_id"), col("sh")), Seq("hist_id", "sh"))
@@ -275,9 +278,7 @@ object DedupPack extends QueryPack {
     val nb = batchShingles.select(col("id").as("doc_id"), col("sh"))
       .join(cand.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("nb"))
-    val nh = hsh.select(col("id").as("hist_id"), col("sh"))
-      .join(cand.select(col("hist_id")).distinct(), Seq("hist_id"), "left_semi")
-      .groupBy(col("hist_id")).agg(count(lit(1)).as("nh"))
+    val nh = hsh.groupBy(col("id").as("hist_id")).agg(count(lit(1)).as("nh"))
     val d = (c: org.apache.spark.sql.Column) => c.cast("double")
     val jc = cand
       .join(inter, Seq("doc_id", "hist_id"), "left")

@@ -451,33 +451,34 @@ object Streams {
     * the session artifacts). Writes decisions, the per-batch run
     * summary (`<outDir>_summary/batch=<id>` — the reference's per-run
     * Dashboard box, `ocr_agent_8_29.py:28-33`), and the three state
-    * kinds through [[gateBatch]]. The persisted batch is released
-    * whether or not the batch commits. */
+    * kinds through [[gateBatch]]. The batch runs as one
+    * [[graft.core.Caches.scoped]] call, so its cached and cut frames
+    * are released whether or not it commits, and no other thread's. */
   private[graft] def dedupGateBatch(spark: SparkSession, batch: DataFrame,
                                     batchId: Long, outDir: String,
                                     histDir: String,
-                                    opts: GateOptions = GateOptions()): Unit = {
-    import graft.dedup.DedupPack
-    val docs = batch.select(col("doc_id"), col("text")).persist()
-    // one digest frame: the screen caches it, and the history
-    // semi-join's probe reads it from that cache, so every row is
-    // digested once
-    val digestRows = DedupPack.digestRowsOf(docs)
-    try gateBatch(spark, batchId, outDir, histDir, opts, Seq("sigs", "shingles"),
-      digestRows.select(col("h")).distinct(),
-      decisionsLogSchema(spark),
-      Some(runSummaryOf(_, docs, batchId))) { (digests, prior) =>
-      // the gate returns the admitted docs' derived state relations
-      // from ITS OWN signature pass — the append re-reads cut frames,
-      // never recomputes minhashes or shingles
-      val (decisions, newDigests, newSigs, newShingles) =
-        DedupPack.dedupGateWithState(digests, prior("sigs"),
-          prior("shingles"), digestRows, DedupPack.bandSigsOf(docs, "doc_id"),
-          DedupPack.shingleRowsOf(docs))
-      (decisions, newDigests, Map("sigs" -> newSigs, "shingles" -> newShingles))
+                                    opts: GateOptions = GateOptions()): Unit =
+    graft.core.Caches.scoped(s"gate batch=$batchId") {
+      import graft.dedup.DedupPack
+      val docs = graft.core.Caches.transient(batch.select(col("doc_id"), col("text")))
+      // one digest frame: the screen caches it, and the history
+      // semi-join's probe reads it from that cache, so every row is
+      // digested once
+      val digestRows = DedupPack.digestRowsOf(docs)
+      gateBatch(spark, batchId, outDir, histDir, opts, Seq("sigs", "shingles"),
+        digestRows.select(col("h")).distinct(),
+        decisionsLogSchema(spark),
+        Some(runSummaryOf(_, docs, batchId))) { (digests, prior) =>
+        // the gate returns the admitted docs' derived state relations
+        // from ITS OWN signature pass — the append re-reads cut frames,
+        // never recomputes minhashes or shingles
+        val (decisions, newDigests, newSigs, newShingles) =
+          DedupPack.dedupGateWithState(digests, prior("sigs"),
+            prior("shingles"), digestRows, DedupPack.bandSigsOf(docs, "doc_id"),
+            DedupPack.shingleRowsOf(docs))
+        (decisions, newDigests, Map("sigs" -> newSigs, "shingles" -> newShingles))
+      }
     }
-    finally docs.unpersist()
-  }
 
   /** The per-batch state lifecycle both ingest gates share:
     *  1. resolve each state kind's directories ONCE (one listing per
@@ -495,10 +496,10 @@ object Streams {
     *  5. generation compaction of the state — and, under
     *     `compactLogs`, of the decision log (read with `logSchema`) and
     *     the summary log — per `opts`.
-    * The cached decisions and the screen's transient frames are
-    * released whether or not the batch commits, so a batch that
-    * throws (a failed write, a missing commit marker) leaves nothing
-    * cached in the session.
+    * It runs inside its caller's batch scope: the cached decisions
+    * and the screen's transient and cut frames are released whether
+    * or not the batch commits, so a batch that throws (a failed write,
+    * a missing commit marker) leaves nothing cached in the session.
     *
     * Per-batch state is micro-batch-sized: writing it at full session
     * parallelism fans each tiny frame into ~32 part files per kind per
@@ -512,42 +513,39 @@ object Streams {
                         logSchema: StructType,
                         summaryOf: Option[DataFrame => DataFrame])(
       screen: (DataFrame, Map[String, DataFrame]) =>
-        (DataFrame, DataFrame, Map[String, DataFrame])): Unit =
-    try {
-      val allKinds = "digests" +: kinds
-      val dirs = allKinds.map(k =>
-        k -> resolveGenDirs(spark, s"$histDir/$k", batchId)).toMap
-      def prior(kind: String): DataFrame =
-        stateOf(spark, kind, dirs(kind), batchId, opts).drop("src_batch")
-      val (decisionsRaw, newDigests, newState) = screen(
-        prior("digests").join(probeDigests, Seq("h"), "left_semi"),
-        kinds.map(k => k -> prior(k)).toMap)
-      val decisions = decisionsRaw.persist()
-      try {
-        def write(df: DataFrame, dir: String): Unit = {
-          df.write.mode("overwrite").parquet(dir)
-          assertCommitted(spark, dir)
-        }
-        write(decisions, s"$outDir/batch=$batchId")
-        summaryOf.foreach(f =>
-          write(f(decisions).coalesce(1), s"${outDir}_summary/batch=$batchId"))
-        def writeState(kind: String, df: DataFrame): Unit =
-          write(df.withColumn("src_batch", lit(batchId)).coalesce(4),
-            s"$histDir/$kind/batch=$batchId")
-        writeState("digests", newDigests)
-        kinds.foreach(k => writeState(k, newState(k)))
-      } finally decisions.unpersist()
-      if (opts.compactEvery > 0 && batchId > 0 &&
-          batchId % opts.compactEvery == 0) {
-        compactState(spark, histDir, batchId, opts, allKinds)
-        if (opts.compactLogs) {
-          compactLog(spark, outDir, batchId, logSchema, stampSrcBatch = true)
-          if (summaryOf.nonEmpty)
-            compactLog(spark, s"${outDir}_summary", batchId,
-              summaryLogSchema(spark), stampSrcBatch = false)
-        }
+        (DataFrame, DataFrame, Map[String, DataFrame])): Unit = {
+    val allKinds = "digests" +: kinds
+    val dirs = allKinds.map(k =>
+      k -> resolveGenDirs(spark, s"$histDir/$k", batchId)).toMap
+    def prior(kind: String): DataFrame =
+      stateOf(spark, kind, dirs(kind), batchId, opts).drop("src_batch")
+    val (decisionsRaw, newDigests, newState) = screen(
+      prior("digests").join(probeDigests, Seq("h"), "left_semi"),
+      kinds.map(k => k -> prior(k)).toMap)
+    val decisions = graft.core.Caches.transient(decisionsRaw)
+    def write(df: DataFrame, dir: String): Unit = {
+      df.write.mode("overwrite").parquet(dir)
+      assertCommitted(spark, dir)
+    }
+    write(decisions, s"$outDir/batch=$batchId")
+    summaryOf.foreach(f =>
+      write(f(decisions).coalesce(1), s"${outDir}_summary/batch=$batchId"))
+    def writeState(kind: String, df: DataFrame): Unit =
+      write(df.withColumn("src_batch", lit(batchId)).coalesce(4),
+        s"$histDir/$kind/batch=$batchId")
+    writeState("digests", newDigests)
+    kinds.foreach(k => writeState(k, newState(k)))
+    if (opts.compactEvery > 0 && batchId > 0 &&
+        batchId % opts.compactEvery == 0) {
+      compactState(spark, histDir, batchId, opts, allKinds)
+      if (opts.compactLogs) {
+        compactLog(spark, outDir, batchId, logSchema, stampSrcBatch = true)
+        if (summaryOf.nonEmpty)
+          compactLog(spark, s"${outDir}_summary", batchId,
+            summaryLogSchema(spark), stampSrcBatch = false)
       }
-    } finally graft.core.Caches.releaseTransients()
+    }
+  }
 
   /** A state kind's rows written by batches < batchId only (the
     * exactly-once contract), read from `dirs` as [[resolveGenDirs]]
@@ -624,22 +622,24 @@ object Streams {
     * the batch's [[graft.multimodal.MultimodalPack.mediaFpRowsOf]]
     * rows, cut once, screened through [[gateBatch]] with state kinds
     * (digests, fps); the history semi-join's probe reads its digests
-    * from the same cut rows. */
+    * from the same cut rows. One scope per batch, as in
+    * [[dedupGateBatch]]. */
   private[graft] def mediaGateBatch(spark: SparkSession, batch: DataFrame,
                                     batchId: Long, outDir: String,
                                     histDir: String,
-                                    opts: GateOptions = GateOptions()): Unit = {
-    import graft.multimodal.MultimodalPack
-    val rows = graft.core.Caches.cut(MultimodalPack.mediaFpRowsOf(
-      batch.select(col("media_id"), col("content"))))
-    gateBatch(spark, batchId, outDir, histDir, opts, Seq("fps"),
-      rows.select(col("h")).distinct(),
-      mediaDecisionsLogSchema(spark), None) { (digests, prior) =>
-      val (decisions, newDigests, newFps) =
-        MultimodalPack.mediaGateWithState(digests, prior("fps"), rows)
-      (decisions, newDigests, Map("fps" -> newFps))
+                                    opts: GateOptions = GateOptions()): Unit =
+    graft.core.Caches.scoped(s"gate batch=$batchId") {
+      import graft.multimodal.MultimodalPack
+      val rows = graft.core.Caches.cut(MultimodalPack.mediaFpRowsOf(
+        batch.select(col("media_id"), col("content"))))
+      gateBatch(spark, batchId, outDir, histDir, opts, Seq("fps"),
+        rows.select(col("h")).distinct(),
+        mediaDecisionsLogSchema(spark), None) { (digests, prior) =>
+        val (decisions, newDigests, newFps) =
+          MultimodalPack.mediaGateWithState(digests, prior("fps"), rows)
+        (decisions, newDigests, Map("fps" -> newFps))
+      }
     }
-  }
 
   /** The media gate's decision-log schema (reader contract for
     * [[mediaIngestGate]]'s `outDir` — the decisions analog of

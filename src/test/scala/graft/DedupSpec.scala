@@ -180,9 +180,15 @@ class DedupSpec extends AnyFunSuite {
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     // the distributed loop directly — the scale path above the
     // small-graph collect threshold
-    val (labels, rounds) = Dedup.dedupGroupsDistributed(pairs)
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    val (got, rounds) = graft.core.Caches.scoped("pointer jumping") {
+      val (labels, rounds) = Dedup.dedupGroupsDistributed(pairs)
+      (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
     assert(got.size == 64 && got.values.forall(_ == 0L))
+    // every round's checkpoint is released once the scope closes
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore,
+      s"${spark.sparkContext.getPersistentRDDs.size - rddsBefore} RDDs outlived the scope")
     // plain min-propagation would need ~63 rounds; jumping collapses
     // the chain in O(log n) (+1 round to detect the fixpoint)
     assert(rounds <= 12, s"took $rounds rounds")

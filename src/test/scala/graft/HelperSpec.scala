@@ -158,6 +158,69 @@ class HelperSpec extends AnyFunSuite {
     graft.core.Caches.releaseTransients()
   }
 
+  test("a gate batch on another thread leaves this thread's cut alive") {
+    import spark.implicits._
+    def txt(seed: String): String = (1 to 20).map(i => seed + i).mkString(" ")
+    val held = graft.core.Caches.cut(Seq(1L, 2L, 3L).toDF("x")).filter($"x" > 1L)
+    val root = java.nio.file.Files.createTempDirectory("graft_xthread").toString
+    val rows = Seq(1L -> txt("alpha"), 2L -> txt("alpha")).toDF("doc_id", "text")
+    @volatile var failure: Option[Throwable] = None
+    val gate = new Thread(() =>
+      try graft.streaming.Streams.dedupGateBatch(spark, rows, 0L,
+        s"$root/decisions", s"$root/hist")
+      catch { case e: Throwable => failure = Some(e) })
+    gate.start()
+    gate.join()
+    assert(failure.isEmpty, s"gate batch failed: $failure")
+    assert(held.count() == 2L)
+  }
+
+  test("concurrent scopes label only their own memo entries") {
+    import spark.implicits._
+    import java.util.concurrent.{CountDownLatch, atomic}
+    val builds = Map("a" -> new atomic.AtomicInteger, "b" -> new atomic.AtomicInteger)
+    def memo(name: String) = graft.core.Artifacts.memo(spark, s"scope_spec:$name") {
+      builds(name).incrementAndGet()
+      Seq(name).toDF("s")
+    }
+    // both scopes are open while both memos are built
+    val open = new CountDownLatch(2)
+    val built = new CountDownLatch(2)
+    val frames = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]
+    val threads = Seq("a", "b").map(name => new Thread(() =>
+      graft.core.Caches.scoped(name) {
+        open.countDown()
+        open.await()
+        frames.put(name, memo(name))
+        built.countDown()
+        built.await()
+      }))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(builds.values.map(_.get).toSeq == Seq(1, 1))
+    graft.core.Artifacts.dropScope("a")
+    assert(frames.get("a").storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(frames.get("b").storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    memo("a"); memo("b")
+    assert(builds("a").get == 2, "a's entry must be evicted and rebuilt")
+    assert(builds("b").get == 1, "b's entry must survive a's drop")
+    graft.core.Artifacts.dropScope("b")
+  }
+
+  test("a frame used after its scope closes fails with " +
+      "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND") {
+    import spark.implicits._
+    val leaked = graft.core.Caches.scoped("use after release") {
+      val cut = graft.core.Caches.cut(Seq(1L, 2L).toDF("x"))
+      assert(cut.count() == 2L)
+      cut.filter($"x" > 0L)
+    }
+    val e = intercept[Exception](leaked.count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")), e)
+  }
+
   test("small CPU-dense tables spread scan work across all cores") {
     val tb = graft.core.Tables(spark, SparkTestSession.sf)
     val cores = spark.sparkContext.defaultParallelism

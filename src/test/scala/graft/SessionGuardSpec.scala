@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * main object is named by some main source or the benchmark harness,
   * or is on [[Reachable]]'s allowlist with its reason. Each shared
   * oracle derivation has one DuckDB spelling, in the file of the Spark
-  * form it mirrors. A scan of the main sources keeps it that way. */
+  * form it mirrors. Only `Caches` and `Artifacts` cache, persist or
+  * locally checkpoint a frame, so each such frame has an owner that
+  * releases it. A scan of the main sources keeps it that way. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val builder = """SparkSession\s*\.\s*builder""".r
@@ -31,6 +33,13 @@ class SessionGuardSpec extends AnyFunSuite {
     """[\s|]*ELSE (len\()?regexp_split_to_array\(trim\(""").r
   private val nibbleTable = """'0123456789abcdef'""".r
   private val qualityFormula = """0\.3 \* least\(1\.0""".r
+  private val cacheCall = """\.\s*(cache|persist|localCheckpoint)\b""".r
+  /** The owners of query-lifetime and session state: a cache, persist
+    * or local checkpoint anywhere else escapes every scope. */
+  private val cacheOwners = Seq(Paths.get("core", "Caches.scala"),
+    Paths.get("core", "Artifacts.scala"))
+  /** Other files allowed a direct cache call → why. */
+  private val cacheSites = Map.empty[Path, String]
   /** (what, inline pattern, owner file, files keeping a copy → why). */
   private val spellings = Seq(
     ("the word split", wordSplit, Paths.get("text", "TextOps.scala"), Map.empty[Path, String]),
@@ -112,6 +121,15 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(qualityFormula.findFirstIn(
       "      |      + 0.3 * least(1.0, CAST(n AS DOUBLE) / 100.0), 6) AS q").nonEmpty)
     assert(qualityFormula.findFirstIn("least(lit(1.0), n / 100.0)").isEmpty)
+    assert(cacheCall.findFirstIn("val d = docs.cache()").nonEmpty)
+    assert(cacheCall.findFirstIn("batch.select(col(\"x\"))\n  .persist()").nonEmpty)
+    assert(cacheCall.findFirstIn("df.persist(StorageLevel.DISK_ONLY)").nonEmpty)
+    assert(cacheCall.findFirstIn(".groupBy(k).agg(m)\n  .localCheckpoint(true)").nonEmpty)
+    assert(cacheCall.findFirstIn("graft.core.Caches.transient(df)").isEmpty)
+    assert(cacheCall.findFirstIn("graft.core.Caches.cut(df)").isEmpty)
+    assert(cacheCall.findFirstIn("labels.unpersist()").isEmpty)
+    assert(cacheCall.findFirstIn("spark.catalog.cacheTable(\"t\")").isEmpty)
+    assert(cacheCall.findFirstIn(Reachable.code("// a .cache() re-plans")).isEmpty)
   }
 
   test("only core/GraftSession.scala builds a SparkSession; nothing assigns " +
@@ -158,6 +176,19 @@ class SessionGuardSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, "each derivation's one spelling belongs in its " +
       "owner file, called from everywhere else:\n" + offenders.mkString("\n"))
+  }
+
+  test("only core/Caches.scala and core/Artifacts.scala cache, persist or " +
+      "locally checkpoint a frame") {
+    val root = Paths.get("src/main/scala", "graft")
+    (cacheOwners ++ cacheSites.keys).foreach(a =>
+      assert(Files.exists(root.resolve(a)), s"$a missing"))
+    val offenders = mainSources.filterNot(f =>
+        (cacheOwners ++ cacheSites.keys).exists(a => f.endsWith(root.resolve(a))))
+      .flatMap(f => cacheCall.findAllMatchIn(Reachable.code(Files.readString(f)))
+        .map(m => s"$f: ${m.matched}"))
+    assert(offenders.isEmpty, "register the frame through Caches.transient or " +
+      "Caches.cut, so its scope releases it:\n" + offenders.mkString("\n"))
   }
 
   test("every public or private[graft] member of a main object is named " +
