@@ -117,8 +117,20 @@ object Dedup {
   def hash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
-  /** The near-duplicate Jaccard cut every pair miner applies. */
-  private val JaccardThreshold = 0.5
+  /** The near-duplicate Jaccard cut every pair miner, d19's verdict
+    * and the text ingest gate apply. */
+  private[graft] val JaccardThreshold = 0.5
+
+  /** |A∩B| / (|A| + |B| − |A∩B|) — THE Jaccard quotient of both pair
+    * paths; a null intersection (no shared shingle) reads 0. */
+  private def jaccardOf(inter: Column, na: Column, nb: Column): Column = {
+    val i = coalesce(inter, lit(0L))
+    i.cast("double") / (na + nb - i).cast("double")
+  }
+
+  /** The DuckDB twin of [[jaccardOf]], sizes aliased `sa`/`sb` (`n`). */
+  private def jaccardSql(inter: String): String =
+    s"CAST($inter AS DOUBLE) / CAST(sa.n + sb.n - $inter AS DOUBLE)"
 
   /** Distinct (id, 60-bit-hashed shingle) rows — the inverted-index
     * relation. Materialize ONCE and share when several consumers need
@@ -191,13 +203,129 @@ object Dedup {
     inter
       .join(sizes.select(col("id").as("a_id"), col("n").as("na")), Seq("a_id"))
       .join(sizes.select(col("id").as("b_id"), col("n").as("nb")), Seq("b_id"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccardOf(col("inter"), col("na"), col("nb")))
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col("a_id"), col("b_id"), col("inter"), col("na"), col("nb"),
         round(col("jaccard"), 6).as("jaccard"))
   }
+
+  /** The all-pairs DuckDB twin of [[jaccardPairsFromHashed]] over the
+    * (id, sh) relation `hsh` (a stop-shingle cap is the caller's filter
+    * of it), as relation `out` with the same columns. Defines
+    * `<out>_sizes` and `<out>_prs` on the way. */
+  private[graft] def jaccardPairsSql(hsh: String, out: String): String = s"""
+    |${out}_sizes AS (SELECT id, count(*) AS n FROM $hsh GROUP BY id),
+    |${out}_prs AS (SELECT a.id AS a_id, b.id AS b_id, count(*) AS inter
+    |  FROM $hsh a JOIN $hsh b USING (sh) WHERE a.id < b.id GROUP BY 1, 2),
+    |$out AS (SELECT p.a_id, p.b_id, p.inter, sa.n AS na, sb.n AS nb,
+    |    round(${jaccardSql("p.inter")}, 6) AS jaccard
+    |  FROM ${out}_prs p JOIN ${out}_sizes sa ON sa.id = p.a_id
+    |  JOIN ${out}_sizes sb ON sb.id = p.b_id
+    |  WHERE ${jaccardSql("p.inter")} >= $JaccardThreshold)""".stripMargin
+
+  /** The exact shingle-set Jaccard `jac` of each pair of `cand` (two
+    * id columns, named as the caller names them), a's shingles in
+    * `aShingles` (id, sh), b's in `bShingles`: the one verify of the
+    * MinHash screens (d19, s09, the stream gate) and of d21. A pair
+    * with no shared shingle reads 0. a's sizes are counted for cand's
+    * a ids only (`aShingles` may be a whole batch); `bShingles` is
+    * counted as passed, so narrow it to the candidates when it is large
+    * (the gate's history cut). No cache, no cut. */
+  def pairJaccard(cand: DataFrame, aShingles: DataFrame,
+                  bShingles: DataFrame): DataFrame = {
+    val Array(a, b) = cand.columns
+    def side(sh: DataFrame, k: String) = sh.select(col("id").as(k), col("sh"))
+    val inter = cand
+      .join(side(aShingles, a), Seq(a))
+      .join(side(bShingles, b), Seq(b, "sh"))
+      .groupBy(col(a), col(b)).agg(count(lit(1)).as("inter"))
+    val na = side(aShingles, a)
+      .join(cand.select(col(a)).distinct(), Seq(a), "left_semi")
+      .groupBy(col(a)).agg(count(lit(1)).as("na"))
+    val nb = bShingles.groupBy(col("id").as(b)).agg(count(lit(1)).as("nb"))
+    cand
+      .join(inter, Seq(a, b), "left")
+      .join(na, Seq(a))
+      .join(nb, Seq(b))
+      .select(col(a), col(b), jaccardOf(col("inter"), col("na"), col("nb")).as("jac"))
+  }
+
+  /** The DuckDB twin of [[pairJaccard]]: `cand`'s pairs (`a`, `b`), both
+    * sides' shingles in `hsh`, as relation `out` (a, b, jac). Defines
+    * `<out>_sizes` and `<out>_iv` on the way. */
+  private[graft] def pairJaccardSql(cand: String, a: String, b: String,
+                                    hsh: String, out: String): String = s"""
+    |${out}_sizes AS (SELECT id, count(*) AS n FROM $hsh GROUP BY id),
+    |${out}_iv AS (SELECT c.$a, c.$b, count(*) AS inter
+    |  FROM $cand c JOIN $hsh x ON x.id = c.$a
+    |  JOIN $hsh y ON y.id = c.$b AND y.sh = x.sh
+    |  GROUP BY 1, 2),
+    |$out AS (SELECT c.$a, c.$b, ${jaccardSql("coalesce(iv.inter, 0)")} AS jac
+    |  FROM $cand c
+    |  LEFT JOIN ${out}_iv iv ON iv.$a = c.$a AND iv.$b = c.$b
+    |  JOIN ${out}_sizes sa ON sa.id = c.$a
+    |  JOIN ${out}_sizes sb ON sb.id = c.$b)""".stripMargin
+
+  /** The best history match per arriving `id`: the first row of each
+    * id's `pairs` under `order` (score, then hist_id for ties) — max
+    * Jaccard in the MinHash screen, min Hamming in the media gate. */
+  def bestMatch(pairs: DataFrame, id: Column, order: Column*): DataFrame =
+    pairs.withColumn("_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(id)
+          .orderBy(order: _*)))
+      .filter(col("_rn") === 1)
+      .drop("_rn")
+
+  /** The DuckDB twin of [[bestMatch]], as relation `out`. */
+  private[graft] def bestMatchSql(pairs: String, id: String, order: String,
+                                  out: String): String = s"""
+    |$out AS (SELECT * EXCLUDE (_rn) FROM (SELECT *,
+    |    row_number() OVER (PARTITION BY $id ORDER BY $order) AS _rn
+    |  FROM $pairs) WHERE _rn = 1)""".stripMargin
+
+  /** THE decision rule of the text and media ingest gates, over the
+    * [[digestScreen]] verdicts `screened` (`id`, ex_status) of the
+    * arriving rows `batch` (`id`, h) and their best history matches
+    * `best` (`id`, hist_id, …): `status` is the
+    * exact verdict unless 'exact_new', else 'near_dup_of_history' where
+    * `near` holds, else 'new'; a digest-new arrival carries its match's
+    * hist_id and score `score._2` (−1 and `default` without a match),
+    * every other arrival −1 and `default`. Returns (decisions, the
+    * admitted ids, the admitted digests h — read from `batch`, whose
+    * partitioning the state append keeps), unordered. No cache, no
+    * cut. */
+  def gateDecisions(batch: DataFrame, screened: DataFrame, id: String,
+                    best: DataFrame, near: Column, score: (String, Column),
+                    default: Column): (DataFrame, DataFrame, DataFrame) = {
+    val fresh = col("ex_status") === "exact_new"
+    val decisions = screened.select(col(id), col("ex_status"))
+      .join(best, Seq(id), "left")
+      .select(col(id),
+        when(!fresh, col("ex_status"))
+          .when(near, "near_dup_of_history").otherwise("new").as("status"),
+        when(fresh, coalesce(col("hist_id"), lit(-1L))).otherwise(lit(-1L))
+          .as("best_hist_id"),
+        when(fresh, coalesce(score._2, default)).otherwise(default)
+          .as(score._1))
+    val admitted = decisions.filter(col("status") === "new").select(col(id))
+    (decisions, admitted, batch.join(admitted, Seq(id)).select(col("h")))
+  }
+
+  /** The DuckDB twin of [[gateDecisions]]' decisions over
+    * [[digestScreenSql]]'s `ex` and the best matches `best`, aliased `b`
+    * in `near` and `score._2`, as relation `out`. */
+  private[graft] def gateDecisionsSql(ex: String, best: String, id: String,
+                                      near: String, score: (String, String),
+                                      default: String, out: String): String = s"""
+    |$out AS (SELECT e.$id,
+    |  CASE WHEN e.ex_status <> 'exact_new' THEN e.ex_status
+    |       WHEN $near THEN 'near_dup_of_history'
+    |       ELSE 'new' END AS status,
+    |  CAST(CASE WHEN e.ex_status <> 'exact_new' THEN -1
+    |       ELSE coalesce(b.hist_id, -1) END AS BIGINT) AS best_hist_id,
+    |  CASE WHEN e.ex_status <> 'exact_new' THEN $default
+    |       ELSE coalesce(${score._2}, $default) END AS ${score._1}
+    |FROM $ex e LEFT JOIN $best b ON b.$id = e.$id)""".stripMargin
 
   /** 32-bit base hash of a shingle (md5 prefix — hashed ONCE). */
   def hash32(c: Column): Column =

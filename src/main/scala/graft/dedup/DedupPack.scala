@@ -226,7 +226,8 @@ object DedupPack extends QueryPack {
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         coalesce(col("hist_id"), lit(-1L)).as("best_hist_id"),
         round(coalesce(col("jac"), lit(0.0)), 6).as("best_jaccard"),
-        when(coalesce(col("jac"), lit(0.0)) >= 0.5, "near_dup_of_history")
+        when(coalesce(col("jac"), lit(0.0)) >= Dedup.JaccardThreshold,
+          "near_dup_of_history")
           .otherwise("new").as("status"))
       .orderBy(col("doc_id"))
   }
@@ -268,30 +269,8 @@ object DedupPack extends QueryPack {
     val hsh = graft.core.Caches.cut(
       histShingles.select(col("id"), col("sh"))
         .join(cand.select(col("hist_id").as("id")).distinct(), Seq("id"), "left_semi"))
-    val inter = cand
-      .join(batchShingles.select(col("id").as("doc_id"), col("sh")), Seq("doc_id"))
-      .join(hsh.select(col("id").as("hist_id"), col("sh")), Seq("hist_id", "sh"))
-      .groupBy(col("doc_id"), col("hist_id")).agg(count(lit(1)).as("inter"))
-    // shingle-set sizes only for ids that can survive the INNER joins
-    // below (guide §3.2 — pre-filter the aggregation input with the
-    // tiny candidate id sets; per-id counts are unchanged where kept)
-    val nb = batchShingles.select(col("id").as("doc_id"), col("sh"))
-      .join(cand.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("nb"))
-    val nh = hsh.groupBy(col("id").as("hist_id")).agg(count(lit(1)).as("nh"))
-    val d = (c: org.apache.spark.sql.Column) => c.cast("double")
-    val jc = cand
-      .join(inter, Seq("doc_id", "hist_id"), "left")
-      .join(nb, Seq("doc_id"))
-      .join(nh, Seq("hist_id"))
-      .select(col("doc_id"), col("hist_id"),
-        (d(coalesce(col("inter"), lit(0L))) /
-          d(col("nb") + col("nh") - coalesce(col("inter"), lit(0L)))).as("jac"))
-    val best = jc.withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-          .orderBy(col("jac").desc, col("hist_id"))))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("hist_id"), col("jac"))
+    val best = Dedup.bestMatch(Dedup.pairJaccard(cand, batchShingles, hsh),
+      col("doc_id"), col("jac").desc, col("hist_id"))
     (cand, best)
   }
 
@@ -300,35 +279,23 @@ object DedupPack extends QueryPack {
     * relation `hsh` (id, sh): the candidate pairs `<out>_cand`
     * (doc_id, hist_id) between the `doc_id`s of relations `batch` and
     * `hist`, and the best history match per candidate doc as `out`
-    * (doc_id, hist_id, jac). Defines `<out>_sizes`, `<out>_iv` and
-    * `<out>_jc` on the way. */
+    * (doc_id, hist_id, jac). Defines `<out>_jc` (with its
+    * [[Dedup.pairJaccardSql]] relations) on the way. */
   private[graft] def minhashBestMatchSql(bands: String, hsh: String, batch: String,
                                          hist: String, out: String): String = s"""
     |${out}_cand AS (SELECT DISTINCT b.id AS doc_id, h.id AS hist_id
     |  FROM $bands b JOIN $bands h ON b.band = h.band AND b.bandsig = h.bandsig
     |  JOIN $batch bq ON bq.doc_id = b.id JOIN $hist hq ON hq.doc_id = h.id),
-    |${out}_sizes AS (SELECT id, count(*) AS n FROM $hsh GROUP BY id),
-    |${out}_iv AS (SELECT c.doc_id, c.hist_id, count(*) AS inter
-    |  FROM ${out}_cand c JOIN $hsh a ON a.id = c.doc_id
-    |  JOIN $hsh h2 ON h2.id = c.hist_id AND h2.sh = a.sh
-    |  GROUP BY 1, 2),
-    |${out}_jc AS (SELECT c.doc_id, c.hist_id,
-    |    CAST(coalesce(iv.inter, 0) AS DOUBLE)
-    |      / CAST(sa.n + sb.n - coalesce(iv.inter, 0) AS DOUBLE) AS jac
-    |  FROM ${out}_cand c
-    |  LEFT JOIN ${out}_iv iv ON iv.doc_id = c.doc_id AND iv.hist_id = c.hist_id
-    |  JOIN ${out}_sizes sa ON sa.id = c.doc_id
-    |  JOIN ${out}_sizes sb ON sb.id = c.hist_id),
-    |$out AS (SELECT doc_id, hist_id, jac FROM (SELECT doc_id, hist_id, jac,
-    |    row_number() OVER (PARTITION BY doc_id ORDER BY jac DESC, hist_id) AS rn
-    |  FROM ${out}_jc) WHERE rn = 1)""".stripMargin
+    |${Dedup.pairJaccardSql(s"${out}_cand", "doc_id", "hist_id", hsh, s"${out}_jc")},
+    |${Dedup.bestMatchSql(s"${out}_jc", "doc_id", "jac DESC, hist_id", out)}""".stripMargin
 
   /** The composed continuous-ingest DEDUP GATE (s09's relation, the
     * per-micro-batch body of the streaming gate): d16's exact digest
     * screen first ([[Dedup.digestScreen]]: 'dup_of_history',
     * 'dup_in_batch'), then d19's MinHash-LSH screen for the digest-new
     * remainder — 'near_dup_of_history' at d02's 0.5 Jaccard, else
-    * 'new' (admit).
+    * 'new' (admit): [[Dedup.gateDecisions]], the rule the media gate
+    * shares.
     * Exact screens before fuzzy for the same reason d18 collapses
     * before mining: a byte-identical copy never reaches the candidate
     * joins. History arrives as its PERSISTED derived relations
@@ -390,21 +357,9 @@ object DedupPack extends QueryPack {
     // below never read them, and Catalyst cannot prune an unused
     // left join) — measured ~1/3 of the gate's jobs before the split
     val (_, fzBest) = minhashBestMatch(histSigs, histShingles, sSigs, sSh)
-    val decisions = ex.select(col("doc_id"), col("ex_status"))
-      .join(fzBest, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ex_status") =!= "exact_new", col("ex_status"))
-          .otherwise(when(coalesce(col("jac"), lit(0.0)) >= 0.5,
-            "near_dup_of_history").otherwise("new")).as("status"),
-        when(col("ex_status") =!= "exact_new", lit(-1L))
-          .otherwise(coalesce(col("hist_id"), lit(-1L)))
-          .as("best_hist_id"),
-        when(col("ex_status") =!= "exact_new", lit(0.0))
-          .otherwise(round(coalesce(col("jac"), lit(0.0)), 6))
-          .as("best_jaccard"))
-    val newIds = decisions.filter(col("status") === "new")
-      .select(col("doc_id"))
-    val newDigests = b.join(newIds, Seq("doc_id")).select(col("h"))
+    val (decisions, newIds, newDigests) = Dedup.gateDecisions(b, ex, "doc_id",
+      fzBest, near = col("jac") >= Dedup.JaccardThreshold,
+      score = "best_jaccard" -> round(col("jac"), 6), default = lit(0.0))
     val newSigs = sSigs.join(newIds, Seq("doc_id"))
       .select(col("doc_id").as("hist_id"), col("band"), col("bandsig"))
     val newShingles = sSh
@@ -614,23 +569,11 @@ object DedupPack extends QueryPack {
       .groupBy(col("a_id"), col("b_id"))
       .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("m"))
     val shRows = corpusShingles.join(repIds, Seq("id"), "left_semi")
-    val sizes = shRows.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(shRows.select(col("id").as("a_id"), col("sh")), Seq("a_id"))
-      .join(shRows.select(col("id").as("b_id"), col("sh")), Seq("b_id", "sh"))
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
-    val d = (c: org.apache.spark.sql.Column) => c.cast("double")
-    val perPair = cand
+    val perPair = Dedup.pairJaccard(cand, shRows, shRows)
       .join(matches, Seq("a_id", "b_id"))
-      .join(inter, Seq("a_id", "b_id"), "left")
-      .join(sizes.select(col("id").as("a_id"), col("n").as("na")), Seq("a_id"))
-      .join(sizes.select(col("id").as("b_id"), col("n").as("nb")), Seq("b_id"))
       .join(reps.select(col("rep_id").as("a_id"), col("cm").as("wa")), Seq("a_id"))
       .join(reps.select(col("rep_id").as("b_id"), col("cm").as("wb")), Seq("b_id"))
-      .select(col("m"), (col("wa") * col("wb")).as("w"),
-        round(d(coalesce(col("inter"), lit(0L))) /
-          d(col("na") + col("nb") - coalesce(col("inter"), lit(0L))), 9)
-          .as("jac"))
+      .select(col("m"), (col("wa") * col("wb")).as("w"), round(col("jac"), 9).as("jac"))
     val cross = perPair.select(col("m"), col("w"),
       (col("w").cast("decimal(28,9)") * col("jac").cast("decimal(28,9)"))
         .cast("decimal(38,9)").as("wj"),
@@ -638,9 +581,9 @@ object DedupPack extends QueryPack {
         round(abs(col("m").cast("double") / lit(12.0) - col("jac")), 9)
           .cast("decimal(28,9)")).cast("decimal(38,9)").as("we"))
     // intra-class pairs: all bands equal -> m = 12, J = 1, error = 0;
-    // a class has shingles iff its rep has a shingle-set size
+    // a class has shingles iff its rep has shingle rows
     val intra = reps.filter(col("cm") > 1)
-      .join(sizes.select(col("id").as("rep_id")), Seq("rep_id"), "left_semi")
+      .join(shRows.select(col("id").as("rep_id")), Seq("rep_id"), "left_semi")
       .select(lit(12L).as("m"),
         ((col("cm") * (col("cm") - lit(1L))) / lit(2L)).cast("long").as("w"),
         ((col("cm") * (col("cm") - lit(1L))) / lit(2L))
@@ -655,10 +598,10 @@ object DedupPack extends QueryPack {
       .select(col("m"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
         when(coalesce(col("n_pairs"), lit(0L)) > 0,
-          round(col("sj").cast("double") / d(col("n_pairs")), 6))
+          round(col("sj").cast("double") / col("n_pairs").cast("double"), 6))
           .as("mean_jaccard"),
         when(coalesce(col("n_pairs"), lit(0L)) > 0,
-          round(col("se").cast("double") / d(col("n_pairs")), 6))
+          round(col("se").cast("double") / col("n_pairs").cast("double"), 6))
           .as("mean_abs_err"))
       .orderBy(col("m"))
   }
@@ -1086,13 +1029,8 @@ object DedupPack extends QueryPack {
   /** The d08 recursive component chain (Jaccard pairs → bidirectional
     * edges → transitive reachability → min-label keepers) — shared by
     * the d08 and d14 oracles. Assumes aug/sh/hsh CTEs in scope. */
-  private val dedupGroupsCtes = """
-    |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
-    |prs AS (SELECT a.id AS a_id, b.id AS b_id, count(*) AS inter
-    |  FROM hsh a JOIN hsh b USING (sh) WHERE a.id < b.id GROUP BY 1, 2),
-    |jp AS (SELECT p.a_id, p.b_id
-    |  FROM prs p JOIN sizes sa ON sa.id = p.a_id JOIN sizes sb ON sb.id = p.b_id
-    |  WHERE CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE) >= 0.5),
+  private val dedupGroupsCtes = s"""
+    |${Dedup.jaccardPairsSql("hsh", "jp")},
     |bi AS (SELECT a_id AS s, b_id AS d FROM jp
     |  UNION SELECT b_id, a_id FROM jp),
     |reach AS (SELECT s, d FROM bi
@@ -1196,18 +1134,9 @@ object DedupPack extends QueryPack {
       |  FROM cand c JOIN mh x ON x.id = c.a_id
       |  JOIN mh y ON y.id = c.b_id AND y.seed = x.seed
       |  GROUP BY 1, 2),
-      |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
-      |iv AS (SELECT c.a_id, c.b_id, count(*) AS inter
-      |  FROM cand c JOIN hsh a2 ON a2.id = c.a_id
-      |  JOIN hsh b2 ON b2.id = c.b_id AND b2.sh = a2.sh
-      |  GROUP BY 1, 2),
-      |pp AS (SELECT mm.m,
-      |    round(CAST(coalesce(iv.inter, 0) AS DOUBLE)
-      |      / CAST(sa.n + sb.n - coalesce(iv.inter, 0) AS DOUBLE), 9) AS jac
-      |  FROM cand c
-      |  JOIN mm ON mm.a_id = c.a_id AND mm.b_id = c.b_id
-      |  LEFT JOIN iv ON iv.a_id = c.a_id AND iv.b_id = c.b_id
-      |  JOIN sizes sa ON sa.id = c.a_id JOIN sizes sb ON sb.id = c.b_id),
+      |${Dedup.pairJaccardSql("cand", "a_id", "b_id", "hsh", "pj")},
+      |pp AS (SELECT mm.m, round(pj.jac, 9) AS jac
+      |  FROM pj JOIN mm ON mm.a_id = pj.a_id AND mm.b_id = pj.b_id),
       |ag AS (SELECT m, count(*) AS n_pairs,
       |    sum(CAST(jac AS DECIMAL(28,9))) AS sj,
       |    sum(CAST(round(abs(CAST(m AS DOUBLE) / 12.0 - jac), 9)
@@ -1225,16 +1154,8 @@ object DedupPack extends QueryPack {
       |ORDER BY m""".stripMargin,
     "d20_pair_band_counts" -> s"""
       |WITH $augmentedSql, $augShinglesSql,
-      |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
-      |prs AS (SELECT a.id AS a_id, b.id AS b_id, count(*) AS inter
-      |  FROM hsh a JOIN hsh b USING (sh) WHERE a.id < b.id GROUP BY 1, 2),
-      |jb AS (SELECT CAST(floor(round(
-      |      CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE),
-      |      6) * 10) AS BIGINT) AS b10
-      |  FROM prs p JOIN sizes sa ON sa.id = p.a_id
-      |  JOIN sizes sb ON sb.id = p.b_id
-      |  WHERE CAST(p.inter AS DOUBLE)
-      |      / CAST(sa.n + sb.n - p.inter AS DOUBLE) >= 0.5),
+      |${Dedup.jaccardPairsSql("hsh", "jp")},
+      |jb AS (SELECT CAST(floor(jaccard * 10) AS BIGINT) AS b10 FROM jp),
       |cnt AS (SELECT b10, count(*) AS n FROM jb GROUP BY b10)
       |SELECT CAST(g.b10 AS DOUBLE) / 10.0 AS band,
       |  CAST(coalesce(cnt.n, 0) AS BIGINT) AS n_pairs
@@ -1245,15 +1166,8 @@ object DedupPack extends QueryPack {
       |rare AS (SELECT sh AS rsh FROM (SELECT sh, count(*) AS df_ FROM hsh GROUP BY sh)
       |  WHERE df_ <= 20),
       |shf AS (SELECT id, sh FROM hsh JOIN rare ON hsh.sh = rare.rsh),
-      |sizes AS (SELECT id, count(*) AS n FROM shf GROUP BY id),
-      |pairs AS (SELECT a.id AS a_id, b.id AS b_id, count(*) AS inter
-      |  FROM shf a JOIN shf b USING (sh) WHERE a.id < b.id GROUP BY 1, 2)
-      |SELECT p.a_id, p.b_id, p.inter,
-      |  sa.n AS na, sb.n AS nb,
-      |  round(CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE), 6) AS jaccard
-      |FROM pairs p JOIN sizes sa ON sa.id = p.a_id JOIN sizes sb ON sb.id = p.b_id
-      |WHERE CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE) >= 0.5
-      |ORDER BY a_id, b_id""".stripMargin,
+      |${Dedup.jaccardPairsSql("shf", "jp")}
+      |SELECT * FROM jp ORDER BY a_id, b_id""".stripMargin,
     "d18_keep_best" -> s"""
       |WITH RECURSIVE $augmentedSql, $augShinglesSql,
       |$dedupGroupsCtes,
@@ -1309,23 +1223,16 @@ object DedupPack extends QueryPack {
       |  CAST(coalesce(nc.n_candidates, 0) AS BIGINT) AS n_candidates,
       |  CAST(coalesce(b.hist_id, -1) AS BIGINT) AS best_hist_id,
       |  round(coalesce(b.jac, 0.0), 6) AS best_jaccard,
-      |  CASE WHEN coalesce(b.jac, 0.0) >= 0.5 THEN 'near_dup_of_history'
-      |       ELSE 'new' END AS status
+      |  CASE WHEN coalesce(b.jac, 0.0) >= ${Dedup.JaccardThreshold}
+      |       THEN 'near_dup_of_history' ELSE 'new' END AS status
       |FROM bq a
       |LEFT JOIN nc ON nc.doc_id = a.doc_id
       |LEFT JOIN mb b ON b.doc_id = a.doc_id
       |ORDER BY a.doc_id""".stripMargin,
     "d02_jaccard_pairs" -> s"""
       |WITH $augmentedSql, $augShinglesSql,
-      |sizes AS (SELECT id, count(*) AS n FROM hsh GROUP BY id),
-      |pairs AS (SELECT a.id AS a_id, b.id AS b_id, count(*) AS inter
-      |  FROM hsh a JOIN hsh b USING (sh) WHERE a.id < b.id GROUP BY 1, 2)
-      |SELECT p.a_id, p.b_id, p.inter,
-      |  sa.n AS na, sb.n AS nb,
-      |  round(CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE), 6) AS jaccard
-      |FROM pairs p JOIN sizes sa ON sa.id = p.a_id JOIN sizes sb ON sb.id = p.b_id
-      |WHERE CAST(p.inter AS DOUBLE) / CAST(sa.n + sb.n - p.inter AS DOUBLE) >= 0.5
-      |ORDER BY a_id, b_id""".stripMargin,
+      |${Dedup.jaccardPairsSql("hsh", "jp")}
+      |SELECT * FROM jp ORDER BY a_id, b_id""".stripMargin,
     "d03_minhash_candidates" -> s"""
       |WITH $augmentedSql, $augShinglesSql,
       |$minhashBandsSql

@@ -24,25 +24,23 @@ object EmbedStage {
     * Serializable (shipped to executors) and deterministic per text
     * if their queries are to be oracle- or replay-checked. */
   trait Embedder extends Serializable {
-    def dim: Int
     def embed(text: String): Array[Double]
   }
 
   /** Deterministic feature-hashing encoder (the signed hashing trick,
     * Weinberger et al. 2009): tokens = lowercased `[a-z0-9]+` runs;
     * each token occurrence adds ±1 to the md5-chosen dimension
-    * (first hex nibble = bucket, second nibble's high bit = sign);
-    * the vector is L2-normalized. Pure integer accumulation + one
-    * sqrt, so the embedding replays bit-identically in SQL on any
-    * engine with md5 — this is the test-mode encoder that makes the
+    * (first hex nibble = bucket, so the vector has exactly 16
+    * dimensions; second nibble's high bit = sign); the vector is
+    * L2-normalized. Pure integer accumulation + one sqrt, so the
+    * embedding replays bit-identically in SQL on any engine with
+    * md5 — this is the test-mode encoder that makes the
     * L1 stage hash-checkable end to end (query l09). A production
     * deployment swaps in a model-backed [[Embedder]] at this seam;
     * nothing downstream changes. */
-  final class HashingEmbedder(val dim: Int = 16) extends Embedder {
-    require(dim == 16, "bucket = first md5 nibble: dim is fixed at 16")
-
+  final class HashingEmbedder extends Embedder {
     override def embed(text: String): Array[Double] = {
-      val v = new Array[Double](dim)
+      val v = new Array[Double](16)
       val md = MessageDigest.getInstance("MD5")
       // Locale.ROOT: default-locale lowercasing is executor-JVM state
       // (tr_TR turns "TITLE" into "tıtle" and splits the token), and

@@ -75,6 +75,10 @@ object Multimodal {
   val DhashGridCols = 11
   val DhashBits: Int = DhashGridRows * (DhashGridCols - 1) // 60
 
+  /** The 60-bit dHash: [[gridHash]] over the image grid. */
+  def dHash(content: Column): Column =
+    gridHash(content, "px", DhashGridRows, DhashGridCols)
+
   /** The audio grid: 12 pitch-class bins × 6 time frames — the
     * normalized energy surface a chromaprint-style pipeline reduces
     * every window to, so fingerprints are comparable across

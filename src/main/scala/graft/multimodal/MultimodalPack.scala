@@ -223,43 +223,27 @@ object MultimodalPack extends QueryPack {
   private[graft] def videoUnitFps(spark: SparkSession,
                                   dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"video_unit_fps:$dir")(
-      unitFps(videoFrames(spark, dir).select(col("video_id").as("item_id"),
-          col("frame_idx").as("unit_idx"), col("content")),
-        Multimodal.gridHash(_, "px", Multimodal.DhashGridRows, Multimodal.DhashGridCols)))
+      fpRowsOf(videoFrames(spark, dir).select(col("video_id").as("item_id"),
+          col("frame_idx").as("unit_idx"), col("content")), Multimodal.dHash))
 
   /** (item, unit, digest, chroma fingerprint) — mm08's window pass. */
   private[graft] def audioUnitFps(spark: SparkSession,
                                   dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"audio_unit_fps:$dir")(
-      unitFps(audioWindows(spark, dir).select(col("audio_id").as("item_id"),
+      fpRowsOf(audioWindows(spark, dir).select(col("audio_id").as("item_id"),
           col("window_idx").as("unit_idx"), col("content")),
         Multimodal.gridHash(_, "ch", Multimodal.ChromaBins, Multimodal.ChromaFrames)))
 
-  /** (media_id, h, fp) — content digest and 60-bit dHash per
-    * (media_id, content) row: the ONE media derivation. The session
-    * artifacts, the streaming media gate and its s12 twin all call it,
-    * so an id-filter of an artifact is the same rows as this over the
-    * id-filtered media (per-row derivation — spec-pinned). The
-    * repartition spreads the per-row compute: content is tens of
-    * bytes/row while the fingerprint math is the cost, so byte-
-    * proportional scan splits underfeed it. */
-  private[graft] def mediaFpRowsOf(media: DataFrame): DataFrame =
-    media.repartition(media.sparkSession.sparkContext.defaultParallelism)
-      .select(col("media_id"),
-        md5(Multimodal.hexOf(col("content"))).as("h"),
-        Multimodal.gridHash(col("content"), "px", Multimodal.DhashGridRows,
-          Multimodal.DhashGridCols).as("fp"))
-
-  /** [[mediaFpRowsOf]] over the mm06 scene fixture. */
+  /** [[fpRowsOf]] (dHash) over the mm06 scene fixture. */
   private[graft] def sceneFps(spark: SparkSession, dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"scene_fps:$dir")(
-      mediaFpRowsOf(sceneMedia(spark, dir)))
+      fpRowsOf(sceneMedia(spark, dir), Multimodal.dHash))
 
-  /** [[mediaFpRowsOf]] over the s12 gate fixture. */
+  /** [[fpRowsOf]] (dHash) over the s12 gate fixture. */
   private[graft] def gateMediaFps(spark: SparkSession,
                                   dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"gate_media_fps:$dir")(
-      mediaFpRowsOf(gateMedia(spark, dir)))
+      fpRowsOf(gateMedia(spark, dir), Multimodal.dHash))
 
   override val artifacts: Map[String, (SparkSession, String) => DataFrame] =
     Map("video_unit_fps" -> videoUnitFps,
@@ -267,26 +251,32 @@ object MultimodalPack extends QueryPack {
       "scene_fps" -> sceneFps,
       "gate_media_fps" -> gateMediaFps)
 
-  /** ONE decode/fingerprint pass over the unit fan-out, projected to
-    * a COMPACT frame — (item, unit, digest, fingerprint), never the
-    * content bytes: localCheckpointing raw frames/windows is a §5
-    * memory/spill hazard at scale (r14 verdict finding 2); the
-    * containment decisions need only these proxy rows (guide §8). The
-    * repartition spreads the per-row fingerprint compute — content
-    * is tens of bytes/row while the fingerprint math is the cost, so
-    * byte-proportional splits would serialize it. Trade-off, chosen
-    * deliberately: fp is computed for every unit rather than only
-    * digest representatives — unit-level exact dups are near-zero in
-    * these fixtures (planted trims RE-encode, so bytes differ), and
-    * one pass with no binary checkpoint beats two passes with one;
-    * an exact-dup-heavy corpus would put a d18 digest collapse in
-    * front of the decode instead. */
-  private[graft] def unitFps(units: DataFrame,
-                             fp: Column => Column): DataFrame =
-    units.repartition(units.sparkSession.sparkContext.defaultParallelism)
-      .select(col("item_id"), col("unit_idx"),
-        md5(Multimodal.hexOf(col("content"))).as("d"),
-        fp(col("content")).as("simhash"))
+  /** (keys…, h, fp) — the ONE decode/fingerprint pass of the media
+    * tier: per row of a relation of key columns plus `content`, the
+    * content digest `h` and the perceptual fingerprint `fp` (the
+    * FakeDecoder seam — [[Multimodal.dHash]] for images and video
+    * frames, the chroma [[Multimodal.gridHash]] for audio windows).
+    * The session artifacts, the streaming media gate and its s12 twin
+    * all call it, so an id-filter of an artifact is the same rows as
+    * this over the id-filtered media (per-row derivation —
+    * spec-pinned). The frame is COMPACT, never the content bytes:
+    * localCheckpointing raw frames/windows is a §5 memory/spill hazard
+    * at scale (r14 verdict finding 2); the screens need only these
+    * proxy rows (guide §8). The repartition spreads the per-row
+    * compute: content is tens of bytes/row while the fingerprint math
+    * is the cost, so byte-proportional scan splits underfeed it.
+    * Trade-off, chosen deliberately: fp is computed for every row
+    * rather than only digest representatives — exact dups are
+    * near-zero in the unit fixtures (planted trims RE-encode, so bytes
+    * differ), and one pass with no binary checkpoint beats two passes
+    * with one; an exact-dup-heavy corpus would put a d18 digest
+    * collapse in front of the decode instead. */
+  private[graft] def fpRowsOf(rows: DataFrame,
+                              fp: Column => Column): DataFrame =
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism)
+      .select(rows.columns.filter(_ != "content").map(col).toSeq ++ Seq(
+        md5(Multimodal.hexOf(col("content"))).as("h"),
+        fp(col("content")).as("fp")): _*)
 
   /** Offset-consistent clip containment over any per-unit media
     * relation `(item_id, unit_idx, content)` — the shared body of mm07
@@ -320,7 +310,7 @@ object MultimodalPack extends QueryPack {
     * should resolve exact unit-level duplicates first (d18's
     * keep-best discipline) exactly as d22 does for text.
     *
-    * The input is an already-materialized [[unitFps]] frame (a
+    * The input is an already-materialized [[fpRowsOf]] frame (a
     * [[graft.core.Caches.cut]] block or a session artifact — the
     * relation is referenced three times below, so it must not be a
     * raw plan). */
@@ -330,7 +320,7 @@ object MultimodalPack extends QueryPack {
     def key(item: Column, unit: Column) =
       struct(item.as("item"), unit.as("unit"))
     val reps = graft.dedup.Dedup.exactGroups(u,
-        key(col("item_id"), col("unit_idx")), col("d"))
+        key(col("item_id"), col("unit_idx")), col("h"))
       .select(col("keeper_id").as("id"))
     // hammingPairsBandedOf cuts sig exactly once, COMPACT-on-compact
     // (a semi-join over the checkpointed proxy rows — no content pass,
@@ -339,7 +329,7 @@ object MultimodalPack extends QueryPack {
     // the 2·(maxDist+1) band branches re-inlines the reps aggregation
     // + semi-join (measured: 24 → 64 Exchange in the mm07 plan)
     val sig = u
-      .select(key(col("item_id"), col("unit_idx")).as("id"), col("simhash"))
+      .select(key(col("item_id"), col("unit_idx")).as("id"), col("fp").as("simhash"))
       .join(reps, Seq("id"), "left_semi")
     val pairs = graft.dedup.Dedup.hammingPairsBandedOf(sig, maxDist, bits,
       pairPredicate = col("a_id.item") =!= col("b_id.item"))
@@ -431,8 +421,9 @@ object MultimodalPack extends QueryPack {
     * 60-bit perceptual dHash of the digest-new remainder probed
     * against HISTORY fingerprint state through the banded Hamming join
     * ([[graft.dedup.Dedup.hammingProbeBanded]], maxDist 4) —
-    * near_dup_of_history (best = min (hamming, hist_id)), else new.
-    * The batch arrives as its [[mediaFpRowsOf]] rows
+    * near_dup_of_history (best = min (hamming, hist_id)), else new —
+    * the text gate's rule ([[graft.dedup.Dedup.gateDecisions]]).
+    * The batch arrives as its [[fpRowsOf]] rows
     * (media_id, h, fp), lineage-CUT by the caller (the streaming gate
     * derives its history semi-join's probe from the same cut, so each
     * row is digested and fingerprinted once). Returns (decisions, new
@@ -449,7 +440,6 @@ object MultimodalPack extends QueryPack {
                                         histFps: DataFrame,
                                         batchRows: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     // The batch rows arrive lineage-CUT (not just cached): the gate's
     // downstream branches re-canonicalize whatever plan sits here on
     // every action, and the synthetic-content expression trees make
@@ -479,26 +469,12 @@ object MultimodalPack extends QueryPack {
       sFps.select(col("id"), col("fp").as("simhash")),
       histFps.select(col("id"), col("fp").as("simhash")),
       maxDist = 4, bits = Multimodal.DhashBits)
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("hamming"), col("hist_id"))
-    val best = hits.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val best = graft.dedup.Dedup.bestMatch(hits, col("id"), col("hamming"),
+        col("hist_id"))
       .select(col("id").as("media_id"), col("hist_id"), col("hamming"))
-    val decisions = ex.select(col("media_id"), col("ex_status"))
-      .join(best, Seq("media_id"), "left")
-      .select(col("media_id"),
-        when(col("ex_status") =!= "exact_new", col("ex_status"))
-          .when(col("hist_id").isNotNull, "near_dup_of_history")
-          .otherwise("new").as("status"),
-        when(col("ex_status") === "exact_new",
-          coalesce(col("hist_id"), lit(-1L)))
-          .otherwise(lit(-1L)).as("best_hist_id"),
-        when(col("ex_status") === "exact_new",
-          coalesce(col("hamming"), lit(-1L)))
-          .otherwise(lit(-1L)).as("best_hamming"))
-    val newIds = decisions.filter(col("status") === "new")
-      .select(col("media_id"))
-    val newDigests = batchRows.join(newIds, Seq("media_id")).select(col("h"))
+    val (decisions, newIds, newDigests) = graft.dedup.Dedup.gateDecisions(
+      batchRows, ex, "media_id", best, near = col("hist_id").isNotNull,
+      score = "best_hamming" -> col("hamming"), default = lit(-1L))
     val newFps = sFps
       .join(newIds.select(col("media_id").as("id")), Seq("id"))
       .select(col("id"), col("fp"))

@@ -194,7 +194,7 @@ object StreamPack extends QueryPack {
     // rows are id-filters of the session fingerprint artifact
     // ([[MultimodalPack.gateMediaFps]]) — the declared <300 split
     // applied to the shared relation instead of two decode passes per
-    // query (identical rows to [[MultimodalPack.mediaFpRowsOf]], which
+    // query (identical rows to [[MultimodalPack.fpRowsOf]], which
     // the streaming gate runs per batch: per-row derivations commute
     // with id predicates; the s09 gate's discipline)
     val mf = MultimodalPack.gateMediaFps(spark, dir)
@@ -233,15 +233,8 @@ object StreamPack extends QueryPack {
     |${Dedup.digestScreenSql("hq", "bq", "doc_id", "md5(coalesce(text, ''))", "ex")},
     |sv AS (SELECT doc_id FROM ex WHERE ex_status = 'exact_new'),
     |${graft.dedup.DedupPack.minhashBestMatchSql("bands", "hsh", "sv", "hq", "mb")},
-    |dec AS (SELECT ex.doc_id,
-    |  CASE WHEN ex.ex_status <> 'exact_new' THEN ex.ex_status
-    |       WHEN coalesce(b2.jac, 0.0) >= 0.5 THEN 'near_dup_of_history'
-    |       ELSE 'new' END AS status,
-    |  CAST(CASE WHEN ex.ex_status <> 'exact_new' THEN -1
-    |       ELSE coalesce(b2.hist_id, -1) END AS BIGINT) AS best_hist_id,
-    |  CASE WHEN ex.ex_status <> 'exact_new' THEN 0.0
-    |       ELSE round(coalesce(b2.jac, 0.0), 6) END AS best_jaccard
-    |FROM ex LEFT JOIN mb b2 ON b2.doc_id = ex.doc_id)"""
+    |${Dedup.gateDecisionsSql("ex", "mb", "doc_id", s"b.jac >= ${Dedup.JaccardThreshold}",
+        "best_jaccard" -> "round(b.jac, 6)", "0.0", "dec")}"""
     .stripMargin
 
   /** The s07 per-doc quality relation `q(doc_id, content_hash,
@@ -273,22 +266,10 @@ object StreamPack extends QueryPack {
     |gpr AS (SELECT b.media_id, h.media_id AS hist_id,
     |    CAST(bit_count(xor(b.fp, h.fp)) AS BIGINT) AS hamming
     |  FROM gb b JOIN gh h ON bit_count(xor(b.fp, h.fp)) <= 4),
-    |gbst AS (SELECT media_id, hist_id, hamming FROM (
-    |    SELECT media_id, hist_id, hamming, row_number() OVER (
-    |      PARTITION BY media_id ORDER BY hamming, hist_id) AS rn
-    |    FROM gpr) WHERE rn = 1)
-    |SELECT e.media_id,
-    |  CASE WHEN e.ex_status <> 'exact_new' THEN e.ex_status
-    |       WHEN b.hist_id IS NOT NULL THEN 'near_dup_of_history'
-    |       ELSE 'new' END AS status,
-    |  CAST(CASE WHEN e.ex_status = 'exact_new'
-    |       THEN coalesce(b.hist_id, -1) ELSE -1 END AS BIGINT)
-    |    AS best_hist_id,
-    |  CAST(CASE WHEN e.ex_status = 'exact_new'
-    |       THEN coalesce(b.hamming, -1) ELSE -1 END AS BIGINT)
-    |    AS best_hamming
-    |FROM gex e LEFT JOIN gbst b ON b.media_id = e.media_id
-    |ORDER BY e.media_id""".stripMargin
+    |${Dedup.bestMatchSql("gpr", "media_id", "hamming, hist_id", "gbst")},
+    |${Dedup.gateDecisionsSql("gex", "gbst", "media_id", "b.hist_id IS NOT NULL",
+        "best_hamming" -> "b.hamming", "-1", "gdec")}
+    |SELECT * FROM gdec ORDER BY media_id""".stripMargin
   }
 
   val oracles: Map[String, String] = Map(

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Exact
@@ -194,18 +195,29 @@ object Streams {
     * write use the batch writer's `partitionBy`. */
   def extractConfirmRoute(spark: SparkSession, watchDir: String,
                           schema: StructType, outDir: String,
-                          maxFilesPerTrigger: Int = 10)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    watchedFolder(spark, watchDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.pipeline.Lifecycles
-          .confirmRoute(graft.llm.LlmPack.extractLongOn(batch))
-          .write.mode("append").partitionBy("route").parquet(outDir)
-        ()
+                          maxFilesPerTrigger: Int = 10): StreamingQuery =
+    batchStream(watchedFolder(spark, watchDir, schema, maxFilesPerTrigger),
+      outDir + "_ckpt")((batch, _) => routeBatch(batch, outDir))
+
+  /** The watched-folder `foreachBatch` stream behind both gates and
+    * both route lifecycles: `source` (a [[watchedFolder]] stream,
+    * possibly watermarked) runs `body(batch, batchId)` per micro-batch,
+    * with its checkpoint at `ckpt`. */
+  private def batchStream(source: DataFrame, ckpt: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    source.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        body(batch.toDF(), batchId)
       }
-      .option("checkpointLocation", outDir + "_ckpt")
+      .option("checkpointLocation", ckpt)
       .start()
+
+  /** One micro-batch of the route lifecycles: the extraction stage,
+    * confirm/route, and the append to `outDir` partitioned by route. */
+  private def routeBatch(batch: DataFrame, outDir: String): Unit =
+    graft.pipeline.Lifecycles
+      .confirmRoute(graft.llm.LlmPack.extractLongOn(batch))
+      .write.mode("append").partitionBy("route").parquet(outDir)
 
   /** EVENT-TIME form of [[extractConfirmRoute]]: the watched
     * documents carry an `ingest_ts` event-time column (the scan/OCR
@@ -244,20 +256,11 @@ object Streams {
                                    schema: StructType, outDir: String,
                                    lateness: String = "10 minutes",
                                    maxFilesPerTrigger: Int = 10)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    watchedFolder(spark, watchDir, schema, maxFilesPerTrigger)
-      .withWatermark("ingest_ts", lateness)
-      .dropDuplicates("doc_id", "ingest_ts")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.pipeline.Lifecycles
-          .confirmRoute(graft.llm.LlmPack.extractLongOn(
-            batch.select(col("doc_id"), col("text"))))
-          .write.mode("append").partitionBy("route").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", outDir + "_ckpt")
-      .start()
+      : StreamingQuery =
+    batchStream(watchedFolder(spark, watchDir, schema, maxFilesPerTrigger)
+        .withWatermark("ingest_ts", lateness)
+        .dropDuplicates("doc_id", "ingest_ts"),
+      outDir + "_ckpt")((batch, _) => routeBatch(batch, outDir))
 
   /** CONTINUOUS-INGEST DEDUP GATE — the d16+d19 screens running per
     * micro-batch against PERSISTED history state (the round-9 brief:
@@ -305,15 +308,9 @@ object Streams {
   def dedupIngestGate(spark: SparkSession, watchDir: String,
                       schema: StructType, outDir: String, histDir: String,
                       maxFilesPerTrigger: Int = 10,
-                      opts: GateOptions = GateOptions())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    watchedFolder(spark, watchDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dedupGateBatch(spark, batch.toDF(), batchId, outDir, histDir, opts)
-      }
-      .option("checkpointLocation", histDir + "_ckpt")
-      .start()
+                      opts: GateOptions = GateOptions()): StreamingQuery =
+    batchStream(watchedFolder(spark, watchDir, schema, maxFilesPerTrigger),
+      histDir + "_ckpt")(dedupGateBatch(spark, _, _, outDir, histDir, opts))
 
   /** State-lifecycle knobs for [[dedupIngestGate]] (round 11 — the
     * r10 verdict's top item: the gate listed and unioned EVERY
@@ -606,20 +603,14 @@ object Streams {
   def mediaIngestGate(spark: SparkSession, watchDir: String,
                       schema: StructType, outDir: String, histDir: String,
                       maxFilesPerTrigger: Int = 10,
-                      opts: GateOptions = GateOptions())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    watchedFolder(spark, watchDir, schema, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        mediaGateBatch(spark, batch.toDF(), batchId, outDir, histDir, opts)
-      }
-      .option("checkpointLocation", histDir + "_ckpt")
-      .start()
+                      opts: GateOptions = GateOptions()): StreamingQuery =
+    batchStream(watchedFolder(spark, watchDir, schema, maxFilesPerTrigger),
+      histDir + "_ckpt")(mediaGateBatch(spark, _, _, outDir, histDir, opts))
 
   /** ONE micro-batch of the media gate — the foreachBatch body of
     * [[mediaIngestGate]], factored out like [[dedupGateBatch]] so the
     * specs and scale probes can drive long batch sequences directly:
-    * the batch's [[graft.multimodal.MultimodalPack.mediaFpRowsOf]]
+    * the batch's [[graft.multimodal.MultimodalPack.fpRowsOf]] (dHash)
     * rows, cut once, screened through [[gateBatch]] with state kinds
     * (digests, fps); the history semi-join's probe reads its digests
     * from the same cut rows. One scope per batch, as in
@@ -630,8 +621,9 @@ object Streams {
                                     opts: GateOptions = GateOptions()): Unit =
     graft.core.Caches.scoped(s"gate batch=$batchId") {
       import graft.multimodal.MultimodalPack
-      val rows = graft.core.Caches.cut(MultimodalPack.mediaFpRowsOf(
-        batch.select(col("media_id"), col("content"))))
+      val rows = graft.core.Caches.cut(MultimodalPack.fpRowsOf(
+        batch.select(col("media_id"), col("content")),
+        graft.multimodal.Multimodal.dHash))
       gateBatch(spark, batchId, outDir, histDir, opts, Seq("fps"),
         rows.select(col("h")).distinct(),
         mediaDecisionsLogSchema(spark), None) { (digests, prior) =>

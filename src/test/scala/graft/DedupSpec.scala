@@ -331,6 +331,42 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("pairJaccard over the MinHash candidates equals jaccardPairsFromHashed " +
+      "on every pair both return, on the corpus and on an edge frame") {
+    import spark.implicits._
+    /** (a_id, b_id) → (verify Jaccard at 6 dp, all-pairs Jaccard) for
+      * the pairs both paths return. */
+    def agree(docs: org.apache.spark.sql.DataFrame): Map[(Long, Long), (Double, Double)] =
+      graft.core.Caches.scoped("pair jaccard spec") {
+        val sh = DedupPack.shingleRowsOf(docs)
+        val cand = Dedup.minhashCandidatesFromSigs(DedupPack.bandSigsOf(docs, "id"))
+        Dedup.pairJaccard(cand, sh, sh)
+          .join(Dedup.jaccardPairsFromHashed(sh), Seq("a_id", "b_id"))
+          .select(col("a_id"), col("b_id"), round(col("jac"), 6), col("jaccard"))
+          .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+            (r.getDouble(2), r.getDouble(3))).toMap
+      }
+    val corpus = agree(DedupPack.augmented(spark, sf, spread = false))
+    assert(corpus.size >= 90, s"only ${corpus.size} shared pairs")
+    corpus.foreach { case (p, (v, a)) => assert(v == a, s"$p: $v vs $a") }
+    val words = (1 to 20).map(i => s"w$i")
+    val edge = Seq[(Long, String)](
+      (1L, null), (2L, ""), (3L, "one"), (4L, "one two"),
+      (5L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (6L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (7L, words.mkString(" ")),
+      (8L, (words.init :+ "other").mkString(" "))).toDF("doc_id", "text")
+    val e = agree(edge)
+    assert(e.keySet == Set((5L, 6L), (7L, 8L)), s"edge pairs ${e.keySet}")
+    e.foreach { case (p, (v, a)) => assert(v == a, s"$p: $v vs $a") }
+    assert(e((5L, 6L))._1 == 1.0 && e((7L, 8L))._1 == 0.894737)
+    // a candidate pair that shares no shingle reads 0
+    val sh = DedupPack.shingleRowsOf(edge)
+    val disjoint = Dedup.pairJaccard(Seq((5L, 7L)).toDF("a_id", "b_id"), sh, sh)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(disjoint.toSeq == Seq((5L, 7L, 0.0)))
+  }
+
   test("dedup gate never drops a null-text document (null digests as empty)") {
     import spark.implicits._
     // md5(null) is null and a null join key silently vanishes from an

@@ -110,7 +110,7 @@ class MultimodalSpec extends AnyFunSuite {
       .filter(col("media_id") >= 300)
     val art = MultimodalPack.gateMediaFps(spark, sf)
       .filter(col("media_id") >= 300)
-    val derived = MultimodalPack.mediaFpRowsOf(batch)
+    val derived = MultimodalPack.fpRowsOf(batch, graft.multimodal.Multimodal.dHash)
     assert(art.count() > 0)
     assert(art.exceptAll(derived).isEmpty && derived.exceptAll(art).isEmpty)
   }
@@ -293,9 +293,8 @@ class MultimodalSpec extends AnyFunSuite {
       sceneContentCol(concat(lit("vid|f"), col("id") + 100), lit("v1"))
         .as("content"))
     val rows = MultimodalPack.clipContainmentFromUnits(
-        graft.core.Caches.cut(MultimodalPack.unitFps(base.unionByName(clip),
-          Multimodal.gridHash(_, "px", Multimodal.DhashGridRows,
-            Multimodal.DhashGridCols))), maxDist = 4, bits = Multimodal.DhashBits)
+        graft.core.Caches.cut(MultimodalPack.fpRowsOf(base.unionByName(clip),
+          Multimodal.dHash)), maxDist = 4, bits = Multimodal.DhashBits)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))

@@ -33,6 +33,11 @@ class SessionGuardSpec extends AnyFunSuite {
     """[\s|]*ELSE (len\()?regexp_split_to_array\(trim\(""").r
   private val nibbleTable = """'0123456789abcdef'""".r
   private val qualityFormula = """0\.3 \* least\(1\.0""".r
+  private val jaccardQuotient = """CAST\(\w+\.n \+ \w+\.n - """.r
+  private val gateCase = """WHEN \w+\.ex_status <> 'exact_new' THEN""".r
+  private val p02Frozen = Map(Paths.get("pipeline", "PipelinePack.scala") ->
+    ("p02's oracle text is byte-frozen: its DuckDB replay runs out of memory " +
+      "on a 15 GiB box, so no oracle run can check a change to it"))
   private val cacheCall = """\.\s*(cache|persist|localCheckpoint)\b""".r
   /** The owners of query-lifetime and session state: a cache, persist
     * or local checkpoint anywhere else escapes every scope. */
@@ -43,11 +48,11 @@ class SessionGuardSpec extends AnyFunSuite {
   /** (what, inline pattern, owner file, files keeping a copy → why). */
   private val spellings = Seq(
     ("the word split", wordSplit, Paths.get("text", "TextOps.scala"), Map.empty[Path, String]),
-    ("the hex nibble table", nibbleTable, Paths.get("dedup", "Dedup.scala"),
-      Map(Paths.get("pipeline", "PipelinePack.scala") -> ("p02's oracle text is " +
-        "byte-frozen: its DuckDB replay runs out of memory on a 15 GiB box, so " +
-        "no oracle run can check a change to it"))),
+    ("the hex nibble table", nibbleTable, Paths.get("dedup", "Dedup.scala"), p02Frozen),
     ("the quality formula", qualityFormula, Paths.get("text", "TextAnalysis.scala"),
+      Map.empty[Path, String]),
+    ("the Jaccard quotient", jaccardQuotient, Paths.get("dedup", "Dedup.scala"), p02Frozen),
+    ("the gate decision CASE", gateCase, Paths.get("dedup", "Dedup.scala"),
       Map.empty[Path, String]))
   private val envReaders = Seq(Paths.get("Bench.scala"),
     Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
@@ -121,6 +126,22 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(qualityFormula.findFirstIn(
       "      |      + 0.3 * least(1.0, CAST(n AS DOUBLE) / 100.0), 6) AS q").nonEmpty)
     assert(qualityFormula.findFirstIn("least(lit(1.0), n / 100.0)").isEmpty)
+    assert(jaccardQuotient.findFirstIn("round(CAST(p.inter AS DOUBLE) / " +
+      "CAST(sa.n + sb.n - p.inter AS DOUBLE), 6) AS jaccard").nonEmpty)
+    assert(jaccardQuotient.findFirstIn("    |      / CAST(sa.n + sb.n - " +
+      "coalesce(iv.inter, 0) AS DOUBLE) AS jac").nonEmpty)
+    assert(jaccardQuotient.findFirstIn(
+      "(col(\"na\") + col(\"nb\") - col(\"inter\")).cast(\"double\")").isEmpty)
+    assert(jaccardQuotient.findFirstIn(
+      "round(CAST(n_flagged AS DOUBLE) / CAST(n AS DOUBLE), 6)").isEmpty)
+    assert(gateCase.findFirstIn("  CASE WHEN ex.ex_status <> 'exact_new' " +
+      "THEN ex.ex_status").nonEmpty)
+    assert(gateCase.findFirstIn("  CAST(CASE WHEN e.ex_status <> 'exact_new' " +
+      "THEN -1").nonEmpty)
+    assert(gateCase.findFirstIn("CASE WHEN ex_status = 'exact_new' THEN 'new' " +
+      "ELSE ex_status END AS status").isEmpty)
+    assert(gateCase.findFirstIn(
+      "sv AS (SELECT doc_id FROM ex WHERE ex_status = 'exact_new')").isEmpty)
     assert(cacheCall.findFirstIn("val d = docs.cache()").nonEmpty)
     assert(cacheCall.findFirstIn("batch.select(col(\"x\"))\n  .persist()").nonEmpty)
     assert(cacheCall.findFirstIn("df.persist(StorageLevel.DISK_ONLY)").nonEmpty)
