@@ -360,18 +360,33 @@ object Dedup {
         .as(Seq("seed", "mh")))
   }
 
-  /** MinHash-LSH candidate pairs: seeds grouped into bands, docs
-    * sharing any full band signature pair up — the banded self-join
-    * over a prebuilt (id, band, bandsig) signature relation (the
-    * session artifact path). Candidates only — callers verify with
-    * [[jaccardPairsFromHashed]] when exact Jaccard matters. */
-  def minhashCandidatesFromSigs(sigs: DataFrame): DataFrame = {
-    val a = sigs.select(col("id").as("a_id"), col("band"), col("bandsig"))
-    val b = sigs.select(col("id").as("b_id"), col("band"), col("bandsig"))
-    a.join(b, Seq("band", "bandsig"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
+  /** THE MinHash-LSH band join: the distinct pairs of band-signature
+    * relations `a` × `b` (each (id, band, bandsig)) that share at least
+    * one full band signature and that `pairPredicate` (over the output
+    * ids) admits, as (`ids._1`, `ids._2`). The corpus self-join (d03,
+    * d21) passes one relation as both sides with `a_id < b_id`; the
+    * history probe ([[DedupPack.minhashBestMatch]]: d19, s09, the text
+    * stream gate) passes the batch's and history's signatures with
+    * `lit(true)`. Candidates only — callers verify with [[pairJaccard]]
+    * when exact Jaccard matters. No cache, no cut. */
+  def minhashBandJoin(a: DataFrame, b: DataFrame, ids: (String, String),
+                      pairPredicate: Column): DataFrame = {
+    val (aId, bId) = ids
+    a.select(col("id").as(aId), col("band"), col("bandsig"))
+      .join(b.select(col("id").as(bId), col("band"), col("bandsig")),
+        Seq("band", "bandsig"))
+      .filter(pairPredicate)
+      .select(col(aId), col(bId)).distinct()
   }
+
+  /** The DuckDB twin of [[minhashBandJoin]] over band-signature
+    * relations `a` and `b` (id, band, bandsig), `pred` over their
+    * aliases `a` and `b`, as relation `out`. */
+  private[graft] def minhashBandJoinSql(a: String, b: String, ids: (String, String),
+                                        pred: String, out: String): String = s"""
+    |$out AS (SELECT DISTINCT a.id AS ${ids._1}, b.id AS ${ids._2}
+    |  FROM $a a JOIN $b b ON a.band = b.band AND a.bandsig = b.bandsig
+    |  WHERE $pred)""".stripMargin
 
   /** (id, hv16, hv60) — one row per distinct word per document, both
     * simhash hash widths ([[hash16]], [[hash60]]) riding one text pass.
@@ -655,116 +670,89 @@ object Dedup {
     * neither may re-derive this expression locally. */
   def contentDigest(text: Column): Column = md5(coalesce(text, lit("")))
 
-  /** Banded Hamming near-dup join over an ARBITRARY fingerprint
-    * relation `(id, simhash)` — the d04/d10 banding machinery exposed
-    * for fingerprints that are not text simhashes (mm06's perceptual
-    * image dHash). Same pigeonhole guarantee: `maxDist + 1` bands of
-    * `bits/(maxDist+1)` bits, two fingerprints within `maxDist` bit
-    * flips MUST agree exactly on at least one band, the exact popcount
-    * filter keeps precision. Candidates shuffle on band values, never
-    * an all-pairs scan.
+  /** THE banded Hamming join: every pair of fingerprint relations `a` ×
+    * `b` (each `(id, simhash)` of `bits`-bit fingerprints) within
+    * `maxDist` bit flips that `pairPredicate` (over the output ids)
+    * admits, with its exact Hamming distance, as (`ids._1`, `ids._2`,
+    * hamming). The corpus self-join (d05, d10, d22, mm06,
+    * [[graft.multimodal.MultimodalPack.clipContainmentFromUnits]])
+    * passes one relation as both sides with `a_id < b_id` in the
+    * predicate; the history probe (s12, the streaming media gate)
+    * passes the arrivals and the history fingerprints with `lit(true)`.
+    * Pigeonhole banding: `maxDist + 1` bands of `bits/(maxDist+1)`
+    * bits, so two fingerprints within `maxDist` flips agree exactly on
+    * at least one band; candidates shuffle on band values (a history
+    * relation's fingerprints are only shifted and masked into band
+    * keys, never recomputed), never an all-pairs scan.
     *
-    * `pairPredicate` (over `a_id`/`b_id`) runs INSIDE each band join,
-    * beside the exact Hamming filter — pairs a caller is going to
-    * discard (mm07/mm08's same-item frame pairs) never transit the
-    * cross-band dedup shuffle. This matters when excluded pairs are
-    * per-group-quadratic: real video is temporally self-similar, so
-    * dense frame sampling makes intra-video near-dup pairs grow as the
-    * square of frames-per-video through one shuffle if filtered only
-    * after the aggregation. Identical output to post-filtering
-    * (spec-asserted on a dense-frames fixture). */
-  def hammingPairsBandedOf(sig: DataFrame, maxDist: Int, bits: Int,
-                           pairPredicate: Column = lit(true)): DataFrame = {
-    // lineage-CUT, not just cached: the fingerprint expression trees
-    // (66-md5 dHash, chroma grids, simhash bit-sums) would otherwise be
-    // re-canonicalized by every one of the 2·(maxDist+1) band-branch
-    // references on every action — measured as seconds of
-    // single-threaded driver planning per query
-    val s = graft.core.Caches.cut(sig)
-    val nBands = maxDist + 1
-    val bounds = (0 to nBands).map(i => i * bits / nBands)
-    val cands = (0 until nBands).map { i =>
-      val lo = bounds(i)
-      val width = bounds(i + 1) - lo
-      val band = shiftright(col("simhash"), lo)
-        .bitwiseAND(lit((1L << width) - 1))
-      val a = s.select(col("id").as("a_id"), col("simhash").as("ha"),
-        band.as("bv"))
-      val b = s.select(col("id").as("b_id"), col("simhash").as("hb"),
-        band.as("bv"))
-      // the exact Hamming filter runs INSIDE the band join — applied as
-      // the join evaluates, before the cross-band dedup aggregation
-      // shuffles (the band join itself still shuffles both projections
-      // on bv). Simhash bits over a shared vocabulary
-      // are correlated across documents, so band buckets skew far above
-      // the 2^-width uniform estimate; materializing every intra-bucket
-      // candidate pair into the cross-band dedup shuffle made the 50k-doc
-      // probe SLOWER than the quadratic twin (79 s vs 14 s — PERF.md
-      // round 6). Filtered here, only true near-dup pairs (≈ output
-      // size) reach the dedup aggregation below.
-      a.join(b, Seq("bv"))
-        .filter(col("a_id") < col("b_id"))
-        .filter(pairPredicate)
-        .withColumn("hamming",
-          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
-        .filter(col("hamming") <= maxDist)
-        .select(col("a_id"), col("b_id"), col("hamming"))
-    }.reduce(_ unionByName _)
-    // a pair found by several bands collapses to one row; hamming is a
-    // function of the ids, so min() just picks the constant
-    cands
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(min(col("hamming")).as("hamming"))
-      .select(col("a_id"), col("b_id"), col("hamming"))
-  }
-
-  /** ASYMMETRIC banded Hamming join — probe fingerprints `(id,
-    * simhash)` against a HISTORY fingerprint relation `(id, simhash)`,
-    * emitting every (id, hist_id) pair within `maxDist` bit flips with
-    * its exact Hamming distance. The [[hammingPairsBandedOf]] pigeonhole
-    * machinery with the self-join replaced by a probe-side/history-side
-    * join: candidates shuffle on band values (history is typically a
-    * persisted parquet relation — its dHash is NEVER recomputed, only
-    * shifted/masked into band keys at read, which is three integer ops
-    * per band against 66 md5s for the fingerprint itself), the exact
-    * popcount filter runs inside each band join, and the cross-band
-    * dedup aggregation sees only true near-dup pairs. This is the
-    * perceptual screen of the streaming media ingest gate
-    * ([[graft.streaming.Streams.mediaIngestGate]]). */
-  def hammingProbeBanded(probe: DataFrame, hist: DataFrame,
-                         maxDist: Int, bits: Int): DataFrame = {
-    val p = graft.core.Caches.transient(probe)
+    * The pair predicate and the exact popcount filter run INSIDE each
+    * band join, before the cross-band dedup aggregation shuffles (the
+    * band join itself still shuffles both projections on bv). Simhash
+    * bits over a shared vocabulary are correlated across documents, so
+    * band buckets skew far above the 2^-width uniform estimate;
+    * materializing every intra-bucket candidate pair into the
+    * cross-band shuffle made the 50k-doc probe SLOWER than the
+    * quadratic twin (79 s vs 14 s — PERF.md round 6). Pairs a caller
+    * discards (mm07/mm08's same-item unit pairs, per-item-quadratic in
+    * temporally self-similar media) likewise never transit that
+    * shuffle; identical output to post-filtering (spec-asserted on a
+    * dense-frames fixture).
+    *
+    * Each side is read once per band, so both must be materialized (a
+    * [[graft.core.Caches.cut]] or a persisted relation): uncut, the
+    * fingerprint expression trees (66-md5 dHash, chroma grids, simhash
+    * bit-sums) are re-canonicalized by every band branch on every
+    * action — measured as seconds of single-threaded driver planning
+    * per query. No cache, no cut: the caller owns those. */
+  def hammingBandJoin(a: DataFrame, b: DataFrame, ids: (String, String),
+                      maxDist: Int, bits: Int, pairPredicate: Column): DataFrame = {
+    val (aId, bId) = ids
     val nBands = maxDist + 1
     val bounds = (0 to nBands).map(i => i * bits / nBands)
     (0 until nBands).map { i =>
       val lo = bounds(i)
-      val width = bounds(i + 1) - lo
-      def band(c: Column): Column =
-        shiftright(c, lo).bitwiseAND(lit((1L << width) - 1))
-      val a = p.select(col("id"), col("simhash").as("hp"),
-        band(col("simhash")).as("bv"))
-      val b = hist.select(col("id").as("hist_id"), col("simhash").as("hh"),
-        band(col("simhash")).as("bv"))
-      a.join(b, Seq("bv"))
+      val band = shiftright(col("simhash"), lo)
+        .bitwiseAND(lit((1L << (bounds(i + 1) - lo)) - 1))
+      a.select(col("id").as(aId), col("simhash").as("ha"), band.as("bv"))
+        .join(b.select(col("id").as(bId), col("simhash").as("hb"), band.as("bv")),
+          Seq("bv"))
+        .filter(pairPredicate)
         .withColumn("hamming",
-          bit_count(col("hp").bitwiseXOR(col("hh"))).cast("long"))
+          bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
         .filter(col("hamming") <= maxDist)
-        .select(col("id"), col("hist_id"), col("hamming"))
+        .select(col(aId), col(bId), col("hamming"))
     }.reduce(_ unionByName _)
-      .groupBy(col("id"), col("hist_id"))
+      // a pair found by several bands collapses to one row; hamming is
+      // a function of the ids, so min() just picks the constant
+      .groupBy(col(aId), col(bId))
       .agg(min(col("hamming")).as("hamming"))
   }
 
-  /** The quadratic all-pairs twin of [[hammingPairsBandedOf]] over the
-    * same `(id, simhash)` relation. Kept as the specs' recall oracle:
-    * banding must return exactly its pairs. */
-  private[graft] def hammingPairsAllPairsOf(s: DataFrame,
-                                            maxDist: Int): DataFrame = {
-    val a = s.select(col("id").as("a_id"), col("simhash").as("ha"))
-    val b = s.select(col("id").as("b_id"), col("simhash").as("hb"))
-    a.join(b, col("a_id") < col("b_id"))
+  /** The all-pairs DuckDB twin of [[hammingBandJoin]]: every pair of
+    * relations `a` × `b` (id column `id`, fingerprint column `fp`)
+    * within `maxDist` bit flips that `pred` (over the aliases `a` and
+    * `b`) admits, as relation `out` (`ids._1`, `ids._2`, hamming) —
+    * pair-for-pair the banded join's output by the pigeonhole
+    * argument, and bounded at oracle scale. */
+  private[graft] def hammingJoinSql(a: String, b: String, id: String, fp: String,
+                                    ids: (String, String), maxDist: Int,
+                                    pred: String, out: String): String = s"""
+    |$out AS (SELECT a.$id AS ${ids._1}, b.$id AS ${ids._2},
+    |    CAST(bit_count(xor(a.$fp, b.$fp)) AS BIGINT) AS hamming
+    |  FROM $a a JOIN $b b ON $pred
+    |  WHERE bit_count(xor(a.$fp, b.$fp)) <= $maxDist)""".stripMargin
+
+  /** The quadratic all-pairs twin of [[hammingBandJoin]] over the same
+    * inputs. Kept as the specs' recall oracle: banding must return
+    * exactly its pairs, self-join and history probe alike. */
+  private[graft] def hammingPairsAllPairsOf(a: DataFrame, b: DataFrame,
+                                            ids: (String, String), maxDist: Int,
+                                            pairPredicate: Column): DataFrame = {
+    val (aId, bId) = ids
+    a.select(col("id").as(aId), col("simhash").as("ha"))
+      .join(b.select(col("id").as(bId), col("simhash").as("hb")), pairPredicate)
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
       .filter(col("hamming") <= maxDist)
-      .select(col("a_id"), col("b_id"), col("hamming"))
+      .select(col(aId), col(bId), col("hamming"))
   }
 }

@@ -259,11 +259,9 @@ object DedupPack extends QueryPack {
     // batch's rows itself, and d19 passes an id-filter of a session
     // artifact — a second localCheckpoint would re-materialize either
     // for nothing.
-    val cand = graft.core.Caches.cut(
-      batchSigs
-        .join(histSigs.select(col("hist_id"), col("band"), col("bandsig")),
-          Seq("band", "bandsig"))
-        .select(col("doc_id"), col("hist_id")).distinct())
+    val cand = graft.core.Caches.cut(Dedup.minhashBandJoin(
+      batchSigs.withColumnRenamed("doc_id", "id"),
+      histSigs.withColumnRenamed("hist_id", "id"), "doc_id" -> "hist_id", lit(true)))
     // only the candidates' history shingles: `inter` and `nh` read no
     // other hist_id, so the checkpoint does not grow with history
     val hsh = graft.core.Caches.cut(
@@ -283,9 +281,9 @@ object DedupPack extends QueryPack {
     * [[Dedup.pairJaccardSql]] relations) on the way. */
   private[graft] def minhashBestMatchSql(bands: String, hsh: String, batch: String,
                                          hist: String, out: String): String = s"""
-    |${out}_cand AS (SELECT DISTINCT b.id AS doc_id, h.id AS hist_id
-    |  FROM $bands b JOIN $bands h ON b.band = h.band AND b.bandsig = h.bandsig
-    |  JOIN $batch bq ON bq.doc_id = b.id JOIN $hist hq ON hq.doc_id = h.id),
+    |${Dedup.minhashBandJoinSql(bands, bands, "doc_id" -> "hist_id",
+        s"a.id IN (SELECT doc_id FROM $batch) AND b.id IN (SELECT doc_id FROM $hist)",
+        s"${out}_cand")},
     |${Dedup.pairJaccardSql(s"${out}_cand", "doc_id", "hist_id", hsh, s"${out}_jc")},
     |${Dedup.bestMatchSql(s"${out}_jc", "doc_id", "jac DESC, hist_id", out)}""".stripMargin
 
@@ -398,9 +396,11 @@ object DedupPack extends QueryPack {
 
   /** MinHash-LSH candidate pairs (banded self-join of the session
     * signature artifact — same 12-hash/4-band relation as inline). */
-  def minhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashCandidatesFromSigs(augBandSigs(spark, dir))
+  def minhash(spark: SparkSession, dir: String): DataFrame = {
+    val sigs = augBandSigs(spark, dir)
+    Dedup.minhashBandJoin(sigs, sigs, "a_id" -> "b_id", col("a_id") < col("b_id"))
       .orderBy(col("a_id"), col("b_id"))
+  }
 
   /** SimHash values per augmented doc (aggregated off the session
     * word-hash artifact — same rows as the inline text pass). */
@@ -413,10 +413,12 @@ object DedupPack extends QueryPack {
     * path (pigeonhole bands → equi-join candidates → exact Hamming
     * filter), the scale-safe default; the all-pairs twin remains as
     * the spec cross-check ([[Dedup.hammingPairsAllPairsOf]]). */
-  def simhashNearDups(spark: SparkSession, dir: String): DataFrame =
-    Dedup.hammingPairsBandedOf(Dedup.simhashOf(augWordHashes(spark, dir)
-        .select(col("id"), col("hv16").as("hv")), 16), 2, 16)
+  def simhashNearDups(spark: SparkSession, dir: String): DataFrame = {
+    val s = graft.core.Caches.cut(Dedup.simhashOf(augWordHashes(spark, dir)
+      .select(col("id"), col("hv16").as("hv")), 16))
+    Dedup.hammingBandJoin(s, s, "a_id" -> "b_id", 2, 16, col("a_id") < col("b_id"))
       .orderBy(col("a_id"), col("b_id"))
+  }
 
   /** embeddings ∪ planted near-copies (vec_id+100000, first component
     * bumped by 0.1 → cos ≈ 0.995 against the base on these unit
@@ -488,7 +490,7 @@ object DedupPack extends QueryPack {
     // cut, not cache (compact (id, digest) rows; reps referenced 4×
     // below — the family-wide r15 lineage-cut discipline)
     val classes = graft.core.Caches.cut(
-      corpus.select(col("doc_id"), md5(col("text")).as("h")))
+      corpus.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h")))
     val reps = graft.core.Caches.cut(
       Dedup.exactGroups(classes, col("doc_id"), col("h"))
         .select(col("keeper_id").as("rep_id"), col("n_copies").as("m")))
@@ -560,7 +562,7 @@ object DedupPack extends QueryPack {
     val mh = corpusMinhash.join(repIds, Seq("id"), "left_semi")
     val sigs = bandSigsFromMinhash(mh)
     val cand = graft.core.Caches.cut(
-      Dedup.minhashCandidatesFromSigs(sigs))
+      Dedup.minhashBandJoin(sigs, sigs, "a_id" -> "b_id", col("a_id") < col("b_id")))
     val matches = cand
       .join(mh.select(col("id").as("a_id"), col("seed"), col("mh").as("ma")),
         Seq("a_id"))
@@ -675,21 +677,25 @@ object DedupPack extends QueryPack {
     * where emitting all true pairs is the task itself. */
   private def dedupGroupsArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.core.Artifacts.memo(spark, s"dedup_groups:$dir")(
-      groupsViaExactCollapse(augmented(spark, dir)))
+      groupsViaExactCollapse(augmented(spark, dir), augShingleRows(spark, dir)))
 
-  /** The collapse-first groups pipeline over any (doc_id, text)
-    * corpus — see [[dedupGroupsArtifact]] for the equality argument.
-    * Shared with the spec's direct-path comparison. */
-  private[graft] def groupsViaExactCollapse(corpus: DataFrame): DataFrame = {
+  /** The collapse-first groups pipeline over a (doc_id, text) corpus
+    * and its [[shingleRowsOf]] rows (the session artifact, or the
+    * derivation over the corpus) — see [[dedupGroupsArtifact]] for the
+    * equality argument. Shared with the spec's direct-path
+    * comparison. */
+  private[graft] def groupsViaExactCollapse(corpus: DataFrame,
+                                            corpusShingles: DataFrame): DataFrame = {
     val classes = graft.core.Caches.cut(
-      corpus.select(col("doc_id"), md5(col("text")).as("h")))
+      corpus.select(col("doc_id"), Dedup.contentDigest(col("text")).as("h")))
     val reps = graft.core.Caches.cut(
       Dedup.exactGroups(classes, col("doc_id"), col("h"))
         .select(col("h"), col("keeper_id").as("rep_id"),
           col("n_copies").as("n_members")))
-    val repSh = graft.core.Caches.cut(Dedup.hashedShingleRows(
-      corpus.join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id")),
-      col("doc_id"), col("text")))
+    // rep-only shingles: a semi-join of the corpus shingle rows (the
+    // d20 front; jaccardPairsFromHashed cuts it)
+    val repSh = corpusShingles.join(
+      reps.select(col("rep_id").as("id")), Seq("id"), "left_semi")
     val repGroups = Dedup.dedupGroups(Dedup.jaccardPairsFromHashed(repSh))
     // membership contract unchanged: a doc appears iff it is in some
     // FULL pair — intra-class (class size ≥ 2, content with shingles:
@@ -831,10 +837,12 @@ object DedupPack extends QueryPack {
     * per-band background collisions fall from 2^-5 (d05's 16-bit/3-
     * band layout) to 2^-15, so candidate volume stays near the true
     * near-dup count instead of n²/32. */
-  def simhashWidePairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.hammingPairsBandedOf(Dedup.simhashOf(augWordHashes(spark, dir)
-        .select(col("id"), col("hv60").as("hv")), 60), 3, 60)
+  def simhashWidePairs(spark: SparkSession, dir: String): DataFrame = {
+    val s = graft.core.Caches.cut(Dedup.simhashOf(augWordHashes(spark, dir)
+      .select(col("id"), col("hv60").as("hv")), 60))
+    Dedup.hammingBandJoin(s, s, "a_id" -> "b_id", 3, 60, col("a_id") < col("b_id"))
       .orderBy(col("a_id"), col("b_id"))
+  }
 
   /** d22: d10 BEHIND THE EXACT-COLLAPSE FRONT — the production
     * posture the round-13 adjudication (PERF.md bandblocks table) and
@@ -858,9 +866,9 @@ object DedupPack extends QueryPack {
     // rep ids — identical rows to re-deriving from the rep docs' text
     // (per-row derivation commutes with the id filter)
     val repWh = augWordHashes(spark, dir).join(reps, Seq("id"), "left_semi")
-    Dedup.hammingPairsBandedOf(
-        Dedup.simhashOf(repWh.select(col("id"), col("hv60").as("hv")), 60),
-        3, 60)
+    val s = graft.core.Caches.cut(
+      Dedup.simhashOf(repWh.select(col("id"), col("hv60").as("hv")), 60))
+    Dedup.hammingBandJoin(s, s, "a_id" -> "b_id", 3, 60, col("a_id") < col("b_id"))
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -1126,9 +1134,7 @@ object DedupPack extends QueryPack {
     "d21_minhash_fidelity" -> s"""
       |WITH $augmentedSql, $augShinglesSql,
       |$minhashBandsSql,
-      |cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id
-      |  FROM bands a JOIN bands b ON a.band = b.band AND a.bandsig = b.bandsig
-      |  WHERE a.id < b.id),
+      |${Dedup.minhashBandJoinSql("bands", "bands", "a_id" -> "b_id", "a.id < b.id", "cand")},
       |mm AS (SELECT c.a_id, c.b_id,
       |    sum(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) AS m
       |  FROM cand c JOIN mh x ON x.id = c.a_id
@@ -1235,23 +1241,19 @@ object DedupPack extends QueryPack {
       |SELECT * FROM jp ORDER BY a_id, b_id""".stripMargin,
     "d03_minhash_candidates" -> s"""
       |WITH $augmentedSql, $augShinglesSql,
-      |$minhashBandsSql
-      |SELECT DISTINCT a.id AS a_id, b.id AS b_id
-      |FROM bands a JOIN bands b ON a.band = b.band AND a.bandsig = b.bandsig
-      |WHERE a.id < b.id
-      |ORDER BY a_id, b_id""".stripMargin,
+      |$minhashBandsSql,
+      |${Dedup.minhashBandJoinSql("bands", "bands", "a_id" -> "b_id", "a.id < b.id", "cand")}
+      |SELECT * FROM cand ORDER BY a_id, b_id""".stripMargin,
     "d04_simhash_values" -> s"""
       |WITH $augmentedSql,
       |${Dedup.simhashSql("aug", 16, "sh16")}
       |SELECT id, simhash FROM sh16 ORDER BY id""".stripMargin,
     "d05_simhash_pairs" -> s"""
       |WITH $augmentedSql,
-      |${Dedup.simhashSql("aug", 16, "sh16")}
-      |SELECT a.id AS a_id, b.id AS b_id,
-      |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      |FROM sh16 a JOIN sh16 b ON a.id < b.id
-      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
-      |ORDER BY a_id, b_id""".stripMargin,
+      |${Dedup.simhashSql("aug", 16, "sh16")},
+      |${Dedup.hammingJoinSql("sh16", "sh16", "id", "simhash", "a_id" -> "b_id", 2,
+          "a.id < b.id", "hp")}
+      |SELECT * FROM hp ORDER BY a_id, b_id""".stripMargin,
     "d11_shared_spans" -> s"""
       |WITH $augmentedSql,
       |w AS (SELECT doc_id, ${TextOps.wordsSql("text")} AS words FROM aug),
@@ -1278,24 +1280,20 @@ object DedupPack extends QueryPack {
       |ORDER BY a.doc_id""".stripMargin,
     "d10_simhash_wide" -> s"""
       |WITH $augmentedSql,
-      |${Dedup.simhashSql("aug", 60, "sh60")}
-      |SELECT a.id AS a_id, b.id AS b_id,
-      |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      |FROM sh60 a JOIN sh60 b ON a.id < b.id
-      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      |ORDER BY a_id, b_id""".stripMargin,
+      |${Dedup.simhashSql("aug", 60, "sh60")},
+      |${Dedup.hammingJoinSql("sh60", "sh60", "id", "simhash", "a_id" -> "b_id", 3,
+          "a.id < b.id", "hp")}
+      |SELECT * FROM hp ORDER BY a_id, b_id""".stripMargin,
     "d22_simhash_reps" -> s"""
       |WITH $augmentedSql,
       |rp AS (SELECT min(doc_id) AS doc_id FROM aug
       |  GROUP BY md5(coalesce(text, ''))),
       |ra AS (SELECT a.doc_id, a.text FROM aug a
       |  JOIN rp ON rp.doc_id = a.doc_id),
-      |${Dedup.simhashSql("ra", 60, "sh60")}
-      |SELECT a.id AS a_id, b.id AS b_id,
-      |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      |FROM sh60 a JOIN sh60 b ON a.id < b.id
-      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      |ORDER BY a_id, b_id""".stripMargin,
+      |${Dedup.simhashSql("ra", 60, "sh60")},
+      |${Dedup.hammingJoinSql("sh60", "sh60", "id", "simhash", "a_id" -> "b_id", 3,
+          "a.id < b.id", "hp")}
+      |SELECT * FROM hp ORDER BY a_id, b_id""".stripMargin,
     "d12_semdedup" -> s"""
       |WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |e AS (SELECT vec_id, v FROM e0

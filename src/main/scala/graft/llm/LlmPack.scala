@@ -569,20 +569,13 @@ object LlmPack extends QueryPack {
     |  SELECT doc_id, 'word_count', pwc, wc,
     |    CASE WHEN trim(pwc) = trim(wc) THEN 1 ELSE 0 END FROM parsed)""".stripMargin
 
-  private val ragCte = raw"""
-    |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
-    |pr AS (SELECT q.vec_id AS qid, n.vec_id AS nid, n.label AS nlabel,
-    |        list_dot_product(q.v, n.v) AS sim
-    |      FROM e q JOIN e n ON q.vec_id <> n.vec_id),
-    |r AS (SELECT qid, nid, nlabel, sim,
-    |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-    |      FROM pr WHERE true QUALIFY rnk <= 3),
+  private val ragCte = raw"""${graft.vector.VectorPack.knnCte},
     |sn AS (SELECT doc_id, array_to_string(
     |    (${TextOps.wordsSql("text")})[1:10], ' ') AS snippet
     |  FROM documents),
     |blocks AS (SELECT r.qid, r.rnk, r.nlabel,
     |    '[Document ' || CAST(r.rnk AS VARCHAR) || ']: ' || sn.snippet AS block
-    |  FROM r JOIN sn ON sn.doc_id = r.nid)""".stripMargin
+    |  FROM r JOIN sn ON sn.doc_id = r.nid WHERE r.rnk <= 3)""".stripMargin
 
   /** The BM25 scoring chain (corpus stats → postings → per-term
     * decimal-summed scores → ranked `rb`) — shared by the l07 and l08
@@ -684,13 +677,10 @@ object LlmPack extends QueryPack {
       |FROM f1 GROUP BY ROLLUP(field) ORDER BY field""".stripMargin,
     "l08_hybrid_rrf" -> s"""
       |WITH $bm25Cte,
-      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |pr AS (SELECT q.vec_id AS qid, n.vec_id AS nid,
-      |        list_dot_product(q.v, n.v) AS sim
-      |      FROM e q JOIN e n ON q.vec_id <> n.vec_id WHERE q.vec_id < 20),
-      |dr AS (SELECT qid, nid, row_number() OVER (PARTITION BY qid
-      |        ORDER BY sim DESC, nid) AS drank FROM pr),
-      |dn AS (SELECT qid AS query_id, nid AS doc_id, drank FROM dr WHERE drank <= 3),
+      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
+      |eq AS (SELECT * FROM e WHERE vec_id < 20),
+      |${graft.vector.KnnJoin.searchSql("eq", "e", "dr")},
+      |dn AS (SELECT qid AS query_id, nid AS doc_id, rnk AS drank FROM dr WHERE rnk <= 3),
       |sp AS (SELECT query_id, doc_id, rnk AS srank FROM rb WHERE rnk <= 5),
       |f AS (SELECT coalesce(dn.query_id, sp.query_id) AS query_id,
       |    coalesce(dn.doc_id, sp.doc_id) AS doc_id,

@@ -206,15 +206,6 @@ object FeedbackPack extends QueryPack {
     |         ELSE 'MISMATCH' END AS status
     |  FROM longf WHERE accuracy = 0)""".stripMargin
 
-  private val knnCte = """
-    |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
-    |pr AS (SELECT q.vec_id AS qid, n.vec_id AS nid, n.label AS nlabel,
-    |        q.label AS tlabel, list_dot_product(q.v, n.v) AS sim
-    |      FROM e q JOIN e n ON q.vec_id <> n.vec_id),
-    |r AS (SELECT qid, nid, nlabel, tlabel,
-    |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-    |      FROM pr)""".stripMargin
-
   val oracles: Map[String, String] = Map(
     "f01_field_diffs" -> s"""
       |$diffsCte
@@ -232,7 +223,7 @@ object FeedbackPack extends QueryPack {
       |  CAST(CAST(sum(accuracy) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS accuracy
       |FROM t GROUP BY bucket ORDER BY bucket""".stripMargin),
     "f04_composite_eval" -> s"""
-      |WITH $knnCte,
+      |WITH ${graft.vector.VectorPack.knnCte},
       |c AS (SELECT qid,
       |    CAST(tlabel AS VARCHAR) || ':' ||
       |      (CASE WHEN qid % 2 = 0 THEN 'true' ELSE 'false' END) AS actual,

@@ -413,14 +413,7 @@ object MetricsPack extends QueryPack {
     "m10_isotonic_bins" -> isotonic,
     "m11_sample_size" -> sampleSizeGrid)
 
-  private val predsCte = """
-    |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
-    |pr AS (SELECT q.vec_id AS qid, n.vec_id AS nid, n.label AS nlabel,
-    |        q.label AS tlabel, list_dot_product(q.v, n.v) AS sim
-    |      FROM e q JOIN e n ON q.vec_id <> n.vec_id),
-    |r AS (SELECT qid, nid, nlabel, tlabel, sim,
-    |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-    |      FROM pr),
+  private val predsCte = s"""${graft.vector.VectorPack.knnCte},
     |p1 AS (SELECT qid, CAST(tlabel AS VARCHAR) AS t, CAST(nlabel AS VARCHAR) AS p, sim
     |       FROM r WHERE rnk = 1)""".stripMargin
 

@@ -139,7 +139,7 @@ object MultimodalPack extends QueryPack {
     * pixel surface. 60-bit dHash over the decoded/normalized pixel
     * grid ([[Multimodal.gridHash]] "px" — the FakeDecoder seam), then the
     * d04/d10 banded Hamming machinery verbatim
-    * ([[graft.dedup.Dedup.hammingPairsBandedOf]], 5×12-bit bands,
+    * ([[graft.dedup.Dedup.hammingBandJoin]], 5×12-bit bands,
     * maxDist 4): pigeonhole candidate join on band values, exact
     * popcount filter, never an all-pairs scan.
     *
@@ -159,10 +159,10 @@ object MultimodalPack extends QueryPack {
     val m = sceneFps(spark, dir)
     val reps = graft.dedup.Dedup.exactGroups(m, col("media_id"), col("h"))
       .select(col("keeper_id").as("media_id"))
-    val sig = m.join(reps, Seq("media_id"), "left_semi")
-      .select(col("media_id").as("id"), col("fp").as("simhash"))
-    graft.dedup.Dedup.hammingPairsBandedOf(sig, maxDist = 4,
-        bits = Multimodal.DhashBits)
+    val sig = graft.core.Caches.cut(m.join(reps, Seq("media_id"), "left_semi")
+      .select(col("media_id").as("id"), col("fp").as("simhash")))
+    graft.dedup.Dedup.hammingBandJoin(sig, sig, "a_id" -> "b_id", maxDist = 4,
+        bits = Multimodal.DhashBits, pairPredicate = col("a_id") < col("b_id"))
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -198,7 +198,7 @@ object MultimodalPack extends QueryPack {
     * perceptual machinery: dHash every decoded frame
     * ([[Multimodal.gridHash]] "px" — the FakeDecoder seam), mine near-dup
     * FRAME pairs with the d04/d10 banded Hamming join
-    * ([[graft.dedup.Dedup.hammingPairsBandedOf]]) over struct
+    * ([[graft.dedup.Dedup.hammingBandJoin]]) over struct
     * (video, frame) keys, then roll frame matches up to video level
     * requiring ONE CONSISTENT temporal offset (group by fa − fb)
     * that covers EVERY frame of the shorter video — offset-consistent
@@ -293,8 +293,8 @@ object MultimodalPack extends QueryPack {
     * Struct ordering is (item, unit)-lexicographic on both engines,
     * so representative selection matches the oracle's min() over the
     * packed form wherever both are defined. The same-item exclusion
-    * runs INSIDE the band join ([[graft.dedup.Dedup
-    * .hammingPairsBandedOf]]'s pair predicate): real video/audio is
+    * runs INSIDE the band join ([[graft.dedup.Dedup.hammingBandJoin]]'s
+    * pair predicate): real video/audio is
     * temporally self-similar, so dense unit sampling would otherwise
     * push per-item-quadratic intra-item pairs through the cross-band
     * dedup shuffle only to be discarded.
@@ -322,17 +322,17 @@ object MultimodalPack extends QueryPack {
     val reps = graft.dedup.Dedup.exactGroups(u,
         key(col("item_id"), col("unit_idx")), col("h"))
       .select(col("keeper_id").as("id"))
-    // hammingPairsBandedOf cuts sig exactly once, COMPACT-on-compact
-    // (a semi-join over the checkpointed proxy rows — no content pass,
-    // unlike the r14 shape the verdict's double-cut finding flagged,
-    // where BOTH cuts ran the decode): without that cut every one of
-    // the 2·(maxDist+1) band branches re-inlines the reps aggregation
-    // + semi-join (measured: 24 → 64 Exchange in the mm07 plan)
-    val sig = u
+    // sig is cut exactly once, COMPACT-on-compact (a semi-join over
+    // the checkpointed proxy rows — no content pass, unlike the r14
+    // shape the verdict's double-cut finding flagged, where BOTH cuts
+    // ran the decode): without that cut every one of the 2·(maxDist+1)
+    // band branches re-inlines the reps aggregation + semi-join
+    // (measured: 24 → 64 Exchange in the mm07 plan)
+    val sig = graft.core.Caches.cut(u
       .select(key(col("item_id"), col("unit_idx")).as("id"), col("fp").as("simhash"))
-      .join(reps, Seq("id"), "left_semi")
-    val pairs = graft.dedup.Dedup.hammingPairsBandedOf(sig, maxDist, bits,
-      pairPredicate = col("a_id.item") =!= col("b_id.item"))
+      .join(reps, Seq("id"), "left_semi"))
+    val pairs = graft.dedup.Dedup.hammingBandJoin(sig, sig, "a_id" -> "b_id",
+      maxDist, bits, col("a_id") < col("b_id") && col("a_id.item") =!= col("b_id.item"))
     val rolled = pairs
       .select(col("a_id.item").as("a_item"), col("a_id.unit").as("fa"),
         col("b_id.item").as("b_item"), col("b_id.unit").as("fb"),
@@ -350,6 +350,35 @@ object MultimodalPack extends QueryPack {
       .select(col("a_item"), col("b_item"), col("unit_offset"),
         col("n_matched"), col("max_hamming"))
   }
+
+  /** The DuckDB twin of [[clipContainmentFromUnits]] over relation `u`
+    * (item_id, unit_idx, hx): the unit key packed as item_id · 100 +
+    * unit_idx (units per item < 100 in the fixtures; ordered like the
+    * struct key), exact-collapse by md5(hx), the fingerprint `fp(src,
+    * out)` (a relation (cid, fp) over the representatives), the
+    * all-pairs popcount with the same-item exclusion in the pair
+    * predicate, and the containment rollup, as relation `out` (a_item,
+    * b_item, unit_offset, n_matched, max_hamming). Defines `<out>_n`,
+    * `<out>_k`, `<out>_r`, `<out>_f`, `<out>_p` and `<out>_g` on the way. */
+  private def clipContainmentSql(u: String, fp: (String, String) => String,
+                                 maxDist: Int, out: String): String = s"""
+    |${out}_n AS (SELECT item_id, count(*) AS nunits FROM $u GROUP BY item_id),
+    |${out}_k AS (SELECT min(item_id * 100 + unit_idx) AS cid FROM $u GROUP BY md5(hx)),
+    |${out}_r AS (SELECT k.cid, u.hx FROM $u u
+    |  JOIN ${out}_k k ON k.cid = u.item_id * 100 + u.unit_idx),
+    |${fp(s"${out}_r", s"${out}_f")},
+    |${graft.dedup.Dedup.hammingJoinSql(s"${out}_f", s"${out}_f", "cid", "fp",
+        "a_cid" -> "b_cid", maxDist, "a.cid < b.cid AND a.cid // 100 <> b.cid // 100",
+        s"${out}_p")},
+    |${out}_g AS (SELECT a_cid // 100 AS a_item, b_cid // 100 AS b_item,
+    |    a_cid % 100 - b_cid % 100 AS unit_offset,
+    |    count(*) AS n_matched, max(hamming) AS max_hamming
+    |  FROM ${out}_p GROUP BY 1, 2, 3),
+    |$out AS (SELECT g.a_item, g.b_item, CAST(g.unit_offset AS BIGINT) AS unit_offset,
+    |    g.n_matched, g.max_hamming
+    |  FROM ${out}_g g JOIN ${out}_n na ON na.item_id = g.a_item
+    |  JOIN ${out}_n nb ON nb.item_id = g.b_item
+    |  WHERE g.n_matched = least(na.nunits, nb.nunits))""".stripMargin
 
   /** The mm08 fixture: one synthetic AUDIO per document — 6 one-second
     * windows, window j's latent scene keyed on (text, j) through the
@@ -420,7 +449,7 @@ object MultimodalPack extends QueryPack {
     * byte-identical re-upload never reaches the probe), then the
     * 60-bit perceptual dHash of the digest-new remainder probed
     * against HISTORY fingerprint state through the banded Hamming join
-    * ([[graft.dedup.Dedup.hammingProbeBanded]], maxDist 4) —
+    * ([[graft.dedup.Dedup.hammingBandJoin]], maxDist 4) —
     * near_dup_of_history (best = min (hamming, hist_id)), else new —
     * the text gate's rule ([[graft.dedup.Dedup.gateDecisions]]).
     * The batch arrives as its [[fpRowsOf]] rows
@@ -465,10 +494,10 @@ object MultimodalPack extends QueryPack {
     val sFps = graft.core.Caches.cut(
       ex.filter(col("ex_status") === "exact_new")
         .select(col("media_id").as("id"), col("fp")))
-    val hits = graft.dedup.Dedup.hammingProbeBanded(
+    val hits = graft.dedup.Dedup.hammingBandJoin(
       sFps.select(col("id"), col("fp").as("simhash")),
-      histFps.select(col("id"), col("fp").as("simhash")),
-      maxDist = 4, bits = Multimodal.DhashBits)
+      histFps.select(col("id"), col("fp").as("simhash")), "id" -> "hist_id",
+      maxDist = 4, bits = Multimodal.DhashBits, pairPredicate = lit(true))
     val best = graft.dedup.Dedup.bestMatch(hits, col("id"), col("hamming"),
         col("hist_id"))
       .select(col("id").as("media_id"), col("hist_id"), col("hamming"))
@@ -528,12 +557,10 @@ object MultimodalPack extends QueryPack {
     |    FROM documents WHERE doc_id % 10 = 5),
     |rep AS (SELECT min(media_id) AS media_id FROM sm GROUP BY md5(hx)),
     |rs AS (SELECT sm.media_id, hx FROM sm JOIN rep ON rep.media_id = sm.media_id),
-    |${Multimodal.gridHashSql("rs", "media_id", "px", 6, 11, "s2")}
-    |SELECT a.media_id AS a_id, b.media_id AS b_id,
-    |  CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
-    |FROM s2 a JOIN s2 b ON a.media_id < b.media_id
-    |WHERE bit_count(xor(a.fp, b.fp)) <= 4
-    |ORDER BY a_id, b_id""".stripMargin
+    |${Multimodal.gridHashSql("rs", "media_id", "px", 6, 11, "s2")},
+    |${graft.dedup.Dedup.hammingJoinSql("s2", "s2", "media_id", "fp", "a_id" -> "b_id", 4,
+        "a.media_id < b.media_id", "hp")}
+    |SELECT * FROM hp ORDER BY a_id, b_id""".stripMargin
 
   /** mm07 oracle: fixture, per-frame dHash (the mm06 luminance/
     * gradient replay over each frame's scene), exact-collapse to
@@ -551,28 +578,15 @@ object MultimodalPack extends QueryPack {
     |  SELECT doc_id + 10000000, unnest(range(0, 4)), text, 'v1', 2
     |  FROM documents WHERE doc_id % 10 = 3),
     |vf AS (
-    |  SELECT vid, CAST(j AS BIGINT) AS fidx,
+    |  SELECT vid AS item_id, CAST(j AS BIGINT) AS unit_idx,
     |    substr(md5(text || '|f' || CAST(j + soff AS VARCHAR) || '|h' || enc), 1, 6)
     |      || md5(text || '|f' || CAST(j + soff AS VARCHAR))
     |      || md5(text || '|f' || CAST(j + soff AS VARCHAR) || '|n' || enc) AS hx
     |  FROM vd),
-    |nfr AS (SELECT vid, count(*) AS nf FROM vf GROUP BY vid),
-    |rep AS (SELECT min(vid * 100 + fidx) AS cid FROM vf GROUP BY md5(hx)),
-    |rs AS (SELECT vf.vid * 100 + vf.fidx AS cid, hx
-    |  FROM vf JOIN rep ON rep.cid = vf.vid * 100 + vf.fidx),
-    |${Multimodal.gridHashSql("rs", "cid", "px", 6, 11, "s2")},
-    |pr AS (SELECT a.cid // 100 AS a_vid, a.cid % 100 AS fa,
-    |    b.cid // 100 AS b_vid, b.cid % 100 AS fb,
-    |    CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
-    |  FROM s2 a JOIN s2 b ON a.cid < b.cid
-    |  WHERE bit_count(xor(a.fp, b.fp)) <= 4),
-    |grp AS (SELECT a_vid, b_vid, fa - fb AS frame_offset,
-    |    count(*) AS n_matched, max(hamming) AS max_hamming
-    |  FROM pr WHERE a_vid <> b_vid GROUP BY 1, 2, 3)
-    |SELECT g.a_vid, g.b_vid, CAST(g.frame_offset AS BIGINT) AS frame_offset,
-    |  g.n_matched, g.max_hamming
-    |FROM grp g JOIN nfr na ON na.vid = g.a_vid JOIN nfr nb ON nb.vid = g.b_vid
-    |WHERE g.n_matched = least(na.nf, nb.nf)
+    |${clipContainmentSql("vf", Multimodal.gridHashSql(_, "cid", "px", 6, 11, _), 4, "cc")}
+    |SELECT a_item AS a_vid, b_item AS b_vid, unit_offset AS frame_offset,
+    |  n_matched, max_hamming
+    |FROM cc
     |ORDER BY a_vid, b_vid, frame_offset""".stripMargin
 
   /** mm08 oracle: fixture, per-window chromaprint replay (72 chroma
@@ -591,28 +605,15 @@ object MultimodalPack extends QueryPack {
     |  SELECT doc_id + 10000000, unnest(range(0, 3)), text, 'a1', 2
     |  FROM documents WHERE doc_id % 10 = 7),
     |aw AS (
-    |  SELECT aid, CAST(j AS BIGINT) AS widx,
+    |  SELECT aid AS item_id, CAST(j AS BIGINT) AS unit_idx,
     |    substr(md5(text || '|w' || CAST(j + soff AS VARCHAR) || '|h' || enc), 1, 6)
     |      || md5(text || '|w' || CAST(j + soff AS VARCHAR))
     |      || md5(text || '|w' || CAST(j + soff AS VARCHAR) || '|n' || enc) AS hx
     |  FROM ad),
-    |nwr AS (SELECT aid, count(*) AS nw FROM aw GROUP BY aid),
-    |arep AS (SELECT min(aid * 100 + widx) AS cid FROM aw GROUP BY md5(hx)),
-    |ars AS (SELECT aw.aid * 100 + aw.widx AS cid, hx
-    |  FROM aw JOIN arep ON arep.cid = aw.aid * 100 + aw.widx),
-    |${Multimodal.gridHashSql("ars", "cid", "ch", 12, 6, "as2")},
-    |apr AS (SELECT a.cid // 100 AS a_aid, a.cid % 100 AS wa,
-    |    b.cid // 100 AS b_aid, b.cid % 100 AS wb,
-    |    CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
-    |  FROM as2 a JOIN as2 b ON a.cid < b.cid
-    |  WHERE bit_count(xor(a.fp, b.fp)) <= 4),
-    |agrp AS (SELECT a_aid, b_aid, wa - wb AS window_offset,
-    |    count(*) AS n_matched, max(hamming) AS max_hamming
-    |  FROM apr WHERE a_aid <> b_aid GROUP BY 1, 2, 3)
-    |SELECT g.a_aid, g.b_aid, CAST(g.window_offset AS BIGINT) AS window_offset,
-    |  g.n_matched, g.max_hamming
-    |FROM agrp g JOIN nwr na ON na.aid = g.a_aid JOIN nwr nb ON nb.aid = g.b_aid
-    |WHERE g.n_matched = least(na.nw, nb.nw)
+    |${clipContainmentSql("aw", Multimodal.gridHashSql(_, "cid", "ch", 12, 6, _), 4, "cc")}
+    |SELECT a_item AS a_aid, b_item AS b_aid, unit_offset AS window_offset,
+    |  n_matched, max_hamming
+    |FROM cc
     |ORDER BY a_aid, b_aid, window_offset""".stripMargin
 
   val oracles: Map[String, String] = Map(

@@ -31,19 +31,14 @@ object PipelinePack extends QueryPack {
 
   /** 0.8 split threshold: round(0.8·65536) = 52429 = 0xcccd (the same
     * constant `Sampling.hashSplit` derives). */
-  private val splitCte = """
+  private val splitCte = s"""
     |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label,
     |        CASE WHEN substr(md5('42' || CAST(vec_id AS VARCHAR)), 1, 4) < 'cccd'
     |             THEN 'train' ELSE 'test' END AS split
     |      FROM embeddings),
     |tr AS (SELECT * FROM e WHERE split = 'train'),
     |te AS (SELECT * FROM e WHERE split = 'test'),
-    |pr AS (SELECT q.vec_id AS qid, n.vec_id AS nid, n.label AS nlabel,
-    |        q.label AS tlabel, list_dot_product(q.v, n.v) AS sim
-    |      FROM te q JOIN tr n ON true),
-    |r AS (SELECT qid, nid, nlabel, tlabel, sim,
-    |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-    |      FROM pr),
+    |${graft.vector.KnnJoin.searchSql("te", "tr", "r")},
     |p1 AS (SELECT qid, CAST(tlabel AS VARCHAR) AS t, CAST(nlabel AS VARCHAR) AS p
     |       FROM r WHERE rnk = 1)""".stripMargin
 

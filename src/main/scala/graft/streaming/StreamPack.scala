@@ -263,9 +263,8 @@ object StreamPack extends QueryPack {
     |gsv AS (SELECT media_id, hx FROM gex WHERE ex_status = 'exact_new'),
     |${Multimodal.gridHashSql("ghist", "media_id", "px", 6, 11, "gh")},
     |${Multimodal.gridHashSql("gsv", "media_id", "px", 6, 11, "gb")},
-    |gpr AS (SELECT b.media_id, h.media_id AS hist_id,
-    |    CAST(bit_count(xor(b.fp, h.fp)) AS BIGINT) AS hamming
-    |  FROM gb b JOIN gh h ON bit_count(xor(b.fp, h.fp)) <= 4),
+    |${Dedup.hammingJoinSql("gb", "gh", "media_id", "fp", "media_id" -> "hist_id", 4,
+        "true", "gpr")},
     |${Dedup.bestMatchSql("gpr", "media_id", "hamming, hist_id", "gbst")},
     |${Dedup.gateDecisionsSql("gex", "gbst", "media_id", "b.hist_id IS NOT NULL",
         "best_hamming" -> "b.hamming", "-1", "gdec")}

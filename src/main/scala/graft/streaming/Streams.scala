@@ -577,7 +577,7 @@ object Streams {
     * the 60-bit perceptual dHash ([[graft.multimodal.Multimodal
     * .gridHash]] "px", the FakeDecoder seam) probed against HISTORY
     * fingerprint state through the banded Hamming join
-    * ([[graft.dedup.Dedup.hammingProbeBanded]]): a streamed image that
+    * ([[graft.dedup.Dedup.hammingBandJoin]]): a streamed image that
     * is a RE-ENCODE or RESIZE of any historical image — every
     * container byte different, digest useless — gates as
     * near_dup_of_history, exactly as s09's MinHash screen does for

@@ -87,6 +87,19 @@ object KnnJoin {
         col("n_label"))
   }
 
+  /** The DuckDB twin of [[search]]'s exact top-k, every rank kept: each
+    * row of the query relation `q` scored against every row of the
+    * index relation `n` but itself (both (vec_id, v, label)) by dot
+    * product, ranked per query by (sim desc, id asc), as relation `out`
+    * (qid, nid, tlabel, nlabel, sim, rnk) — the query's and the
+    * neighbor's labels beside each pair. Defines `<out>_p` on the way. */
+  private[graft] def searchSql(q: String, n: String, out: String): String = s"""
+    |${out}_p AS (SELECT q.vec_id AS qid, n.vec_id AS nid, q.label AS tlabel,
+    |    n.label AS nlabel, list_dot_product(q.v, n.v) AS sim
+    |  FROM $q q JOIN $n n ON q.vec_id <> n.vec_id),
+    |$out AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
+    |  FROM ${out}_p)""".stripMargin
+
   /** Bounded top-k selection by (sim desc, id asc): arrays kept sorted
     * with shifted insertion — O(1) reject for the common below-
     * threshold candidate, zero allocation per candidate. The total

@@ -544,14 +544,11 @@ object VectorPack extends QueryPack {
       "pq_codes" -> pqCodesArtifact,
       "sq8_stats" -> sq8StatsArtifact)
 
-  private val knnCte = s"""
+  /** The labeled embeddings `e` and their exact self-kNN ranking `r`
+    * ([[KnnJoin.searchSql]]) — shared by the v, m, f04 and l03 oracles. */
+  private[graft] val knnCte = s"""
     |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
-    |p AS (SELECT q.vec_id AS qid, n.vec_id AS nid, n.label AS nlabel,
-    |        list_dot_product(q.v, n.v) AS sim
-    |      FROM e q JOIN e n ON q.vec_id <> n.vec_id),
-    |r AS (SELECT qid, nid, nlabel, sim,
-    |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-    |      FROM p)""".stripMargin
+    |${KnnJoin.searchSql("e", "e", "r")}""".stripMargin
 
   private val oracles0: Map[String, String] = Map(
     "v01_knn_top3" -> s"""

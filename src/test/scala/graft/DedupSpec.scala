@@ -16,6 +16,16 @@ class DedupSpec extends AnyFunSuite {
     Dedup.simhashOf(Dedup.wordHashes(docs, col(id), col("text"))
       .select(col("id"), col(hv).as("hv")), bits)
 
+  /** The banded Hamming self-join of an (id, simhash) relation. */
+  private def selfPairs(s: org.apache.spark.sql.DataFrame, maxDist: Int,
+                        bits: Int): org.apache.spark.sql.DataFrame =
+    Dedup.hammingBandJoin(s, s, "a_id" -> "b_id", maxDist, bits, col("a_id") < col("b_id"))
+
+  /** Its all-pairs twin. */
+  private def selfAllPairs(s: org.apache.spark.sql.DataFrame,
+                           maxDist: Int): org.apache.spark.sql.DataFrame =
+    Dedup.hammingPairsAllPairsOf(s, s, "a_id" -> "b_id", maxDist, col("a_id") < col("b_id"))
+
   test("exact dedup finds exactly the planted copies") {
     val groups = DedupPack.exactDedup(spark, sf).collect()
     assert(groups.length == 50)
@@ -92,10 +102,18 @@ class DedupSpec extends AnyFunSuite {
     def collectPairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val sims = simhashes(docs, "hv16", 16).cache()
+    // the history probe: arrivals (the upper id range) against history
+    val (arriving, hist) = (sims.filter(col("id") >= 250), sims.filter(col("id") < 250))
     for (maxDist <- Seq(1, 2, 3)) {
-      val banded = collectPairs(Dedup.hammingPairsBandedOf(sims, maxDist, 16))
-      val allPairs = collectPairs(Dedup.hammingPairsAllPairsOf(sims, maxDist))
+      val banded = collectPairs(selfPairs(sims, maxDist, 16))
+      val allPairs = collectPairs(selfAllPairs(sims, maxDist))
       assert(banded == allPairs, s"maxDist=$maxDist")
+      val probe = collectPairs(Dedup.hammingBandJoin(arriving, hist,
+        "id" -> "hist_id", maxDist, 16, lit(true)))
+      val allProbe = collectPairs(Dedup.hammingPairsAllPairsOf(arriving, hist,
+        "id" -> "hist_id", maxDist, lit(true)))
+      assert(probe == allProbe, s"probe maxDist=$maxDist")
+      assert(probe.nonEmpty, s"probe maxDist=$maxDist found no pair")
     }
     sims.unpersist()
   }
@@ -230,7 +248,7 @@ class DedupSpec extends AnyFunSuite {
         Dedup.hashedShingleRows(c, col("doc_id"), col("text"))))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def collapsed(c: org.apache.spark.sql.DataFrame) =
-      DedupPack.groupsViaExactCollapse(c)
+      DedupPack.groupsViaExactCollapse(c, DedupPack.shingleRowsOf(c))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val aug = DedupPack.augmented(spark, sf, spread = false)
     assert(collapsed(aug) == direct(aug))
@@ -339,7 +357,8 @@ class DedupSpec extends AnyFunSuite {
     def agree(docs: org.apache.spark.sql.DataFrame): Map[(Long, Long), (Double, Double)] =
       graft.core.Caches.scoped("pair jaccard spec") {
         val sh = DedupPack.shingleRowsOf(docs)
-        val cand = Dedup.minhashCandidatesFromSigs(DedupPack.bandSigsOf(docs, "id"))
+        val sigs = DedupPack.bandSigsOf(docs, "id")
+        val cand = Dedup.minhashBandJoin(sigs, sigs, "a_id" -> "b_id", col("a_id") < col("b_id"))
         Dedup.pairJaccard(cand, sh, sh)
           .join(Dedup.jaccardPairsFromHashed(sh), Seq("a_id", "b_id"))
           .select(col("a_id"), col("b_id"), round(col("jac"), 6), col("jaccard"))
@@ -461,8 +480,8 @@ class DedupSpec extends AnyFunSuite {
     def collectPairs(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val sims = simhashes(aug, "hv60", 60).cache()
-    val banded = collectPairs(Dedup.hammingPairsBandedOf(sims, 3, 60))
-    val allPairs = collectPairs(Dedup.hammingPairsAllPairsOf(sims, 3))
+    val banded = collectPairs(selfPairs(sims, 3, 60))
+    val allPairs = collectPairs(selfAllPairs(sims, 3))
     assert(banded == allPairs)
     assert(banded.nonEmpty)
     sims.unpersist()
@@ -498,16 +517,16 @@ class DedupSpec extends AnyFunSuite {
       rows(simhashes(aug, "hv16", 16)))
     // d05: 16-bit banded pairs
     assert(rows(DedupPack.simhashNearDups(spark, sf)) ==
-      rows(Dedup.hammingPairsBandedOf(simhashes(aug, "hv16", 16), 2, 16)))
+      rows(selfPairs(simhashes(aug, "hv16", 16), 2, 16)))
     // d10: 60-bit banded pairs
     assert(rows(DedupPack.simhashWidePairs(spark, sf)) ==
-      rows(Dedup.hammingPairsBandedOf(simhashes(aug, "hv60", 60), 3, 60)))
+      rows(selfPairs(simhashes(aug, "hv60", 60), 3, 60)))
     // d22: rep-collapsed pairs — artifact semi-join vs inline rep corpus
     val reps = aug.groupBy(Dedup.contentDigest(col("text")).as("d"))
       .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
     val repDocs = aug.join(reps, Seq("doc_id"), "left_semi")
     assert(rows(DedupPack.simhashWidePairsCollapsed(spark, sf)) ==
-      rows(Dedup.hammingPairsBandedOf(simhashes(repDocs, "hv60", 60), 3, 60)))
+      rows(selfPairs(simhashes(repDocs, "hv60", 60), 3, 60)))
   }
 
   test("d22: collapsed simhash pairs equal d10 restricted to content " +
@@ -543,7 +562,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("wide simhash recovers most planted near-copies at Hamming <= 3") {
     val aug = graft.dedup.DedupPack.augmented(spark, sf)
-    val pairs = Dedup.hammingPairsBandedOf(simhashes(aug, "hv60", 60), 3, 60)
+    val pairs = selfPairs(simhashes(aug, "hv60", 60), 3, 60)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // planted: (i, i+100000) near-copies for i < 100 (measured at
     // sf0.01: 125/150 of all planted links within distance 3)

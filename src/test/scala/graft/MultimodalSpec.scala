@@ -260,12 +260,13 @@ class MultimodalSpec extends AnyFunSuite {
       ((a.getLong(0), a.getLong(1)), (b.getLong(0), b.getLong(1)),
         r.getLong(2))
     }
-    val unfiltered = Dedup.hammingPairsBandedOf(sig, 4, Multimodal.DhashBits)
+    val unfiltered = Dedup.hammingBandJoin(sig, sig, "a_id" -> "b_id", 4,
+        Multimodal.DhashBits, col("a_id") < col("b_id"))
       .collect().map(key)
     val postFiltered = unfiltered
       .filter { case ((ai, _), (bi, _), _) => ai != bi }.toSet
-    val inJoin = Dedup.hammingPairsBandedOf(sig, 4, Multimodal.DhashBits,
-        pairPredicate = col("a_id.item") =!= col("b_id.item"))
+    val inJoin = Dedup.hammingBandJoin(sig, sig, "a_id" -> "b_id", 4,
+        Multimodal.DhashBits, col("a_id") < col("b_id") && col("a_id.item") =!= col("b_id.item"))
       .collect().map(key).toSet
     assert(inJoin == postFiltered,
       "in-join exclusion must equal post-filtering the unfiltered join")

@@ -35,6 +35,9 @@ class SessionGuardSpec extends AnyFunSuite {
   private val qualityFormula = """0\.3 \* least\(1\.0""".r
   private val jaccardQuotient = """CAST\(\w+\.n \+ \w+\.n - """.r
   private val gateCase = """WHEN \w+\.ex_status <> 'exact_new' THEN""".r
+  private val popcountPair = """bit_count\(xor\(""".r
+  private val bandJoin = """\.bandsig = \w+\.bandsig""".r
+  private val knnWindow = """PARTITION BY qid[\s|]+ORDER BY sim DESC, nid\)""".r
   private val p02Frozen = Map(Paths.get("pipeline", "PipelinePack.scala") ->
     ("p02's oracle text is byte-frozen: its DuckDB replay runs out of memory " +
       "on a 15 GiB box, so no oracle run can check a change to it"))
@@ -53,6 +56,12 @@ class SessionGuardSpec extends AnyFunSuite {
       Map.empty[Path, String]),
     ("the Jaccard quotient", jaccardQuotient, Paths.get("dedup", "Dedup.scala"), p02Frozen),
     ("the gate decision CASE", gateCase, Paths.get("dedup", "Dedup.scala"),
+      Map.empty[Path, String]),
+    ("the popcount pair filter", popcountPair, Paths.get("dedup", "Dedup.scala"),
+      Map.empty[Path, String]),
+    ("the band equi-join", bandJoin, Paths.get("dedup", "Dedup.scala"),
+      Map.empty[Path, String]),
+    ("the exact kNN window", knnWindow, Paths.get("vector", "KnnJoin.scala"),
       Map.empty[Path, String]))
   private val envReaders = Seq(Paths.get("Bench.scala"),
     Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
@@ -142,6 +151,32 @@ class SessionGuardSpec extends AnyFunSuite {
       "ELSE ex_status END AS status").isEmpty)
     assert(gateCase.findFirstIn(
       "sv AS (SELECT doc_id FROM ex WHERE ex_status = 'exact_new')").isEmpty)
+    assert(popcountPair.findFirstIn(
+      "  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming").nonEmpty)
+    assert(popcountPair.findFirstIn(
+      "FROM gb b JOIN gh h ON bit_count(xor(b.fp, h.fp)) <= 4),").nonEmpty)
+    assert(popcountPair.findFirstIn(
+      "bit_count(col(\"ha\").bitwiseXOR(col(\"hb\"))).cast(\"long\")").isEmpty)
+    assert(popcountPair.findFirstIn("list_sum(list_transform(range(0, 60), k ->").isEmpty)
+    assert(bandJoin.findFirstIn(
+      "FROM bands a JOIN bands b ON a.band = b.band AND a.bandsig = b.bandsig").nonEmpty)
+    assert(bandJoin.findFirstIn(
+      "JOIN $bands h ON b.band = h.band AND b.bandsig = h.bandsig").nonEmpty)
+    assert(bandJoin.findFirstIn(
+      ".join(b.select(col(bId), col(\"band\"), col(\"bandsig\")), Seq(\"band\", \"bandsig\"))")
+      .isEmpty)
+    assert(bandJoin.findFirstIn(
+      "string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS bandsig").isEmpty)
+    assert(knnWindow.findFirstIn(
+      "    |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk")
+      .nonEmpty)
+    assert(knnWindow.findFirstIn("      |dr AS (SELECT qid, nid, row_number() OVER " +
+      "(PARTITION BY qid\n      |        ORDER BY sim DESC, nid) AS drank FROM pr),")
+      .nonEmpty)
+    assert(knnWindow.findFirstIn("    SELECT qid, vec_id, row_number() OVER " +
+      "(PARTITION BY qid\n      ORDER BY approx_ip DESC, vec_id) AS crn").isEmpty)
+    assert(knnWindow.findFirstIn("    row_number() OVER (PARTITION BY cand.qid\n" +
+      "      ORDER BY list_dot_product(q.v, n.v) DESC, cand.vec_id) AS rnk").isEmpty)
     assert(cacheCall.findFirstIn("val d = docs.cache()").nonEmpty)
     assert(cacheCall.findFirstIn("batch.select(col(\"x\"))\n  .persist()").nonEmpty)
     assert(cacheCall.findFirstIn("df.persist(StorageLevel.DISK_ONLY)").nonEmpty)
@@ -237,7 +272,7 @@ private object Reachable {
     * harness, each with its reason. */
   val allowlist: Map[String, String] = Map(
     "Dedup.shinglesDeclarative" -> "declarative twin of the native WordShingles",
-    "Dedup.hammingPairsAllPairsOf" -> "all-pairs oracle of hammingPairsBandedOf",
+    "Dedup.hammingPairsAllPairsOf" -> "all-pairs oracle of hammingBandJoin",
     "DedupPack.incrementalMinhashOf" ->
       "d19 spec entry: both sides' state derived from text",
     "DedupPack.dedupGateOf" -> "s09 spec twin: both sides' state derived from text",
