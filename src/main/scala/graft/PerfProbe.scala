@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Probe over declared queries for local iteration (Verify and Bench
@@ -11,7 +13,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *    rep: min-over-reps is the noise-robust A/B statistic on a shared
   *    box whose load swings 2-3x mid-run. Before every rep the memos
   *    built by any probed name are dropped, so a query's number does
-  *    not depend on which names ran before it in the list.
+  *    not depend on which names ran before it in the list. Each line
+  *    also gives the rep's Janino compilations and their
+  *    `CodeGenerator` compile seconds: rep 1 against a later rep shows
+  *    what the session's codegen cache saved.
   *  - `explain [q1,q2,...]` — print each named query's formatted
   *    physical plan and audit the scale-critical properties: parquet
   *    filter pushdown, pruned read schemas, broadcast joins and
@@ -46,13 +51,19 @@ object PerfProbe {
       // consumer never reads what an earlier name in the list left
       names.foreach(core.Artifacts.dropScope)
       core.Caches.scoped(name) {
+        val (c0, ct0) = (compiles, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        println(f"QREP $name $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        val s = (System.nanoTime() - t0) / 1e9
+        println(f"QREP $name $r: $s%.2f s compiles=${compiles - c0} " +
+          f"compile_s=${(CodeGenerator.compileTime - ct0) / 1e9}%.2f")
       }
     }
   }
+
+  /** Janino compilations so far in this JVM (a cache hit adds none). */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def explain(spark: SparkSession, sfDir: String, name: String): Unit = {
     println(s"\n===== $name =====")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -361,6 +361,14 @@ object Streams {
   /** Target bytes per compacted generation file. */
   private val TargetGenBytes = 128L * 1024 * 1024
 
+  /** A batch id as a column whose value travels in codegen's
+    * `references` array, not in the generated source. `lit(batchId)`
+    * inlines the long into the source, so every arrival would compile
+    * its state, summary and log-stamp classes afresh; a zero-argument
+    * UDF is one lambda class whose source is the same for every id, so
+    * a warm arrival reuses the cached classes. */
+  private def batchStamp(id: Long): Column = udf(() => id).asNonNullable()()
+
   /** Empty state-relation schema per kind — every persisted state row
     * carries `src_batch` (the writing batch id): directory layout
     * gives exactly-once (read only ids < current), the COLUMN gives
@@ -528,7 +536,7 @@ object Streams {
     summaryOf.foreach(f =>
       write(f(decisions).coalesce(1), s"${outDir}_summary/batch=$batchId"))
     def writeState(kind: String, df: DataFrame): Unit =
-      write(df.withColumn("src_batch", lit(batchId)).coalesce(4),
+      write(df.withColumn("src_batch", batchStamp(batchId)).coalesce(4),
         s"$histDir/$kind/batch=$batchId")
     writeState("digests", newDigests)
     kinds.foreach(k => writeState(k, newState(k)))
@@ -562,6 +570,8 @@ object Streams {
     val full =
       if (dirs.isEmpty) empty
       else spark.read.schema(empty.schema).parquet(dirs.map(_.toString): _*)
+    // a literal bound, not a batchStamp: parquet pushes down only
+    // comparisons with literals, and the TTL prunes row groups by it
     if (opts.retentionBatches > 0)
       full.filter(col("src_batch").isNull ||
         col("src_batch") >= batchId - opts.retentionBatches)
@@ -786,7 +796,7 @@ object Streams {
       val df = spark.read.schema(schema).parquet(p.toString)
       idOf(p.getName, "batch=") match {
         case Some(id) if stampSrcBatch =>
-          df.withColumn("src_batch", coalesce(col("src_batch"), lit(id)))
+          df.withColumn("src_batch", coalesce(col("src_batch"), batchStamp(id)))
         case _ => df
       }
     }.reduce(_ unionByName _)
@@ -834,7 +844,7 @@ object Streams {
         max(when(col("q") === 0.5, col("est"))).as("q_p50"),
         max(when(col("q") === 0.75, col("est"))).as("q_p75"))
     counts.crossJoin(broadcast(qp))
-      .select(lit(batchId).as("batch_id"), col("n_seen"), col("n_new"),
+      .select(batchStamp(batchId).as("batch_id"), col("n_seen"), col("n_new"),
         col("n_dup_of_history"), col("n_dup_in_batch"),
         col("n_near_dup_of_history"), col("q_p25"), col("q_p50"),
         col("q_p75"))

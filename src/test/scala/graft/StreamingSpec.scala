@@ -451,6 +451,38 @@ class StreamDedupSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"got $status")
   }
 
+  test("a warm gate batch compiles no generated class") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def txt(seed: String): String = (1 to 20).map(i => s"${seed}_$i").mkString(" ")
+    def nearOf(seed: String): String =
+      ((1 to 19).map(i => s"${seed}_$i") :+ "zzz").mkString(" ")
+    val outDir = Files.createTempDirectory("graft_warm_o").toString + "/d"
+    val histDir = Files.createTempDirectory("graft_warm_h").toString + "/h"
+    // every batch has the same shape: from batch 1 on, one exact and
+    // one near copy of the previous batch, one in-batch copy, two new
+    def rows(b: Int): Seq[(Long, String)] = Seq(
+      b * 10L + 1 -> txt(s"fresh$b"),
+      b * 10L + 2 -> txt(s"other$b"),
+      b * 10L + 3 -> txt(s"fresh${b - 1}"),
+      b * 10L + 4 -> nearOf(s"other${b - 1}"),
+      b * 10L + 5 -> txt(s"fresh$b"))
+    def feed(b: Int): Unit = Streams.dedupGateBatch(spark,
+      rows(b).toDF("doc_id", "text"), b.toLong, outDir, histDir)
+    (0 to 2).foreach(feed)
+    // the count is JVM-wide: it holds because the forked test JVM runs
+    // one suite at a time and this batch is the only work in flight
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = compiles
+    feed(3)
+    val n = compiles - before
+    assert(n == 0, s"warm gate batch 3 compiled $n classes")
+    val status = spark.read.parquet(s"$outDir/batch=3")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(status == Map(31L -> "new", 32L -> "new", 33L -> "dup_of_history",
+      34L -> "near_dup_of_history", 35L -> "dup_in_batch"), s"got $status")
+  }
+
   test("dedup ingest gate: streaming with compaction + run summary " +
       "equals the batch twin") {
     import org.apache.spark.sql.types._
