@@ -437,6 +437,14 @@ object DedupPack extends QueryPack {
     e.unionByName(near)
   }
 
+  /** The DuckDB twin of [[augmentedVectors]]: `out` (vec_id, v),
+    * defining `<out>_0` on the way. */
+  private[graft] def augmentedVectorsSql(out: String): String =
+    s"""${out}_0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |$out AS (SELECT vec_id, v FROM ${out}_0
+       |  UNION ALL SELECT vec_id + 100000, list_concat([v[1] + 0.1], v[2:])
+       |    FROM ${out}_0 WHERE vec_id < 100)""".stripMargin
+
   /** Embedding-cosine near-dup pairs over the augmented vectors, at a
     * true near-dup threshold (0.98: planted pairs sit at ~0.995, the
     * isotropic background tops out at ~0.6 at every SF — a wide
@@ -788,7 +796,7 @@ object DedupPack extends QueryPack {
   private[graft] def augIvfIndex(spark: SparkSession,
                                  dir: String): graft.vector.KnnJoin.IvfIndex =
     graft.vector.KnnJoin.ivfIndexArtifact(spark, s"aug:$dir",
-      augmentedVectors(spark, dir), Some(16))
+      augmentedVectors(spark, dir), Some(graft.vector.KnnJoin.PinnedLists))
 
   /** d12: SemDeDup (Abbas et al. 2023) over the augmented vectors —
     * the semantic tier of the dedup ladder. The planted near-copies
@@ -1295,36 +1303,25 @@ object DedupPack extends QueryPack {
           "a.id < b.id", "hp")}
       |SELECT * FROM hp ORDER BY a_id, b_id""".stripMargin,
     "d12_semdedup" -> s"""
-      |WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |e AS (SELECT vec_id, v FROM e0
-      |  UNION ALL SELECT vec_id + 100000, list_concat([v[1] + 0.1], v[2:])
-      |    FROM e0 WHERE vec_id < 100),
-      |${graft.vector.VectorPack.ivfCtes},
-      |cs AS (SELECT a.vec_id, a.cid,
-      |    list_dot_product(e.v, c.cv)
-      |      / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) AS csim
-      |  FROM asg a JOIN e ON e.vec_id = a.vec_id JOIN c2 c ON c.cid = a.cid),
+      |WITH ${augmentedVectorsSql("e")},
+      |${graft.vector.KnnJoin.ivfIndexSql("e", Some(graft.vector.KnnJoin.PinnedLists),
+          "cents", "asg")},
+      |cs AS (SELECT a.vec_id, a.cid, ${VectorOps.cosineSql("e.v", "c.cv")} AS csim
+      |  FROM asg a JOIN e ON e.vec_id = a.vec_id JOIN cents c ON c.cid = a.cid),
       |prs AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.csim AS ca, b.csim AS cb
       |  FROM cs a JOIN cs b ON a.cid = b.cid AND a.vec_id < b.vec_id
       |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-      |  WHERE list_dot_product(ea.v, eb.v)
-      |    / (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) >= 0.98),
+      |  WHERE ${VectorOps.cosineSql("ea.v", "eb.v")} >= 0.98),
       |rem AS (SELECT DISTINCT CASE WHEN ca > cb OR (ca = cb AND a_id > b_id)
       |    THEN a_id ELSE b_id END AS vec_id FROM prs)
       |SELECT cs.vec_id, cs.cid AS centroid_id, round(cs.csim, 6) AS sim_centroid,
       |  CAST(CASE WHEN rem.vec_id IS NOT NULL THEN 0 ELSE 1 END AS BIGINT) AS kept
       |FROM cs LEFT JOIN rem ON rem.vec_id = cs.vec_id
       |ORDER BY cs.vec_id""".stripMargin,
-    "d06_embedding_near_dups" -> """
-      |WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |e AS (SELECT vec_id, v FROM e0
-      |  UNION ALL SELECT vec_id + 100000, list_concat([v[1] + 0.1], v[2:])
-      |    FROM e0 WHERE vec_id < 100)
-      |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-      |  round(list_dot_product(a.v, b.v)
-      |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
+    "d06_embedding_near_dups" -> s"""
+      |WITH ${augmentedVectorsSql("e")}
+      |SELECT a.vec_id AS a_id, b.vec_id AS b_id, round(${VectorOps.cosineSql("a.v", "b.v")}, 6) AS cos
       |FROM e a JOIN e b ON a.vec_id < b.vec_id
-      |WHERE list_dot_product(a.v, b.v)
-      |  / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.98
+      |WHERE ${VectorOps.cosineSql("a.v", "b.v")} >= 0.98
       |ORDER BY a_id, b_id""".stripMargin)
 }

@@ -569,7 +569,7 @@ object LlmPack extends QueryPack {
     |  SELECT doc_id, 'word_count', pwc, wc,
     |    CASE WHEN trim(pwc) = trim(wc) THEN 1 ELSE 0 END FROM parsed)""".stripMargin
 
-  private val ragCte = raw"""${graft.vector.VectorPack.knnCte},
+  private val ragCte = raw"""${graft.vector.KnnJoin.knnCte},
     |sn AS (SELECT doc_id, array_to_string(
     |    (${TextOps.wordsSql("text")})[1:10], ' ') AS snippet
     |  FROM documents),

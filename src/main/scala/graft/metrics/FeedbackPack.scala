@@ -223,7 +223,7 @@ object FeedbackPack extends QueryPack {
       |  CAST(CAST(sum(accuracy) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS accuracy
       |FROM t GROUP BY bucket ORDER BY bucket""".stripMargin),
     "f04_composite_eval" -> s"""
-      |WITH ${graft.vector.VectorPack.knnCte},
+      |WITH ${graft.vector.KnnJoin.knnCte},
       |c AS (SELECT qid,
       |    CAST(tlabel AS VARCHAR) || ':' ||
       |      (CASE WHEN qid % 2 = 0 THEN 'true' ELSE 'false' END) AS actual,

@@ -413,7 +413,7 @@ object MetricsPack extends QueryPack {
     "m10_isotonic_bins" -> isotonic,
     "m11_sample_size" -> sampleSizeGrid)
 
-  private val predsCte = s"""${graft.vector.VectorPack.knnCte},
+  private val predsCte = s"""${graft.vector.KnnJoin.knnCte},
     |p1 AS (SELECT qid, CAST(tlabel AS VARCHAR) AS t, CAST(nlabel AS VARCHAR) AS p, sim
     |       FROM r WHERE rnk = 1)""".stripMargin
 

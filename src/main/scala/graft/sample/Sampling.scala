@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  private val Seed = "42"
+  private[graft] val Seed = "42"
 
   /** Uniform pseudo-random hex string in [0,1)-order for a key. */
   def hashKey(key: Column): Column =

@@ -25,13 +25,21 @@ import graft.plans.KnnJoinPlan.knnJoin
   * keeps `train` apart from `search`: [[ivfIndex]] (or its session
   * form [[ivfIndexArtifact]]), [[pqIndex]] and [[sq8Stats]] build an
   * index once, and every search takes a built one.
+  *
+  * Each ladder step has one DuckDB twin (`…Sql`) beside its Spark
+  * form, and the oracles compose them. A twin takes the names of the
+  * relations it reads and defines (`<out>_…` on the way): vectors
+  * (vec_id, v DOUBLE[]), centroids (cid, cv), candidates (qid, nid),
+  * search results (qid, nid, sim, rnk) with every rank kept.
   */
 object KnnJoin {
 
   // Build and search constants of the approximate family, one value
-  // each; the v10-v26, v14 and d12 oracle SQL replays them literally.
+  // each. The DuckDB twins below interpolate them, so the v10-v26, v14
+  // and d12 oracles compose those twins and spell none of them.
+  private[graft] val PinnedLists = 16 // lists of the pinned IVF indexes
   private val NProbe = 4          // inverted lists probed per query
-  private val Seed = "42"         // md5 sample order: IVF and PQ seeds
+  private val Seed = "42"         // md5 sample order of the PQ seeds
   private val LloydIters = 2      // IVF k-means refinements
   private val PqM = 4             // PQ subspaces ...
   private val PqSubDim = 16       // ... of 16 dims each (64 = 4 x 16)
@@ -45,6 +53,7 @@ object KnnJoin {
   private val DriftBins = 1000    // drift-audit histogram bins
   private val DriftProb = 0.95    // drift-audit quantile
   private val DriftMargin = 0.1   // drift-audit relative margin
+  private val DriftMetric = s"residual_p${math.round(DriftProb * 100)}"
 
   /** Index-search posture of [[search]]:
     *  - [[Exact]]: the whole index broadcast; it must fit in executor
@@ -68,17 +77,11 @@ object KnnJoin {
       case Exact => knnJoin(spark, queries, index, k, excludeSelf)
       case Sharded(nShards) =>
         require(nShards > 0)
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("sim").desc, col("neighbor_id"))
-        (0 until nShards).map { s =>
+        bestK((0 until nShards).map { s =>
           val shard = index.filter(pmod(col("vec_id"), lit(nShards)) === s)
           knnJoin(spark, queries, shard, k, excludeSelf)
             .select(col("query_id"), col("neighbor_id"), col("sim"))
-        }.reduce(_ unionByName _)
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("neighbor_id"), col("sim"))
+        }.reduce(_ unionByName _), k)
     }
     val labels = index.select(col("vec_id").as("neighbor_id"),
       col("label").as("n_label"))
@@ -97,8 +100,32 @@ object KnnJoin {
     |${out}_p AS (SELECT q.vec_id AS qid, n.vec_id AS nid, q.label AS tlabel,
     |    n.label AS nlabel, list_dot_product(q.v, n.v) AS sim
     |  FROM $q q JOIN $n n ON q.vec_id <> n.vec_id),
-    |$out AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
-    |  FROM ${out}_p)""".stripMargin
+    |${rankSql(s"${out}_p", out)}""".stripMargin
+
+  /** The labeled embeddings `e` and their exact self-kNN ranking `r`
+    * ([[searchSql]]) — the DuckDB twin of [[exactSelfTop3]], shared by
+    * the v, m, f04 and l03 oracles. */
+  private[graft] val knnCte = s"""
+    |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
+    |${searchSql("e", "e", "r")}""".stripMargin
+
+  /** `in`'s (qid, nid, sim, …) rows ranked per query in [[bestK]]'s
+    * order, as `out` (…, rnk), every rank kept. */
+  private def rankSql(in: String, out: String): String =
+    s"""$out AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk
+       |  FROM $in)""".stripMargin
+
+  /** Top `k` per query by (sim desc, neighbor_id asc), [[TopK]]'s
+    * order, of `scored` (query_id, neighbor_id, sim, `payload`…):
+    * (query_id, rank, neighbor_id, sim, `payload`…). */
+  private def bestK(scored: DataFrame, k: Int, payload: String*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col("query_id"), col("rank").cast("long").as("rank"),
+        col("neighbor_id"), col("sim")) ++ payload.map(col): _*)
+  }
 
   /** Bounded top-k selection by (sim desc, id asc): arrays kept sorted
     * with shifted insertion — O(1) reject for the common below-
@@ -128,24 +155,18 @@ object KnnJoin {
     }
   }
 
-  /** Declarative exact kNN: top-k by inner product (callers L2
-    * normalize first for cosine semantics). Spec-only: the independent
-    * reference the kNN operator is checked against. */
-  private[graft] def exactCross(queries: DataFrame, index: DataFrame, k: Int,
-                 excludeSelf: Boolean = true): DataFrame = {
+  /** Declarative exact kNN, leave-self-out: top-k by inner product
+    * (callers L2 normalize first for cosine semantics). Spec-only: the
+    * independent reference the kNN operator is checked against; its
+    * `n_label` payload keeps it out of `KnnRewriteRule`'s shape. */
+  private[graft] def exactCross(queries: DataFrame, index: DataFrame,
+                                k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
     val n = index.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("n_emb"), col("label").as("n_label"))
-    val cond = if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    q.join(broadcast(n), cond)
-      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"), col("n_label"))
+    bestK(q.join(broadcast(n), col("query_id") =!= col("neighbor_id"))
+      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb"))), k, "n_label")
   }
 
   /** Session-scoped memo of the standard artifact nearly every
@@ -264,9 +285,7 @@ object KnnJoin {
     val vb = vectors.select(col("vec_id").as("b_id"),
       col("embedding").cast("array<double>").as("bv"))
     cands.join(va, Seq("a_id")).join(vb, Seq("b_id"))
-      .withColumn("cos", VectorOps.dot(col("av"), col("bv")) /
-        (sqrt(VectorOps.dot(col("av"), col("av"))) *
-          sqrt(VectorOps.dot(col("bv"), col("bv")))))
+      .withColumn("cos", VectorOps.cosine(col("av"), col("bv")))
       .filter(col("cos") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos"))
   }
@@ -334,6 +353,32 @@ object KnnJoin {
     IvfIndex(centroids, nearestCentroids(spark, v, centroids, 1))
   }
 
+  /** The DuckDB twin of [[ivfIndex]] over `vecs`: the centroids `cents`
+    * of [[ivfCentroids]] (`None` lists as a ⌈√n⌉ subquery; each Lloyd
+    * step's means summed through the Spark side's exact decimals) and
+    * the inverted lists `asg` (vec_id, cid). */
+  private[graft] def ivfIndexSql(vecs: String, nlist: Option[Int], cents: String,
+                                 asg: String): String = {
+    val n = nlist.fold(s"(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM $vecs)")(_.toString)
+    def step(i: Int) = if (i == LloydIters) cents else s"${cents}_$i"
+    val lloyd = (1 to LloydIters).map { i =>
+      val out = step(i)
+      s"""${nearestCentroidsSql(vecs, step(i - 1), s"${out}_s")},
+         |${out}_x AS (SELECT a.cid, unnest(r.v) AS x, generate_subscripts(r.v, 1) AS d
+         |  FROM ${out}_s a JOIN $vecs r ON r.vec_id = a.vec_id WHERE a.rn = 1),
+         |${out}_m AS (SELECT cid, d,
+         |    CAST(sum(CAST(x AS DECIMAL(28,18))) AS DOUBLE)
+         |      / CAST(count(*) AS DOUBLE) AS m
+         |  FROM ${out}_x GROUP BY cid, d),
+         |$out AS (SELECT cid, list(m ORDER BY d) AS cv FROM ${out}_m GROUP BY cid)""".stripMargin
+    }
+    (s"""${step(0)} AS (SELECT vec_id AS cid, v AS cv FROM $vecs
+        |      ORDER BY md5('${graft.sample.Sampling.Seed}' || CAST(vec_id AS VARCHAR)), vec_id
+        |      LIMIT $n)""".stripMargin +: lloyd :+
+      nearestCentroidsSql(vecs, cents, s"${asg}_s") :+
+      s"$asg AS (SELECT vec_id, cid FROM ${asg}_s WHERE rn = 1)").mkString(",\n")
+  }
+
   /** [[ivfIndex]] as a session artifact: built once per (`key`,
     * `nlist`) and served to every later caller — the reference trains
     * its quantizer once per session. `nlist` is part of the memo key,
@@ -373,6 +418,13 @@ object KnnJoin {
                 ivf: IvfIndex, k: Int): DataFrame =
     rerank(probedLists(spark, queries, ivf), queries, index, k)
 
+  /** The DuckDB twin of [[approxIvf]]: queries `q` searched in the
+    * index `n` trained as (`cents`, `asg`) by [[ivfIndexSql]]. */
+  private[graft] def approxIvfSql(q: String, n: String, cents: String, asg: String,
+                                  out: String): String =
+    s"""${probedListsSql(q, cents, asg, s"${out}_c")},
+       |${rerankSql(s"${out}_c", q, n, out)}""".stripMargin
+
   /** (query_id, neighbor_id) candidates the coarse quantizer admits:
     * every vector in the query's `NProbe` nearest inverted lists, the
     * query itself excluded. Each pair appears once (a vector sits in
@@ -386,6 +438,14 @@ object KnnJoin {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
 
+  /** The DuckDB twin of [[probedLists]]: the (qid, nid) candidates of
+    * `q` in its `NProbe` nearest lists of (`cents`, `asg`). */
+  private def probedListsSql(q: String, cents: String, asg: String, out: String): String =
+    s"""${nearestCentroidsSql(q, cents, s"${out}_s")},
+       |$out AS (SELECT p.vec_id AS qid, a.vec_id AS nid
+       |  FROM ${out}_s p JOIN $asg a ON a.cid = p.cid
+       |  WHERE p.rn <= $NProbe AND a.vec_id <> p.vec_id)""".stripMargin
+
   /** Exact rerank of a (query_id, neighbor_id) candidate relation —
     * the last stage of every approximate search: full-precision dot
     * per pair, top-k by (sim desc, neighbor_id asc). No broadcast
@@ -397,15 +457,26 @@ object KnnJoin {
       col("embedding").cast("array<double>").as("q_emb"))
     val n = index.select(col("vec_id").as("neighbor_id"),
       col("embedding").cast("array<double>").as("n_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    cand.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
-      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("sim"))
+    bestK(cand.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
+      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb"))), k)
   }
+
+  /** The DuckDB twin of [[rerank]]: the candidates `cand` of queries
+    * `q` in index `n`, scored by exact dot and ranked. */
+  private def rerankSql(cand: String, q: String, n: String, out: String): String =
+    s"""${out}_p AS (SELECT c.qid, c.nid, list_dot_product(q.v, n.v) AS sim
+       |  FROM $cand c JOIN $q q ON q.vec_id = c.qid JOIN $n n ON n.vec_id = c.nid),
+       |${rankSql(s"${out}_p", out)}""".stripMargin
+
+  /** The approximate searches' candidate cut: the `n` best (query_id,
+    * neighbor_id) pairs per query of `scored` by approximate `sim`. */
+  private def candidateCut(scored: DataFrame, n: Int): DataFrame =
+    bestK(scored, n).select(col("query_id"), col("neighbor_id"))
+
+  /** The DuckDB twin of [[candidateCut]] over `scored` (qid, nid, sim). */
+  private def candidateCutSql(scored: String, n: Int, out: String): String =
+    s"""${rankSql(scored, s"${out}_r")},
+       |$out AS (SELECT qid, nid FROM ${out}_r WHERE rnk <= $n)""".stripMargin
 
   /** nlist resolution for the IVF family: an explicit value is
     * honored verbatim; `None` applies the measured FAISS nlist ∝ √n
@@ -464,6 +535,14 @@ object KnnJoin {
         n, excludeSelf = false)
       .select(col("query_id").as("vec_id"), col("neighbor_id").as("centroid_id"))
 
+  /** The DuckDB twin of [[nearestCentroids]], every rank kept: `rows`
+    * ranked against `cents` by (dot desc, cid asc), as `out` (vec_id, cid, rn). */
+  private def nearestCentroidsSql(rows: String, cents: String, out: String): String =
+    s"""$out AS (SELECT r.vec_id, c.cid,
+       |    row_number() OVER (PARTITION BY r.vec_id
+       |      ORDER BY list_dot_product(r.v, c.cv) DESC, c.cid) AS rn
+       |  FROM $rows r, $cents c)""".stripMargin
+
   /** INCREMENTAL IVF index maintenance — the append path of a
     * long-lived embedding store (the d16/d19 incremental pattern,
     * index edition): a per-batch append assigns its vectors to the
@@ -508,6 +587,16 @@ object KnnJoin {
           + VectorOps.dot(col("cv"), col("cv"))).as("residual"))
   }
 
+  /** The DuckDB twin of [[assignmentResiduals]]: `out` (vec_id, cid,
+    * residual) for each row of `rows` against `cents`. */
+  private[graft] def assignmentResidualsSql(rows: String, cents: String, out: String): String =
+    s"""${nearestCentroidsSql(rows, cents, s"${out}_s")},
+       |$out AS (SELECT a.vec_id, a.cid,
+       |    list_dot_product(r.v, r.v) - 2*list_dot_product(r.v, c.cv)
+       |      + list_dot_product(c.cv, c.cv) AS residual
+       |  FROM ${out}_s a JOIN $rows r ON r.vec_id = a.vec_id JOIN $cents c ON c.cid = a.cid
+       |  WHERE a.rn = 1)""".stripMargin
+
   /** CENTROID DRIFT AUDIT — the retrain trigger of the incremental
     * index ([[incrementalAssign]]), built exactly like the funnel's
     * threshold audit (`Lifecycles.thresholdAudit`, the p05 one-sided
@@ -543,12 +632,29 @@ object KnnJoin {
     Sketches.histogramQuantilesWithWidth(
         liveResiduals, col("residual"), DriftBins, Seq(DriftProb))
       .crossJoin(broadcast(pub))
-      .select(lit(s"residual_p${math.round(DriftProb * 100)}").as("metric"),
+      .select(lit(DriftMetric).as("metric"),
         col("q"), col("est"), col("bin_width"), col("published"),
         col("published_bin_width"),
         (col("est") > col("published") * lit(1.0 + DriftMargin)
           + col("bin_width")
           + col("published_bin_width")).cast("long").as("recalibrate"))
+  }
+
+  /** The DuckDB twin of [[centroidDriftAudit]] over the residual
+    * relations `build` and `live` (…, residual), as the one-row `out`. */
+  private[graft] def centroidDriftAuditSql(build: String, live: String, out: String): String = {
+    import graft.core.Sketches.histogramQuantilesCtes
+    def width(b: String) = s"($b.hi - $b.lo) / $DriftBins.0"
+    s"""${out}_bx AS (SELECT residual AS x FROM $build),
+       |${out}_lx AS (SELECT residual AS x FROM $live),
+       |${histogramQuantilesCtes(s"${out}_bx", DriftBins, Seq(DriftProb), s"${out}_b")},
+       |${histogramQuantilesCtes(s"${out}_lx", DriftBins, Seq(DriftProb), s"${out}_l")},
+       |$out AS (SELECT '$DriftMetric' AS metric, l.q, l.est, ${width("lb")} AS bin_width,
+       |    b.est AS published, ${width("bb")} AS published_bin_width,
+       |    CAST(CASE WHEN l.est > b.est * ${1.0 + DriftMargin} + ${width("lb")}
+       |      + ${width("bb")} THEN 1 ELSE 0 END AS BIGINT) AS recalibrate
+       |  FROM ${out}_lest l CROSS JOIN ${out}_lb lb
+       |  CROSS JOIN ${out}_best b CROSS JOIN ${out}_bb bb)""".stripMargin
   }
 
   /** Product-quantization approximate kNN (Jégou et al., "Product
@@ -682,12 +788,27 @@ object KnnJoin {
     rerank(cand, queries, index, k)
   }
 
+  /** The DuckDB twin of [[approxPq]]: queries `q` searched in the index
+    * `n` trained as (`book`, `codes`) by [[pqIndexSql]]. */
+  private[graft] def approxPqSql(q: String, n: String, book: String, codes: String,
+                                 out: String): String =
+    s"""${pqLutsSql(q, book, s"${out}_l")},
+       |${pqScoresSql(s"${out}_l", codes, "WHERE l.qid <> c.vec_id", s"${out}_a")},
+       |${candidateCutSql(s"${out}_a", PqCandidates, s"${out}_c")},
+       |${rerankSql(s"${out}_c", q, n, out)}""".stripMargin
+
   /** Per-subspace slicing: (id, s, subvector) rows — the PQ family's
     * shared projection. */
   private def pqSubspaces(df: DataFrame, idAs: String, xAs: String): DataFrame =
     df.select(col(df.columns.head).as(idAs), posexplode(array((0 until PqM).map(s =>
         slice(col(df.columns(1)), s * PqSubDim + 1, PqSubDim)): _*))
       .as(Seq("s", xAs)))
+
+  /** The DuckDB twin of [[pqSubspaces]]: `out` (vec_id, s, x). */
+  private def pqSubspacesSql(vecs: String, out: String): String =
+    s"""$out AS (SELECT vec_id, s,
+       |    v[CAST(s*$PqSubDim+1 AS INT):CAST(s*$PqSubDim+$PqSubDim AS INT)] AS x
+       |  FROM $vecs, unnest(range(0, $PqM)) t(s))""".stripMargin
 
   /** Nearest-subspace-centroid assignment (L2, ties (dist asc, cid
     * asc)) of each (vec_id, s) subvector. */
@@ -702,6 +823,16 @@ object KnnJoin {
       .select(col("vec_id"), col("s"), col("cid"))
   }
 
+  /** The DuckDB twin of [[pqAssign]]: `sub` (vec_id, s, x) against
+    * `cents` (s, cid, cv), as `out` (vec_id, s, cid). */
+  private def pqAssignSql(sub: String, cents: String, out: String): String =
+    s"""$out AS (SELECT vec_id, s, cid FROM (
+       |    SELECT u.vec_id, u.s, c.cid, row_number() OVER (
+       |      PARTITION BY u.vec_id, u.s
+       |      ORDER BY list_dot_product(u.x, u.x) - 2*list_dot_product(u.x, c.cv)
+       |        + list_dot_product(c.cv, c.cv), c.cid) AS rn
+       |    FROM $sub u JOIN $cents c ON u.s = c.s) WHERE rn = 1)""".stripMargin
+
   /** Train a PQ index over `index` — the FAISS `train` + `add` of
     * [[approxPq]]/[[approxIvfPq]]: the codebook, then every vector's
     * `PqM` codes. */
@@ -709,6 +840,24 @@ object KnnJoin {
     val codebook = pqCodebook(index)
     PqIndex(codebook, pqCodes(index, codebook))
   }
+
+  /** The DuckDB twin of [[pqIndex]] over `vecs`: the codebook `book`
+    * (s, cid, cv) and the codes `codes` (vec_id, s, cid). */
+  private[graft] def pqIndexSql(vecs: String, book: String, codes: String): String =
+    s"""${pqSubspacesSql(vecs, s"${book}_sub")},
+       |${book}_seed AS (SELECT s, cid, cv FROM (
+       |    SELECT s, vec_id AS cid, x AS cv, row_number() OVER (PARTITION BY s
+       |      ORDER BY md5('${Seed}_' || CAST(s AS VARCHAR) || '_' || CAST(vec_id AS VARCHAR)),
+       |        vec_id) AS rn
+       |    FROM ${book}_sub) WHERE rn <= $PqCentroids),
+       |${pqAssignSql(s"${book}_sub", s"${book}_seed", s"${book}_a")},
+       |${book}_xp AS (SELECT s, cid, generate_subscripts(x, 1) AS d, unnest(x) AS xd
+       |  FROM ${book}_sub JOIN ${book}_a USING (vec_id, s)),
+       |${book}_m AS (SELECT s, cid, d,
+       |    CAST(sum(CAST(xd AS DECIMAL(28,18))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mn
+       |  FROM ${book}_xp GROUP BY s, cid, d),
+       |$book AS (SELECT s, cid, list(mn ORDER BY d) AS cv FROM ${book}_m GROUP BY s, cid),
+       |${pqAssignSql(s"${book}_sub", book, codes)}""".stripMargin
 
   /** PQ codebook construction: per-subspace md5-ordered seed sample,
     * ONE Lloyd refinement through exact-decimal means — the
@@ -770,6 +919,26 @@ object KnnJoin {
         VectorOps.dot(col("qx"), col("cv")).as("qd"))
   }
 
+  /** The DuckDB twin of [[pqLuts]]: `out` (qid, s, cid, qd) for the
+    * queries `q` against the codebook `book`. */
+  private def pqLutsSql(q: String, book: String, out: String): String =
+    s"""${pqSubspacesSql(q, s"${out}_sub")},
+       |$out AS (SELECT u.vec_id AS qid, u.s, c.cid, list_dot_product(u.x, c.cv) AS qd
+       |  FROM ${out}_sub u JOIN $book c ON u.s = c.s)""".stripMargin
+
+  /** The PQ asymmetric score in DuckDB, summed in [[approxIvfPq]]'s
+    * fixed subspace order: `out` (qid, nid, sim) for each (query, code
+    * row) pair of `l` (`luts`) and `c` (`codes`) that `admit` keeps. */
+  private def pqScoresSql(luts: String, codes: String, admit: String,
+                          out: String): String = {
+    val sum = (0 until PqM).map(s => s"max(CASE WHEN l.s = $s THEN l.qd END)")
+      .mkString(" + ")
+    s"""$out AS (SELECT l.qid, c.vec_id AS nid, $sum AS sim
+       |  FROM $codes c JOIN $luts l ON c.s = l.s AND c.cid = l.cid
+       |  $admit
+       |  GROUP BY l.qid, c.vec_id)""".stripMargin
+  }
+
   /** IVF-PQ composition — the FAISS production shape (`IndexIVFPQ`):
     * the coarse quantizer prunes the search to `NProbe` inverted
     * lists, and within the probed lists candidates are scored from PQ
@@ -804,14 +973,20 @@ object KnnJoin {
       .join(qdots.select(col("qid").as("query_id"), col("s"), col("cid"),
         col("qd")), Seq("query_id", "s", "cid"))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(approxSum.as("approx_ip"))
-    val wCand = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_ip").desc, col("neighbor_id"))
-    val cand = approx.withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= IvfCandidates)
-      .select(col("query_id"), col("neighbor_id"))
-    rerank(cand, queries, index, k)
+      .agg(approxSum.as("sim"))
+    rerank(candidateCut(approx, IvfCandidates), queries, index, k)
   }
+
+  /** The DuckDB twin of [[approxIvfPq]] over an [[ivfIndexSql]] index
+    * (`cents`, `asg`) and a [[pqIndexSql]] one (`book`, `codes`). */
+  private[graft] def approxIvfPqSql(q: String, n: String, cents: String, asg: String,
+                                    book: String, codes: String, out: String): String =
+    s"""${probedListsSql(q, cents, asg, s"${out}_pl")},
+       |${pqLutsSql(q, book, s"${out}_l")},
+       |${pqScoresSql(s"${out}_l", codes,
+          s"JOIN ${out}_pl pl ON pl.qid = l.qid AND pl.nid = c.vec_id", s"${out}_a")},
+       |${candidateCutSql(s"${out}_a", IvfCandidates, s"${out}_c")},
+       |${rerankSql(s"${out}_c", q, n, out)}""".stripMargin
 
   /** Per-dimension [lo, hi] quantization bounds for [[approxSq8]]:
     * ONE min/max aggregate over the index corpus — the train step of
@@ -829,6 +1004,11 @@ object KnnJoin {
       .select(
         transform(col("los"), s => s.getField("lo")).as("lo"),
         transform(col("his"), s => s.getField("hi")).as("hi"))
+
+  /** The DuckDB twin of [[sq8Stats]]: `out` (d, lo, hi) over `vecs`. */
+  private[graft] def sq8StatsSql(vecs: String, out: String): String =
+    s"""${out}_x AS (SELECT generate_subscripts(v, 1) AS d, unnest(v) AS xv FROM $vecs),
+       |$out AS (SELECT d, min(xv) AS lo, max(xv) AS hi FROM ${out}_x GROUP BY d)""".stripMargin
 
   /** Quantize-and-reconstruct expression builder from a collected
     * stats frame (bounded: 2·dim doubles — the quantizer "model",
@@ -851,6 +1031,17 @@ object KnnJoin {
       })
     }
   }
+
+  /** The DuckDB twin of [[sq8XhatFn]], operation for operation: `vecs`
+    * quantized against `stats` and reconstructed, as `out` (vec_id, xhat). */
+  private def sq8ReconSql(vecs: String, stats: String, out: String): String =
+    s"""${out}_x AS (SELECT vec_id, generate_subscripts(v, 1) AS d, unnest(v) AS xv FROM $vecs),
+       |$out AS (SELECT vec_id, list(lo +
+       |      (floor((CASE WHEN hi > lo
+       |          THEN least(greatest((xv - lo) / (hi - lo), 0.0), 1.0)
+       |          ELSE 0.0 END) * 255.0 + 0.5) / 255.0) * (hi - lo)
+       |      ORDER BY d) AS xhat
+       |  FROM ${out}_x JOIN $stats USING (d) GROUP BY vec_id)""".stripMargin
 
   /** SQ8 approximate kNN — the scalar-quantization member of the
     * index ladder (FAISS `IndexScalarQuantizer` QT_8bit; reference
@@ -880,6 +1071,15 @@ object KnnJoin {
     rerank(cands, queries, index, k)
   }
 
+  /** The DuckDB twin of [[approxSq8]]: queries `q` searched in the
+    * index `n` quantized with the bounds `stats` of [[sq8StatsSql]]. */
+  private[graft] def approxSq8Sql(q: String, n: String, stats: String, out: String): String =
+    s"""${sq8ReconSql(n, stats, s"${out}_rec")},
+       |${out}_a AS (SELECT q.vec_id AS qid, r.vec_id AS nid, list_dot_product(q.v, r.xhat) AS sim
+       |  FROM $q q JOIN ${out}_rec r ON q.vec_id <> r.vec_id),
+       |${candidateCutSql(s"${out}_a", Sq8Rerank, s"${out}_c")},
+       |${rerankSql(s"${out}_c", q, n, out)}""".stripMargin
+
   /** IVF-SQ8 composition (FAISS `IndexIVFScalarQuantizer` shape —
     * completing the index matrix: Flat / Sharded / IVF / PQ / IVF-PQ /
     * SQ8 / IVF-SQ8): the coarse quantizer prunes to `NProbe` lists,
@@ -899,14 +1099,20 @@ object KnnJoin {
       xhatOf(col("embedding").cast("array<double>")).as("n_hat"))
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").cast("array<double>").as("q_emb"))
-    val wCand = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id"))
-    val cand = probedLists(spark, queries, ivf)
+    val scored = probedLists(spark, queries, ivf)
       .join(q, Seq("query_id")).join(recon, Seq("neighbor_id"))
-      .withColumn("approx", VectorOps.dot(col("q_emb"), col("n_hat")))
-      .withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= IvfCandidates)
-      .select(col("query_id"), col("neighbor_id"))
-    rerank(cand, queries, index, k)
+      .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_hat")))
+    rerank(candidateCut(scored, IvfCandidates), queries, index, k)
   }
+
+  /** The DuckDB twin of [[approxIvfSq8]] over an [[ivfIndexSql]] index
+    * (`cents`, `asg`) quantized with the [[sq8StatsSql]] bounds `stats`. */
+  private[graft] def approxIvfSq8Sql(q: String, n: String, cents: String, asg: String,
+                                     stats: String, out: String): String =
+    s"""${probedListsSql(q, cents, asg, s"${out}_pl")},
+       |${sq8ReconSql(n, stats, s"${out}_rec")},
+       |${out}_a AS (SELECT pl.qid, pl.nid, list_dot_product(q.v, r.xhat) AS sim
+       |  FROM ${out}_pl pl JOIN $q q ON q.vec_id = pl.qid JOIN ${out}_rec r ON r.vec_id = pl.nid),
+       |${candidateCutSql(s"${out}_a", IvfCandidates, s"${out}_c")},
+       |${rerankSql(s"${out}_c", q, n, out)}""".stripMargin
 }

@@ -58,9 +58,7 @@ object SemDedup {
       .join(ivf.centroids.select(col("centroid_id"), col("embedding").as("cv")),
         Seq("centroid_id"))
       .select(col("vec_id"), col("centroid_id"),
-        (VectorOps.dot(col("embedding"), col("cv")) /
-          (sqrt(VectorOps.dot(col("embedding"), col("embedding"))) *
-            sqrt(VectorOps.dot(col("cv"), col("cv"))))).as("csim")))
+        VectorOps.cosine(col("embedding"), col("cv")).as("csim")))
     // within-cluster near-dup pairs: the join shuffles on centroid_id,
     // never an all-pairs scan over the corpus
     val a = withC.select(col("centroid_id"), col("vec_id").as("a_id"),
@@ -71,9 +69,7 @@ object SemDedup {
     val vb = v.select(col("vec_id").as("b_id"), col("embedding").as("bv"))
     val pairs = a.join(b, Seq("centroid_id")).filter(col("a_id") < col("b_id"))
       .join(va, Seq("a_id")).join(vb, Seq("b_id"))
-      .withColumn("cos", VectorOps.dot(col("av"), col("bv")) /
-        (sqrt(VectorOps.dot(col("av"), col("av"))) *
-          sqrt(VectorOps.dot(col("bv"), col("bv")))))
+      .withColumn("cos", VectorOps.cosine(col("av"), col("bv")))
       .filter(col("cos") >= tau)
     // keeper rule: the pair member CLOSER to the centroid (higher
     // csim; ties by larger id) is the redundant one
@@ -111,9 +107,7 @@ object SemDedup {
     val prs = graft.core.Caches.transient(
       a.join(b, Seq("centroid_id")).filter(col("anchor") =!= col("cand"))
         .join(va, Seq("anchor")).join(vb, Seq("cand"))
-        .withColumn("cos", VectorOps.dot(col("av"), col("bv")) /
-          (sqrt(VectorOps.dot(col("av"), col("av"))) *
-            sqrt(VectorOps.dot(col("bv"), col("bv")))))
+        .withColumn("cos", VectorOps.cosine(col("av"), col("bv")))
         .select(col("anchor"), col("cand"), col("cos")))
     val pos = prs.filter(col("cos") >= tau)
       .select(col("anchor"), col("cand").as("pos_id"), col("cos").as("pos_cos"))

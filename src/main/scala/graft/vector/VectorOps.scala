@@ -43,6 +43,11 @@ object VectorOps {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
+  /** The DuckDB twin of [[cosine]] over the `DOUBLE[]` expressions `a`
+    * and `b`: the same three dots, folded the same way. */
+  private[graft] def cosineSql(a: String, b: String): String =
+    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
+
   /** F22: `(1+sim)/2` rescale to [0,1] (`faiss_new_.py:502`). */
   def rescale01(sim: Column): Column = (lit(1.0) + sim) / 2.0
 }

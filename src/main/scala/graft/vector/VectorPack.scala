@@ -34,7 +34,7 @@ object VectorPack extends QueryPack {
     * Lloyd means), so v10/v13/v16/v22/v23 read one trained 16-list
     * k-means instead of re-training it per query. */
   private def ivf16(spark: SparkSession, dir: String): KnnJoin.IvfIndex =
-    KnnJoin.ivfIndexArtifact(spark, dir, embCast(spark, dir), Some(16))
+    KnnJoin.ivfIndexArtifact(spark, dir, embCast(spark, dir), Some(KnnJoin.PinnedLists))
 
   /** The incremental-maintenance fixture split (v25/v26): base =
     * vec_id % 5 ≠ 0 is the STORED index the centroids were trained on;
@@ -50,7 +50,8 @@ object VectorPack extends QueryPack {
     * v10's index) — the frozen quantizer the incremental appends
     * assign against. */
   private def ivfBaseCentroids(spark: SparkSession, dir: String): DataFrame =
-    KnnJoin.ivfIndexArtifact(spark, s"base:$dir", embBase(spark, dir), Some(16))
+    KnnJoin.ivfIndexArtifact(spark, s"base:$dir", embBase(spark, dir),
+        Some(KnnJoin.PinnedLists))
       .centroids
 
   private def pqCodebookArtifact(spark: SparkSession, dir: String): DataFrame =
@@ -84,19 +85,27 @@ object VectorPack extends QueryPack {
   private def memoSearch(spark: SparkSession, dir: String, name: String)
       (build: DataFrame => DataFrame): DataFrame =
     graft.core.Artifacts.memo(spark, s"search_$name:$dir") {
-      build(Tables(spark, dir).embeddingsSpread)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("sim"), 6).as("sim"))
-        .orderBy(col("query_id"), col("rank"))
+      searchOutput(build(Tables(spark, dir).embeddingsSpread))
     }
+
+  /** Every search query's output: (query_id, rank, neighbor_id, sim)
+    * with the sim rounded at the boundary, in (query_id, rank) order. */
+  private def searchOutput(hits: DataFrame): DataFrame =
+    hits.select(col("query_id"), col("rank"), col("neighbor_id"),
+        round(col("sim"), 6).as("sim"))
+      .orderBy(col("query_id"), col("rank"))
+
+  /** The DuckDB twin of [[searchOutput]] over a search result relation
+    * `r` (qid, nid, sim, rnk), cut at rank `K`. */
+  private def searchOutputSql(r: String): String = s"""
+    |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id,
+    |  round(sim, 6) AS sim
+    |FROM $r WHERE rnk <= $K ORDER BY query_id, rank""".stripMargin
 
   /** J4: exact top-3 cosine (raw IP — the oracle mirrors it) kNN,
     * served from the session-memoized self-join artifact. */
   def knnTop3(spark: SparkSession, dir: String): DataFrame =
-    KnnJoin.exactSelfTop3(spark, dir)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rank"))
+    searchOutput(KnnJoin.exactSelfTop3(spark, dir))
 
   /** L4: top-1 neighbor's label as the prediction (leave-self-out);
     * rank 1 of the memoized top-3 IS the k=1 result. */
@@ -208,10 +217,7 @@ object VectorPack extends QueryPack {
     // spread scan: the exec's per-partition heap loop runs in the
     // query side's scan stage (quadratic work, one task raw)
     val e = Tables(spark, dir).embeddingsSpread
-    graft.plans.KnnJoinPlan.knnJoin(spark, e, e, K)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rank"))
+    searchOutput(graft.plans.KnnJoinPlan.knnJoin(spark, e, e, K))
   }
 
   /** v01 written the NAIVE way (cross join + window rank) and left to
@@ -225,13 +231,12 @@ object VectorPack extends QueryPack {
       col("embedding").cast("array<double>").as("n_emb"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
-    q.join(n, col("query_id") =!= col("neighbor_id"))
+    searchOutput(q.join(n, col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", VectorOps.dot(col("q_emb"), col("n_emb")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= K)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rank"))
+        col("neighbor_id"), col("sim")))
   }
 
   /** IVF approximate kNN. "Approximate" refers to recall vs exact
@@ -349,10 +354,7 @@ object VectorPack extends QueryPack {
     val e = Tables(spark, dir).embeddingsSpread
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"), col("label"))
-    KnnJoin.search(spark, e, e, K, KnnJoin.Sharded(4))
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
-      .orderBy(col("query_id"), col("rank"))
+    searchOutput(KnnJoin.search(spark, e, e, K, KnnJoin.Sharded(4)))
   }
 
   /** v21: the index-family recall report — recall@3 of every
@@ -544,27 +546,18 @@ object VectorPack extends QueryPack {
       "pq_codes" -> pqCodesArtifact,
       "sq8_stats" -> sq8StatsArtifact)
 
-  /** The labeled embeddings `e` and their exact self-kNN ranking `r`
-    * ([[KnnJoin.searchSql]]) — shared by the v, m, f04 and l03 oracles. */
-  private[graft] val knnCte = s"""
-    |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
-    |${KnnJoin.searchSql("e", "e", "r")}""".stripMargin
-
   private val oracles0: Map[String, String] = Map(
     "v01_knn_top3" -> s"""
-      |WITH $knnCte
-      |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id,
-      |  round(sim, 6) AS sim
-      |FROM r WHERE rnk <= $K ORDER BY query_id, rank""".stripMargin,
+      |WITH ${KnnJoin.knnCte}${searchOutputSql("r")}""".stripMargin,
     "v02_knn_classify" -> s"""
-      |WITH $knnCte
+      |WITH ${KnnJoin.knnCte}
       |SELECT r.qid AS vec_id, CAST(e.label AS BIGINT) AS true_label,
       |  CAST(r.nlabel AS BIGINT) AS pred_label,
       |  CASE WHEN e.label = r.nlabel THEN 1 ELSE 0 END AS correct
       |FROM r JOIN e ON e.vec_id = r.qid WHERE r.rnk = 1
       |ORDER BY vec_id""".stripMargin,
     "v03_knn_accuracy_by_label" -> s"""
-      |WITH $knnCte,
+      |WITH ${KnnJoin.knnCte},
       |c AS (SELECT r.qid, CAST(e.label AS VARCHAR) AS field,
       |        CASE WHEN e.label = r.nlabel THEN 1 ELSE 0 END AS correct
       |      FROM r JOIN e ON e.vec_id = r.qid WHERE r.rnk = 1)
@@ -582,11 +575,9 @@ object VectorPack extends QueryPack {
       |SELECT vec_id, round(nb, 6) AS norm_before,
       |  round(sqrt(list_dot_product(vn, vn)), 6) AS norm_after
       |FROM n ORDER BY vec_id""".stripMargin,
-    "v05_cosine_pairs" -> """
+    "v05_cosine_pairs" -> s"""
       |WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-      |SELECT a.vec_id,
-      |  round(list_dot_product(a.v, b.v)
-      |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos_next
+      |SELECT a.vec_id, round(${VectorOps.cosineSql("a.v", "b.v")}, 6) AS cos_next
       |FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
       |ORDER BY a.vec_id""".stripMargin,
     "v06_sample_by_label" -> """
@@ -615,7 +606,7 @@ object VectorPack extends QueryPack {
       |  ORDER BY md5('42' || CAST(doc_id AS VARCHAR)), doc_id LIMIT 25)
       |ORDER BY doc_id""".stripMargin,
     "v08_topk_softmax" -> s"""
-      |WITH $knnCte,
+      |WITH ${KnnJoin.knnCte},
       |k AS (SELECT qid, rnk, nid, CAST(round(sim, 6) AS DECIMAL(18,6)) AS simd,
       |        sim
       |      FROM r WHERE rnk <= $K),
@@ -627,282 +618,74 @@ object VectorPack extends QueryPack {
       |FROM k JOIN t ON k.qid = t.qid
       |ORDER BY query_id, rank""".stripMargin)
 
-  /** The IVF pipeline replayed in SQL, k-means included: same centroid
-    * sample (md5 order), two Lloyd iterations with per-dimension means
-    * summed through exact DECIMAL(28,18) (order-independent — the same
-    * casts the Spark side uses), same argmax/probe tie-breaks (dot
-    * desc, id asc), same rerank — mirrors `KnnJoin.approxIvf` over a
-    * 16-list index and `KnnJoin`'s constants (`NProbe` 4, `Seed` 42,
-    * `LloydIters` 2). */
-  private[graft] def lloydIterSql(inCentroids: String, i: Int): String = s"""
-    |s$i AS (SELECT e.vec_id, c.cid,
-    |    row_number() OVER (PARTITION BY e.vec_id
-    |      ORDER BY list_dot_product(e.v, c.cv) DESC, c.cid) AS rn
-    |  FROM e, $inCentroids c),
-    |a$i AS (SELECT vec_id, cid FROM s$i WHERE rn = 1),
-    |x$i AS (SELECT a.cid, unnest(e.v) AS x, generate_subscripts(e.v, 1) AS d
-    |  FROM a$i a JOIN e ON e.vec_id = a.vec_id),
-    |m$i AS (SELECT cid, d,
-    |    CAST(sum(CAST(x AS DECIMAL(28,18))) AS DOUBLE)
-    |      / CAST(count(*) AS DOUBLE) AS m
-    |  FROM x$i GROUP BY cid, d),
-    |c$i AS (SELECT cid, list(m ORDER BY d) AS cv FROM m$i GROUP BY cid)""".stripMargin
-
   private val eCte =
     "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
 
-  /** The IVF coarse-quantizer chain (seed sample → 2 Lloyd iters →
-    * assignments + probes) — shared by the v10 and v13 oracles. */
-  /** Shared with the d12 SemDeDup oracle (same chain over its
-    * augmented `e` relation) — the CTE names only assume an
-    * `e(vec_id, v)` CTE in scope. */
-  /** IVF chain with a parameterizable seed-sample size — `limitSql`
-    * is a SQL expression (a literal for the pinned oracles, a count
-    * subquery for v19's auto-sized form). */
-  private[graft] def ivfCtesWith(limitSql: String) = s"""
-    |c0 AS (SELECT vec_id AS cid, v AS cv FROM e
-    |      ORDER BY md5('42' || CAST(vec_id AS VARCHAR)), vec_id LIMIT $limitSql),
-    |${lloydIterSql("c0", 1)},
-    |${lloydIterSql("c1", 2)},
-    |scored AS (SELECT e.vec_id, c.cid,
-    |    row_number() OVER (PARTITION BY e.vec_id
-    |      ORDER BY list_dot_product(e.v, c.cv) DESC, c.cid) AS rn
-    |  FROM e, c2 c),
-    |asg AS (SELECT vec_id, cid FROM scored WHERE rn = 1),
-    |probes AS (SELECT vec_id AS qid, cid FROM scored WHERE rn <= 4)""".stripMargin
+  private val pinned = Some(KnnJoin.PinnedLists)
 
-  /** The pinned 16-list form the v10/v12/v13/d12 oracles share. */
-  private[graft] val ivfCtes = ivfCtesWith("16")
+  /** An approximate search's oracle, training included: the KnnJoin
+    * twins `ctes` over `e`, the last one defining the result `r`. */
+  private def searchOracle(ctes: String*): String = s"""
+    |WITH ${(eCte +: ctes).mkString(",\n")}${searchOutputSql("r")}""".stripMargin
 
-  private def ivfSqlWith(ctes: String) = s"""
-    |WITH $eCte,
-    |$ctes,
-    |cand AS (SELECT p.qid, a.vec_id AS nid
-    |  FROM probes p JOIN asg a ON a.cid = p.cid WHERE a.vec_id <> p.qid),
-    |r AS (SELECT cand.qid, cand.nid, list_dot_product(q.v, n.v) AS sim,
-    |    row_number() OVER (PARTITION BY cand.qid
-    |      ORDER BY list_dot_product(q.v, n.v) DESC, cand.nid) AS rnk
-    |  FROM cand JOIN e q ON q.vec_id = cand.qid JOIN e n ON n.vec_id = cand.nid)
-    |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id,
-    |  round(sim, 6) AS sim
-    |FROM r WHERE rnk <= $K ORDER BY query_id, rank""".stripMargin
+  private val ivfIndexCtes = KnnJoin.ivfIndexSql("e", pinned, "cents", "asg")
+  private val pqIndexCtes = KnnJoin.pqIndexSql("e", "book", "codes")
 
-  private val ivfSql = ivfSqlWith(ivfCtes)
+  private val ivfSql = searchOracle(ivfIndexCtes,
+    KnnJoin.approxIvfSql("e", "e", "cents", "asg", "r"))
 
   /** v19: same replay with the ⌈√n⌉ seed-sample subquery. */
-  private val ivfAutoSql = ivfSqlWith(ivfCtesWith(
-    "(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM e)"))
+  private val ivfAutoSql = searchOracle(KnnJoin.ivfIndexSql("e", None, "cents", "asg"),
+    KnnJoin.approxIvfSql("e", "e", "cents", "asg", "r"))
+
+  private val pqSql = searchOracle(pqIndexCtes,
+    KnnJoin.approxPqSql("e", "e", "book", "codes", "r"))
+  private val ivfPqSql = searchOracle(ivfIndexCtes, pqIndexCtes,
+    KnnJoin.approxIvfPqSql("e", "e", "cents", "asg", "book", "codes", "r"))
+  private val sq8Sql = searchOracle(KnnJoin.sq8StatsSql("e", "stats"),
+    KnnJoin.approxSq8Sql("e", "e", "stats", "r"))
+  private val ivfSq8Sql = searchOracle(ivfIndexCtes, KnnJoin.sq8StatsSql("e", "stats"),
+    KnnJoin.approxIvfSq8Sql("e", "e", "cents", "asg", "stats", "r"))
 
   /** v25/v26: the Lloyd chain trained on the BASE split only (`e` is
     * filtered), the appended rows assigned from scratch against the
-    * frozen `c2` centroids — the incremental ≡ rebuilt proof. */
+    * frozen centroids — the incremental ≡ rebuilt proof. */
   private val eBaseCte =
     "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
       "FROM embeddings WHERE vec_id % 5 <> 0)"
   private val qAppendCte =
     "qa AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
       "FROM embeddings WHERE vec_id % 5 = 0)"
-  private def residOf(v: String, c: String): String =
-    s"list_dot_product($v, $v) - 2*list_dot_product($v, $c) " +
-      s"+ list_dot_product($c, $c)"
 
   private val ivfIncrementalSql = s"""
     |WITH $eBaseCte,
-    |$ivfCtes,
+    |$ivfIndexCtes,
     |$qAppendCte,
-    |sq AS (SELECT qa.vec_id, c.cid,
-    |    ${residOf("qa.v", "c.cv")} AS resid,
-    |    row_number() OVER (PARTITION BY qa.vec_id
-    |      ORDER BY list_dot_product(qa.v, c.cv) DESC, c.cid) AS rn
-    |  FROM qa, c2 c)
+    |${KnnJoin.assignmentResidualsSql("qa", "cents", "res")}
     |SELECT vec_id, CAST(cid AS BIGINT) AS centroid_id,
-    |  round(resid, 6) AS residual
-    |FROM sq WHERE rn = 1 ORDER BY vec_id""".stripMargin
+    |  round(residual, 6) AS residual
+    |FROM res ORDER BY vec_id""".stripMargin
 
-  /** v26: build/live residual relations, the shared histogram-sketch
-    * CTE per side, and the one-sided trigger arithmetic. */
+  /** v26: the build and live residual relations, rounded as v26 rounds
+    * them, through the drift audit's twin. */
   private val ivfDriftSql = s"""
     |WITH $eBaseCte,
-    |$ivfCtes,
+    |$ivfIndexCtes,
     |$qAppendCte,
-    |vbr AS (SELECT round(${residOf("e.v", "c.cv")}, 6) AS x
-    |  FROM asg JOIN e ON e.vec_id = asg.vec_id JOIN c2 c ON c.cid = asg.cid),
-    |vlq AS (SELECT qa.vec_id, c.cid, ${residOf("qa.v", "c.cv")} AS resid,
-    |    row_number() OVER (PARTITION BY qa.vec_id
-    |      ORDER BY list_dot_product(qa.v, c.cv) DESC, c.cid) AS rn
-    |  FROM qa, c2 c),
-    |vlr AS (SELECT round(resid, 6) AS x FROM vlq WHERE rn = 1),
-    |${graft.core.Sketches.histogramQuantilesCtes("vbr", 1000, Seq(0.95), "vb_")},
-    |${graft.core.Sketches.histogramQuantilesCtes("vlr", 1000, Seq(0.95), "vl_")}
-    |SELECT 'residual_p95' AS metric, l.q, l.est,
-    |  (lb.hi - lb.lo) / 1000.0 AS bin_width,
-    |  b.est AS published,
-    |  (bb.hi - bb.lo) / 1000.0 AS published_bin_width,
-    |  CAST(CASE WHEN l.est > b.est * 1.1 + (lb.hi - lb.lo) / 1000.0
-    |      + (bb.hi - bb.lo) / 1000.0 THEN 1 ELSE 0 END AS BIGINT)
-    |    AS recalibrate
-    |FROM vl_est l CROSS JOIN vl_b lb
-    |CROSS JOIN vb_est b CROSS JOIN vb_b bb""".stripMargin
-
-  /** The PQ pipeline replayed in SQL — mirrors `KnnJoin.approxPq`
-    * and its constants (`PqM` 4 subspaces × `PqSubDim` 16 dims,
-    * `PqCentroids` 16 per subspace, one Lloyd refinement through
-    * DECIMAL(28,18) means, `PqCandidates` 30, `Seed` 42). The asymmetric score sums its 4 lookup terms in fixed
-    * subspace order on both engines. */
-  /** The PQ codebook/code/LUT chain (per-subspace seeds → one Lloyd
-    * refinement → codes + query dots) — shared by v12 and v13. */
-  private val pqCtes = {
-    val m = 4
-    val subDim = 16
-    val l2 = "list_dot_product(x, x) - 2*list_dot_product(x, cv) + list_dot_product(cv, cv)"
-    s"""
-    |sub AS (SELECT vec_id, s, v[CAST(s*$subDim+1 AS INT):CAST(s*$subDim+$subDim AS INT)] AS x
-    |  FROM e, unnest(range(0, $m)) t(s)),
-    |seeds AS (SELECT s, cid, cv FROM (
-    |    SELECT s, vec_id AS cid, x AS cv, row_number() OVER (PARTITION BY s
-    |      ORDER BY md5('42_' || CAST(s AS VARCHAR) || '_' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
-    |    FROM sub) WHERE rn <= 16),
-    |a0 AS (SELECT vec_id, s, cid FROM (
-    |    SELECT sub.vec_id, sub.s, seeds.cid, row_number() OVER (
-    |      PARTITION BY sub.vec_id, sub.s
-    |      ORDER BY ${l2.replace("cv", "seeds.cv")}, seeds.cid) AS rn
-    |    FROM sub JOIN seeds ON sub.s = seeds.s) WHERE rn = 1),
-    |xp AS (SELECT s, cid, generate_subscripts(x, 1) AS d, unnest(x) AS xd
-    |  FROM sub JOIN a0 USING (vec_id, s)),
-    |cm AS (SELECT s, cid, d,
-    |    CAST(sum(CAST(xd AS DECIMAL(28,18))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mn
-    |  FROM xp GROUP BY s, cid, d),
-    |cent AS (SELECT s, cid, list(mn ORDER BY d) AS cv FROM cm GROUP BY s, cid),
-    |codes AS (SELECT vec_id, s, cid FROM (
-    |    SELECT sub.vec_id, sub.s, cent.cid, row_number() OVER (
-    |      PARTITION BY sub.vec_id, sub.s
-    |      ORDER BY ${l2.replace("cv", "cent.cv")}, cent.cid) AS rn
-    |    FROM sub JOIN cent ON sub.s = cent.s) WHERE rn = 1),
-    |qds AS (SELECT sub.vec_id AS qid, sub.s, cent.cid,
-    |    list_dot_product(sub.x, cent.cv) AS qd
-    |  FROM sub JOIN cent ON sub.s = cent.s)""".stripMargin
-  }
-
-  private val pqApproxSum = (0 until 4)
-    .map(s => s"max(CASE WHEN q.s = $s THEN q.qd END)").mkString(" + ")
-
-  private val pqSql = s"""
-    |WITH $eCte,
-    |$pqCtes,
-    |approx AS (SELECT q.qid, c.vec_id, $pqApproxSum AS approx_ip
-    |  FROM codes c JOIN qds q ON c.s = q.s AND c.cid = q.cid
-    |  WHERE q.qid <> c.vec_id GROUP BY q.qid, c.vec_id),
-    |cand AS (SELECT qid, vec_id FROM (
-    |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-    |      ORDER BY approx_ip DESC, vec_id) AS crn FROM approx) WHERE crn <= 30),
-    |r AS (SELECT cand.qid, cand.vec_id AS nid, list_dot_product(q.v, n.v) AS sim,
-    |    row_number() OVER (PARTITION BY cand.qid
-    |      ORDER BY list_dot_product(q.v, n.v) DESC, cand.vec_id) AS rnk
-    |  FROM cand JOIN e q ON q.vec_id = cand.qid JOIN e n ON n.vec_id = cand.vec_id)
-    |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id,
-    |  round(sim, 6) AS sim
-    |FROM r WHERE rnk <= $K ORDER BY query_id, rank""".stripMargin
-
-  /** v13: the IVF chain's probed lists restrict the PQ chain's
-    * asymmetric scoring (`pl` is the list-membership relation), then
-    * the usual candidate cut + exact rerank — mirrors
-    * `KnnJoin.approxIvfPq` and its constants end-to-end. */
-  private val ivfPqSql = s"""
-    |WITH $eCte,
-    |$ivfCtes,
-    |$pqCtes,
-    |pl AS (SELECT p.qid, a.vec_id AS nid
-    |  FROM probes p JOIN asg a ON a.cid = p.cid WHERE a.vec_id <> p.qid),
-    |approx AS (SELECT q.qid, c.vec_id, $pqApproxSum AS approx_ip
-    |  FROM codes c JOIN qds q ON c.s = q.s AND c.cid = q.cid
-    |  JOIN pl ON pl.qid = q.qid AND pl.nid = c.vec_id
-    |  GROUP BY q.qid, c.vec_id),
-    |cand AS (SELECT qid, vec_id FROM (
-    |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-    |      ORDER BY approx_ip DESC, vec_id) AS crn FROM approx) WHERE crn <= 100),
-    |r AS (SELECT cand.qid, cand.vec_id AS nid, list_dot_product(q.v, n.v) AS sim,
-    |    row_number() OVER (PARTITION BY cand.qid
-    |      ORDER BY list_dot_product(q.v, n.v) DESC, cand.vec_id) AS rnk
-    |  FROM cand JOIN e q ON q.vec_id = cand.qid JOIN e n ON n.vec_id = cand.vec_id)
-    |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id,
-    |  round(sim, 6) AS sim
-    |FROM r WHERE rnk <= $K ORDER BY query_id, rank""".stripMargin
-
-  /** v15 oracle: the whole SQ8 pipeline — min/max train, 8-bit
-    * quantize + reconstruct, asymmetric top-20, exact rerank —
-    * arithmetic mirrored operation-for-operation (floor-based
-    * quantization, so there is no rounding-mode ambiguity). */
-  private val sq8Sql = s"""
-    |WITH xs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings),
-    |ex AS (SELECT vec_id, generate_subscripts(x, 1) AS d, unnest(x) AS v FROM xs),
-    |dims AS (SELECT d, min(v) AS lo, max(v) AS hi FROM ex GROUP BY d),
-    |rec AS (SELECT vec_id, list(lo +
-    |      (floor((CASE WHEN hi > lo
-    |          THEN least(greatest((v - lo) / (hi - lo), 0.0), 1.0)
-    |          ELSE 0.0 END) * 255.0 + 0.5) / 255.0) * (hi - lo)
-    |      ORDER BY d) AS xhat
-    |  FROM ex JOIN dims USING (d) GROUP BY vec_id),
-    |ap AS (SELECT q.vec_id AS qid, r.vec_id AS nid,
-    |    list_dot_product(q.x, r.xhat) AS approx
-    |  FROM xs q JOIN rec r ON q.vec_id <> r.vec_id),
-    |cand AS (SELECT qid, nid FROM (
-    |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-    |      ORDER BY approx DESC, nid) AS arnk FROM ap) WHERE arnk <= 20),
-    |r AS (SELECT cand.qid, cand.nid, list_dot_product(q.x, n.x) AS sim,
-    |    row_number() OVER (PARTITION BY cand.qid
-    |      ORDER BY list_dot_product(q.x, n.x) DESC, cand.nid) AS rnk
-    |  FROM cand JOIN xs q ON q.vec_id = cand.qid JOIN xs n ON n.vec_id = cand.nid)
-    |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id,
-    |  round(sim, 6) AS sim
-    |FROM r WHERE rnk <= $K ORDER BY query_id, rank""".stripMargin
-
-  /** v16 oracle: the IVF coarse chain composed with SQ8
-    * quantize/reconstruct scoring inside probed lists — mirrors
-    * [[KnnJoin.approxIvfSq8]] operation-for-operation. */
-  private val ivfSq8Sql = s"""
-    |WITH $eCte,
-    |$ivfCtes,
-    |ex8 AS (SELECT vec_id, generate_subscripts(v, 1) AS d, unnest(v) AS xv FROM e),
-    |dims AS (SELECT d, min(xv) AS lo, max(xv) AS hi FROM ex8 GROUP BY d),
-    |rec AS (SELECT vec_id, list(lo +
-    |      (floor((CASE WHEN hi > lo
-    |          THEN least(greatest((xv - lo) / (hi - lo), 0.0), 1.0)
-    |          ELSE 0.0 END) * 255.0 + 0.5) / 255.0) * (hi - lo)
-    |      ORDER BY d) AS xhat
-    |  FROM ex8 JOIN dims USING (d) GROUP BY vec_id),
-    |pl AS (SELECT p.qid, a.vec_id AS nid
-    |  FROM probes p JOIN asg a ON a.cid = p.cid WHERE a.vec_id <> p.qid),
-    |ap AS (SELECT pl.qid, pl.nid, list_dot_product(q.v, r.xhat) AS approx
-    |  FROM pl JOIN e q ON q.vec_id = pl.qid JOIN rec r ON r.vec_id = pl.nid),
-    |cand AS (SELECT qid, nid FROM (
-    |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-    |      ORDER BY approx DESC, nid) AS crn FROM ap) WHERE crn <= 100),
-    |r2 AS (SELECT cand.qid, cand.nid, list_dot_product(q.v, n.v) AS sim,
-    |    row_number() OVER (PARTITION BY cand.qid
-    |      ORDER BY list_dot_product(q.v, n.v) DESC, cand.nid) AS rnk
-    |  FROM cand JOIN e q ON q.vec_id = cand.qid JOIN e n ON n.vec_id = cand.nid)
-    |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid AS neighbor_id,
-    |  round(sim, 6) AS sim
-    |FROM r2 WHERE rnk <= $K ORDER BY query_id, rank""".stripMargin
-
-  /** v09/v11 share v01's oracle: same semantics through the custom
-    * plan node and the optimizer-rule rewrite respectively. */
-  /** The planted-near-copy augmented vector relation (mirrors
-    * `DedupPack.augmentedVectors`) — the v14 oracle's `e`. */
-  private val augVecCte = """
-    |e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    |e AS (SELECT vec_id, v FROM e0
-    |  UNION ALL SELECT vec_id + 100000, list_concat([v[1] + 0.1], v[2:])
-    |    FROM e0 WHERE vec_id < 100)""".stripMargin
+    |${KnnJoin.assignmentResidualsSql("e", "cents", "br")},
+    |${KnnJoin.assignmentResidualsSql("qa", "cents", "lr")},
+    |rb AS (SELECT round(residual, 6) AS residual FROM br),
+    |rl AS (SELECT round(residual, 6) AS residual FROM lr),
+    |${KnnJoin.centroidDriftAuditSql("rb", "rl", "drift")}
+    |SELECT * FROM drift ORDER BY metric""".stripMargin
 
   /** The triplet-mining replay over the augmented relation — shared by
     * v14 (pinned 16-list chain) and v24 (auto-⌈√n⌉ chain). */
-  private def contrastiveSqlWith(ctes: String) = s"""
-    |WITH $augVecCte,
-    |$ctes,
+  private def contrastiveSqlWith(nlist: Option[Int]) = s"""
+    |WITH ${graft.dedup.DedupPack.augmentedVectorsSql("e")},
+    |${KnnJoin.ivfIndexSql("e", nlist, "cents", "asg")},
     |prs AS (SELECT a.vec_id AS anchor, b.vec_id AS cand,
-    |    list_dot_product(ea.v, eb.v)
-    |      / (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) AS cos
+    |    ${VectorOps.cosineSql("ea.v", "eb.v")} AS cos
     |  FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id <> b.vec_id
     |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id),
     |pos AS (SELECT anchor, cand AS pos_id, cos AS pos_cos FROM prs WHERE cos >= 0.98),
@@ -914,9 +697,8 @@ object VectorPack extends QueryPack {
     |FROM pos p JOIN neg n ON n.anchor = p.anchor AND n.rn = 1
     |ORDER BY p.anchor, p.pos_id""".stripMargin
 
-  private val contrastiveSql = contrastiveSqlWith(ivfCtes)
-  private val contrastiveAutoSql = contrastiveSqlWith(ivfCtesWith(
-    "(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM e)"))
+  private val contrastiveSql = contrastiveSqlWith(pinned)
+  private val contrastiveAutoSql = contrastiveSqlWith(None)
 
   /** v21 oracle: every member's existing full-replay chain nested as
     * its own scoped subquery (inner WITHs shadow nothing outside), so
@@ -944,15 +726,15 @@ object VectorPack extends QueryPack {
     |FROM h, tot ORDER BY method""".stripMargin
   }
 
-  /** v22 oracle: the shared IVF Lloyd chain, then per-cluster size /
+  /** v22 oracle: the pinned IVF index, then per-cluster size /
     * share / decimal-summed mean dot / modal label + purity. */
   private val clusterReportSql = s"""
     |WITH $eCte,
-    |$ivfCtes,
+    |$ivfIndexCtes,
     |j AS (SELECT a.cid, emb.label,
     |    CAST(round(list_dot_product(e.v, c.cv), 9) AS DECIMAL(28,9)) AS dot
     |  FROM asg a JOIN e ON e.vec_id = a.vec_id
-    |  JOIN c2 c ON c.cid = a.cid
+    |  JOIN cents c ON c.cid = a.cid
     |  JOIN embeddings emb ON emb.vec_id = a.vec_id),
     |g AS (SELECT cid, count(*) AS n, sum(dot) AS s FROM j GROUP BY cid),
     |lb AS (SELECT cid, label, count(*) AS c FROM j GROUP BY 1, 2),
@@ -968,14 +750,14 @@ object VectorPack extends QueryPack {
     |FROM g JOIN lt ON lt.cid = g.cid AND lt.rn = 1, t
     |ORDER BY centroid_id""".stripMargin
 
-  /** v23 oracle: the shared IVF Lloyd chain, per-vector centroid dot,
+  /** v23 oracle: the pinned IVF index, per-vector centroid dot,
     * within-cluster prototypicality rank, top-25% prune flag. */
   private val prototypePruningSql = s"""
     |WITH $eCte,
-    |$ivfCtes,
+    |$ivfIndexCtes,
     |j AS (SELECT a.vec_id, a.cid,
     |    round(list_dot_product(e.v, c.cv), 9) AS dot
-    |  FROM asg a JOIN e ON e.vec_id = a.vec_id JOIN c2 c ON c.cid = a.cid),
+    |  FROM asg a JOIN e ON e.vec_id = a.vec_id JOIN cents c ON c.cid = a.cid),
     |rk AS (SELECT vec_id, cid, dot,
     |    row_number() OVER (PARTITION BY cid ORDER BY dot DESC, vec_id) AS rk,
     |    count(*) OVER (PARTITION BY cid) AS n

@@ -38,6 +38,9 @@ class SessionGuardSpec extends AnyFunSuite {
   private val popcountPair = """bit_count\(xor\(""".r
   private val bandJoin = """\.bandsig = \w+\.bandsig""".r
   private val knnWindow = """PARTITION BY qid[\s|]+ORDER BY sim DESC, nid\)""".r
+  private val dotRankWindow = """ORDER BY list_dot_product\(""".r
+  private val cosineQuotient = """/ \(sqrt\(list_dot_product\(""".r
+  private val plantedVectors = """list_concat\(\[v\[1\] \+ 0\.1\]""".r
   private val p02Frozen = Map(Paths.get("pipeline", "PipelinePack.scala") ->
     ("p02's oracle text is byte-frozen: its DuckDB replay runs out of memory " +
       "on a 15 GiB box, so no oracle run can check a change to it"))
@@ -62,6 +65,12 @@ class SessionGuardSpec extends AnyFunSuite {
     ("the band equi-join", bandJoin, Paths.get("dedup", "Dedup.scala"),
       Map.empty[Path, String]),
     ("the exact kNN window", knnWindow, Paths.get("vector", "KnnJoin.scala"),
+      Map.empty[Path, String]),
+    ("the dot-ordered rank window", dotRankWindow, Paths.get("vector", "KnnJoin.scala"),
+      Map.empty[Path, String]),
+    ("the SQL cosine quotient", cosineQuotient, Paths.get("vector", "VectorOps.scala"),
+      Map.empty[Path, String]),
+    ("the planted-vector CTE", plantedVectors, Paths.get("dedup", "DedupPack.scala"),
       Map.empty[Path, String]))
   private val envReaders = Seq(Paths.get("Bench.scala"),
     Paths.get("ScaleCorpus.scala"), Paths.get("PerfProbe.scala"),
@@ -177,6 +186,30 @@ class SessionGuardSpec extends AnyFunSuite {
       "(PARTITION BY qid\n      ORDER BY approx_ip DESC, vec_id) AS crn").isEmpty)
     assert(knnWindow.findFirstIn("    row_number() OVER (PARTITION BY cand.qid\n" +
       "      ORDER BY list_dot_product(q.v, n.v) DESC, cand.vec_id) AS rnk").isEmpty)
+    assert(dotRankWindow.findFirstIn("    |    row_number() OVER (PARTITION BY e.vec_id\n" +
+      "    |      ORDER BY list_dot_product(e.v, c.cv) DESC, c.cid) AS rn").nonEmpty)
+    assert(dotRankWindow.findFirstIn("row_number() OVER (PARTITION BY cand.qid " +
+      "ORDER BY list_dot_product(q.x, n.x) DESC, cand.nid) AS rnk").nonEmpty)
+    assert(dotRankWindow.findFirstIn(
+      "row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rnk").isEmpty)
+    assert(dotRankWindow.findFirstIn(
+      "row_number() OVER (PARTITION BY cid ORDER BY dot DESC, vec_id) AS rk").isEmpty)
+    assert(cosineQuotient.findFirstIn("  round(list_dot_product(a.v, b.v)\n    / " +
+      "(sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)").nonEmpty)
+    assert(cosineQuotient.findFirstIn("  WHERE list_dot_product(ea.v, eb.v) / (sqrt(" +
+      "list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) >= 0.98")
+      .nonEmpty)
+    assert(cosineQuotient.findFirstIn(
+      "n AS (SELECT vec_id, sqrt(list_dot_product(v, v)) AS nb,").isEmpty)
+    assert(cosineQuotient.findFirstIn("VectorOps.dot(col(\"av\"), col(\"bv\")) /\n" +
+      "  (sqrt(VectorOps.dot(col(\"av\"), col(\"av\"))) *").isEmpty)
+    assert(plantedVectors.findFirstIn(
+      "  UNION ALL SELECT vec_id + 100000, list_concat([v[1] + 0.1], v[2:])").nonEmpty)
+    assert(plantedVectors.findFirstIn("SELECT vec_id + 100000, " +
+      "list_concat([v[1] + 0.1], v[2:]) FROM e0 WHERE vec_id < 100").nonEmpty)
+    assert(plantedVectors.findFirstIn("concat(array(element_at(col(\"embedding\"), 1) " +
+      "+ lit(0.1)),").isEmpty)
+    assert(plantedVectors.findFirstIn("list_concat([v[1] + 0.2], v[2:])").isEmpty)
     assert(cacheCall.findFirstIn("val d = docs.cache()").nonEmpty)
     assert(cacheCall.findFirstIn("batch.select(col(\"x\"))\n  .persist()").nonEmpty)
     assert(cacheCall.findFirstIn("df.persist(StorageLevel.DISK_ONLY)").nonEmpty)

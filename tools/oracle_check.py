@@ -7,6 +7,10 @@ Reads each <verifyOutDir>/<name>/ (Spark parquet) and runs the matching
 oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the parquet
 tables in <sfDir>. Compares row count, sorted column names, and a hash of
 all values (columns sorted by name, rows in result order).
+
+Every line about a readable Spark result ends with that result's value
+hash (`spark=<hash>`), whatever the verdict, so two checker logs of the
+same outputs compare with one `diff`.
 """
 import json
 import sys
@@ -53,10 +57,11 @@ def main(sf_dir: str, out_dir: str) -> int:
             print(f"FAIL {name}: spark result unreadable: {e}")
             failures += 1
             continue
+        spark = f"spark={value_hash(got)}"
         try:
             exp = norm(con.execute(sql).fetchdf())
         except Exception as e:
-            print(f"FAIL {name}: oracle sql error: {e}")
+            print(f"FAIL {name}: oracle sql error: {e} {spark}")
             failures += 1
             continue
         problems = []
@@ -81,17 +86,18 @@ def main(sf_dir: str, out_dir: str) -> int:
                     break
         if problems:
             failures += 1
-            print(f"FAIL {name}: " + "; ".join(problems))
+            print(f"FAIL {name}: " + "; ".join(problems) + f" {spark}")
         else:
-            print(f"OK   {name} ({len(got)} rows)")
+            print(f"OK   {name} ({len(got)} rows) {spark}")
     # queries without oracles: rows-only check
     import os
     for d in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, d)
         if os.path.isdir(path) and d not in oracle:
             try:
-                n = len(pd.read_parquet(path))
-                print(f"ROWS {d} ({n} rows, no oracle)")
+                got = norm(pd.read_parquet(path))
+                n = len(got)
+                print(f"ROWS {d} ({n} rows, no oracle) spark={value_hash(got)}")
                 if n == 0:
                     print(f"WARN {d}: zero rows")
             except Exception as e:
